@@ -57,7 +57,12 @@ import urllib.parse
 import uuid
 
 from .dv_kernel import dv_blobs_by_file, dv_state_positions
-from .mor_diff import _SCHEME_RE, _parquet_row_count
+from .mor_diff import (
+    _SCHEME_RE,
+    _parquet_row_count,
+    _position_delete_diff,
+    _with_file_pos,
+)
 from .timetravel import SnapshotTable
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -172,6 +177,40 @@ def _snapshot_files(root: str, snapshot_path: str) -> list[dict]:
     return out
 
 
+def _footer_rows(root: str, files: list[dict]) -> list[int]:
+    """Parquet-footer row count of each of `files` (`_snapshot_files`
+    dicts), in order — footer reads only, no data scan."""
+    return [
+        _parquet_row_count(os.path.join(root, urllib.parse.unquote(f["path"])))
+        for f in files
+    ]
+
+
+def _check_compaction_rows(
+    root: str, prev_dir: str, files: list[dict], version: int, rows=None
+) -> int | None:
+    """Refuse a snapshot flagged as a compaction whose live row count
+    (`rows`, or the footer total of `files`) differs from its parent
+    snapshot's at `prev_dir`: exporters emit compactions as logical
+    no-ops (Delta OPTIMIZE with dataChange=false, Iceberg "replace"),
+    so a wrong flag would hide a data change from every CDF, streaming
+    or incremental consumer. Skipped when the parent dir is gone
+    (vacuumed). Returns the compaction's row total when it was known
+    or read, else None."""
+    if not os.path.isdir(prev_dir):
+        return rows
+    if rows is None:
+        rows = sum(_footer_rows(root, files))
+    want = sum(_footer_rows(root, _snapshot_files(root, prev_dir)))
+    if rows != want:
+        raise ValueError(
+            f"snapshot v{version} is flagged operation=compaction but "
+            f"changes the row count ({want} -> {rows}); a compaction "
+            "must preserve the table's rows"
+        )
+    return rows
+
+
 def _delta_stats(path: str) -> str | None:
     """Per-file statistics JSON for the `add.stats` field
     (numRecords / minValues / maxValues / nullCount — the shape
@@ -263,13 +302,6 @@ def _delta_stats(path: str) -> str | None:
     )
 
 
-# the executor-side DV construction kernels are shared with the Iceberg
-# fv3 exporter (operators/dv_kernel.py) — both formats use the same
-# magic+roaring64 body bytes; only the outer framing differs
-_dv_state_positions = dv_state_positions
-_dv_blobs_by_file = dv_blobs_by_file
-
-
 def _write_change_data(
     spark, root: str, version: int, deleted, touched: list, pv_of: dict
 ) -> list[dict]:
@@ -287,16 +319,8 @@ def _write_change_data(
     pairs = deleted.select(
         F.col("file_path").alias("_f"), F.col("pos").alias("_p")
     )
-    rows = (
-        spark.read.parquet(*touched)
-        .withColumn(
-            "_f",
-            F.regexp_replace(
-                F.col("_metadata.file_path"), _SCHEME_RE, "/"
-            ),
-        )
-        .withColumn("_p", F.col("_metadata.row_index"))
-        .join(F.broadcast(pairs), ["_f", "_p"], "left_semi")
+    rows = _with_file_pos(spark.read.parquet(*touched), "_f", "_p").join(
+        F.broadcast(pairs), ["_f", "_p"], "left_semi"
     )
     pcols = next((list(pv) for pv in pv_of.values() if pv), [])
     if pcols:
@@ -345,8 +369,10 @@ def export_delta_log(
     not — a DV targets one data file, so partitioning is orthogonal)
     export as DELETION-VECTOR commits (PROTOCOL.md "Deletion
     Vectors"): the shared distributed diff (operators/mor_diff.py)
-    derives deleted (file, row-position) pairs, each touched file gets
-    `remove` + re-`add` with a `deletionVector` descriptor (storageType
+    decides whether the transition is a pure delete, validating its
+    (file, row-position) pairs against the parquet-footer row totals;
+    anything else exports as a rewrite. Each touched file gets `remove`
+    + re-`add` with a `deletionVector` descriptor (storageType
     "u"), and the positions serialize as 64-bit roaring bitmaps
     (operators/roaring.py) into a `deletion_vector_<uuid>.bin` at the
     table root (version byte, size-framed, CRC-checked blobs). Chained
@@ -445,6 +471,7 @@ def export_delta_log(
         )
         dv_rows = None  # [(file_path, framed blob, cardinality)]
         deleted = None
+        cur_rows = None  # this snapshot's footer row total, read once
         if (
             mor_deletes
             and not is_compaction
@@ -453,41 +480,21 @@ def export_delta_log(
             and base_live_rows is not None
             and schema_str == prev_schema
         ):
-            from .mor_diff import _parquet_row_count, _position_delete_diff
-
-            total_rc = sum(
-                _parquet_row_count(
-                    os.path.join(table.root, urllib.parse.unquote(f["path"]))
-                )
-                for f in files
-            )
-            if total_rc < base_live_rows:
-                prior = (
-                    _dv_state_positions(table.spark, dv_state)
-                    if dv_state
-                    else None
-                )
+            cur_rows = sum(_footer_rows(table.root, files))
+            if cur_rows < base_live_rows:
                 deleted = _position_delete_diff(
                     table.spark,
-                    base_dir,
-                    prior,
+                    [base_dir],
+                    dv_state_positions(table.spark, dv_state)
+                    if dv_state
+                    else None,
                     snap["path"],
-                    check_excess=False,
+                    base_live_rows,
+                    cur_rows,
                 )
                 if deleted is not None:
-                    # pin the positions executor-side once (they feed
-                    # the count-identity validation, the DV fold and —
-                    # with CDC — the change-data writer), and validate
-                    # |masked base| − |positions| == |child| instead of
-                    # running the excess-probe job (round-9 item 5)
-                    deleted = deleted.localCheckpoint()
-                    if base_live_rows - deleted.count() != total_rc:
-                        deleted = None  # not a pure delete: rewrite
-                if deleted is not None:
-                    dv_rows = _dv_blobs_by_file(
-                        table.spark, deleted, dv_state
-                    )
-                    base_live_rows = total_rc
+                    dv_rows = dv_blobs_by_file(table.spark, deleted, dv_state)
+                    base_live_rows = cur_rows
 
         actions: list[dict] = []
         if dv_rows is not None:
@@ -637,39 +644,13 @@ def export_delta_log(
             # --- full-rewrite commit (always, without mor_deletes) ---
             # a DV'd base file keeps its descriptor in referenced state
             # until rewritten here, at which point DV state resets
-            if is_compaction and i > 0:
-                # OPTIMIZE must be a logical no-op: the rewritten files
-                # must hold exactly the pre-compaction live row count
-                # (= the previous snapshot's rows). A wrong flag would
-                # poison CDF/streaming consumers that skip
-                # dataChange=false commits.
-                from .mor_diff import _parquet_row_count
-
-                prev_dir = by_version[events[i - 1]["version"]]["path"]
-                if os.path.isdir(prev_dir):
-                    want = sum(
-                        _parquet_row_count(
-                            os.path.join(
-                                table.root, urllib.parse.unquote(f["path"])
-                            )
-                        )
-                        for f in _snapshot_files(table.root, prev_dir)
-                    )
-                    got_rc = sum(
-                        _parquet_row_count(
-                            os.path.join(
-                                table.root, urllib.parse.unquote(f["path"])
-                            )
-                        )
-                        for f in files
-                    )
-                    if got_rc != want:
-                        raise ValueError(
-                            f"snapshot v{ev['version']} is flagged "
-                            f"operation=compaction but changes the row "
-                            f"count ({want} -> {got_rc}); OPTIMIZE "
-                            "commits must preserve the table's rows"
-                        )
+            if is_compaction:
+                cur_rows = _check_compaction_rows(
+                    table.root,
+                    by_version[events[i - 1]["version"]]["path"],
+                    files,
+                    ev["version"],
+                )
             current_paths = {f["path"] for f in files}
             for f in prev_files:
                 if f["path"] not in current_paths:
@@ -698,15 +679,10 @@ def export_delta_log(
             base_dir = snap["path"]
             dv_state = {}
             if mor_deletes:
-                from .mor_diff import _parquet_row_count
-
-                base_live_rows = sum(
-                    _parquet_row_count(
-                        os.path.join(
-                            table.root, urllib.parse.unquote(f["path"])
-                        )
-                    )
-                    for f in files
+                base_live_rows = (
+                    sum(_footer_rows(table.root, files))
+                    if cur_rows is None
+                    else cur_rows
                 )
 
         tmp = os.path.join(log_dir, f".{i:020d}.json.tmp")

@@ -83,6 +83,8 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import re
+import shutil
 import urllib.parse
 import uuid
 
@@ -90,12 +92,11 @@ from .avro_io import read_avro, write_avro
 from .mor_diff import (
     _SCHEME_RE,
     _append_diff,
-    _parquet_row_count,
     _position_delete_diff,
     _upsert_diff,
     finalize_spark_parts,
 )
-from .delta_log import _snapshot_files
+from .delta_log import _check_compaction_rows, _footer_rows, _snapshot_files
 from .timetravel import SnapshotTable
 
 _EPOCH = datetime.date(1970, 1, 1)
@@ -632,6 +633,106 @@ def _file_column_stats(path: str, col_ids: dict[str, int], type_of: dict[str, st
     )
 
 
+def _partition_tuple(spec_fields: list[dict], raw: dict) -> dict:
+    """A manifest entry's typed partition struct under `spec_fields`,
+    from the raw directory-string partition values `raw`."""
+    return {
+        sf["name"]: _partition_value(sf["type"], raw.get(sf["name"]))
+        for sf in spec_fields
+    }
+
+
+def _added_data_files(
+    files: list[dict],
+    spec_fields: list[dict],
+    col_ids: dict[str, int],
+    type_of: dict[str, str],
+    format_version: int,
+    next_row_id: int,
+    sort_order_id: int = 0,
+) -> tuple[list[dict], int]:
+    """`data_file` records for ADDED parquet data files, given as
+    [{path, record_count, size, partition}]: footer column stats, the
+    typed partition tuple, v1's legacy `block_size_in_bytes`, a
+    non-default `sort_order_id`, and — v3 row lineage — each file's
+    starting `first_row_id`, drawn from the table counter `next_row_id`.
+    Returns (records, advanced counter)."""
+    out = []
+    for d in files:
+        vcounts, ncounts, lower, upper = _file_column_stats(
+            d["path"], col_ids, type_of
+        )
+        data_file = {
+            "content": 0,
+            "file_path": d["path"],
+            "file_format": "PARQUET",
+            "partition": _partition_tuple(spec_fields, d["partition"]),
+            "record_count": d["record_count"],
+            "file_size_in_bytes": d["size"],
+            "value_counts": vcounts,
+            "null_value_counts": ncounts,
+            "lower_bounds": lower,
+            "upper_bounds": upper,
+        }
+        if format_version == 1:
+            data_file["block_size_in_bytes"] = 67108864
+        if sort_order_id:
+            data_file["sort_order_id"] = sort_order_id
+        if format_version >= 3:
+            data_file["first_row_id"] = next_row_id
+            next_row_id += d["record_count"]
+        out.append(data_file)
+    return out, next_row_id
+
+
+def _manifest_entry(data_file: dict, format_version: int, snapshot_id: int) -> dict:
+    """The ADDED manifest-entry envelope around `data_file`. v1 names
+    its snapshot; v2+ leave the snapshot id and both sequence numbers
+    null, so readers inherit them from the manifest list (spec rule)."""
+    return {
+        "status": 1,  # ADDED
+        "snapshot_id": snapshot_id if format_version == 1 else None,
+        "data_sequence_number": None,
+        "file_sequence_number": None,
+        "data_file": data_file,
+    }
+
+
+def _manifest_list_row(
+    manifest_path: str,
+    manifest_length: int,
+    spec_id: int,
+    snapshot_id: int,
+    seq: int,
+    data_files: list[dict],
+    format_version: int,
+    first_row_id: int | None = None,
+) -> dict:
+    """The manifest-list row of a manifest holding only ADDED
+    `data_files`: the v2+ content kind, sequence numbers and file/row
+    counters, and on v3 data manifests the manifest's `first_row_id`.
+    Fields a format version lacks are ignored by its Avro schema."""
+    row = {
+        "manifest_path": manifest_path,
+        "manifest_length": manifest_length,
+        "partition_spec_id": spec_id,
+        # 0 = data manifest, 1 = delete manifest (position or equality)
+        "content": int(any(d["content"] for d in data_files)),
+        "sequence_number": seq,
+        "min_sequence_number": seq,
+        "added_snapshot_id": snapshot_id,
+        "added_files_count": len(data_files),
+        "existing_files_count": 0,
+        "deleted_files_count": 0,
+        "added_rows_count": sum(d["record_count"] for d in data_files),
+        "existing_rows_count": 0,
+        "deleted_rows_count": 0,
+    }
+    if format_version >= 3 and first_row_id is not None:
+        row["first_row_id"] = first_row_id
+    return row
+
+
 def write_metadata_version(meta_dir: str, md: dict) -> str:
     """Persist `md` as the NEXT metadata version under `meta_dir`
     (v{n+1}.metadata.json, n from version-hint.text or 0) and swap the
@@ -772,8 +873,6 @@ def export_iceberg_metadata(
     # supported flow for keeping them is to land the data through the
     # parent store (SnapshotTable.write) and re-export, or to keep
     # committing through the catalog.
-    import re as _re
-
     hint_path = os.path.join(meta_dir, "version-hint.text")
     if os.path.exists(hint_path):
         with open(hint_path) as fh:
@@ -785,7 +884,7 @@ def export_iceberg_metadata(
             foreign = [
                 s["snapshot-id"]
                 for s in _cur_md.get("snapshots") or []
-                if not _re.fullmatch(
+                if not re.fullmatch(
                     r"snap-\d+-1-manifest-list\.avro",
                     os.path.basename(s.get("manifest-list") or ""),
                 )
@@ -1190,14 +1289,8 @@ def export_iceberg_metadata(
         # per-file footer row counts feed only the positional-delete
         # precheck and the rewrite branch's record_count — skip the
         # O(files) driver-side footer reads on upsert commits
-        file_rc = {}
-        total_rc = 0
-        if upsert is None:
-            for f in files:
-                rel = urllib.parse.unquote(f["path"])
-                full = os.path.join(table.root, rel)
-                file_rc[full] = (f, _parquet_row_count(full))
-            total_rc = sum(rc for _, rc in file_rc.values())
+        file_rows = _footer_rows(table.root, files) if upsert is None else []
+        total_rc = sum(file_rows)
 
         if is_minor and base_dir is not None and base_live_rows is not None:
             if total_rc != base_live_rows:
@@ -1227,6 +1320,29 @@ def export_iceberg_metadata(
                 else None
             )
 
+        def _write_manifest(suffix, spec_id, data_files, first_row_id=None):
+            """Write this snapshot's manifest `m-{i}{suffix}.avro` of
+            ADDED `data_files` under `spec_id`; return its list row."""
+            path = os.path.join(meta_dir, f"m-{i:05d}{suffix}.avro")
+            write_avro(
+                path,
+                _entry_schema_of(spec_id),
+                [
+                    _manifest_entry(d, format_version, snapshot_id)
+                    for d in data_files
+                ],
+            )
+            return _manifest_list_row(
+                path,
+                os.path.getsize(path),
+                spec_id,
+                snapshot_id,
+                seq,
+                data_files,
+                format_version,
+                first_row_id,
+            )
+
         deleted = None
         appended = None
         can_incremental = (
@@ -1242,6 +1358,8 @@ def export_iceberg_metadata(
             # exact schema; a schema-changing snapshot full-rewrites
             and event_schema_id[i] == base_schema_sid
         )
+        # both diffs validate themselves against the footer totals and
+        # return None when the transition is not a pure delete/append
         if (
             can_incremental
             and format_version >= 2
@@ -1252,19 +1370,9 @@ def export_iceberg_metadata(
                 [base_dir, *append_dirs],
                 _prior_deletes(),
                 snap["path"],
-                check_excess=False,
+                base_live_rows,
+                total_rc,
             )
-            if deleted is not None:
-                # ONE action: materialize the (delete-set-sized)
-                # positions executor-side, then validate the count
-                # identity |masked base| − |positions| == |child| —
-                # replacing the separate excess-probe job, which was
-                # ~half of each export diff's scan+shuffle cost
-                # (round-9 item 5). Downstream delete writers reuse
-                # the checkpointed positions without recompute.
-                deleted = deleted.localCheckpoint()
-                if base_live_rows - deleted.count() != total_rc:
-                    deleted = None  # not a pure delete: rewrite
         elif can_incremental and total_rc > base_live_rows:
             # incremental APPEND (all format versions, v1 included):
             # if the child is the masked base plus new rows, export
@@ -1276,10 +1384,8 @@ def export_iceberg_metadata(
                 [base_dir, *append_dirs],
                 _prior_deletes(),
                 snap["path"],
-                # both totals already known from parquet footers: the
-                # narrow diff skips its two count jobs
-                base_rows=base_live_rows,
-                child_rows=total_rc,
+                base_live_rows,
+                total_rc,
             )
 
         if upsert is not None:
@@ -1343,112 +1449,40 @@ def export_iceberg_metadata(
                 written_upsert_dirs.add(f"s{snapshot_id:05d}")
             manifest_rows = list(prev_rows)
             if data_files:
-                manifest_path = os.path.join(meta_dir, f"m-{i:05d}-ups.avro")
-                manifest_first_row_id = next_row_id
-                entries = []
-                for d in data_files:
-                    vcounts, ncounts, lower, upper = _file_column_stats(
-                        d["path"], col_ids, type_of
-                    )
-                    data_file = {
-                        "content": 0,
-                        "file_path": d["path"],
-                        "file_format": "PARQUET",
-                        "partition": {
-                            sf["name"]: _partition_value(
-                                sf["type"], d["partition"].get(sf["name"])
-                            )
-                            for sf in base_spec_fields
-                        },
-                        "record_count": d["record_count"],
-                        "file_size_in_bytes": d["size"],
-                        "value_counts": vcounts,
-                        "null_value_counts": ncounts,
-                        "lower_bounds": lower,
-                        "upper_bounds": upper,
-                        "equality_ids": None,
-                    }
-                    if format_version >= 3:
-                        data_file["first_row_id"] = next_row_id
-                        next_row_id += d["record_count"]
-                    entries.append(
-                        {
-                            "status": 1,
-                            "snapshot_id": None,
-                            "data_sequence_number": None,  # inherited
-                            "file_sequence_number": None,
-                            "data_file": data_file,
-                        }
-                    )
-                write_avro(manifest_path, _entry_schema_of(base_spec_id), entries)
-                ups_row = {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": base_spec_id,
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(entries),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(
-                        d["record_count"] for d in data_files
-                    ),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-                if format_version >= 3:
-                    ups_row["first_row_id"] = manifest_first_row_id
-                manifest_rows.append(ups_row)
+                first_row_id = next_row_id
+                added, next_row_id = _added_data_files(
+                    data_files,
+                    base_spec_fields,
+                    col_ids,
+                    type_of,
+                    format_version,
+                    next_row_id,
+                )
+                manifest_rows.append(
+                    _write_manifest("-ups", base_spec_id, added, first_row_id)
+                )
             if del_files:
                 eq_ids = [col_ids[k] for k in upsert_key]
                 # global equality deletes: the manifest uses an
                 # UNPARTITIONED spec (minted on first use), so the
                 # keys mask across every partition per the spec rule
-                del_sid = _resolve_spec([])
-                manifest_path = os.path.join(meta_dir, f"m-{i:05d}-del.avro")
-                entries = [
-                    {
-                        "status": 1,
-                        "snapshot_id": None,
-                        "data_sequence_number": None,  # inherited
-                        "file_sequence_number": None,
-                        "data_file": {
-                            "content": 2,  # EQUALITY DELETES
-                            "file_path": d["path"],
-                            "file_format": "PARQUET",
-                            "partition": {},
-                            "record_count": d["record_count"],
-                            "file_size_in_bytes": d["size"],
-                            "value_counts": None,
-                            "null_value_counts": None,
-                            "lower_bounds": None,
-                            "upper_bounds": None,
-                            "equality_ids": eq_ids,
-                        },
-                    }
-                    for d in del_files
-                ]
-                write_avro(manifest_path, _entry_schema_of(del_sid), entries)
                 manifest_rows.append(
-                    {
-                        "manifest_path": manifest_path,
-                        "manifest_length": os.path.getsize(manifest_path),
-                        "partition_spec_id": del_sid,
-                        "content": 1,
-                        "sequence_number": seq,
-                        "min_sequence_number": seq,
-                        "added_snapshot_id": snapshot_id,
-                        "added_files_count": len(entries),
-                        "existing_files_count": 0,
-                        "deleted_files_count": 0,
-                        "added_rows_count": sum(
-                            d["record_count"] for d in del_files
-                        ),
-                        "existing_rows_count": 0,
-                        "deleted_rows_count": 0,
-                    }
+                    _write_manifest(
+                        "-del",
+                        _resolve_spec([]),
+                        [
+                            {
+                                "content": 2,  # EQUALITY DELETES
+                                "file_path": d["path"],
+                                "file_format": "PARQUET",
+                                "partition": {},
+                                "record_count": d["record_count"],
+                                "file_size_in_bytes": d["size"],
+                                "equality_ids": eq_ids,
+                            }
+                            for d in del_files
+                        ],
+                    )
                 )
             operation = "overwrite" if del_files else "append"
         elif format_version >= 3 and (
@@ -1494,9 +1528,7 @@ def export_iceberg_metadata(
                 # a prior v2 export of this snapshot left positional
                 # delete parquet here; the fv3 upgrade supersedes it —
                 # clear the dir so no orphaned delete files linger
-                import shutil as _shutil
-
-                _shutil.rmtree(sdir)
+                shutil.rmtree(sdir)
             os.makedirs(sdir, exist_ok=True)
             puffin_path = os.path.join(sdir, f"dv-{snapshot_id:05d}.puffin")
             touched = sorted(dv_state)
@@ -1516,62 +1548,33 @@ def export_iceberg_metadata(
             blob_metas = write_puffin(puffin_path, blobs)
             puffin_size = os.path.getsize(puffin_path)
             base_spec_fields = specs[base_spec_id]
-            entries = []
+            dv_files = []
             for p, bm in zip(touched, blob_metas):
                 bf = base_by_abs.get(p)
                 if bf is None:
                     raise RuntimeError(
                         f"diff produced positions for unknown file {p}"
                     )
-                entries.append(
+                dv_files.append(
                     {
-                        "status": 1,  # ADDED
-                        "snapshot_id": None,
-                        "data_sequence_number": None,  # inherited
-                        "file_sequence_number": None,
-                        "data_file": {
-                            "content": 1,  # POSITION DELETES (as a DV)
-                            "file_path": puffin_path,
-                            "file_format": "PUFFIN",
-                            "partition": {
-                                sf["name"]: _partition_value(
-                                    sf["type"],
-                                    bf["partitionValues"].get(sf["name"]),
-                                )
-                                for sf in base_spec_fields
-                            },
-                            "record_count": dv_state[p][1],
-                            "file_size_in_bytes": puffin_size,
-                            "referenced_data_file": p,
-                            "content_offset": bm["offset"],
-                            "content_size_in_bytes": bm["length"],
-                        },
+                        "content": 1,  # POSITION DELETES (as a DV)
+                        "file_path": puffin_path,
+                        "file_format": "PUFFIN",
+                        "partition": _partition_tuple(
+                            base_spec_fields, bf["partitionValues"]
+                        ),
+                        "record_count": dv_state[p][1],
+                        "file_size_in_bytes": puffin_size,
+                        "referenced_data_file": p,
+                        "content_offset": bm["offset"],
+                        "content_size_in_bytes": bm["length"],
                     }
                 )
-            manifest_path = os.path.join(meta_dir, f"m-{i:05d}-del.avro")
-            write_avro(manifest_path, _entry_schema_of(base_spec_id), entries)
-            row = {
-                "manifest_path": manifest_path,
-                "manifest_length": os.path.getsize(manifest_path),
-                "partition_spec_id": base_spec_id,
-                "content": 1,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    dv_state[p][1] for p in touched
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
             # REPLACE semantics: parent DATA manifests ride along, prior
             # delete manifests are dropped (their DVs are superseded)
             manifest_rows = [
                 r for r in prev_rows if (r.get("content") or 0) == 0
-            ] + [row]
+            ] + [_write_manifest("-del", base_spec_id, dv_files)]
             written_delete_dirs.add(os.path.basename(sdir))
             base_live_rows = total_rc
             operation = "replace" if is_minor else "delete"
@@ -1626,45 +1629,23 @@ def export_iceberg_metadata(
                 file_partitions=file_partitions,
                 pcols=[sf["name"] for sf in base_spec_fields],
             )
-            manifest_path = os.path.join(meta_dir, f"m-{i:05d}-del.avro")
-            entries = [
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": None,  # inherited from manifest list
-                    "data_sequence_number": None,  # inherited (spec rule)
-                    "file_sequence_number": None,
-                    "data_file": {
+            row = _write_manifest(
+                "-del",
+                base_spec_id,
+                [
+                    {
                         "content": 1,  # POSITION DELETES
                         "file_path": d["path"],
                         "file_format": "PARQUET",
-                        "partition": {
-                            sf["name"]: _partition_value(
-                                sf["type"], d["partition"].get(sf["name"])
-                            )
-                            for sf in base_spec_fields
-                        },
+                        "partition": _partition_tuple(
+                            base_spec_fields, d["partition"]
+                        ),
                         "record_count": d["record_count"],
                         "file_size_in_bytes": d["size"],
-                    },
-                }
-                for d in dfiles
-            ]
-            write_avro(manifest_path, _entry_schema_of(base_spec_id), entries)
-            row = {
-                "manifest_path": manifest_path,
-                "manifest_length": os.path.getsize(manifest_path),
-                "partition_spec_id": base_spec_id,
-                "content": 1,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(dfiles),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(d["record_count"] for d in dfiles),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
+                    }
+                    for d in dfiles
+                ],
+            )
             # manifest REUSE: the parent's manifests ride along verbatim,
             # keeping their original sequence numbers for inheritance.
             # A minor compaction instead REPLACES the stacked delete
@@ -1697,78 +1678,20 @@ def export_iceberg_metadata(
             # O(N + total delta files). ---
             adir = os.path.join(table.root, "appends", f"s{snapshot_id:05d}")
             base_spec_fields = specs[base_spec_id]
-            afiles = _write_append_files(
-                appended, adir, [sf["name"] for sf in base_spec_fields]
+            first_row_id = next_row_id
+            added, next_row_id = _added_data_files(
+                _write_append_files(
+                    appended, adir, [sf["name"] for sf in base_spec_fields]
+                ),
+                base_spec_fields,
+                col_ids,
+                type_of,
+                format_version,
+                next_row_id,
             )
-            manifest_path = os.path.join(meta_dir, f"m-{i:05d}-app.avro")
-            manifest_first_row_id = next_row_id
-            entries = []
-            for d in afiles:
-                vcounts, ncounts, lower, upper = _file_column_stats(
-                    d["path"], col_ids, type_of
-                )
-                data_file = {
-                    "file_path": d["path"],
-                    "file_format": "PARQUET",
-                    "partition": {
-                        sf["name"]: _partition_value(
-                            sf["type"], d["partition"].get(sf["name"])
-                        )
-                        for sf in base_spec_fields
-                    },
-                    "record_count": d["record_count"],
-                    "file_size_in_bytes": d["size"],
-                    "value_counts": vcounts,
-                    "null_value_counts": ncounts,
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                }
-                if format_version == 1:
-                    data_file["block_size_in_bytes"] = 67108864
-                    entry = {
-                        "status": 1,
-                        "snapshot_id": snapshot_id,
-                        "data_file": data_file,
-                    }
-                else:
-                    data_file["content"] = 0
-                    if format_version >= 3:
-                        data_file["first_row_id"] = next_row_id
-                        next_row_id += d["record_count"]
-                    entry = {
-                        "status": 1,
-                        "snapshot_id": None,  # inherited
-                        "data_sequence_number": None,  # inherited
-                        "file_sequence_number": None,
-                        "data_file": data_file,
-                    }
-                entries.append(entry)
-            write_avro(manifest_path, _entry_schema_of(base_spec_id), entries)
-            row = {
-                "manifest_path": manifest_path,
-                "manifest_length": os.path.getsize(manifest_path),
-                "partition_spec_id": base_spec_id,
-                "added_snapshot_id": snapshot_id,
-            }
-            if format_version >= 2:
-                row.update(
-                    {
-                        "content": 0,
-                        "sequence_number": seq,
-                        "min_sequence_number": seq,
-                        "added_files_count": len(entries),
-                        "existing_files_count": 0,
-                        "deleted_files_count": 0,
-                        "added_rows_count": sum(
-                            d["record_count"] for d in afiles
-                        ),
-                        "existing_rows_count": 0,
-                        "deleted_rows_count": 0,
-                    }
-                )
-            if format_version >= 3:
-                row["first_row_id"] = manifest_first_row_id
-            manifest_rows = prev_rows + [row]
+            manifest_rows = prev_rows + [
+                _write_manifest("-app", base_spec_id, added, first_row_id)
+            ]
             if os.path.isdir(adir):
                 written_append_dirs.add(os.path.basename(adir))
                 append_dirs.append(adir)
@@ -1777,29 +1700,14 @@ def export_iceberg_metadata(
         else:
             # --- full-rewrite snapshot (layout changes, modified rows,
             # compaction; v1 deletes) ---
-            if is_compaction and i > 0:
-                # a compaction must preserve the live row count of the
-                # previous snapshot — a wrong flag would silently turn a
-                # data change into a "replace" no external consumer
-                # re-reads
-                prev_dir = by_version[events[i - 1]["version"]]["path"]
-                if os.path.isdir(prev_dir):
-                    want = sum(
-                        _parquet_row_count(
-                            os.path.join(
-                                table.root, urllib.parse.unquote(f["path"])
-                            )
-                        )
-                        for f in _snapshot_files(table.root, prev_dir)
-                    )
-                    if total_rc != want:
-                        raise ValueError(
-                            f"snapshot v{ev['version']} is flagged "
-                            f"operation=compaction but changes the row "
-                            f"count ({want} -> {total_rc})"
-                        )
-            manifest_path = os.path.join(meta_dir, f"m-{i:05d}.avro")
-            manifest_first_row_id = next_row_id
+            if is_compaction:
+                _check_compaction_rows(
+                    table.root,
+                    by_version[events[i - 1]["version"]]["path"],
+                    files,
+                    ev["version"],
+                    total_rc,
+                )
             # PARTITION-SPEC EVOLUTION: this snapshot's own directory
             # layout decides its spec — a rewrite (or compaction) that
             # repartitions the table registers a new spec-id; manifests
@@ -1813,78 +1721,29 @@ def export_iceberg_metadata(
                 [],
             )
             sid_spec = _resolve_spec(pcols_i)
-            spec_fields_i = specs[sid_spec]
-            entries = []
-            for full, (f, rc) in file_rc.items():
-                vcounts, ncounts, lower, upper = _file_column_stats(
-                    full, col_ids, type_of
-                )
-                data_file = {
-                    "file_path": full,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        sf["name"]: _partition_value(
-                            sf["type"],
-                            f["partitionValues"].get(sf["name"]),
-                        )
-                        for sf in spec_fields_i
-                    },
-                    "record_count": rc,
-                    "file_size_in_bytes": f["size"],
-                    "value_counts": vcounts,
-                    "null_value_counts": ncounts,
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                }
-                if format_version == 1:
-                    data_file["block_size_in_bytes"] = 67108864
-                    entry = {
-                        "status": 1,  # ADDED (full-rewrite model)
-                        "snapshot_id": snapshot_id,
-                        "data_file": data_file,
-                    }
-                else:
-                    data_file["content"] = 0
-                    if snap_sort_order_id:
-                        data_file["sort_order_id"] = snap_sort_order_id
-                    if format_version >= 3:
-                        # v3 row lineage: every ADDED data file gets an
-                        # explicit starting _row_id; the table counter
-                        # advances by its record count
-                        data_file["first_row_id"] = next_row_id
-                        next_row_id += rc
-                    entry = {
-                        "status": 1,
-                        "snapshot_id": None,  # inherited
-                        "data_sequence_number": None,  # inherited
-                        "file_sequence_number": None,
-                        "data_file": data_file,
-                    }
-                entries.append(entry)
-            write_avro(manifest_path, _entry_schema_of(sid_spec), entries)
-            row = {
-                "manifest_path": manifest_path,
-                "manifest_length": os.path.getsize(manifest_path),
-                "partition_spec_id": sid_spec,
-                "added_snapshot_id": snapshot_id,
-            }
-            if format_version >= 2:
-                row.update(
+            first_row_id = next_row_id
+            added, next_row_id = _added_data_files(
+                [
                     {
-                        "content": 0,
-                        "sequence_number": seq,
-                        "min_sequence_number": seq,
-                        "added_files_count": len(entries),
-                        "existing_files_count": 0,
-                        "deleted_files_count": 0,
-                        "added_rows_count": total_rc,
-                        "existing_rows_count": 0,
-                        "deleted_rows_count": 0,
+                        "path": os.path.join(
+                            table.root, urllib.parse.unquote(f["path"])
+                        ),
+                        "record_count": rc,
+                        "size": f["size"],
+                        "partition": f["partitionValues"],
                     }
-                )
-            if format_version >= 3:
-                row["first_row_id"] = manifest_first_row_id
-            manifest_rows = [row]
+                    for f, rc in zip(files, file_rows)
+                ],
+                specs[sid_spec],
+                col_ids,
+                type_of,
+                format_version,
+                next_row_id,
+                sort_order_id=snap_sort_order_id,
+            )
+            manifest_rows = [
+                _write_manifest("", sid_spec, added, first_row_id)
+            ]
             base_dir = snap["path"]
             base_spec_id = sid_spec
             base_schema_sid = event_schema_id[i]
@@ -2094,8 +1953,6 @@ def export_iceberg_metadata(
     # snapshots) are unreferenced by the new hint but would reference
     # deleted data — remove them, the catalog-GC step a real Iceberg
     # deployment runs.
-    import re
-
     for f in os.listdir(meta_dir):
         stale = (
             (re.match(r"^m-\d+(-del|-ups|-app)?\.avro$", f) and f not in written_manifests)
@@ -2123,39 +1980,23 @@ def export_iceberg_metadata(
             os.remove(os.path.join(meta_dir, f))
     staged_root = os.path.join(table.root, "staged")
     if drop_foreign_commits and os.path.isdir(staged_root):
-        import shutil
-
         shutil.rmtree(staged_root, ignore_errors=True)
-    # Delete-file dirs not referenced by THIS export (history shrunk by
-    # a vacuum, or a snapshot that re-exported as a rewrite) would
-    # reference vacuumed data files — same GC contract as the manifests.
-    deletes_root = os.path.join(table.root, "deletes")
-    if os.path.isdir(deletes_root):
-        import shutil
-
-        for d in os.listdir(deletes_root):
-            if d.startswith("s") and d not in written_delete_dirs:
-                shutil.rmtree(os.path.join(deletes_root, d), ignore_errors=True)
-        if not os.listdir(deletes_root):
-            os.rmdir(deletes_root)
-    upserts_root = os.path.join(table.root, "upserts")
-    if os.path.isdir(upserts_root):
-        import shutil
-
-        for d in os.listdir(upserts_root):
-            if d.startswith("s") and d not in written_upsert_dirs:
-                shutil.rmtree(os.path.join(upserts_root, d), ignore_errors=True)
-        if not os.listdir(upserts_root):
-            os.rmdir(upserts_root)
-    appends_root = os.path.join(table.root, "appends")
-    if os.path.isdir(appends_root):
-        import shutil
-
-        for d in os.listdir(appends_root):
-            if d.startswith("s") and d not in written_append_dirs:
-                shutil.rmtree(os.path.join(appends_root, d), ignore_errors=True)
-        if not os.listdir(appends_root):
-            os.rmdir(appends_root)
+    # Delete/upsert/append dirs not referenced by THIS export (history
+    # shrunk by a vacuum, or a snapshot that re-exported as a rewrite)
+    # would reference vacuumed data files — same GC contract as the
+    # manifests.
+    for sub, written in (
+        ("deletes", written_delete_dirs),
+        ("upserts", written_upsert_dirs),
+        ("appends", written_append_dirs),
+    ):
+        sub_root = os.path.join(table.root, sub)
+        if os.path.isdir(sub_root):
+            for d in os.listdir(sub_root):
+                if d.startswith("s") and d not in written:
+                    shutil.rmtree(os.path.join(sub_root, d), ignore_errors=True)
+            if not os.listdir(sub_root):
+                os.rmdir(sub_root)
     return meta_dir
 
 

@@ -1,10 +1,14 @@
-"""Shared merge-on-read position diff for the table-format exporters.
+"""Shared merge-on-read transition diffs for the table-format exporters.
 
-Both the Iceberg v2 exporter (operators/iceberg_meta.py, positional
-delete files) and the Delta exporter (operators/delta_log.py, deletion
-vectors) re-express a pure-delete snapshot transition as "parent's
-files + deleted (file, row-position) pairs". This module holds the one
-distributed diff both share.
+The Iceberg exporter (operators/iceberg_meta.py: v2 positional delete
+files, v3 deletion vectors, incremental appends) and the Delta exporter
+(operators/delta_log.py, deletion vectors) re-express a snapshot
+transition as "parent's files + deleted (file, row-position) pairs" or
+"parent's files + appended rows". This module is the one place that
+decides whether a transition is a pure delete or a pure append: each
+diff validates its own result against the caller's parquet-footer row
+totals and returns pinned positions (or the appended rows), or None —
+the caller then exports the always-correct rewrite model.
 """
 
 from __future__ import annotations
@@ -83,9 +87,9 @@ def _row_hash_cols(df, cols):
     (`normalizenanandzero`); xxhash64 hashes raw bits, so a base -0.0
     row and a child 0.0 row land in DIFFERENT hash groups. That can
     only make the diff more conservative — the child-side group shows
-    excess, the caller's count identity fails, and the exporter falls
-    back to the (always correct) rewrite model. It can never select a
-    wrong position."""
+    excess, the count identity fails, the diff returns None, and the
+    exporter falls back to the (always correct) rewrite model. It can
+    never select a wrong position."""
     from pyspark.sql import functions as F
 
     kcols = _row_key_cols(df, cols)
@@ -134,317 +138,229 @@ def _rank_minus_counts(
     )
 
 
-def _hashed_delete_candidates(base, child, cols, _f, _p, _r, _nc, _h1, _h2):
-    """LAZY candidate delete positions (_h1, _h2, _f, _p) of the narrow
-    hash-keyed diff — factored out so plan captures can explain the
-    full diff plan (the caller checkpoint-materializes it, which hides
-    the plan behind a LogicalRDD)."""
+def _with_file_pos(df, _f, _p):
+    """`df` plus the (scheme-less file path, row index) of each row."""
     from pyspark.sql import functions as F
 
-    h1, h2 = _row_hash_cols(child, cols)
-    b = (
-        base.withColumn(_h1, h1)
-        .withColumn(_h2, h2)
-        .select(_h1, _h2, _f, _p)
-    )
-    child_counts = (
-        child.withColumn(_h1, h1)
-        .withColumn(_h2, h2)
-        .groupBy(_h1, _h2)
-        .agg(F.count(F.lit(1)).alias(_nc))
-    )
-    return _rank_minus_counts(
-        b, child_counts, [_h1, _h2], _f, _p, _nc, _r, keep_nc=True
-    ).select(_h1, _h2, _f, _p, _nc)
+    return df.withColumn(
+        _f, F.regexp_replace(F.col("_metadata.file_path"), _SCHEME_RE, "/")
+    ).withColumn(_p, F.col("_metadata.row_index"))
 
 
-def _position_delete_diff(
-    spark,
-    base_dirs,
-    deleted_so_far,
-    child_dir: str,
-    check_excess: bool = True,
-    verify: bool = True,
-):
-    """If `child_dir`'s rows are a sub-multiset of the MASKED base
-    (the union of `base_dirs`' files — one dir or a [base, *append
-    delta] list — minus the already-deleted positions in
-    `deleted_so_far`, a DataFrame(file_path, pos) or None), return a
-    DataFrame(file_path STRING, pos BIGINT) of the NEW positions to
-    delete; else return None (the transition needs a rewrite, not a
-    delete).
-
-    Distributed by construction — no driver-side row materialization:
-    one shuffle groups base rows by a full-row struct key (null-safe),
-    `row_number()` over (file, pos) ranks duplicate occurrences
-    deterministically, and occurrences ranked past the child's
-    multiplicity for that value are the deleted positions. With
-    `check_excess` the sub-multiset check runs as its own probe job
-    (the same join read the other way: any child value with
-    multiplicity above the base's ⇒ not delete-expressible).
-
-    `check_excess=False` SKIPS that probe — halving the diff's
-    scan+shuffle work — for callers that validate by count identity
-    instead: the returned positions are Σ_k max(0, base_k − child_k)
-    per row-value k, so the child is a sub-multiset iff
-    |masked base| − |positions| == |child|, and both exporters already
-    hold those totals from parquet footers. On that cheaper path a
-    count mismatch means "not a pure delete", and the caller falls
-    back to the rewrite model.
-
-    NARROW SHUFFLE (round 12, guide §2.3/§8): the `check_excess=False`
-    path groups by a 128-bit row-value hash (two xxhash64 lanes)
-    instead of the full-row struct, so the diff's one shuffle carries
-    (hash, file, pos) — ~32 B + path per row — rather than every data
-    column. Exactness is kept by a collision-verification pass: the
-    full-value diff is re-run restricted to the deletion-AFFECTED hash
-    groups (a broadcast semi-join of the scans against the candidate
-    groups — the candidate set is delete-sized, the expected overlap
-    with child is ~0 rows) and must reproduce the candidate position
-    set exactly, else the diff returns None and the caller falls back
-    to the always-correct rewrite model. A wrong delete set would
-    additionally require a 128-bit collision between two distinct row
-    values confined to an equal-count group the child never perturbs
-    (~N²/2¹²⁹ ≈ 10⁻²³ at 10⁸ rows) AND pass the caller's count
-    identity. The returned positions are localCheckpoint-materialized
-    (the verification consumes them; callers re-pin for free). The
-    `check_excess=True` path keeps the full-row struct key — it is the
-    exact-probe mode used directly by tests and ad-hoc callers."""
+def _diff_inputs(spark, base_dirs: list[str], deleted_so_far, child_dir: str):
+    """The two sides of a transition diff: `(base, child, names)` where
+    `base` is the MASKED base — the union of `base_dirs`' files (the
+    base snapshot plus any append-delta dirs) minus the already-deleted
+    positions in `deleted_so_far`, a DataFrame(file_path, pos) or None —
+    carrying its (file, pos) columns, `child` is the child scan, and
+    `names` are the working-column names (_f, _p, _k, _r, _nc, _h1, _h2)
+    made fresh against the table's columns. None when the child's
+    schema differs from a base dir's: a schema change is never a pure
+    delete or append."""
     from pyspark.sql import functions as F
 
-    dirs = [base_dirs] if isinstance(base_dirs, str) else list(base_dirs)
-    scans = [spark.read.parquet(d) for d in dirs]
-    _f, _p, _k, _r, _nc, _nb, _h1, _h2 = _fresh_names(
-        scans[0].columns, "_f", "_p", "_k", "_r", "_nc", "_nb", "_h1", "_h2"
+    scans = [spark.read.parquet(d) for d in base_dirs]
+    child = spark.read.parquet(child_dir)
+    if any(sorted(s.dtypes) != sorted(child.dtypes) for s in scans):
+        return None
+    names = _fresh_names(
+        child.columns, "_f", "_p", "_k", "_r", "_nc", "_h1", "_h2"
     )
-    parts = [
-        s.withColumn(
-            _f, F.regexp_replace(F.col("_metadata.file_path"), _SCHEME_RE, "/")
-        ).withColumn(_p, F.col("_metadata.row_index"))
-        for s in scans
-    ]
-    base = parts[0]
-    for x in parts[1:]:
-        base = base.unionByName(x)
+    _f, _p = names[:2]
+    base = None
+    for s in scans:
+        part = _with_file_pos(s, _f, _p)
+        base = part if base is None else base.unionByName(part)
     if deleted_so_far is not None:
         dels = deleted_so_far.select(
             F.col("file_path").alias(_f), F.col("pos").alias(_p)
         )
         base = base.join(F.broadcast(dels), [_f, _p], "left_anti")
-    child = spark.read.parquet(child_dir)
-    cols = sorted(c for c in base.columns if c not in (_f, _p))
-    if sorted(child.columns) != cols:
-        return None  # schema changed: not expressible as deletes
-    key = F.struct(*_row_key_cols(child, cols))
-    if check_excess:
-        b = base.withColumn(_k, key).select(_k, _f, _p)
-        child_counts = (
-            child.withColumn(_k, key)
-            .groupBy(_k)
-            .agg(F.count(F.lit(1)).alias(_nc))
-        )
-        base_counts = b.groupBy(_k).agg(F.count(F.lit(1)).alias(_nb))
-        cc, bc = child_counts.alias("cc"), base_counts.alias("bc")
-        excess = (
-            cc.join(bc, F.col(f"cc.{_k}").eqNullSafe(F.col(f"bc.{_k}")), "left")
-            .where(F.col(_nb).isNull() | (F.col(_nc) > F.col(_nb)))
-            .limit(1)
-            .count()
-        )
-        if excess:
-            return None
-        return _rank_minus_counts(
-            b, child_counts, [_k], _f, _p, _nc, _r
-        ).select(F.col(_f).alias("file_path"), F.col(_p).alias("pos"))
+    return base, child, names
 
-    # --- narrow 128-bit-hash path (count-identity callers) ---
-    h1, h2 = _row_hash_cols(child, cols)
-    cand = _hashed_delete_candidates(
-        base, child, cols, _f, _p, _r, _nc, _h1, _h2
-    ).localCheckpoint()
-    if not verify:  # measurement-only escape hatch (tools/ab_mor_diff)
-        return cand.select(F.col(_f).alias("file_path"), F.col(_p).alias("pos"))
-    # Collision verification — PARTIAL groups only. A candidate group
-    # whose joined child multiplicity is NULL vanished from the child
-    # entirely; deleting ALL its occurrences is exact even under a hash
-    # collision, because any colliding value's child rows would hash
-    # into the same group — the child provably holds none of the
-    # group's values. Only PARTIALLY-deleted groups (the child keeps
-    # some occurrences) depend on the ranking choosing value-correct
-    # occurrences, so only they are re-checked against the full-value
-    # diff (broadcast semi-join of the scans against the partial
-    # groups). On unique-row tables this set is EMPTY and verification
-    # costs one count on the checkpointed candidates — measured: the
-    # blanket affected-group verification re-scanned base+child per
-    # commit and cost more than the narrow shuffle saved (interleaved
-    # A/B, tools/ab_mor_diff.py).
-    cand_partial = cand.where(F.col(_nc).isNotNull())
-    n_partial = cand_partial.count()
+
+def _broadcast_if_small(spark, df, est_bytes: int):
+    """`df` hinted for broadcast when `est_bytes` fits Spark's own
+    `spark.sql.autoBroadcastJoinThreshold`; unhinted above it (or when
+    the threshold disables broadcasts), so Spark plans a shuffle join
+    instead of collecting an oversized table and shipping it to every
+    executor."""
+    from pyspark.sql import functions as F
+
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return F.broadcast(df) if est_bytes <= limit else df
+
+
+def _hashed_excess(spark, left, right, left_rows: int, right_rows: int, names):
+    """Positions (_f, _p) of the `left` rows in excess of `right`'s
+    multiplicity for the same row value — Σ_k max(0, left_k − right_k)
+    per value k — localCheckpoint-pinned. Returns (positions, count,
+    longest path in bytes), or None unless `right` is a sub-multiset of
+    `left`: the count identity |positions| == left_rows − right_rows
+    (both from parquet footers) holds exactly then, and the partial
+    groups' collision verification must reproduce the positions.
+
+    NARROW SHUFFLE: rows group by a 128-bit row-value hash (two xxhash64
+    lanes) instead of the full-row struct, so the one shuffle carries
+    (hash, file, pos) — ~32 B + path per row — rather than every data
+    column. The count, the partial-group count and the longest path are
+    one aggregation, observed on the job that pins the candidates — no
+    job of its own, and only three numbers leave the executors.
+
+    Collision verification — PARTIAL groups only. A candidate group
+    whose joined `right` multiplicity is NULL is absent from `right`
+    entirely; taking ALL its occurrences is exact even under a hash
+    collision, because any colliding value's `right` rows would hash
+    into the same group. Only groups `right` partially covers depend on
+    the ranking choosing value-correct occurrences, so only they are
+    re-diffed on the full-value struct key, restricted to the affected
+    hash groups, and must reproduce the candidate positions exactly.
+    On unique-row tables that set is empty and verification is free —
+    measured: a blanket affected-group verification re-scanned both
+    sides per commit and cost more than the narrow shuffle saved."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    _f, _p, _k, _r, _nc, _h1, _h2 = names
+    cols = sorted(c for c in right.columns if c not in (_f, _p))
+    h1, h2 = _row_hash_cols(right, cols)
+
+    def hashed(df):
+        return df.withColumn(_h1, h1).withColumn(_h2, h2)
+
+    right_counts = (
+        hashed(right).groupBy(_h1, _h2).agg(F.count(F.lit(1)).alias(_nc))
+    )
+    stats = Observation()
+    cand = (
+        _rank_minus_counts(
+            hashed(left).select(_h1, _h2, _f, _p),
+            right_counts,
+            [_h1, _h2],
+            _f,
+            _p,
+            _nc,
+            _r,
+            keep_nc=True,
+        )
+        .observe(
+            stats,
+            F.count(F.lit(1)).alias("n"),
+            F.count(_nc).alias("n_partial"),
+            F.max(F.octet_length(_f)).alias("width"),
+        )
+        .localCheckpoint()
+    )
+    got = stats.get
+    n, n_partial, width = got["n"], got["n_partial"], got["width"]
+    if n != left_rows - right_rows:
+        return None  # `right` holds a value beyond `left`'s multiplicity
     if n_partial:
-        aff = cand_partial.select(_h1, _h2).distinct()
-        base_aff = (
-            base.withColumn(_h1, h1)
-            .withColumn(_h2, h2)
-            .join(F.broadcast(aff), [_h1, _h2], "left_semi")
-            .withColumn(_k, key)
-            .select(_k, _f, _p)
+        partial = cand.where(F.col(_nc).isNotNull())
+        aff = _broadcast_if_small(
+            spark, partial.select(_h1, _h2).distinct(), n_partial * 16
         )
-        child_aff_counts = (
-            child.withColumn(_h1, h1)
-            .withColumn(_h2, h2)
-            .join(F.broadcast(aff), [_h1, _h2], "left_semi")
-            .withColumn(_k, key)
-            .groupBy(_k)
-            .agg(F.count(F.lit(1)).alias(_nc))
-        )
+        key = F.struct(*_row_key_cols(right, cols))
+
+        def affected(df):
+            return (
+                hashed(df)
+                .join(aff, [_h1, _h2], "left_semi")
+                .withColumn(_k, key)
+            )
+
         exact = (
             _rank_minus_counts(
-                base_aff, child_aff_counts, [_k], _f, _p, _nc, _r
+                affected(left).select(_k, _f, _p),
+                affected(right).groupBy(_k).agg(F.count(F.lit(1)).alias(_nc)),
+                [_k],
+                _f,
+                _p,
+                _nc,
+                _r,
             )
             .select(_f, _p)
             .localCheckpoint()
         )
         if (
             exact.count() != n_partial
-            or exact.join(cand_partial, [_f, _p], "inner").count() != n_partial
+            or exact.join(partial, [_f, _p], "inner").count() != n_partial
         ):
             return None  # 128-bit collision in a partial group: rewrite
-    return cand.select(F.col(_f).alias("file_path"), F.col(_p).alias("pos"))
+    return cand.select(_f, _p), n, width or 0
+
+
+def _position_delete_diff(
+    spark,
+    base_dirs: list[str],
+    deleted_so_far,
+    child_dir: str,
+    base_rows: int,
+    child_rows: int,
+):
+    """If `child_dir`'s rows are a sub-multiset of the MASKED base (see
+    `_diff_inputs`), return a pinned DataFrame(file_path STRING, pos
+    BIGINT) of the NEW positions to delete; else None (the transition
+    needs a rewrite, not a delete). `base_rows` (masked live rows) and
+    `child_rows` are the callers' parquet-footer totals.
+
+    Distributed by construction — no driver-side row materialization:
+    one shuffle groups base rows by row value, `row_number()` over
+    (file, pos) ranks duplicate occurrences deterministically, and
+    occurrences ranked past the child's multiplicity for that value are
+    the deleted positions. The sub-multiset check is the count identity
+    base_rows − |positions| == child_rows on those same positions
+    (`_hashed_excess`), so no separate probe job runs."""
+    from pyspark.sql import functions as F
+
+    inputs = _diff_inputs(spark, base_dirs, deleted_so_far, child_dir)
+    if inputs is None:
+        return None
+    base, child, names = inputs
+    out = _hashed_excess(spark, base, child, base_rows, child_rows, names)
+    if out is None:
+        return None
+    _f, _p = names[:2]
+    return out[0].select(F.col(_f).alias("file_path"), F.col(_p).alias("pos"))
 
 
 def _append_diff(
     spark,
-    base_dirs,
+    base_dirs: list[str],
     deleted_so_far,
     child_dir: str,
-    base_rows: int | None = None,
-    child_rows: int | None = None,
-    verify: bool = True,
+    base_rows: int,
+    child_rows: int,
 ):
-    """If `child_dir`'s rows are a super-multiset of the MASKED base
-    (the union of `base_dirs`' files minus the already-deleted
-    positions in `deleted_so_far` — a DataFrame(file_path, pos) or
-    None), return a DataFrame of the APPENDED rows (child minus base —
-    exact multiset difference); else return None (the transition needs
-    a rewrite, not an append).
+    """If `child_dir`'s rows are a super-multiset of the MASKED base (see
+    `_diff_inputs`), return a DataFrame of the APPENDED rows (child
+    minus base — exact multiset difference); else None (the transition
+    needs a rewrite, not an append). `base_rows` (masked live rows) and
+    `child_rows` are the callers' parquet-footer totals.
 
-    Mirror image of `_position_delete_diff`'s narrow path (round 12,
-    guide §2.3/§8): the append positions are computed per 128-bit
-    row-value hash group (child occurrences ranked past the base's
-    multiplicity), so the diff's shuffle carries (hash, file, pos)
-    instead of full rows, and the super-multiset probe is the count
-    identity Σ max(0, child_k − base_k) == |child| − |masked base| —
-    one count on the checkpointed candidates instead of the former
-    full-width `base.exceptAll(child)` probe job. The appended FULL
-    rows move exactly once: a (file, pos) semi-join against the child
-    scan (they would move into the append files regardless). Exactness
-    is kept the same way as the delete diff: the full-value diff is
-    re-run restricted to the append-affected hash groups and must
-    reproduce the candidate position set, else None (rewrite model).
-    Pass `base_rows` (MASKED live rows) / `child_rows` when the caller
-    already holds them (parquet footers) to skip the two count jobs."""
-    from pyspark.sql import functions as F
-
-    dirs = [base_dirs] if isinstance(base_dirs, str) else list(base_dirs)
-    scans = [spark.read.parquet(d) for d in dirs]
-    child = spark.read.parquet(child_dir)
-    if any(sorted(s.dtypes) != sorted(child.dtypes) for s in scans):
-        return None  # schema/layout changed: not expressible as appends
+    Mirror image of `_position_delete_diff`: the child occurrences
+    ranked past the base's multiplicity per row value are the appended
+    positions, validated by |positions| == child_rows − base_rows. The
+    appended FULL rows move exactly once: a (file, pos) semi-join
+    against the child scan (they would move into the append files
+    regardless)."""
+    inputs = _diff_inputs(spark, base_dirs, deleted_so_far, child_dir)
+    if inputs is None:
+        return None
+    base, child, names = inputs
     if any(t == "variant" for _, t in child.dtypes):
         # the appended rows must keep their original binary form, and
         # the exact verification pass compares full values — fall back
         # to the (always correct) rewrite model for variant tables
         return None
-    _f, _p, _k, _r, _nc, _h1, _h2 = _fresh_names(
-        child.columns, "_f", "_p", "_k", "_r", "_nc", "_h1", "_h2"
-    )
-    parts = [
-        s.withColumn(
-            _f, F.regexp_replace(F.col("_metadata.file_path"), _SCHEME_RE, "/")
-        ).withColumn(_p, F.col("_metadata.row_index"))
-        for s in scans
-    ]
-    base = parts[0]
-    for x in parts[1:]:
-        base = base.unionByName(x)
-    if deleted_so_far is not None:
-        dels = deleted_so_far.select(
-            F.col("file_path").alias(_f), F.col("pos").alias(_p)
-        )
-        base = base.join(F.broadcast(dels), [_f, _p], "left_anti")
-    cols = sorted(child.columns)
-    h1, h2 = _row_hash_cols(child, cols)
-    key = F.struct(*_row_key_cols(child, cols))
-    child_fp = child.withColumn(
-        _f, F.regexp_replace(F.col("_metadata.file_path"), _SCHEME_RE, "/")
-    ).withColumn(_p, F.col("_metadata.row_index"))
-    c_kfp = (
-        child_fp.withColumn(_h1, h1)
-        .withColumn(_h2, h2)
-        .select(_h1, _h2, _f, _p)
-    )
-    base_counts = (
-        base.withColumn(_h1, h1)
-        .withColumn(_h2, h2)
-        .groupBy(_h1, _h2)
-        .agg(F.count(F.lit(1)).alias(_nc))
-    )
-    cand = (
-        _rank_minus_counts(
-            c_kfp, base_counts, [_h1, _h2], _f, _p, _nc, _r, keep_nc=True
-        )
-        .select(_h1, _h2, _f, _p, _nc)
-        .localCheckpoint()
-    )
-    n = cand.count()
-    n_base = base.count() if base_rows is None else base_rows
-    n_child = child.count() if child_rows is None else child_rows
-    if n != n_child - n_base:
-        return None  # some base row missing from child: not an append
-    if verify:
-        # Collision verification — PARTIAL groups only (mirror of the
-        # delete diff): a candidate group whose joined BASE multiplicity
-        # is NULL is entirely new — appending all its child occurrences
-        # is exact even under a collision, because the base provably
-        # holds none of the group's values. Only groups the base
-        # partially covers depend on the ranking choosing value-correct
-        # occurrences; on unique-row tables this set is empty.
-        cand_partial = cand.where(F.col(_nc).isNotNull())
-        n_partial = cand_partial.count()
-        if n_partial:
-            aff = cand_partial.select(_h1, _h2).distinct()
-            child_aff = (
-                child_fp.withColumn(_h1, h1)
-                .withColumn(_h2, h2)
-                .join(F.broadcast(aff), [_h1, _h2], "left_semi")
-                .withColumn(_k, key)
-                .select(_k, _f, _p)
-            )
-            base_aff_counts = (
-                base.withColumn(_h1, h1)
-                .withColumn(_h2, h2)
-                .join(F.broadcast(aff), [_h1, _h2], "left_semi")
-                .withColumn(_k, key)
-                .groupBy(_k)
-                .agg(F.count(F.lit(1)).alias(_nc))
-            )
-            exact = (
-                _rank_minus_counts(
-                    child_aff, base_aff_counts, [_k], _f, _p, _nc, _r
-                )
-                .select(_f, _p)
-                .localCheckpoint()
-            )
-            if (
-                exact.count() != n_partial
-                or exact.join(cand_partial, [_f, _p], "inner").count()
-                != n_partial
-            ):
-                return None  # 128-bit collision in a partial group: rewrite
+    _f, _p = names[:2]
+    child_fp = _with_file_pos(child, _f, _p)
+    out = _hashed_excess(spark, child_fp, base, child_rows, base_rows, names)
+    if out is None:
+        return None
+    pos, n, width = out
     return child_fp.join(
-        F.broadcast(cand.select(_f, _p)) if n <= 1_000_000 else cand.select(_f, _p),
-        [_f, _p],
-        "left_semi",
+        _broadcast_if_small(spark, pos, n * (width + 8)), [_f, _p], "left_semi"
     ).select(*child.columns)
 
 

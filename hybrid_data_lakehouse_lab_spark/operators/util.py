@@ -34,13 +34,15 @@ def _input_bytes(files: list[str]) -> int | None:
     repartitions, the safe direction at real scale."""
     total = 0
     for f in files:
-        if ":/" in f:
-            parsed = urllib.parse.urlparse(f)
-            if parsed.scheme not in ("", "file"):
-                return None  # remote scheme: cannot size from the driver
+        parsed = urllib.parse.urlparse(f) if ":/" in f else None
+        if parsed is None or len(parsed.scheme) <= 1:
+            # a local path; a one-letter "scheme" is a drive letter
+            # (C:/data/x.parquet), not a remote URL
+            path = f
+        elif parsed.scheme == "file":
             path = parsed.path
         else:
-            path = f
+            return None  # remote scheme: cannot size from the driver
         try:
             if path.endswith(".parquet"):
                 import pyarrow.parquet as pq

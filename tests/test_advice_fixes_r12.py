@@ -28,9 +28,16 @@ def test_lut_cache_hit_returns_same_table():
     jpeg._DECODE_LUT_CACHE.clear()
 
 
-def test_input_bytes_remote_scheme_returns_none():
+def test_input_bytes_remote_scheme_returns_none(tmp_path, monkeypatch):
     assert _input_bytes(["s3a://bucket/part-0.parquet"]) is None
     assert _input_bytes(["hdfs://nn/part-0.parquet"]) is None
+    # a one-letter scheme is a Windows drive letter, sized as a local
+    # path — not refused as remote (here a relative dir named "C:")
+    monkeypatch.chdir(tmp_path)
+    (tmp_path / "C:" / "data").mkdir(parents=True)
+    (tmp_path / "C:" / "data" / "x.bin").write_bytes(b"12345")
+    assert _input_bytes(["C:/data/x.bin"]) == 5
+    assert _input_bytes(["C:/data/missing.bin"]) is None
 
 
 def test_fan_out_passes_streaming_frames_through(spark):

@@ -1,9 +1,11 @@
-"""Interleaved A/B of the round-12 narrow MoR diffs vs the round-11
-full-row-struct forms, on the 10× slice, in ONE JVM (guide §1: this
+"""Interleaved A/B of the MoR transition diffs against an older
+checkout's versions, on the 10× slice, in ONE JVM (guide §1: this
 host's throttle makes sequential A/B invalid — interleave variants).
 
-The old implementations are loaded from a git worktree of the parent
-commit as a separate module; each variant round swaps the three diff
+The old implementations are loaded from another checkout (a clone of
+an earlier commit) as a separate module; shims adapt their signatures
+(older diffs left the count-identity check to the exporters, so the
+delete shim runs it). Each variant round swaps the three diff
 functions in operators.mor_diff (late importers) and operators.
 iceberg_meta / operators.delta_log (top-level importers), runs the lane
 list with the noop sink, and records per-lane times. Min-of-N per
@@ -55,25 +57,25 @@ def main() -> None:
     # it only needs module-level names, which are self-contained
     spec.loader.exec_module(old)
 
-    def old_append_shim(*a, base_rows=None, child_rows=None):
-        return old._append_diff(*a)
+    def old_delete_shim(spark, base_dirs, prior, child_dir, base_rows, child_rows):
+        # the old diff left the count-identity check to its callers;
+        # its fifth argument False selected that count-identity mode
+        d = old._position_delete_diff(spark, base_dirs, prior, child_dir, False)
+        if d is None:
+            return None
+        d = d.localCheckpoint()
+        return d if base_rows - d.count() == child_rows else None
 
-    import functools
+    def old_append_shim(spark, base_dirs, prior, child_dir, base_rows, child_rows):
+        return old._append_diff(spark, base_dirs, prior, child_dir)
 
     new_fns = {
         "_position_delete_diff": mor_diff._position_delete_diff,
         "_append_diff": mor_diff._append_diff,
         "_upsert_diff": mor_diff._upsert_diff,
     }
-    noverify_fns = {
-        "_position_delete_diff": functools.partial(
-            mor_diff._position_delete_diff, verify=False
-        ),
-        "_append_diff": functools.partial(mor_diff._append_diff, verify=False),
-        "_upsert_diff": mor_diff._upsert_diff,
-    }
     old_fns = {
-        "_position_delete_diff": old._position_delete_diff,
+        "_position_delete_diff": old_delete_shim,
         "_append_diff": old_append_shim,
         "_upsert_diff": old._upsert_diff,
     }
@@ -110,7 +112,7 @@ def main() -> None:
     apply(new_fns)
     materialize(QUERIES[lanes[0]](spark, slice_dir))
 
-    variants = [("old", old_fns), ("new", new_fns), ("noverify", noverify_fns)]
+    variants = [("old", old_fns), ("new", new_fns)]
     results: dict[str, dict[str, float]] = {label: {} for label, _ in variants}
     for r in range(n_rounds):
         for label, fns in variants:
