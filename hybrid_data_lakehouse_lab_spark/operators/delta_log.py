@@ -56,7 +56,7 @@ import os
 import urllib.parse
 import uuid
 
-from .dv_kernel import dv_blobs_by_file, dv_state_positions
+from .dv_kernel import dv_blobs_by_file
 from .mor_diff import (
     _SCHEME_RE,
     _parquet_row_count,
@@ -64,6 +64,7 @@ from .mor_diff import (
     _with_file_pos,
 )
 from .timetravel import SnapshotTable
+from .util import local_frame
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
@@ -324,7 +325,8 @@ def _write_change_data(
     )
     pcols = next((list(pv) for pv in pv_of.values() if pv), [])
     if pcols:
-        mapping = spark.createDataFrame(
+        mapping = local_frame(
+            spark,
             [(f, *[pv_of[f].get(c) for c in pcols]) for f in touched],
             ", ".join(["_f STRING"] + [f"`{c}` STRING" for c in pcols]),
         )
@@ -380,12 +382,13 @@ def export_delta_log(
     the spec requires. The protocol action declares reader v3 /
     writer v7 + the deletionVectors feature. DV construction is FULLY
     DISTRIBUTED: the position diff is a Spark plan, per-file bitmaps
-    are sorted/merged/serialized in a cogrouped Arrow kernel on the
-    executors (prior state decoded there too), and the driver receives
-    only (file, blob bytes, cardinality) rows to frame into the .bin
-    file — it never materializes positions, so a GDPR-scale purge of a
-    100 TB table costs the driver compressed-bitmap bytes, not billions
-    of Row objects.
+    are merged with the positions deleted since the last rewrite and
+    serialized by two JVM-only aggregations on the executors
+    (operators/dv_kernel.py — no Python worker starts), and the driver
+    receives only (file, blob bytes, cardinality) rows to frame into
+    the .bin file — it never materializes positions, so a GDPR-scale
+    purge of a 100 TB table costs the driver compressed-bitmap bytes,
+    not billions of Row objects.
 
     With `change_data=True`, the table declares CHANGE DATA FEED
     (PROTOCOL.md "Change Data Files"): `delta.enableChangeDataFeed` in
@@ -427,11 +430,14 @@ def export_delta_log(
     # DV export state: physical dir of the last rewrite commit, the
     # cumulative deletion-vector state per (absolute) data file path —
     # held as (framed blob bytes, cardinality), NEVER as positions (the
-    # driver's footprint is compressed-bitmap bytes; expansion and
-    # aggregation happen executor-side) — and the base's logical row
-    # count under those masks.
+    # driver's footprint is compressed-bitmap bytes; aggregation
+    # happens executor-side) — the positions deleted since that rewrite
+    # (the union of each DV commit's pinned diff: the mask for the next
+    # diff and the prior state of a re-folded file), and the base's
+    # logical row count under those masks.
     base_dir: str | None = None
     dv_state: dict[str, tuple[bytes, int]] = {}
+    deleted_so_far = None
     base_live_rows: int | None = None
     referenced_dv_files: set[str] = set()
     referenced_cdc_dirs: set[str] = set()
@@ -485,15 +491,19 @@ def export_delta_log(
                 deleted = _position_delete_diff(
                     table.spark,
                     [base_dir],
-                    dv_state_positions(table.spark, dv_state)
-                    if dv_state
-                    else None,
+                    deleted_so_far,
                     snap["path"],
                     base_live_rows,
                     cur_rows,
+                    mask_rows=sum(c for _b, c in dv_state.values()),
                 )
                 if deleted is not None:
-                    dv_rows = dv_blobs_by_file(table.spark, deleted, dv_state)
+                    dv_rows = dv_blobs_by_file(deleted, deleted_so_far)
+                    deleted_so_far = (
+                        deleted
+                        if deleted_so_far is None
+                        else deleted_so_far.unionByName(deleted)
+                    )
                     base_live_rows = cur_rows
 
         actions: list[dict] = []
@@ -678,6 +688,7 @@ def export_delta_log(
             prev_files = stat_files
             base_dir = snap["path"]
             dv_state = {}
+            deleted_so_far = None
             if mor_deletes:
                 base_live_rows = (
                     sum(_footer_rows(table.root, files))
@@ -1583,7 +1594,7 @@ def read_delta_table(
             if _delta_prune_may_match(add, pcols_phys, prune_phys)
         }
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     df = spark.read.schema(data_schema).parquet(*files)
     dv_pairs = [
         (path, pos)
@@ -1600,7 +1611,7 @@ def read_delta_table(
             f"read_delta_table({root})",
         )
     if dv_pairs:
-        mask = spark.createDataFrame(dv_pairs, "_file STRING, _pos BIGINT")
+        mask = local_frame(spark, dv_pairs, "_file STRING, _pos BIGINT")
         df = (
             df.withColumn(
                 "_file",
@@ -1618,7 +1629,8 @@ def read_delta_table(
             v = pv.get(phys_of.get(c, c))
             return pv.get(c) if v is None else v
 
-        mapping = spark.createDataFrame(
+        mapping = local_frame(
+            spark,
             [
                 (path, *[_pv(add, c) for c in pcols])
                 for path, add in files.items()
@@ -1860,7 +1872,8 @@ def read_delta_changes(
     )
 
     def attach(df, rows):
-        mapping = spark.createDataFrame(
+        mapping = local_frame(
+            spark,
             [
                 (p, v, ts, *[pv.get(c) for c in pcols])
                 for p, v, ts, pv, _dv in rows
@@ -1882,7 +1895,8 @@ def read_delta_changes(
             df = df.withColumn("_pos", F.col("_metadata.row_index"))
         df = df.join(F.broadcast(mapping), "_file")
         if dv_masks:
-            mdf = spark.createDataFrame(
+            mdf = local_frame(
+                spark,
                 dv_masks, "_file STRING, _commit_version BIGINT, _pos BIGINT"
             )
             df = df.join(
@@ -1925,7 +1939,7 @@ def read_delta_changes(
                 T.StructField("_commit_timestamp", T.TimestampType()),
             ]
         )
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     res = reduce(lambda a, b: a.unionByName(b), parts)
     res = res.withColumn(
         "_commit_timestamp", F.timestamp_millis(F.col("_ts"))

@@ -98,6 +98,7 @@ from .mor_diff import (
 )
 from .delta_log import _check_compaction_rows, _footer_rows, _snapshot_files
 from .timetravel import SnapshotTable
+from .util import local_frame
 
 _EPOCH = datetime.date(1970, 1, 1)
 
@@ -399,6 +400,20 @@ POS_DELETE_FILE_PATH_ID = 2147483546
 POS_DELETE_POS_ID = 2147483545
 
 
+
+
+def _read_position_deletes(spark, dirs: list[str]):
+    """The (file_path, pos) rows of the stacked v2 delete dirs, or None.
+    Each dir is its own root (partition-scoped dirs nest `col=value/`
+    under it), so partition discovery across two of them would
+    conflict; the partition columns are not needed here."""
+    if not dirs:
+        return None
+    return (
+        spark.read.option("recursiveFileLookup", "true")
+        .parquet(*dirs)
+        .select("file_path", "pos")
+    )
 
 
 def _write_position_deletes(
@@ -1174,10 +1189,17 @@ def export_iceberg_metadata(
     # (magic + portable roaring64) + cardinality, keyed by absolute
     # data-file path (a new DV REPLACES the prior one for that file,
     # per the spec's at-most-one-DV-per-data-file rule — same replace
-    # semantics as Delta's cumulative descriptors). Bitmaps are built
-    # and merged EXECUTOR-side (operators/dv_kernel.py); the driver
-    # holds only compressed-bitmap bytes, never row positions.
+    # semantics as Delta's cumulative descriptors), kept for Puffin
+    # framing and the minor-compaction re-emit. Bitmaps are built and
+    # merged EXECUTOR-side (operators/dv_kernel.py); the driver holds
+    # only compressed-bitmap bytes, never row positions. The positions
+    # themselves stay executor-side as the union of each DV commit's
+    # pinned diff since the last rewrite (`dv_deleted`): the mask for
+    # the next diff and the prior state of a re-folded file.
     dv_state: dict[str, tuple[bytes, int]] = {}
+    dv_deleted = None
+    # v2: rows in the stacked positional delete files (their footers)
+    delete_rows = 0
     # v3 row lineage: the table's next _row_id to assign
     next_row_id = 0
     written_delete_dirs: set[str] = set()
@@ -1302,23 +1324,12 @@ def export_iceberg_metadata(
                 )
         def _prior_deletes():
             """The accumulated delete state as a (file_path, pos)
-            DataFrame, or None — the mask both incremental diffs apply
-            to the base before comparing against the child."""
+            DataFrame, or None, and its row count — the mask both
+            incremental diffs apply to the base before comparing
+            against the child."""
             if format_version >= 3:
-                from .dv_kernel import dv_state_positions
-
-                return (
-                    dv_state_positions(table.spark, dv_state)
-                    if dv_state
-                    else None
-                )
-            return (
-                table.spark.read.parquet(*delete_dirs).select(
-                    "file_path", "pos"
-                )
-                if delete_dirs
-                else None
-            )
+                return dv_deleted, sum(c for _b, c in dv_state.values())
+            return _read_position_deletes(table.spark, delete_dirs), delete_rows
 
         def _write_manifest(suffix, spec_id, data_files, first_row_id=None):
             """Write this snapshot's manifest `m-{i}{suffix}.avro` of
@@ -1365,13 +1376,15 @@ def export_iceberg_metadata(
             and format_version >= 2
             and total_rc < base_live_rows
         ):
+            mask, mask_rows = _prior_deletes()
             deleted = _position_delete_diff(
                 table.spark,
                 [base_dir, *append_dirs],
-                _prior_deletes(),
+                mask,
                 snap["path"],
                 base_live_rows,
                 total_rc,
+                mask_rows=mask_rows,
             )
         elif can_incremental and total_rc > base_live_rows:
             # incremental APPEND (all format versions, v1 included):
@@ -1379,13 +1392,15 @@ def export_iceberg_metadata(
             # only the delta — killing the O(table-files)-per-commit
             # metadata growth of the full-rewrite model on
             # append-heavy histories
+            mask, mask_rows = _prior_deletes()
             appended = _append_diff(
                 table.spark,
                 [base_dir, *append_dirs],
-                _prior_deletes(),
+                mask,
                 snap["path"],
                 base_live_rows,
                 total_rc,
+                mask_rows=mask_rows,
             )
 
         if upsert is not None:
@@ -1493,8 +1508,9 @@ def export_iceberg_metadata(
             # parquet). One cumulative DV per touched data file; the
             # new delete manifest REPLACES all prior delete manifests
             # in the manifest list (at most one DV per data file). The
-            # bitmaps are merged and serialized ON the executors via
-            # the cogrouped Arrow kernel shared with the Delta exporter
+            # bitmaps are merged with the positions deleted since the
+            # last rewrite and serialized ON the executors by the
+            # JVM-only encoder shared with the Delta exporter
             # (operators/dv_kernel.py — same magic+roaring64 body
             # bytes); the driver receives only (file, blob,
             # cardinality) per touched file and does the O(files)
@@ -1509,10 +1525,13 @@ def export_iceberg_metadata(
                             bytes(r["blob"]),
                             int(r["cardinality"]),
                         )
-                        for r in dv_blobs_by_file(
-                            table.spark, deleted, dv_state
-                        )
+                        for r in dv_blobs_by_file(deleted, dv_deleted)
                     }
+                )
+                dv_deleted = (
+                    deleted
+                    if dv_deleted is None
+                    else dv_deleted.unionByName(deleted)
                 )
             # else (minor compaction): re-emit the cumulative DV state
             # as one fresh Puffin file — k stacked DV files become one
@@ -1585,9 +1604,7 @@ def export_iceberg_metadata(
             # MINOR compaction: the stacked delete dirs rewritten into
             # one consolidated, still-partition-scoped file set ---
             if deleted is None:
-                deleted = table.spark.read.parquet(*delete_dirs).select(
-                    "file_path", "pos"
-                )
+                deleted = _read_position_deletes(table.spark, delete_dirs)
             ddir = os.path.join(table.root, "deletes", f"s{snapshot_id:05d}")
             base_spec_fields = specs[base_spec_id]
             file_partitions = None
@@ -1615,7 +1632,8 @@ def export_iceberg_metadata(
                     )
                     for f in base_files
                 ]
-                file_partitions = table.spark.createDataFrame(
+                file_partitions = local_frame(
+                    table.spark,
                     rows,
                     ", ".join(
                         ["file_path string"]
@@ -1656,9 +1674,11 @@ def export_iceberg_metadata(
                     r for r in prev_rows if (r.get("content") or 0) == 0
                 ] + [row]
                 delete_dirs = [ddir]
+                delete_rows = 0
             else:
                 manifest_rows = prev_rows + [row]
                 delete_dirs.append(ddir)
+            delete_rows += sum(d["record_count"] for d in dfiles)
             written_delete_dirs.add(os.path.basename(ddir))
             base_live_rows = total_rc
             operation = "replace" if is_minor else "delete"
@@ -1748,8 +1768,10 @@ def export_iceberg_metadata(
             base_spec_id = sid_spec
             base_schema_sid = event_schema_id[i]
             delete_dirs = []
+            delete_rows = 0
             append_dirs = []
             dv_state = {}
+            dv_deleted = None
             base_live_rows = total_rc
             operation = "replace" if is_compaction else "overwrite"
 
@@ -2289,7 +2311,7 @@ def read_iceberg_table(
                 for f in metadata["schema"]["fields"]
             ]
         )
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     snap = next(
         (s for s in metadata["snapshots"] if s["snapshot-id"] == sid), None
     )
@@ -2653,7 +2675,7 @@ def read_iceberg_table(
             + [T.StructField("_row_id", T.LongType(), True)]
         )
     if not files:
-        return spark.createDataFrame([], full_schema)
+        return local_frame(spark, [], full_schema)
     if with_row_lineage:
         full_schema = T.StructType(full_schema.fields[:-1])
     any_deletes = bool(pos_deletes or eq_deletes or dv_deletes)
@@ -2841,7 +2863,8 @@ def read_iceberg_table(
         if gkey:
             # identity columns from the manifests' typed partition
             # values — a |group files|-row broadcast mapping
-            mapping = spark.createDataFrame(
+            mapping = local_frame(
+                spark,
                 [
                     (p, *[from_typed(c, ident_vals[p].get(c)) for c in gkey])
                     for p in gpaths
@@ -2871,7 +2894,8 @@ def read_iceberg_table(
         # equality at delete.seq > data.seq (the spec's asymmetry:
         # a positional delete can target rows of its own commit, an
         # equality delete only strictly older data)
-        fseq_map = spark.createDataFrame(
+        fseq_map = local_frame(
+            spark,
             [(os.path.abspath(p), s) for p, s in file_seq.items()],
             "_file STRING, _fseq BIGINT",
         )
@@ -2903,7 +2927,8 @@ def read_iceberg_table(
             dv_rows.extend((ref_abs, p, dseq) for p in positions)
     if pos_deletes:
         dseq_by_path = {os.path.abspath(p): s for p, s in pos_deletes}
-        dmap = spark.createDataFrame(
+        dmap = local_frame(
+            spark,
             list(dseq_by_path.items()), "_dfile STRING, _dseq BIGINT"
         )
         mask = (
@@ -2929,7 +2954,8 @@ def read_iceberg_table(
             "left_anti",
         )
     if dv_rows:
-        vmask = spark.createDataFrame(
+        vmask = local_frame(
+            spark,
             dv_rows, "file_path STRING, pos BIGINT, _dseq BIGINT"
         ).alias("v")
         d = df.alias("d")
@@ -2959,7 +2985,8 @@ def read_iceberg_table(
                 raise ValueError(
                     f"equality_ids {ids} reference unknown field id {exc}"
                 ) from None
-            dmap2 = spark.createDataFrame(
+            dmap2 = local_frame(
+                spark,
                 [(os.path.abspath(p), s) for p, s in plist],
                 "_dfile STRING, _dseq BIGINT",
             )
@@ -3078,7 +3105,8 @@ def read_iceberg_table(
                 f"{_unresolved[0]} (carried-forward manifest with null "
                 "first_row_id?)"
             )
-        fmap = spark.createDataFrame(
+        fmap = local_frame(
+            spark,
             [
                 (os.path.abspath(p), file_first.get(p))
                 for p in files

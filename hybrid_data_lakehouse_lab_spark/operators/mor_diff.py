@@ -147,7 +147,13 @@ def _with_file_pos(df, _f, _p):
     ).withColumn(_p, F.col("_metadata.row_index"))
 
 
-def _diff_inputs(spark, base_dirs: list[str], deleted_so_far, child_dir: str):
+def _diff_inputs(
+    spark,
+    base_dirs: list[str],
+    deleted_so_far,
+    child_dir: str,
+    mask_rows: int | None = None,
+):
     """The two sides of a transition diff: `(base, child, names)` where
     `base` is the MASKED base — the union of `base_dirs`' files (the
     base snapshot plus any append-delta dirs) minus the already-deleted
@@ -156,9 +162,16 @@ def _diff_inputs(spark, base_dirs: list[str], deleted_so_far, child_dir: str):
     `names` are the working-column names (_f, _p, _k, _r, _nc, _h1, _h2)
     made fresh against the table's columns. None when the child's
     schema differs from a base dir's: a schema change is never a pure
-    delete or append."""
+    delete or append.
+
+    `mask_rows` is the row count of `deleted_so_far`, known to the
+    callers without a job (DV cardinalities, delete-file footers). The
+    mask is broadcast only when rows x (longest base path + 8 B) fits
+    `spark.sql.autoBroadcastJoinThreshold` (`_broadcast_if_small`)."""
     from pyspark.sql import functions as F
 
+    if deleted_so_far is not None and mask_rows is None:
+        raise ValueError("a prior-delete mask needs its row count (mask_rows)")
     scans = [spark.read.parquet(d) for d in base_dirs]
     child = spark.read.parquet(child_dir)
     if any(sorted(s.dtypes) != sorted(child.dtypes) for s in scans):
@@ -175,7 +188,13 @@ def _diff_inputs(spark, base_dirs: list[str], deleted_so_far, child_dir: str):
         dels = deleted_so_far.select(
             F.col("file_path").alias(_f), F.col("pos").alias(_p)
         )
-        base = base.join(F.broadcast(dels), [_f, _p], "left_anti")
+        # the mask's paths are base files: size it by the longest one
+        width = max(
+            (len(p.encode()) for s in scans for p in s.inputFiles()),
+            default=0,
+        )
+        dels = _broadcast_if_small(spark, dels, mask_rows * (width + 8))
+        base = base.join(dels, [_f, _p], "left_anti")
     return base, child, names
 
 
@@ -297,6 +316,7 @@ def _position_delete_diff(
     child_dir: str,
     base_rows: int,
     child_rows: int,
+    mask_rows: int | None = None,
 ):
     """If `child_dir`'s rows are a sub-multiset of the MASKED base (see
     `_diff_inputs`), return a pinned DataFrame(file_path STRING, pos
@@ -310,10 +330,11 @@ def _position_delete_diff(
     occurrences ranked past the child's multiplicity for that value are
     the deleted positions. The sub-multiset check is the count identity
     base_rows − |positions| == child_rows on those same positions
-    (`_hashed_excess`), so no separate probe job runs."""
+    (`_hashed_excess`), so no separate probe job runs. `mask_rows` is
+    the row count of `deleted_so_far` (see `_diff_inputs`)."""
     from pyspark.sql import functions as F
 
-    inputs = _diff_inputs(spark, base_dirs, deleted_so_far, child_dir)
+    inputs = _diff_inputs(spark, base_dirs, deleted_so_far, child_dir, mask_rows)
     if inputs is None:
         return None
     base, child, names = inputs
@@ -331,6 +352,7 @@ def _append_diff(
     child_dir: str,
     base_rows: int,
     child_rows: int,
+    mask_rows: int | None = None,
 ):
     """If `child_dir`'s rows are a super-multiset of the MASKED base (see
     `_diff_inputs`), return a DataFrame of the APPENDED rows (child
@@ -343,8 +365,9 @@ def _append_diff(
     positions, validated by |positions| == child_rows − base_rows. The
     appended FULL rows move exactly once: a (file, pos) semi-join
     against the child scan (they would move into the append files
-    regardless)."""
-    inputs = _diff_inputs(spark, base_dirs, deleted_so_far, child_dir)
+    regardless). `mask_rows` is the row count of `deleted_so_far` (see
+    `_diff_inputs`)."""
+    inputs = _diff_inputs(spark, base_dirs, deleted_so_far, child_dir, mask_rows)
     if inputs is None:
         return None
     base, child, names = inputs

@@ -52,7 +52,8 @@ def frame_dv_v1(body: bytes) -> bytes:
     shared with Delta's `roaring.dv_blob`) as a deletion-vector-v1
     blob: BE length prefix + body + BE CRC-32. O(compressed-bitmap
     bytes) — safe on the driver even for billion-row DVs, since the
-    bitmaps themselves are built executor-side (operators/dv_kernel)."""
+    bitmaps themselves are built executor-side by the JVM-only encoder
+    in operators/dv_kernel."""
     if body[:4] != DV_MAGIC_BYTES:
         raise ValueError(f"bad deletion-vector magic {body[:4].hex()}")
     return (

@@ -59,6 +59,31 @@ def _input_bytes(files: list[str]) -> int | None:
     return total
 
 
+def local_frame(spark, rows, schema) -> DataFrame:
+    """A DataFrame of driver-side `rows` (a list of tuples in `schema`
+    order; `schema` a StructType or DDL string), built through
+    PySpark's Arrow path: the rows become one `pyarrow.Table` that the
+    JVM reads directly. A list passed to `spark.createDataFrame` goes
+    through `sc.parallelize` and a Python RDD, which starts Python
+    workers — seconds of cold cost on a process's first call, even for
+    an empty list. The Arrow path has no silent fallback."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def fan_out(
     df: DataFrame,
     min_partitions: int | None = None,

@@ -2880,7 +2880,7 @@ def iceberg_variant_roundtrip(
     snapshots against DuckDB's independent JSON extraction.
 
     Scale: variant decode is JVM-columnar (no Python), the DV build is
-    the shared executor-side Arrow kernel, and the masked read is one
+    the shared executor-side JVM encoder, and the masked read is one
     scan + a broadcast anti-join — the same 100 TB envelope as the
     non-variant v3 lanes. pyarrow in this container cannot open VARIANT
     footers, so footer row counts fall back to DuckDB's reader

@@ -1,12 +1,13 @@
 """Distributed deletion-vector construction in the Iceberg fv3
 exporter (round-10 item 1 — the round-9 verdict's one `weak` finding):
 the driver must NEVER materialize row positions. The position diff
-stays a Spark plan, per-file bitmaps are merged and serialized in the
-cogrouped Arrow kernel shared with the Delta exporter
-(operators/dv_kernel.py), and the driver receives only (file_path,
-blob, cardinality) rows for Puffin container assembly. A GDPR-scale
-purge of 1% of a 100 TB table then costs the driver compressed-bitmap
-bytes instead of billions of Row objects.
+stays a Spark plan, per-file bitmaps are merged and serialized by the
+JVM-only encoder shared with the Delta exporter
+(operators/dv_kernel.py: two Spark aggregations, no Python worker),
+and the driver receives only (file_path, blob, cardinality) rows for
+Puffin container assembly. A GDPR-scale purge of 1% of a 100 TB table
+then costs the driver compressed-bitmap bytes instead of billions of
+Row objects.
 """
 
 from __future__ import annotations

@@ -234,9 +234,12 @@ def test_prior_deletes_masked_before_hashing(spark, tmp_path):
     )
     # child drops the remaining (1,'a') and keeps (2,'b'), (3,'c')
     spark.createDataFrame([(2, "b"), (3, "c")], schema).write.parquet(c)
-    d = _position_delete_diff(spark, [b], prior, c, 3, 2)
+    d = _position_delete_diff(spark, [b], prior, c, 3, 2, mask_rows=1)
     positions = {(r.file_path, r.pos) for r in d.collect()}
     assert positions == {(os.path.join(b, f), 1)}
+    # a mask must come with its row count: the broadcast is sized on it
+    with pytest.raises(ValueError, match="mask_rows"):
+        _position_delete_diff(spark, [b], prior, c, 3, 2)
 
 
 def _broadcasts(df) -> bool:
@@ -249,11 +252,20 @@ def test_broadcast_gates_follow_the_byte_threshold(spark, tmp_path):
     autoBroadcastJoinThreshold: within it the small side is hinted,
     above it the hint is dropped and Spark plans a shuffle join. Both
     branches must give the same (exact) answer, on the partial-group
-    verification and the append semi-join alike."""
+    verification, the append semi-join and the prior-delete mask
+    (sized from `mask_rows`) alike."""
     b, c, c2 = (str(tmp_path / x) for x in ("b", "c", "c2"))
     schema = "k INT, s STRING"
     base_rows = [(1, "a"), (1, "a"), (2, "b"), (3, "c")] * 3
     spark.createDataFrame(base_rows, schema).repartition(2).write.parquet(b)
+    f = next(
+        os.path.join(b, x)
+        for x in sorted(os.listdir(b))
+        if x.endswith(".parquet") and not x.startswith((".", "_"))
+    )
+    prior = spark.createDataFrame(
+        [(f, 0), (f, 1)], "file_path STRING, pos BIGINT"
+    )
     # child drops duplicate occurrences (partial groups) ...
     spark.createDataFrame(base_rows[:-4], schema).write.parquet(c)
     # ... or appends duplicates of existing values (partial groups)
@@ -271,12 +283,15 @@ def test_broadcast_gates_follow_the_byte_threshold(spark, tmp_path):
             assert _broadcasts(left.join(hinted, "k", "left_semi")) == (
                 threshold != "1"
             )
+            masked = _diff_inputs(spark, [b], prior, c, mask_rows=2)[0]
+            assert _broadcasts(masked) == (threshold != "1")
             d = _position_delete_diff(spark, [b], None, c, 12, 8)
             a = _append_diff(spark, [b], None, c2, 12, 14)
             results.append(
                 (
                     sorted((r.file_path, r.pos) for r in d.collect()),
                     sorted(tuple(r) for r in a.collect()),
+                    masked.count(),
                 )
             )
     finally:
@@ -285,3 +300,5 @@ def test_broadcast_gates_follow_the_byte_threshold(spark, tmp_path):
     assert results[0] == results[1]
     assert results[0][0] == sorted((r.file_path, r.pos) for r in ref.collect())
     assert results[0][1] == [(1, "a"), (9, "z")]
+    assert results[0][2] == 10
+

@@ -1,0 +1,131 @@
+"""The merge-on-read export and read path starts no Python worker.
+
+PySpark launches Python workers for pandas kernels (`mapInPandas`,
+`applyInPandas`, cogrouped `applyInPandas`) and for every
+`spark.createDataFrame(<python list>)`, which goes through
+`SparkContext.parallelize`. A fresh process pays seconds for that
+first launch. The exporters (`export_delta_log`,
+`export_iceberg_metadata`) and readers (`read_delta_table`,
+`read_delta_changes`, `read_iceberg_table`) build every driver-side
+frame through `util.local_frame` (Arrow) and every deletion vector
+through the JVM-only encoder in `operators/dv_kernel.py`. These tests
+make the four entry points raise, run chained-delete histories through
+every exporter and reader, and check the rows against
+`SnapshotTable.read` at every version.
+"""
+
+from __future__ import annotations
+
+import glob
+import os
+from collections import Counter
+
+import pytest
+from pyspark import SparkContext
+from pyspark.sql.group import GroupedData
+from pyspark.sql.pandas.group_ops import PandasCogroupedOps
+
+from hybrid_data_lakehouse_lab_spark.operators.delta_log import (
+    export_delta_log,
+    read_delta_changes,
+    read_delta_table,
+)
+from hybrid_data_lakehouse_lab_spark.operators.iceberg_meta import (
+    export_iceberg_metadata,
+    read_iceberg_table,
+)
+from hybrid_data_lakehouse_lab_spark.operators.maintenance import (
+    rewrite_delete_files,
+)
+from hybrid_data_lakehouse_lab_spark.operators.timetravel import SnapshotTable
+
+
+def _forbid_python_workers(spark, monkeypatch):
+    def refuse(name):
+        def _raise(*_a, **_k):
+            raise AssertionError(f"{name} starts Python workers")
+
+        return _raise
+
+    frame_cls = type(spark.range(1))  # the concrete classic DataFrame
+    for owner, attr in (
+        (SparkContext, "parallelize"),
+        (frame_cls, "mapInPandas"),
+        (GroupedData, "applyInPandas"),
+        (PandasCogroupedOps, "applyInPandas"),
+    ):
+        monkeypatch.setattr(owner, attr, refuse(f"{owner.__name__}.{attr}"))
+
+
+def _history(spark, root, partitioned=False, minor=False):
+    """load(300) -> delete -> delete -> append, or with `minor` the
+    append replaced by a minor compaction (rewrite_delete_files)."""
+    t = SnapshotTable(spark, root)
+    kw = {"partition_by": ["g"]} if partitioned else {}
+    df = spark.range(300).selectExpr("id", "CAST(id % 3 AS STRING) AS g")
+    live = df
+    t.write(live.repartition(3), committed_at_ms=1000, **kw)
+    live = live.filter("id % 5 != 0")
+    t.write(live.repartition(3), committed_at_ms=2000, **kw)
+    live = live.filter("id % 7 != 0")
+    t.write(live.repartition(3), committed_at_ms=3000, **kw)
+    if minor:
+        rewrite_delete_files(t, committed_at_ms=4000)
+    else:
+        more = spark.range(300, 330).selectExpr(
+            "id", "CAST(id % 3 AS STRING) AS g"
+        )
+        t.write(live.unionByName(more).repartition(3), committed_at_ms=4000, **kw)
+    return t
+
+
+def _rows(df):
+    return sorted((r["id"], r["g"]) for r in df.select("id", "g").collect())
+
+
+def _check_reads(spark, t, versions, iceberg_only=False):
+    want = {v: _rows(t.read(version=v)) for v in versions}
+    for i, v in enumerate(versions):
+        got = _rows(read_iceberg_table(spark, t.root, snapshot_id=i + 1))
+        assert got == want[v], ("iceberg", v)
+    if iceberg_only:
+        return
+    for i, v in enumerate(versions):
+        got = _rows(read_delta_table(spark, t.root, version=i))
+        assert got == want[v], ("delta", v)
+    # the change feed nets out to each commit's row-multiset change
+    changes = read_delta_changes(spark, t.root, starting_version=1).collect()
+    for i, v in enumerate(versions[1:], start=1):
+        ins, dels = Counter(), Counter()
+        for r in changes:
+            if r["_commit_version"] == i:
+                side = ins if r["_change_type"] == "insert" else dels
+                side[(r["id"], r["g"])] += 1
+        before, after = Counter(want[versions[i - 1]]), Counter(want[v])
+        assert ins - dels == after - before, ("cdf", v)
+        assert dels - ins == before - after, ("cdf", v)
+
+
+@pytest.mark.parametrize(
+    "partitioned,minor",
+    [(False, False), (True, False), (False, True)],
+    ids=["unpartitioned", "partitioned", "fv3-minor-compaction"],
+)
+def test_export_and_read_start_no_python_worker(
+    spark, tmp_path, monkeypatch, partitioned, minor
+):
+    t = _history(spark, str(tmp_path / "t"), partitioned, minor)
+    versions = [e["version"] for e in t._load_manifest()["history"]["main"]]
+    _forbid_python_workers(spark, monkeypatch)
+    export_iceberg_metadata(t, format_version=2)
+    _check_reads(spark, t, versions, iceberg_only=True)
+    assert glob.glob(
+        os.path.join(t.root, "deletes", "**", "*.parquet"), recursive=True
+    )
+    export_iceberg_metadata(t, format_version=3)
+    _check_reads(spark, t, versions, iceberg_only=True)
+    assert glob.glob(os.path.join(t.root, "deletes", "*", "*.puffin"))
+    export_delta_log(t, mor_deletes=True, change_data=True)
+    _check_reads(spark, t, versions)
+    # both deletes exported as deletion-vector commits
+    assert len(glob.glob(os.path.join(t.root, "deletion_vector_*.bin"))) == 2

@@ -57,7 +57,11 @@ def main() -> None:
     # it only needs module-level names, which are self-contained
     spec.loader.exec_module(old)
 
-    def old_delete_shim(spark, base_dirs, prior, child_dir, base_rows, child_rows):
+    # `mask_rows` sizes the newer diffs' mask broadcast; the older
+    # diffs broadcast the mask unconditionally, so the shims drop it
+    def old_delete_shim(
+        spark, base_dirs, prior, child_dir, base_rows, child_rows, mask_rows=None
+    ):
         # the old diff left the count-identity check to its callers;
         # its fifth argument False selected that count-identity mode
         d = old._position_delete_diff(spark, base_dirs, prior, child_dir, False)
@@ -66,7 +70,9 @@ def main() -> None:
         d = d.localCheckpoint()
         return d if base_rows - d.count() == child_rows else None
 
-    def old_append_shim(spark, base_dirs, prior, child_dir, base_rows, child_rows):
+    def old_append_shim(
+        spark, base_dirs, prior, child_dir, base_rows, child_rows, mask_rows=None
+    ):
         return old._append_diff(spark, base_dirs, prior, child_dir)
 
     new_fns = {
