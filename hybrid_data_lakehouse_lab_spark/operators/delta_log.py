@@ -23,9 +23,8 @@ repo's code. Mapping:
   emits `remove` for every file of commit i-1 and `add` for every file
   of snapshot i — the action shape of a `mode("overwrite")` Delta write.
 - Snapshot `properties` (the SCD2 checkpoint rides there) map to
-  `commitInfo.userMetadata`, the same field the DeltaSnapshotTable shim
-  uses (operators/lakehouse_adapter.py), so checkpoint recovery works
-  from either log.
+  `commitInfo.userMetadata`, where a Delta writer records per-commit
+  application metadata.
 
 Reference parity: the reference's time travel is Iceberg snapshots via
 Nessie (README.MD:308-313); this exporter gives the SnapshotTable the

@@ -26,34 +26,21 @@ import os
 from pyspark.sql import DataFrame, SparkSession, types as T
 
 from .avro_io import read_avro
-
-
-def _load_meta(root: str) -> dict:
-    meta_dir = os.path.join(root, "metadata")
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        n = int(fh.read().strip())
-    with open(os.path.join(meta_dir, f"v{n}.metadata.json")) as fh:
-        return json.load(fh)
+from .iceberg_meta import load_table_metadata, plan_snapshot, resolve_snapshot
+from .util import local_frame
 
 
 def _snap(metadata: dict, snapshot_id: int | None) -> dict:
-    sid = (
-        snapshot_id
-        if snapshot_id is not None
-        else metadata["current-snapshot-id"]
-    )
-    s = next(
-        (x for x in metadata["snapshots"] if x["snapshot-id"] == sid), None
-    )
+    s = resolve_snapshot(metadata, snapshot_id, None, None)
     if s is None:
-        raise ValueError(f"snapshot {sid} not found")
+        raise ValueError(f"table {metadata.get('location')} has no snapshot")
     return s
 
 
 def snapshots_table(spark: SparkSession, root: str) -> DataFrame:
     """One row per snapshot: (committed_at_ms, snapshot_id, parent_id,
     operation, manifest_list, summary map) — `tbl$snapshots`."""
-    metadata = _load_meta(root)
+    _, metadata = load_table_metadata(os.path.join(root, "metadata"))
     schema = T.StructType(
         [
             T.StructField("committed_at_ms", T.LongType()),
@@ -77,7 +64,7 @@ def snapshots_table(spark: SparkSession, root: str) -> DataFrame:
         )
         for s in metadata["snapshots"]
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def history_table(spark: SparkSession, root: str) -> DataFrame:
@@ -85,7 +72,7 @@ def history_table(spark: SparkSession, root: str) -> DataFrame:
     is_current_ancestor) — `tbl$history`. Ancestry walks
     parent-snapshot-id from the current snapshot; a logged snapshot off
     that chain (a rolled-back line) is not a current ancestor."""
-    metadata = _load_meta(root)
+    _, metadata = load_table_metadata(os.path.join(root, "metadata"))
     by_id = {s["snapshot-id"]: s for s in metadata["snapshots"]}
     ancestors = set()
     cur = metadata.get("current-snapshot-id")
@@ -103,7 +90,7 @@ def history_table(spark: SparkSession, root: str) -> DataFrame:
         (e.get("timestamp-ms"), e["snapshot-id"], e["snapshot-id"] in ancestors)
         for e in metadata.get("snapshot-log") or []
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def manifests_table(
@@ -111,7 +98,7 @@ def manifests_table(
 ) -> DataFrame:
     """One row per manifest in the snapshot's manifest list —
     `tbl$manifests`. content 0 = data, 1 = deletes."""
-    metadata = _load_meta(root)
+    _, metadata = load_table_metadata(os.path.join(root, "metadata"))
     s = _snap(metadata, snapshot_id)
     _, rows = read_avro(s["manifest-list"])
     schema = T.StructType(
@@ -143,36 +130,24 @@ def manifests_table(
         )
         for r in rows
     ]
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 _CONTENT_NAMES = {0: "data", 1: "position-deletes", 2: "equality-deletes"}
 
 
-def _live_entries(root: str, metadata: dict, s: dict):
-    """(content, spec_id, data_file record, status-resolved) for every
-    LIVE entry the snapshot references — the same status semantics as
-    the reader: ADDED/EXISTING kept, DELETED entries drop their file."""
-    live: dict[str, tuple] = {}
-    deletes: list[tuple] = []
-    for r in read_avro(s["manifest-list"])[1]:
-        m_content = r.get("content") or 0
-        spec_id = r.get("partition_spec_id") or 0
-        for e in read_avro(r["manifest_path"])[1]:
-            rec = e["data_file"]
-            if m_content == 1:
-                if e["status"] != 2:
-                    deletes.append((rec.get("content", 1), spec_id, rec))
-                continue
-            if e["status"] == 2:
-                live.pop(rec["file_path"], None)
-            else:
-                live[rec["file_path"]] = (
-                    rec.get("content", 0) or 0,
-                    spec_id,
-                    rec,
-                )
-    return list(live.values()) + deletes
+def _live_entries(metadata: dict, s: dict):
+    """(content, spec_id, data_file record) for every live data file and
+    then every live delete file of snapshot `s`, as `plan_snapshot`
+    resolves them — the reader's own rules."""
+    data, deletes = plan_snapshot(metadata, s)
+    return [
+        (d["record"].get("content") or 0, d["spec_id"], d["record"])
+        for d in data
+    ] + [
+        (d["record"].get("content", 1), d["spec_id"], d["record"])
+        for d in deletes
+    ]
 
 
 def files_table(
@@ -181,7 +156,7 @@ def files_table(
     """One row per live file (data AND delete flavors) in the snapshot —
     `tbl$files`. Partition values arrive as a map<string,string> (typed
     per-spec structs don't union across evolved specs)."""
-    metadata = _load_meta(root)
+    _, metadata = load_table_metadata(os.path.join(root, "metadata"))
     s = _snap(metadata, snapshot_id)
     schema = T.StructType(
         [
@@ -216,9 +191,9 @@ def files_table(
             rec.get("file_size_in_bytes"),
             rec.get("sort_order_id"),
         )
-        for content, spec_id, rec in _live_entries(root, metadata, s)
+        for content, spec_id, rec in _live_entries(metadata, s)
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def partitions_table(
@@ -226,10 +201,10 @@ def partitions_table(
 ) -> DataFrame:
     """Per-partition rollup of live DATA files: (partition map,
     file_count, record_count) — `tbl$partitions`."""
-    metadata = _load_meta(root)
+    _, metadata = load_table_metadata(os.path.join(root, "metadata"))
     s = _snap(metadata, snapshot_id)
     agg: dict[tuple, list[int]] = {}
-    for content, _spec, rec in _live_entries(root, metadata, s):
+    for content, _spec, rec in _live_entries(metadata, s):
         if content != 0:
             continue
         key = tuple(
@@ -255,7 +230,7 @@ def partitions_table(
     rows = [
         (dict(k) or None, a[0], a[1]) for k, a in sorted(agg.items())
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def delta_history_table(spark: SparkSession, root: str) -> DataFrame:
@@ -309,12 +284,12 @@ def delta_history_table(spark: SparkSession, root: str) -> DataFrame:
             T.StructField("user_metadata", T.StringType(), True),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def refs_table(spark: SparkSession, root: str) -> DataFrame:
     """One row per ref: (name, type, snapshot_id) — `tbl$refs`."""
-    metadata = _load_meta(root)
+    _, metadata = load_table_metadata(os.path.join(root, "metadata"))
     schema = T.StructType(
         [
             T.StructField("name", T.StringType()),
@@ -326,4 +301,4 @@ def refs_table(spark: SparkSession, root: str) -> DataFrame:
         (name, r.get("type", "branch"), r["snapshot-id"])
         for name, r in sorted((metadata.get("refs") or {}).items())
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

@@ -92,6 +92,7 @@ from .avro_io import read_avro, write_avro
 from .mor_diff import (
     _SCHEME_RE,
     _append_diff,
+    _parquet_row_count,
     _position_delete_diff,
     _upsert_diff,
     finalize_spark_parts,
@@ -748,28 +749,33 @@ def _manifest_list_row(
     return row
 
 
-def write_metadata_version(meta_dir: str, md: dict) -> str:
-    """Persist `md` as the NEXT metadata version under `meta_dir`
-    (v{n+1}.metadata.json, n from version-hint.text or 0) and swap the
-    hint atomically — the one pointer-commit discipline every metadata
-    writer here shares (catalog commits, view trees, partition-stats
-    registration). Returns the new metadata location. Callers that
+def load_table_metadata(meta_dir: str) -> tuple[int, dict]:
+    """(n, metadata) of the tree's current version: `version-hint.text`
+    names n, `v{n}.metadata.json` holds the document. Raises
+    FileNotFoundError when there is no tree; callers that tolerate that
+    check for the hint first."""
+    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
+        n = int(fh.read().strip())
+    with open(os.path.join(meta_dir, f"v{n}.metadata.json")) as fh:
+        return n, json.load(fh)
+
+
+def write_metadata_version(meta_dir: str, md: dict, version: int) -> str:
+    """Persist `md` as `v{version}.metadata.json` under `meta_dir`, then
+    swap the hint to `version` atomically (tmp file + `os.replace`, data
+    before pointer) — the one pointer-commit discipline every metadata
+    writer here shares. Returns the new metadata location. Callers that
     need serialization hold their own lock around load+apply+write."""
     os.makedirs(meta_dir, exist_ok=True)
-    hint = os.path.join(meta_dir, "version-hint.text")
-    n = 0
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            n = int(fh.read().strip())
-    new_loc = os.path.join(meta_dir, f"v{n + 1}.metadata.json")
+    new_loc = os.path.join(meta_dir, f"v{version}.metadata.json")
     tmp = new_loc + ".tmp"
     with open(tmp, "w") as fh:
         json.dump(md, fh, indent=1, sort_keys=True)
     os.replace(tmp, new_loc)
     hint_tmp = os.path.join(meta_dir, ".version-hint.tmp")
     with open(hint_tmp, "w") as fh:
-        fh.write(str(n + 1))
-    os.replace(hint_tmp, hint)
+        fh.write(str(version))
+    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
     return new_loc
 
 
@@ -888,30 +894,26 @@ def export_iceberg_metadata(
     # supported flow for keeping them is to land the data through the
     # parent store (SnapshotTable.write) and re-export, or to keep
     # committing through the catalog.
-    hint_path = os.path.join(meta_dir, "version-hint.text")
-    if os.path.exists(hint_path):
-        with open(hint_path) as fh:
-            _cur_n = int(fh.read().strip())
-        _cur_path = os.path.join(meta_dir, f"v{_cur_n}.metadata.json")
-        if os.path.exists(_cur_path):
-            with open(_cur_path) as fh:
-                _cur_md = json.load(fh)
-            foreign = [
-                s["snapshot-id"]
-                for s in _cur_md.get("snapshots") or []
-                if not re.fullmatch(
-                    r"snap-\d+-1-manifest-list\.avro",
-                    os.path.basename(s.get("manifest-list") or ""),
-                )
-            ]
-            if foreign and not drop_foreign_commits:
-                raise ValueError(
-                    f"the tree at {meta_dir} holds catalog-committed "
-                    f"snapshots this export does not know "
-                    f"(ids {foreign}); re-exporting would drop them. "
-                    "Land the data through the parent store and retry, "
-                    "or pass drop_foreign_commits=True to discard them"
-                )
+    try:
+        _cur_md = load_table_metadata(meta_dir)[1]
+    except FileNotFoundError:  # no tree yet, or a hint without its file
+        _cur_md = {}
+    foreign = [
+        s["snapshot-id"]
+        for s in _cur_md.get("snapshots") or []
+        if not re.fullmatch(
+            r"snap-\d+-1-manifest-list\.avro",
+            os.path.basename(s.get("manifest-list") or ""),
+        )
+    ]
+    if foreign and not drop_foreign_commits:
+        raise ValueError(
+            f"the tree at {meta_dir} holds catalog-committed "
+            f"snapshots this export does not know "
+            f"(ids {foreign}); re-exporting would drop them. "
+            "Land the data through the parent store and retry, "
+            "or pass drop_foreign_commits=True to discard them"
+        )
 
     # SCHEMA EVOLUTION: walk the pointer history chronologically and
     # give every column a stable field id at first appearance. Partition
@@ -1960,16 +1962,7 @@ def export_iceberg_metadata(
         if sid is not None:
             refs[b] = {"snapshot-id": sid, "type": "branch"}
     metadata["refs"] = refs
-    n = len(events)
-    meta_path = os.path.join(meta_dir, f"v{n}.metadata.json")
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(metadata, fh, indent=1, sort_keys=True)
-    os.replace(tmp, meta_path)
-    hint_tmp = os.path.join(meta_dir, ".version-hint.tmp")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(n))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    write_metadata_version(meta_dir, metadata, n_events)
     # A vacuum can SHRINK the pointer history; files from a longer
     # pre-vacuum export (higher metadata versions, manifests for dropped
     # snapshots) are unreferenced by the new hint but would reference
@@ -1980,7 +1973,7 @@ def export_iceberg_metadata(
             (re.match(r"^m-\d+(-del|-ups|-app)?\.avro$", f) and f not in written_manifests)
             or (f.startswith("snap-") and f.endswith(".avro")
                 and f.split("-")[1].isdigit()
-                and int(f.split("-")[1]) > len(events))
+                and int(f.split("-")[1]) > n_events)
             # foreign (catalog-committed) staged manifests + manifest
             # lists: GC'd ONLY under the drop_foreign_commits opt-in —
             # a staged-but-not-yet-committed external append must
@@ -1992,7 +1985,7 @@ def export_iceberg_metadata(
                 and f.startswith(("m-staged-", "snap-staged-"))
             )
             or (f.startswith("v") and f.endswith(".metadata.json")
-                and f[1:-14].isdigit() and int(f[1:-14]) > n)
+                and f[1:-14].isdigit() and int(f[1:-14]) > n_events)
             # statistics puffins: regeneration drops the `statistics`
             # field, so any stats file is now unreferenced — GC it;
             # re-run export_iceberg_statistics to restore stats
@@ -2171,6 +2164,241 @@ def _range_may_match(lo, hi, op: str, v) -> bool:
     raise ValueError(f"unsupported prune op {op!r}")
 
 
+def resolve_snapshot(
+    metadata: dict,
+    snapshot_id: int | None,
+    as_of_ms: int | None,
+    ref: str | None,
+) -> dict | None:
+    """The snapshot a read selects: `ref` (a branch or tag), the last
+    `snapshot-log` entry at or before `as_of_ms` (the spec's TIMESTAMP
+    AS OF), `snapshot_id`, or — with none of them — the current
+    snapshot. At most one selector may be given. Returns None for a
+    table with no snapshot yet (current id null or -1, nothing
+    committed); raises ValueError for an unknown ref, instant or id."""
+    where = metadata.get("location")
+    if sum(x is not None for x in (snapshot_id, as_of_ms, ref)) > 1:
+        raise ValueError("pass at most one of snapshot_id, as_of_ms, ref")
+    if ref is not None:
+        r = (metadata.get("refs") or {}).get(ref)
+        if r is None:
+            raise ValueError(
+                f"ref {ref!r} not found in {where} "
+                f"(refs: {sorted(metadata.get('refs') or {})})"
+            )
+        snapshot_id = r["snapshot-id"]
+    if as_of_ms is not None:
+        eligible = [
+            e for e in metadata.get("snapshot-log", [])
+            if e["timestamp-ms"] <= as_of_ms
+        ]
+        if not eligible:
+            raise ValueError(
+                f"no snapshot at or before timestamp {as_of_ms} in {where}"
+            )
+        sid = eligible[-1]["snapshot-id"]
+    else:
+        sid = (
+            snapshot_id
+            if snapshot_id is not None
+            else metadata["current-snapshot-id"]
+        )
+    snap = next(
+        (s for s in metadata.get("snapshots") or [] if s["snapshot-id"] == sid),
+        None,
+    )
+    if snap is None and (
+        sid not in (None, -1)
+        or snapshot_id is not None
+        or metadata.get("snapshots")
+    ):
+        raise ValueError(f"snapshot {sid} not found in {where}")
+    return snap
+
+
+def plan_snapshot(metadata: dict, snap: dict) -> tuple[list[dict], list[dict]]:
+    """Walk `snap`'s manifest list and manifests once and resolve what
+    the snapshot holds, under the spec's rules:
+
+    - live DATA files, in manifest order: ADDED/EXISTING entries are
+      kept, a DELETED entry drops its file. Each is a dict with
+      `record` (the manifest `data_file`), `spec_id` (the manifest's
+      `partition_spec_id`, else `default-spec-id`), `seq` and
+      `file_seq` (data/file sequence numbers; a null one on an ADDED
+      entry inherits the manifest-list row's `sequence_number`),
+      `snapshot_id` (null inherits the row's `added_snapshot_id`) and
+      `first_row_id`;
+    - DELETE files, in manifest order, each a dict with `kind`
+      (`position`, `equality` or `dv`), `record`, `spec_id` and `seq`.
+
+    v3 row lineage: a file's `first_row_id` is its explicit field, else
+    the manifest's `first_row_id` plus the record counts of preceding
+    null-id ADDED entries. A data manifest whose list row leaves
+    `first_row_id` null inherits the snapshot's `first-row-id`, advanced
+    by the `added_rows_count` of preceding such manifests — but only a
+    manifest ADDED BY this snapshot (a carried-forward one keeps None,
+    else old rows would receive the new snapshot's range).
+
+    Refuses (ValueError) what the spec forbids: a v2+ list row without
+    `sequence_number`, a v2+ EXISTING/DELETED entry without an explicit
+    data sequence number, a delete file in a v2+ data manifest, an
+    equality delete without `equality_ids`, and a deletion vector in a
+    pre-v3 table or without its offset/size/referenced file. A
+    deletion vector is a PUFFIN entry or one with a `content_offset`;
+    `referenced_data_file` alone (field 143, allowed on v2 position
+    deletes as a hint) keeps a file an ordinary position delete."""
+    fv = metadata.get("format-version", 1)
+    default_sid = metadata.get("default-spec-id", 0)
+    live: dict[str, dict] = {}
+    deletes: list[dict] = []
+    snap_row_cursor = snap.get("first-row-id") if fv >= 3 else None
+    for mf in read_avro(snap["manifest-list"])[1]:
+        m_seq = mf.get("sequence_number")
+        m_content = mf.get("content") or 0
+        m_sid = mf.get("partition_spec_id")
+        if m_sid is None:
+            m_sid = default_sid
+        if fv >= 2 and m_seq is None:
+            raise ValueError(
+                "v2 manifest-list row missing required sequence_number: "
+                + mf.get("manifest_path", "?")
+            )
+        m_first = mf.get("first_row_id")
+        if (
+            m_first is None
+            and m_content == 0
+            and snap_row_cursor is not None
+            and mf.get("added_snapshot_id") == snap["snapshot-id"]
+        ):
+            m_first = snap_row_cursor
+            snap_row_cursor += mf.get("added_rows_count") or 0
+        m_assigned = 0
+        for e in read_avro(mf["manifest_path"])[1]:
+            rec = e["data_file"]
+            added = e["status"] == 1
+            seq = e.get("data_sequence_number")
+            if seq is None:
+                if added:
+                    seq = m_seq if m_seq is not None else 0
+                elif fv >= 2:
+                    raise ValueError(
+                        "v2+ EXISTING/DELETED entry missing explicit "
+                        f"data_sequence_number: {rec.get('file_path')}"
+                    )
+                else:
+                    seq = 0
+            if m_content == 1:  # delete manifest
+                if e["status"] == 2:
+                    continue
+                deletes.append(
+                    {
+                        "kind": _delete_kind(rec, fv),
+                        "record": rec,
+                        "spec_id": m_sid,
+                        "seq": seq,
+                    }
+                )
+                continue
+            if e["status"] == 2:  # DELETED
+                live.pop(rec["file_path"], None)
+                continue
+            if fv >= 2 and rec.get("content", 0) != 0:
+                raise ValueError(
+                    "delete file listed in a content=0 data manifest: "
+                    + rec["file_path"]
+                )
+            fseq = e.get("file_sequence_number")
+            if fseq is None:
+                fseq = (m_seq if m_seq is not None else 0) if added else seq
+            snap_id = e.get("snapshot_id")
+            frow = rec.get("first_row_id")
+            if frow is None and added and m_first is not None:
+                frow = m_first + m_assigned
+                m_assigned += rec.get("record_count") or 0
+            live[rec["file_path"]] = {
+                "record": rec,
+                "spec_id": m_sid,
+                "seq": seq,
+                "file_seq": fseq,
+                "snapshot_id": (
+                    snap_id if snap_id is not None
+                    else mf.get("added_snapshot_id")
+                ),
+                "first_row_id": frow,
+            }
+    return list(live.values()), deletes
+
+
+def _delete_kind(rec: dict, fv: int) -> str:
+    """`equality`, `dv` or `position` for a live delete-manifest entry,
+    refusing the spec-invalid shapes plan_snapshot lists."""
+    if rec.get("content") == 2:
+        if not rec.get("equality_ids"):
+            raise ValueError(
+                "equality delete file without equality_ids: "
+                + rec["file_path"]
+            )
+        return "equality"
+    if not (
+        str(rec.get("file_format", "")).upper() == "PUFFIN"
+        or rec.get("content_offset") is not None
+    ):
+        return "position"
+    if fv < 3:
+        raise ValueError(
+            f"deletion-vector entry in a v{fv} table: " + rec["file_path"]
+        )
+    if (
+        rec.get("content_offset") is None
+        or rec.get("content_size_in_bytes") is None
+        or rec.get("referenced_data_file") is None
+    ):
+        raise ValueError(
+            "deletion-vector entry missing referenced_data_file/"
+            "content_offset/content_size_in_bytes: " + rec["file_path"]
+        )
+    return "dv"
+
+
+def _resolve_file_columns(
+    path: str, fields: list[tuple[str, int]], alias_of: dict[int, list[str]]
+) -> tuple[set[str], dict[str, str | None]]:
+    """(the columns of the parquet file at `path`, {field name: the
+    file's column for it, or None}) for `fields`, (name, field id)
+    pairs, from the file's footer, read here with pyarrow. A file carrying
+    parquet field ids resolves by id; an id-less one by the field's own
+    name, else by its name-mapping aliases (`alias_of`: field id ->
+    names), first match wins. A column claimed by two fields of an
+    id-less file (a swap-rename) is ambiguous and refused."""
+    import pyarrow.parquet as pq
+
+    cols = []
+    for f in pq.read_schema(path):
+        fid = (f.metadata or {}).get(b"PARQUET:field_id")
+        cols.append((f.name, int(fid) if fid is not None else None))
+    in_file = {n for n, _ in cols}
+    if any(fid is not None for _, fid in cols):
+        by_id = {fid: n for n, fid in cols if fid is not None}
+        return in_file, {n: by_id.get(fid) for n, fid in fields}
+    resolved: dict[str, str | None] = {}
+    claims: dict[str, list[str]] = {}
+    for n, fid in fields:
+        cands = [
+            a for a in dict.fromkeys((n, *alias_of.get(fid, ()))) if a in in_file
+        ]
+        resolved[n] = cands[0] if cands else None
+        for c in cands:
+            claims.setdefault(c, []).append(n)
+    multi = {c: ns for c, ns in claims.items() if len(ns) > 1}
+    if multi:
+        raise ValueError(
+            f"ambiguous column resolution in id-less file {path}: {multi} "
+            "— a swap-rename on files without parquet field ids cannot be "
+            "read safely"
+        )
+    return in_file, resolved
+
+
 def read_iceberg_table(
     spark,
     root: str,
@@ -2186,11 +2414,10 @@ def read_iceberg_table(
     live file set; partition values come from the manifests' typed
     partition structs (the Iceberg rule — paths are opaque).
 
-    v2 merge-on-read: the reader applies the spec's sequence-number
-    inheritance (a null entry `data_sequence_number` on an ADDED entry
-    inherits the manifest-list row's `sequence_number`; EXISTING/DELETED
-    entries must carry it explicitly), collects content=1 delete
-    manifests, and masks BOTH delete flavors with broadcast anti-joins:
+    The snapshot is chosen by `resolve_snapshot` and its live files and
+    delete files by `plan_snapshot` (the spec's sequence-number and
+    row-lineage inheritance; its refusals). v2 merge-on-read: the reader
+    masks BOTH delete flavors with broadcast anti-joins:
     positional delete files drop (file, `_metadata.row_index`) pairs
     where delete.seq >= data.seq, and equality delete files (what
     streaming upsert writers like Flink emit; matched null-safe on the
@@ -2209,7 +2436,8 @@ def read_iceberg_table(
     is non-unique across schemas (a rename or re-add happened), each
     live file's columns resolve per-file — by parquet field id when the
     file carries ids, else through `schema.name-mapping.default` — via
-    executor-parallel footer probes, one scan per resolution signature;
+    in-process pyarrow footer reads (`_resolve_file_columns`, shared with
+    equality-delete files), one scan per resolution signature;
     otherwise the by-name fast path runs unchanged. Fields with a v3
     `initial-default` fill that value for files written before the
     column existed (stored NULLs stay NULL). `with_row_lineage=True`
@@ -2234,8 +2462,6 @@ def read_iceberg_table(
     under MoR, a broadcast left-anti join against the delete set —
     fine while per-snapshot deletes are small relative to data (the
     MoR design point; a compaction rewrites when they are not)."""
-    import urllib.parse
-
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -2250,13 +2476,8 @@ def read_iceberg_table(
         from .rest_catalog import rest_load_table
 
         metadata = rest_load_table(root)["metadata"]
-        meta_dir = root  # label for error messages only
     else:
-        meta_dir = os.path.join(root, "metadata")
-        with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-            n = int(fh.read().strip())
-        with open(os.path.join(meta_dir, f"v{n}.metadata.json")) as fh:
-            metadata = json.load(fh)
+        metadata = load_table_metadata(os.path.join(root, "metadata"))[1]
     fv = metadata.get("format-version", 1)
     if fv not in (1, 2, 3):
         raise NotImplementedError(
@@ -2266,43 +2487,11 @@ def read_iceberg_table(
         raise ValueError(
             f"row lineage is a format-version 3 feature (table is v{fv})"
         )
-    if sum(x is not None for x in (snapshot_id, as_of_ms, ref)) > 1:
-        raise ValueError("pass at most one of snapshot_id, as_of_ms, ref")
-    if ref is not None:
-        # named refs (spec `refs`): branches and tags both resolve to a
-        # snapshot id — the read-side of the Nessie-style branch story
-        r = (metadata.get("refs") or {}).get(ref)
-        if r is None:
-            raise ValueError(
-                f"ref {ref!r} not found in {meta_dir} "
-                f"(refs: {sorted(metadata.get('refs') or {})})"
-            )
-        snapshot_id = r["snapshot-id"]
-    if as_of_ms is not None:
-        # TIMESTAMP AS OF per the spec: the snapshot-log records every
-        # current-snapshot change in time order; resolve to the last
-        # entry at or before the requested instant
-        eligible = [
-            e for e in metadata.get("snapshot-log", [])
-            if e["timestamp-ms"] <= as_of_ms
-        ]
-        if not eligible:
-            raise ValueError(
-                f"no snapshot at or before timestamp {as_of_ms} in {meta_dir}"
-            )
-        sid = eligible[-1]["snapshot-id"]
-    else:
-        sid = (
-            snapshot_id
-            if snapshot_id is not None
-            else metadata["current-snapshot-id"]
-        )
-    if sid is None or sid == -1:
+    snap = resolve_snapshot(metadata, snapshot_id, as_of_ms, ref)
+    if snap is None:
         # A table with no current snapshot (freshly created through the
         # catalog, nothing committed yet; the spec writes -1). SELECT *
         # must work and return zero rows under the table schema.
-        if snapshot_id is not None or metadata.get("snapshots"):
-            raise ValueError(f"snapshot {sid} not found in {meta_dir}")
         empty_schema = T.StructType(
             [
                 T.StructField(
@@ -2312,154 +2501,25 @@ def read_iceberg_table(
             ]
         )
         return local_frame(spark, [], empty_schema)
-    snap = next(
-        (s for s in metadata["snapshots"] if s["snapshot-id"] == sid), None
-    )
-    if snap is None:
-        raise ValueError(f"snapshot {sid} not found in {meta_dir}")
-    _, manifest_files = read_avro(snap["manifest-list"])
-    files: dict[str, dict] = {}
-    file_seq: dict[str, int] = {}
-    # PARTITION-SPEC EVOLUTION: each manifest's files carry partition
-    # values typed under the spec the manifest was written with
-    # (manifest-list field 502) — a long-lived table repartitioned over
-    # its life has manifests under several specs, and typing/pruning a
-    # file under the wrong spec corrupts reads
-    default_sid = metadata.get("default-spec-id", 0)
-    file_spec: dict[str, int] = {}
-    # v3 ROW LINEAGE (consumer half): each data file's starting _row_id
-    # — explicit field 142, or assigned from the manifest's first_row_id
-    # plus the record counts of preceding null-first_row_id ADDED
-    # entries (the spec's inheritance rule)
-    file_first: dict[str, int | None] = {}
-    pos_deletes: list[tuple[str, int]] = []  # (delete file path, its seq)
-    eq_deletes: list[tuple[str, int, tuple]] = []  # (+ equality field ids)
-    # v3 deletion vectors: (puffin path, offset, size, referenced data
-    # file, seq, cardinality)
-    dv_deletes: list[tuple[str, int, int, str, int, int]] = []
-    # v3 row-lineage manifest inheritance (spec "Row Lineage"): a DATA
-    # manifest whose manifest-list row leaves first_row_id null
-    # inherits it from the SNAPSHOT's first-row-id, advanced by the
-    # added_rows_count of preceding null-first_row_id data manifests in
-    # list order. This engine's own trees write explicit ids
-    # everywhere; the fallback is for external v3 writers that rely on
-    # inheritance.
-    snap_row_cursor = snap.get("first-row-id") if fv >= 3 else None
-    for mf in manifest_files:
-        m_seq = mf.get("sequence_number")
-        m_content = mf.get("content") or 0
-        m_sid = mf.get("partition_spec_id")
-        if m_sid is None:
-            m_sid = default_sid
-        if fv >= 2 and m_seq is None:
-            raise ValueError(
-                "v2 manifest-list row missing required sequence_number: "
-                + mf.get("manifest_path", "?")
-            )
-        _, entries = read_avro(mf["manifest_path"])
-        m_first = mf.get("first_row_id")
-        if (
-            m_first is None
-            and m_content == 0
-            and snap_row_cursor is not None
-            # only manifests ADDED BY this snapshot may inherit; a
-            # carried-forward manifest must keep its original explicit
-            # id (else old rows would receive the NEW snapshot's range)
-            and mf.get("added_snapshot_id") == snap["snapshot-id"]
-        ):
-            m_first = snap_row_cursor
-            snap_row_cursor += mf.get("added_rows_count") or 0
-        m_assigned = 0
-        for e in entries:
-            df_rec = e["data_file"]
-            seq = e.get("data_sequence_number")
-            if seq is None:
-                if e["status"] == 1:  # ADDED: inherit (spec rule)
-                    seq = m_seq if m_seq is not None else 0
-                elif fv >= 2:
-                    raise ValueError(
-                        "v2+ EXISTING/DELETED entry missing explicit "
-                        f"data_sequence_number: {df_rec.get('file_path')}"
-                    )
-                else:
-                    seq = 0
-            if m_content == 1:  # delete manifest
-                if e["status"] == 2:
-                    continue
-                if df_rec.get("content") == 2:
-                    ids = df_rec.get("equality_ids")
-                    if not ids:
-                        raise ValueError(
-                            "equality delete file without equality_ids: "
-                            + df_rec["file_path"]
-                        )
-                    eq_deletes.append(
-                        (df_rec["file_path"], seq, tuple(ids))
-                    )
-                    continue
-                # DV classification: PUFFIN format (or a content_offset,
-                # which only DV blobs carry) marks a deletion vector.
-                # referenced_data_file alone does NOT — the spec allows
-                # it (field id 143) on v2 position-delete PARQUET
-                # entries as a single-file hint, and such files remain
-                # ordinary position deletes (also inside upgraded v3
-                # mixed trees).
-                is_dv = (
-                    str(df_rec.get("file_format", "")).upper() == "PUFFIN"
-                    or df_rec.get("content_offset") is not None
-                )
-                if is_dv:
-                    if fv < 3:
-                        raise ValueError(
-                            f"deletion-vector entry in a v{fv} table: "
-                            + df_rec["file_path"]
-                        )
-                    if (
-                        df_rec.get("content_offset") is None
-                        or df_rec.get("content_size_in_bytes") is None
-                        or df_rec.get("referenced_data_file") is None
-                    ):
-                        raise ValueError(
-                            "deletion-vector entry missing referenced_"
-                            "data_file/content_offset/content_size_in_"
-                            "bytes: " + df_rec["file_path"]
-                        )
-                    dv_deletes.append(
-                        (
-                            df_rec["file_path"],
-                            df_rec["content_offset"],
-                            df_rec["content_size_in_bytes"],
-                            df_rec["referenced_data_file"],
-                            seq,
-                            df_rec["record_count"],
-                        )
-                    )
-                    continue
-                pos_deletes.append((df_rec["file_path"], seq))
-                continue
-            if e["status"] == 2:  # DELETED
-                files.pop(df_rec["file_path"], None)
-                file_seq.pop(df_rec["file_path"], None)
-                file_spec.pop(df_rec["file_path"], None)
-                file_first.pop(df_rec["file_path"], None)
-                continue
-            if fv >= 2 and df_rec.get("content", 0) != 0:
-                raise ValueError(
-                    "delete file listed in a content=0 data manifest: "
-                    + df_rec["file_path"]
-                )
-            if df_rec["file_format"].upper() != "PARQUET":
-                raise NotImplementedError(
-                    f"file format {df_rec['file_format']!r}"
-                )
-            files[df_rec["file_path"]] = df_rec
-            file_seq[df_rec["file_path"]] = seq
-            file_spec[df_rec["file_path"]] = m_sid
-            frow = df_rec.get("first_row_id")
-            if frow is None and e["status"] == 1 and m_first is not None:
-                frow = m_first + m_assigned
-                m_assigned += df_rec.get("record_count") or 0
-            file_first[df_rec["file_path"]] = frow
+    data, deletes = plan_snapshot(metadata, snap)
+    for d in data:
+        fmt = d["record"]["file_format"]
+        if fmt.upper() != "PARQUET":
+            raise NotImplementedError(f"file format {fmt!r}")
+    # live data files by path, in manifest order (planned entries:
+    # record, spec id, inherited sequence numbers, first_row_id)
+    files = {d["record"]["file_path"]: d for d in data}
+    pos_deletes = [
+        (d["record"]["file_path"], d["seq"])
+        for d in deletes
+        if d["kind"] == "position"
+    ]
+    eq_deletes = [
+        (d["record"]["file_path"], d["seq"], tuple(d["record"]["equality_ids"]))
+        for d in deletes
+        if d["kind"] == "equality"
+    ]
+    dv_deletes = [d for d in deletes if d["kind"] == "dv"]
     # SCHEMA EVOLUTION (read side): a snapshot is read under ITS schema
     # (spec: snapshot `schema-id` resolves against the `schemas` list) —
     # time travel across a rename/add/drop surfaces each era's own
@@ -2514,12 +2574,10 @@ def read_iceberg_table(
     all_specs = {
         s["spec-id"]: s for s in metadata["partition-specs"]
     }
-    import re as _re
-
-    _PARAM_RE = _re.compile(r"(bucket|truncate)\[(\d+)\]")
+    _PARAM_RE = re.compile(r"(bucket|truncate)\[(\d+)\]")
     # resolve every spec REFERENCED BY A LIVE FILE (an abandoned
     # historical spec with an exotic transform must not block the read)
-    used_sids = sorted(set(file_spec.values()))
+    used_sids = sorted({d["spec_id"] for d in files.values()})
     specs_of: dict[int, dict] = {}
     for sid in used_sids:
         if sid not in all_specs:
@@ -2653,16 +2711,15 @@ def read_iceberg_table(
             return True
 
         files = {
-            p: rec
-            for p, rec in files.items()
+            p: d
+            for p, d in files.items()
             if may_match(
-                rec,
-                specs_of[file_spec[p]],
-                pcols_of[file_spec[p]],
-                ident_of[file_spec[p]],
+                d["record"],
+                specs_of[d["spec_id"]],
+                pcols_of[d["spec_id"]],
+                ident_of[d["spec_id"]],
             )
         }
-        file_seq = {p: s for p, s in file_seq.items() if p in files}
     full_schema = T.StructType(
         [
             T.StructField(f["name"], _spark_type(f["type"]), True)
@@ -2690,70 +2747,22 @@ def read_iceberg_table(
     # file's top-level columns are mapped to the read schema — by
     # parquet field id when the file carries ids (what real Iceberg
     # writers emit), else via the table's name mapping (id-less files
-    # after a rename), else by direct name. Footers are read
-    # EXECUTOR-parallel (one tiny tuple per file comes back — the same
-    # O(files) driver state the manifests already produced); files
-    # sharing a resolution signature scan together, so an evolved table
-    # costs one scan per (identity layout × column-name era), never
-    # per-file work.
+    # after a rename), else by direct name. Footers are read here with
+    # pyarrow (O(files) footer reads, the same O(files) state the
+    # manifests already produced); files sharing a resolution signature
+    # scan together, so an evolved table costs one scan per (identity
+    # layout × column-name era), never per-file work.
     field_ids = {f["name"]: f["id"] for f in schema_fields}
+    alias_of: dict[int, list[str]] = {}
+    for e in name_mapping:
+        for _nm in e.get("names") or []:
+            alias_of.setdefault(e["field-id"], []).append(_nm)
     resolution_of: dict[str, tuple] = {}
-    if not by_name_safe and files:
-        alias_of: dict[int, list[str]] = {}
-        for e in name_mapping:
-            for _nm in e.get("names") or []:
-                alias_of.setdefault(e["field-id"], []).append(_nm)
-        paths = sorted({os.path.abspath(p) for p in files})
-
-        def _footer_cols(p):
-            import pyarrow.parquet as pq
-
-            out = []
-            for f in pq.read_schema(p):
-                md = f.metadata or {}
-                fid = md.get(b"PARQUET:field_id")
-                out.append((f.name, int(fid) if fid is not None else None))
-            return (p, tuple(out))
-
-        footers = dict(
-            spark.sparkContext.parallelize(
-                paths, max(1, min(len(paths), 256))
+    if not by_name_safe:
+        for p in sorted({os.path.abspath(p) for p in files}):
+            in_file, resolved = _resolve_file_columns(
+                p, [(n, field_ids[n]) for n in schema_order], alias_of
             )
-            .map(_footer_cols)
-            .collect()
-        )
-        for p, cols in footers.items():
-            in_file = {n for n, _ in cols}
-            if any(fid is not None for _, fid in cols):
-                by_id = {fid: n for n, fid in cols if fid is not None}
-                resolved = {
-                    n: by_id.get(field_ids[n]) for n in schema_order
-                }
-            else:
-                # id-less file: each physical column may be claimed by
-                # a schema field directly (same name) or through a
-                # name-mapping alias; a column claimed by TWO fields
-                # (a swap-rename) is genuinely ambiguous — refuse
-                claims: dict[str, list[str]] = {}
-                for n in schema_order:
-                    fid = field_ids[n]
-                    cands = {
-                        a
-                        for a in (n, *alias_of.get(fid, ()))
-                        if a in in_file
-                    }
-                    for c in cands:
-                        claims.setdefault(c, []).append(n)
-                multi = {c: ns for c, ns in claims.items() if len(ns) > 1}
-                if multi:
-                    raise ValueError(
-                        "ambiguous column resolution in id-less file "
-                        f"{p}: {multi} — a swap-rename on files "
-                        "without parquet field ids cannot be read "
-                        "safely"
-                    )
-                owner = {ns[0]: c for c, ns in claims.items()}
-                resolved = {n: owner.get(n) for n in schema_order}
             # REQUEST name per field (+ absent flag, which routes
             # `initial-default` fills): the resolved physical name; an
             # unresolved field null-fills — requested under its own
@@ -2774,18 +2783,18 @@ def read_iceberg_table(
             resolution_of[p] = tuple(req)
     groups: dict[tuple, dict[str, dict]] = {}
     ident_vals: dict[str, dict] = {}
-    for p, rec in files.items():
+    for p, d in files.items():
         ap = os.path.abspath(p)
         icols = tuple(
-            c for c in schema_order if c in pcols_of[file_spec[p]]
+            c for c in schema_order if c in pcols_of[d["spec_id"]]
         )
         ident_vals[ap] = {
-            c: (rec.get("partition") or {}).get(
-                ident_of[file_spec[p]][c]
+            c: (d["record"].get("partition") or {}).get(
+                ident_of[d["spec_id"]][c]
             )
             for c in icols
         }
-        groups.setdefault((icols, resolution_of.get(ap)), {})[ap] = rec
+        groups.setdefault((icols, resolution_of.get(ap)), {})[ap] = d
     need_file = (
         need_pos
         or any(icols for icols, _ in groups)
@@ -2896,7 +2905,7 @@ def read_iceberg_table(
         # equality delete only strictly older data)
         fseq_map = local_frame(
             spark,
-            [(os.path.abspath(p), s) for p, s in file_seq.items()],
+            [(os.path.abspath(p), d["seq"]) for p, d in files.items()],
             "_file STRING, _fseq BIGINT",
         )
         df = df.join(F.broadcast(fseq_map), "_file")
@@ -2910,14 +2919,21 @@ def read_iceberg_table(
         # (applies at dv.seq >= data.seq).
         from .puffin import read_dv
 
-        for path, off, size, ref, dseq, card in dv_deletes:
+        for d in dv_deletes:
+            rec, dseq = d["record"], d["seq"]
+            ref = rec["referenced_data_file"]
             ref_abs = os.path.abspath(ref)
             if ref_abs in dv_files:
                 raise ValueError(
                     f"multiple deletion vectors reference data file "
                     f"{ref}: invalid v3 table (at most one DV per file)"
                 )
-            positions = read_dv(path, off, size)
+            positions = read_dv(
+                rec["file_path"],
+                rec["content_offset"],
+                rec["content_size_in_bytes"],
+            )
+            card = rec["record_count"]
             if len(positions) != card:
                 raise ValueError(
                     f"deletion-vector cardinality mismatch for {ref}: "
@@ -3000,51 +3016,16 @@ def read_iceberg_table(
                 # same way as data files: by id, else name mapping.
                 # Delete sets are small by design (the MoR design
                 # point), so footers probe driver-side.
-                import pyarrow.parquet as _pq
-
                 name_types = {
                     f["name"]: _spark_type(f["type"])
                     for f in schema_fields
                 }
                 egroups: dict[tuple, list[str]] = {}
                 for ap in sorted(dpaths):
-                    cols = [
-                        (
-                            fld.name,
-                            int(m[b"PARQUET:field_id"])
-                            if (m := fld.metadata or {}).get(
-                                b"PARQUET:field_id"
-                            )
-                            is not None
-                            else None,
-                        )
-                        for fld in _pq.read_schema(ap)
-                    ]
-                    if any(fid is not None for _, fid in cols):
-                        by_id = {
-                            fid: nm for nm, fid in cols if fid is not None
-                        }
-                        res = tuple(by_id.get(i) for i in ids)
-                    else:
-                        in_f = {nm for nm, _ in cols}
-                        alias_lists = {
-                            e["field-id"]: e.get("names") or []
-                            for e in name_mapping
-                        }
-                        res = tuple(
-                            next(
-                                (
-                                    a
-                                    for a in (
-                                        id_to_name.get(i, ""),
-                                        *alias_lists.get(i, ()),
-                                    )
-                                    if a in in_f
-                                ),
-                                None,
-                            )
-                            for i in ids
-                        )
+                    _, resolved = _resolve_file_columns(
+                        ap, list(zip(names, ids)), alias_of
+                    )
+                    res = tuple(resolved[nm] for nm in names)
                     if any(r is None for r in res):
                         raise ValueError(
                             f"equality delete file {ap} does not "
@@ -3094,7 +3075,9 @@ def read_iceberg_table(
         # position — STABLE across MoR deletes and metadata rewrites
         # (surviving rows keep their ids; only a data-file rewrite
         # re-assigns). A |files|-row broadcast map, one projection.
-        _unresolved = [p for p in files if file_first.get(p) is None]
+        _unresolved = [
+            p for p, d in files.items() if d["first_row_id"] is None
+        ]
         if _unresolved:
             # a carried-forward manifest with null first_row_id is
             # spec-invalid (only a snapshot's OWN manifests inherit);
@@ -3108,8 +3091,8 @@ def read_iceberg_table(
         fmap = local_frame(
             spark,
             [
-                (os.path.abspath(p), file_first.get(p))
-                for p in files
+                (os.path.abspath(p), d["first_row_id"])
+                for p, d in files.items()
             ],
             "_file STRING, _first BIGINT",
         )
@@ -3142,9 +3125,9 @@ def migrate_parquet_dir(
     become an identity partition spec with typed per-file partition
     values (partition columns are read from the directory names exactly
     as Spark inferred their types), so partition pruning works from the
-    first read. Column stats come from the parquet FOOTERS, read
-    EXECUTOR-parallel — the driver receives one stats tuple per file,
-    the same O(files) state the manifest write needs anyway.
+    first read. Column stats and row counts come from the parquet
+    FOOTERS, read in-process with pyarrow (as the exporter does) — O(files)
+    metadata, no data bytes.
 
     Returns the metadata directory. format-version 2, one `append`
     snapshot."""
@@ -3186,7 +3169,7 @@ def migrate_parquet_dir(
         # (which rejects the Parquet VARIANT logical type); variant is a
         # v3-only schema type, so an in-place migration of variant
         # parquet cannot produce a spec-valid v2 tree — refuse with the
-        # reason rather than crash mid-job in _footer_stats
+        # reason rather than crash in the footer read
         raise NotImplementedError(
             "migrate_parquet_dir does not support VARIANT columns: the "
             "migration emits a format-version 2 tree and variant is a "
@@ -3219,86 +3202,42 @@ def migrate_parquet_dir(
         }
         for i, c in enumerate(pcols)
     ]
-    # footer stats + row counts in ONE executor-parallel footer pass
-    # (data columns only — partition values live in the directory
-    # names, not the files); no data bytes are read anywhere
+    # footer stats + row counts, read with pyarrow (data columns only
+    # — partition values live in the directory names, not the files);
+    # no data bytes are read anywhere
     data_col_ids = {c: i for c, i in col_ids.items() if c not in pcols}
-    data_types = {c: type_of[c] for c in data_col_ids}
-    paths = paths_all
-
-    def _footer_stats(p):
-        import pyarrow.parquet as pq
-
-        return (
-            p,
-            _file_column_stats(p, data_col_ids, data_types),
-            pq.ParquetFile(p).metadata.num_rows,
-        )
-
-    rc_of: dict[str, int] = {}
-    stats_of: dict[str, tuple] = {}
-    for p, st, rc in (
-        spark.sparkContext.parallelize(
-            paths, max(1, min(len(paths), 256))
-        )
-        .map(_footer_stats)
-        .collect()
-    ):
-        stats_of[p] = st
-        rc_of[p] = rc
+    data_files, _ = _added_data_files(
+        [
+            {
+                "path": p,
+                "record_count": _parquet_row_count(p),
+                "size": os.path.getsize(p),
+                "partition": part_of[p],
+            }
+            for p in paths_all
+        ],
+        spec_fields,
+        data_col_ids,
+        {c: type_of[c] for c in data_col_ids},
+        2,
+        0,
+    )
     meta_dir = os.path.join(root, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
-    entry_schema = _entry_schema(spec_fields, 2)
-    entries = []
-    for p in paths:
-        vcounts, ncounts, lower, upper = stats_of[p]
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": None,
-                "data_sequence_number": None,  # inherited
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": 0,
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        sf["name"]: _partition_value(
-                            sf["type"], part_of[p].get(sf["name"])
-                        )
-                        for sf in spec_fields
-                    },
-                    "record_count": rc_of[p],
-                    "file_size_in_bytes": os.path.getsize(p),
-                    "value_counts": vcounts,
-                    "null_value_counts": ncounts,
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                },
-            }
-        )
     mpath = os.path.join(meta_dir, "m-00000-migrate.avro")
-    write_avro(mpath, entry_schema, entries)
+    write_avro(
+        mpath,
+        _entry_schema(spec_fields, 2),
+        [_manifest_entry(d, 2, 1) for d in data_files],
+    )
     list_path = os.path.join(meta_dir, "snap-1-1-manifest-list.avro")
     write_avro(
         list_path,
         _manifest_list_schema(2),
         [
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": 0,
-                "content": 0,
-                "sequence_number": 1,
-                "min_sequence_number": 1,
-                "added_snapshot_id": 1,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(rc_of.values()),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
+            _manifest_list_row(
+                mpath, os.path.getsize(mpath), 0, 1, 1, data_files, 2
+            )
         ],
     )
     name_mapping = [
@@ -3353,15 +3292,7 @@ def migrate_parquet_dir(
         "metadata-log": [],
         "refs": {"main": {"snapshot-id": 1, "type": "branch"}},
     }
-    meta_path = os.path.join(meta_dir, "v1.metadata.json")
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(metadata, fh, indent=1, sort_keys=True)
-    os.replace(tmp, meta_path)
-    hint_tmp = os.path.join(meta_dir, ".version-hint.tmp")
-    with open(hint_tmp, "w") as fh:
-        fh.write("1")
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    write_metadata_version(meta_dir, metadata, 1)
     return meta_dir
 
 
@@ -3404,11 +3335,8 @@ def export_iceberg_statistics(
     )
 
     meta_dir = os.path.join(table.root, "metadata")
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        n = int(fh.read().strip())
+    n, metadata = load_table_metadata(meta_dir)
     meta_path = os.path.join(meta_dir, f"v{n}.metadata.json")
-    with open(meta_path) as fh:
-        metadata = json.load(fh)
     sid = metadata["current-snapshot-id"]
     snap = next(s for s in metadata["snapshots"] if s["snapshot-id"] == sid)
     seq = snap.get("sequence-number", 0)
@@ -3531,11 +3459,7 @@ def read_iceberg_statistics(spark, root: str) -> dict:
     from .puffin import read_blob
     from .theta import deserialize_compact, estimate
 
-    meta_dir = os.path.join(root, "metadata")
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        n = int(fh.read().strip())
-    with open(os.path.join(meta_dir, f"v{n}.metadata.json")) as fh:
-        metadata = json.load(fh)
+    metadata = load_table_metadata(os.path.join(root, "metadata"))[1]
     stats = metadata.get("statistics") or []
     out = {}
     name_of = {f["id"]: f["name"] for f in metadata["schema"]["fields"]}
@@ -3872,13 +3796,5 @@ def create_iceberg_table(
         # v3 row lineage: the table starts with no rows assigned; the
         # commit path advances this as snapshots add rows
         metadata["next-row-id"] = 0
-    meta_path = os.path.join(meta_dir, "v1.metadata.json")
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(metadata, fh, indent=1, sort_keys=True)
-    os.replace(tmp, meta_path)
-    hint_tmp = os.path.join(meta_dir, ".version-hint.tmp")
-    with open(hint_tmp, "w") as fh:
-        fh.write("1")
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    write_metadata_version(meta_dir, metadata, 1)
     return meta_dir

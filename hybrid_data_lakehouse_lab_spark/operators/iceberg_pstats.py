@@ -26,7 +26,6 @@ never touched.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -113,9 +112,11 @@ def write_partition_stats(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .iceberg_inspect import _live_entries, _load_meta, _snap
+    from .iceberg_inspect import _live_entries, _snap
+    from .iceberg_meta import load_table_metadata, write_metadata_version
 
-    metadata = _load_meta(root)
+    meta_dir = os.path.join(root, "metadata")
+    _, metadata = load_table_metadata(meta_dir)
     s = _snap(metadata, snapshot_id)
     sid = s["snapshot-id"]
     unified = _unified_partition_fields(metadata)
@@ -123,7 +124,7 @@ def write_partition_stats(
 
     # rollup: (spec_id, partition value tuple) -> counters
     agg: dict[tuple, list[int]] = {}
-    for content, spec_id, rec in _live_entries(root, metadata, s):
+    for content, spec_id, rec in _live_entries(metadata, s):
         part = rec.get("partition") or {}
         key = (spec_id, tuple(part.get(n) for n in names))
         a = agg.setdefault(key, [0] * 8)
@@ -196,7 +197,6 @@ def write_partition_stats(
             }
         )
     table = pa.Table.from_pylist(rows, schema=schema)
-    meta_dir = os.path.join(root, "metadata")
     path = os.path.join(meta_dir, f"partition-stats-{sid}.parquet")
     tmp = path + ".tmp"
     pq.write_table(table, tmp)
@@ -223,12 +223,7 @@ def write_partition_stats(
 
     # register in a NEW metadata version (replace any prior entry for
     # this snapshot — idempotent re-runs)
-    from .iceberg_meta import write_metadata_version
-
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        n = int(fh.read().strip())
-    with open(os.path.join(meta_dir, f"v{n}.metadata.json")) as fh:
-        md = json.load(fh)
+    n, md = load_table_metadata(meta_dir)
     pstats = [
         e
         for e in md.get("partition-statistics") or []
@@ -238,7 +233,7 @@ def write_partition_stats(
     md["partition-statistics"] = sorted(
         pstats, key=lambda e: e["snapshot-id"]
     )
-    write_metadata_version(meta_dir, md)
+    write_metadata_version(meta_dir, md, n + 1)
     return entry
 
 
@@ -248,9 +243,10 @@ def partition_stats_table(
     """Read the REGISTERED partition-statistics file for the snapshot
     (default: current) — what an external planner would consume.
     Raises if none is registered (stats are opt-in artifacts)."""
-    from .iceberg_inspect import _load_meta, _snap
+    from .iceberg_inspect import _snap
+    from .iceberg_meta import load_table_metadata
 
-    metadata = _load_meta(root)
+    _, metadata = load_table_metadata(os.path.join(root, "metadata"))
     sid = _snap(metadata, snapshot_id)["snapshot-id"]
     entry = next(
         (

@@ -24,10 +24,11 @@ runtime cost beyond the metadata fetch.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import uuid
+
+from .iceberg_meta import load_table_metadata, write_metadata_version
 
 __all__ = [
     "create_view_metadata",
@@ -213,19 +214,18 @@ def write_view_tree(root: str, md: dict) -> str:
     `<root>/metadata/` and swap the version hint; returns the new
     metadata location. Same pointer discipline as table trees
     (shared helper)."""
-    from .iceberg_meta import write_metadata_version
-
-    return write_metadata_version(os.path.join(root, "metadata"), md)
+    meta_dir = os.path.join(root, "metadata")
+    n = 0
+    if os.path.exists(os.path.join(meta_dir, "version-hint.text")):
+        n = load_table_metadata(meta_dir)[0]
+    return write_metadata_version(meta_dir, md, n + 1)
 
 
 def load_view_tree(root: str) -> tuple[str, dict]:
     """Current (metadata-location, metadata) of a view tree."""
     meta_dir = os.path.join(root, "metadata")
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        n = int(fh.read().strip())
-    loc = os.path.join(meta_dir, f"v{n}.metadata.json")
-    with open(loc) as fh:
-        return loc, json.load(fh)
+    n, md = load_table_metadata(meta_dir)
+    return os.path.join(meta_dir, f"v{n}.metadata.json"), md
 
 
 def _pick_version(md: dict, version: int | None) -> dict:

@@ -209,19 +209,14 @@ def _iceberg_reachable(root: str) -> set[str]:
     Iceberg `metadata/` tree at `root` references (empty set when no
     Iceberg facade exists). Manifest avros themselves are NOT included
     — no sibling facade ever shares those. Absolute paths."""
-    import json
-
     from .avro_io import read_avro
+    from .iceberg_meta import load_table_metadata
 
     meta_dir = os.path.join(root, "metadata")
-    hint = os.path.join(meta_dir, "version-hint.text")
     reachable: set[str] = set()
-    if not os.path.exists(hint):
+    if not os.path.exists(os.path.join(meta_dir, "version-hint.text")):
         return reachable
-    with open(hint) as fh:
-        n = int(fh.read().strip())
-    with open(os.path.join(meta_dir, f"v{n}.metadata.json")) as fh:
-        metadata = json.load(fh)
+    _, metadata = load_table_metadata(meta_dir)
     seen: set[str] = set()
     for s in metadata.get("snapshots") or []:
         for r in read_avro(s["manifest-list"])[1]:
@@ -287,15 +282,11 @@ def expire_iceberg_snapshots(
 
     Returns the expired snapshot ids.
     """
-    import json
-
     from .avro_io import read_avro
+    from .iceberg_meta import load_table_metadata, write_metadata_version
 
     meta_dir = os.path.join(root, "metadata")
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        n = int(fh.read().strip())
-    with open(os.path.join(meta_dir, f"v{n}.metadata.json")) as fh:
-        metadata = json.load(fh)
+    n, metadata = load_table_metadata(meta_dir)
     snaps = sorted(
         metadata.get("snapshots") or [],
         key=lambda s: (s.get("timestamp-ms", 0), s["snapshot-id"]),
@@ -432,15 +423,7 @@ def expire_iceberg_snapshots(
     # commit the new metadata version FIRST (readers holding the old
     # hint can at worst hit a missing-path error for an expired
     # snapshot — never silently wrong data), then GC
-    new_path = os.path.join(meta_dir, f"v{n + 1}.metadata.json")
-    tmp = new_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(metadata, fh, indent=1, sort_keys=True)
-    os.replace(tmp, new_path)
-    hint_tmp = os.path.join(meta_dir, ".version-hint.tmp")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(n + 1))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    write_metadata_version(meta_dir, metadata, n + 1)
     root_abs = os.path.abspath(root) + os.sep
     for p in sorted(drop):
         if p.startswith(root_abs) and os.path.isfile(p):
@@ -574,80 +557,39 @@ def rewrite_iceberg_manifests(root: str) -> dict:
     class as the planning walk it accelerates. Returns
     {manifests_before, manifests_after, files}.
     """
-    import json
     import re
 
     from .avro_io import read_avro, write_avro
-    from .iceberg_meta import _entry_schema, _manifest_list_schema
+    from .iceberg_meta import (
+        _entry_schema,
+        _manifest_list_schema,
+        load_table_metadata,
+        plan_snapshot,
+        write_metadata_version,
+    )
 
     meta_dir = os.path.join(root, "metadata")
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        n = int(fh.read().strip())
-    with open(os.path.join(meta_dir, f"v{n}.metadata.json")) as fh:
-        metadata = json.load(fh)
+    n, metadata = load_table_metadata(meta_dir)
     fv = metadata.get("format-version", 1)
     head = next(
         s
         for s in metadata["snapshots"]
         if s["snapshot-id"] == metadata["current-snapshot-id"]
     )
-    _, rows = read_avro(head["manifest-list"])
-    live: dict[str, dict] = {}
-    delete_rows: list[dict] = []
-    n_data = 0
-    for r in rows:
-        if (r.get("content") or 0) == 1:
-            delete_rows.append(r)
-            continue
-        n_data += 1
-        m_seq = r.get("sequence_number")
-        m_snap = r.get("added_snapshot_id")
-        spec_id = r.get("partition_spec_id") or 0
-        # v3 row lineage: files written under manifest-level first_row_id
-        # inheritance carry null per-file first_row_id — materialize the
-        # assigned value NOW (manifest first_row_id + running record
-        # counts of preceding null-id ADDED entries, the spec's rule),
-        # because the rewritten entries become EXISTING and the spec
-        # requires EXISTING entries to carry an explicit first_row_id
-        # (readers only inherit for status==ADDED)
-        m_first = r.get("first_row_id")
-        m_assigned = 0
-        for e in read_avro(r["manifest_path"])[1]:
-            rec = e["data_file"]
-            p = rec["file_path"]
-            frid = rec.get("first_row_id")
-            if frid is None and e["status"] == 1 and m_first is not None:
-                frid = m_first + m_assigned
-                m_assigned += rec.get("record_count") or 0
-            if e["status"] == 2:
-                live.pop(p, None)
-                continue
-            if fv >= 3 and frid is not None:
-                rec = dict(rec)
-                rec["first_row_id"] = frid
-            seq = e.get("data_sequence_number")
-            if seq is None:
-                if e["status"] == 1:
-                    seq = m_seq if m_seq is not None else 0
-                elif fv >= 2:
-                    raise ValueError(
-                        "EXISTING entry missing data_sequence_number: " + p
-                    )
-                else:
-                    seq = 0
-            fseq = e.get("file_sequence_number")
-            if fseq is None:
-                fseq = m_seq if e["status"] == 1 else seq
-            snap_id = e.get("snapshot_id")
-            if snap_id is None:
-                snap_id = m_snap
-            live[p] = {
-                "spec": spec_id,
-                "seq": seq,
-                "fseq": fseq,
-                "snap": snap_id,
-                "rec": rec,
-            }
+    rows = read_avro(head["manifest-list"])[1]
+    delete_rows = [r for r in rows if (r.get("content") or 0) == 1]
+    n_data = len(rows) - len(delete_rows)
+    # v3 row lineage: files written under first_row_id inheritance carry
+    # a null per-file first_row_id — materialize the planned value NOW,
+    # because the rewritten entries become EXISTING and the spec
+    # requires EXISTING entries to carry an explicit first_row_id
+    # (readers only inherit for status==ADDED)
+    live = [
+        dict(d, record=dict(d["record"], first_row_id=d["first_row_id"]))
+        if fv >= 3 and d["first_row_id"] is not None
+        else d
+        for d in plan_snapshot(metadata, head)[0]
+    ]
     if n_data <= 1:
         return {
             "manifests_before": n_data,
@@ -676,8 +618,8 @@ def rewrite_iceberg_manifests(root: str) -> dict:
 
     specs = {s["spec-id"]: s["fields"] for s in metadata["partition-specs"]}
     by_spec: dict[int, list[dict]] = {}
-    for info in live.values():
-        by_spec.setdefault(info["spec"], []).append(info)
+    for d in live:
+        by_spec.setdefault(d["spec_id"], []).append(d)
     new_snapshot_id = (
         max(s["snapshot-id"] for s in metadata["snapshots"]) + 1
     )
@@ -693,15 +635,15 @@ def rewrite_iceberg_manifests(root: str) -> dict:
             for sf in specs[spec_id]
         ]
         entries = []
-        for info in sorted(infos, key=lambda x: x["rec"]["file_path"]):
+        for d in sorted(infos, key=lambda x: x["record"]["file_path"]):
             entry = {
                 "status": 0,  # EXISTING (spec: carried forward)
-                "snapshot_id": info["snap"],
-                "data_file": info["rec"],
+                "snapshot_id": d["snapshot_id"],
+                "data_file": d["record"],
             }
             if fv >= 2:
-                entry["data_sequence_number"] = info["seq"]
-                entry["file_sequence_number"] = info["fseq"]
+                entry["data_sequence_number"] = d["seq"]
+                entry["file_sequence_number"] = d["file_seq"]
             entries.append(entry)
         mpath = os.path.join(
             meta_dir, f"m-rw-{new_snapshot_id:05d}-{spec_id}.avro"
@@ -726,7 +668,7 @@ def rewrite_iceberg_manifests(root: str) -> dict:
                     "deleted_files_count": 0,
                     "added_rows_count": 0,
                     "existing_rows_count": sum(
-                        i["rec"].get("record_count") or 0 for i in infos
+                        i["record"].get("record_count") or 0 for i in infos
                     ),
                     "deleted_rows_count": 0,
                 }
@@ -778,15 +720,7 @@ def rewrite_iceberg_manifests(root: str) -> dict:
             "metadata-file": os.path.join(meta_dir, f"v{n}.metadata.json"),
         }
     )
-    new_path = os.path.join(meta_dir, f"v{n + 1}.metadata.json")
-    tmp = new_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(metadata, fh, indent=1, sort_keys=True)
-    os.replace(tmp, new_path)
-    hint_tmp = os.path.join(meta_dir, ".version-hint.tmp")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(n + 1))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    write_metadata_version(meta_dir, metadata, n + 1)
     return {
         "manifests_before": n_data,
         "manifests_after": len(by_spec),

@@ -177,13 +177,7 @@ class IcebergRestCatalog:
     # -- metadata resolution (request time: commits become visible) --
 
     def _load(self, ident: tuple[str, ...]) -> tuple[str, dict]:
-        root = self._tables[ident]
-        meta_dir = os.path.join(root, "metadata")
-        with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-            n = int(fh.read().strip())
-        loc = os.path.join(meta_dir, f"v{n}.metadata.json")
-        with open(loc) as fh:
-            return loc, json.load(fh)
+        return self._load_versioned(ident)[:2]
 
     # -- commits (pointer operations; optimistic concurrency) --
 
@@ -191,13 +185,11 @@ class IcebergRestCatalog:
         self, ident: tuple[str, ...]
     ) -> tuple[str, dict, int]:
         """Current metadata location, parsed metadata, hint version."""
-        root = self._tables[ident]
-        meta_dir = os.path.join(root, "metadata")
-        with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-            n = int(fh.read().strip())
-        loc = os.path.join(meta_dir, f"v{n}.metadata.json")
-        with open(loc) as fh:
-            return loc, json.load(fh), n
+        from .iceberg_meta import load_table_metadata
+
+        meta_dir = os.path.join(self._tables[ident], "metadata")
+        n, md = load_table_metadata(meta_dir)
+        return os.path.join(meta_dir, f"v{n}.metadata.json"), md, n
 
     def _commit(self, ident: tuple[str, ...], req: dict) -> tuple[int, bytes]:
         with self._commit_lock:
@@ -622,14 +614,13 @@ class IcebergRestCatalog:
     def _write_metadata(
         self, ident: tuple[str, ...], md: dict, n: int
     ) -> str:
-        """Persist md as the next version, swap the hint atomically
-        (n re-read inside the shared helper — identical under the
-        commit lock this runs in)."""
+        """Persist md as version n + 1 (n: the version it was loaded
+        from, under the commit lock this runs in) and swap the hint
+        atomically."""
         from .iceberg_meta import write_metadata_version
 
-        del n  # version derives from the hint, serialized by our lock
         meta_dir = os.path.join(self._tables[ident], "metadata")
-        return write_metadata_version(meta_dir, md)
+        return write_metadata_version(meta_dir, md, n + 1)
 
     def _commit_transaction(self, body: dict) -> tuple[int, bytes]:
         """POST /v1/transactions/commit — the protocol's multi-table

@@ -412,11 +412,10 @@ def streaming_iceberg_sink_roundtrip(
     masked by the delete.seq > data.seq rule, not by rewrite). The
     Iceberg head read must match BOTH the table's own read (asserted)
     and the declarative upsert oracle."""
-    import json as _json
-
     from ..operators.avro_io import read_avro
     from ..operators.iceberg_meta import (
         export_iceberg_metadata,
+        load_table_metadata,
         read_iceberg_table,
     )
     from ..operators.timetravel import SnapshotTable
@@ -443,11 +442,7 @@ def streaming_iceberg_sink_roundtrip(
         meta_dir = export_iceberg_metadata(
             table, format_version=2, upsert_key=["key_id"]
         )
-        with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-            n = int(fh.read().strip())
-        md = _json.load(
-            open(os.path.join(meta_dir, f"v{n}.metadata.json"))
-        )
+        _, md = load_table_metadata(meta_dir)
         assert len(md["snapshots"]) >= 2, "expected multi-batch commits"
         head = next(
             s

@@ -763,6 +763,7 @@ def iceberg_equality_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     from ..operators.avro_io import read_avro
     from ..operators.iceberg_meta import (
         export_iceberg_metadata,
+        load_table_metadata,
         read_iceberg_table,
     )
 
@@ -785,12 +786,7 @@ def iceberg_equality_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
         meta_dir = export_iceberg_metadata(
             t, format_version=2, upsert_key=["event_id"]
         )
-        import json as _json
-
-        with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-            hint = fh.read().strip()
-        with open(os.path.join(meta_dir, f"v{hint}.metadata.json")) as fh:
-            md = _json.load(fh)
+        _, md = load_table_metadata(meta_dir)
         for s in md["snapshots"][1:]:
             _, rows = read_avro(s["manifest-list"])
             assert any(r["content"] == 1 for r in rows), s["snapshot-id"]
@@ -1649,6 +1645,7 @@ def lakehouse_maintenance_roundtrip(
     from ..operators.delta_log import export_delta_log, read_delta_table
     from ..operators.iceberg_meta import (
         export_iceberg_metadata,
+        load_table_metadata,
         read_iceberg_table,
     )
     from ..operators.maintenance import (
@@ -1670,13 +1667,7 @@ def lakehouse_maintenance_roundtrip(
         info = rewrite_iceberg_manifests(ti.root)
         assert info["manifests_before"] == 2, info
         assert info["manifests_after"] == 1, info
-        import json as _json
-
-        with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-            n = int(fh.read().strip())
-        md = _json.load(
-            open(os.path.join(meta_dir, f"v{n}.metadata.json"))
-        )
+        _, md = load_table_metadata(meta_dir)
         head = next(
             s
             for s in md["snapshots"]
@@ -1934,11 +1925,10 @@ def iceberg_partitioned_upsert_roundtrip(
     Scale: one PK diff + one partitionBy write per commit, masked
     reads distributed; the delete-file application is a broadcast
     anti-join on the PK (the MoR design point)."""
-    import json as _json
-
     from ..operators.avro_io import read_avro
     from ..operators.iceberg_meta import (
         export_iceberg_metadata,
+        load_table_metadata,
         read_iceberg_table,
     )
 
@@ -1987,10 +1977,7 @@ def iceberg_partitioned_upsert_roundtrip(
             upsert_key=["event_id"],
             hidden_partitions={"dt": ("ts", "day")},
         )
-        with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-            hint = fh.read().strip()
-        with open(os.path.join(meta_dir, f"v{hint}.metadata.json")) as fh:
-            md = _json.load(fh)
+        _, md = load_table_metadata(meta_dir)
         assert "dt" not in [
             f["name"] for f in md["schemas"][-1]["fields"]
         ], "days() partition column must be HIDDEN (not a table column)"
@@ -2478,10 +2465,9 @@ def iceberg_sort_rewrite_prune_roundtrip(
     Scale: this is THE maintenance action that turns an append-order
     100 TB table into one whose per-file min/max actually prune;
     one distributed range shuffle, no driver data motion."""
-    import json as _json
-
     from ..operators.iceberg_meta import (
         export_iceberg_metadata,
+        load_table_metadata,
         read_iceberg_table,
     )
     from ..operators.maintenance import rewrite_data_files_sorted
@@ -2510,10 +2496,7 @@ def iceberg_sort_rewrite_prune_roundtrip(
         )
         assert info is not None
         meta_dir = export_iceberg_metadata(t, format_version=2)
-        with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-            hint = fh.read().strip()
-        with open(os.path.join(meta_dir, f"v{hint}.metadata.json")) as fh:
-            md = _json.load(fh)
+        _, md = load_table_metadata(meta_dir)
         assert md["default-sort-order-id"] == 1
         flds = md["sort-orders"][1]["fields"]
         assert [f["direction"] for f in flds] == ["asc"]
@@ -2885,8 +2868,6 @@ def iceberg_variant_roundtrip(
     non-variant v3 lanes. pyarrow in this container cannot open VARIANT
     footers, so footer row counts fall back to DuckDB's reader
     (operators/mor_diff.py:_parquet_row_count)."""
-    import json as _json
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.parse_json("props").alias("v"), "value"
     )
@@ -2895,6 +2876,7 @@ def iceberg_variant_roundtrip(
     try:
         from ..operators.iceberg_meta import (
             export_iceberg_metadata,
+            load_table_metadata,
             read_iceberg_table,
         )
 
@@ -2902,10 +2884,7 @@ def iceberg_variant_roundtrip(
         t.write(ev, committed_at_ms=1)
         t.write(v2, committed_at_ms=2)
         meta_dir = export_iceberg_metadata(t, format_version=3)
-        with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-            hint = fh.read().strip()
-        with open(os.path.join(meta_dir, f"v{hint}.metadata.json")) as fh:
-            md = _json.load(fh)
+        _, md = load_table_metadata(meta_dir)
         assert {
             f["name"]: f["type"] for f in md["schema"]["fields"]
         } == {"event_id": "long", "v": "variant", "value": "double"}

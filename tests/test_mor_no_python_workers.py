@@ -11,7 +11,10 @@ frame through `util.local_frame` (Arrow) and every deletion vector
 through the JVM-only encoder in `operators/dv_kernel.py`. These tests
 make the four entry points raise, run chained-delete histories through
 every exporter and reader, and check the rows against
-`SnapshotTable.read` at every version.
+`SnapshotTable.read` at every version. The same holds for
+`migrate_parquet_dir`, the evolved-table (renamed-column) read and the
+`iceberg_inspect` metadata tables: each must equal its unpatched
+result.
 """
 
 from __future__ import annotations
@@ -30,8 +33,10 @@ from hybrid_data_lakehouse_lab_spark.operators.delta_log import (
     read_delta_changes,
     read_delta_table,
 )
+from hybrid_data_lakehouse_lab_spark.operators import iceberg_inspect
 from hybrid_data_lakehouse_lab_spark.operators.iceberg_meta import (
     export_iceberg_metadata,
+    migrate_parquet_dir,
     read_iceberg_table,
 )
 from hybrid_data_lakehouse_lab_spark.operators.maintenance import (
@@ -129,3 +134,87 @@ def test_export_and_read_start_no_python_worker(
     _check_reads(spark, t, versions)
     # both deletes exported as deletion-vector commits
     assert len(glob.glob(os.path.join(t.root, "deletion_vector_*.bin"))) == 2
+
+
+def _sorted_rows(df):
+    return sorted(df.collect(), key=repr)
+
+
+def test_migrate_then_read_starts_no_python_worker(spark, tmp_path, monkeypatch):
+    src = str(tmp_path / "lake")
+    spark.range(90).selectExpr(
+        "id AS k", "CAST(id % 3 AS STRING) AS g", "id * 2 AS v"
+    ).repartition(2).write.partitionBy("g").parquet(src)
+    migrate_parquet_dir(spark, str(tmp_path / "want"), src)
+    want = _sorted_rows(read_iceberg_table(spark, str(tmp_path / "want")))
+    _forbid_python_workers(spark, monkeypatch)
+    migrate_parquet_dir(spark, str(tmp_path / "got"), src)
+    assert _sorted_rows(read_iceberg_table(spark, str(tmp_path / "got"))) == want
+
+
+@pytest.mark.parametrize("upsert", [False, True], ids=["deletes", "upsert"])
+def test_renamed_column_reads_start_no_python_worker(
+    spark, tmp_path, monkeypatch, upsert
+):
+    """A rename makes the reader resolve every file's columns from its
+    footer (data files and, under upsert, equality-delete files)."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.write(
+        spark.createDataFrame([(i, i * 10) for i in range(20)], "k INT, val INT"),
+        committed_at_ms=1,
+    )
+    rows = [(i, i * 10 + (i % 4 == 0), f"n{i}") for i in range(25)]
+    t.write(
+        spark.createDataFrame(rows, "k INT, amount INT, note STRING"),
+        committed_at_ms=2,
+    )
+    t.write(
+        spark.createDataFrame(
+            [(k, a + (k % 5 == 0), n) for k, a, n in rows if k % 3],
+            "k INT, amount INT, note STRING",
+        ),
+        committed_at_ms=3,
+    )
+    kw = {"upsert_key": ["k"]} if upsert else {}
+    export_iceberg_metadata(
+        t, format_version=2, renamed_columns={"amount": "val"}, **kw
+    )
+    want = [
+        _sorted_rows(read_iceberg_table(spark, t.root, snapshot_id=sid))
+        for sid in (1, 2, 3)
+    ]
+    _forbid_python_workers(spark, monkeypatch)
+    export_iceberg_metadata(
+        t, format_version=2, renamed_columns={"amount": "val"}, **kw
+    )
+    got = [
+        _sorted_rows(read_iceberg_table(spark, t.root, snapshot_id=sid))
+        for sid in (1, 2, 3)
+    ]
+    assert got == want
+
+
+def test_inspect_tables_start_no_python_worker(spark, tmp_path, monkeypatch):
+    t = _history(spark, str(tmp_path / "t"), partitioned=True)
+    export_iceberg_metadata(t, format_version=2)
+    export_delta_log(t)
+    ii = iceberg_inspect
+
+    def tables():
+        out = [
+            ii.snapshots_table(spark, t.root),
+            ii.history_table(spark, t.root),
+            ii.refs_table(spark, t.root),
+            ii.delta_history_table(spark, t.root),
+        ]
+        for sid in (1, 2, 3, 4):
+            out += [
+                ii.manifests_table(spark, t.root, sid),
+                ii.files_table(spark, t.root, sid),
+                ii.partitions_table(spark, t.root, sid),
+            ]
+        return [df.collect() for df in out]
+
+    want = tables()
+    _forbid_python_workers(spark, monkeypatch)
+    assert tables() == want
