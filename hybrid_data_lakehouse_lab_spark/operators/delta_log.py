@@ -55,12 +55,12 @@ import os
 import urllib.parse
 import uuid
 
-from .dv_kernel import dv_blobs_by_file
 from .mor_diff import (
     _SCHEME_RE,
+    MorBase,
     _parquet_row_count,
-    _position_delete_diff,
     _with_file_pos,
+    write_spark_parts,
 )
 from .timetravel import SnapshotTable
 from .util import local_frame
@@ -332,12 +332,6 @@ def _write_change_data(
         rows = rows.join(F.broadcast(mapping), "_f")
     rows = rows.drop("_f", "_p").withColumn("_change_type", F.lit("delete"))
     out_dir = os.path.join(root, "_change_data", f"v{version:020d}")
-    writer = rows.write.mode("overwrite")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.parquet(out_dir)
-    from .mor_diff import finalize_spark_parts
-
     return [
         {
             "cdc": {
@@ -350,7 +344,7 @@ def _write_change_data(
                 "dataChange": False,
             }
         }
-        for p in finalize_spark_parts(out_dir, "cdc")
+        for p in write_spark_parts(rows, out_dir, "cdc", pcols)
     ]
 
 
@@ -426,18 +420,10 @@ def export_delta_log(
 
     prev_files: list[dict] = []
     prev_schema: str | None = None
-    # DV export state: physical dir of the last rewrite commit, the
-    # cumulative deletion-vector state per (absolute) data file path —
-    # held as (framed blob bytes, cardinality), NEVER as positions (the
-    # driver's footprint is compressed-bitmap bytes; aggregation
-    # happens executor-side) — the positions deleted since that rewrite
-    # (the union of each DV commit's pinned diff: the mask for the next
-    # diff and the prior state of a re-folded file), and the base's
-    # logical row count under those masks.
-    base_dir: str | None = None
-    dv_state: dict[str, tuple[bytes, int]] = {}
-    deleted_so_far = None
-    base_live_rows: int | None = None
+    # DV export state since the last rewrite commit (mor_diff.MorBase):
+    # its files keyed by absolute path, the mask of deleted positions
+    # and each touched file's cumulative deletion vector
+    base = MorBase(table.root)
     referenced_dv_files: set[str] = set()
     referenced_cdc_dirs: set[str] = set()
     cur_protocol: dict | None = None
@@ -474,39 +460,24 @@ def export_delta_log(
             (snap.get("properties") or {}).get("operation")
             in ("compaction", "rewrite-deletes")
         )
-        dv_rows = None  # [(file_path, framed blob, cardinality)]
+        changed = None  # absolute paths of the files a DV commit touches
         deleted = None
         cur_rows = None  # this snapshot's footer row total, read once
         if (
             mor_deletes
             and not is_compaction
-            and base_dir is not None
-            and os.path.isdir(base_dir)
-            and base_live_rows is not None
+            and base.ready()
             and schema_str == prev_schema
         ):
             cur_rows = sum(_footer_rows(table.root, files))
-            if cur_rows < base_live_rows:
-                deleted = _position_delete_diff(
-                    table.spark,
-                    [base_dir],
-                    deleted_so_far,
-                    snap["path"],
-                    base_live_rows,
-                    cur_rows,
-                    mask_rows=sum(c for _b, c in dv_state.values()),
-                )
+            if cur_rows < base.live_rows:
+                deleted = base.delete_diff(table.spark, snap["path"], cur_rows)
                 if deleted is not None:
-                    dv_rows = dv_blobs_by_file(deleted, deleted_so_far)
-                    deleted_so_far = (
-                        deleted
-                        if deleted_so_far is None
-                        else deleted_so_far.unionByName(deleted)
-                    )
-                    base_live_rows = cur_rows
+                    changed = base.fold_dvs(deleted)
+                    base.record_delete(deleted, cur_rows)
 
         actions: list[dict] = []
-        if dv_rows is not None:
+        if changed is not None:
             op, op_params = "DELETE", {"predicate": "[]"}
         elif is_compaction:
             # delta-spark OPTIMIZE: a logical no-op rewrite; dataChange
@@ -576,7 +547,7 @@ def export_delta_log(
                 }
             )
 
-        if dv_rows is not None:
+        if changed is not None:
             # --- deletion-vector commit: touched files get remove +
             # re-add with the CUMULATIVE bitmap (a descriptor replaces
             # any prior one for that file, per the spec). The bitmaps
@@ -584,43 +555,23 @@ def export_delta_log(
             # frames them into the .bin file and the log actions. ---
             from .roaring import encode_dv_uuid, write_dv_file
 
-            by_abs = {
-                os.path.abspath(
-                    os.path.join(table.root, urllib.parse.unquote(f["path"]))
-                ): f
-                for f in prev_files
-            }
-            blob_of = {
-                r["file_path"]: (bytes(r["blob"]), r["cardinality"])
-                for r in dv_rows
-            }
-            changed = sorted(blob_of)
-            unknown = [p for p in changed if p not in by_abs]
-            if unknown:
-                raise RuntimeError(
-                    f"diff produced positions for unknown files: {unknown}"
-                )
+            olds = [base.file(p) for p in changed]
             dv_uuid = uuid.uuid5(uuid.NAMESPACE_URL, f"{table.root}#dv{i}")
-            dv_state.update({p: blob_of[p] for p in changed})
             dv_name = f"deletion_vector_{dv_uuid}.bin"
             descs = write_dv_file(
                 os.path.join(table.root, dv_name),
-                [blob_of[p][0] for p in changed],
+                [base.dv[p][0] for p in changed],
             )
             referenced_dv_files.add(dv_name)
-            new_prev = []
-            updated = {}
-            for p, (off, sz) in zip(changed, descs):
-                old = by_abs[p]
+            for p, old, (off, sz) in zip(changed, olds, descs):
                 add = dict(old)
                 add["deletionVector"] = {
                     "storageType": "u",
                     "pathOrInlineDv": encode_dv_uuid(dv_uuid),
                     "offset": off,
                     "sizeInBytes": sz,
-                    "cardinality": blob_of[p][1],
+                    "cardinality": base.dv[p][1],
                 }
-                updated[old["path"]] = add
                 actions.append(
                     {
                         "remove": {
@@ -631,9 +582,6 @@ def export_delta_log(
                     }
                 )
                 actions.append({"add": add})
-            for f in prev_files:
-                new_prev.append(updated.get(f["path"], f))
-            prev_files = new_prev
             if change_data:
                 actions.extend(
                     _write_change_data(
@@ -643,8 +591,8 @@ def export_delta_log(
                         deleted,
                         changed,
                         {
-                            p: by_abs[p].get("partitionValues") or {}
-                            for p in changed
+                            p: old.get("partitionValues") or {}
+                            for p, old in zip(changed, olds)
                         },
                     )
                 )
@@ -685,15 +633,10 @@ def export_delta_log(
                 stat_files.append(f2)
             actions.extend({"add": f} for f in stat_files)
             prev_files = stat_files
-            base_dir = snap["path"]
-            dv_state = {}
-            deleted_so_far = None
             if mor_deletes:
-                base_live_rows = (
-                    sum(_footer_rows(table.root, files))
-                    if cur_rows is None
-                    else cur_rows
-                )
+                if cur_rows is None:
+                    cur_rows = sum(_footer_rows(table.root, files))
+                base.reset(snap["path"], cur_rows, stat_files)
 
         tmp = os.path.join(log_dir, f".{i:020d}.json.tmp")
         with open(tmp, "w") as fh:

@@ -87,15 +87,15 @@ import re
 import shutil
 import urllib.parse
 import uuid
+from dataclasses import dataclass, field
 
 from .avro_io import read_avro, write_avro
 from .mor_diff import (
     _SCHEME_RE,
-    _append_diff,
+    MorBase,
     _parquet_row_count,
-    _position_delete_diff,
     _upsert_diff,
-    finalize_spark_parts,
+    write_spark_parts,
 )
 from .delta_log import _check_compaction_rows, _footer_rows, _snapshot_files
 from .timetravel import SnapshotTable
@@ -393,9 +393,6 @@ def _manifest_list_schema(format_version: int = 1) -> dict:
     return {"type": "record", "name": "manifest_file", "fields": fields}
 
 
-# Kept for external callers/tests that import the v1 constant directly.
-_MANIFEST_LIST_SCHEMA = _manifest_list_schema(1)
-
 # Spec-reserved field ids of the position-delete file schema.
 POS_DELETE_FILE_PATH_ID = 2147483546
 POS_DELETE_POS_ID = 2147483545
@@ -403,22 +400,8 @@ POS_DELETE_POS_ID = 2147483545
 
 
 
-def _read_position_deletes(spark, dirs: list[str]):
-    """The (file_path, pos) rows of the stacked v2 delete dirs, or None.
-    Each dir is its own root (partition-scoped dirs nest `col=value/`
-    under it), so partition discovery across two of them would
-    conflict; the partition columns are not needed here."""
-    if not dirs:
-        return None
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(*dirs)
-        .select("file_path", "pos")
-    )
-
-
 def _write_position_deletes(
-    spark, deleted, out_dir: str, file_partitions=None, pcols=None
+    deleted, out_dir: str, file_partitions=None, pcols=None
 ) -> list[dict]:
     """Write a position-delete DataFrame as spec-shaped parquet under
     `out_dir`: columns `file_path`/`pos` carrying the spec's reserved
@@ -439,44 +422,20 @@ def _write_position_deletes(
     delete set fits one task (true for retention/erasure commits); a
     bulk delete raises the partition count — every resulting part file
     simply becomes one more manifest entry."""
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     pcols = pcols or []
     if pcols:
         deleted = deleted.join(F.broadcast(file_partitions), "file_path")
-    writer = (
+    return write_spark_parts(
         deleted.repartitionByRange(1, *pcols, "file_path", "pos")
         .sortWithinPartitions(*pcols, "file_path", "pos")
         .withMetadata("file_path", {"parquet.field.id": POS_DELETE_FILE_PATH_ID})
-        .withMetadata("pos", {"parquet.field.id": POS_DELETE_POS_ID})
-        .write.mode("overwrite")
+        .withMetadata("pos", {"parquet.field.id": POS_DELETE_POS_ID}),
+        out_dir,
+        "delete",
+        pcols,
     )
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.parquet(out_dir)
-    return finalize_spark_parts(out_dir, "delete")
-
-
-def _write_upsert_files(
-    spark, df, out_dir: str, prefix: str, pcols: list[str] | None = None
-) -> list[dict]:
-    """Write `df` as parquet under `out_dir` with deterministic
-    `{prefix}-NNNNN.parquet` names (stable re-export references), drop
-    zero-row parts, return [{path, record_count, size, partition}].
-    Used by the equality-delete upsert export for both the appended
-    data files (partitionBy the table's identity spec when `pcols`,
-    so each part carries its typed partition struct) and the
-    key-tuple delete files (always unpartitioned — they apply as
-    GLOBAL deletes under an unpartitioned spec, per the Iceberg spec's
-    equality-delete scoping rule); written BY SPARK so a bulk upsert
-    scales past driver memory — every part file becomes one manifest
-    entry."""
-    writer = df.write.mode("overwrite")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.parquet(out_dir)
-    return finalize_spark_parts(out_dir, prefix)
 
 
 def _hidden_transform_col(
@@ -540,19 +499,6 @@ def _hidden_transform_col(
     raise NotImplementedError(
         f"hidden partition transform {transform!r} for upsert export"
     )
-
-
-def _write_append_files(df, out_dir: str, pcols: list[str]) -> list[dict]:
-    """Write an incremental-append delta under `out_dir`, laid out like
-    the base snapshot (partitionBy the base spec's directory columns,
-    so the delta manifest's entries carry the same typed partition
-    values a rewrite would). Deterministic `append-NNNNN.parquet`
-    names; returns [{path, record_count, size, partition}]."""
-    writer = df.write.mode("overwrite")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.parquet(out_dir)
-    return finalize_spark_parts(out_dir, "append")
 
 
 def _bound_bytes(iceberg_type: str, v):
@@ -779,6 +725,888 @@ def write_metadata_version(meta_dir: str, md: dict, version: int) -> str:
     return new_loc
 
 
+def _check_foreign_commits(meta_dir: str, drop_foreign_commits: bool) -> None:
+    """FOREIGN-COMMIT SAFETY: a pointer commit through the REST catalog
+    (or any external engine POSTing add-snapshot) appends snapshots
+    this exporter knows nothing about — its manifest lists are not
+    the exporter's own `snap-{i}-1-manifest-list.avro` naming.
+    Regenerating the tree would silently drop them and GC their
+    manifests, so refuse loudly unless the caller opts in. The
+    supported flow for keeping them is to land the data through the
+    parent store (SnapshotTable.write) and re-export, or to keep
+    committing through the catalog."""
+    try:
+        cur = load_table_metadata(meta_dir)[1]
+    except FileNotFoundError:  # no tree yet, or a hint without its file
+        cur = {}
+    foreign = [
+        s["snapshot-id"]
+        for s in cur.get("snapshots") or []
+        if not re.fullmatch(
+            r"snap-\d+-1-manifest-list\.avro",
+            os.path.basename(s.get("manifest-list") or ""),
+        )
+    ]
+    if foreign and not drop_foreign_commits:
+        raise ValueError(
+            f"the tree at {meta_dir} holds catalog-committed "
+            f"snapshots this export does not know "
+            f"(ids {foreign}); re-exporting would drop them. "
+            "Land the data through the parent store and retry, "
+            "or pass drop_foreign_commits=True to discard them"
+        )
+
+
+@dataclass
+class _SchemaHistory:
+    """`_schema_history`'s result. `schemas` are the distinct schemas
+    (schema-id = list index); per event: `schema_ids`, `col_ids` (name
+    -> field id) and `types` (name -> Iceberg type); `aliases` maps each
+    field id to its names in order of use."""
+
+    schemas: list[dict]
+    schema_ids: list[int]
+    col_ids: list[dict[str, int]]
+    types: list[dict[str, str]]
+    aliases: dict[int, list[str]]
+    last_column_id: int
+
+
+def _schema_history(
+    columns: list[list[tuple[str, str]]],
+    versions: list[int],
+    hidden_partitions: dict,
+    renamed_columns: dict[str, str],
+) -> _SchemaHistory:
+    """SCHEMA EVOLUTION, pure: walk the pointer history's per-event
+    `(name, Spark type string)` columns chronologically (`versions`
+    name the snapshots in errors) and give every column a stable field
+    id at first appearance. Hidden-partition directory columns are not
+    table columns and are skipped. A name absent from a snapshot is
+    retired, so a re-add mints a new id; `renamed_columns` (NEW -> OLD)
+    transfers the old name's id while it is live and records the alias;
+    a type change must follow the promotion lattice. Refuses a rename
+    whose old name is still live in the same snapshot and a rename
+    whose old name was never live at all (a typo)."""
+    id_of: dict[str, int] = {}  # live name -> field id (retired on drop)
+    type_by_id: dict[int, str] = {}  # id -> latest (possibly promoted) type
+    aliases: dict[int, list[str]] = {}  # id -> names in order of use
+    ever_named: set[str] = set()  # every name that was ever live
+    applied_renames: set[str] = set()  # renamed_columns keys ever applied
+    out = _SchemaHistory([], [], [], [], aliases, last_column_id=0)
+    key_to_id: dict[tuple, int] = {}
+    for version, cols in zip(versions, columns):
+        evf = []
+        for name, spark_type in cols:
+            if name in hidden_partitions:
+                # HIDDEN partitioning (the Iceberg model the reference's
+                # `PARTITIONED BY (days(effective_start_ts))` uses,
+                # libs/scd2_spark_processor.py:151): the directory
+                # column is NOT a table column — it is a transform of a
+                # source column and lives only in the partition spec
+                continue
+            it = _iceberg_type(spark_type)
+            if name in id_of:
+                fid = id_of[name]
+            elif name in renamed_columns and renamed_columns[name] in id_of:
+                # a rename applies only while the OLD name is live; a
+                # 'rename a->b, later drop b and re-add b' history (or
+                # a rename-back a->b->a) falls through to minting a
+                # fresh id instead of a spurious error — typo'd
+                # mappings are caught after the loop, when the old
+                # name turns out to have never existed at all
+                applied_renames.add(name)
+                fid = id_of.pop(renamed_columns[name])
+                id_of[name] = fid
+                if name not in aliases[fid]:
+                    aliases[fid].append(name)
+            else:
+                out.last_column_id += 1
+                fid = out.last_column_id
+                id_of[name] = fid
+                type_by_id[fid] = it
+                aliases[fid] = [name]
+            if it != type_by_id[fid]:
+                if not _promotion_ok(type_by_id[fid], it):
+                    raise ValueError(
+                        f"column {name!r} (field id {fid}) changes "
+                        f"type {type_by_id[fid]} -> {it} in snapshot "
+                        f"v{version}; Iceberg only allows "
+                        "int->long, float->double and decimal "
+                        "precision widening"
+                    )
+                type_by_id[fid] = it
+            evf.append({"id": fid, "name": name, "required": False, "type": it})
+        # a rename whose OLD name still exists in the same snapshot
+        # (rename a->b while adding a new a) would alias one id to two
+        # live columns — refuse; the caller must express it as two
+        # separate commits
+        ids_used = [x["id"] for x in evf]
+        if len(set(ids_used)) != len(ids_used):
+            dup = sorted({i for i in ids_used if ids_used.count(i) > 1})
+            raise ValueError(
+                f"snapshot v{version}: renamed_columns maps a "
+                f"column whose old name is still present — field ids "
+                f"{dup} would serve two columns at once"
+            )
+        # a name absent from this snapshot is RETIRED: a later column
+        # re-added under the same name gets a fresh id, so old files'
+        # data for the dropped column can never resurface (spec rule)
+        live_names = {x["name"] for x in evf}
+        ever_named.update(live_names)
+        for n in list(id_of):
+            if n not in live_names:
+                del id_of[n]
+        key = tuple((x["id"], x["name"], x["type"]) for x in evf)
+        sid = key_to_id.setdefault(key, len(out.schemas))
+        if sid == len(out.schemas):
+            out.schemas.append({"type": "struct", "schema-id": sid, "fields": evf})
+        out.schema_ids.append(sid)
+        out.col_ids.append({x["name"]: x["id"] for x in evf})
+        out.types.append({x["name"]: x["type"] for x in evf})
+    typos = {
+        new: old
+        for new, old in renamed_columns.items()
+        if new not in applied_renames and old not in ever_named
+    }
+    if typos:
+        raise ValueError(
+            f"renamed_columns maps {typos} to old names no snapshot in "
+            f"the history ever had a live column for "
+            f"(names ever live: {sorted(ever_named)})"
+        )
+    return out
+
+
+# spec result types for the date/time binners: day -> date (ISO dirs,
+# epoch-day values), month/year/hour -> int (months/years/hours from
+# epoch; hour is timestamp-only per the spec)
+_TRANSFORM_TYPES = {"day": "date", "month": "int", "year": "int", "hour": "int"}
+
+
+def _spec_fields_for(
+    pcols: list[str],
+    hidden_partitions: dict,
+    col_ids: dict[str, int],
+    type_of: dict[str, str],
+) -> list[dict]:
+    """The partition-spec fields of a directory layout `pcols`, pure:
+    identity fields for plain dir columns, transforms for hidden ones,
+    with source ids and result types under the schema (`col_ids`,
+    `type_of`) of the snapshot being written."""
+    spec_fields = []
+    for c in pcols:
+        if c not in hidden_partitions:
+            if c not in col_ids:
+                raise ValueError(
+                    f"partition column {c!r} (used by an earlier "
+                    "snapshot's layout) is not in the latest "
+                    "schema; dropping a partitioned column is not "
+                    "supported"
+                )
+            spec_fields.append(
+                {
+                    "name": c,
+                    "transform": "identity",
+                    "source-id": col_ids[c],
+                    # convenience for _entry_schema; stripped in metadata
+                    "type": type_of[c],
+                }
+            )
+            continue
+        # (source, transform) for the date binners, or (source,
+        # "bucket"|"truncate", param) for the parameterized transforms
+        # (spec: bucket[N] = murmur3 & MAX % N, truncate[W] =
+        # floor-to-W / first-W-chars)
+        hp = tuple(hidden_partitions[c])
+        source_col, transform = hp[0], hp[1]
+        param = hp[2] if len(hp) > 2 else None
+        if source_col not in col_ids:
+            raise ValueError(
+                f"hidden partition {c!r} names unknown source "
+                f"column {source_col!r}"
+            )
+        if transform in _TRANSFORM_TYPES:
+            if transform == "hour" and type_of[source_col] not in (
+                "timestamp",
+                "timestamptz",
+            ):
+                raise ValueError(
+                    f"hour transform for {c!r} needs a timestamp "
+                    f"source (got {type_of[source_col]!r})"
+                )
+            tname, ttype = transform, _TRANSFORM_TYPES[transform]
+        elif transform == "bucket":
+            if not isinstance(param, int) or param <= 0:
+                raise ValueError(
+                    f"bucket transform for {c!r} needs a positive "
+                    f"bucket count, got {param!r}"
+                )
+            tname, ttype = f"bucket[{param}]", "int"
+        elif transform == "truncate":
+            if not isinstance(param, int) or param <= 0:
+                raise ValueError(
+                    f"truncate transform for {c!r} needs a "
+                    f"positive width, got {param!r}"
+                )
+            src_type = type_of[source_col]
+            if src_type not in ("int", "long", "string"):
+                raise NotImplementedError(
+                    f"truncate over source type {src_type!r}"
+                )
+            tname, ttype = f"truncate[{param}]", src_type
+        else:
+            raise NotImplementedError(
+                f"partition transform {transform!r} (only "
+                f"{sorted(_TRANSFORM_TYPES) + ['bucket', 'truncate']})"
+            )
+        spec_fields.append(
+            {
+                "name": c,
+                "transform": tname,
+                "source-id": col_ids[source_col],
+                "type": ttype,
+            }
+        )
+    return spec_fields
+
+
+class _SpecRegistry:
+    """SPEC REGISTRY, pure: each distinct partition layout gets a
+    spec-id in order of first appearance (chronological, like real
+    Iceberg); partition field-ids start at 1000 and are NEVER reused
+    for a different (name, transform, source) — and an equivalent field
+    in a later spec KEEPS its id — the v2 rules for spec evolution."""
+
+    def __init__(self, hidden_partitions: dict, format_version: int):
+        self.hidden_partitions = hidden_partitions
+        self.format_version = format_version
+        self.specs: list[list[dict]] = []
+        self._spec_ids: dict[tuple, int] = {}
+        self._field_ids: dict[tuple, int] = {}
+        self._entry_schemas: dict[int, dict] = {}
+
+    def resolve(self, pcols: list[str], col_ids: dict, type_of: dict) -> int:
+        """The spec-id of layout `pcols`, registered on first use."""
+        sfs = _spec_fields_for(list(pcols), self.hidden_partitions, col_ids, type_of)
+        key = tuple((f["name"], f["transform"], f["source-id"]) for f in sfs)
+        sid = self._spec_ids.get(key)
+        if sid is None:
+            for f, fkey in zip(sfs, key):
+                f["field-id"] = self._field_ids.setdefault(
+                    fkey, 1000 + len(self._field_ids)
+                )
+            sid = len(self.specs)
+            self.specs.append(sfs)
+            self._spec_ids[key] = sid
+        return sid
+
+    def entry_schema(self, sid: int) -> dict:
+        if sid not in self._entry_schemas:
+            self._entry_schemas[sid] = _entry_schema(
+                self.specs[sid], self.format_version
+            )
+        return self._entry_schemas[sid]
+
+    def fields(self, sid: int) -> list[dict]:
+        """Spec `sid`'s fields as the metadata lists them."""
+        return [
+            {k: v for k, v in sf.items() if k != "type"} for sf in self.specs[sid]
+        ]
+
+    @property
+    def last_partition_id(self) -> int:
+        return max(self._field_ids.values(), default=999)
+
+
+@dataclass
+class _IcebergExport:
+    """The state `export_iceberg_metadata` carries across the pointer
+    history: the merge-on-read base (`MorBase`) with the spec and
+    schema of its rewrite, the manifest-list rows of the previous
+    snapshot, the v3 row-id counter, the sort orders, and what this
+    export wrote (for the stale-file GC)."""
+
+    table: SnapshotTable
+    meta_dir: str
+    format_version: int
+    hidden_partitions: dict
+    upsert_key: list[str] | None
+    schemas: _SchemaHistory
+    specs: _SpecRegistry
+    base: MorBase
+    base_spec_id: int = 0  # spec of the last full-rewrite snapshot
+    base_schema_sid: int = 0  # schema of the last full-rewrite snapshot
+    prev_rows: list[dict] = field(default_factory=list)
+    next_row_id: int = 0  # v3 row lineage: the next _row_id to assign
+    written_dirs: dict[str, set] = field(
+        default_factory=lambda: {"deletes": set(), "upserts": set(), "appends": set()}
+    )
+    written_manifests: set[str] = field(default_factory=set)
+    verified_unique: set[str] = field(default_factory=set)  # PK-probed dirs
+    # spec SORT ORDERS: order-0 = unsorted (see `sort_order`)
+    sort_orders: list[dict] = field(
+        default_factory=lambda: [{"order-id": 0, "fields": []}]
+    )
+    default_sort_order_id: int = 0
+
+    def manifest(self, i, suffix, spec_id, data_files, first_row_id=None) -> dict:
+        """Write snapshot `i`'s manifest `m-{i}{suffix}.avro` of ADDED
+        `data_files` under `spec_id`; return its manifest-list row."""
+        path = os.path.join(self.meta_dir, f"m-{i:05d}{suffix}.avro")
+        write_avro(
+            path,
+            self.specs.entry_schema(spec_id),
+            [_manifest_entry(d, self.format_version, i + 1) for d in data_files],
+        )
+        self.written_manifests.add(os.path.basename(path))
+        return _manifest_list_row(
+            path,
+            os.path.getsize(path),
+            spec_id,
+            i + 1,
+            i + 1,
+            data_files,
+            self.format_version,
+            first_row_id,
+        )
+
+    def data_manifest(self, i, suffix, spec_id, files, sort_order_id=0) -> dict:
+        """`manifest` of the parquet `files` ([{path, record_count, size,
+        partition}]) as ADDED data files of snapshot `i`, drawing their
+        v3 row ids from the table counter."""
+        first_row_id = self.next_row_id
+        added, self.next_row_id = _added_data_files(
+            files,
+            self.specs.specs[spec_id],
+            self.schemas.col_ids[i],
+            self.schemas.types[i],
+            self.format_version,
+            first_row_id,
+            sort_order_id=sort_order_id,
+        )
+        return self.manifest(i, suffix, spec_id, added, first_row_id)
+
+    def sort_order(self, props: dict, col_ids: dict[str, int]) -> int:
+        """The sort-order id a snapshot's data files are stamped with.
+        A snapshot committed by maintenance.rewrite_data_files_sorted
+        (strategy "sort") declares its lexicographic order in the
+        "sort-by" property; it is registered as a real sort-orders
+        entry (column names resolved under THIS snapshot's schema) and
+        becomes the table's default write order (ALTER TABLE ... WRITE
+        ORDERED BY semantics — it persists until a later rewrite
+        replaces it). Z-ORDER rewrites stay summary-only: the spec's
+        sort-order transforms cannot express bit interleaving, so real
+        engines also record z-order only in the rewrite's summary."""
+        sort_by = props.get("sort-by")
+        if self.format_version < 2 or not sort_by or props.get("strategy") != "sort":
+            return 0
+        fields = []
+        for c, d in json.loads(sort_by):
+            if c not in col_ids:
+                return 0  # column unknown at this snapshot: skip
+            fields.append(
+                {
+                    "transform": "identity",
+                    "source-id": col_ids[c],
+                    "direction": d,
+                    "null-order": "nulls-first" if d == "asc" else "nulls-last",
+                }
+            )
+        if not fields:
+            return 0
+        oid = next(
+            (o["order-id"] for o in self.sort_orders if o["fields"] == fields),
+            len(self.sort_orders),
+        )
+        if oid == len(self.sort_orders):
+            self.sort_orders.append({"order-id": oid, "fields": fields})
+        self.default_sort_order_id = oid
+        return oid
+
+
+def _upsert_commit(x: _IcebergExport, i: int, changed, del_keys):
+    """Equality-delete upsert commit (Flink dialect). On a partitioned
+    table the appended data files are laid out under the base spec —
+    identity dir columns ride along from the snapshot read;
+    HIDDEN-transform dir columns (days/month/year/bucket/truncate) are
+    re-derived from their source column with the spec-exact
+    expression, so a days(effective_start_ts)-partitioned SCD2 table
+    (the reference's own layout) exports with typed partition structs
+    per entry. The key-tuple delete files stay UNPARTITIONED and their
+    manifest uses an unpartitioned spec — the spec's
+    global-equality-delete scoping, so a primary key that MOVES
+    partitions (an SCD2 update lands its current row on a new day) is
+    still masked everywhere."""
+    col_ids, type_of = x.schemas.col_ids[i], x.schemas.types[i]
+    base_spec_fields = x.specs.specs[x.base_spec_id]
+    for sf in base_spec_fields:
+        if sf["transform"] == "identity":
+            continue
+        hp = tuple(x.hidden_partitions[sf["name"]])
+        src_col = hp[0]
+        if hp[1] == "bucket":
+            # staged-column murmur3: the Column form's duplicated
+            # rounds blow up the partitioned write's sort codegen (see
+            # with_bucket_column)
+            from .iceberg_transforms import with_bucket_column
+
+            changed = with_bucket_column(
+                changed, sf["name"], src_col, int(hp[2]), type_of[src_col]
+            )
+        else:
+            changed = changed.withColumn(
+                sf["name"],
+                _hidden_transform_col(
+                    src_col,
+                    hp[1],
+                    hp[2] if len(hp) > 2 else None,
+                    type_of[src_col],
+                ),
+            )
+    ups_dir = os.path.join(x.table.root, "upserts", f"s{i + 1:05d}")
+    data_files = write_spark_parts(
+        changed,
+        os.path.join(ups_dir, "data"),
+        "data",
+        [sf["name"] for sf in base_spec_fields],
+    )
+    del_files = write_spark_parts(del_keys, os.path.join(ups_dir, "eqdel"), "eqdel")
+    if os.path.isdir(ups_dir):
+        x.written_dirs["upserts"].add(os.path.basename(ups_dir))
+    manifest_rows = list(x.prev_rows)
+    if data_files:
+        manifest_rows.append(
+            x.data_manifest(i, "-ups", x.base_spec_id, data_files)
+        )
+    if del_files:
+        eq_ids = [col_ids[k] for k in x.upsert_key]
+        # global equality deletes: the manifest uses an UNPARTITIONED
+        # spec (minted on first use), so the keys mask across every
+        # partition per the spec rule
+        manifest_rows.append(
+            x.manifest(
+                i,
+                "-del",
+                x.specs.resolve([], col_ids, type_of),
+                [
+                    {
+                        "content": 2,  # EQUALITY DELETES
+                        "file_path": d["path"],
+                        "file_format": "PARQUET",
+                        "partition": {},
+                        "record_count": d["record_count"],
+                        "file_size_in_bytes": d["size"],
+                        "equality_ids": eq_ids,
+                    }
+                    for d in del_files
+                ],
+            )
+        )
+    return manifest_rows, "overwrite" if del_files else "append"
+
+
+def _delete_dir(x: _IcebergExport, i: int) -> str:
+    """Snapshot `i`'s delete-file dir, recorded as written."""
+    name = f"s{i + 1:05d}"
+    x.written_dirs["deletes"].add(name)
+    return os.path.join(x.table.root, "deletes", name)
+
+
+def _data_rows(rows: list[dict]) -> list[dict]:
+    """The data-manifest rows of a manifest list."""
+    return [r for r in rows if (r.get("content") or 0) == 0]
+
+
+def _dv_commit(x: _IcebergExport, i: int, deleted, child_rows: int):
+    """v3 merge-on-read delete snapshot: DELETION VECTORS in a Puffin
+    file (spec v3 forbids new positional-delete parquet). One
+    cumulative DV per touched data file; the new delete manifest
+    REPLACES all prior delete manifests in the manifest list (at most
+    one DV per data file). The bitmaps are merged with the positions
+    deleted since the last rewrite and serialized ON the executors by
+    the JVM-only encoder shared with the Delta exporter (`MorBase.
+    fold_dvs`); the driver does the O(files) Puffin container assembly.
+    With `deleted` None this is the MINOR compaction: the cumulative DV
+    state re-emitted as one fresh Puffin file — k stacked DV files
+    become one."""
+    from .puffin import DELETION_VECTOR_V1, frame_dv_v1, write_puffin
+
+    if deleted is not None:
+        x.base.fold_dvs(deleted)
+        x.base.record_delete(deleted, child_rows)
+    sdir = _delete_dir(x, i)
+    if os.path.isdir(sdir):
+        # a prior v2 export of this snapshot left positional delete
+        # parquet here; the fv3 upgrade supersedes it — clear the dir
+        # so no orphaned delete files linger
+        shutil.rmtree(sdir)
+    os.makedirs(sdir, exist_ok=True)
+    puffin_path = os.path.join(sdir, f"dv-{i + 1:05d}.puffin")
+    dv = x.base.dv
+    touched = sorted(dv)
+    blob_metas = write_puffin(
+        puffin_path,
+        [
+            {
+                "type": DELETION_VECTOR_V1,
+                "data": frame_dv_v1(dv[p][0]),
+                "snapshot-id": i + 1,
+                "sequence-number": i + 1,
+                "properties": {
+                    "referenced-data-file": p,
+                    "cardinality": str(dv[p][1]),
+                },
+            }
+            for p in touched
+        ],
+    )
+    puffin_size = os.path.getsize(puffin_path)
+    base_spec_fields = x.specs.specs[x.base_spec_id]
+    dv_files = [
+        {
+            "content": 1,  # POSITION DELETES (as a DV)
+            "file_path": puffin_path,
+            "file_format": "PUFFIN",
+            "partition": _partition_tuple(
+                base_spec_fields, x.base.file(p)["partitionValues"]
+            ),
+            "record_count": dv[p][1],
+            "file_size_in_bytes": puffin_size,
+            "referenced_data_file": p,
+            "content_offset": bm["offset"],
+            "content_size_in_bytes": bm["length"],
+        }
+        for p, bm in zip(touched, blob_metas)
+    ]
+    # REPLACE semantics: parent DATA manifests ride along, prior delete
+    # manifests are dropped (their DVs are superseded)
+    manifest_rows = _data_rows(x.prev_rows) + [
+        x.manifest(i, "-del", x.base_spec_id, dv_files)
+    ]
+    return manifest_rows, "delete" if deleted is not None else "replace"
+
+
+def _positional_commit(x: _IcebergExport, i: int, deleted, child_rows: int):
+    """v2 merge-on-read delete snapshot: positional delete files,
+    partition-scoped on a partitioned base. Manifest REUSE: the
+    parent's manifests ride along verbatim, keeping their original
+    sequence numbers for inheritance. With `deleted` None this is the
+    MINOR compaction: every position deleted since the last rewrite
+    (the base's mask) written as one consolidated, still
+    partition-scoped file set whose manifest REPLACES the stacked
+    delete manifests (data manifests only ride along)."""
+    minor = deleted is None
+    if minor:
+        deleted = x.base.deleted
+    else:
+        x.base.record_delete(deleted, child_rows)
+    base_spec_fields = x.specs.specs[x.base_spec_id]
+    pcols = [sf["name"] for sf in base_spec_fields]
+    file_partitions = None
+    if pcols:
+        # partition-scoped delete files (the spec's rule): map each live
+        # data file (base + append deltas) to its raw partition values
+        # so the delete rows can be routed by partitionBy
+        file_partitions = local_frame(
+            x.table.spark,
+            [
+                (p, *[f["partitionValues"].get(c) for c in pcols])
+                for p, f in x.base.files.items()
+            ],
+            ", ".join(["file_path string"] + [f"{c} string" for c in pcols]),
+        )
+    dfiles = _write_position_deletes(
+        deleted, _delete_dir(x, i), file_partitions, pcols
+    )
+    row = x.manifest(
+        i,
+        "-del",
+        x.base_spec_id,
+        [
+            {
+                "content": 1,  # POSITION DELETES
+                "file_path": d["path"],
+                "file_format": "PARQUET",
+                "partition": _partition_tuple(base_spec_fields, d["partition"]),
+                "record_count": d["record_count"],
+                "file_size_in_bytes": d["size"],
+            }
+            for d in dfiles
+        ],
+    )
+    if minor:
+        return _data_rows(x.prev_rows) + [row], "replace"
+    return x.prev_rows + [row], "delete"
+
+
+def _append_commit(x: _IcebergExport, i: int, appended, child_rows: int):
+    """Incremental APPEND commit (v1, v2 and v3): the parent's
+    manifests ride along VERBATIM (keeping their sequence numbers /
+    snapshot ids) and ONE delta manifest adds only the new rows,
+    written under the base spec's layout. Metadata per commit is
+    O(delta files), not O(table files) — an N-commit append history's
+    tree grows O(N + total delta files)."""
+    adir = os.path.join(x.table.root, "appends", f"s{i + 1:05d}")
+    pcols = [sf["name"] for sf in x.specs.specs[x.base_spec_id]]
+    row = x.data_manifest(
+        i, "-app", x.base_spec_id, write_spark_parts(appended, adir, "append", pcols)
+    )
+    x.written_dirs["appends"].add(os.path.basename(adir))
+    x.base.record_append(adir, child_rows, _snapshot_files(x.table.root, adir))
+    return x.prev_rows + [row], "append"
+
+
+def _rewrite_commit(
+    x: _IcebergExport,
+    i: int,
+    snap_dir: str,
+    files: list[dict],
+    file_rows: list[int],
+    is_compaction: bool,
+    sort_order_id: int,
+):
+    """Full-rewrite snapshot (layout changes, modified rows,
+    compaction; v1 deletes): every file ADDED in one fresh manifest,
+    and the merge-on-read base restarts here. PARTITION-SPEC
+    EVOLUTION: this snapshot's own directory layout decides its spec —
+    a rewrite (or compaction) that repartitions the table registers a
+    new spec-id; manifests of unchanged layout reuse the existing one."""
+    pcols = next(
+        (list(f["partitionValues"]) for f in files if f["partitionValues"]), []
+    )
+    sid = x.specs.resolve(pcols, x.schemas.col_ids[i], x.schemas.types[i])
+    row = x.data_manifest(
+        i,
+        "",
+        sid,
+        [
+            {
+                "path": os.path.join(x.table.root, urllib.parse.unquote(f["path"])),
+                "record_count": rc,
+                "size": f["size"],
+                "partition": f["partitionValues"],
+            }
+            for f, rc in zip(files, file_rows)
+        ],
+        sort_order_id=sort_order_id,
+    )
+    x.base_spec_id = sid
+    x.base_schema_sid = x.schemas.schema_ids[i]
+    x.base.reset(snap_dir, sum(file_rows), files)
+    return [row], "replace" if is_compaction else "overwrite"
+
+
+def _manifest_counts(rows: list[dict], content: int, added_by: int | None = None):
+    """(files, rows) of the manifests in `rows` holding `content`: live
+    (added + existing) entries, or with `added_by` only the entries
+    that snapshot added."""
+    files = records = 0
+    for r in rows:
+        if (r.get("content") or 0) != content:
+            continue
+        if added_by is None:
+            files += (r.get("added_files_count") or 0) + (
+                r.get("existing_files_count") or 0
+            )
+            records += (r.get("added_rows_count") or 0) + (
+                r.get("existing_rows_count") or 0
+            )
+        elif r.get("added_snapshot_id") == added_by:
+            files += r.get("added_files_count") or 0
+            records += r.get("added_rows_count") or 0
+    return files, records
+
+
+def _snapshot_summary(
+    operation: str,
+    properties: dict,
+    manifest_rows: list[dict],
+    rows_before: list[dict],
+    snapshot_id: int,
+    format_version: int,
+    delete_flavor: str,
+) -> dict:
+    """A snapshot's summary, pure: the spec `operation`, the commit's
+    properties (minus the internal `operation` flag) and, on v2+, the
+    spec-standard counters engines surface in DESCRIBE HISTORY /
+    $snapshots, derived from the manifest rows' own counts. Data files
+    of the parent's manifests that this list no longer carries count as
+    deleted. `delete_flavor` ("position" or "equality") names the
+    delete counters."""
+    summary = {"operation": operation}
+    for k, v in (properties or {}).items():
+        if k != "operation":  # the spec operation is computed
+            summary[str(k)] = str(v)
+    if format_version < 2:
+        return summary
+    carried = {r["manifest_path"] for r in manifest_rows}
+    dropped = [r for r in rows_before if r["manifest_path"] not in carried]
+    rows, new, kind = manifest_rows, snapshot_id, delete_flavor
+    counts = {
+        ("added-data-files", "added-records"): _manifest_counts(rows, 0, new),
+        ("added-delete-files", f"added-{kind}-deletes"): _manifest_counts(rows, 1, new),
+        ("deleted-data-files", "deleted-records"): _manifest_counts(dropped, 0),
+        ("total-data-files", "total-records"): _manifest_counts(rows, 0),
+        ("total-delete-files", f"total-{kind}-deletes"): _manifest_counts(rows, 1),
+    }
+    for keys, values in counts.items():
+        summary.update(zip(keys, map(str, values)))
+    return summary
+
+
+def _table_metadata(
+    x: _IcebergExport, m: dict, branch: str, events: list[dict], snapshots: list[dict]
+) -> dict:
+    """The table-metadata document of the export: schemas with the name
+    mapping, partition specs, snapshots and their log, the
+    metadata-log of the previous versions still on disk, sort orders,
+    row lineage and branch refs."""
+    schemas = x.schemas
+    current_sid = schemas.schema_ids[-1]
+    # NAME MAPPING (spec "Name Mapping Serialization"): Spark-written
+    # data files carry no parquet field ids, so a rename would orphan
+    # the old files' columns — the mapping lists every historical alias
+    # per field id. A name reused by a DIFFERENT field later (drop +
+    # re-add) binds to its CURRENT field only; the retired alias is
+    # omitted (per-snapshot read schemas resolve those directly by
+    # name, and the re-add transition full-rewrote the live files).
+    name_mapping = []
+    claimed = {f["name"]: f["id"] for f in schemas.schemas[current_sid]["fields"]}
+    for fid in sorted(schemas.aliases):
+        names = []
+        for nm in schemas.aliases[fid]:
+            owner = claimed.get(nm)
+            if owner is None or owner == fid:
+                names.append(nm)
+                claimed[nm] = fid
+        if names:
+            name_mapping.append({"field-id": fid, "names": names})
+    # metadata-log (spec): pointers to the PREVIOUS metadata files still
+    # on disk, oldest first — how external engines walk table-metadata
+    # history. Each entry's timestamp is that file's own last-updated-ms.
+    mlog = []
+    for k in range(1, len(events)):
+        prev_path = os.path.join(x.meta_dir, f"v{k}.metadata.json")
+        if os.path.exists(prev_path):
+            try:
+                with open(prev_path) as fh:
+                    prev_ts = json.load(fh).get("last-updated-ms", 0)
+            except ValueError:
+                continue
+            mlog.append({"timestamp-ms": prev_ts, "metadata-file": prev_path})
+    # branch refs (spec `refs`): the exported branch tracks the current
+    # snapshot under its own name, and every OTHER SnapshotTable branch
+    # whose head version exists in this exported chain gets a branch
+    # ref at that snapshot — the Iceberg spelling of the Nessie-style
+    # zero-copy branches (reference README.MD:308-313). A branch whose
+    # head is NOT in the chain (an unpublished WAP stage) is simply
+    # absent, preserving WAP invisibility.
+    current_id = snapshots[-1]["snapshot-id"]
+    version_to_sid = {ev["version"]: i + 1 for i, ev in enumerate(events)}
+    refs = {branch: {"snapshot-id": current_id, "type": "branch"}}
+    all_heads = dict(m.get("branches") or {})
+    if m.get("current") is not None:
+        all_heads["main"] = m["current"]
+    for b, head in all_heads.items():
+        sid = version_to_sid.get(head)
+        if b != branch and sid is not None:
+            refs[b] = {"snapshot-id": sid, "type": "branch"}
+    metadata = {
+        "format-version": x.format_version,
+        "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, x.table.root)),
+        "location": x.table.root,
+        "last-updated-ms": events[-1]["at_ms"],
+        "last-column-id": schemas.last_column_id,
+        "schema": schemas.schemas[current_sid],
+        "schemas": schemas.schemas,
+        "current-schema-id": current_sid,
+        # default spec = the layout of the last full rewrite (the
+        # table's CURRENT write spec); all historical specs are listed
+        # so readers can type/prune each manifest under the spec its
+        # files were written with
+        "partition-spec": x.specs.fields(x.base_spec_id),
+        "partition-specs": [
+            {"spec-id": sid, "fields": x.specs.fields(sid)}
+            for sid in range(len(x.specs.specs))
+        ],
+        "default-spec-id": x.base_spec_id,
+        "last-partition-id": x.specs.last_partition_id,
+        "properties": {"schema.name-mapping.default": json.dumps(name_mapping)},
+        "current-snapshot-id": current_id,
+        "snapshots": snapshots,
+        "snapshot-log": [
+            {"snapshot-id": s["snapshot-id"], "timestamp-ms": s["timestamp-ms"]}
+            for s in snapshots
+        ],
+        "metadata-log": mlog,
+        "refs": refs,
+    }
+    if x.format_version >= 2:
+        metadata["last-sequence-number"] = len(events)
+        metadata["sort-orders"] = x.sort_orders
+        metadata["default-sort-order-id"] = x.default_sort_order_id
+    if x.format_version >= 3:
+        # v3 row lineage: the next _row_id a future commit may assign
+        metadata["next-row-id"] = x.next_row_id
+    return metadata
+
+
+def _remove_stale_files(
+    x: _IcebergExport, n_events: int, drop_foreign_commits: bool
+) -> None:
+    """A vacuum can SHRINK the pointer history; files from a longer
+    pre-vacuum export (higher metadata versions, manifests for dropped
+    snapshots) are unreferenced by the new hint but would reference
+    deleted data — remove them, the catalog-GC step a real Iceberg
+    deployment runs. Delete/upsert/append dirs this export did not
+    write (history shrunk, or a snapshot that re-exported as a
+    rewrite) go by the same contract."""
+    for f in os.listdir(x.meta_dir):
+        stale = (
+            (
+                re.match(r"^m-\d+(-del|-ups|-app)?\.avro$", f)
+                and f not in x.written_manifests
+            )
+            or (
+                f.startswith("snap-")
+                and f.endswith(".avro")
+                and f.split("-")[1].isdigit()
+                and int(f.split("-")[1]) > n_events
+            )
+            # foreign (catalog-committed) staged manifests + manifest
+            # lists: GC'd ONLY under the drop_foreign_commits opt-in —
+            # a staged-but-not-yet-committed external append must
+            # survive a routine re-export (the docstring's contract);
+            # with the opt-in, the foreign snapshots were just dropped
+            # and their staging goes with them
+            or (drop_foreign_commits and f.startswith(("m-staged-", "snap-staged-")))
+            or (
+                f.startswith("v")
+                and f.endswith(".metadata.json")
+                and f[1:-14].isdigit()
+                and int(f[1:-14]) > n_events
+            )
+            # statistics puffins: regeneration drops the `statistics`
+            # field, so any stats file is now unreferenced — GC it;
+            # re-run export_iceberg_statistics to restore stats
+            or (f.startswith("stats-") and f.endswith(".puffin"))
+        )
+        if stale:
+            os.remove(os.path.join(x.meta_dir, f))
+    staged_root = os.path.join(x.table.root, "staged")
+    if drop_foreign_commits and os.path.isdir(staged_root):
+        shutil.rmtree(staged_root, ignore_errors=True)
+    for sub, written in x.written_dirs.items():
+        sub_root = os.path.join(x.table.root, sub)
+        if os.path.isdir(sub_root):
+            for d in os.listdir(sub_root):
+                if d.startswith("s") and d not in written:
+                    shutil.rmtree(os.path.join(sub_root, d), ignore_errors=True)
+            if not os.listdir(sub_root):
+                os.rmdir(sub_root)
+
+
 def export_iceberg_metadata(
     table: SnapshotTable,
     branch: str = "main",
@@ -881,53 +1709,20 @@ def export_iceberg_metadata(
     if not events:
         raise ValueError(f"branch {branch!r} has no commits to export")
     by_version = {s["version"]: s for s in m["snapshots"]}
+    snap_dirs = [by_version[ev["version"]]["path"] for ev in events]
 
     meta_dir = os.path.join(table.root, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
+    _check_foreign_commits(meta_dir, drop_foreign_commits)
 
-    # FOREIGN-COMMIT SAFETY: a pointer commit through the REST catalog
-    # (or any external engine POSTing add-snapshot) appends snapshots
-    # this exporter knows nothing about — its manifest lists are not
-    # the exporter's own `snap-{i}-1-manifest-list.avro` naming.
-    # Regenerating the tree would silently drop them and GC their
-    # manifests, so refuse loudly unless the caller opts in. The
-    # supported flow for keeping them is to land the data through the
-    # parent store (SnapshotTable.write) and re-export, or to keep
-    # committing through the catalog.
-    try:
-        _cur_md = load_table_metadata(meta_dir)[1]
-    except FileNotFoundError:  # no tree yet, or a hint without its file
-        _cur_md = {}
-    foreign = [
-        s["snapshot-id"]
-        for s in _cur_md.get("snapshots") or []
-        if not re.fullmatch(
-            r"snap-\d+-1-manifest-list\.avro",
-            os.path.basename(s.get("manifest-list") or ""),
-        )
-    ]
-    if foreign and not drop_foreign_commits:
-        raise ValueError(
-            f"the tree at {meta_dir} holds catalog-committed "
-            f"snapshots this export does not know "
-            f"(ids {foreign}); re-exporting would drop them. "
-            "Land the data through the parent store and retry, "
-            "or pass drop_foreign_commits=True to discard them"
-        )
-
-    # SCHEMA EVOLUTION: walk the pointer history chronologically and
-    # give every column a stable field id at first appearance. Partition
-    # specs are resolved PER SNAPSHOT inside the loop — PARTITION-SPEC
-    # EVOLUTION: a full rewrite that changes the directory layout (the
-    # canonical year-2 repartition of a long-lived table) becomes a NEW
-    # spec-id, and every manifest records the spec its files were
-    # written under
+    # each event's data files, listed once. Partition specs are
+    # resolved PER SNAPSHOT — PARTITION-SPEC EVOLUTION: a full rewrite
+    # that changes the directory layout (the canonical year-2
+    # repartition of a long-lived table) becomes a NEW spec-id, and
+    # every manifest records the spec its files were written under
+    files_of = [_snapshot_files(table.root, d) for d in snap_dirs]
     hidden_partitions = hidden_partitions or {}
-    renamed_columns = dict(renamed_columns or {})
-    seen_dirs: set[str] = set()
-    for ev in events:
-        for f in _snapshot_files(table.root, by_version[ev["version"]]["path"]):
-            seen_dirs.update(f["partitionValues"])
+    seen_dirs = {c for fs in files_of for f in fs for c in f["partitionValues"]}
     unknown_hidden = set(hidden_partitions) - seen_dirs
     if unknown_hidden:
         raise ValueError(
@@ -935,1083 +1730,155 @@ def export_iceberg_metadata(
             f"{sorted(unknown_hidden)} (partition dirs ever used: "
             f"{sorted(seen_dirs)})"
         )
-    id_of: dict[str, int] = {}  # live name -> field id (retired on drop)
-    type_by_id: dict[int, str] = {}  # id -> latest (possibly promoted) type
-    aliases: dict[int, list[str]] = {}  # id -> names in order of use
-    ever_named: set[str] = set()  # every name that was ever live
-    applied_renames: set[str] = set()  # renamed_columns keys ever applied
-    last_column_id = 0
-    schemas: list[dict] = []  # distinct schemas, schema-id = list index
-    _schema_key_to_id: dict[tuple, int] = {}
-    event_schema_id: list[int] = []
-    col_ids_of: list[dict[str, int]] = []  # per event: name -> id
-    type_of_of: list[dict[str, str]] = []  # per event: name -> type
-    for ev in events:
-        snap_schema = table.spark.read.parquet(
-            by_version[ev["version"]]["path"]
-        ).schema
-        evf = []
-        for f in snap_schema.fields:
-            if f.name in hidden_partitions:
-                # HIDDEN partitioning (the Iceberg model the reference's
-                # `PARTITIONED BY (days(effective_start_ts))` uses,
-                # libs/scd2_spark_processor.py:151): the directory
-                # column is NOT a table column — it is a transform of a
-                # source column and lives only in the partition spec
-                continue
-            it = _iceberg_type(f.dataType.simpleString())
-            if f.name in id_of:
-                fid = id_of[f.name]
-            elif (
-                f.name in renamed_columns
-                and renamed_columns[f.name] in id_of
-            ):
-                # a rename applies only while the OLD name is live; a
-                # 'rename a->b, later drop b and re-add b' history (or
-                # a rename-back a->b->a) falls through to minting a
-                # fresh id instead of a spurious error — typo'd
-                # mappings are caught after the loop, when the old
-                # name turns out to have never existed at all
-                old = renamed_columns[f.name]
-                applied_renames.add(f.name)
-                fid = id_of.pop(old)
-                id_of[f.name] = fid
-                if f.name not in aliases[fid]:
-                    aliases[fid].append(f.name)
-            else:
-                last_column_id += 1
-                fid = last_column_id
-                id_of[f.name] = fid
-                type_by_id[fid] = it
-                aliases[fid] = [f.name]
-            if it != type_by_id[fid]:
-                if not _promotion_ok(type_by_id[fid], it):
-                    raise ValueError(
-                        f"column {f.name!r} (field id {fid}) changes "
-                        f"type {type_by_id[fid]} -> {it} in snapshot "
-                        f"v{ev['version']}; Iceberg only allows "
-                        "int->long, float->double and decimal "
-                        "precision widening"
-                    )
-                type_by_id[fid] = it
-            evf.append(
-                {"id": fid, "name": f.name, "required": False, "type": it}
-            )
-        # a rename whose OLD name still exists in the same snapshot
-        # (rename a->b while adding a new a) would alias one id to two
-        # live columns — refuse; the caller must express it as two
-        # separate commits
-        ids_used = [x["id"] for x in evf]
-        if len(set(ids_used)) != len(ids_used):
-            dup = sorted(
-                {i for i in ids_used if ids_used.count(i) > 1}
-            )
-            raise ValueError(
-                f"snapshot v{ev['version']}: renamed_columns maps a "
-                f"column whose old name is still present — field ids "
-                f"{dup} would serve two columns at once"
-            )
-        # a name absent from this snapshot is RETIRED: a later column
-        # re-added under the same name gets a fresh id, so old files'
-        # data for the dropped column can never resurface (spec rule)
-        live_names = {x["name"] for x in evf}
-        ever_named.update(live_names)
-        for n in list(id_of):
-            if n not in live_names:
-                del id_of[n]
-        key = tuple((x["id"], x["name"], x["type"]) for x in evf)
-        sid = _schema_key_to_id.get(key)
-        if sid is None:
-            sid = len(schemas)
-            schemas.append(
-                {"type": "struct", "schema-id": sid, "fields": evf}
-            )
-            _schema_key_to_id[key] = sid
-        event_schema_id.append(sid)
-        col_ids_of.append({x["name"]: x["id"] for x in evf})
-        type_of_of.append({x["name"]: x["type"] for x in evf})
-    typos = {
-        new: old
-        for new, old in renamed_columns.items()
-        if new not in applied_renames and old not in ever_named
-    }
-    if typos:
-        raise ValueError(
-            f"renamed_columns maps {typos} to old names no snapshot in "
-            f"the history ever had a live column for "
-            f"(names ever live: {sorted(ever_named)})"
-        )
+    schemas = _schema_history(
+        [
+            [(f.name, f.dataType.simpleString()) for f in schema]
+            for schema in (table.spark.read.parquet(d).schema for d in snap_dirs)
+        ],
+        [ev["version"] for ev in events],
+        hidden_partitions,
+        dict(renamed_columns or {}),
+    )
     if format_version < 3 and any(
-        f["type"] == "variant" for s in schemas for f in s["fields"]
+        f["type"] == "variant" for s in schemas.schemas for f in s["fields"]
     ):
         raise ValueError(
             "variant columns are an Iceberg format-version 3 type; "
             f"export with format_version=3 (got {format_version})"
         )
-    fields = schemas[event_schema_id[-1]]["fields"]
-    col_ids = col_ids_of[-1]
-    type_of = type_of_of[-1]
-    # spec result types for the date/time binners: day -> date (ISO
-    # dirs, epoch-day values), month/year/hour -> int (months/years/
-    # hours from epoch; hour is timestamp-only per the spec)
-    _TRANSFORM_TYPES = {
-        "day": "date",
-        "month": "int",
-        "year": "int",
-        "hour": "int",
-    }
-
-    def _spec_fields_for(pcols: list[str]) -> list[dict]:
-        spec_fields = []
-        for c in pcols:
-            if c in hidden_partitions:
-                # (source, transform) for the date binners, or
-                # (source, "bucket"|"truncate", param) for the
-                # parameterized transforms (spec: bucket[N] = murmur3 &
-                # MAX % N, truncate[W] = floor-to-W / first-W-chars)
-                hp = tuple(hidden_partitions[c])
-                source_col, transform = hp[0], hp[1]
-                param = hp[2] if len(hp) > 2 else None
-                if source_col not in col_ids:
-                    raise ValueError(
-                        f"hidden partition {c!r} names unknown source "
-                        f"column {source_col!r}"
-                    )
-                if transform in _TRANSFORM_TYPES:
-                    if transform == "hour" and type_of[source_col] not in (
-                        "timestamp",
-                        "timestamptz",
-                    ):
-                        raise ValueError(
-                            f"hour transform for {c!r} needs a timestamp "
-                            f"source (got {type_of[source_col]!r})"
-                        )
-                    tname, ttype = transform, _TRANSFORM_TYPES[transform]
-                elif transform == "bucket":
-                    if not isinstance(param, int) or param <= 0:
-                        raise ValueError(
-                            f"bucket transform for {c!r} needs a positive "
-                            f"bucket count, got {param!r}"
-                        )
-                    tname, ttype = f"bucket[{param}]", "int"
-                elif transform == "truncate":
-                    if not isinstance(param, int) or param <= 0:
-                        raise ValueError(
-                            f"truncate transform for {c!r} needs a "
-                            f"positive width, got {param!r}"
-                        )
-                    src_type = type_of[source_col]
-                    if src_type not in ("int", "long", "string"):
-                        raise NotImplementedError(
-                            f"truncate over source type {src_type!r}"
-                        )
-                    tname, ttype = f"truncate[{param}]", src_type
-                else:
-                    raise NotImplementedError(
-                        f"partition transform {transform!r} (only "
-                        f"{sorted(_TRANSFORM_TYPES) + ['bucket', 'truncate']})"
-                    )
-                spec_fields.append(
-                    {
-                        "name": c,
-                        "transform": tname,
-                        "source-id": col_ids[source_col],
-                        "type": ttype,
-                    }
-                )
-            else:
-                if c not in col_ids:
-                    raise ValueError(
-                        f"partition column {c!r} (used by an earlier "
-                        "snapshot's layout) is not in the latest "
-                        "schema; dropping a partitioned column is not "
-                        "supported"
-                    )
-                spec_fields.append(
-                    {
-                        "name": c,
-                        "transform": "identity",
-                        "source-id": col_ids[c],
-                        # convenience for _entry_schema; stripped below
-                        "type": type_of[c],
-                    }
-                )
-        return spec_fields
-
-    # SPEC REGISTRY: each distinct partition layout gets a spec-id in
-    # order of first appearance (chronological, like real Iceberg);
-    # partition field-ids start at 1000 and are NEVER reused for a
-    # different (name, transform, source) — and an equivalent field in
-    # a later spec KEEPS its id — the v2 rules for spec evolution
-    specs: list[list[dict]] = []
-    _spec_ids: dict[tuple, int] = {}
-    _pfield_ids: dict[tuple, int] = {}
-    _entry_schemas: dict[int, dict] = {}
-
-    def _resolve_spec(pcols: list[str]) -> int:
-        sfs = _spec_fields_for(list(pcols))
-        key = tuple((f["name"], f["transform"], f["source-id"]) for f in sfs)
-        sid = _spec_ids.get(key)
-        if sid is None:
-            for f in sfs:
-                fkey = (f["name"], f["transform"], f["source-id"])
-                if fkey not in _pfield_ids:
-                    _pfield_ids[fkey] = 1000 + len(_pfield_ids)
-                f["field-id"] = _pfield_ids[fkey]
-            sid = len(specs)
-            specs.append(sfs)
-            _spec_ids[key] = sid
-        return sid
-
-    def _entry_schema_of(sid: int) -> dict:
-        if sid not in _entry_schemas:
-            _entry_schemas[sid] = _entry_schema(specs[sid], format_version)
-        return _entry_schemas[sid]
-
     if upsert_key is not None:
-        bad = [k for k in upsert_key if k not in col_ids]
+        bad = [k for k in upsert_key if k not in schemas.col_ids[-1]]
         if bad:
             raise ValueError(f"upsert_key columns {bad} not in table schema")
+    x = _IcebergExport(
+        table,
+        meta_dir,
+        format_version,
+        hidden_partitions,
+        upsert_key,
+        schemas,
+        _SpecRegistry(hidden_partitions, format_version),
+        MorBase(table.root),
+    )
     list_schema = _manifest_list_schema(format_version)
-
     snapshots = []
-    snapshot_log = []
-    # MoR export state (v2): the physical dir + manifest-list rows of
-    # the last full-rewrite snapshot, the delete dirs stacked on it
-    # since, and its current LOGICAL row count under those masks.
-    prev_rows: list[dict] = []
-    base_dir: str | None = None
-    base_spec_id: int = 0  # spec of the last full-rewrite snapshot
-    delete_dirs: list[str] = []
-    # incremental-append delta dirs stacked on the base since the last
-    # full rewrite — part of the live file set alongside base_dir
-    append_dirs: list[str] = []
-    base_live_rows: int | None = None
-    # v3 DV state: cumulative per-file deletion-vector BODY bytes
-    # (magic + portable roaring64) + cardinality, keyed by absolute
-    # data-file path (a new DV REPLACES the prior one for that file,
-    # per the spec's at-most-one-DV-per-data-file rule — same replace
-    # semantics as Delta's cumulative descriptors), kept for Puffin
-    # framing and the minor-compaction re-emit. Bitmaps are built and
-    # merged EXECUTOR-side (operators/dv_kernel.py); the driver holds
-    # only compressed-bitmap bytes, never row positions. The positions
-    # themselves stay executor-side as the union of each DV commit's
-    # pinned diff since the last rewrite (`dv_deleted`): the mask for
-    # the next diff and the prior state of a re-folded file.
-    dv_state: dict[str, tuple[bytes, int]] = {}
-    dv_deleted = None
-    # v2: rows in the stacked positional delete files (their footers)
-    delete_rows = 0
-    # v3 row lineage: the table's next _row_id to assign
-    next_row_id = 0
-    written_delete_dirs: set[str] = set()
-    written_upsert_dirs: set[str] = set()
-    written_append_dirs: set[str] = set()
-    written_manifests: set[str] = set()
-    verified_unique: set[str] = set()  # PK-probed snapshot dirs (upserts)
-    base_schema_sid: int = 0  # schema of the last full-rewrite snapshot
-    # spec SORT ORDERS: order-0 = unsorted. A snapshot committed by
-    # maintenance.rewrite_data_files_sorted (strategy "sort") declares
-    # its lexicographic order in the "sort-by" property; the exporter
-    # registers it as a real sort-orders entry, stamps the snapshot's
-    # ADDED data files with sort_order_id (field 140), and makes it the
-    # table's default write order (ALTER TABLE ... WRITE ORDERED BY
-    # semantics — the order persists until a later rewrite replaces
-    # it). Z-ORDER rewrites stay summary-only: the spec's sort-order
-    # transforms cannot express bit interleaving, so real engines also
-    # record z-order only in the rewrite's summary.
-    sort_orders: list[dict] = [{"order-id": 0, "fields": []}]
-    _order_key_to_id: dict[str, int] = {}
-    default_sort_order_id = 0
     for i, ev in enumerate(events):
-        snap = by_version[ev["version"]]
-        snapshot_id = i + 1
-        seq = i + 1
-        # stats / spec resolution / equality ids for files written in
-        # THIS event use the event's own schema (names may differ from
-        # the current schema after a rename); field ids are stable
-        col_ids = col_ids_of[i]
-        type_of = type_of_of[i]
-        snap_first_row_id = next_row_id  # v3 row lineage
-        list_path = os.path.join(
-            meta_dir, f"snap-{snapshot_id}-1-manifest-list.avro"
-        )
-        files = _snapshot_files(table.root, snap["path"])
-
+        props = by_version[ev["version"]].get("properties") or {}
+        files = files_of[i]
         # compaction snapshots (operators/maintenance.py compact_snapshot)
         # fold accumulated delete files back into rewritten data: always
-        # the full-rewrite branch, summary operation "replace" (what
+        # the full-rewrite commit, summary operation "replace" (what
         # Iceberg's rewrite_data_files emits), never a diffed commit.
         # If vacuum expired the whole ancestry, the compaction IS the
         # first exported snapshot — a creation "overwrite", not a
         # "replace" of nothing.
-        is_compaction = i > 0 and (
-            (snap.get("properties") or {}).get("operation") == "compaction"
-        )
+        is_compaction = i > 0 and props.get("operation") == "compaction"
         # rewrite-deletes snapshots (maintenance.py rewrite_delete_files)
         # are MINOR compactions: data manifests reused untouched, the
         # stacked delete state consolidated into ONE delete manifest —
         # Iceberg's rewrite_position_delete_files. Only meaningful under
-        # a MoR dialect; v1 (no deletes) falls through to the rewrite
-        # branch.
+        # a MoR dialect; v1 (no deletes) falls through to the rewrite.
         is_minor = (
             i > 0
             and upsert_key is None
             and format_version >= 2
-            and (snap.get("properties") or {}).get("operation")
-            == "rewrite-deletes"
+            and props.get("operation") == "rewrite-deletes"
         )
-        # sorted-rewrite commits declare their order; resolve column
-        # names under THIS snapshot's schema (field ids are stable)
-        snap_sort_order_id = 0
-        _sort_by = (snap.get("properties") or {}).get("sort-by")
-        if (
-            format_version >= 2
-            and _sort_by
-            and (snap.get("properties") or {}).get("strategy") == "sort"
-        ):
-            _flds = []
-            for c, d in json.loads(_sort_by):
-                if c not in col_ids:
-                    _flds = []  # column unknown at this snapshot: skip
-                    break
-                _flds.append(
-                    {
-                        "transform": "identity",
-                        "source-id": col_ids[c],
-                        "direction": d,
-                        "null-order": (
-                            "nulls-first" if d == "asc" else "nulls-last"
-                        ),
-                    }
-                )
-            if _flds:
-                _okey = json.dumps(_flds, sort_keys=True)
-                _oid = _order_key_to_id.get(_okey)
-                if _oid is None:
-                    _oid = len(sort_orders)
-                    sort_orders.append(
-                        {"order-id": _oid, "fields": _flds}
-                    )
-                    _order_key_to_id[_okey] = _oid
-                snap_sort_order_id = _oid
-                default_sort_order_id = _oid
+        sort_order_id = x.sort_order(props, schemas.col_ids[i])
+        first_row_id = x.next_row_id  # v3 row lineage
         upsert = None
         if upsert_key is not None and i > 0 and not is_compaction:
-            parent_dir = by_version[events[i - 1]["version"]]["path"]
-            if os.path.isdir(parent_dir):
+            if os.path.isdir(snap_dirs[i - 1]):
                 changed, del_keys = _upsert_diff(
                     table.spark,
-                    parent_dir,
-                    snap["path"],
+                    snap_dirs[i - 1],
+                    snap_dirs[i],
                     upsert_key,
-                    verified_unique=verified_unique,
+                    verified_unique=x.verified_unique,
                 )
                 if changed is not None:
                     upsert = (changed, del_keys)
-
-        # per-file footer row counts feed only the positional-delete
-        # precheck and the rewrite branch's record_count — skip the
-        # O(files) driver-side footer reads on upsert commits
+        # per-file footer row counts feed only the incremental diffs and
+        # the rewrite's record_count — skip the O(files) driver-side
+        # footer reads on upsert commits
         file_rows = _footer_rows(table.root, files) if upsert is None else []
         total_rc = sum(file_rows)
-
-        if is_minor and base_dir is not None and base_live_rows is not None:
-            if total_rc != base_live_rows:
-                raise ValueError(
-                    f"snapshot v{ev['version']} is flagged "
-                    f"operation=rewrite-deletes but changes the row "
-                    f"count ({base_live_rows} -> {total_rc}); minor "
-                    "compaction must not change the table's data"
-                )
-        def _prior_deletes():
-            """The accumulated delete state as a (file_path, pos)
-            DataFrame, or None, and its row count — the mask both
-            incremental diffs apply to the base before comparing
-            against the child."""
-            if format_version >= 3:
-                return dv_deleted, sum(c for _b, c in dv_state.values())
-            return _read_position_deletes(table.spark, delete_dirs), delete_rows
-
-        def _write_manifest(suffix, spec_id, data_files, first_row_id=None):
-            """Write this snapshot's manifest `m-{i}{suffix}.avro` of
-            ADDED `data_files` under `spec_id`; return its list row."""
-            path = os.path.join(meta_dir, f"m-{i:05d}{suffix}.avro")
-            write_avro(
-                path,
-                _entry_schema_of(spec_id),
-                [
-                    _manifest_entry(d, format_version, snapshot_id)
-                    for d in data_files
-                ],
+        if is_minor and x.base.live_rows not in (None, total_rc):
+            raise ValueError(
+                f"snapshot v{ev['version']} is flagged "
+                f"operation=rewrite-deletes but changes the row "
+                f"count ({x.base.live_rows} -> {total_rc}); minor "
+                "compaction must not change the table's data"
             )
-            return _manifest_list_row(
-                path,
-                os.path.getsize(path),
-                spec_id,
-                snapshot_id,
-                seq,
-                data_files,
-                format_version,
-                first_row_id,
-            )
-
-        deleted = None
-        appended = None
-        can_incremental = (
+        # both diffs validate themselves against the footer totals and
+        # return None when the transition is not a pure delete/append.
+        # SCHEMA EVOLUTION: they compare row multisets against the base —
+        # only sound under the base's exact schema
+        deleted = appended = None
+        if (
             upsert_key is None
             and not is_compaction
             and not is_minor
-            and base_dir is not None
-            and os.path.isdir(base_dir)
-            and all(os.path.isdir(d) for d in append_dirs)
-            and base_live_rows is not None
-            # SCHEMA EVOLUTION: the incremental diffs compare row
-            # multisets against the base — only sound under the base's
-            # exact schema; a schema-changing snapshot full-rewrites
-            and event_schema_id[i] == base_schema_sid
-        )
-        # both diffs validate themselves against the footer totals and
-        # return None when the transition is not a pure delete/append
-        if (
-            can_incremental
-            and format_version >= 2
-            and total_rc < base_live_rows
+            and x.base.ready()
+            and schemas.schema_ids[i] == x.base_schema_sid
         ):
-            mask, mask_rows = _prior_deletes()
-            deleted = _position_delete_diff(
-                table.spark,
-                [base_dir, *append_dirs],
-                mask,
-                snap["path"],
-                base_live_rows,
-                total_rc,
-                mask_rows=mask_rows,
-            )
-        elif can_incremental and total_rc > base_live_rows:
-            # incremental APPEND (all format versions, v1 included):
-            # if the child is the masked base plus new rows, export
-            # only the delta — killing the O(table-files)-per-commit
-            # metadata growth of the full-rewrite model on
-            # append-heavy histories
-            mask, mask_rows = _prior_deletes()
-            appended = _append_diff(
-                table.spark,
-                [base_dir, *append_dirs],
-                mask,
-                snap["path"],
-                base_live_rows,
-                total_rc,
-                mask_rows=mask_rows,
-            )
-
+            if format_version >= 2 and total_rc < x.base.live_rows:
+                deleted = x.base.delete_diff(table.spark, snap_dirs[i], total_rc)
+            elif total_rc > x.base.live_rows:
+                # incremental APPEND (all format versions, v1 included)
+                appended = x.base.append_diff(table.spark, snap_dirs[i], total_rc)
         if upsert is not None:
-            # --- equality-delete upsert commit (Flink dialect). On a
-            # partitioned table the appended data files are laid out
-            # under the base spec — identity dir columns ride along
-            # from the snapshot read; HIDDEN-transform dir columns
-            # (days/month/year/bucket/truncate) are re-derived from
-            # their source column with the spec-exact expression, so a
-            # days(effective_start_ts)-partitioned SCD2 table (the
-            # reference's own layout) exports with typed partition
-            # structs per entry. The key-tuple delete files stay
-            # UNPARTITIONED and their manifest uses an unpartitioned
-            # spec — the spec's global-equality-delete scoping, so a
-            # primary key that MOVES partitions (an SCD2 update lands
-            # its current row on a new day) is still masked
-            # everywhere. ---
-            changed, del_keys = upsert
-            base_spec_fields = specs[base_spec_id]
-            base_pcols = [sf["name"] for sf in base_spec_fields]
-            for sf in base_spec_fields:
-                if sf["transform"] == "identity":
-                    continue
-                hp = tuple(hidden_partitions[sf["name"]])
-                src_col = hp[0]
-                if hp[1] == "bucket":
-                    # staged-column murmur3: the Column form's
-                    # duplicated rounds blow up the partitioned write's
-                    # sort codegen (see with_bucket_column)
-                    from .iceberg_transforms import with_bucket_column
-
-                    changed = with_bucket_column(
-                        changed,
-                        sf["name"],
-                        src_col,
-                        int(hp[2]),
-                        type_of[src_col],
-                    )
-                else:
-                    changed = changed.withColumn(
-                        sf["name"],
-                        _hidden_transform_col(
-                            src_col,
-                            hp[1],
-                            hp[2] if len(hp) > 2 else None,
-                            type_of[src_col],
-                        ),
-                    )
-            ups_dir = os.path.join(table.root, "upserts", f"s{snapshot_id:05d}")
-            data_files = _write_upsert_files(
-                table.spark,
-                changed,
-                os.path.join(ups_dir, "data"),
-                "data",
-                pcols=base_pcols,
-            )
-            del_files = _write_upsert_files(
-                table.spark, del_keys, os.path.join(ups_dir, "eqdel"), "eqdel"
-            )
-            if os.path.isdir(ups_dir):
-                written_upsert_dirs.add(f"s{snapshot_id:05d}")
-            manifest_rows = list(prev_rows)
-            if data_files:
-                first_row_id = next_row_id
-                added, next_row_id = _added_data_files(
-                    data_files,
-                    base_spec_fields,
-                    col_ids,
-                    type_of,
-                    format_version,
-                    next_row_id,
-                )
-                manifest_rows.append(
-                    _write_manifest("-ups", base_spec_id, added, first_row_id)
-                )
-            if del_files:
-                eq_ids = [col_ids[k] for k in upsert_key]
-                # global equality deletes: the manifest uses an
-                # UNPARTITIONED spec (minted on first use), so the
-                # keys mask across every partition per the spec rule
-                manifest_rows.append(
-                    _write_manifest(
-                        "-del",
-                        _resolve_spec([]),
-                        [
-                            {
-                                "content": 2,  # EQUALITY DELETES
-                                "file_path": d["path"],
-                                "file_format": "PARQUET",
-                                "partition": {},
-                                "record_count": d["record_count"],
-                                "file_size_in_bytes": d["size"],
-                                "equality_ids": eq_ids,
-                            }
-                            for d in del_files
-                        ],
-                    )
-                )
-            operation = "overwrite" if del_files else "append"
+            rows, operation = _upsert_commit(x, i, *upsert)
         elif format_version >= 3 and (
-            deleted is not None or (is_minor and dv_state)
+            deleted is not None or (is_minor and x.base.dv)
         ):
-            # --- v3 merge-on-read delete snapshot: DELETION VECTORS in
-            # a Puffin file (spec v3 forbids new positional-delete
-            # parquet). One cumulative DV per touched data file; the
-            # new delete manifest REPLACES all prior delete manifests
-            # in the manifest list (at most one DV per data file). The
-            # bitmaps are merged with the positions deleted since the
-            # last rewrite and serialized ON the executors by the
-            # JVM-only encoder shared with the Delta exporter
-            # (operators/dv_kernel.py — same magic+roaring64 body
-            # bytes); the driver receives only (file, blob,
-            # cardinality) per touched file and does the O(files)
-            # Puffin container assembly. ---
-            from .dv_kernel import dv_blobs_by_file
-            from .puffin import DELETION_VECTOR_V1, frame_dv_v1, write_puffin
-
-            if deleted is not None:
-                dv_state.update(
-                    {
-                        r["file_path"]: (
-                            bytes(r["blob"]),
-                            int(r["cardinality"]),
-                        )
-                        for r in dv_blobs_by_file(deleted, dv_deleted)
-                    }
-                )
-                dv_deleted = (
-                    deleted
-                    if dv_deleted is None
-                    else dv_deleted.unionByName(deleted)
-                )
-            # else (minor compaction): re-emit the cumulative DV state
-            # as one fresh Puffin file — k stacked DV files become one
-            base_by_abs = {
-                os.path.abspath(
-                    os.path.join(table.root, urllib.parse.unquote(f["path"]))
-                ): f
-                for d in [base_dir, *append_dirs]
-                for f in _snapshot_files(table.root, d)
-            }
-            sdir = os.path.join(table.root, "deletes", f"s{snapshot_id:05d}")
-            if os.path.isdir(sdir):
-                # a prior v2 export of this snapshot left positional
-                # delete parquet here; the fv3 upgrade supersedes it —
-                # clear the dir so no orphaned delete files linger
-                shutil.rmtree(sdir)
-            os.makedirs(sdir, exist_ok=True)
-            puffin_path = os.path.join(sdir, f"dv-{snapshot_id:05d}.puffin")
-            touched = sorted(dv_state)
-            blobs = [
-                {
-                    "type": DELETION_VECTOR_V1,
-                    "data": frame_dv_v1(dv_state[p][0]),
-                    "snapshot-id": snapshot_id,
-                    "sequence-number": seq,
-                    "properties": {
-                        "referenced-data-file": p,
-                        "cardinality": str(dv_state[p][1]),
-                    },
-                }
-                for p in touched
-            ]
-            blob_metas = write_puffin(puffin_path, blobs)
-            puffin_size = os.path.getsize(puffin_path)
-            base_spec_fields = specs[base_spec_id]
-            dv_files = []
-            for p, bm in zip(touched, blob_metas):
-                bf = base_by_abs.get(p)
-                if bf is None:
-                    raise RuntimeError(
-                        f"diff produced positions for unknown file {p}"
-                    )
-                dv_files.append(
-                    {
-                        "content": 1,  # POSITION DELETES (as a DV)
-                        "file_path": puffin_path,
-                        "file_format": "PUFFIN",
-                        "partition": _partition_tuple(
-                            base_spec_fields, bf["partitionValues"]
-                        ),
-                        "record_count": dv_state[p][1],
-                        "file_size_in_bytes": puffin_size,
-                        "referenced_data_file": p,
-                        "content_offset": bm["offset"],
-                        "content_size_in_bytes": bm["length"],
-                    }
-                )
-            # REPLACE semantics: parent DATA manifests ride along, prior
-            # delete manifests are dropped (their DVs are superseded)
-            manifest_rows = [
-                r for r in prev_rows if (r.get("content") or 0) == 0
-            ] + [_write_manifest("-del", base_spec_id, dv_files)]
-            written_delete_dirs.add(os.path.basename(sdir))
-            base_live_rows = total_rc
-            operation = "replace" if is_minor else "delete"
-        elif deleted is not None or (
-            is_minor and delete_dirs and format_version == 2
-        ):
-            # --- merge-on-read delete snapshot (v2 positional), or its
-            # MINOR compaction: the stacked delete dirs rewritten into
-            # one consolidated, still-partition-scoped file set ---
-            if deleted is None:
-                deleted = _read_position_deletes(table.spark, delete_dirs)
-            ddir = os.path.join(table.root, "deletes", f"s{snapshot_id:05d}")
-            base_spec_fields = specs[base_spec_id]
-            file_partitions = None
-            if base_spec_fields:
-                # partition-scoped delete files (the spec's rule): map
-                # each live data file (base + append deltas) to its raw
-                # partition values so the delete rows can be routed by
-                # partitionBy
-                base_files = [
-                    f
-                    for d in [base_dir, *append_dirs]
-                    for f in _snapshot_files(table.root, d)
-                ]
-                rows = [
-                    tuple(
-                        [
-                            os.path.join(
-                                table.root, urllib.parse.unquote(f["path"])
-                            )
-                        ]
-                        + [
-                            f["partitionValues"].get(sf["name"])
-                            for sf in base_spec_fields
-                        ]
-                    )
-                    for f in base_files
-                ]
-                file_partitions = local_frame(
-                    table.spark,
-                    rows,
-                    ", ".join(
-                        ["file_path string"]
-                        + [f"{sf['name']} string" for sf in base_spec_fields]
-                    ),
-                )
-            dfiles = _write_position_deletes(
-                table.spark,
-                deleted,
-                ddir,
-                file_partitions=file_partitions,
-                pcols=[sf["name"] for sf in base_spec_fields],
-            )
-            row = _write_manifest(
-                "-del",
-                base_spec_id,
-                [
-                    {
-                        "content": 1,  # POSITION DELETES
-                        "file_path": d["path"],
-                        "file_format": "PARQUET",
-                        "partition": _partition_tuple(
-                            base_spec_fields, d["partition"]
-                        ),
-                        "record_count": d["record_count"],
-                        "file_size_in_bytes": d["size"],
-                    }
-                    for d in dfiles
-                ],
-            )
-            # manifest REUSE: the parent's manifests ride along verbatim,
-            # keeping their original sequence numbers for inheritance.
-            # A minor compaction instead REPLACES the stacked delete
-            # manifests with the consolidated one (data manifests only
-            # ride along).
-            if is_minor:
-                manifest_rows = [
-                    r for r in prev_rows if (r.get("content") or 0) == 0
-                ] + [row]
-                delete_dirs = [ddir]
-                delete_rows = 0
-            else:
-                manifest_rows = prev_rows + [row]
-                delete_dirs.append(ddir)
-            delete_rows += sum(d["record_count"] for d in dfiles)
-            written_delete_dirs.add(os.path.basename(ddir))
-            base_live_rows = total_rc
-            operation = "replace" if is_minor else "delete"
-        elif is_minor and base_dir is not None and prev_rows:
-            # minor compaction with nothing to consolidate (no live
-            # delete state): a pure metadata snapshot — parent manifests
-            # verbatim, no data movement
-            manifest_rows = list(prev_rows)
-            operation = "replace"
+            rows, operation = _dv_commit(x, i, deleted, total_rc)
+        elif deleted is not None or (is_minor and x.base.deleted is not None):
+            rows, operation = _positional_commit(x, i, deleted, total_rc)
+        elif is_minor and x.base.dirs and x.prev_rows:
+            # minor compaction with nothing to consolidate: a pure
+            # metadata snapshot — parent manifests verbatim
+            rows, operation = list(x.prev_rows), "replace"
         elif appended is not None:
-            # --- incremental APPEND commit (v1, v2 and v3): the
-            # parent's manifests ride along VERBATIM (keeping their
-            # sequence numbers / snapshot ids) and ONE delta manifest
-            # adds only the new rows, written under the base spec's
-            # layout. Metadata per commit is O(delta files), not
-            # O(table files) — an N-commit append history's tree grows
-            # O(N + total delta files). ---
-            adir = os.path.join(table.root, "appends", f"s{snapshot_id:05d}")
-            base_spec_fields = specs[base_spec_id]
-            first_row_id = next_row_id
-            added, next_row_id = _added_data_files(
-                _write_append_files(
-                    appended, adir, [sf["name"] for sf in base_spec_fields]
-                ),
-                base_spec_fields,
-                col_ids,
-                type_of,
-                format_version,
-                next_row_id,
-            )
-            manifest_rows = prev_rows + [
-                _write_manifest("-app", base_spec_id, added, first_row_id)
-            ]
-            if os.path.isdir(adir):
-                written_append_dirs.add(os.path.basename(adir))
-                append_dirs.append(adir)
-            base_live_rows = total_rc
-            operation = "append"
+            rows, operation = _append_commit(x, i, appended, total_rc)
         else:
-            # --- full-rewrite snapshot (layout changes, modified rows,
-            # compaction; v1 deletes) ---
             if is_compaction:
                 _check_compaction_rows(
-                    table.root,
-                    by_version[events[i - 1]["version"]]["path"],
-                    files,
-                    ev["version"],
-                    total_rc,
+                    table.root, snap_dirs[i - 1], files, ev["version"], total_rc
                 )
-            # PARTITION-SPEC EVOLUTION: this snapshot's own directory
-            # layout decides its spec — a rewrite (or compaction) that
-            # repartitions the table registers a new spec-id; manifests
-            # of unchanged layout reuse the existing one
-            pcols_i = next(
-                (
-                    list(f["partitionValues"])
-                    for f in files
-                    if f["partitionValues"]
-                ),
-                [],
+            rows, operation = _rewrite_commit(
+                x, i, snap_dirs[i], files, file_rows, is_compaction, sort_order_id
             )
-            sid_spec = _resolve_spec(pcols_i)
-            first_row_id = next_row_id
-            added, next_row_id = _added_data_files(
-                [
-                    {
-                        "path": os.path.join(
-                            table.root, urllib.parse.unquote(f["path"])
-                        ),
-                        "record_count": rc,
-                        "size": f["size"],
-                        "partition": f["partitionValues"],
-                    }
-                    for f, rc in zip(files, file_rows)
-                ],
-                specs[sid_spec],
-                col_ids,
-                type_of,
-                format_version,
-                next_row_id,
-                sort_order_id=snap_sort_order_id,
-            )
-            manifest_rows = [
-                _write_manifest("", sid_spec, added, first_row_id)
-            ]
-            base_dir = snap["path"]
-            base_spec_id = sid_spec
-            base_schema_sid = event_schema_id[i]
-            delete_dirs = []
-            delete_rows = 0
-            append_dirs = []
-            dv_state = {}
-            dv_deleted = None
-            base_live_rows = total_rc
-            operation = "replace" if is_compaction else "overwrite"
-
-        write_avro(list_path, list_schema, manifest_rows)
-        written_manifests.update(
-            os.path.basename(r["manifest_path"]) for r in manifest_rows
-        )
-        rows_before = prev_rows
-        prev_rows = manifest_rows
-        summary = {"operation": operation}
-        for k, v in (snap.get("properties") or {}).items():
-            if k == "operation":
-                continue  # internal flag; the spec operation is computed
-            summary[str(k)] = str(v)
-        if format_version >= 2:
-            # spec-standard summary counters (what engines surface in
-            # DESCRIBE HISTORY / $snapshots): derived from the manifest
-            # rows' own counts — a manifest's live content is its
-            # added + existing entries
-            def _tot(rows_, content):
-                fs = rs = 0
-                for r in rows_:
-                    if (r.get("content") or 0) != content:
-                        continue
-                    fs += (r.get("added_files_count") or 0) + (
-                        r.get("existing_files_count") or 0
-                    )
-                    rs += (r.get("added_rows_count") or 0) + (
-                        r.get("existing_rows_count") or 0
-                    )
-                return fs, rs
-
-            def _added(rows_, content):
-                fs = rs = 0
-                for r in rows_:
-                    if (r.get("content") or 0) != content:
-                        continue
-                    if r.get("added_snapshot_id") != snapshot_id:
-                        continue
-                    fs += r.get("added_files_count") or 0
-                    rs += r.get("added_rows_count") or 0
-                return fs, rs
-
-            tdf, tdr = _tot(manifest_rows, 0)
-            tvf, tvr = _tot(manifest_rows, 1)
-            adf, adr = _added(manifest_rows, 0)
-            avf, avr = _added(manifest_rows, 1)
-            carried = {
-                r["manifest_path"] for r in manifest_rows
-            }
-            pdf, pdr = _tot(
-                [r for r in rows_before if r["manifest_path"] not in carried],
-                0,
-            )
-            flavor = (
-                "equality" if upsert_key is not None else "position"
-            )
-            summary.update(
-                {
-                    "added-data-files": str(adf),
-                    "added-records": str(adr),
-                    "added-delete-files": str(avf),
-                    f"added-{flavor}-deletes": str(avr),
-                    "deleted-data-files": str(pdf),
-                    "deleted-records": str(pdr),
-                    "total-data-files": str(tdf),
-                    "total-records": str(tdr),
-                    "total-delete-files": str(tvf),
-                    f"total-{flavor}-deletes": str(tvr),
-                }
-            )
+        list_path = os.path.join(meta_dir, f"snap-{i + 1}-1-manifest-list.avro")
+        write_avro(list_path, list_schema, rows)
         s = {
-            "snapshot-id": snapshot_id,
+            "snapshot-id": i + 1,
             "timestamp-ms": ev["at_ms"],
-            "summary": summary,
+            "summary": _snapshot_summary(
+                operation,
+                props,
+                rows,
+                x.prev_rows,
+                i + 1,
+                format_version,
+                "equality" if upsert_key is not None else "position",
+            ),
             "manifest-list": list_path,
-            "schema-id": event_schema_id[i],
+            "schema-id": schemas.schema_ids[i],
         }
         if format_version >= 2:
-            s["sequence-number"] = seq
+            s["sequence-number"] = i + 1
         if format_version >= 3:
-            s["first-row-id"] = snap_first_row_id
-            s["added-rows"] = next_row_id - snap_first_row_id
+            s["first-row-id"] = first_row_id
+            s["added-rows"] = x.next_row_id - first_row_id
         if i > 0:
             s["parent-snapshot-id"] = i
         snapshots.append(s)
-        snapshot_log.append(
-            {"snapshot-id": snapshot_id, "timestamp-ms": ev["at_ms"]}
-        )
+        x.prev_rows = rows
 
-    # NAME MAPPING (spec "Name Mapping Serialization"): Spark-written
-    # data files carry no parquet field ids, so a rename would orphan
-    # the old files' columns — the mapping lists every historical alias
-    # per field id. A name reused by a DIFFERENT field later (drop +
-    # re-add) binds to its CURRENT field only; the retired alias is
-    # omitted (per-snapshot read schemas resolve those directly by
-    # name, and the re-add transition full-rewrote the live files).
-    name_mapping = []
-    claimed = {f["name"]: f["id"] for f in fields}
-    for fid in sorted(aliases):
-        names = []
-        for nm in aliases[fid]:
-            owner = claimed.get(nm)
-            if owner is None or owner == fid:
-                names.append(nm)
-                claimed[nm] = fid
-        if names:
-            name_mapping.append({"field-id": fid, "names": names})
-    metadata = {
-        "format-version": format_version,
-        "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, table.root)),
-        "location": table.root,
-        "last-updated-ms": events[-1]["at_ms"],
-        "last-column-id": last_column_id,
-        "schema": schemas[event_schema_id[-1]],
-        "schemas": schemas,
-        "current-schema-id": event_schema_id[-1],
-        # default spec = the layout of the last full rewrite (the
-        # table's CURRENT write spec); all historical specs are listed
-        # so readers can type/prune each manifest under the spec its
-        # files were written with
-        "partition-spec": [
-            {k: v for k, v in sf.items() if k != "type"}
-            for sf in specs[base_spec_id]
-        ],
-        "partition-specs": [
-            {
-                "spec-id": sid,
-                "fields": [
-                    {k: v for k, v in sf.items() if k != "type"}
-                    for sf in sfs
-                ],
-            }
-            for sid, sfs in enumerate(specs)
-        ],
-        "default-spec-id": base_spec_id,
-        "last-partition-id": max(_pfield_ids.values(), default=999),
-        "properties": {
-            "schema.name-mapping.default": json.dumps(name_mapping)
-        },
-        "current-snapshot-id": snapshots[-1]["snapshot-id"],
-        "snapshots": snapshots,
-        "snapshot-log": snapshot_log,
-        "metadata-log": [],
-    }
-    if format_version >= 2:
-        metadata["last-sequence-number"] = len(events)
-        metadata["sort-orders"] = sort_orders
-        metadata["default-sort-order-id"] = default_sort_order_id
-    if format_version >= 3:
-        # v3 row lineage: the next _row_id a future commit may assign
-        metadata["next-row-id"] = next_row_id
-    # branch refs (spec `refs`): the exported branch tracks the current
-    # snapshot under its own name, and every OTHER SnapshotTable branch
-    # whose head version exists in this exported chain gets a branch
-    # ref at that snapshot — the Iceberg spelling of the Nessie-style
-    # zero-copy branches (reference README.MD:308-313). A branch whose
-    # head is NOT in the chain (an unpublished WAP stage) is simply
-    # absent, preserving WAP invisibility.
-    # metadata-log (spec): pointers to the PREVIOUS metadata files still
-    # on disk, oldest first — how external engines walk table-metadata
-    # history. Each entry's timestamp is that file's own last-updated-ms.
-    n_events = len(events)
-    mlog = []
-    for k in range(1, n_events):
-        prev_path = os.path.join(meta_dir, f"v{k}.metadata.json")
-        if os.path.exists(prev_path):
-            try:
-                with open(prev_path) as fh:
-                    prev_ts = json.load(fh).get("last-updated-ms", 0)
-            except ValueError:
-                continue
-            mlog.append(
-                {"timestamp-ms": prev_ts, "metadata-file": prev_path}
-            )
-    metadata["metadata-log"] = mlog
-    version_to_sid = {ev["version"]: i + 1 for i, ev in enumerate(events)}
-    refs = {branch: {"snapshot-id": snapshots[-1]["snapshot-id"], "type": "branch"}}
-    all_heads = dict(m.get("branches") or {})
-    if m.get("current") is not None:
-        all_heads["main"] = m["current"]
-    for b, head in all_heads.items():
-        if b == branch:
-            continue
-        sid = version_to_sid.get(head)
-        if sid is not None:
-            refs[b] = {"snapshot-id": sid, "type": "branch"}
-    metadata["refs"] = refs
-    write_metadata_version(meta_dir, metadata, n_events)
-    # A vacuum can SHRINK the pointer history; files from a longer
-    # pre-vacuum export (higher metadata versions, manifests for dropped
-    # snapshots) are unreferenced by the new hint but would reference
-    # deleted data — remove them, the catalog-GC step a real Iceberg
-    # deployment runs.
-    for f in os.listdir(meta_dir):
-        stale = (
-            (re.match(r"^m-\d+(-del|-ups|-app)?\.avro$", f) and f not in written_manifests)
-            or (f.startswith("snap-") and f.endswith(".avro")
-                and f.split("-")[1].isdigit()
-                and int(f.split("-")[1]) > n_events)
-            # foreign (catalog-committed) staged manifests + manifest
-            # lists: GC'd ONLY under the drop_foreign_commits opt-in —
-            # a staged-but-not-yet-committed external append must
-            # survive a routine re-export (the docstring's contract);
-            # with the opt-in, the foreign snapshots were just dropped
-            # and their staging goes with them
-            or (
-                drop_foreign_commits
-                and f.startswith(("m-staged-", "snap-staged-"))
-            )
-            or (f.startswith("v") and f.endswith(".metadata.json")
-                and f[1:-14].isdigit() and int(f[1:-14]) > n_events)
-            # statistics puffins: regeneration drops the `statistics`
-            # field, so any stats file is now unreferenced — GC it;
-            # re-run export_iceberg_statistics to restore stats
-            or (f.startswith("stats-") and f.endswith(".puffin"))
-        )
-        if stale:
-            os.remove(os.path.join(meta_dir, f))
-    staged_root = os.path.join(table.root, "staged")
-    if drop_foreign_commits and os.path.isdir(staged_root):
-        shutil.rmtree(staged_root, ignore_errors=True)
-    # Delete/upsert/append dirs not referenced by THIS export (history
-    # shrunk by a vacuum, or a snapshot that re-exported as a rewrite)
-    # would reference vacuumed data files — same GC contract as the
-    # manifests.
-    for sub, written in (
-        ("deletes", written_delete_dirs),
-        ("upserts", written_upsert_dirs),
-        ("appends", written_append_dirs),
-    ):
-        sub_root = os.path.join(table.root, sub)
-        if os.path.isdir(sub_root):
-            for d in os.listdir(sub_root):
-                if d.startswith("s") and d not in written:
-                    shutil.rmtree(os.path.join(sub_root, d), ignore_errors=True)
-            if not os.listdir(sub_root):
-                os.rmdir(sub_root)
+    metadata = _table_metadata(x, m, branch, events, snapshots)
+    write_metadata_version(meta_dir, metadata, len(events))
+    _remove_stale_files(x, len(events), drop_foreign_commits)
     return meta_dir
 
 
@@ -3576,7 +3443,7 @@ def stage_iceberg_append(spark, df, metadata: dict) -> dict:
     # reason real Iceberg writers uuid their data/manifest file names)
     token = uuid.uuid4().hex[:12]
     stage_dir = os.path.join(root, "staged", f"s-{token}")
-    files = _write_upsert_files(spark, df, stage_dir, "data")
+    files = write_spark_parts(df, stage_dir, "data")
     entries = []
     row_cursor = first_row
     for d in files:

@@ -8,10 +8,16 @@ transition as "parent's files + deleted (file, row-position) pairs" or
 decides whether a transition is a pure delete or a pure append: each
 diff validates its own result against the caller's parquet-footer row
 totals and returns pinned positions (or the appended rows), or None —
-the caller then exports the always-correct rewrite model.
+the caller then exports the always-correct rewrite model. `MorBase`
+holds the state both exporters carry between diffs: the base files,
+the mask of positions deleted since the last rewrite and the
+per-file deletion vectors.
 """
 
 from __future__ import annotations
+
+import os
+import urllib.parse
 
 _SCHEME_RE = "^[a-zA-Z0-9+.-]+:/+"
 
@@ -164,9 +170,9 @@ def _diff_inputs(
     schema differs from a base dir's: a schema change is never a pure
     delete or append.
 
-    `mask_rows` is the row count of `deleted_so_far`, known to the
-    callers without a job (DV cardinalities, delete-file footers). The
-    mask is broadcast only when rows x (longest base path + 8 B) fits
+    `mask_rows` is the row count of `deleted_so_far`, known without a
+    job (`MorBase` tracks it from the count identities). The mask is
+    broadcast only when rows x (longest base path + 8 B) fits
     `spark.sql.autoBroadcastJoinThreshold` (`_broadcast_if_small`)."""
     from pyspark.sql import functions as F
 
@@ -387,6 +393,121 @@ def _append_diff(
     ).select(*child.columns)
 
 
+class MorBase:
+    """The merge-on-read state an exporter carries from its last rewrite
+    commit, shared by the Iceberg (v2 positional, v3 DV, append) and
+    Delta (DV) exporters:
+
+    - `dirs`: the base snapshot dir plus the append dirs stacked on it;
+    - `files`: every live file of those dirs by absolute path, mapped to
+      the entry the caller listed it with;
+    - `live_rows`: the base's row count under the mask;
+    - `deleted`: the mask, the union of the pinned delete diffs since
+      the rewrite (None before the first), and `mask_rows`, its row
+      count;
+    - `dv`: each touched file's cumulative deletion vector as (body
+      bytes, cardinality). The driver holds compressed bitmaps, never
+      positions; the positions stay executor-side in `deleted`.
+
+    Each recorded delete adds `live_rows - child_rows` to `mask_rows`,
+    which the diff's count identity guarantees is its row count. The
+    diffs are looked up as module globals at call time, so
+    tools/ab_mor_diff.py can swap them."""
+
+    def __init__(self, root: str):
+        self.root = root
+        self.reset(None, None, [])
+
+    def reset(self, base_dir: str | None, live_rows: int | None, files) -> None:
+        """Start over from a rewrite commit: `files` (dicts with a
+        root-relative, percent-encoded `path`) at `base_dir`, holding
+        `live_rows` rows."""
+        self.dirs = [] if base_dir is None else [base_dir]
+        self.files: dict[str, dict] = {}
+        self._add_files(files)
+        self.live_rows = live_rows
+        self.deleted = None
+        self.mask_rows = 0
+        self.dv: dict[str, tuple[bytes, int]] = {}
+
+    def ready(self) -> bool:
+        """True when a transition can diff against the base: there is
+        one, with a known row count, and all its dirs are on disk."""
+        return (
+            bool(self.dirs)
+            and self.live_rows is not None
+            and all(os.path.isdir(d) for d in self.dirs)
+        )
+
+    def delete_diff(self, spark, child_dir: str, child_rows: int):
+        """`_position_delete_diff` of `child_dir` against the masked
+        base; records nothing."""
+        return _position_delete_diff(
+            spark,
+            self.dirs,
+            self.deleted,
+            child_dir,
+            self.live_rows,
+            child_rows,
+            mask_rows=self.mask_rows,
+        )
+
+    def append_diff(self, spark, child_dir: str, child_rows: int):
+        """`_append_diff` of `child_dir` against the masked base;
+        records nothing."""
+        return _append_diff(
+            spark,
+            self.dirs,
+            self.deleted,
+            child_dir,
+            self.live_rows,
+            child_rows,
+            mask_rows=self.mask_rows,
+        )
+
+    def fold_dvs(self, deleted) -> list[str]:
+        """Fold a delete diff, before it is recorded, into the cumulative
+        deletion vectors of the files it touches (operators/dv_kernel.py,
+        on top of the positions already in the mask). Returns the
+        touched files' absolute paths, sorted."""
+        from .dv_kernel import dv_blobs_by_file
+
+        rows = dv_blobs_by_file(deleted, self.deleted)
+        self.dv.update(
+            {r["file_path"]: (bytes(r["blob"]), int(r["cardinality"])) for r in rows}
+        )
+        return sorted(r["file_path"] for r in rows)
+
+    def record_delete(self, deleted, child_rows: int) -> None:
+        """The delete diff `deleted` took the base to `child_rows`."""
+        self.deleted = (
+            deleted if self.deleted is None else self.deleted.unionByName(deleted)
+        )
+        self.mask_rows += self.live_rows - child_rows
+        self.live_rows = child_rows
+
+    def record_append(self, append_dir: str, child_rows: int, files) -> None:
+        """An append commit wrote `files` under `append_dir` and took
+        the base to `child_rows`."""
+        self.dirs.append(append_dir)
+        self._add_files(files)
+        self.live_rows = child_rows
+
+    def file(self, path: str) -> dict:
+        """The entry of the live base file at absolute `path`."""
+        try:
+            return self.files[path]
+        except KeyError:
+            raise RuntimeError(
+                f"diff produced positions for unknown file {path}"
+            ) from None
+
+    def _add_files(self, files) -> None:
+        for f in files:
+            full = os.path.join(self.root, urllib.parse.unquote(f["path"]))
+            self.files[os.path.abspath(full)] = f
+
+
 def _parquet_row_count(path: str) -> int:
     import pyarrow.parquet as pq
 
@@ -418,9 +539,6 @@ def finalize_spark_parts(
     change-data writers — the rename/cleanup contract must not drift
     between them. Returns [{path, record_count, size, partition}];
     removes `out_dir` entirely when nothing survives."""
-    import os
-    import urllib.parse
-
     part_files = []
     for dirpath, dirnames, filenames in os.walk(out_dir):
         dirnames.sort()
@@ -463,6 +581,18 @@ def finalize_spark_parts(
 
         shutil.rmtree(out_dir, ignore_errors=True)
     return out
+
+
+def write_spark_parts(df, out_dir: str, prefix: str, pcols=None) -> list[dict]:
+    """Write `df` as parquet under `out_dir` (`partitionBy(pcols)` when
+    given) and finalize the parts (`finalize_spark_parts`): the one
+    Spark part writer of the append, upsert, position-delete and
+    change-data files."""
+    writer = df.write.mode("overwrite")
+    if pcols:
+        writer = writer.partitionBy(*pcols)
+    writer.parquet(out_dir)
+    return finalize_spark_parts(out_dir, prefix)
 
 
 def _upsert_diff(

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .merge import merge_scd2_batch
 from .timetravel import SnapshotTable
+from .util import local_frame
 
 # Safe widening chains per the Delta type-widening feature / Iceberg
 # primitive-promotion rules (both public specs). Keys/values are Spark
@@ -122,7 +123,8 @@ class Scd2Pipeline:
         return row["ts_us"], row["lsn"], row["n"]
 
     def _write_checkpoint_audit(self, ts_us: int, lsn, n: int) -> None:
-        self.spark.createDataFrame(
+        local_frame(
+            self.spark,
             [(ts_us, lsn, n)],
             "last_processed_us long, last_processed_lsn long, records_processed long",
         ).withColumn(

@@ -13,7 +13,8 @@ make the four entry points raise, run chained-delete histories through
 every exporter and reader, and check the rows against
 `SnapshotTable.read` at every version. The same holds for
 `migrate_parquet_dir`, the evolved-table (renamed-column) read and the
-`iceberg_inspect` metadata tables: each must equal its unpatched
+`iceberg_inspect` metadata tables, and two `Scd2Pipeline` batches
+(the checkpoint audit frame included): each must equal its unpatched
 result.
 """
 
@@ -42,6 +43,7 @@ from hybrid_data_lakehouse_lab_spark.operators.iceberg_meta import (
 from hybrid_data_lakehouse_lab_spark.operators.maintenance import (
     rewrite_delete_files,
 )
+from hybrid_data_lakehouse_lab_spark.operators.pipeline import Scd2Pipeline
 from hybrid_data_lakehouse_lab_spark.operators.timetravel import SnapshotTable
 
 
@@ -218,3 +220,37 @@ def test_inspect_tables_start_no_python_worker(spark, tmp_path, monkeypatch):
     want = tables()
     _forbid_python_workers(spark, monkeypatch)
     assert tables() == want
+
+
+def _pipeline_state(spark, root):
+    """Two CDC batches through a fresh pipeline at `root`: the SCD2
+    rows, the checkpoint and the audit rows (minus their wall-clock
+    `processed_at`)."""
+    pipe = Scd2Pipeline(spark, root, ["pk"], ["val"])
+
+    def batch(lo, hi, lsn0):
+        return spark.range(lo, hi).selectExpr(
+            "CAST(id % 7 AS INT) AS pk",
+            "concat('v', id) AS val",
+            "timestamp_micros(1700000000000000 + id * 1000) AS event_timestamp",
+            f"id + {lsn0} AS lsn",
+            "IF(id < 7, 'c', 'u') AS op",
+        )
+
+    counts = [
+        pipe.process_batch(batch(0, 12, 0), committed_at_ms=1000),
+        pipe.process_batch(batch(12, 20, 100), committed_at_ms=2000),
+    ]
+    audit = spark.read.parquet(pipe._ckpt_dir).drop("processed_at")
+    return (
+        counts,
+        _sorted_rows(pipe.scd2()),
+        pipe.last_checkpoint(),
+        _sorted_rows(audit),
+    )
+
+
+def test_pipeline_batches_start_no_python_worker(spark, tmp_path, monkeypatch):
+    want = _pipeline_state(spark, str(tmp_path / "want"))
+    _forbid_python_workers(spark, monkeypatch)
+    assert _pipeline_state(spark, str(tmp_path / "got")) == want

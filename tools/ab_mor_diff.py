@@ -6,9 +6,10 @@ The old implementations are loaded from another checkout (a clone of
 an earlier commit) as a separate module; shims adapt their signatures
 (older diffs left the count-identity check to the exporters, so the
 delete shim runs it). Each variant round swaps the three diff
-functions in operators.mor_diff (late importers) and operators.
-iceberg_meta / operators.delta_log (top-level importers), runs the lane
-list with the noop sink, and records per-lane times. Min-of-N per
+functions in operators.mor_diff (where `MorBase` looks up the delete
+and append diffs at call time) and in operators.iceberg_meta (which
+imports the upsert diff), runs the lane list with the noop sink, and
+records per-lane times. Min-of-N per
 variant is printed per lane plus totals.
 
 Usage: python tools/ab_mor_diff.py <old_repo_root> <n_rounds> [lane ...]
@@ -38,11 +39,7 @@ def main() -> None:
     n_rounds = int(sys.argv[2])
     lanes = sys.argv[3:] or DEFAULT_LANES
 
-    from hybrid_data_lakehouse_lab_spark.operators import (
-        delta_log,
-        iceberg_meta,
-        mor_diff,
-    )
+    from hybrid_data_lakehouse_lab_spark.operators import iceberg_meta, mor_diff
     from hybrid_data_lakehouse_lab_spark.plans import QUERIES
     from hybrid_data_lakehouse_lab_spark.session import get_spark
 
@@ -88,11 +85,9 @@ def main() -> None:
 
     def apply(fns):
         for name, fn in fns.items():
-            setattr(mor_diff, name, fn)  # delta_log late-imports these
+            setattr(mor_diff, name, fn)  # MorBase looks these up here
             if hasattr(iceberg_meta, name):
                 setattr(iceberg_meta, name, fn)
-            if hasattr(delta_log, name):
-                setattr(delta_log, name, fn)
 
     spark = get_spark(
         "ab-mor-diff", extra_conf={"spark.ui.showConsoleProgress": "false"}
