@@ -56,10 +56,10 @@ import urllib.parse
 import uuid
 
 from .mor_diff import (
-    _SCHEME_RE,
     MorBase,
     _parquet_row_count,
     _with_file_pos,
+    scan_files,
     write_spark_parts,
 )
 from .timetravel import SnapshotTable
@@ -1370,19 +1370,24 @@ def _delta_prune_may_match(add: dict, pcols: list[str], prune) -> bool:
                 continue
             lo, v = d1
             hi, _ = d2
-        if op == "=" and not (lo <= v <= hi):
+        if not _range_may_match(lo, hi, op, v):
             return False
-        if op == "<" and not (lo < v):
-            return False
-        if op == "<=" and not (lo <= v):
-            return False
-        if op == ">" and not (hi > v):
-            return False
-        if op == ">=" and not (hi >= v):
-            return False
-        if op not in ("=", "<", "<=", ">", ">="):
-            raise ValueError(f"unsupported prune op {op!r}")
     return True
+
+
+def _range_may_match(lo, hi, op: str, v) -> bool:
+    """Can any value in [lo, hi] satisfy `value op v`?"""
+    if op == "=":
+        return lo <= v <= hi
+    if op == "<":
+        return lo < v
+    if op == "<=":
+        return lo <= v
+    if op == ">":
+        return hi > v
+    if op == ">=":
+        return hi >= v
+    raise ValueError(f"unsupported prune op {op!r}")
 
 
 def version_at_timestamp(log_dir: str, ts_ms: int) -> int:
@@ -1473,9 +1478,9 @@ def read_delta_table(
     JSON action since version 0 — only the commits after the checkpoint
     parse as JSON. The
     data read is ONE parquet scan over all live files; partition values
-    attach via a BROADCAST file→values join on the normalized
-    input_file_name — never a per-partition union, whose plan size would
-    explode at thousands of partitions."""
+    attach via a BROADCAST file→values join on each row's file
+    (`mor_diff.scan_files`) — never a per-partition union, whose plan
+    size would explode at thousands of partitions."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -1537,61 +1542,30 @@ def read_delta_table(
         }
     if not files:
         return local_frame(spark, [], schema)
-    df = spark.read.schema(data_schema).parquet(*files)
     dv_pairs = [
         (path, pos)
         for path, add in files.items()
         if add.get("deletionVector")
         for pos in _resolve_dv(root, add["deletionVector"])
     ]
-    if dv_pairs or pcols:
-        from .mor_diff import guard_reserved_columns
-
-        guard_reserved_columns(
-            [f.name for f in schema.fields],
-            ("_file", "_pos"),
-            f"read_delta_table({root})",
-        )
-    if dv_pairs:
-        mask = local_frame(spark, dv_pairs, "_file STRING, _pos BIGINT")
-        df = (
-            df.withColumn(
-                "_file",
-                F.regexp_replace(F.input_file_name(), _SCHEME_RE, "/"),
-            )
-            .withColumn("_pos", F.col("_metadata.row_index"))
-            .join(F.broadcast(mask), ["_file", "_pos"], "left_anti")
-            .drop("_file", "_pos")
-        )
+    file_map = None
     if pcols:
-        # input_file_name() is a URI (file:/..., hdfs://host/..., s3a://
-        # bucket/...); normalize both sides to the bare path for the join
+
         def _pv(add, c):
             pv = add.get("partitionValues") or {}
             v = pv.get(phys_of.get(c, c))
             return pv.get(c) if v is None else v
 
-        mapping = local_frame(
-            spark,
-            [
-                (path, *[_pv(add, c) for c in pcols])
-                for path, add in files.items()
-            ],
-            T.StructType(
-                [T.StructField("_file", T.StringType())]
-                + [T.StructField(c, T.StringType()) for c in pcols]
-            ),
+        file_map = (
+            [T.StructField(c, T.StringType()) for c in pcols],
+            [(path, *[_pv(add, c) for c in pcols]) for path, add in files.items()],
         )
-        df = (
-            df.withColumn(
-                "_file",
-                F.regexp_replace(F.input_file_name(), _SCHEME_RE, "/"),
-            )
-            .join(F.broadcast(mapping), "_file")
-            .drop("_file")
-        )
-        for c in pcols:
-            df = df.withColumn(c, F.col(c).cast(schema[c].dataType))
+    df = scan_files(spark, files, data_schema, pos=bool(dv_pairs), file_map=file_map)
+    if dv_pairs:
+        mask = local_frame(spark, dv_pairs, "_file STRING, _pos BIGINT")
+        df = df.join(F.broadcast(mask), ["_file", "_pos"], "left_anti")
+    for c in pcols:
+        df = df.withColumn(c, F.col(c).cast(schema[c].dataType))
     out = []
     for lf in schema.fields:
         if lf.name in pcols or cm_mode == "none":
@@ -1688,38 +1662,121 @@ def read_delta_changes(
         if starting_version > 0
         else {}
     )
-    # the whole range reads under the END version's schema; a rename /
-    # drop / type change INSIDE the range would silently misread older
-    # change files, so only additive evolution is allowed (the
-    # delta-spark "incompatible data schema change" rule). The start
-    # boundary's schema comes from the pre-range replay.
-    end_fields = {f.name: f.dataType for f in schema.fields}
-    # schema in force AT the start version — the range's base (a
+    # the whole range reads under the END version's schema; the schema
+    # in force AT the start version is the range's base (a
     # schema-change commit's own CDF rows are written under its NEW
     # schema, so a range STARTING at that commit is fine)
+    end_fields = {f.name: f.dataType for f in schema.fields}
     start_meta = replay_delta_log(log_dir, starting_version)["metaData"]
-
-    def _compatible(meta_action):
-        if meta_action is None:
-            return True
-        old = T.StructType.fromJson(
-            json.loads(meta_action["schemaString"])
-        )
-        return all(
-            f.name in end_fields and end_fields[f.name] == f.dataType
-            for f in old.fields
-        )
-
-    if not _compatible(start_meta):
+    if not _schema_compatible(start_meta, end_fields):
         raise ValueError(
             f"incompatible data schema change inside CDF range "
             f"[{starting_version}, {ending_version}]: the range must "
             "be split at the schema-change commit"
         )
+    groups = _change_files(
+        root,
+        log_dir,
+        [(v, commit_files[v]) for v in range(starting_version, ending_version + 1)],
+        prior,
+        end_fields,
+    )
+    parts = []
+    for kind, rows in groups.items():
+        if not rows:
+            continue
+        # cdc files carry `_change_type` per row; derived rows take
+        # their kind from the per-file map
+        tag = [] if kind == "cdc" else [kind]
+        fields = [
+            T.StructField("_commit_version", T.LongType()),
+            T.StructField("_commit_timestamp", T.LongType()),
+        ]
+        if tag:
+            fields.append(T.StructField("_change_type", T.StringType()))
+        fields += [T.StructField(c, T.StringType()) for c in pcols]
+        map_rows = [
+            (p, v, ts, *tag, *[pv.get(c) for c in pcols])
+            for p, v, ts, pv, _dv in rows
+        ]
+        dv_masks = [
+            (p, v, pos)
+            for p, v, _ts, _pv, dv in rows
+            if dv
+            for pos in _resolve_dv(root, dv)
+        ]
+        df = scan_files(
+            spark,
+            sorted({p for p, *_ in rows}),
+            data_schema if tag else cdc_schema,
+            pos=bool(dv_masks),
+            file_map=(fields, map_rows),
+        )
+        if dv_masks:
+            mdf = local_frame(
+                spark, dv_masks, "_file STRING, _commit_version BIGINT, _pos BIGINT"
+            )
+            df = df.join(
+                F.broadcast(mdf), ["_file", "_commit_version", "_pos"], "left_anti"
+            )
+        for c in pcols:
+            df = df.withColumn(c, F.col(c).cast(schema[c].dataType))
+        parts.append(df.drop("_file", "_pos"))
+    out = T.StructType(
+        schema.fields
+        + [
+            T.StructField("_change_type", T.StringType()),
+            T.StructField("_commit_version", T.LongType()),
+            T.StructField("_commit_timestamp", T.TimestampType()),
+        ]
+    )
+    if not parts:
+        return local_frame(spark, [], out)
+    res = reduce(lambda a, b: a.unionByName(b), parts)
+    return res.withColumn(
+        "_commit_timestamp", F.timestamp_millis(F.col("_commit_timestamp"))
+    ).select(*out.names)
+
+
+def _schema_compatible(meta_action, end_fields: dict) -> bool:
+    """True when a change file written under `meta_action`'s schema
+    reads correctly under the range's END schema (`end_fields`, name ->
+    type): only additive evolution — a rename, drop or type change
+    would silently misread older change files (the delta-spark
+    "incompatible data schema change" rule). None (no metaData) is
+    compatible."""
+    from pyspark.sql import types as T
+
+    if meta_action is None:
+        return True
+    old = T.StructType.fromJson(json.loads(meta_action["schemaString"]))
+    return all(
+        f.name in end_fields and end_fields[f.name] == f.dataType
+        for f in old.fields
+    )
+
+
+def _change_files(
+    root: str, log_dir: str, commits, prior: dict, end_fields: dict
+) -> dict[str, list]:
+    """The files a CDF read scans for `commits` ((version, commit file)
+    pairs, in order), by kind: `cdc` when a commit wrote cdc actions
+    (authoritative), else `insert` for its added files and `delete` for
+    its removed ones. Each entry is (absolute path, version, commit
+    timestamp ms, partition values, deletion vector or None); a DV'd
+    file contributes only its unmasked rows. `prior` (path -> add
+    action before the first commit) is updated in place and supplies a
+    removed file's partition values and DV. Refuses a commit that
+    rewrites a file in place without cdc files, and a schema change
+    `_schema_compatible` rejects. Reads only the JSON commits."""
     groups: dict[str, list] = {"cdc": [], "insert": [], "delete": []}
-    for v in range(starting_version, ending_version + 1):
+
+    def _abs(p):
+        return os.path.abspath(os.path.join(root, urllib.parse.unquote(p)))
+
+    for v, name in commits:
         adds, removes, cdcs, ts = [], [], [], None
-        with open(os.path.join(log_dir, commit_files[v])) as fh:
+        with open(os.path.join(log_dir, name)) as fh:
             for line in fh:
                 if not line.strip():
                     continue
@@ -1731,27 +1788,18 @@ def read_delta_changes(
                 elif "cdc" in a:
                     cdcs.append(a["cdc"])
                 elif "metaData" in a:
-                    if not _compatible(a["metaData"]):
+                    if not _schema_compatible(a["metaData"], end_fields):
                         raise ValueError(
-                            f"incompatible data schema change at "
-                            f"commit {v} inside CDF range "
-                            f"[{starting_version}, {ending_version}]: "
-                            "the range must be split at the "
-                            "schema-change commit"
+                            f"incompatible data schema change at commit {v}"
+                            f" inside CDF range [{commits[0][0]},"
+                            f" {commits[-1][0]}]: the range must be split"
+                            " at the schema-change commit"
                         )
                 elif "commitInfo" in a and ts is None:
                     ci = a["commitInfo"]
                     ts = ci.get("inCommitTimestamp", ci.get("timestamp"))
         if ts is None:
-            ts = int(
-                os.stat(os.path.join(log_dir, commit_files[v])).st_mtime * 1000
-            )
-
-        def _abs(p):
-            return os.path.abspath(
-                os.path.join(root, urllib.parse.unquote(p))
-            )
-
+            ts = int(os.stat(os.path.join(log_dir, name)).st_mtime * 1000)
         if cdcs:
             for c in cdcs:
                 groups["cdc"].append(
@@ -1760,10 +1808,7 @@ def read_delta_changes(
         else:
             data_adds = [a for a in adds if a.get("dataChange", True)]
             data_removes = [r for r in removes if r.get("dataChange", True)]
-            readded = {a["path"] for a in data_adds} & {
-                r["path"] for r in data_removes
-            }
-            if readded:
+            if {a["path"] for a in data_adds} & {r["path"] for r in data_removes}:
                 # remove + re-add of the same path in one commit is an
                 # in-place row change (a deletion-vector update); its
                 # row-level effect cannot be derived from the actions
@@ -1772,9 +1817,6 @@ def read_delta_changes(
                     f"vectors) but wrote no cdc files; its CDF cannot "
                     f"be derived from add/remove actions"
                 )
-            # files carrying a DV contribute only their UNMASKED rows —
-            # the descriptor's positions are excluded from the derived
-            # insert/delete rows, matching what was logically live
             for a in data_adds:
                 groups["insert"].append(
                     (
@@ -1795,95 +1837,4 @@ def read_delta_changes(
             prior.pop(r["path"], None)
         for a in adds:
             prior[a["path"]] = a
-
-    from .mor_diff import guard_reserved_columns
-
-    guard_reserved_columns(
-        [f.name for f in schema.fields],
-        ("_file", "_pos", "_commit_version", "_ts", "_change_type",
-         "_commit_timestamp"),
-        f"read_delta_changes({root})",
-    )
-    map_schema = T.StructType(
-        [
-            T.StructField("_file", T.StringType()),
-            T.StructField("_commit_version", T.LongType()),
-            T.StructField("_ts", T.LongType()),
-        ]
-        + [T.StructField(c, T.StringType()) for c in pcols]
-    )
-
-    def attach(df, rows):
-        mapping = local_frame(
-            spark,
-            [
-                (p, v, ts, *[pv.get(c) for c in pcols])
-                for p, v, ts, pv, _dv in rows
-            ],
-            map_schema,
-        )
-        dv_masks = [
-            (p, v, pos)
-            for p, v, _ts, _pv, dv in rows
-            if dv
-            for pos in _resolve_dv(root, dv)
-        ]
-        df = df.withColumn(
-            "_file",
-            F.regexp_replace(F.input_file_name(), _SCHEME_RE, "/"),
-        )
-        if dv_masks:
-            # the metadata pseudo-column must be captured AT the scan
-            df = df.withColumn("_pos", F.col("_metadata.row_index"))
-        df = df.join(F.broadcast(mapping), "_file")
-        if dv_masks:
-            mdf = local_frame(
-                spark,
-                dv_masks, "_file STRING, _commit_version BIGINT, _pos BIGINT"
-            )
-            df = df.join(
-                F.broadcast(mdf),
-                ["_file", "_commit_version", "_pos"],
-                "left_anti",
-            ).drop("_pos")
-        df = df.drop("_file")
-        for c in pcols:
-            df = df.withColumn(c, F.col(c).cast(schema[c].dataType))
-        return df
-
-    parts = []
-    if groups["cdc"]:
-        df = spark.read.schema(cdc_schema).parquet(
-            *{p for p, *_ in groups["cdc"]}
-        )
-        parts.append(attach(df, groups["cdc"]))
-    for kind in ("insert", "delete"):
-        if groups[kind]:
-            df = spark.read.schema(data_schema).parquet(
-                *{p for p, *_ in groups[kind]}
-            )
-            parts.append(
-                attach(df, groups[kind]).withColumn(
-                    "_change_type", F.lit(kind)
-                )
-            )
-    out_cols = [f.name for f in schema.fields] + [
-        "_change_type",
-        "_commit_version",
-        "_commit_timestamp",
-    ]
-    if not parts:
-        empty = T.StructType(
-            schema.fields
-            + [
-                T.StructField("_change_type", T.StringType()),
-                T.StructField("_commit_version", T.LongType()),
-                T.StructField("_commit_timestamp", T.TimestampType()),
-            ]
-        )
-        return local_frame(spark, [], empty)
-    res = reduce(lambda a, b: a.unionByName(b), parts)
-    res = res.withColumn(
-        "_commit_timestamp", F.timestamp_millis(F.col("_ts"))
-    ).drop("_ts")
-    return res.select(*out_cols)
+    return groups

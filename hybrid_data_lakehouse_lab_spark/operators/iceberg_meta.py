@@ -91,13 +91,19 @@ from dataclasses import dataclass, field
 
 from .avro_io import read_avro, write_avro
 from .mor_diff import (
-    _SCHEME_RE,
     MorBase,
     _parquet_row_count,
     _upsert_diff,
+    scan_files,
     write_spark_parts,
 )
-from .delta_log import _check_compaction_rows, _footer_rows, _snapshot_files
+from .delta_log import (
+    _check_compaction_rows,
+    _footer_rows,
+    _range_may_match,
+    _snapshot_files,
+)
+from .iceberg_transforms import _PARAM_RE
 from .timetravel import SnapshotTable
 from .util import local_frame
 
@@ -2016,21 +2022,6 @@ def _transform_range(transform: str, source_type: str, pv: int):
     return start_day * _DAY_MICROS, end_day * _DAY_MICROS - 1
 
 
-def _range_may_match(lo, hi, op: str, v) -> bool:
-    """Can any value in [lo, hi] satisfy `value op v`?"""
-    if op == "=":
-        return lo <= v <= hi
-    if op == "<":
-        return lo < v
-    if op == "<=":
-        return lo <= v
-    if op == ">":
-        return hi > v
-    if op == ">=":
-        return hi >= v
-    raise ValueError(f"unsupported prune op {op!r}")
-
-
 def resolve_snapshot(
     metadata: dict,
     snapshot_id: int | None,
@@ -2266,6 +2257,471 @@ def _resolve_file_columns(
     return in_file, resolved
 
 
+@dataclass
+class _ReadSchema:
+    """How the data files of a snapshot map onto its schema
+    (`_read_schema`): the schema's `fields`, the name mapping's aliases
+    by field id, each `initial-default` by name as (type, value), and
+    whether files can be scanned by name."""
+
+    fields: list[dict]
+    alias_of: dict[int, list[str]]
+    defaults: dict[str, tuple[str, object]]
+    by_name: bool
+
+    def spark_schema(self):
+        from pyspark.sql import types as T
+
+        return T.StructType(
+            [
+                T.StructField(f["name"], _spark_type(f["type"]), True)
+                for f in self.fields
+            ]
+        )
+
+
+def _read_schema(metadata: dict, snap: dict) -> _ReadSchema:
+    """Field resolution of a snapshot read (pure). The snapshot reads
+    under ITS schema (its `schema-id` against the `schemas` list; the
+    current schema without one), so time travel across a
+    rename/add/drop surfaces each era's own columns.
+
+    By-NAME scans are sound iff no field was ever renamed or re-added
+    (every id<->name binding is unique across all schemas plus the name
+    mapping) and no field carries a v3 `initial-default`: only a footer
+    probe can tell which files lack such a column (a stored NULL stays
+    NULL; only ABSENCE takes the default). Otherwise every file
+    resolves on its own (`_file_request`). Nested name-mapping entries
+    are refused: resolution here is top-level."""
+    all_schemas = metadata.get("schemas") or [metadata["schema"]]
+    fields = metadata["schema"]["fields"]
+    sid = snap.get("schema-id")
+    if sid is not None:
+        by_sid = {s["schema-id"]: s for s in all_schemas}
+        fields = by_sid.get(sid, {"fields": fields})["fields"]
+    raw = (metadata.get("properties") or {}).get("schema.name-mapping.default")
+    mapping = json.loads(raw) if raw else []
+    if any(e.get("fields") for e in mapping):
+        raise NotImplementedError(
+            "nested name-mapping entries (field resolution here is "
+            "top-level; nested structs are matched by name)"
+        )
+    id2names: dict[int, set] = {}
+    name2ids: dict[str, set] = {}
+    alias_of: dict[int, list[str]] = {}
+    for s in all_schemas:
+        for f in s["fields"]:
+            id2names.setdefault(f["id"], set()).add(f["name"])
+            name2ids.setdefault(f["name"], set()).add(f["id"])
+    for e in mapping:
+        for nm in e.get("names") or []:
+            id2names.setdefault(e["field-id"], set()).add(nm)
+            name2ids.setdefault(nm, set()).add(e["field-id"])
+            alias_of.setdefault(e["field-id"], []).append(nm)
+    defaults = {
+        f["name"]: (f["type"], f["initial-default"])
+        for f in fields
+        if f.get("initial-default") is not None
+    }
+    by_name = (
+        all(len(v) == 1 for v in id2names.values())
+        and all(len(v) == 1 for v in name2ids.values())
+        and not defaults
+    )
+    return _ReadSchema(fields, alias_of, defaults, by_name)
+
+
+def _file_request(rs: _ReadSchema, path: str) -> tuple:
+    """Per field of `rs`, (the name to request, whether the file lacks
+    the field) for the data file at `path`, from its footer
+    (`_resolve_file_columns`: by parquet field id, else the name
+    mapping, else the name). A field the file lacks null-fills (or takes
+    its `initial-default`); it is requested under its own name unless
+    the file binds that name to a DIFFERENT field (drop + re-add), when
+    a surely-absent name is requested so the old data never
+    resurfaces."""
+    ids = {f["name"]: f["id"] for f in rs.fields}
+    in_file, resolved = _resolve_file_columns(path, list(ids.items()), rs.alias_of)
+    req = []
+    for n, fid in ids.items():
+        src = resolved.get(n)
+        absent = src is None
+        if absent:
+            src = n
+            if n in in_file:
+                src = f"{n}__absent_f{fid}"
+                while src in in_file:
+                    src += "_"
+        req.append((src, absent))
+    return tuple(req)
+
+
+def _group_fields(rs: _ReadSchema, icols: tuple, req: tuple | None):
+    """(scan schema, renames, fills) of one layout group: the read
+    schema minus the group's identity columns `icols`. With a per-file
+    resolution `req` (`_file_request`) each column is requested under
+    the FILE's name for it and renamed back, and a column the files lack
+    that has an `initial-default` is filled ({name: (type, value)})
+    instead of read. Spark's parquet reader widens int->long,
+    float->double and decimal precision natively, so a promoted column
+    needs no cast."""
+    from pyspark.sql import types as T
+
+    fields = [f for f in rs.spark_schema().fields if f.name not in icols]
+    if req is None:
+        return T.StructType(fields), {}, {}
+    req_of = dict(zip((f["name"] for f in rs.fields), req))
+    read, rename, fills = [], {}, {}
+    for f in fields:
+        src, absent = req_of[f.name]
+        if absent and f.name in rs.defaults:
+            fills[f.name] = rs.defaults[f.name]
+            continue
+        read.append(T.StructField(src, f.dataType, True))
+        if src != f.name:
+            rename[src] = f.name
+    names = [f.name for f in read]
+    if len(set(names)) != len(names):
+        raise ValueError(
+            "ambiguous column resolution (one file name serves "
+            f"two schema fields): {sorted(names)} — a swap-rename "
+            "on id-less files cannot be read safely"
+        )
+    return T.StructType(read), rename, fills
+
+
+def _live_specs(metadata: dict, fields: list[dict], spec_ids) -> tuple[dict, dict]:
+    """(specs, idents) for the partition spec ids live files use (pure):
+    each spec's fields by name, and its identity columns as {read-schema
+    name: spec field name}. An abandoned historical spec with an exotic
+    transform does not block the read.
+
+    Identity fields attach as real columns. day/month/year/hour and
+    bucket[N]/truncate[W] fields are HIDDEN partitioning: the source
+    column is in the schema, so their typed values serve pruning only.
+    An identity field keeps its HISTORICAL name in old manifests'
+    partition structs after its source column is renamed, so identity
+    columns resolve by SOURCE id against the read schema; one whose
+    source was dropped from the read schema detaches."""
+    all_specs = {s["spec-id"]: s for s in metadata["partition-specs"]}
+    name_of = {f["id"]: f["name"] for f in fields}
+    specs: dict[int, dict] = {}
+    idents: dict[int, dict[str, str]] = {}
+    for sid in sorted(spec_ids):
+        if sid not in all_specs:
+            raise ValueError(
+                f"manifest references partition-spec-id {sid}, absent "
+                f"from partition-specs (have {sorted(all_specs)})"
+            )
+        specs[sid] = {f["name"]: f for f in all_specs[sid]["fields"]}
+        for f in specs[sid].values():
+            t = f["transform"]
+            if t not in (
+                "identity", "day", "month", "year", "hour"
+            ) and not _PARAM_RE.fullmatch(t):
+                raise NotImplementedError(f"partition transform {t!r}")
+        idents[sid] = {
+            name_of[f["source-id"]]: n
+            for n, f in specs[sid].items()
+            if f["transform"] == "identity" and f.get("source-id") in name_of
+        }
+    return specs, idents
+
+
+def _hidden_may_match(rec: dict, sname: str, sf: dict, f: dict, op: str, val) -> bool:
+    """Can the data file `rec`'s hidden partition value (spec field
+    `sname`, `sf`, on source field `f`) hold a row matching `source op
+    val`? bucket prunes equality (hash the predicate value, compare
+    buckets); truncate[W] over ints covers [t, t+W-1] so all range ops
+    prune, over strings equality prunes by prefix; day/month/year/hour
+    binners cover an interval in the source domain, so every range op
+    prunes — the path that matters on external trees whose manifests
+    lack column stats."""
+    from .iceberg_transforms import bucket_value, truncate_value
+
+    pv = (rec.get("partition") or {}).get(sname)
+    if pv is None:
+        return True
+    m = _PARAM_RE.fullmatch(sf["transform"])
+    if not m:
+        rng = _transform_range(sf["transform"], f["type"], pv)
+        if rng is None:
+            return True
+        try:
+            v = _pred_value(f["type"], val)
+        except (ValueError, TypeError):
+            return True
+        return _range_may_match(rng[0], rng[1], op, v)
+    kind, param = m.group(1), int(m.group(2))
+    if kind == "bucket":
+        if op != "=":
+            return True
+        try:
+            return bucket_value(val, param, f["type"]) == pv
+        except (NotImplementedError, ValueError, TypeError):
+            return True
+    if f["type"] in ("int", "long"):
+        try:
+            v = _pred_value(f["type"], val)
+        except (ValueError, TypeError):
+            return True
+        return _range_may_match(pv, pv + param - 1, op, v)
+    if f["type"] == "string" and op == "=":
+        try:
+            return truncate_value(val, param, "string") == pv
+        except (ValueError, TypeError):
+            return True
+    return True
+
+
+def _may_match(rec: dict, spec: dict, ident: dict, by_name: dict, prune) -> bool:
+    """File pruning (pure): can the data file `rec` (a manifest entry
+    under `spec`, identity columns `ident` as from `_live_specs`) hold a
+    row matching every (column, op, value) conjunct of `prune`?
+    `by_name` is the read schema's fields by name. Identity values,
+    hidden partition values and the column bounds each prove a file
+    cannot match; a missing value or bound keeps it. An unknown column
+    raises."""
+    for col, op, val in prune:
+        if col in ident:
+            # stored under the spec field's HISTORICAL name
+            pv = (rec.get("partition") or {}).get(ident[col])
+            if pv is None:
+                continue  # null/absent partition value: keep
+            try:
+                v = _pred_value(by_name[col]["type"], val)
+            except (ValueError, TypeError):
+                continue
+            if not _range_may_match(pv, pv, op, v):
+                return False
+            continue
+        f = by_name.get(col)
+        if f is None:
+            raise ValueError(f"prune column {col!r} not in schema")
+        for sname, sf in spec.items():
+            if sf.get("source-id") == f["id"] and sf["transform"] != "identity":
+                if not _hidden_may_match(rec, sname, sf, f, op, val):
+                    return False
+        lob = {r["key"]: r["value"] for r in rec.get("lower_bounds") or []}.get(f["id"])
+        hib = {r["key"]: r["value"] for r in rec.get("upper_bounds") or []}.get(f["id"])
+        if lob is None or hib is None:
+            continue  # no stats: cannot prune, keep
+        lo = _decode_bound(f["type"], lob)
+        hi = _decode_bound(f["type"], hib)
+        if lo is None or hi is None:
+            continue
+        try:
+            v = _pred_value(f["type"], val)
+        except (ValueError, TypeError):
+            continue
+        if not _range_may_match(lo, hi, op, v):
+            return False
+    return True
+
+
+def _scan_layouts(
+    spark, rs: _ReadSchema, files: dict, idents: dict, deletes: bool, lineage: bool
+):
+    """The live data files `files` (path -> planned entry) as one
+    DataFrame: one scan per identity-column layout × per-file
+    resolution (`_file_request`), unioned — a handful after spec or
+    schema evolution, never per-file work. Files of an
+    identity-partitioned spec lack those columns; their values come from
+    the manifests' typed partition values through the group's per-file
+    broadcast map (`scan_files`). The same map carries `_fseq`, the
+    file's (inherited) sequence number, when there are `deletes`, and
+    `_row_id`, its first_row_id, with `lineage`; rows then also carry
+    `_file`/`_pos`."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    names = [f["name"] for f in rs.fields]
+    types = {f["name"]: f["type"] for f in rs.fields}
+    groups: dict[tuple, dict[str, dict]] = {}
+    for p, d in files.items():
+        ap = os.path.abspath(p)
+        icols = tuple(c for c in names if c in idents[d["spec_id"]])
+        req = None if rs.by_name else _file_request(rs, ap)
+        groups.setdefault((icols, req), {})[ap] = d
+    extra = [T.StructField("_fseq", T.LongType())] if deletes else []
+    if lineage:
+        extra.append(T.StructField("_row_id", T.LongType()))
+    need_pos = deletes or lineage
+    tail = (["_file", "_pos"] if need_pos else []) + [f.name for f in extra]
+
+    def typed(col: str, v):
+        if v is not None and types[col] == "date":
+            return _EPOCH + datetime.timedelta(days=int(v))
+        return v
+
+    parts = []
+    for (icols, req), gfiles in groups.items():
+        schema, rename, fills = _group_fields(rs, icols, req)
+        fields = [T.StructField(c, _spark_type(types[c]), True) for c in icols]
+        fields += extra
+        rows = []
+        for p, d in gfiles.items():
+            pv = d["record"].get("partition") or {}
+            ident = idents[d["spec_id"]]
+            rows.append(
+                (p, *[typed(c, pv.get(ident[c])) for c in icols])
+                + ((d["seq"],) if deletes else ())
+                + ((d["first_row_id"],) if lineage else ())
+            )
+        gdf = scan_files(
+            spark,
+            list(gfiles),
+            schema,
+            pos=need_pos,
+            file_map=(fields, rows) if fields else None,
+        )
+        if rename:
+            gdf = gdf.select(*[F.col(c).alias(rename.get(c, c)) for c in gdf.columns])
+        for name, (it, v) in fills.items():
+            gdf = gdf.withColumn(
+                name, F.lit(_default_value(it, v)).cast(_spark_type(it))
+            )
+        parts.append(gdf.select(*names, *tail))
+    return reduce(lambda a, b: a.unionByName(b), parts)
+
+
+def _drop_positions(df, mask):
+    """`df` (rows carrying `_file`, `_pos`, `_fseq`) without the rows
+    `mask` (file_path, pos, _dseq) deletes, by a broadcast anti-join. A
+    position delete applies at delete.seq >= data.seq: it may target
+    rows of its own commit."""
+    from pyspark.sql import functions as F
+
+    d, m = df.alias("d"), F.broadcast(mask).alias("m")
+    return d.join(
+        m,
+        (F.col("d._file") == F.col("m.file_path"))
+        & (F.col("d._pos") == F.col("m.pos"))
+        & (F.col("m._dseq") >= F.col("d._fseq")),
+        "left_anti",
+    )
+
+
+def _mask_dv(spark, df, dv_deletes: list[dict]):
+    """(`df` without the rows v3 deletion vectors delete, the data files
+    that have one). Each Puffin DV decodes driver-side, bounded by its
+    cardinality — the spec's design point: a DV indexes rows of ONE
+    data file, and compaction folds large ones."""
+    from .puffin import read_dv
+
+    dv_files: set[str] = set()
+    rows: list[tuple[str, int, int]] = []
+    for d in dv_deletes:
+        rec, dseq = d["record"], d["seq"]
+        ref = rec["referenced_data_file"]
+        ref_abs = os.path.abspath(ref)
+        if ref_abs in dv_files:
+            raise ValueError(
+                f"multiple deletion vectors reference data file "
+                f"{ref}: invalid v3 table (at most one DV per file)"
+            )
+        positions = read_dv(
+            rec["file_path"], rec["content_offset"], rec["content_size_in_bytes"]
+        )
+        card = rec["record_count"]
+        if len(positions) != card:
+            raise ValueError(
+                f"deletion-vector cardinality mismatch for {ref}: "
+                f"entry says {card}, bitmap holds {len(positions)}"
+            )
+        dv_files.add(ref_abs)
+        rows.extend((ref_abs, p, dseq) for p in positions)
+    if rows:
+        df = _drop_positions(
+            df, local_frame(spark, rows, "file_path STRING, pos BIGINT, _dseq BIGINT")
+        )
+    return df, dv_files
+
+
+def _mask_positional(spark, df, pos_deletes: list[dict], dv_files: set[str]):
+    """`df` without the rows v2 position delete files delete. A data
+    file with a deletion vector ignores its (older) position deletes:
+    the spec's upgrade rule, the DV supersedes them."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    seq_of = {os.path.abspath(d["record"]["file_path"]): d["seq"] for d in pos_deletes}
+    mask = scan_files(
+        spark,
+        list(seq_of),
+        T.StructType(
+            [
+                T.StructField("file_path", T.StringType()),
+                T.StructField("pos", T.LongType()),
+            ]
+        ),
+        file_map=([T.StructField("_dseq", T.LongType())], list(seq_of.items())),
+    ).select("file_path", "pos", "_dseq")
+    if dv_files:
+        mask = mask.where(~F.col("file_path").isin(sorted(dv_files)))
+    return _drop_positions(df, mask)
+
+
+def _mask_equality(spark, df, eq_deletes: list[dict], rs: _ReadSchema):
+    """`df` without the rows equality delete files delete (what
+    streaming upsert writers like Flink emit): each delete row removes
+    every STRICTLY older data row (delete.seq > data.seq) matching it
+    null-safe on the `equality_ids` columns, identity partition columns
+    included. One broadcast anti-join per distinct equality_ids set.
+    Off the by-name path a delete file written before a rename carries
+    the old column name, so its columns resolve like a data file's (by
+    parquet field id, else the name mapping); delete sets are small by
+    design, so its footer is probed driver-side."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    name_of = {f["id"]: f["name"] for f in rs.fields}
+    type_of = {f["name"]: _spark_type(f["type"]) for f in rs.fields}
+    by_ids: dict[tuple, dict[str, int]] = {}
+    for d in eq_deletes:
+        ids = tuple(d["record"]["equality_ids"])
+        by_ids.setdefault(ids, {})[os.path.abspath(d["record"]["file_path"])] = d["seq"]
+    for ids, seq_of in by_ids.items():
+        try:
+            names = [name_of[i] for i in ids]
+        except KeyError as exc:
+            raise ValueError(
+                f"equality_ids {ids} reference unknown field id {exc}"
+            ) from None
+        by_res: dict[tuple, list[str]] = {}
+        for ap in sorted(seq_of):
+            res = tuple(names)
+            if not rs.by_name:
+                _, resolved = _resolve_file_columns(
+                    ap, list(zip(names, ids)), rs.alias_of
+                )
+                res = tuple(resolved[nm] for nm in names)
+                if any(r is None for r in res):
+                    raise ValueError(
+                        f"equality delete file {ap} does not contain the "
+                        f"equality_ids columns {ids} (resolved: {res})"
+                    )
+            by_res.setdefault(res, []).append(ap)
+        seq_map = ([T.StructField("_dseq", T.LongType())], list(seq_of.items()))
+        escan = None
+        for res, paths in by_res.items():
+            schema = T.StructType(
+                [T.StructField(src, type_of[nm], True) for src, nm in zip(res, names)]
+            )
+            part = scan_files(spark, paths, schema, file_map=seq_map).select(
+                *[F.col(src).alias(nm) for src, nm in zip(res, names)], "_dseq"
+            )
+            escan = part if escan is None else escan.unionByName(part)
+        d, e = df.alias("d"), F.broadcast(escan).alias("e")
+        cond = F.col("e._dseq") > F.col("d._fseq")
+        for nm in names:
+            cond = cond & F.col(f"d.{nm}").eqNullSafe(F.col(f"e.{nm}"))
+        df = d.join(e, cond, "left_anti")
+    return df
+
+
 def read_iceberg_table(
     spark,
     root: str,
@@ -2376,598 +2832,53 @@ def read_iceberg_table(
     # live data files by path, in manifest order (planned entries:
     # record, spec id, inherited sequence numbers, first_row_id)
     files = {d["record"]["file_path"]: d for d in data}
-    pos_deletes = [
-        (d["record"]["file_path"], d["seq"])
-        for d in deletes
-        if d["kind"] == "position"
-    ]
-    eq_deletes = [
-        (d["record"]["file_path"], d["seq"], tuple(d["record"]["equality_ids"]))
-        for d in deletes
-        if d["kind"] == "equality"
-    ]
-    dv_deletes = [d for d in deletes if d["kind"] == "dv"]
-    # SCHEMA EVOLUTION (read side): a snapshot is read under ITS schema
-    # (spec: snapshot `schema-id` resolves against the `schemas` list) —
-    # time travel across a rename/add/drop surfaces each era's own
-    # column set; a snapshot without a recorded schema-id falls back to
-    # the current schema
-    schema_fields = metadata["schema"]["fields"]
-    all_schemas = metadata.get("schemas") or [metadata["schema"]]
-    if snap.get("schema-id") is not None:
-        _by_sid_schema = {s["schema-id"]: s for s in all_schemas}
-        if snap["schema-id"] in _by_sid_schema:
-            schema_fields = _by_sid_schema[snap["schema-id"]]["fields"]
-    _nm_raw = (metadata.get("properties") or {}).get(
-        "schema.name-mapping.default"
+    rs = _read_schema(metadata, snap)
+    specs, idents = _live_specs(
+        metadata, rs.fields, {d["spec_id"] for d in files.values()}
     )
-    name_mapping = json.loads(_nm_raw) if _nm_raw else []
-    if any(e.get("fields") for e in name_mapping):
-        raise NotImplementedError(
-            "nested name-mapping entries (field resolution here is "
-            "top-level; nested structs are matched by name)"
-        )
-    # by-NAME scans are sound iff no field was ever renamed or re-added:
-    # every id<->name binding must be unique across all schemas plus the
-    # name mapping. Otherwise each live file's columns are resolved by
-    # parquet field id (real-engine files) or via the name mapping
-    # (id-less files, e.g. plain-Spark-written ones) — the slow path,
-    # engaged only on evolved tables.
-    _id2names: dict[int, set] = {}
-    _name2ids: dict[str, set] = {}
-    for s in all_schemas:
-        for f in s["fields"]:
-            _id2names.setdefault(f["id"], set()).add(f["name"])
-            _name2ids.setdefault(f["name"], set()).add(f["id"])
-    for e in name_mapping:
-        for _nm in e.get("names") or []:
-            _id2names.setdefault(e["field-id"], set()).add(_nm)
-            _name2ids.setdefault(_nm, set()).add(e["field-id"])
-    # v3 DEFAULT VALUES: a field's `initial-default` fills rows from
-    # files written before the column existed (spec "Default values");
-    # its presence forces per-file resolution — only the footer probes
-    # can tell which files lack the column (a stored NULL must stay
-    # NULL; only ABSENCE takes the default)
-    defaults = {
-        f["name"]: (f["type"], f["initial-default"])
-        for f in schema_fields
-        if f.get("initial-default") is not None
-    }
-    by_name_safe = (
-        all(len(v) == 1 for v in _id2names.values())
-        and all(len(v) == 1 for v in _name2ids.values())
-        and not defaults
-    )
-    all_specs = {
-        s["spec-id"]: s for s in metadata["partition-specs"]
-    }
-    _PARAM_RE = re.compile(r"(bucket|truncate)\[(\d+)\]")
-    # resolve every spec REFERENCED BY A LIVE FILE (an abandoned
-    # historical spec with an exotic transform must not block the read)
-    used_sids = sorted({d["spec_id"] for d in files.values()})
-    specs_of: dict[int, dict] = {}
-    for sid in used_sids:
-        if sid not in all_specs:
-            raise ValueError(
-                f"manifest references partition-spec-id {sid}, absent "
-                f"from partition-specs (have {sorted(all_specs)})"
-            )
-        specs_of[sid] = {
-            f["name"]: f for f in all_specs[sid]["fields"]
-        }
-        for f in specs_of[sid].values():
-            t = f["transform"]
-            if t not in (
-                "identity", "day", "month", "year", "hour"
-            ) and not _PARAM_RE.fullmatch(t):
-                raise NotImplementedError(f"partition transform {t!r}")
-    # identity fields attach as real columns; day/month/year and
-    # bucket[N]/truncate[W] transforms are HIDDEN partitioning (the
-    # partition value is derived from a source column that IS in the
-    # schema) — nothing to attach, the manifests' typed values exist
-    # for pruning only. Per spec, the identity set can DIFFER per file.
-    # SCHEMA × SPEC EVOLUTION: an identity spec field keeps its
-    # HISTORICAL name in old manifests' partition structs even after
-    # its source column is renamed — so identity columns resolve by
-    # SOURCE-ID against the read schema (ident_of maps read-schema name
-    # → the spec field name the values are stored under); a spec field
-    # whose source was dropped from the read schema simply detaches.
-    _id_to_read_name = {f["id"]: f["name"] for f in schema_fields}
-    ident_of: dict[int, dict[str, str]] = {
-        sid: {
-            _id_to_read_name[f["source-id"]]: n
-            for n, f in sp.items()
-            if f["transform"] == "identity"
-            and f.get("source-id") in _id_to_read_name
-        }
-        for sid, sp in specs_of.items()
-    }
-    pcols_of = {sid: list(m) for sid, m in ident_of.items()}
     if prune:
-        from .iceberg_transforms import bucket_value, truncate_value
-
-        by_name = {f["name"]: f for f in schema_fields}
-
-        def _hidden_may_match(rec, sname, sf, f, op, val) -> bool:
-            """Can this file's hidden partition value hold a row
-            matching `source op val`? bucket prunes equality (hash the
-            predicate value, compare buckets); truncate[W] over ints
-            covers [t, t+W-1] so all range ops prune, over strings
-            equality prunes by prefix; day/month/year binners cover a
-            calendar interval in the source domain, so every range op
-            prunes — the path that matters on external trees whose
-            manifests lack column stats."""
-            pv = (rec.get("partition") or {}).get(sname)
-            if pv is None:
-                return True
-            m = _PARAM_RE.fullmatch(sf["transform"])
-            if not m:
-                rng = _transform_range(sf["transform"], f["type"], pv)
-                if rng is None:
-                    return True
-                try:
-                    v = _pred_value(f["type"], val)
-                except (ValueError, TypeError):
-                    return True
-                return _range_may_match(rng[0], rng[1], op, v)
-            kind, param = m.group(1), int(m.group(2))
-            if kind == "bucket":
-                if op != "=":
-                    return True
-                try:
-                    return bucket_value(val, param, f["type"]) == pv
-                except (NotImplementedError, ValueError, TypeError):
-                    return True
-            if f["type"] in ("int", "long"):
-                try:
-                    v = _pred_value(f["type"], val)
-                except (ValueError, TypeError):
-                    return True
-                return _range_may_match(pv, pv + param - 1, op, v)
-            if f["type"] == "string" and op == "=":
-                try:
-                    return truncate_value(val, param, "string") == pv
-                except (ValueError, TypeError):
-                    return True
-            return True
-
-        def may_match(rec, spec, pcols, ident) -> bool:
-            for col, op, val in prune:
-                if col in pcols:
-                    # values are stored under the spec field's
-                    # HISTORICAL name (pre-rename)
-                    pv = (rec.get("partition") or {}).get(
-                        ident.get(col, col)
-                    )
-                    if pv is None:
-                        continue  # null/absent partition value: keep
-                    ptype = by_name[col]["type"] if col in by_name else "string"
-                    try:
-                        v = _pred_value(ptype, val)
-                    except (ValueError, TypeError):
-                        continue
-                    if not _range_may_match(pv, pv, op, v):
-                        return False
-                    continue
-                f = by_name.get(col)
-                if f is None:
-                    raise ValueError(f"prune column {col!r} not in schema")
-                for sname, sf in spec.items():
-                    if sf.get("source-id") == f["id"] and sf["transform"] != "identity":
-                        if not _hidden_may_match(rec, sname, sf, f, op, val):
-                            return False
-                fid = f["id"]
-                lob = {
-                    r["key"]: r["value"] for r in rec.get("lower_bounds") or []
-                }.get(fid)
-                hib = {
-                    r["key"]: r["value"] for r in rec.get("upper_bounds") or []
-                }.get(fid)
-                if lob is None or hib is None:
-                    continue  # no stats: cannot prune, keep
-                lo = _decode_bound(f["type"], lob)
-                hi = _decode_bound(f["type"], hib)
-                if lo is None or hi is None:
-                    continue
-                try:
-                    v = _pred_value(f["type"], val)
-                except (ValueError, TypeError):
-                    continue
-                if not _range_may_match(lo, hi, op, v):
-                    return False
-            return True
-
+        by_name = {f["name"]: f for f in rs.fields}
         files = {
             p: d
             for p, d in files.items()
-            if may_match(
-                d["record"],
-                specs_of[d["spec_id"]],
-                pcols_of[d["spec_id"]],
-                ident_of[d["spec_id"]],
+            if _may_match(
+                d["record"], specs[d["spec_id"]], idents[d["spec_id"]], by_name, prune
             )
         }
-    full_schema = T.StructType(
-        [
-            T.StructField(f["name"], _spark_type(f["type"]), True)
-            for f in schema_fields
-        ]
-    )
+    schema = rs.spark_schema()
     if with_row_lineage:
-        full_schema = T.StructType(
-            list(full_schema.fields)
-            + [T.StructField("_row_id", T.LongType(), True)]
-        )
+        schema = schema.add("_row_id", T.LongType(), True)
     if not files:
-        return local_frame(spark, [], full_schema)
+        return local_frame(spark, [], schema)
     if with_row_lineage:
-        full_schema = T.StructType(full_schema.fields[:-1])
-    any_deletes = bool(pos_deletes or eq_deletes or dv_deletes)
-    need_pos = any_deletes or with_row_lineage
-    # group live files by their spec's IDENTITY column set: files of an
-    # identity-partitioned spec physically lack those columns (they are
-    # reconstructed from the manifests' typed partition values), so an
-    # evolved table needs one scan per distinct identity layout — a
-    # handful of unions, never per-file work
-    schema_order = [f.name for f in full_schema.fields]
-    # FIELD-ID RESOLUTION (slow path; evolved tables only): each live
-    # file's top-level columns are mapped to the read schema — by
-    # parquet field id when the file carries ids (what real Iceberg
-    # writers emit), else via the table's name mapping (id-less files
-    # after a rename), else by direct name. Footers are read here with
-    # pyarrow (O(files) footer reads, the same O(files) state the
-    # manifests already produced); files sharing a resolution signature
-    # scan together, so an evolved table costs one scan per (identity
-    # layout × column-name era), never per-file work.
-    field_ids = {f["name"]: f["id"] for f in schema_fields}
-    alias_of: dict[int, list[str]] = {}
-    for e in name_mapping:
-        for _nm in e.get("names") or []:
-            alias_of.setdefault(e["field-id"], []).append(_nm)
-    resolution_of: dict[str, tuple] = {}
-    if not by_name_safe:
-        for p in sorted({os.path.abspath(p) for p in files}):
-            in_file, resolved = _resolve_file_columns(
-                p, [(n, field_ids[n]) for n in schema_order], alias_of
-            )
-            # REQUEST name per field (+ absent flag, which routes
-            # `initial-default` fills): the resolved physical name; an
-            # unresolved field null-fills — requested under its own
-            # name unless the file binds that name to a DIFFERENT
-            # field (drop + re-add), where a synthetic surely-absent
-            # name is requested instead so old data never resurfaces
-            req = []
-            for n in schema_order:
-                src = resolved.get(n)
-                absent = src is None
-                if src is None:
-                    src = n
-                    if n in in_file:
-                        src = f"{n}__absent_f{field_ids[n]}"
-                        while src in in_file:
-                            src += "_"
-                req.append((src, absent))
-            resolution_of[p] = tuple(req)
-    groups: dict[tuple, dict[str, dict]] = {}
-    ident_vals: dict[str, dict] = {}
-    for p, d in files.items():
-        ap = os.path.abspath(p)
-        icols = tuple(
-            c for c in schema_order if c in pcols_of[d["spec_id"]]
-        )
-        ident_vals[ap] = {
-            c: (d["record"].get("partition") or {}).get(
-                ident_of[d["spec_id"]][c]
-            )
-            for c in icols
-        }
-        groups.setdefault((icols, resolution_of.get(ap)), {})[ap] = d
-    need_file = (
-        need_pos
-        or any(icols for icols, _ in groups)
-        or len(groups) > 1
-    )
-    if need_file:
-        from .mor_diff import guard_reserved_columns
-
-        guard_reserved_columns(
-            [f.name for f in full_schema.fields],
-            ("_file", "_pos", "_fseq", "_first", "_row_id"),
-            "read_iceberg_table",
-        )
-    iceberg_types = {f["name"]: f["type"] for f in schema_fields}
-
-    def from_typed(col: str, v):
-        if v is None:
-            return None
-        if iceberg_types[col] == "date":
-            return _EPOCH + datetime.timedelta(days=int(v))
-        return v
-
-    parts = []
-    for (gkey, gres), gpaths in groups.items():
-        data_fields = [f for f in full_schema.fields if f.name not in gkey]
-        rename: dict[str, str] = {}
-        fills: dict[str, object] = {}
-        if gres is not None:
-            # read each table column under the FILE's name for it (an
-            # unresolved column is requested under its table name and
-            # null-fills — the add-column case — unless the field
-            # carries an `initial-default`, which fills instead);
-            # Spark's parquet reader natively widens int→long /
-            # float→double / decimal precision, so promoted columns
-            # need no cast
-            res_by_name = dict(zip(schema_order, gres))
-            read_fields = []
-            for f in data_fields:
-                src, absent = res_by_name.get(f.name, (f.name, False))
-                if absent and f.name in defaults:
-                    it, dv = defaults[f.name]
-                    fills[f.name] = F.lit(_default_value(it, dv)).cast(
-                        f.dataType
-                    )
-                    continue
-                read_fields.append(T.StructField(src, f.dataType, True))
-                if src != f.name:
-                    rename[src] = f.name
-            req = [f.name for f in read_fields]
-            if len(set(req)) != len(req):
-                raise ValueError(
-                    "ambiguous column resolution (one file name serves "
-                    f"two schema fields): {sorted(req)} — a swap-rename "
-                    "on id-less files cannot be read safely"
-                )
-            data_fields = read_fields
-        data_schema = T.StructType(data_fields)
-        gdf = spark.read.schema(data_schema).parquet(*gpaths)
-        if rename:
-            gdf = gdf.select(
-                *[
-                    F.col(f.name).alias(rename.get(f.name, f.name))
-                    for f in data_fields
-                ]
-            )
-        for name, lit in fills.items():
-            gdf = gdf.withColumn(name, lit)
-        if need_file:
-            gdf = gdf.withColumn(
-                "_file",
-                F.regexp_replace(F.input_file_name(), _SCHEME_RE, "/"),
-            )
-        if need_pos:
-            gdf = gdf.withColumn("_pos", F.col("_metadata.row_index"))
-        if gkey:
-            # identity columns from the manifests' typed partition
-            # values — a |group files|-row broadcast mapping
-            mapping = local_frame(
-                spark,
-                [
-                    (p, *[from_typed(c, ident_vals[p].get(c)) for c in gkey])
-                    for p in gpaths
-                ],
-                T.StructType(
-                    [T.StructField("_file", T.StringType())]
-                    + [
-                        T.StructField(c, _spark_type(iceberg_types[c]), True)
-                        for c in gkey
-                    ]
-                ),
-            )
-            gdf = gdf.join(F.broadcast(mapping), "_file")
-        sel = list(schema_order)
-        if need_file:
-            sel.append("_file")
-        if need_pos:
-            sel.append("_pos")
-        parts.append(gdf.select(*sel))
-    df = parts[0]
-    for p_df in parts[1:]:
-        df = df.unionByName(p_df)
-    if any_deletes:
-        # attach each data row's (inherited) sequence number via the
-        # broadcast |files|-row map — BOTH delete flavors compare
-        # against it: positional applies at delete.seq >= data.seq,
-        # equality at delete.seq > data.seq (the spec's asymmetry:
-        # a positional delete can target rows of its own commit, an
-        # equality delete only strictly older data)
-        fseq_map = local_frame(
-            spark,
-            [(os.path.abspath(p), d["seq"]) for p, d in files.items()],
-            "_file STRING, _fseq BIGINT",
-        )
-        df = df.join(F.broadcast(fseq_map), "_file")
-    dv_files: set[str] = set()
-    dv_rows: list[tuple[str, int, int]] = []
-    if dv_deletes:
-        # v3 DELETION VECTORS (Puffin): decode driver-side — bounded by
-        # each DV's cardinality, the spec's design point (a DV indexes
-        # rows of ONE data file; compaction folds large ones) — then
-        # mask with the same broadcast anti-join as positional deletes
-        # (applies at dv.seq >= data.seq).
-        from .puffin import read_dv
-
-        for d in dv_deletes:
-            rec, dseq = d["record"], d["seq"]
-            ref = rec["referenced_data_file"]
-            ref_abs = os.path.abspath(ref)
-            if ref_abs in dv_files:
-                raise ValueError(
-                    f"multiple deletion vectors reference data file "
-                    f"{ref}: invalid v3 table (at most one DV per file)"
-                )
-            positions = read_dv(
-                rec["file_path"],
-                rec["content_offset"],
-                rec["content_size_in_bytes"],
-            )
-            card = rec["record_count"]
-            if len(positions) != card:
-                raise ValueError(
-                    f"deletion-vector cardinality mismatch for {ref}: "
-                    f"entry says {card}, bitmap holds {len(positions)}"
-                )
-            dv_files.add(ref_abs)
-            dv_rows.extend((ref_abs, p, dseq) for p in positions)
-    if pos_deletes:
-        dseq_by_path = {os.path.abspath(p): s for p, s in pos_deletes}
-        dmap = local_frame(
-            spark,
-            list(dseq_by_path.items()), "_dfile STRING, _dseq BIGINT"
-        )
-        mask = (
-            spark.read.parquet(*dseq_by_path)
-            .withColumn(
-                "_dfile", F.regexp_replace(F.input_file_name(), _SCHEME_RE, "/")
-            )
-            .join(F.broadcast(dmap), "_dfile")
-            .select("file_path", "pos", "_dseq")
-        )
-        if dv_files:
-            # the spec's upgrade rule: a data file that has a DV must
-            # IGNORE its (older, v2-era) positional delete files — the
-            # DV supersedes them
-            mask = mask.where(~F.col("file_path").isin(sorted(dv_files)))
-        mask = mask.alias("m")
-        d = df.alias("d")
-        df = d.join(
-            F.broadcast(mask),
-            (F.col("d._file") == F.col("m.file_path"))
-            & (F.col("d._pos") == F.col("m.pos"))
-            & (F.col("m._dseq") >= F.col("d._fseq")),
-            "left_anti",
-        )
-    if dv_rows:
-        vmask = local_frame(
-            spark,
-            dv_rows, "file_path STRING, pos BIGINT, _dseq BIGINT"
-        ).alias("v")
-        d = df.alias("d")
-        df = d.join(
-            F.broadcast(vmask),
-            (F.col("d._file") == F.col("v.file_path"))
-            & (F.col("d._pos") == F.col("v.pos"))
-            & (F.col("v._dseq") >= F.col("d._fseq")),
-            "left_anti",
-        )
-    if eq_deletes:
-        # equality deletes (what streaming upsert writers like Flink
-        # emit): each delete row removes every strictly-older data row
-        # matching on the equality_ids columns (null-safe, per spec).
-        # One broadcast anti-join per distinct equality_ids set.
-        # identity partition columns are already attached per group
-        # (before the masks), so equality deletes may reference them
-        # like any other column
-        id_to_name = {f["id"]: f["name"] for f in schema_fields}
-        eq_groups: dict[tuple, list[tuple[str, int]]] = {}
-        for p, s, ids in eq_deletes:
-            eq_groups.setdefault(ids, []).append((p, s))
-        for ids, plist in eq_groups.items():
-            try:
-                names = [id_to_name[i] for i in ids]
-            except KeyError as exc:
-                raise ValueError(
-                    f"equality_ids {ids} reference unknown field id {exc}"
-                ) from None
-            dmap2 = local_frame(
-                spark,
-                [(os.path.abspath(p), s) for p, s in plist],
-                "_dfile STRING, _dseq BIGINT",
-            )
-            dpaths = {os.path.abspath(p) for p, _ in plist}
-            if by_name_safe:
-                escan = spark.read.parquet(*dpaths).select(*names)
-            else:
-                # SCHEMA EVOLUTION: a delete file written BEFORE a
-                # rename carries the old column name (and, from real
-                # engines, parquet field ids) — resolve its columns the
-                # same way as data files: by id, else name mapping.
-                # Delete sets are small by design (the MoR design
-                # point), so footers probe driver-side.
-                name_types = {
-                    f["name"]: _spark_type(f["type"])
-                    for f in schema_fields
-                }
-                egroups: dict[tuple, list[str]] = {}
-                for ap in sorted(dpaths):
-                    _, resolved = _resolve_file_columns(
-                        ap, list(zip(names, ids)), alias_of
-                    )
-                    res = tuple(resolved[nm] for nm in names)
-                    if any(r is None for r in res):
-                        raise ValueError(
-                            f"equality delete file {ap} does not "
-                            f"contain the equality_ids columns {ids} "
-                            f"(resolved: {res})"
-                        )
-                    egroups.setdefault(res, []).append(ap)
-                parts_e = []
-                for res, paths_e in egroups.items():
-                    sch = T.StructType(
-                        [
-                            T.StructField(src, name_types[tgt], True)
-                            for src, tgt in zip(res, names)
-                        ]
-                    )
-                    parts_e.append(
-                        spark.read.schema(sch)
-                        .parquet(*paths_e)
-                        .select(
-                            *[
-                                F.col(src).alias(tgt)
-                                for src, tgt in zip(res, names)
-                            ]
-                        )
-                    )
-                escan = parts_e[0]
-                for pe in parts_e[1:]:
-                    escan = escan.unionByName(pe)
-            ddf = (
-                escan.withColumn(
-                    "_dfile",
-                    F.regexp_replace(
-                        F.input_file_name(), _SCHEME_RE, "/"
-                    ),
-                )
-                .join(F.broadcast(dmap2), "_dfile")
-                .alias("e")
-            )
-            d = df.alias("d")
-            cond = F.col("e._dseq") > F.col("d._fseq")
-            for nm in names:
-                cond = cond & F.col(f"d.{nm}").eqNullSafe(F.col(f"e.{nm}"))
-            df = d.join(F.broadcast(ddf), cond, "left_anti")
-    out_cols = [f.name for f in full_schema.fields]
-    if with_row_lineage:
-        # v3 ROW LINEAGE: _row_id = the file's first_row_id + the row's
-        # position — STABLE across MoR deletes and metadata rewrites
-        # (surviving rows keep their ids; only a data-file rewrite
-        # re-assigns). A |files|-row broadcast map, one projection.
-        _unresolved = [
-            p for p, d in files.items() if d["first_row_id"] is None
-        ]
-        if _unresolved:
+        unresolved = [p for p, d in files.items() if d["first_row_id"] is None]
+        if unresolved:
             # a carried-forward manifest with null first_row_id is
             # spec-invalid (only a snapshot's OWN manifests inherit);
             # inventing ids here would collide with real ones — refuse
             raise ValueError(
                 "row lineage requested but no first_row_id resolves "
-                f"for {len(_unresolved)} data file(s), e.g. "
-                f"{_unresolved[0]} (carried-forward manifest with null "
+                f"for {len(unresolved)} data file(s), e.g. "
+                f"{unresolved[0]} (carried-forward manifest with null "
                 "first_row_id?)"
             )
-        fmap = local_frame(
-            spark,
-            [
-                (os.path.abspath(p), d["first_row_id"])
-                for p, d in files.items()
-            ],
-            "_file STRING, _first BIGINT",
-        )
-        df = df.join(F.broadcast(fmap), "_file").withColumn(
-            "_row_id", F.col("_first") + F.col("_pos")
-        )
-        out_cols.append("_row_id")
-    return df.select(*out_cols)
+    df = _scan_layouts(spark, rs, files, idents, bool(deletes), with_row_lineage)
+    by_kind = {
+        k: [d for d in deletes if d["kind"] == k]
+        for k in ("dv", "position", "equality")
+    }
+    df, dv_files = _mask_dv(spark, df, by_kind["dv"])
+    if by_kind["position"]:
+        df = _mask_positional(spark, df, by_kind["position"], dv_files)
+    if by_kind["equality"]:
+        df = _mask_equality(spark, df, by_kind["equality"], rs)
+    if with_row_lineage:
+        # v3 ROW LINEAGE: the file's first_row_id plus the row's
+        # position — STABLE across MoR deletes and metadata rewrites
+        # (surviving rows keep their ids; only a data-file rewrite
+        # re-assigns)
+        df = df.withColumn("_row_id", F.col("_row_id") + F.col("_pos"))
+    return df.select(*schema.names)
 
 
 def migrate_parquet_dir(

@@ -31,7 +31,11 @@ the other two transforms its table format supports.
 from __future__ import annotations
 
 import datetime
+import re
 import struct
+
+#: A parameterized transform name, `bucket[N]` or `truncate[W]`.
+_PARAM_RE = re.compile(r"(bucket|truncate)\[(\d+)\]")
 
 _C1 = 0xCC9E2D51
 _C2 = 0x1B873593

@@ -557,8 +557,6 @@ def rewrite_iceberg_manifests(root: str) -> dict:
     class as the planning walk it accelerates. Returns
     {manifests_before, manifests_after, files}.
     """
-    import re
-
     from .avro_io import read_avro, write_avro
     from .iceberg_meta import (
         _entry_schema,
@@ -567,6 +565,7 @@ def rewrite_iceberg_manifests(root: str) -> dict:
         plan_snapshot,
         write_metadata_version,
     )
+    from .iceberg_transforms import _PARAM_RE
 
     meta_dir = os.path.join(root, "metadata")
     n, metadata = load_table_metadata(meta_dir)
@@ -601,8 +600,6 @@ def rewrite_iceberg_manifests(root: str) -> dict:
     for s in metadata.get("schemas") or [metadata["schema"]]:
         for f in s["fields"]:
             type_by_id.setdefault(f["id"], f["type"])
-    _PARAM = re.compile(r"(bucket|truncate)\[(\d+)\]")
-
     def _ptype(sf: dict) -> str:
         t = sf["transform"]
         if t == "identity":
@@ -611,7 +608,7 @@ def rewrite_iceberg_manifests(root: str) -> dict:
             return "date"
         if t in ("month", "year", "hour"):
             return "int"
-        m = _PARAM.fullmatch(t)
+        m = _PARAM_RE.fullmatch(t)
         if m:
             return "int" if m.group(1) == "bucket" else type_by_id[sf["source-id"]]
         raise NotImplementedError(f"partition transform {t!r}")

@@ -11,7 +11,9 @@ totals and returns pinned positions (or the appended rows), or None —
 the caller then exports the always-correct rewrite model. `MorBase`
 holds the state both exporters carry between diffs: the base files,
 the mask of positions deleted since the last rewrite and the
-per-file deletion vectors.
+per-file deletion vectors. `scan_files` is the scan both the diffs'
+callers and the three table readers use to name a row's file and
+position.
 """
 
 from __future__ import annotations
@@ -36,20 +38,6 @@ def _fresh_names(taken, *bases) -> list[str]:
         taken.add(n)
         out.append(n)
     return out
-
-
-def guard_reserved_columns(columns, reserved, context: str) -> None:
-    """Refuse loudly when a snapshot schema collides with a reader's
-    internal working columns (`withColumn` would silently replace the
-    data column). Readers that join against literal-schema mapping
-    frames can't rename on the fly, so an explicit error beats silent
-    column loss."""
-    clash = sorted(set(columns) & set(reserved))
-    if clash:
-        raise ValueError(
-            f"{context}: table schema contains reserved working column"
-            f" name(s) {clash}; rename the column(s) to read this table"
-        )
 
 
 def _row_key_cols(df, cols):
@@ -144,13 +132,59 @@ def _rank_minus_counts(
     )
 
 
-def _with_file_pos(df, _f, _p):
-    """`df` plus the (scheme-less file path, row index) of each row."""
+def _with_file_pos(df, _f, _p=None):
+    """`df`, a parquet scan, plus each row's file (`_f`) and, when `_p`
+    is named, its row index in that file. The file is Spark's
+    `_metadata.file_path` URI turned back into the local path: scheme
+    stripped, percent-escapes decoded, so it equals the
+    `os.path.abspath` every caller keys its files by, also under a root
+    or partition value holding a space or a `%`. `url_decode` is form
+    decoding, so a literal `+` is escaped first. Both columns are
+    deterministic (the file-name function is not), so a filter above
+    them still pushes into the scan, and the row index stays the
+    physical position when that filter skips row groups."""
     from pyspark.sql import functions as F
 
-    return df.withColumn(
-        _f, F.regexp_replace(F.col("_metadata.file_path"), _SCHEME_RE, "/")
-    ).withColumn(_p, F.col("_metadata.row_index"))
+    uri = F.regexp_replace(F.col("_metadata.file_path"), _SCHEME_RE, "/")
+    path = F.url_decode(F.regexp_replace(uri, r"\+", "%2B"))
+    # Spark types `url_decode` nullable; falling back to the (never
+    # null) URI keeps the column required, as the position-delete files
+    # written from it declare
+    df = df.withColumn(_f, F.coalesce(path, uri))
+    return df if _p is None else df.withColumn(_p, F.col("_metadata.row_index"))
+
+
+def scan_files(spark, paths, schema, pos: bool = False, file_map=None):
+    """Read the parquet files `paths` with `schema`. With `pos` or a
+    `file_map` each row also carries its file as `_file`
+    (`_with_file_pos`), plus its row index as `_pos` with `pos`.
+    `file_map` is `(fields, rows)`: StructFields and one `(path,
+    *values)` row per file and value set, joined on `_file` as a
+    broadcast map (a file listed twice fans its rows out). A schema
+    column named like one of these working columns is refused rather
+    than silently replaced."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from .util import local_frame
+
+    df = spark.read.schema(schema).parquet(*paths)
+    if not pos and file_map is None:
+        return df
+    fields, rows = file_map or ([], None)
+    clash = sorted(set(schema.names) & {"_file", "_pos", *(f.name for f in fields)})
+    if clash:
+        raise ValueError(
+            f"table schema contains reserved working column name(s) {clash};"
+            " rename the column(s) to read this table"
+        )
+    df = _with_file_pos(df, "_file", "_pos" if pos else None)
+    if file_map is None:
+        return df
+    mapping = local_frame(
+        spark, rows, T.StructType([T.StructField("_file", T.StringType()), *fields])
+    )
+    return df.join(F.broadcast(mapping), "_file")
 
 
 def _diff_inputs(

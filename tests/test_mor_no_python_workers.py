@@ -11,7 +11,8 @@ frame through `util.local_frame` (Arrow) and every deletion vector
 through the JVM-only encoder in `operators/dv_kernel.py`. These tests
 make the four entry points raise, run chained-delete histories through
 every exporter and reader, and check the rows against
-`SnapshotTable.read` at every version. The same holds for
+`SnapshotTable.read` at every version, also under a root and partition
+values that a file URI percent-encodes. The same holds for
 `migrate_parquet_dir`, the evolved-table (renamed-column) read and the
 `iceberg_inspect` metadata tables, and two `Scd2Pipeline` batches
 (the checkpoint audit frame included): each must equal its unpatched
@@ -47,6 +48,12 @@ from hybrid_data_lakehouse_lab_spark.operators.pipeline import Scd2Pipeline
 from hybrid_data_lakehouse_lab_spark.operators.timetravel import SnapshotTable
 
 
+_G = "CAST(id % 3 AS STRING)"
+# partition values a path must escape: Spark writes `g=REG AIR` and
+# `g=z%25w`, and reports both percent-encoded in a file's URI
+_ESCAPED_G = "element_at(array('REG AIR', 'z%w', 'x'), CAST(id % 3 + 1 AS INT))"
+
+
 def _forbid_python_workers(spark, monkeypatch):
     def refuse(name):
         def _raise(*_a, **_k):
@@ -64,12 +71,13 @@ def _forbid_python_workers(spark, monkeypatch):
         monkeypatch.setattr(owner, attr, refuse(f"{owner.__name__}.{attr}"))
 
 
-def _history(spark, root, partitioned=False, minor=False):
+def _history(spark, root, partitioned=False, minor=False, g=_G):
     """load(300) -> delete -> delete -> append, or with `minor` the
-    append replaced by a minor compaction (rewrite_delete_files)."""
+    append replaced by a minor compaction (rewrite_delete_files). `g` is
+    the SQL of the (partition) column `g`."""
     t = SnapshotTable(spark, root)
     kw = {"partition_by": ["g"]} if partitioned else {}
-    df = spark.range(300).selectExpr("id", "CAST(id % 3 AS STRING) AS g")
+    df = spark.range(300).selectExpr("id", f"{g} AS g")
     live = df
     t.write(live.repartition(3), committed_at_ms=1000, **kw)
     live = live.filter("id % 5 != 0")
@@ -79,9 +87,7 @@ def _history(spark, root, partitioned=False, minor=False):
     if minor:
         rewrite_delete_files(t, committed_at_ms=4000)
     else:
-        more = spark.range(300, 330).selectExpr(
-            "id", "CAST(id % 3 AS STRING) AS g"
-        )
+        more = spark.range(300, 330).selectExpr("id", f"{g} AS g")
         t.write(live.unionByName(more).repartition(3), committed_at_ms=4000, **kw)
     return t
 
@@ -114,28 +120,39 @@ def _check_reads(spark, t, versions, iceberg_only=False):
 
 
 @pytest.mark.parametrize(
-    "partitioned,minor",
-    [(False, False), (True, False), (False, True)],
-    ids=["unpartitioned", "partitioned", "fv3-minor-compaction"],
+    "root,partitioned,minor,g",
+    [
+        ("t", False, False, _G),
+        ("t", True, False, _G),
+        ("t", False, True, _G),
+        ("r oo%t+x", True, False, _ESCAPED_G),
+    ],
+    ids=["unpartitioned", "partitioned", "fv3-minor-compaction", "escaped-paths"],
 )
 def test_export_and_read_start_no_python_worker(
-    spark, tmp_path, monkeypatch, partitioned, minor
+    spark, tmp_path, monkeypatch, root, partitioned, minor, g
 ):
-    t = _history(spark, str(tmp_path / "t"), partitioned, minor)
+    t = _history(spark, str(tmp_path / root), partitioned, minor, g)
     versions = [e["version"] for e in t._load_manifest()["history"]["main"]]
     _forbid_python_workers(spark, monkeypatch)
+    export_iceberg_metadata(t, format_version=1)
+    _check_reads(spark, t, versions, iceberg_only=True)
     export_iceberg_metadata(t, format_version=2)
     _check_reads(spark, t, versions, iceberg_only=True)
     assert glob.glob(
-        os.path.join(t.root, "deletes", "**", "*.parquet"), recursive=True
+        os.path.join(glob.escape(t.root), "deletes", "**", "*.parquet"),
+        recursive=True,
     )
     export_iceberg_metadata(t, format_version=3)
     _check_reads(spark, t, versions, iceberg_only=True)
-    assert glob.glob(os.path.join(t.root, "deletes", "*", "*.puffin"))
+    assert glob.glob(os.path.join(glob.escape(t.root), "deletes", "*", "*.puffin"))
+    export_delta_log(t)
+    _check_reads(spark, t, versions)
     export_delta_log(t, mor_deletes=True, change_data=True)
     _check_reads(spark, t, versions)
     # both deletes exported as deletion-vector commits
-    assert len(glob.glob(os.path.join(t.root, "deletion_vector_*.bin"))) == 2
+    dvs = glob.glob(os.path.join(glob.escape(t.root), "deletion_vector_*.bin"))
+    assert len(dvs) == 2
 
 
 def _sorted_rows(df):

@@ -18,7 +18,10 @@ records:
 - a fingerprint (row count and hash of the sorted rows) of the masked
   read at every version: `read_iceberg_table` per snapshot (plus row
   lineage on v3), `read_delta_table` per version and, for change-data
-  exports, `read_delta_changes`.
+  exports, `read_delta_changes`;
+- the same for a pruned and filtered read at every version
+  (`prune=PRUNE` plus the same condition as `.where`), so file pruning
+  and filter pushdown are in the digest too.
 
 An export or read that raises records its exception instead. Run
 `digest` once per checkout with that checkout first on PYTHONPATH (the
@@ -41,6 +44,9 @@ sys.path.append(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HISTORIES = ["dups", "dups_part", "upsert_days", "evolve", "sorted"]
 HIDDEN_DAYS = {"dt": ("ts", "day")}
+# every history has an integer `k`
+PRUNE = [("k", "<", 40)]
+WHERE = "k < 40"
 
 
 def _spark():
@@ -261,6 +267,11 @@ def _reads(spark, root: str, kind: str, kw: dict, n: int) -> dict:
             out[f"snapshot {v + 1}"] = _fingerprint(
                 lambda: read_iceberg_table(spark, root, snapshot_id=v + 1)
             )
+            out[f"snapshot {v + 1} pruned"] = _fingerprint(
+                lambda: read_iceberg_table(
+                    spark, root, snapshot_id=v + 1, prune=PRUNE
+                ).where(WHERE)
+            )
             if kw["format_version"] >= 3:
                 out[f"snapshot {v + 1} lineage"] = _fingerprint(
                     lambda: read_iceberg_table(
@@ -270,6 +281,11 @@ def _reads(spark, root: str, kind: str, kw: dict, n: int) -> dict:
         else:
             out[f"version {v}"] = _fingerprint(
                 lambda: read_delta_table(spark, root, version=v)
+            )
+            out[f"version {v} pruned"] = _fingerprint(
+                lambda: read_delta_table(spark, root, version=v, prune=PRUNE).where(
+                    WHERE
+                )
             )
     if kw.get("change_data"):
         out["changes"] = _fingerprint(
