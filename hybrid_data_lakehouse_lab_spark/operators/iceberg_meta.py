@@ -3074,43 +3074,46 @@ def migrate_parquet_dir(
     return meta_dir
 
 
-def export_iceberg_statistics(
-    table: SnapshotTable,
-    columns: list[str] | None = None,
-    k: int = 4096,
-):
+# theta NDV sketches: lg k = 12 (4096 nominal entries) under the
+# library's default update seed, the sketch Iceberg-java and Trino write
+_THETA_LG_K = 12
+_THETA_SEED = 9001
+
+
+def _theta_sketch(spark, raw):
+    """datasketches-java's CompactSketch of serialized theta bytes (any
+    serial version). The seed-checked heapify refuses a sketch hashed
+    under another seed, as it refuses a non-compact family."""
+    ds = spark._jvm.org.apache.datasketches
+    return ds.theta.CompactSketch.heapify(ds.memory.Memory.wrap(raw), _THETA_SEED)
+
+
+def export_iceberg_statistics(table: SnapshotTable, columns: list[str] | None = None):
     """Write an Iceberg TABLE STATISTICS file for the current snapshot:
     per-column NDV as `apache-datasketches-theta-v1` sketches in a
     Puffin container, referenced from the metadata's `statistics` field
     — the stats real engines (Trino, the reference's serving layer)
     feed into NDV-driven join planning at 100 TB.
 
-    The sketches are REAL DataSketches compact theta sketches
-    (operators/theta.py): byte-identical to datasketches-java in exact
-    mode and heapify-able by it in estimation mode — verified against
-    the actual library on Spark's classpath in tests/test_theta.py.
-    Each blob carries the spec's `ndv` property.
+    The sketches come from Spark's `theta_sketch_agg` (datasketches-java,
+    lg k = 12): ONE aggregate over the masked live rows sketches every
+    column, nulls skipped, and the driver sees one sketch per column.
+    Each is re-serialized by the library as its ordered compact SerVer 3
+    form (the aggregate returns the compressed SerVer 4), the bytes
+    Iceberg-java writes. Like the library, the sketch ignores the empty
+    string. Each blob carries the spec's `ndv` property.
 
     Run AFTER `export_iceberg_metadata` (regeneration rewrites the
     metadata file without statistics; re-run this to restore them).
     Columns default to every top-level long/int/string column.
 
-    100 TB shape: per column, theta hashes are computed JVM-adjacent in
-    an Arrow-batched pandas UDF, then ONE distinct + ordered-limit
-    (k+1) — Spark's TakeOrdered partial top-k — ships only k+1 longs
-    per partition to the driver; the KMV sketch is assembled there.
+    Failure-atomic: the Puffin is written under a name the current
+    metadata does not reference, then the metadata is swapped, and only
+    then are the stats files it no longer references removed.
     Returns {column: estimate}."""
-    import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     from .puffin import write_puffin
-    from .theta import (
-        build_from_hashes,
-        estimate,
-        murmur3_x64_128,
-        serialize_compact,
-    )
 
     meta_dir = os.path.join(table.root, "metadata")
     n, metadata = load_table_metadata(meta_dir)
@@ -3135,77 +3138,31 @@ def export_iceberg_statistics(
             f"theta NDV statistics support long/int/string columns; got "
             f"{[(c, type_of.get(c)) for c in bad]}"
         )
-
-    # classic-style pandas_udf declarations: `from __future__ import
-    # annotations` stringifies type hints, which the hint-based API
-    # can't resolve inside a nested scope
-    import struct as _st
-
-    # Arrow delivers a long column CONTAINING nulls as float64, which
-    # silently rounds |v| > 2^53 — so the plan below filters nulls
-    # BEFORE the UDF (the series arrives as exact int64), and the UDF
-    # additionally converts via pandas' nullable Int64 so a stray
-    # null-bearing batch can never hash rounded values.
-    _theta_hash_long = F.pandas_udf(
-        lambda s: s.astype("Int64").map(
-            lambda v: None
-            if pd.isna(v)
-            # Spark LongType is signed; pack signed, as the library does
-            else murmur3_x64_128(_st.pack("<q", int(v)), 9001)[0] >> 1
-        ),
-        T.LongType(),
+    raws = (
+        df.agg(*[F.theta_sketch_agg(c, _THETA_LG_K) for c in columns]).first()
+        if columns
+        else []
     )
-    _theta_hash_str = F.pandas_udf(
-        lambda s: s.map(
-            lambda v: None
-            if v is None
-            else murmur3_x64_128(str(v).encode("utf-8"), 9001)[0] >> 1
-        ),
-        T.LongType(),
-    )
-
     blobs = []
     estimates = {}
-    for c in columns:
-        kind = type_of[c]
-        hcol = (
-            _theta_hash_str(F.col("_v"))
-            if kind == "string"
-            else _theta_hash_long(F.col("_v").cast("long"))
-        )
-        rows = (
-            # null-filter BEFORE the hash UDF: a null-free long batch
-            # crosses Arrow as int64, never float64 (precision!)
-            df.select(F.col(c).alias("_v"))
-            .where(F.col("_v").isNotNull())
-            .select(hcol.alias("h"))
-            .where(F.col("h").isNotNull())
-            .distinct()
-            .orderBy("h")
-            .limit(k + 1)
-            .collect()
-        )
-        # the top-k+1 smallest hashes ARE the KMV state: if fewer than
-        # k+1 came back the sketch is exact
-        sk = build_from_hashes((r["h"] for r in rows), k=k)
-        est = estimate(sk)
-        estimates[c] = est
+    for c, raw in zip(columns, raws):
+        sk = _theta_sketch(table.spark, raw)
+        estimates[c] = sk.getEstimate()
         blobs.append(
             {
                 "type": "apache-datasketches-theta-v1",
-                "data": serialize_compact(sk),
+                "data": sk.toByteArray(),
                 "snapshot-id": sid,
                 "sequence-number": seq,
                 "fields": [field_id_of[c]],
-                "properties": {"ndv": str(int(round(est)))},
+                "properties": {"ndv": str(int(round(estimates[c])))},
             }
         )
-    for f in os.listdir(meta_dir):
-        # replace-on-rewrite: prior statistics files are superseded by
-        # this run (sole-writer assumption, same as the exporters)
-        if f.startswith("stats-") and f.endswith(".puffin"):
-            os.remove(os.path.join(meta_dir, f))
-    stats_path = os.path.join(meta_dir, f"stats-{sid}-{n}.puffin")
+    referenced = {st["statistics-path"] for st in metadata.get("statistics") or []}
+    stats_path, i = os.path.join(meta_dir, f"stats-{sid}-{n}.puffin"), 0
+    while stats_path in referenced:
+        i += 1
+        stats_path = os.path.join(meta_dir, f"stats-{sid}-{n}-{i}.puffin")
     blob_metas = write_puffin(
         stats_path, blobs, properties={"created-by": "spark-graft theta"}
     )
@@ -3227,15 +3184,21 @@ def export_iceberg_statistics(
     with open(tmp, "w") as fh:
         json.dump(metadata, fh, indent=1, sort_keys=True)
     os.replace(tmp, meta_path)
+    for f in os.listdir(meta_dir):
+        # the superseded statistics files (sole-writer assumption, same
+        # as the exporters)
+        path = os.path.join(meta_dir, f)
+        if f.startswith("stats-") and f.endswith(".puffin") and path != stats_path:
+            os.remove(path)
     return estimates
 
 
 def read_iceberg_statistics(spark, root: str) -> dict:
     """Read the current snapshot's table-statistics Puffin back:
     {column_name: {"ndv": int, "estimate": float, "retained": int}}.
-    Verifies blob types and field-id resolution."""
+    Verifies blob types and field-id resolution; datasketches-java
+    reads the sketch (any serial version, seed-checked)."""
     from .puffin import read_blob
-    from .theta import deserialize_compact, estimate
 
     metadata = load_table_metadata(os.path.join(root, "metadata"))[1]
     stats = metadata.get("statistics") or []
@@ -3255,20 +3218,20 @@ def read_iceberg_statistics(spark, root: str) -> dict:
                 raise NotImplementedError(
                     f"statistics blob compression-codec {codec!r}"
                 )
-            sk = deserialize_compact(raw)
+            sk = _theta_sketch(spark, raw)
             fields = bm.get("fields") or []
             if len(fields) != 1 or fields[0] not in name_of:
                 continue  # multi-column or unknown-field blob: skip
             fid = fields[0]
             props = bm.get("properties") or {}
-            est = estimate(sk)
+            est = sk.getEstimate()
             out[name_of[fid]] = {
                 # the ndv property is optional on external blobs; fall
                 # back to the sketch's own estimate when absent
                 "ndv": int(props["ndv"]) if "ndv" in props
                 else int(round(est)),
                 "estimate": est,
-                "retained": len(sk["entries"]),
+                "retained": sk.getRetainedEntries(True),
             }
     return out
 

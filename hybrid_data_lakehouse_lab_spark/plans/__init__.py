@@ -70,12 +70,13 @@ _PRIORITY = [
     # displaced to slots 51-53: json_extract_typed, distinct_projection,
     # top_orders_preview (trivial operators, each with dedicated pytest
     # coverage and sweep verification since round 1).
-    # Round-9 rotation (VERDICT r8 item 4): the round-8 from-scratch
-    # binary-format lanes (iceberg_v3_dv_roundtrip — Puffin DVs,
+    # Round-9 rotation (VERDICT r8 item 4): the round-8 binary-format
+    # lanes (iceberg_v3_dv_roundtrip — Puffin DVs,
     # retention_enforced_roundtrip — physical MoR retention,
-    # iceberg_ndv_stats_roundtrip — theta sketches + Puffin stats) are
-    # pinned in-window; displaced to slots 54-56: point_lookup_history,
-    # broadcast_dim_join, group_count_ops (round-1 trivial lanes whose
+    # iceberg_ndv_stats_roundtrip — Spark-native theta sketches + Puffin
+    # stats) are pinned in-window; displaced to slots 54-56:
+    # point_lookup_history, broadcast_dim_join, group_count_ops
+    # (round-1 trivial lanes whose
     # operator surfaces are also exercised by in-window queries —
     # history_audit/retention_window, the TPC-H broadcast joins gated
     # by test_plan_quality, and count_sum_by_group — each with

@@ -1326,13 +1326,11 @@ def iceberg_ndv_stats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     NDV as `apache-datasketches-theta-v1` sketches in a Puffin
     statistics file referenced from the metadata `statistics` field:
     what Trino (the reference's serving engine) feeds into NDV-driven
-    join planning at 100 TB. The sketches are REAL DataSketches compact
-    theta sketches built from scratch (operators/theta.py: MurmurHash3
-    x64_128 pinned by the public smhasher verification vector
-    0x6384BA69, KMV with the library's key canonicalization and
-    SerVer-3 layout) — verified BYTE-IDENTICAL to datasketches-java in
-    exact mode and heapified by the actual library in
-    tests/test_theta.py, the strongest external validation in the repo.
+    join planning at 100 TB. The sketches are Spark's native
+    `theta_sketch_agg` (datasketches-java 6.2.0, lg k = 12), stored as
+    the library's ordered compact SerVer-3 sketch; tests/test_theta.py
+    checks every blob byte for byte against the library's own
+    `UpdateSketch`.
 
     The lane commits the documents table, exports v2 metadata + the
     statistics file, reads the sketches back, and emits per column the
@@ -1340,11 +1338,12 @@ def iceberg_ndv_stats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate within 5 RSE = 5/sqrt(4096) ≈ 7.8% of exact; exact-mode
     sketches must match exactly). Low-cardinality columns (lang,
     source) exercise exact mode, doc_id exercises estimation at
-    sf >= 0.01. A wrong sketch flips the verdict and fails the hash.
+    sf >= 0.1 (5,000 ids > k). A wrong sketch flips the verdict and
+    fails the hash.
 
-    100 TB shape: per column, Arrow-batched theta hashing + ONE
-    distinct and an ordered k+1 limit (map-side partial top-k), so the
-    driver sees k+1 longs per column regardless of table size."""
+    100 TB shape: ONE aggregate sketches all three columns, each
+    partition merging into a sketch of at most k entries, so the driver
+    sees one sketch per column regardless of table size."""
     from ..operators.iceberg_meta import (
         export_iceberg_metadata,
         export_iceberg_statistics,

@@ -9,10 +9,11 @@
    hinted delete inside an upgraded v3 tree raised on the missing
    content_offset.
 2. (low) Theta NDV statistics over a long column CONTAINING NULLS:
-   Arrow ships a null-bearing long batch to the pandas UDF as float64,
-   rounding |v| > 2^53 — adjacent huge longs hashed identically and the
-   sketch silently undercounted. Nulls are now filtered before the UDF
-   (plus a nullable-Int64 conversion inside it).
+   Arrow shipped a null-bearing long batch to the old pandas UDF as
+   float64, rounding |v| > 2^53 — adjacent huge longs hashed
+   identically and the sketch silently undercounted. The sketch is now
+   Spark's native `theta_sketch_agg`, which never leaves the JVM; the
+   test pins it to the library's sketch of the exact integers.
 3. (low) `read_iceberg_statistics` on an external blob whose metadata
    omits the optional `ndv` property falls back to the sketch's own
    estimate instead of raising KeyError.
@@ -185,14 +186,10 @@ def test_v3_hinted_parquet_delete_is_positional_not_dv(spark, tmp_path):
 
 def test_theta_ndv_exact_for_huge_longs_with_nulls(spark, tmp_path):
     """50 adjacent longs at 2^60 (float64 spacing there is 128, so a
-    float round-trip collapses ALL of them) plus nulls: the sketch must
-    retain 50 distinct hashes, each equal to the signed-little-endian
-    murmur3 hash of the exact integer."""
+    float round-trip collapses ALL of them) plus nulls: the blob must
+    be, byte for byte, datasketches-java's sketch of the exact
+    integers."""
     from hybrid_data_lakehouse_lab_spark.operators.puffin import read_blob
-    from hybrid_data_lakehouse_lab_spark.operators.theta import (
-        deserialize_compact,
-        murmur3_x64_128,
-    )
 
     base = 1 << 60
     vals = [base + i for i in range(50)]
@@ -209,13 +206,12 @@ def test_theta_ndv_exact_for_huge_longs_with_nulls(spark, tmp_path):
     md = json.load(open(os.path.join(meta_dir, f"v{n}.metadata.json")))
     (st,) = md["statistics"]
     (bm,) = st["blob-metadata"]
-    sk = deserialize_compact(
-        read_blob(st["statistics-path"], bm["offset"], bm["length"])
+    sk = spark._jvm.org.apache.datasketches.theta.UpdateSketch.builder().build()
+    for v in vals:
+        sk.update(v)
+    assert read_blob(st["statistics-path"], bm["offset"], bm["length"]) == bytes(
+        sk.compact(True, None).toByteArray()
     )
-    expected = sorted(
-        murmur3_x64_128(struct.pack("<q", v), 9001)[0] >> 1 for v in vals
-    )
-    assert list(sk["entries"]) == expected
 
 
 # --- 3. external stats blob without the optional ndv property ---------------

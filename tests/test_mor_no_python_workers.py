@@ -14,9 +14,11 @@ every exporter and reader, and check the rows against
 `SnapshotTable.read` at every version, also under a root and partition
 values that a file URI percent-encodes. The same holds for
 `migrate_parquet_dir`, the evolved-table (renamed-column) read and the
-`iceberg_inspect` metadata tables, and two `Scd2Pipeline` batches
-(the checkpoint audit frame included): each must equal its unpatched
-result.
+`iceberg_inspect` metadata tables, the NDV statistics export and
+read (`export_iceberg_statistics`, `read_iceberg_statistics`) and two
+`Scd2Pipeline` batches (the checkpoint audit frame included): each
+must equal its unpatched result. Every `udf` / `pandas_udf` column is
+refused too, at `UserDefinedFunction.__call__`.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ import pytest
 from pyspark import SparkContext
 from pyspark.sql.group import GroupedData
 from pyspark.sql.pandas.group_ops import PandasCogroupedOps
+from pyspark.sql.udf import UserDefinedFunction
 
 from hybrid_data_lakehouse_lab_spark.operators.delta_log import (
     export_delta_log,
@@ -38,7 +41,9 @@ from hybrid_data_lakehouse_lab_spark.operators.delta_log import (
 from hybrid_data_lakehouse_lab_spark.operators import iceberg_inspect
 from hybrid_data_lakehouse_lab_spark.operators.iceberg_meta import (
     export_iceberg_metadata,
+    export_iceberg_statistics,
     migrate_parquet_dir,
+    read_iceberg_statistics,
     read_iceberg_table,
 )
 from hybrid_data_lakehouse_lab_spark.operators.maintenance import (
@@ -67,6 +72,8 @@ def _forbid_python_workers(spark, monkeypatch):
         (frame_cls, "mapInPandas"),
         (GroupedData, "applyInPandas"),
         (PandasCogroupedOps, "applyInPandas"),
+        # every `udf` / `pandas_udf` column, scalar ones included
+        (UserDefinedFunction, "__call__"),
     ):
         monkeypatch.setattr(owner, attr, refuse(f"{owner.__name__}.{attr}"))
 
@@ -211,6 +218,20 @@ def test_renamed_column_reads_start_no_python_worker(
         for sid in (1, 2, 3)
     ]
     assert got == want
+
+
+def test_statistics_export_and_read_start_no_python_worker(
+    spark, tmp_path, monkeypatch
+):
+    t = _history(spark, str(tmp_path / "t"))
+    export_iceberg_metadata(t, format_version=3)
+
+    def stats():
+        return export_iceberg_statistics(t), read_iceberg_statistics(spark, t.root)
+
+    want = stats()
+    _forbid_python_workers(spark, monkeypatch)
+    assert stats() == want
 
 
 def test_inspect_tables_start_no_python_worker(spark, tmp_path, monkeypatch):

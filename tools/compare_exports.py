@@ -21,7 +21,11 @@ records:
   exports, `read_delta_changes`;
 - the same for a pruned and filtered read at every version
   (`prune=PRUNE` plus the same condition as `.where`), so file pruning
-  and filter pushdown are in the digest too.
+  and filter pushdown are in the digest too;
+- after an Iceberg export's files and reads are recorded, its NDV
+  statistics: `export_iceberg_statistics` runs on the exported tree, and
+  the sha256 of its Puffin file and each theta blob's sha256 and `ndv`
+  property (by field id) are recorded.
 
 An export or read that raises records its exception instead. Run
 `digest` once per checkout with that checkout first on PYTHONPATH (the
@@ -294,6 +298,30 @@ def _reads(spark, root: str, kind: str, kw: dict, n: int) -> dict:
     return out
 
 
+def _statistics(t) -> dict:
+    from hybrid_data_lakehouse_lab_spark.operators.iceberg_meta import (
+        export_iceberg_statistics,
+        load_table_metadata,
+    )
+    from hybrid_data_lakehouse_lab_spark.operators.puffin import read_blob
+
+    try:
+        export_iceberg_statistics(t)
+        md = load_table_metadata(os.path.join(t.root, "metadata"))[1]
+    except Exception as e:  # recorded, not raised: both sides must agree
+        return {"error": _err(e)}
+    out = {}
+    for st in md["statistics"]:
+        with open(st["statistics-path"], "rb") as fh:
+            out["puffin"] = "sha256:" + hashlib.sha256(fh.read()).hexdigest()
+        for bm in st["blob-metadata"]:
+            blob = read_blob(st["statistics-path"], bm["offset"], bm["length"])
+            out[f"field {bm['fields'][0]}"] = (
+                f"sha256:{hashlib.sha256(blob).hexdigest()} ndv:{bm['properties']['ndv']}"
+            )
+    return out
+
+
 def digest(out: str, out_json: str) -> None:
     from hybrid_data_lakehouse_lab_spark.operators.delta_log import export_delta_log
     from hybrid_data_lakehouse_lab_spark.operators.iceberg_meta import (
@@ -323,6 +351,8 @@ def digest(out: str, out_json: str) -> None:
                 entry["export_error"] = _err(e)
             entry["files"] = _tree(work)
             entry["reads"] = _reads(spark, work, kind, kw, n)
+            if kind == "iceberg":
+                entry["statistics"] = _statistics(t)
             result[f"{name}/{label}"] = entry
             print(name, label, entry.get("export_error", "ok"), flush=True)
         shutil.rmtree(work, ignore_errors=True)
