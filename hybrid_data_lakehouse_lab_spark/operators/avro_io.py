@@ -25,9 +25,10 @@ from __future__ import annotations
 
 import io
 import json
-import os
 import struct
 import zlib
+
+from .util import atomic_open
 
 
 def _zigzag(n: int) -> int:
@@ -143,10 +144,8 @@ def write_avro(path: str, schema: dict, records: list[dict], codec: str = "defla
     _write_long(out, len(records))
     _write_bytes(out, payload)
     out.write(sync)
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as fh:
+    with atomic_open(path) as fh:
         fh.write(out.getvalue())
-    os.replace(tmp, path)
 
 
 class _Reader:

@@ -59,11 +59,12 @@ from .mor_diff import (
     MorBase,
     _parquet_row_count,
     _with_file_pos,
+    gc_ledger,
     scan_files,
     write_spark_parts,
 )
 from .timetravel import SnapshotTable
-from .util import local_frame
+from .util import atomic_open, local_frame
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
@@ -398,6 +399,17 @@ def export_delta_log(
     route cdc rows through partitionBy so change files live beside the
     data layout.
 
+    CHANGE-SET LEDGER (`mor_diff.MorBase`): each delete diff and its
+    folded DVs are persisted under `_mor_ledger/`, keyed by the base
+    state — the base dirs' files as (absolute path, size), the keys of
+    the deletes since the last rewrite and the child dir's files — so a
+    re-export, or an Iceberg export of the same root, reads them back
+    instead of diffing again. An entry is used only if its JSON agrees
+    with that key and the current row counts and its positions' footer
+    row total equals the recorded count; anything else is recomputed
+    and overwritten. At the end of the export, entries whose child dir
+    is no longer a live snapshot are removed (`mor_diff.gc_ledger`).
+
     SOLE-WRITER assumption: this exporter owns `_delta_log/` — the
     regeneration (and especially the stale-tail cleanup) would
     overwrite or delete commits appended by an EXTERNAL Delta writer.
@@ -638,11 +650,9 @@ def export_delta_log(
                     cur_rows = sum(_footer_rows(table.root, files))
                 base.reset(snap["path"], cur_rows, stat_files)
 
-        tmp = os.path.join(log_dir, f".{i:020d}.json.tmp")
-        with open(tmp, "w") as fh:
+        with atomic_open(os.path.join(log_dir, f"{i:020d}.json"), "w") as fh:
             for a in actions:
                 fh.write(json.dumps(a) + "\n")
-        os.replace(tmp, os.path.join(log_dir, f"{i:020d}.json"))
         prev_schema = schema_str
     # A vacuum can SHRINK the pointer history (it rewrites the manifest
     # without the vacuumed versions). Any previously-exported commit
@@ -687,6 +697,7 @@ def export_delta_log(
                 shutil.rmtree(os.path.join(cdc_root, d), ignore_errors=True)
         if not os.listdir(cdc_root):
             os.rmdir(cdc_root)
+    gc_ledger(table.root, [s["path"] for s in m["snapshots"]])
     return log_dir
 
 
@@ -1025,10 +1036,8 @@ def write_checkpoint(
     pointer = {"version": v, "size": len(rows)}
     if parts:
         pointer["parts"] = n
-    tmp = os.path.join(log_dir, "._last_checkpoint.tmp")
-    with open(tmp, "w") as fh:
+    with atomic_open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
         json.dump(pointer, fh)
-    os.replace(tmp, os.path.join(log_dir, "_last_checkpoint"))
     return out
 
 
@@ -1150,12 +1159,9 @@ def restore_delta_table(
         add["dataChange"] = True
         actions.append({"add": add})
     new_v = cur["version"] + 1
-    path = os.path.join(log_dir, f"{new_v:020d}.json")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
+    with atomic_open(os.path.join(log_dir, f"{new_v:020d}.json"), "w") as fh:
         for a in actions:
             fh.write(json.dumps(a) + "\n")
-    os.replace(tmp, path)
     return {
         "version": new_v,
         "restored_to": version,

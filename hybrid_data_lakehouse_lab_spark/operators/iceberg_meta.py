@@ -94,6 +94,7 @@ from .mor_diff import (
     MorBase,
     _parquet_row_count,
     _upsert_diff,
+    gc_ledger,
     scan_files,
     write_spark_parts,
 )
@@ -105,7 +106,7 @@ from .delta_log import (
 )
 from .iceberg_transforms import _PARAM_RE
 from .timetravel import SnapshotTable
-from .util import local_frame
+from .util import atomic_open, local_frame
 
 _EPOCH = datetime.date(1970, 1, 1)
 
@@ -720,14 +721,10 @@ def write_metadata_version(meta_dir: str, md: dict, version: int) -> str:
     need serialization hold their own lock around load+apply+write."""
     os.makedirs(meta_dir, exist_ok=True)
     new_loc = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = new_loc + ".tmp"
-    with open(tmp, "w") as fh:
+    with atomic_open(new_loc, "w") as fh:
         json.dump(md, fh, indent=1, sort_keys=True)
-    os.replace(tmp, new_loc)
-    hint_tmp = os.path.join(meta_dir, ".version-hint.tmp")
-    with open(hint_tmp, "w") as fh:
+    with atomic_open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
         fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
     return new_loc
 
 
@@ -1241,12 +1238,10 @@ def _dv_commit(x: _IcebergExport, i: int, deleted, child_rows: int):
     if deleted is not None:
         x.base.fold_dvs(deleted)
         x.base.record_delete(deleted, child_rows)
+    # a prior v2 export's positional delete files in this dir stay
+    # readable until the new metadata commits; `_remove_stale_files`
+    # removes them after it
     sdir = _delete_dir(x, i)
-    if os.path.isdir(sdir):
-        # a prior v2 export of this snapshot left positional delete
-        # parquet here; the fv3 upgrade supersedes it — clear the dir
-        # so no orphaned delete files linger
-        shutil.rmtree(sdir)
     os.makedirs(sdir, exist_ok=True)
     puffin_path = os.path.join(sdir, f"dv-{i + 1:05d}.puffin")
     dv = x.base.dv
@@ -1567,7 +1562,9 @@ def _remove_stale_files(
     deleted data — remove them, the catalog-GC step a real Iceberg
     deployment runs. Delete/upsert/append dirs this export did not
     write (history shrunk, or a snapshot that re-exported as a
-    rewrite) go by the same contract."""
+    rewrite) go by the same contract, and so do a prior v2 export's
+    positional delete files in the dirs a v3 export put its deletion
+    vectors in."""
     for f in os.listdir(x.meta_dir):
         stale = (
             (
@@ -1611,6 +1608,16 @@ def _remove_stale_files(
                     shutil.rmtree(os.path.join(sub_root, d), ignore_errors=True)
             if not os.listdir(sub_root):
                 os.rmdir(sub_root)
+    if x.format_version >= 3:
+        for d in x.written_dirs["deletes"]:
+            sdir = os.path.join(x.table.root, "deletes", d)
+            for e in os.listdir(sdir):
+                if e != f"dv-{d[1:]}.puffin":
+                    p = os.path.join(sdir, e)
+                    if os.path.isdir(p):
+                        shutil.rmtree(p)
+                    else:
+                        os.remove(p)
 
 
 def export_iceberg_metadata(
@@ -1701,7 +1708,21 @@ def export_iceberg_metadata(
     alias per field id, the spec's mechanism for resolving id-less
     files after a rename. Snapshots whose schema differs from the MoR
     base always export as full rewrites (the incremental diffs require
-    schema equality)."""
+    schema equality).
+
+    CHANGE-SET LEDGER (`mor_diff.MorBase`): the delete and append diffs
+    and the v3 DV folds are persisted under `_mor_ledger/`, keyed by the
+    base state — the base dirs' files as (absolute path, size), the keys
+    of the deletes since the last rewrite and the child dir's files —
+    and shared with the Delta exporter wherever the bases agree. A
+    re-export, an export in another format version, or a Delta export
+    of the same root reads them back instead of diffing again. An entry
+    is used only if its JSON agrees with that key and the current row
+    counts and its positions' footer row total equals the recorded
+    count; anything else is recomputed and overwritten. After the
+    metadata commit, entries whose child dir is no longer a live
+    snapshot are removed (`mor_diff.gc_ledger`). The equality-delete
+    (`upsert_key`) diff does not go through the ledger."""
     if format_version not in (1, 2, 3):
         raise NotImplementedError(
             f"format_version {format_version!r} (only 1, 2 and 3)"
@@ -1885,6 +1906,7 @@ def export_iceberg_metadata(
     metadata = _table_metadata(x, m, branch, events, snapshots)
     write_metadata_version(meta_dir, metadata, len(events))
     _remove_stale_files(x, len(events), drop_foreign_commits)
+    gc_ledger(table.root, [s["path"] for s in m["snapshots"]])
     return meta_dir
 
 
@@ -3180,10 +3202,8 @@ def export_iceberg_statistics(table: SnapshotTable, columns: list[str] | None = 
             "blob-metadata": blob_metas,
         }
     ]
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as fh:
+    with atomic_open(meta_path, "w") as fh:
         json.dump(metadata, fh, indent=1, sort_keys=True)
-    os.replace(tmp, meta_path)
     for f in os.listdir(meta_dir):
         # the superseded statistics files (sole-writer assumption, same
         # as the exporters)

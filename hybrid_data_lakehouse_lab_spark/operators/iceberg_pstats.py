@@ -30,6 +30,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .util import atomic_open
+
 __all__ = [
     "write_partition_stats",
     "partition_stats_table",
@@ -198,9 +200,8 @@ def write_partition_stats(
         )
     table = pa.Table.from_pylist(rows, schema=schema)
     path = os.path.join(meta_dir, f"partition-stats-{sid}.parquet")
-    tmp = path + ".tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, path)
+    with atomic_open(path) as fh:
+        pq.write_table(table, fh)
     entry = {
         "snapshot-id": sid,
         "statistics-path": path,

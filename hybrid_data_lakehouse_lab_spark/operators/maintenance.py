@@ -31,6 +31,7 @@ import shutil
 
 from pyspark.sql import SparkSession
 
+from .mor_diff import LEDGER_DIR
 from .timetravel import SnapshotTable
 
 
@@ -1079,9 +1080,10 @@ def find_orphan_files(root: str) -> list[str]:
     change-data, every SnapshotTable version dir — counts as reachable;
     only files NO system knows are orphans.
 
-    Driver-side O(manifests + files-on-disk); `metadata/` and
-    `_delta_log/` trees are out of scope (they are not data files and
-    a Delta facade may legitimately own extra files there).
+    Driver-side O(manifests + files-on-disk); the `metadata/`,
+    `_delta_log/` and change-set ledger (`mor_diff.LEDGER_DIR`) trees
+    are out of scope: they are export metadata, not data files, and
+    their owners collect their own garbage.
     """
     # primary facade must exist (same contract as before the round-10
     # refactor onto the shared reachability helpers)
@@ -1094,7 +1096,7 @@ def find_orphan_files(root: str) -> list[str]:
         | _snapshot_table_reachable(root)
     )
     root_abs = os.path.abspath(root)
-    skip_dirs = {"metadata", "_delta_log", "_change_data"}
+    skip_dirs = {"metadata", "_delta_log", "_change_data", LEDGER_DIR}
     orphans = []
     for dirpath, dirnames, filenames in os.walk(root_abs):
         rel = os.path.relpath(dirpath, root_abs)

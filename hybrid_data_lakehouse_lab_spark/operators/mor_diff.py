@@ -7,21 +7,33 @@ transition as "parent's files + deleted (file, row-position) pairs" or
 "parent's files + appended rows". This module is the one place that
 decides whether a transition is a pure delete or a pure append: each
 diff validates its own result against the caller's parquet-footer row
-totals and returns pinned positions (or the appended rows), or None —
-the caller then exports the always-correct rewrite model. `MorBase`
-holds the state both exporters carry between diffs: the base files,
-the mask of positions deleted since the last rewrite and the
-per-file deletion vectors. `scan_files` is the scan both the diffs'
-callers and the three table readers use to name a row's file and
-position.
+totals and writes the positions it found, or returns None — the caller
+then exports the always-correct rewrite model. `MorBase` holds the
+state both exporters carry between diffs: the base files, the mask of
+positions deleted since the last rewrite and the per-file deletion
+vectors. It also keeps the change-set ledger (`_mor_ledger/` under the
+table root): each transition's positions and folded deletion vectors
+are computed once, keyed by the base state they were diffed against,
+and every later export of any dialect on that root reads them back.
+`scan_files` is the scan both the diffs' callers and the three table
+readers use to name a row's file and position.
 """
 
 from __future__ import annotations
 
+import base64
+import contextlib
+import hashlib
+import json
 import os
+import shutil
 import urllib.parse
+from dataclasses import dataclass
 
 _SCHEME_RE = "^[a-zA-Z0-9+.-]+:/+"
+#: The change-set ledger's directory under a table root (`MorBase`).
+LEDGER_DIR = "_mor_ledger"
+_POS_SCHEMA = "file_path STRING, pos BIGINT"
 
 
 def _fresh_names(taken, *bases) -> list[str]:
@@ -250,20 +262,22 @@ def _broadcast_if_small(spark, df, est_bytes: int):
     return F.broadcast(df) if est_bytes <= limit else df
 
 
-def _hashed_excess(spark, left, right, left_rows: int, right_rows: int, names):
-    """Positions (_f, _p) of the `left` rows in excess of `right`'s
+def _hashed_excess(spark, left, right, left_rows: int, right_rows: int, names, out):
+    """Write the positions of the `left` rows in excess of `right`'s
     multiplicity for the same row value — Σ_k max(0, left_k − right_k)
-    per value k — localCheckpoint-pinned. Returns (positions, count,
-    longest path in bytes), or None unless `right` is a sub-multiset of
-    `left`: the count identity |positions| == left_rows − right_rows
-    (both from parquet footers) holds exactly then, and the partial
-    groups' collision verification must reproduce the positions.
+    per value k — as parquet (file_path, pos, partial) at `out`. The
+    write is the pin: every later use reads those files. Returns
+    (count, longest path in bytes), or None, with `out` removed, unless
+    `right` is a sub-multiset of `left`: the count identity |positions|
+    == left_rows − right_rows (both from parquet footers) holds exactly
+    then, and the partial groups' collision verification must reproduce
+    the positions.
 
     NARROW SHUFFLE: rows group by a 128-bit row-value hash (two xxhash64
     lanes) instead of the full-row struct, so the one shuffle carries
     (hash, file, pos) — ~32 B + path per row — rather than every data
     column. The count, the partial-group count and the longest path are
-    one aggregation, observed on the job that pins the candidates — no
+    one aggregation, observed on the job that writes the positions — no
     job of its own, and only three numbers leave the executors.
 
     Collision verification — PARTIAL groups only. A candidate group
@@ -271,12 +285,13 @@ def _hashed_excess(spark, left, right, left_rows: int, right_rows: int, names):
     entirely; taking ALL its occurrences is exact even under a hash
     collision, because any colliding value's `right` rows would hash
     into the same group. Only groups `right` partially covers depend on
-    the ranking choosing value-correct occurrences, so only they are
-    re-diffed on the full-value struct key, restricted to the affected
-    hash groups, and must reproduce the candidate positions exactly.
-    On unique-row tables that set is empty and verification is free —
-    measured: a blanket affected-group verification re-scanned both
-    sides per commit and cost more than the narrow shuffle saved."""
+    the ranking choosing value-correct occurrences (`partial` marks
+    their positions), so only they are re-diffed on the full-value
+    struct key, restricted to the affected hash groups, and must
+    reproduce the marked positions exactly. On unique-row tables that
+    set is empty and verification is free — measured: a blanket
+    affected-group verification re-scanned both sides per commit and
+    cost more than the narrow shuffle saved."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -291,7 +306,7 @@ def _hashed_excess(spark, left, right, left_rows: int, right_rows: int, names):
         hashed(right).groupBy(_h1, _h2).agg(F.count(F.lit(1)).alias(_nc))
     )
     stats = Observation()
-    cand = (
+    (
         _rank_minus_counts(
             hashed(left).select(_h1, _h2, _f, _p),
             right_counts,
@@ -308,25 +323,35 @@ def _hashed_excess(spark, left, right, left_rows: int, right_rows: int, names):
             F.count(_nc).alias("n_partial"),
             F.max(F.octet_length(_f)).alias("width"),
         )
-        .localCheckpoint()
+        .select(
+            F.col(_f).alias("file_path"),
+            F.col(_p).alias("pos"),
+            F.col(_nc).isNotNull().alias("partial"),
+        )
+        .write.mode("overwrite")
+        .parquet(out)
     )
     got = stats.get
     n, n_partial, width = got["n"], got["n_partial"], got["width"]
-    if n != left_rows - right_rows:
-        return None  # `right` holds a value beyond `left`'s multiplicity
-    if n_partial:
-        partial = cand.where(F.col(_nc).isNotNull())
+    # the count identity holds exactly when `right` is a sub-multiset
+    # of `left`
+    ok = n == left_rows - right_rows
+    if ok and n_partial:
+        partial = (
+            spark.read.schema(f"{_POS_SCHEMA}, partial BOOLEAN")
+            .parquet(out)
+            .where("partial")
+            .select(F.col("file_path").alias(_f), F.col("pos").alias(_p))
+        )
         aff = _broadcast_if_small(
-            spark, partial.select(_h1, _h2).distinct(), n_partial * 16
+            spark,
+            hashed(left).join(partial, [_f, _p], "left_semi").select(_h1, _h2).distinct(),
+            n_partial * 16,
         )
         key = F.struct(*_row_key_cols(right, cols))
 
         def affected(df):
-            return (
-                hashed(df)
-                .join(aff, [_h1, _h2], "left_semi")
-                .withColumn(_k, key)
-            )
+            return hashed(df).join(aff, [_h1, _h2], "left_semi").withColumn(_k, key)
 
         exact = (
             _rank_minus_counts(
@@ -341,12 +366,15 @@ def _hashed_excess(spark, left, right, left_rows: int, right_rows: int, names):
             .select(_f, _p)
             .localCheckpoint()
         )
-        if (
-            exact.count() != n_partial
-            or exact.join(partial, [_f, _p], "inner").count() != n_partial
-        ):
-            return None  # 128-bit collision in a partial group: rewrite
-    return cand.select(_f, _p), n, width or 0
+        # a 128-bit collision in a partial group fails this
+        ok = (
+            exact.count() == n_partial
+            and exact.join(partial, [_f, _p], "inner").count() == n_partial
+        )
+    if not ok:
+        shutil.rmtree(out, ignore_errors=True)
+        return None
+    return n, width or 0
 
 
 def _position_delete_diff(
@@ -356,13 +384,15 @@ def _position_delete_diff(
     child_dir: str,
     base_rows: int,
     child_rows: int,
+    out: str,
     mask_rows: int | None = None,
 ):
     """If `child_dir`'s rows are a sub-multiset of the MASKED base (see
-    `_diff_inputs`), return a pinned DataFrame(file_path STRING, pos
-    BIGINT) of the NEW positions to delete; else None (the transition
-    needs a rewrite, not a delete). `base_rows` (masked live rows) and
-    `child_rows` are the callers' parquet-footer totals.
+    `_diff_inputs`), write the NEW positions to delete as parquet
+    (`read_positions` reads them) at `out` and return (count, longest
+    path in bytes); else None (the transition needs a rewrite, not a
+    delete). `base_rows` (masked live rows) and `child_rows` are the
+    callers' parquet-footer totals.
 
     Distributed by construction — no driver-side row materialization:
     one shuffle groups base rows by row value, `row_number()` over
@@ -372,17 +402,11 @@ def _position_delete_diff(
     base_rows − |positions| == child_rows on those same positions
     (`_hashed_excess`), so no separate probe job runs. `mask_rows` is
     the row count of `deleted_so_far` (see `_diff_inputs`)."""
-    from pyspark.sql import functions as F
-
     inputs = _diff_inputs(spark, base_dirs, deleted_so_far, child_dir, mask_rows)
     if inputs is None:
         return None
     base, child, names = inputs
-    out = _hashed_excess(spark, base, child, base_rows, child_rows, names)
-    if out is None:
-        return None
-    _f, _p = names[:2]
-    return out[0].select(F.col(_f).alias("file_path"), F.col(_p).alias("pos"))
+    return _hashed_excess(spark, base, child, base_rows, child_rows, names, out)
 
 
 def _append_diff(
@@ -392,21 +416,22 @@ def _append_diff(
     child_dir: str,
     base_rows: int,
     child_rows: int,
+    out: str,
     mask_rows: int | None = None,
 ):
     """If `child_dir`'s rows are a super-multiset of the MASKED base (see
-    `_diff_inputs`), return a DataFrame of the APPENDED rows (child
-    minus base — exact multiset difference); else None (the transition
-    needs a rewrite, not an append). `base_rows` (masked live rows) and
-    `child_rows` are the callers' parquet-footer totals.
+    `_diff_inputs`), write the child positions of the APPENDED rows
+    (child minus base — exact multiset difference) as parquet at `out`
+    and return (count, longest path in bytes); else None (the
+    transition needs a rewrite, not an append). `base_rows` (masked
+    live rows) and `child_rows` are the callers' parquet-footer totals.
 
     Mirror image of `_position_delete_diff`: the child occurrences
     ranked past the base's multiplicity per row value are the appended
     positions, validated by |positions| == child_rows − base_rows. The
-    appended FULL rows move exactly once: a (file, pos) semi-join
-    against the child scan (they would move into the append files
-    regardless). `mask_rows` is the row count of `deleted_so_far` (see
-    `_diff_inputs`)."""
+    appended FULL rows move exactly once, when the exporter writes them
+    (`_appended_rows`). `mask_rows` is the row count of
+    `deleted_so_far` (see `_diff_inputs`)."""
     inputs = _diff_inputs(spark, base_dirs, deleted_so_far, child_dir, mask_rows)
     if inputs is None:
         return None
@@ -417,14 +442,138 @@ def _append_diff(
         # to the (always correct) rewrite model for variant tables
         return None
     _f, _p = names[:2]
-    child_fp = _with_file_pos(child, _f, _p)
-    out = _hashed_excess(spark, child_fp, base, child_rows, base_rows, names)
-    if out is None:
+    return _hashed_excess(
+        spark, _with_file_pos(child, _f, _p), base, child_rows, base_rows, names, out
+    )
+
+
+def read_positions(spark, path: str):
+    """The (file_path, pos) positions a diff wrote at `path`. A parquet
+    scan types every column nullable; the positions are never null, and
+    `coalesce` restores the required types the diff produced, so the
+    v2 position-delete files written from them declare both columns
+    required, as the spec says."""
+    from pyspark.sql import functions as F
+
+    df = spark.read.schema(_POS_SCHEMA).parquet(path)
+    return df.select(
+        F.coalesce("file_path", F.lit("")).alias("file_path"),
+        F.coalesce("pos", F.lit(-1)).alias("pos"),
+    )
+
+
+def _appended_rows(spark, child_dir: str, positions, n: int, width: int):
+    """The rows of `child_dir` at the `n` append-diff `positions`
+    (longest path `width` bytes): a (file, pos) semi-join against the
+    child scan."""
+    from pyspark.sql import functions as F
+
+    child = spark.read.parquet(child_dir)
+    _f, _p = _fresh_names(child.columns, "_f", "_p")
+    pos = positions.select(F.col("file_path").alias(_f), F.col("pos").alias(_p))
+    return (
+        _with_file_pos(child, _f, _p)
+        .join(_broadcast_if_small(spark, pos, n * (width + 8)), [_f, _p], "left_semi")
+        .select(*child.columns)
+    )
+
+
+def _listing(d: str) -> list:
+    """Every file under dir `d` as [absolute path, size], sorted."""
+    out = []
+    for dirpath, _dirnames, filenames in os.walk(os.path.abspath(d)):
+        for fn in filenames:
+            p = os.path.join(dirpath, fn)
+            out.append([p, os.path.getsize(p)])
+    return sorted(out)
+
+
+@dataclass
+class _Entry:
+    """A ledger entry: its path without the `.json` suffix, its JSON
+    document and its positions, read back."""
+
+    path: str
+    doc: dict
+    positions: object
+
+
+def _load_entry(path: str, want: dict) -> dict | None:
+    """The JSON document of the entry at `path` if it holds every
+    `want` item and the footer row total of its positions equals its
+    recorded count; else None. A torn JSON, a missing or unreadable
+    positions file or a count that disagrees is a miss."""
+    import pyarrow.parquet as pq
+
+    try:
+        with open(path + ".json") as fh:
+            doc = json.load(fh)
+        parts = [
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if not f.startswith((".", "_"))
+        ]
+        rows = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
+    except (OSError, ValueError):
         return None
-    pos, n, width = out
-    return child_fp.join(
-        _broadcast_if_small(spark, pos, n * (width + 8)), [_f, _p], "left_semi"
-    ).select(*child.columns)
+    if (
+        not isinstance(doc, dict)
+        or any(doc.get(k) != v for k, v in want.items())
+        or not isinstance(doc.get("width"), int)
+        or not parts
+        or rows != doc["positions"]
+    ):
+        return None
+    return doc
+
+
+def _write_entry(path: str, doc: dict) -> None:
+    from .util import atomic_open
+
+    with atomic_open(path + ".json", "w") as fh:
+        json.dump(doc, fh, sort_keys=True)
+
+
+def _decode_dvs(raw) -> dict | None:
+    """The entry's folded DVs as {file: (body, cardinality)}, or None
+    when absent or malformed."""
+    try:
+        return {
+            p: (base64.b64decode(b, validate=True), int(c)) for p, (b, c) in raw.items()
+        }
+    except (AttributeError, TypeError, ValueError):
+        return None
+
+
+def gc_ledger(root: str, live_dirs) -> None:
+    """Remove the ledger entries under `root` whose child dir is not in
+    `live_dirs` (the manifest's live snapshot dirs), and every file or
+    dir no kept entry names: a torn entry, a crash's temporary
+    positions. Removes the ledger dir when nothing is left."""
+    ledger = os.path.join(root, LEDGER_DIR)
+    if not os.path.isdir(ledger):
+        return
+    live = {os.path.abspath(d) for d in live_dirs}
+    names = os.listdir(ledger)
+    kept = set()
+    for n in names:
+        if n.endswith(".json"):
+            try:
+                with open(os.path.join(ledger, n)) as fh:
+                    child = json.load(fh).get("child_dir")
+            except (OSError, ValueError, AttributeError):
+                continue
+            if isinstance(child, str) and child in live:
+                kept.add(n.removesuffix(".json"))
+    for n in names:
+        if n.removesuffix(".json") not in kept:
+            p = os.path.join(ledger, n)
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
+    if not os.listdir(ledger):
+        os.rmdir(ledger)
 
 
 class MorBase:
@@ -436,20 +585,49 @@ class MorBase:
     - `files`: every live file of those dirs by absolute path, mapped to
       the entry the caller listed it with;
     - `live_rows`: the base's row count under the mask;
-    - `deleted`: the mask, the union of the pinned delete diffs since
-      the rewrite (None before the first), and `mask_rows`, its row
-      count;
+    - `deleted`: the mask, the union of the delete diffs since the
+      rewrite (None before the first), `mask_rows`, its row count, and
+      `chain`, their ledger keys in order;
     - `dv`: each touched file's cumulative deletion vector as (body
       bytes, cardinality). The driver holds compressed bitmaps, never
-      positions; the positions stay executor-side in `deleted`.
+      positions; the positions stay in parquet, read by the executors.
+
+    CHANGE-SET LEDGER. `delete_diff`, `append_diff` and `fold_dvs`
+    compute each transition once per table root, whichever exporter
+    asks first, and persist it under `<root>/_mor_ledger/`:
+
+    - key: sha256 of the diff kind and the base state — every file of
+      the base dirs as (absolute path, size), the `chain` (which names
+      the mask) and every file of the child dir as (absolute path,
+      size). Delta and Iceberg share an entry exactly when their bases
+      agree;
+    - `<key>/`: the positions, Spark-written parquet (file_path, pos,
+      partial) — deleted base positions, or for an append the child
+      positions of the appended rows, which stay a semi-join of the
+      child scan. It is written under a temporary name, then renamed
+      into place; the write is the diff's pin;
+    - `<key>.json`, written last (tmp + `os.replace`): the kind, the
+      child dir, the count identity's numbers (`live_rows`,
+      `child_rows`, `positions`), the longest path and, once folded,
+      the cumulative DV bodies (base64) and cardinalities of the files
+      the delete touches.
+
+    An entry is used only when its JSON parses, agrees with the current
+    key, kind and row counts, and the footer row total of its positions
+    equals |live_rows − child_rows|. Anything else is a miss: the diff
+    runs and the entry is overwritten. `gc_ledger` drops entries whose
+    child dir is no longer a live snapshot. A transition's positions
+    are O(rows it deletes or appends), so the ledger's size on disk is
+    O(deleted + appended positions).
 
     Each recorded delete adds `live_rows - child_rows` to `mask_rows`,
     which the diff's count identity guarantees is its row count. The
-    diffs are looked up as module globals at call time, so
-    tools/ab_mor_diff.py can swap them."""
+    diffs and the DV encoder are looked up as module globals at call
+    time, so a caller can swap or wrap them (tools/ab_mor_diff.py)."""
 
     def __init__(self, root: str):
         self.root = root
+        self.ledger = os.path.join(root, LEDGER_DIR)
         self.reset(None, None, [])
 
     def reset(self, base_dir: str | None, live_rows: int | None, files) -> None:
@@ -462,7 +640,9 @@ class MorBase:
         self.live_rows = live_rows
         self.deleted = None
         self.mask_rows = 0
+        self.chain: list[str] = []
         self.dv: dict[str, tuple[bytes, int]] = {}
+        self._pending: _Entry | None = None
 
     def ready(self) -> bool:
         """True when a transition can diff against the base: there is
@@ -474,46 +654,94 @@ class MorBase:
         )
 
     def delete_diff(self, spark, child_dir: str, child_rows: int):
-        """`_position_delete_diff` of `child_dir` against the masked
-        base; records nothing."""
-        return _position_delete_diff(
-            spark,
-            self.dirs,
-            self.deleted,
-            child_dir,
-            self.live_rows,
-            child_rows,
-            mask_rows=self.mask_rows,
-        )
+        """The positions `_position_delete_diff` finds for `child_dir`
+        against the masked base, as a DataFrame(file_path, pos) read
+        from the ledger, or None; records nothing."""
+        e = self._diff(spark, "delete", child_dir, child_rows, _position_delete_diff)
+        self._pending = e
+        return None if e is None else e.positions
 
     def append_diff(self, spark, child_dir: str, child_rows: int):
-        """`_append_diff` of `child_dir` against the masked base;
-        records nothing."""
-        return _append_diff(
-            spark,
-            self.dirs,
-            self.deleted,
-            child_dir,
-            self.live_rows,
-            child_rows,
-            mask_rows=self.mask_rows,
+        """The rows `_append_diff` finds appended in `child_dir` over
+        the masked base, or None; records nothing."""
+        e = self._diff(spark, "append", child_dir, child_rows, _append_diff)
+        if e is None:
+            return None
+        return _appended_rows(
+            spark, child_dir, e.positions, e.doc["positions"], e.doc["width"]
         )
+
+    def _diff(self, spark, kind: str, child_dir: str, child_rows: int, diff):
+        """The ledger entry of this transition: read when valid, else
+        computed by `diff` and stored. None when `diff` finds the
+        transition is not of `kind`."""
+        state = [kind, [_listing(d) for d in self.dirs], self.chain, _listing(child_dir)]
+        key = hashlib.sha256(json.dumps(state).encode()).hexdigest()
+        path = os.path.join(self.ledger, key)
+        want = {
+            "key": key,
+            "kind": kind,
+            "child_dir": os.path.abspath(child_dir),
+            "live_rows": self.live_rows,
+            "child_rows": child_rows,
+            "positions": abs(self.live_rows - child_rows),
+        }
+        doc = _load_entry(path, want)
+        if doc is None:
+            tmp = os.path.join(self.ledger, f".{key}.tmp")
+            got = diff(
+                spark,
+                self.dirs,
+                self.deleted,
+                child_dir,
+                self.live_rows,
+                child_rows,
+                tmp,
+                mask_rows=self.mask_rows,
+            )
+            if got is None:
+                return None
+            doc = dict(want, width=got[1])
+            # no JSON may name a positions dir while it is replaced
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(path + ".json")
+            shutil.rmtree(path, ignore_errors=True)
+            finalize_spark_parts(tmp, "pos")
+            os.rename(tmp, path)
+            _write_entry(path, doc)
+        return _Entry(path, doc, read_positions(spark, path))
+
+    def _take(self, deleted) -> _Entry:
+        if self._pending is None or deleted is not self._pending.positions:
+            raise ValueError("expected the last delete_diff result")
+        return self._pending
 
     def fold_dvs(self, deleted) -> list[str]:
-        """Fold a delete diff, before it is recorded, into the cumulative
-        deletion vectors of the files it touches (operators/dv_kernel.py,
-        on top of the positions already in the mask). Returns the
-        touched files' absolute paths, sorted."""
-        from .dv_kernel import dv_blobs_by_file
+        """Fold the last delete diff, before it is recorded, into the
+        cumulative deletion vectors of the files it touches
+        (operators/dv_kernel.py, on top of the positions already in the
+        mask), or take them from its ledger entry when an earlier
+        export folded it. Returns the touched files' absolute paths,
+        sorted."""
+        e = self._take(deleted)
+        dv = _decode_dvs(e.doc.get("dv"))
+        if dv is None:
+            from .dv_kernel import dv_blobs_by_file
 
-        rows = dv_blobs_by_file(deleted, self.deleted)
-        self.dv.update(
-            {r["file_path"]: (bytes(r["blob"]), int(r["cardinality"])) for r in rows}
-        )
-        return sorted(r["file_path"] for r in rows)
+            rows = dv_blobs_by_file(deleted, self.deleted)
+            dv = {r["file_path"]: (bytes(r["blob"]), int(r["cardinality"])) for r in rows}
+            e.doc["dv"] = {
+                p: [base64.b64encode(b).decode(), c] for p, (b, c) in dv.items()
+            }
+            _write_entry(e.path, e.doc)
+        self.dv.update(dv)
+        return sorted(dv)
 
     def record_delete(self, deleted, child_rows: int) -> None:
-        """The delete diff `deleted` took the base to `child_rows`."""
+        """The last delete diff, `deleted`, took the base to
+        `child_rows`."""
+        self.chain.append(self._take(deleted).doc["key"])
+        self._pending = None
         self.deleted = (
             deleted if self.deleted is None else self.deleted.unionByName(deleted)
         )
@@ -611,8 +839,6 @@ def finalize_spark_parts(
         )
         j += 1
     if not out:
-        import shutil
-
         shutil.rmtree(out_dir, ignore_errors=True)
     return out
 

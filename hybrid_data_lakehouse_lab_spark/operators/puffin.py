@@ -42,6 +42,8 @@ import json
 import struct
 import zlib
 
+from .util import atomic_open
+
 MAGIC = b"PFA1"
 DV_MAGIC_BYTES = bytes([0xD1, 0xD3, 0x39, 0x64])
 DELETION_VECTOR_V1 = "deletion-vector-v1"
@@ -102,9 +104,11 @@ def write_puffin(
     and `properties`. Returns the BlobMetadata list (with offsets) as
     written to the footer. With `compress_footer`, the FooterPayload is
     wrapped in an LZ4 frame (stored blocks — spec-valid, readable by
-    any conforming LZ4 decoder; operators/lz4.py) and flag bit 0 set."""
+    any conforming LZ4 decoder; operators/lz4.py) and flag bit 0 set.
+    Written all-or-nothing (`util.atomic_open`): a re-export that
+    crashes midway leaves the previous file whole."""
     metas = []
-    with open(path, "wb") as fh:
+    with atomic_open(path) as fh:
         fh.write(MAGIC)
         off = len(MAGIC)
         for b in blobs:

@@ -110,6 +110,8 @@ import urllib.request
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from .util import atomic_open
+
 UNIT_SEP = "\x1f"  # spec: multipart namespace separator in URL paths
 
 
@@ -1283,10 +1285,8 @@ class IcebergRestCatalog:
                 with open(hint_path) as fh:
                     current = int(fh.read().strip())
             if current is None or current < version:
-                tmp = os.path.join(meta_dir, ".version-hint.tmp")
-                with open(tmp, "w") as fh:
+                with atomic_open(hint_path, "w") as fh:
                     fh.write(str(version))
-                os.replace(tmp, hint_path)
             self._tables[ident] = os.path.dirname(meta_dir)
             self._namespaces.setdefault(ns, {})
             loc2, metadata = self._load(ident)

@@ -49,6 +49,8 @@ import struct
 import uuid as _uuid
 import zlib
 
+from .util import atomic_open
+
 DV_MAGIC = 1681511377
 _COOKIE_NO_RUN = 12346
 _COOKIE_RUN = 12347
@@ -246,9 +248,11 @@ def decode_dv_blob(data: bytes) -> list[int]:
 def write_dv_file(path: str, blobs: list[bytes]) -> list[tuple[int, int]]:
     """Write a DV file (format-version byte 1, then per blob:
     int32-BE size, blob, int32-BE crc32). Returns (offset, sizeInBytes)
-    per blob, offset pointing at the size field per the spec."""
+    per blob, offset pointing at the size field per the spec. Written
+    all-or-nothing (`util.atomic_open`): a re-export that crashes midway
+    leaves the previous file whole."""
     descs = []
-    with open(path, "wb") as fh:
+    with atomic_open(path) as fh:
         fh.write(b"\x01")
         off = 1
         for blob in blobs:

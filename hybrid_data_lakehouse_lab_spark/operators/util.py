@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 import urllib.parse
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 #: Size gate for ``fan_out(min_bytes=...)`` call sites: the measured
 #: crossover (local[32], interleaved A/B) where a round-robin shuffle of
@@ -57,6 +60,27 @@ def _input_bytes(files: list[str]) -> int | None:
         except Exception:
             return None
     return total
+
+
+@contextlib.contextmanager
+def atomic_open(path: str, mode: str = "wb"):
+    """Open `path` for an all-or-nothing write: the bytes go to a hidden
+    sibling `.<name>.tmp`, which `os.replace` swaps onto `path` only
+    when the block exits cleanly. On an exception the sibling is
+    removed and `path` keeps its previous content, so a crash never
+    leaves a torn file that a committed log or metadata tree reads. The
+    one writer of the exporters' commit files, manifests, deletion
+    vectors, Puffin files and ledger entries."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.tmp")
+    try:
+        with open(tmp, mode) as fh:
+            yield fh
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
 
 
 def local_frame(spark, rows, schema) -> DataFrame:

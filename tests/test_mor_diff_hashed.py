@@ -1,7 +1,9 @@
 """Focused tests for the narrow-shuffle transition diffs
 (operators/mor_diff.py): rows group by a 128-bit row-value hash instead
 of the full-row struct, and each diff validates itself by the count
-identity against the footer totals it is given. These pin (a) hashed
+identity against the footer totals it is given and writes the
+positions it found as parquet (read back here through
+`read_positions`). These pin (a) hashed
 output == the full-row-struct reference diff below on duplicate-heavy
 and null-heavy data, (b) the null-skip hazard of xxhash64 (null
 positions must be part of the hash stream), (c) the pure-delete and
@@ -17,6 +19,7 @@ from pyspark.sql import functions as F
 
 from hybrid_data_lakehouse_lab_spark.operators.mor_diff import (
     _append_diff,
+    _appended_rows,
     _broadcast_if_small,
     _diff_inputs,
     _fresh_names,
@@ -24,11 +27,34 @@ from hybrid_data_lakehouse_lab_spark.operators.mor_diff import (
     _rank_minus_counts,
     _row_key_cols,
     _upsert_diff,
+    read_positions,
 )
 
 
 def _rows(spark, d):
     return spark.read.parquet(d).count()
+
+
+def _delete_diff(spark, out, *args, **kw):
+    """`_position_delete_diff` writing at `out`: its positions read
+    back, or None (and nothing left at `out`)."""
+    got = _position_delete_diff(spark, *args, out, **kw)
+    if got is None:
+        assert not os.path.exists(out)
+        return None
+    return read_positions(spark, out)
+
+
+def _append(spark, out, base_dirs, prior, child_dir, base_rows, child_rows):
+    """`_append_diff` writing at `out`: the appended child rows, or
+    None (and nothing left at `out`)."""
+    got = _append_diff(
+        spark, base_dirs, prior, child_dir, base_rows, child_rows, out
+    )
+    if got is None:
+        assert not os.path.exists(out)
+        return None
+    return _appended_rows(spark, child_dir, read_positions(spark, out), *got)
 
 
 def struct_position_delete_diff(spark, base_dirs, deleted_so_far, child_dir):
@@ -78,11 +104,11 @@ def diff_dirs(spark, tmp_path):
     return base_d, child_d
 
 
-def test_hashed_matches_struct_path(spark, diff_dirs):
+def test_hashed_matches_struct_path(spark, diff_dirs, tmp_path):
     base_d, child_d = diff_dirs
     n_base, n_child = _rows(spark, base_d), _rows(spark, child_d)
-    hashed = _position_delete_diff(
-        spark, [base_d], None, child_d, n_base, n_child
+    hashed = _delete_diff(
+        spark, str(tmp_path / "pos"), [base_d], None, child_d, n_base, n_child
     )
     struct = struct_position_delete_diff(spark, [base_d], None, child_d)
     h = {(r.file_path, r.pos) for r in hashed.collect()}
@@ -100,7 +126,7 @@ def test_shrinking_non_submultiset_child_is_not_a_delete(spark, tmp_path):
     schema = "k INT, s STRING"
     spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], schema).write.parquet(b)
     spark.createDataFrame([(1, "a"), (9, "z")], schema).write.parquet(c)
-    assert _position_delete_diff(spark, [b], None, c, 3, 2) is None
+    assert _delete_diff(spark, str(tmp_path / "pos"), [b], None, c, 3, 2) is None
     assert struct_position_delete_diff(spark, [b], None, c) is None
 
 
@@ -117,7 +143,7 @@ def test_null_positions_enter_the_hash_stream(spark, tmp_path):
     spark.createDataFrame(
         [(None, "a", 1.0), ("a", None, 1.0)], schema
     ).write.parquet(c)
-    d = _position_delete_diff(spark, [b], None, c, 3, 2)
+    d = _delete_diff(spark, str(tmp_path / "pos"), [b], None, c, 3, 2)
     positions = d.collect()
     assert len(positions) == 1
     full = (
@@ -154,8 +180,8 @@ def test_append_diff_matches_exceptall(spark, tmp_path):
         2
     ).write.parquet(c)
     n_base = len(base_rows)
-    out = _append_diff(
-        spark, [b], None, c, n_base, n_base + len(appended_rows)
+    out = _append(
+        spark, str(tmp_path / "pos"), [b], None, c, n_base, n_base + len(appended_rows)
     )
     got = sorted([tuple(r) for r in out.collect()])
     ref = sorted(
@@ -174,7 +200,8 @@ def test_append_diff_matches_exceptall(spark, tmp_path):
         base_rows[:3] + appended_rows, schema
     ).write.parquet(c2)
     assert (
-        _append_diff(spark, [b], None, c2, n_base, _rows(spark, c2)) is None
+        _append(spark, str(tmp_path / "pos2"), [b], None, c2, n_base, _rows(spark, c2))
+        is None
     )
 
 
@@ -234,12 +261,12 @@ def test_prior_deletes_masked_before_hashing(spark, tmp_path):
     )
     # child drops the remaining (1,'a') and keeps (2,'b'), (3,'c')
     spark.createDataFrame([(2, "b"), (3, "c")], schema).write.parquet(c)
-    d = _position_delete_diff(spark, [b], prior, c, 3, 2, mask_rows=1)
+    d = _delete_diff(spark, str(tmp_path / "pos"), [b], prior, c, 3, 2, mask_rows=1)
     positions = {(r.file_path, r.pos) for r in d.collect()}
     assert positions == {(os.path.join(b, f), 1)}
     # a mask must come with its row count: the broadcast is sized on it
     with pytest.raises(ValueError, match="mask_rows"):
-        _position_delete_diff(spark, [b], prior, c, 3, 2)
+        _position_delete_diff(spark, [b], prior, c, 3, 2, str(tmp_path / "pos2"))
 
 
 def _broadcasts(df) -> bool:
@@ -285,8 +312,8 @@ def test_broadcast_gates_follow_the_byte_threshold(spark, tmp_path):
             )
             masked = _diff_inputs(spark, [b], prior, c, mask_rows=2)[0]
             assert _broadcasts(masked) == (threshold != "1")
-            d = _position_delete_diff(spark, [b], None, c, 12, 8)
-            a = _append_diff(spark, [b], None, c2, 12, 14)
+            d = _delete_diff(spark, str(tmp_path / f"d{threshold}"), [b], None, c, 12, 8)
+            a = _append(spark, str(tmp_path / f"a{threshold}"), [b], None, c2, 12, 14)
             results.append(
                 (
                     sorted((r.file_path, r.pos) for r in d.collect()),

@@ -17,7 +17,9 @@ values that a file URI percent-encodes. The same holds for
 `iceberg_inspect` metadata tables, the NDV statistics export and
 read (`export_iceberg_statistics`, `read_iceberg_statistics`) and two
 `Scd2Pipeline` batches (the checkpoint audit frame included): each
-must equal its unpatched result. Every `udf` / `pandas_udf` column is
+must equal its unpatched result. On a root whose change-set ledger an
+earlier export filled, the exports that read it back start no Python
+worker either. Every `udf` / `pandas_udf` column is
 refused too, at `UserDefinedFunction.__call__`.
 """
 
@@ -49,6 +51,7 @@ from hybrid_data_lakehouse_lab_spark.operators.iceberg_meta import (
 from hybrid_data_lakehouse_lab_spark.operators.maintenance import (
     rewrite_delete_files,
 )
+from hybrid_data_lakehouse_lab_spark.operators.mor_diff import LEDGER_DIR
 from hybrid_data_lakehouse_lab_spark.operators.pipeline import Scd2Pipeline
 from hybrid_data_lakehouse_lab_spark.operators.timetravel import SnapshotTable
 
@@ -160,6 +163,21 @@ def test_export_and_read_start_no_python_worker(
     # both deletes exported as deletion-vector commits
     dvs = glob.glob(os.path.join(glob.escape(t.root), "deletion_vector_*.bin"))
     assert len(dvs) == 2
+
+
+def test_ledger_reads_start_no_python_worker(spark, tmp_path, monkeypatch):
+    """The Delta export diffs both deletes and folds their deletion
+    vectors into the root's ledger; the Iceberg v2 and v3 exports then
+    read those entries back (v2 also diffs the append, v3 reads it)."""
+    t = _history(spark, str(tmp_path / "t"))
+    versions = [e["version"] for e in t._load_manifest()["history"]["main"]]
+    export_delta_log(t, mor_deletes=True, change_data=True)
+    assert os.listdir(os.path.join(t.root, LEDGER_DIR))
+    _forbid_python_workers(spark, monkeypatch)
+    export_iceberg_metadata(t, format_version=2)
+    _check_reads(spark, t, versions, iceberg_only=True)
+    export_iceberg_metadata(t, format_version=3)
+    _check_reads(spark, t, versions)
 
 
 def _sorted_rows(df):

@@ -3,14 +3,17 @@ checkout's versions, on the 10× slice, in ONE JVM (guide §1: this
 host's throttle makes sequential A/B invalid — interleave variants).
 
 The old implementations are loaded from another checkout (a clone of
-an earlier commit) as a separate module; shims adapt their signatures
-(older diffs left the count-identity check to the exporters, so the
-delete shim runs it). Each variant round swaps the three diff
-functions in operators.mor_diff (where `MorBase` looks up the delete
-and append diffs at call time) and in operators.iceberg_meta (which
-imports the upsert diff), runs the lane list with the noop sink, and
-records per-lane times. Min-of-N per
-variant is printed per lane plus totals.
+an earlier commit) as a separate module; a shim adapts the delete
+diff's signature (older diffs left the count-identity check to the
+exporters, so the shim runs it, and returned a frame, so the shim
+writes its positions where the current diff writes them). The append
+diff is not swapped: the older one returned the appended rows, not
+the child positions the current one writes. Each variant round swaps
+the delete and upsert diffs in operators.mor_diff (where `MorBase`
+looks up the delete diff at call time) and in operators.iceberg_meta
+(which imports the upsert diff), runs the lane list with the noop
+sink, and records per-lane times. Min-of-N per variant is printed per
+lane plus totals.
 
 Usage: python tools/ab_mor_diff.py <old_repo_root> <n_rounds> [lane ...]
 """
@@ -55,31 +58,31 @@ def main() -> None:
     spec.loader.exec_module(old)
 
     # `mask_rows` sizes the newer diffs' mask broadcast; the older
-    # diffs broadcast the mask unconditionally, so the shims drop it
+    # diffs broadcast the mask unconditionally, so the shim drops it
     def old_delete_shim(
-        spark, base_dirs, prior, child_dir, base_rows, child_rows, mask_rows=None
+        spark, base_dirs, prior, child_dir, base_rows, child_rows, out, mask_rows=None
     ):
+        from pyspark.sql import functions as F
+
         # the old diff left the count-identity check to its callers;
         # its fifth argument False selected that count-identity mode
         d = old._position_delete_diff(spark, base_dirs, prior, child_dir, False)
         if d is None:
             return None
         d = d.localCheckpoint()
-        return d if base_rows - d.count() == child_rows else None
-
-    def old_append_shim(
-        spark, base_dirs, prior, child_dir, base_rows, child_rows, mask_rows=None
-    ):
-        return old._append_diff(spark, base_dirs, prior, child_dir)
+        n = d.count()
+        if base_rows - n != child_rows:
+            return None
+        d.withColumn("partial", F.lit(False)).write.mode("overwrite").parquet(out)
+        width = d.agg(F.max(F.octet_length("file_path"))).first()[0]
+        return n, width or 0
 
     new_fns = {
         "_position_delete_diff": mor_diff._position_delete_diff,
-        "_append_diff": mor_diff._append_diff,
         "_upsert_diff": mor_diff._upsert_diff,
     }
     old_fns = {
         "_position_delete_diff": old_delete_shim,
-        "_append_diff": old_append_shim,
         "_upsert_diff": old._upsert_diff,
     }
 

@@ -27,6 +27,20 @@ records:
   the sha256 of its Puffin file and each theta blob's sha256 and `ndv`
   property (by field id) are recorded.
 
+The change-set ledger an export leaves under `_mor_ledger/` is digested
+like any other file: entry JSON by sha256, positions by rows.
+
+Each history also gets a `chained` entry: the benchmark's order on one
+root (Delta DV+CDF, then Iceberg v2, then v3), then a second v3 export,
+which reads every diff from the ledger the first three filled. It
+records the files outside the Delta log (`_delta_log/`, `_change_data/`,
+`deletion_vector_*.bin`), the Iceberg reads and `same_as_fresh_v3`:
+whether those files, the ledger's aside, and the reads equal the fresh
+`iceberg_v3` entry's. The ledger is set aside there only because a
+Delta export also diffs transitions the Iceberg exports never do (a
+delete after an append, which Delta exports as a rewrite), so its
+entries are a superset of the fresh v3 export's.
+
 An export or read that raises records its exception instead. Run
 `digest` once per checkout with that checkout first on PYTHONPATH (the
 package is resolved from there; this file's own checkout is only the
@@ -47,6 +61,7 @@ import sys
 sys.path.append(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HISTORIES = ["dups", "dups_part", "upsert_days", "evolve", "sorted"]
+LEDGER_DIR = "_mor_ledger"  # mor_diff.LEDGER_DIR; a parent checkout may lack it
 HIDDEN_DAYS = {"dt": ("ts", "day")}
 # every history has an integer `k`
 PRUNE = [("k", "<", 40)]
@@ -192,22 +207,27 @@ def build(out: str) -> None:
 
 
 def _exports(name):
-    """(label, exporter name, kwargs) for every export of history `name`."""
+    """(label, [(exporter name, kwargs), ...]) for every export of
+    history `name`: one export each, or the chained run's four in
+    order (see the module docstring)."""
     ice = {}
     if name == "upsert_days":
         ice["hidden_partitions"] = HIDDEN_DAYS
     if name == "evolve":
         ice["renamed_columns"] = {"amount": "a"}
-    out = [(f"iceberg_v{v}", "iceberg", dict(ice, format_version=v)) for v in (1, 2, 3)]
+    fv = {v: ("iceberg", dict(ice, format_version=v)) for v in (1, 2, 3)}
+    dv_cdf = ("delta", {"mor_deletes": True, "change_data": True})
+    out = [(f"iceberg_v{v}", [fv[v]]) for v in (1, 2, 3)]
+    out.append(("chained", [dv_cdf, fv[2], fv[3], fv[3]]))
     if name == "upsert_days":
         out += [
-            (f"iceberg_upsert_v{v}", "iceberg", dict(ice, format_version=v, upsert_key=["k"]))
+            (f"iceberg_upsert_v{v}", [("iceberg", dict(ice, format_version=v, upsert_key=["k"]))])
             for v in (2, 3)
         ]
     out += [
-        ("delta", "delta", {}),
-        ("delta_dv", "delta", {"mor_deletes": True}),
-        ("delta_dv_cdf", "delta", {"mor_deletes": True, "change_data": True}),
+        ("delta", [("delta", {})]),
+        ("delta_dv", [("delta", {"mor_deletes": True})]),
+        ("delta_dv_cdf", [dv_cdf]),
     ]
     return out
 
@@ -322,6 +342,23 @@ def _statistics(t) -> dict:
     return out
 
 
+def _delta_owned(rel: str) -> bool:
+    return rel.startswith(("_delta_log/", "_change_data/", "deletion_vector_"))
+
+
+def _same_as_fresh(chained: dict, fresh: dict) -> bool:
+    def iceberg(files):
+        return {
+            k: v for k, v in files.items()
+            if not k.startswith(LEDGER_DIR + "/") and not _delta_owned(k)
+        }
+
+    return (
+        iceberg(chained["files"]) == iceberg(fresh["files"])
+        and chained["reads"] == fresh["reads"]
+    )
+
+
 def digest(out: str, out_json: str) -> None:
     from hybrid_data_lakehouse_lab_spark.operators.delta_log import export_delta_log
     from hybrid_data_lakehouse_lab_spark.operators.iceberg_meta import (
@@ -329,12 +366,13 @@ def digest(out: str, out_json: str) -> None:
     )
     from hybrid_data_lakehouse_lab_spark.operators.timetravel import SnapshotTable
 
+    exporters = {"iceberg": export_iceberg_metadata, "delta": export_delta_log}
     spark = _spark()
     out = os.path.abspath(out)
     result = {}
     for name in HISTORIES:
         work = os.path.join(out, "work", name)
-        for label, kind, kw in _exports(name):
+        for label, steps in _exports(name):
             shutil.rmtree(work, ignore_errors=True)
             subprocess.run(
                 ["cp", "-a", os.path.join(out, "pristine", name), work], check=True
@@ -343,15 +381,21 @@ def digest(out: str, out_json: str) -> None:
             n = len(t._load_manifest()["history"]["main"])
             entry = {}
             try:
-                if kind == "iceberg":
-                    export_iceberg_metadata(t, **kw)
-                else:
-                    export_delta_log(t, **kw)
+                for kind, kw in steps:
+                    exporters[kind](t, **kw)
             except Exception as e:
                 entry["export_error"] = _err(e)
-            entry["files"] = _tree(work)
+            kind, kw = steps[-1]
+            files = _tree(work)
+            if label == "chained":
+                files = {k: v for k, v in files.items() if not _delta_owned(k)}
+            entry["files"] = files
             entry["reads"] = _reads(spark, work, kind, kw, n)
-            if kind == "iceberg":
+            if label == "chained":
+                entry["same_as_fresh_v3"] = _same_as_fresh(
+                    entry, result[f"{name}/iceberg_v3"]
+                )
+            elif kind == "iceberg":
                 entry["statistics"] = _statistics(t)
             result[f"{name}/{label}"] = entry
             print(name, label, entry.get("export_error", "ok"), flush=True)
