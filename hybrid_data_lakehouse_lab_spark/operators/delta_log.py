@@ -63,8 +63,8 @@ from .mor_diff import (
     scan_files,
     write_spark_parts,
 )
-from .timetravel import SnapshotTable
-from .util import atomic_open, local_frame
+from .timetravel import SnapshotTable, snapshot_schema
+from .util import atomic_open, local_frame, read_parquet
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
@@ -304,7 +304,7 @@ def _delta_stats(path: str) -> str | None:
 
 
 def _write_change_data(
-    spark, root: str, version: int, deleted, touched: list, pv_of: dict
+    spark, root: str, version: int, deleted, touched: list, pv_of: dict, schema
 ) -> list[dict]:
     """Materialize THIS commit's newly-deleted rows as `_change_data/`
     cdc parquet (`_change_type='delete'`) and return the `cdc` actions.
@@ -314,13 +314,14 @@ def _write_change_data(
     values (broadcast file→values map) and route through partitionBy so
     change files mirror the data layout. Files are renamed
     deterministically (`cdc-NNNNN.parquet`) so re-exports reference
-    stable paths."""
+    stable paths. The touched files are read with `schema`, the data
+    schema of the snapshot they belong to (None infers)."""
     from pyspark.sql import functions as F
 
     pairs = deleted.select(
         F.col("file_path").alias("_f"), F.col("pos").alias("_p")
     )
-    rows = _with_file_pos(spark.read.parquet(*touched), "_f", "_p").join(
+    rows = _with_file_pos(read_parquet(spark, schema, *touched), "_f", "_p").join(
         F.broadcast(pairs), ["_f", "_p"], "left_semi"
     )
     pcols = next((list(pv) for pv in pv_of.values() if pv), [])
@@ -443,7 +444,8 @@ def export_delta_log(
     for i, ev in enumerate(events):
         snap = by_version[ev["version"]]
         files = _snapshot_files(table.root, snap["path"])
-        snap_schema = table.spark.read.parquet(snap["path"]).schema
+        data_schema = snapshot_schema(m, snap)
+        snap_schema = read_parquet(table.spark, data_schema, snap["path"]).schema
         snap_has_variant = _contains_variant(snap_schema)
         schema_str = snap_schema.json()
         # partition columns in path-segment order (every file of one
@@ -483,7 +485,9 @@ def export_delta_log(
         ):
             cur_rows = sum(_footer_rows(table.root, files))
             if cur_rows < base.live_rows:
-                deleted = base.delete_diff(table.spark, snap["path"], cur_rows)
+                deleted = base.delete_diff(
+                    table.spark, snap["path"], cur_rows, data_schema
+                )
                 if deleted is not None:
                     changed = base.fold_dvs(deleted)
                     base.record_delete(deleted, cur_rows)
@@ -606,6 +610,7 @@ def export_delta_log(
                             p: old.get("partitionValues") or {}
                             for p, old in zip(changed, olds)
                         },
+                        base.schema,
                     )
                 )
                 referenced_cdc_dirs.add(f"v{i:020d}")
@@ -648,7 +653,7 @@ def export_delta_log(
             if mor_deletes:
                 if cur_rows is None:
                     cur_rows = sum(_footer_rows(table.root, files))
-                base.reset(snap["path"], cur_rows, stat_files)
+                base.reset(snap["path"], cur_rows, stat_files, data_schema)
 
         with atomic_open(os.path.join(log_dir, f"{i:020d}.json"), "w") as fh:
             for a in actions:

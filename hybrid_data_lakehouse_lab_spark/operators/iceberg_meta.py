@@ -105,8 +105,8 @@ from .delta_log import (
     _snapshot_files,
 )
 from .iceberg_transforms import _PARAM_RE
-from .timetravel import SnapshotTable
-from .util import atomic_open, local_frame
+from .timetravel import SnapshotTable, snapshot_schema
+from .util import atomic_open, local_frame, read_parquet
 
 _EPOCH = datetime.date(1970, 1, 1)
 
@@ -1028,7 +1028,9 @@ class _IcebergExport:
     history: the merge-on-read base (`MorBase`) with the spec and
     schema of its rewrite, the manifest-list rows of the previous
     snapshot, the v3 row-id counter, the sort orders, and what this
-    export wrote (for the stale-file GC)."""
+    export wrote (for the stale-file GC). `data_schemas` are the data
+    schemas the snapshot manifest records for the history's events
+    (None where it records none)."""
 
     table: SnapshotTable
     meta_dir: str
@@ -1038,6 +1040,7 @@ class _IcebergExport:
     schemas: _SchemaHistory
     specs: _SpecRegistry
     base: MorBase
+    data_schemas: list
     base_spec_id: int = 0  # spec of the last full-rewrite snapshot
     base_schema_sid: int = 0  # schema of the last full-rewrite snapshot
     prev_rows: list[dict] = field(default_factory=list)
@@ -1394,7 +1397,7 @@ def _rewrite_commit(
     )
     x.base_spec_id = sid
     x.base_schema_sid = x.schemas.schema_ids[i]
-    x.base.reset(snap_dir, sum(file_rows), files)
+    x.base.reset(snap_dir, sum(file_rows), files, x.data_schemas[i])
     return [row], "replace" if is_compaction else "overwrite"
 
 
@@ -1737,6 +1740,7 @@ def export_iceberg_metadata(
         raise ValueError(f"branch {branch!r} has no commits to export")
     by_version = {s["version"]: s for s in m["snapshots"]}
     snap_dirs = [by_version[ev["version"]]["path"] for ev in events]
+    data_schemas = [snapshot_schema(m, by_version[ev["version"]]) for ev in events]
 
     meta_dir = os.path.join(table.root, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
@@ -1760,7 +1764,10 @@ def export_iceberg_metadata(
     schemas = _schema_history(
         [
             [(f.name, f.dataType.simpleString()) for f in schema]
-            for schema in (table.spark.read.parquet(d).schema for d in snap_dirs)
+            for schema in (
+                read_parquet(table.spark, s, d).schema
+                for d, s in zip(snap_dirs, data_schemas)
+            )
         ],
         [ev["version"] for ev in events],
         hidden_partitions,
@@ -1786,6 +1793,7 @@ def export_iceberg_metadata(
         schemas,
         _SpecRegistry(hidden_partitions, format_version),
         MorBase(table.root),
+        data_schemas,
     )
     list_schema = _manifest_list_schema(format_version)
     snapshots = []
@@ -1822,6 +1830,8 @@ def export_iceberg_metadata(
                     snap_dirs[i],
                     upsert_key,
                     verified_unique=x.verified_unique,
+                    parent_schema=data_schemas[i - 1],
+                    child_schema=data_schemas[i],
                 )
                 if changed is not None:
                     upsert = (changed, del_keys)
@@ -1850,10 +1860,14 @@ def export_iceberg_metadata(
             and schemas.schema_ids[i] == x.base_schema_sid
         ):
             if format_version >= 2 and total_rc < x.base.live_rows:
-                deleted = x.base.delete_diff(table.spark, snap_dirs[i], total_rc)
+                deleted = x.base.delete_diff(
+                    table.spark, snap_dirs[i], total_rc, data_schemas[i]
+                )
             elif total_rc > x.base.live_rows:
                 # incremental APPEND (all format versions, v1 included)
-                appended = x.base.append_diff(table.spark, snap_dirs[i], total_rc)
+                appended = x.base.append_diff(
+                    table.spark, snap_dirs[i], total_rc, data_schemas[i]
+                )
         if upsert is not None:
             rows, operation = _upsert_commit(x, i, *upsert)
         elif format_version >= 3 and (

@@ -43,9 +43,13 @@ def compact_partition_dir(
     retire_metadata: bool = True,
     skip_partitions: set[str] | None = None,
 ) -> dict[str, int]:
-    """Rewrite each hive partition of `path` into ceil(size/target) files.
+    """Rewrite each hive partition of `path` holding more parquet files
+    than its target, ceil(size/target), into that many files. A
+    partition already at or under its target is left as it is, so a
+    closed partition is rewritten once, not on every call.
 
-    Returns {partition_value: n_files_after}. Uses a temp rewrite +
+    Returns {partition_value: n_files_after} for the partitions it
+    rewrote ({} when none needed it). Uses a temp rewrite +
     directory swap per partition so a crash leaves either the old or the
     new complete fileset. At cluster scale run per-partition rewrites in
     parallel batches and prefer the table format's native compaction
@@ -77,12 +81,14 @@ def compact_partition_dir(
             continue
         if skip_partitions and entry.split("=", 1)[1] in skip_partitions:
             continue
-        size = sum(
+        sizes = [
             os.path.getsize(os.path.join(pdir, f))
             for f in os.listdir(pdir)
             if f.endswith(".parquet")
-        )
-        n_files = max(1, math.ceil(size / target_file_bytes))
+        ]
+        n_files = max(1, math.ceil(sum(sizes) / target_file_bytes))
+        if len(sizes) <= n_files:
+            continue  # already compact
         tmp = pdir + ".compact.tmp"
         (
             spark.read.parquet(pdir)
@@ -132,7 +138,12 @@ def vacuum_snapshots(
         return []
     keep = [s for s in snaps if s not in expired]
     table._commit_manifest(
-        {"current": m["current"], "snapshots": keep, "branches": m["branches"]}
+        {
+            "current": m["current"],
+            "snapshots": keep,
+            "branches": m["branches"],
+            "schemas": m["schemas"],
+        }
     )
     for s in expired:
         shutil.rmtree(s["path"], ignore_errors=True)
@@ -773,7 +784,7 @@ def compact_snapshot(
     head_dir = snap["path"]
     # partition layout of the head (nested dirs like part=a/dt=.../...)
     pcols = _partition_layout(head_dir)
-    df = table.spark.read.parquet(head_dir)
+    df = table.read_snapshot(m, snap)
     size = sum(
         os.path.getsize(os.path.join(dp, f))
         for dp, _dn, fns in os.walk(head_dir)
@@ -877,7 +888,7 @@ def rewrite_data_files_sorted(
             return None  # already clustered this way; nothing accreted
     head_dir = snap["path"]
     pcols = _partition_layout(head_dir)
-    df = table.spark.read.parquet(head_dir)
+    df = table.read_snapshot(m, snap)
     size = sum(
         os.path.getsize(os.path.join(dp, f))
         for dp, _dn, fns in os.walk(head_dir)
@@ -1002,7 +1013,7 @@ def apply_retention(
         raise ValueError(f"branch {branch!r} has no snapshots")
     m = table._load_manifest()
     snap = next(s for s in m["snapshots"] if s["version"] == head)
-    df = table.spark.read.parquet(snap["path"])
+    df = table.read_snapshot(m, snap)
     expired = df.where(f"NOT ({keep_predicate})").limit(1).count()
     if not expired:
         return None
@@ -1054,7 +1065,7 @@ def rewrite_delete_files(
         return None
     pcols = _partition_layout(snap["path"])
     return table.write(
-        table.spark.read.parquet(snap["path"]),
+        table.read_snapshot(m, snap),
         partition_by=pcols or None,
         committed_at_ms=committed_at_ms,
         branch=branch,

@@ -205,6 +205,8 @@ def _diff_inputs(
     deleted_so_far,
     child_dir: str,
     mask_rows: int | None = None,
+    base_schema=None,
+    child_schema=None,
 ):
     """The two sides of a transition diff: `(base, child, names)` where
     `base` is the MASKED base — the union of `base_dirs`' files (the
@@ -214,7 +216,9 @@ def _diff_inputs(
     `names` are the working-column names (_f, _p, _k, _r, _nc, _h1, _h2)
     made fresh against the table's columns. None when the child's
     schema differs from a base dir's: a schema change is never a pure
-    delete or append.
+    delete or append. Every base dir is read with `base_schema` and the
+    child with `child_schema`, the data schemas the snapshot manifest
+    records (`util.read_parquet`; None infers).
 
     `mask_rows` is the row count of `deleted_so_far`, known without a
     job (`MorBase` tracks it from the count identities). The mask is
@@ -222,10 +226,12 @@ def _diff_inputs(
     `spark.sql.autoBroadcastJoinThreshold` (`_broadcast_if_small`)."""
     from pyspark.sql import functions as F
 
+    from .util import read_parquet
+
     if deleted_so_far is not None and mask_rows is None:
         raise ValueError("a prior-delete mask needs its row count (mask_rows)")
-    scans = [spark.read.parquet(d) for d in base_dirs]
-    child = spark.read.parquet(child_dir)
+    scans = [read_parquet(spark, base_schema, d) for d in base_dirs]
+    child = read_parquet(spark, child_schema, child_dir)
     if any(sorted(s.dtypes) != sorted(child.dtypes) for s in scans):
         return None
     names = _fresh_names(
@@ -386,6 +392,8 @@ def _position_delete_diff(
     child_rows: int,
     out: str,
     mask_rows: int | None = None,
+    base_schema=None,
+    child_schema=None,
 ):
     """If `child_dir`'s rows are a sub-multiset of the MASKED base (see
     `_diff_inputs`), write the NEW positions to delete as parquet
@@ -401,8 +409,11 @@ def _position_delete_diff(
     the deleted positions. The sub-multiset check is the count identity
     base_rows − |positions| == child_rows on those same positions
     (`_hashed_excess`), so no separate probe job runs. `mask_rows` is
-    the row count of `deleted_so_far` (see `_diff_inputs`)."""
-    inputs = _diff_inputs(spark, base_dirs, deleted_so_far, child_dir, mask_rows)
+    the row count of `deleted_so_far` and the schemas are the scans'
+    (see `_diff_inputs`)."""
+    inputs = _diff_inputs(
+        spark, base_dirs, deleted_so_far, child_dir, mask_rows, base_schema, child_schema
+    )
     if inputs is None:
         return None
     base, child, names = inputs
@@ -418,6 +429,8 @@ def _append_diff(
     child_rows: int,
     out: str,
     mask_rows: int | None = None,
+    base_schema=None,
+    child_schema=None,
 ):
     """If `child_dir`'s rows are a super-multiset of the MASKED base (see
     `_diff_inputs`), write the child positions of the APPENDED rows
@@ -431,8 +444,11 @@ def _append_diff(
     positions, validated by |positions| == child_rows − base_rows. The
     appended FULL rows move exactly once, when the exporter writes them
     (`_appended_rows`). `mask_rows` is the row count of
-    `deleted_so_far` (see `_diff_inputs`)."""
-    inputs = _diff_inputs(spark, base_dirs, deleted_so_far, child_dir, mask_rows)
+    `deleted_so_far` and the schemas are the scans' (see
+    `_diff_inputs`)."""
+    inputs = _diff_inputs(
+        spark, base_dirs, deleted_so_far, child_dir, mask_rows, base_schema, child_schema
+    )
     if inputs is None:
         return None
     base, child, names = inputs
@@ -462,13 +478,17 @@ def read_positions(spark, path: str):
     )
 
 
-def _appended_rows(spark, child_dir: str, positions, n: int, width: int):
+def _appended_rows(
+    spark, child_dir: str, positions, n: int, width: int, schema=None
+):
     """The rows of `child_dir` at the `n` append-diff `positions`
     (longest path `width` bytes): a (file, pos) semi-join against the
-    child scan."""
+    child scan, read with the child's data `schema` (None infers)."""
     from pyspark.sql import functions as F
 
-    child = spark.read.parquet(child_dir)
+    from .util import read_parquet
+
+    child = read_parquet(spark, schema, child_dir)
     _f, _p = _fresh_names(child.columns, "_f", "_p")
     pos = positions.select(F.col("file_path").alias(_f), F.col("pos").alias(_p))
     return (
@@ -582,6 +602,10 @@ class MorBase:
     Delta (DV) exporters:
 
     - `dirs`: the base snapshot dir plus the append dirs stacked on it;
+    - `schema`: the base snapshot's recorded data schema (None when the
+      manifest has none), which reads every dir of `dirs` — an append
+      diff only runs when the child's schema equals the base's, so the
+      append dirs share it;
     - `files`: every live file of those dirs by absolute path, mapped to
       the entry the caller listed it with;
     - `live_rows`: the base's row count under the mask;
@@ -628,13 +652,15 @@ class MorBase:
     def __init__(self, root: str):
         self.root = root
         self.ledger = os.path.join(root, LEDGER_DIR)
-        self.reset(None, None, [])
+        self.reset(None, None, [], None)
 
-    def reset(self, base_dir: str | None, live_rows: int | None, files) -> None:
+    def reset(self, base_dir: str | None, live_rows: int | None, files, schema) -> None:
         """Start over from a rewrite commit: `files` (dicts with a
         root-relative, percent-encoded `path`) at `base_dir`, holding
-        `live_rows` rows."""
+        `live_rows` rows, with the data `schema` its snapshot records
+        (None infers)."""
         self.dirs = [] if base_dir is None else [base_dir]
+        self.schema = schema
         self.files: dict[str, dict] = {}
         self._add_files(files)
         self.live_rows = live_rows
@@ -653,25 +679,31 @@ class MorBase:
             and all(os.path.isdir(d) for d in self.dirs)
         )
 
-    def delete_diff(self, spark, child_dir: str, child_rows: int):
+    def delete_diff(self, spark, child_dir: str, child_rows: int, schema):
         """The positions `_position_delete_diff` finds for `child_dir`
-        against the masked base, as a DataFrame(file_path, pos) read
-        from the ledger, or None; records nothing."""
-        e = self._diff(spark, "delete", child_dir, child_rows, _position_delete_diff)
+        (data `schema`, None infers) against the masked base, as a
+        DataFrame(file_path, pos) read from the ledger, or None; records
+        nothing."""
+        e = self._diff(
+            spark, "delete", child_dir, child_rows, schema, _position_delete_diff
+        )
         self._pending = e
         return None if e is None else e.positions
 
-    def append_diff(self, spark, child_dir: str, child_rows: int):
-        """The rows `_append_diff` finds appended in `child_dir` over
-        the masked base, or None; records nothing."""
-        e = self._diff(spark, "append", child_dir, child_rows, _append_diff)
+    def append_diff(self, spark, child_dir: str, child_rows: int, schema):
+        """The rows `_append_diff` finds appended in `child_dir` (data
+        `schema`, None infers) over the masked base, or None; records
+        nothing."""
+        e = self._diff(spark, "append", child_dir, child_rows, schema, _append_diff)
         if e is None:
             return None
         return _appended_rows(
-            spark, child_dir, e.positions, e.doc["positions"], e.doc["width"]
+            spark, child_dir, e.positions, e.doc["positions"], e.doc["width"], schema
         )
 
-    def _diff(self, spark, kind: str, child_dir: str, child_rows: int, diff):
+    def _diff(
+        self, spark, kind: str, child_dir: str, child_rows: int, schema, diff
+    ):
         """The ledger entry of this transition: read when valid, else
         computed by `diff` and stored. None when `diff` finds the
         transition is not of `kind`."""
@@ -698,6 +730,8 @@ class MorBase:
                 child_rows,
                 tmp,
                 mask_rows=self.mask_rows,
+                base_schema=self.schema,
+                child_schema=schema,
             )
             if got is None:
                 return None
@@ -861,6 +895,8 @@ def _upsert_diff(
     child_dir: str,
     key: list[str],
     verified_unique: set | None = None,
+    parent_schema=None,
+    child_schema=None,
 ):
     """Diff two snapshot directories under PRIMARY-KEY semantics for
     equality-delete (Flink-style upsert) export: returns
@@ -888,11 +924,14 @@ def _upsert_diff(
     precondition. Pass `verified_unique` (a mutable set of
     already-probed snapshot dirs) when diffing a chain — each dir is
     the child of one commit and the parent of the next, so caching
-    halves the probe jobs."""
+    halves the probe jobs. The dirs are read with the data schemas the
+    snapshot manifest records for them (None infers)."""
     from pyspark.sql import functions as F
 
-    parent = spark.read.parquet(parent_dir)
-    child = spark.read.parquet(child_dir)
+    from .util import read_parquet
+
+    parent = read_parquet(spark, parent_schema, parent_dir)
+    child = read_parquet(spark, child_schema, child_dir)
     if sorted(parent.columns) != sorted(child.columns):
         return None, None
     missing = [k for k in key if k not in child.columns]

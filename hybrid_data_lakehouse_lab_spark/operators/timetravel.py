@@ -22,6 +22,19 @@ snapshot list, so `create_branch` is zero-copy, and the
 write-audit-publish flow is write-to-branch → validate → `fast_forward`
 main — the publish is one atomic manifest swap, invisible to `main`
 readers until it lands.
+
+The manifest also carries each snapshot's schema, as Iceberg table
+metadata does, so no reader opens a data file to learn it: a
+table-level `schemas` list holds every distinct data schema once
+(`{"schema_id": n, "schema": <Spark StructType JSON>}`) and each
+snapshot entry names its own by `schema_id`. Only the data columns are
+recorded; the partition columns come from the directory names, typed
+by Spark's partition inference exactly as an inferring read types
+them. Every read of a snapshot dir (`read`, the exporters, the
+merge-on-read diffs, the maintenance rewrites) passes the recorded
+schema to the scan, which saves the one-task footer job schema
+inference costs. A snapshot entry without `schema_id` (written before
+schemas were recorded) is read by inference.
 """
 
 from __future__ import annotations
@@ -35,6 +48,9 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from .util import read_parquet
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -50,6 +66,32 @@ class SnapshotInfo:
     # SCD2 pipeline stores its incremental checkpoint here so data +
     # checkpoint commit in ONE manifest swap (no replay window on crash).
     properties: dict | None = None
+    # id of the snapshot's data schema in the manifest's `schemas` list;
+    # None for a snapshot written before schemas were recorded
+    schema_id: int | None = None
+
+
+def snapshot_schema(manifest: dict, snap: dict) -> T.StructType | None:
+    """The data schema `manifest` records for its snapshot entry `snap`,
+    or None when the entry has none (read it by inference)."""
+    sid = snap.get("schema_id")
+    if sid is None:
+        return None
+    doc = next(s["schema"] for s in manifest["schemas"] if s["schema_id"] == sid)
+    return T.StructType.fromJson(doc)
+
+
+def _schema_id(manifest: dict, schema: T.StructType) -> int:
+    """The id of `schema` in `manifest["schemas"]`, appended under the
+    next free id when no entry holds it: one entry per distinct
+    schema, however many snapshots share it."""
+    doc = schema.jsonValue()
+    for s in manifest["schemas"]:
+        if s["schema"] == doc:
+            return s["schema_id"]
+    sid = max((s["schema_id"] for s in manifest["schemas"]), default=-1) + 1
+    manifest["schemas"].append({"schema_id": sid, "schema": doc})
+    return sid
 
 
 class SnapshotTable:
@@ -73,6 +115,7 @@ class SnapshotTable:
         except FileNotFoundError:
             m = {"current": None, "snapshots": []}
         m.setdefault("branches", {})  # non-main branch name → version
+        m.setdefault("schemas", [])  # distinct data schemas (module doc)
         # Per-branch pointer history: branch → [{version, at_ms}, ...] appended
         # at every head change (write / fast_forward / create_branch). This is
         # what TIMESTAMP AS OF resolves against — an unpublished branch write
@@ -139,6 +182,11 @@ class SnapshotTable:
 
         committed_at_ms is injectable for deterministic tests; defaults to
         wall clock (ms) like an Iceberg commit timestamp.
+
+        The snapshot's data schema, `df.schema` without the
+        `partition_by` columns, is recorded in the same manifest swap:
+        the entry's `schema_id` names it in the table's `schemas` list,
+        which gains an entry only for a schema no earlier snapshot has.
         """
         m = self._load_manifest()
         if branch != "main" and branch not in m["branches"]:
@@ -151,6 +199,8 @@ class SnapshotTable:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(vdir)
+        pcols = {c.lower() for c in partition_by or []}
+        data = T.StructType([f for f in df.schema.fields if f.name.lower() not in pcols])
         info = SnapshotInfo(
             version=version,
             committed_at_ms=committed_at_ms
@@ -158,6 +208,7 @@ class SnapshotTable:
             else int(time.time() * 1000),
             path=vdir,
             properties=properties,
+            schema_id=_schema_id(m, data),
         )
         m["snapshots"].append(info.__dict__)
         if branch == "main":
@@ -243,12 +294,26 @@ class SnapshotTable:
         as_of_ms: int | None = None,
         branch: str = "main",
     ) -> str:
+        return self._resolve_entry(version, as_of_ms, branch)[1]["path"]
+
+    def _resolve_entry(
+        self,
+        version: int | None = None,
+        as_of_ms: int | None = None,
+        branch: str = "main",
+    ) -> tuple[dict, dict]:
+        """(manifest, snapshot entry) a `read` with these arguments
+        resolves to."""
         m = self._load_manifest()
         snaps = m["snapshots"]
+
+        def entry(v: int) -> dict:
+            return next(s for s in snaps if s["version"] == v)
+
         if version is not None:
             for s in snaps:
                 if s["version"] == version:
-                    return s["path"]
+                    return m, s
             raise ValueError(f"version {version} not found in {self.root}")
         if as_of_ms is not None:
             # Resolve against the BRANCH's pointer history, not the global
@@ -265,14 +330,11 @@ class SnapshotTable:
             # history is append-ordered under the manifest lock, so the last
             # eligible event IS the head at as_of_ms (max-by-at_ms would pick
             # the wrong side of a same-millisecond rollback)
-            head_then = events[-1]
-            return next(
-                s["path"] for s in snaps if s["version"] == head_then["version"]
-            )
+            return m, entry(events[-1]["version"])
         head = m["current"] if branch == "main" else m["branches"].get(branch)
         if head is None:
             raise FileNotFoundError(f"no snapshots on {branch!r} in {self.root}")
-        return next(s["path"] for s in snaps if s["version"] == head)
+        return m, entry(head)
 
     def read(
         self,
@@ -280,5 +342,14 @@ class SnapshotTable:
         as_of_ms: int | None = None,
         branch: str = "main",
     ) -> DataFrame:
-        """Branch head, `VERSION AS OF`, or `TIMESTAMP AS OF` read."""
-        return self.spark.read.parquet(self._resolve(version, as_of_ms, branch))
+        """Branch head, `VERSION AS OF`, or `TIMESTAMP AS OF` read: a
+        scan of the snapshot's dir with the schema the manifest records
+        for it (`read_snapshot`), so resolving the read runs no Spark
+        job."""
+        return self.read_snapshot(*self._resolve_entry(version, as_of_ms, branch))
+
+    def read_snapshot(self, manifest: dict, snap: dict) -> DataFrame:
+        """A scan of snapshot entry `snap`'s dir with the data schema
+        `manifest` records for it; inferred, at the cost of a Spark
+        job, for an entry written before schemas were recorded."""
+        return read_parquet(self.spark, snapshot_schema(manifest, snap), snap["path"])

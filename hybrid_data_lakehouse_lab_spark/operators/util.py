@@ -83,6 +83,17 @@ def atomic_open(path: str, mode: str = "wb"):
         raise
 
 
+def read_parquet(spark, schema, *paths) -> DataFrame:
+    """A parquet scan of `paths`, read with `schema` (a StructType of
+    the data columns) when one is given. Spark then skips the one-task
+    job it otherwise runs to read a footer for schema inference; hive
+    partition columns are still inferred from the directory names, on
+    the driver, with the types inference gives them. With `schema`
+    None the schema is inferred."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
 def local_frame(spark, rows, schema) -> DataFrame:
     """A DataFrame of driver-side `rows` (a list of tuples in `schema`
     order; `schema` a StructType or DDL string), built through

@@ -33,6 +33,28 @@ _REQUIRED_RUNTIME_CONF = {
 }
 
 
+# Inferred schema of each source file read by load_table, keyed by
+# (absolute path, size, st_mtime_ns, inode): inference costs one Spark
+# job per read, and a rewritten file changes the key.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _scan(spark: SparkSession, path: str) -> DataFrame:
+    """A parquet scan of `path`. A regular file's inferred schema is
+    memoized per file version, and later scans of that version read
+    with it, running no inference job; a directory is inferred every
+    call."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (os.path.abspath(path), st.st_size, st.st_mtime_ns, st.st_ino)
+    if key in _SCHEMAS:
+        return spark.read.schema(_SCHEMAS[key]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def ensure_session_confs(spark: SparkSession) -> None:
     """Idempotently pin the runtime confs correctness depends on."""
     for k, v in _REQUIRED_RUNTIME_CONF.items():
@@ -50,10 +72,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the same TimestampType under the pinned UTC session timezone, matching
     DuckDB's own ns→µs truncation, so plans and oracle hashes are
     identical regardless of which reader behavior the host Spark has.
+
+    The file's schema is inferred once per process and file version
+    (`_scan`); later loads read with it and run no job.
     """
     ensure_session_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = _scan(spark, path)
     if any(
         f.name == "ts" and isinstance(f.dataType, T.TimestampNTZType)
         for f in df.schema.fields

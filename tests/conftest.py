@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import sys
+import uuid
+from dataclasses import dataclass
 
 import pytest
 
@@ -19,3 +22,33 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@dataclass
+class JobCensus:
+    jobs: int | None = None
+
+
+@pytest.fixture(scope="session")
+def job_census(spark):
+    """`with job_census() as c: ...` sets `c.jobs` to the number of
+    Spark jobs the block ran: the block's jobs run under a fresh job
+    group, and once the listener bus has drained, Spark's status
+    tracker lists the group's jobs. The previous group is restored."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def census():
+        group = f"census-{uuid.uuid4().hex}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, group)
+        c = JobCensus()
+        try:
+            yield c
+        finally:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            c.jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+            sc.setLocalProperty("spark.job.description", None)
+
+    return census

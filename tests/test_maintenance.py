@@ -36,6 +36,34 @@ def test_compaction_bounds_files_and_preserves_rows(spark, tmp_path):
     assert spark.read.parquet(path).orderBy("id").collect() == before
 
 
+def test_compaction_leaves_compact_partitions_alone(spark, tmp_path, job_census):
+    """A second call on a compacted dir rewrites nothing: every
+    partition is at its target file count already."""
+    path = str(tmp_path / "bronze")
+    for batch in range(3):
+        (
+            spark.range(batch * 100, batch * 100 + 100)
+            .selectExpr("id", "CAST(id % 2 AS STRING) AS dt")
+            .repartition(3)
+            .write.mode("append")
+            .partitionBy("dt")
+            .parquet(path)
+        )
+    assert set(compact_partition_dir(spark, path)) == {"0", "1"}
+
+    def stats():
+        return {
+            p: (os.stat(p).st_ino, os.stat(p).st_mtime_ns)
+            for p in glob.glob(f"{path}/**", recursive=True)
+        }
+
+    before = stats()
+    with job_census() as c:
+        assert compact_partition_dir(spark, path) == {}
+    assert c.jobs == 0
+    assert stats() == before
+
+
 def test_vacuum_expires_only_unprotected(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "tbl"))
     paths = []

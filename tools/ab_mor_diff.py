@@ -58,9 +58,20 @@ def main() -> None:
     spec.loader.exec_module(old)
 
     # `mask_rows` sizes the newer diffs' mask broadcast; the older
-    # diffs broadcast the mask unconditionally, so the shim drops it
+    # diffs broadcast the mask unconditionally, so the shim drops it.
+    # The older diffs infer each dir's schema, so the shims also drop
+    # the recorded schemas
     def old_delete_shim(
-        spark, base_dirs, prior, child_dir, base_rows, child_rows, out, mask_rows=None
+        spark,
+        base_dirs,
+        prior,
+        child_dir,
+        base_rows,
+        child_rows,
+        out,
+        mask_rows=None,
+        base_schema=None,
+        child_schema=None,
     ):
         from pyspark.sql import functions as F
 
@@ -83,7 +94,9 @@ def main() -> None:
     }
     old_fns = {
         "_position_delete_diff": old_delete_shim,
-        "_upsert_diff": old._upsert_diff,
+        "_upsert_diff": lambda *a, parent_schema=None, child_schema=None, **k: (
+            old._upsert_diff(*a, **k)
+        ),
     }
 
     def apply(fns):
