@@ -63,7 +63,7 @@ from .mor_diff import (
     scan_files,
     write_spark_parts,
 )
-from .timetravel import SnapshotTable, snapshot_schema
+from .timetravel import SnapshotTable, live_history, snapshot_schema
 from .util import atomic_open, local_frame, read_parquet
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -423,7 +423,7 @@ def export_delta_log(
     no history (a Delta log must have a version 0).
     """
     m = table._load_manifest()
-    events = m["history"].get(branch, [])
+    events = live_history(m, branch)
     if not events:
         raise ValueError(f"branch {branch!r} has no commits to export")
     by_version = {s["version"]: s for s in m["snapshots"]}

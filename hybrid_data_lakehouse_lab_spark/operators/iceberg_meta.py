@@ -105,7 +105,7 @@ from .delta_log import (
     _snapshot_files,
 )
 from .iceberg_transforms import _PARAM_RE
-from .timetravel import SnapshotTable, snapshot_schema
+from .timetravel import SnapshotTable, live_history, snapshot_schema
 from .util import atomic_open, local_frame, read_parquet
 
 _EPOCH = datetime.date(1970, 1, 1)
@@ -1735,7 +1735,7 @@ def export_iceberg_metadata(
         if format_version < 2:
             raise ValueError("upsert_key requires format_version >= 2")
     m = table._load_manifest()
-    events = m["history"].get(branch, [])
+    events = live_history(m, branch)
     if not events:
         raise ValueError(f"branch {branch!r} has no commits to export")
     by_version = {s["version"]: s for s in m["snapshots"]}

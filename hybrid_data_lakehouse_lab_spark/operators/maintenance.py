@@ -33,6 +33,7 @@ from pyspark.sql import SparkSession
 
 from .mor_diff import LEDGER_DIR
 from .timetravel import SnapshotTable
+from .util import footer_schema, read_parquet
 
 
 def compact_partition_dir(
@@ -49,7 +50,9 @@ def compact_partition_dir(
     closed partition is rewritten once, not on every call.
 
     Returns {partition_value: n_files_after} for the partitions it
-    rewrote ({} when none needed it). Uses a temp rewrite +
+    rewrote ({} when none needed it). A rewrite is one Spark job: the
+    scan takes its schema from the files' footers and coalesces, with
+    no shuffle. Uses a temp rewrite +
     directory swap per partition so a crash leaves either the old or the
     new complete fileset. At cluster scale run per-partition rewrites in
     parallel batches and prefer the table format's native compaction
@@ -65,7 +68,7 @@ def compact_partition_dir(
       root reads would silently exclude every compacted file.
     * ``retire_metadata=False`` (live compaction): the sink log is left
       intact so the stream can resume, and every reader of this directory
-      must bypass the log (read `path/dt=*` with basePath, as
+      must bypass the log (read the `dt=` dirs with basePath, as
       LakehouseJob does — the sink itself never re-stats old entries).
       Pass ``skip_partitions`` with the still-open partition(s); compacting
       a partition mid-write would race the sink's in-flight files.
@@ -91,8 +94,8 @@ def compact_partition_dir(
             continue  # already compact
         tmp = pdir + ".compact.tmp"
         (
-            spark.read.parquet(pdir)
-            .repartition(n_files)
+            read_parquet(spark, footer_schema(pdir), pdir)
+            .coalesce(n_files)
             .write.mode("overwrite")
             .parquet(tmp)
         )
@@ -136,15 +139,11 @@ def vacuum_snapshots(
     ]
     if not expired:
         return []
-    keep = [s for s in snaps if s not in expired]
-    table._commit_manifest(
-        {
-            "current": m["current"],
-            "snapshots": keep,
-            "branches": m["branches"],
-            "schemas": m["schemas"],
-        }
-    )
+    # the rest of the manifest (branches, schemas, every branch's pointer
+    # history) is carried as it is; an as-of read that resolves to an
+    # expired version raises naming it
+    m["snapshots"] = [s for s in snaps if s not in expired]
+    table._commit_manifest(m)
     for s in expired:
         shutil.rmtree(s["path"], ignore_errors=True)
     return [s["version"] for s in expired]

@@ -77,7 +77,10 @@ def merge_scd2_batch(
     if existing is None or not existing.columns:
         return build(changes, key_cols, attr_cols, ts_col, op_col, order_cols)
 
-    batch_keys = changes.select(*key_cols).distinct()
+    # no distinct(): a semi/anti join keeps each left row at most once
+    # whatever its build side's key multiplicity, and deduplicating the
+    # keys costs a shuffle
+    batch_keys = changes.select(*key_cols)
     current = existing.filter(F.col("is_current"))
     untouched_current = current.join(batch_keys, key_cols, "left_anti")
     affected_current = current.join(batch_keys, key_cols, "left_semi")

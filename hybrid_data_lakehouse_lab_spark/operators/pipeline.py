@@ -15,15 +15,21 @@ Differences from the reference, by design:
   (event_timestamp, lsn) when an lsn column is configured, so a CDC burst
   sharing the checkpointed max timestamp but split across batches is not
   silently dropped (the reference filters on timestamp alone).
-* The incremental predicate also applies to the `dt` partition column when
-  present, so bronze scans prune whole partitions (the reference filters
-  only the non-partition event_timestamp; README.MD:256's pruning claim is
-  aspirational there — here it's real).
+* Partition pruning happens at the source, not here: LakehouseJob hands
+  `process_batch` a bronze read already limited to the `dt` partitions at
+  or after the checkpoint's date (`LakehouseJob._bronze_as_changes`),
+  because a filter applied here sits above that read's lsn dedup, which
+  Spark cannot push it through. The incremental predicate still applies
+  to a `dt` column when present (the reference filters only the
+  non-partition event_timestamp; README.MD:256's pruning claim is
+  aspirational there).
 """
 
 from __future__ import annotations
 
 import os
+import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,7 +37,7 @@ from pyspark.sql import functions as F
 
 from .merge import merge_scd2_batch
 from .timetravel import SnapshotTable
-from .util import local_frame
+from .util import atomic_open
 
 # Safe widening chains per the Delta type-widening feature / Iceberg
 # primitive-promotion rules (both public specs). Keys/values are Spark
@@ -123,15 +129,26 @@ class Scd2Pipeline:
         return row["ts_us"], row["lsn"], row["n"]
 
     def _write_checkpoint_audit(self, ts_us: int, lsn, n: int) -> None:
-        local_frame(
-            self.spark,
-            [(ts_us, lsn, n)],
-            "last_processed_us long, last_processed_lsn long, records_processed long",
-        ).withColumn(
-            "last_processed_timestamp", F.timestamp_micros(F.col("last_processed_us"))
-        ).withColumn("processed_at", F.current_timestamp()).coalesce(1).write.mode(
-            "append"
-        ).parquet(self._ckpt_dir)
+        """Append the batch's audit row as one parquet file, written with
+        pyarrow on the driver: a one-row Spark write would cost a job.
+        Timestamps are UTC micros, which Spark reads as `timestamp`."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        utc_us = pa.timestamp("us", tz="UTC")
+        row = pa.table(
+            {
+                "last_processed_us": pa.array([ts_us], pa.int64()),
+                "last_processed_lsn": pa.array([lsn], pa.int64()),
+                "records_processed": pa.array([n], pa.int64()),
+                "last_processed_timestamp": pa.array([ts_us], utc_us),
+                "processed_at": pa.array([int(time.time() * 1_000_000)], utc_us),
+            }
+        )
+        os.makedirs(self._ckpt_dir, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        with atomic_open(os.path.join(self._ckpt_dir, name)) as fh:
+            pq.write_table(row, fh)
 
     # -- one batch ----------------------------------------------------------
     def process_batch(self, cdc: DataFrame, committed_at_ms: int | None = None) -> int:

@@ -81,6 +81,15 @@ def snapshot_schema(manifest: dict, snap: dict) -> T.StructType | None:
     return T.StructType.fromJson(doc)
 
 
+def live_history(manifest: dict, branch: str) -> list[dict]:
+    """`branch`'s pointer-history events whose version a vacuum has not
+    expired, in order: the commits an exporter writes. The manifest
+    keeps the expired versions' events, so an as-of read that resolves
+    to one raises naming it instead of finding no snapshot."""
+    live = {s["version"] for s in manifest["snapshots"]}
+    return [e for e in manifest["history"].get(branch, []) if e["version"] in live]
+
+
 def _schema_id(manifest: dict, schema: T.StructType) -> int:
     """The id of `schema` in `manifest["schemas"]`, appended under the
     next free id when no entry holds it: one entry per distinct
@@ -308,13 +317,14 @@ class SnapshotTable:
         snaps = m["snapshots"]
 
         def entry(v: int) -> dict:
-            return next(s for s in snaps if s["version"] == v)
+            for s in snaps:
+                if s["version"] == v:
+                    return s
+            # a pointer history may name a version a vacuum expired
+            raise ValueError(f"version {v} not found in {self.root}")
 
         if version is not None:
-            for s in snaps:
-                if s["version"] == version:
-                    return m, s
-            raise ValueError(f"version {version} not found in {self.root}")
+            return m, entry(version)
         if as_of_ms is not None:
             # Resolve against the BRANCH's pointer history, not the global
             # snapshot list: an unpublished WAP branch write, or a version

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import contextlib
+import glob
+import json
 import os
 import urllib.parse
 from typing import TYPE_CHECKING
@@ -92,6 +94,45 @@ def read_parquet(spark, schema, *paths) -> DataFrame:
     None the schema is inferred."""
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(*paths)
+
+
+#: Footer key under which Spark's parquet writer records the written
+#: frame's schema (Spark StructType JSON)
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(*paths: str):
+    """The Spark schema recorded in the footer of the first parquet file
+    under `paths` (files, or directories searched recursively in sorted
+    order), read on the driver. A non-merging Spark inference reads
+    this same footer field, so `read_parquet(spark, footer_schema(*paths),
+    *paths)` types every column as an inferring read does, hive
+    partition columns included, without the inference job. None when
+    that footer holds no Spark schema (a file another writer made) or
+    no file is found: the caller's read then infers. LOCAL-ONLY, as
+    `_input_bytes`: a remote path is not found, so it infers."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    for p in paths:
+        pattern = os.path.join(glob.escape(p), "**", "*.parquet")
+        files = [p] if os.path.isfile(p) else sorted(glob.glob(pattern, recursive=True))
+        if not files:
+            continue
+        try:
+            doc = (pq.read_metadata(files[0]).metadata or {}).get(_SPARK_ROW_METADATA)
+        except OSError:
+            # pyarrow rejects a footer holding a logical type it does
+            # not know (Parquet VARIANT); DuckDB's reader handles it
+            import duckdb
+
+            row = duckdb.execute(
+                "SELECT value FROM parquet_kv_metadata(?) WHERE key = ?",
+                [files[0], _SPARK_ROW_METADATA],
+            ).fetchone()
+            doc = None if row is None else row[0]
+        return None if doc is None else StructType.fromJson(json.loads(doc))
+    return None
 
 
 def local_frame(spark, rows, schema) -> DataFrame:

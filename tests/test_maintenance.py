@@ -98,3 +98,20 @@ def test_vacuum_keeps_everything_when_young(spark, tmp_path):
         t.write(spark.range(v).toDF("id"), committed_at_ms=v * 1000)
     assert vacuum_snapshots(t, older_than_ms=500) == []
     assert [s.version for s in t.snapshots()] == [1, 2, 3]
+
+
+def test_vacuum_keeps_every_branch_pointer_history(spark, tmp_path):
+    """A vacuum rewrites the manifest with every branch's pointer
+    history: an as-of read on a branch still resolves after it, and one
+    that resolves to an expired version raises naming that version."""
+    import pytest
+
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    for v in range(1, 4):
+        t.write(spark.range(v).toDF("id"), committed_at_ms=v * 1000)
+    t.create_branch("old", at_ms=3500)
+    assert vacuum_snapshots(t, older_than_ms=1500, keep_last=2) == [1]
+    assert t.read(as_of_ms=3600, branch="old").count() == 3  # v3
+    assert t.read(as_of_ms=2500).count() == 2  # v2, main's history
+    with pytest.raises(ValueError, match="version 1 not found"):
+        t.read(as_of_ms=1200)

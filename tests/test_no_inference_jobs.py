@@ -13,11 +13,13 @@ Job counts come from the `job_census` fixture (tests/conftest.py)."""
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
 import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -31,6 +33,7 @@ from hybrid_data_lakehouse_lab_spark.operators.iceberg_meta import (
 )
 from hybrid_data_lakehouse_lab_spark.operators.maintenance import vacuum_snapshots
 from hybrid_data_lakehouse_lab_spark.operators.timetravel import SnapshotTable
+from hybrid_data_lakehouse_lab_spark.operators.util import footer_schema, read_parquet
 from hybrid_data_lakehouse_lab_spark.sources.tables import load_table
 
 
@@ -64,11 +67,8 @@ def test_snapshot_reads_run_no_job(spark, tmp_path, job_census, partition_by):
     assert c.jobs == 0
 
 
-def test_recorded_schema_equals_inferred_schema(spark, tmp_path):
-    """The data columns alone are recorded; Spark types the partition
-    columns from the directory names as inference does (a string
-    `dt=2026-01-01` reads as date, `p=007` as int)."""
-    df = spark.range(6).selectExpr(
+def _type_battery(spark):
+    return spark.range(6).selectExpr(
         "id",
         "named_struct('a', id, 'b', CAST(id AS STRING)) AS st",
         "array(id, id + 1) AS arr",
@@ -82,6 +82,13 @@ def test_recorded_schema_equals_inferred_schema(spark, tmp_path):
         "concat('2026-01-0', CAST(id % 2 + 1 AS STRING)) AS dt",
         "lpad(CAST(id % 3 AS STRING), 3, '0') AS p",
     )
+
+
+def test_recorded_schema_equals_inferred_schema(spark, tmp_path):
+    """The data columns alone are recorded; Spark types the partition
+    columns from the directory names as inference does (a string
+    `dt=2026-01-01` reads as date, `p=007` as int)."""
+    df = _type_battery(spark)
     t = SnapshotTable(spark, str(tmp_path / "t"))
     for partition_by in (None, ["dt"], ["p"], ["dt", "p"]):
         info = t.write(df, partition_by=partition_by)
@@ -92,6 +99,41 @@ def test_recorded_schema_equals_inferred_schema(spark, tmp_path):
     types = dict(t.read(version=2).dtypes)
     assert types["dt"] == "date"
     assert dict(t.read(version=3).dtypes)["p"] == "int"
+
+
+def test_footer_schema_equals_inferred_schema(spark, tmp_path, job_census):
+    """`footer_schema` reads the schema Spark recorded in a file's
+    footer, which is what inference reads: a scan given it has the
+    inferring scan's schema and rows and runs no job, over a file, a
+    flat dir and partitioned dirs. A file no Spark writer made has no
+    such footer field and takes the inference fallback."""
+    df = _type_battery(spark)
+    for partition_by in (None, ["dt"], ["p"], ["dt", "p"]):
+        d = str(tmp_path / "_".join(partition_by or ["flat"]))
+        writer = df.write.mode("overwrite")
+        (writer.partitionBy(*partition_by) if partition_by else writer).parquet(d)
+        f = sorted(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))[0]
+        for path in (d, f):
+            with job_census() as c:
+                got = read_parquet(spark, footer_schema(path), path)
+            assert c.jobs == 0, (partition_by, path)
+            want = spark.read.parquet(path)
+            assert got.schema == want.schema, (partition_by, path)
+            assert sorted(got.toJSON().collect()) == sorted(want.toJSON().collect())
+        assert footer_schema(f) == footer_schema(d)
+        assert footer_schema(f).fieldNames() == [
+            c for c in df.columns if c not in (partition_by or [])
+        ]
+
+    plain = str(tmp_path / "plain.parquet")
+    pq.write_table(pa.table({"id": [1, 2], "s": ["a", "b"]}), plain)
+    assert footer_schema(plain) is None
+    assert footer_schema(str(tmp_path / "missing")) is None
+    with job_census() as c:
+        got = read_parquet(spark, footer_schema(plain), plain)
+    assert c.jobs == 1  # inferred
+    assert got.schema == spark.read.parquet(plain).schema
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "a"), (2, "b")]
 
 
 def _mor_interop_history(spark, root, src):
