@@ -3232,7 +3232,7 @@ def read_iceberg_statistics(spark, root: str) -> dict:
     {column_name: {"ndv": int, "estimate": float, "retained": int}}.
     Verifies blob types and field-id resolution; datasketches-java
     reads the sketch (any serial version, seed-checked)."""
-    from .puffin import read_blob
+    from .puffin import lz4_frame_decompress, read_blob
 
     metadata = load_table_metadata(os.path.join(root, "metadata"))[1]
     stats = metadata.get("statistics") or []
@@ -3245,8 +3245,6 @@ def read_iceberg_statistics(spark, root: str) -> dict:
             raw = read_blob(st["statistics-path"], bm["offset"], bm["length"])
             codec = bm.get("compression-codec")
             if codec == "lz4":
-                from .lz4 import lz4_frame_decompress
-
                 raw = lz4_frame_decompress(raw)
             elif codec not in (None, "none"):
                 raise NotImplementedError(

@@ -32,7 +32,7 @@ import shutil
 from pyspark.sql import SparkSession
 
 from .mor_diff import LEDGER_DIR
-from .timetravel import SnapshotTable
+from .timetravel import SnapshotTable, load_manifest
 from .util import footer_schema, read_parquet
 
 
@@ -115,35 +115,41 @@ def vacuum_snapshots(
     """Expire snapshots committed before `older_than_ms`, always keeping
     the current snapshot and the most recent `keep_last` versions.
 
-    Returns the expired version numbers. The manifest is committed
+    Returns the expired version numbers. The protected and expired
+    versions are decided inside one `SnapshotTable._update`, over the
+    manifest on disk under its lock, so a commit or branch move that
+    lands meanwhile is kept (and protected). The manifest is committed
     BEFORE data directories are deleted, so a reader holding the old
     manifest can at worst hit a missing-path error for an expired
     version — never silently wrong data (same contract as Delta VACUUM).
+    Nothing is written when nothing expires.
     """
-    m = table._load_manifest()
-    if m["current"] is None:
-        return []
-    snaps = sorted(m["snapshots"], key=lambda s: s["version"])
-    # every branch head is protected — expiring a version a branch still
-    # points at would break that branch's reads (same rule as Nessie:
-    # unreferenced-only garbage collection)
-    protected = (
-        {m["current"]}
-        | {s["version"] for s in snaps[-keep_last:]}
-        | set(m["branches"].values())
-    )
-    expired = [
-        s
-        for s in snaps
-        if s["version"] not in protected and s["committed_at_ms"] < older_than_ms
-    ]
-    if not expired:
-        return []
-    # the rest of the manifest (branches, schemas, every branch's pointer
-    # history) is carried as it is; an as-of read that resolves to an
-    # expired version raises naming it
-    m["snapshots"] = [s for s in snaps if s not in expired]
-    table._commit_manifest(m)
+    expired: list[dict] = []
+
+    def expire(m: dict) -> dict | None:
+        snaps = sorted(m["snapshots"], key=lambda s: s["version"])
+        # every branch head is protected — expiring a version a branch
+        # still points at would break that branch's reads (same rule as
+        # Nessie: unreferenced-only garbage collection)
+        protected = (
+            {m["current"]}
+            | {s["version"] for s in snaps[-keep_last:]}
+            | set(m["branches"].values())
+        )
+        expired.extend(
+            s
+            for s in snaps
+            if s["version"] not in protected and s["committed_at_ms"] < older_than_ms
+        )
+        if not expired:
+            return None
+        # the rest of the manifest (branches, schemas, every branch's
+        # pointer history) is carried as it is; an as-of read that
+        # resolves to an expired version raises naming it
+        m["snapshots"] = [s for s in snaps if s not in expired]
+        return m
+
+    table._update(expire)
     for s in expired:
         shutil.rmtree(s["path"], ignore_errors=True)
     return [s["version"] for s in expired]
@@ -152,17 +158,10 @@ def vacuum_snapshots(
 def _snapshot_table_reachable(root: str) -> set[str]:
     """Every file under any SnapshotTable version dir at `root` (empty
     set when no SnapshotTable manifest exists). Absolute paths."""
-    import json
-
-    st_manifest = os.path.join(root, SnapshotTable.MANIFEST)
     reachable: set[str] = set()
-    if not os.path.exists(st_manifest):
-        return reachable
-    with open(st_manifest) as fh:
-        st = json.load(fh)
-    for snap in st.get("snapshots") or []:
-        d = snap.get("path")
-        if d and os.path.isdir(d):
+    for snap in load_manifest(root)["snapshots"]:
+        d = snap["path"]
+        if os.path.isdir(d):
             for dp, _dn, fns in os.walk(d):
                 reachable.update(
                     os.path.abspath(os.path.join(dp, fn)) for fn in fns
@@ -736,6 +735,17 @@ def rewrite_iceberg_manifests(root: str) -> dict:
     }
 
 
+def _head_entry(
+    table: SnapshotTable, branch: str, purpose: str = ""
+) -> tuple[dict, dict]:
+    """(manifest, head snapshot entry) of `branch`, from one manifest
+    load; ValueError naming `purpose` when the branch has no head."""
+    try:
+        return table._resolve_entry(branch=branch)
+    except FileNotFoundError:
+        raise ValueError(f"branch {branch!r} has no snapshots{purpose}") from None
+
+
 def compact_snapshot(
     table: SnapshotTable,
     branch: str = "main",
@@ -772,12 +782,7 @@ def compact_snapshot(
     100 TB shape: one distributed scan of the head + one shuffle-free
     coalesce-style write per partition; the decision metadata (file
     sizes) comes from the manifest, driver-side O(files)."""
-    m = table._load_manifest()
-    head = table.branch_head(branch)
-    if head is None:
-        raise ValueError(f"branch {branch!r} has no snapshots to compact")
-    by_version = {s["version"]: s for s in m["snapshots"]}
-    snap = by_version[head]
+    m, snap = _head_entry(table, branch, " to compact")
     if (snap.get("properties") or {}).get("operation") == "compaction":
         return None  # already compacted; nothing accreted since
     head_dir = snap["path"]
@@ -803,7 +808,10 @@ def compact_snapshot(
         partition_by=pcols or None,
         committed_at_ms=committed_at_ms,
         branch=branch,
-        properties={"operation": "compaction", "compacted-from": head},
+        properties={
+            "operation": "compaction",
+            "compacted-from": snap["version"],
+        },
     )
 
 
@@ -867,11 +875,7 @@ def rewrite_data_files_sorted(
     for _c, d in norm:
         if d not in ("asc", "desc"):
             raise ValueError(f"direction {d!r} (asc|desc)")
-    m = table._load_manifest()
-    head = table.branch_head(branch)
-    if head is None:
-        raise ValueError(f"branch {branch!r} has no snapshots to rewrite")
-    snap = {s["version"]: s for s in m["snapshots"]}[head]
+    m, snap = _head_entry(table, branch, " to rewrite")
     head_props = snap.get("properties") or {}
     if head_props.get("operation") == "compaction":
         # no-op ONLY when the head already has THIS clustering; a plain
@@ -908,7 +912,7 @@ def rewrite_data_files_sorted(
             "operation": "compaction",
             "strategy": "sort",
             "sort-by": _json.dumps(norm),
-            "compacted-from": head,
+            "compacted-from": snap["version"],
         }
     else:
         cols = [c for c, _d in norm]
@@ -946,7 +950,7 @@ def rewrite_data_files_sorted(
             "operation": "compaction",
             "strategy": "zorder",
             "zorder-by": _json.dumps(cols),
-            "compacted-from": head,
+            "compacted-from": snap["version"],
         }
     return table.write(
         clustered,
@@ -1007,11 +1011,7 @@ def apply_retention(
     shared with every other lane; at petabyte scale, partition the
     history table by day so the scan prunes to the retention boundary
     day only."""
-    head = table.branch_head(branch)
-    if head is None:
-        raise ValueError(f"branch {branch!r} has no snapshots")
-    m = table._load_manifest()
-    snap = next(s for s in m["snapshots"] if s["version"] == head)
+    m, snap = _head_entry(table, branch)
     df = table.read_snapshot(m, snap)
     expired = df.where(f"NOT ({keep_predicate})").limit(1).count()
     if not expired:
@@ -1052,11 +1052,7 @@ def rewrite_delete_files(
     commit (rewrite-deletes or compaction). At 100 TB: one scan of the
     (small) delete files + one metadata commit — this is the job you
     run NIGHTLY, with `compact_snapshot` weekly."""
-    head = table.branch_head(branch)
-    if head is None:
-        raise ValueError(f"branch {branch!r} has no snapshots")
-    m = table._load_manifest()
-    snap = next(s for s in m["snapshots"] if s["version"] == head)
+    m, snap = _head_entry(table, branch)
     if (snap.get("properties") or {}).get("operation") in (
         "compaction",
         "rewrite-deletes",
@@ -1068,7 +1064,10 @@ def rewrite_delete_files(
         partition_by=pcols or None,
         committed_at_ms=committed_at_ms,
         branch=branch,
-        properties={"operation": "rewrite-deletes", "rewritten-from": head},
+        properties={
+            "operation": "rewrite-deletes",
+            "rewritten-from": snap["version"],
+        },
     )
 
 

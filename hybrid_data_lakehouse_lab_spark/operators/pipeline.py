@@ -100,7 +100,7 @@ class Scd2Pipeline:
     # before properties existed.
     def last_checkpoint(self) -> tuple | None:
         """(last_processed epoch-µs, last lsn or None), or None if fresh."""
-        props = self.table.head_properties() if self.table.exists() else None
+        props = self.table.head_properties()
         if props and "last_processed_us" in props:
             return (props["last_processed_us"], props.get("last_processed_lsn"))
         if not os.path.isdir(self._ckpt_dir):  # first run: no checkpoint yet

@@ -9,10 +9,10 @@ Layout:
     Footer = Magic FooterPayload FooterPayloadSize Flags Magic
     FooterPayloadSize: int32 LE = byte length of FooterPayload
     Flags: 4 bytes; byte 0 bit 0 = FooterPayload is LZ4-compressed
-           (the writer emits it on request via `compress_footer` —
-           stored-block LZ4 frames from operators/lz4.py — and the
-           reader decompresses real LZ4 frames, checksums verified;
-           validated against lz4-java in tests/test_external_validation)
+           (the writer emits it on request via `compress_footer`, and
+           the reader decompresses it; both use pyarrow's LZ4 frame
+           codec, validated against lz4-java in
+           tests/test_external_validation)
     FooterPayload: UTF-8 JSON FileMetadata:
         {"blobs": [BlobMetadata...], "properties": {...}}
     BlobMetadata: {"type", "fields", "snapshot-id", "sequence-number",
@@ -93,6 +93,33 @@ def decode_dv_v1_blob(blob: bytes) -> list[int]:
     return deserialize_roaring64(body[4:])
 
 
+_LZ4_FRAME_MAGIC = b"\x04\x22\x4d\x18"
+
+
+def lz4_frame_compress(data: bytes) -> bytes:
+    """`data` as one LZ4 frame, compressed by pyarrow's LZ4 frame codec
+    (independent blocks, no content checksum)."""
+    import pyarrow as pa
+
+    return pa.compress(data, codec="lz4", asbytes=True)
+
+
+def lz4_frame_decompress(src: bytes) -> bytes:
+    """The content of the LZ4 frame `src`, decoded by pyarrow's LZ4
+    frame codec, which verifies the header checksum and any block and
+    content checksums the frame carries. A corrupt or truncated frame,
+    or input that is no frame at all (empty input included), raises
+    ValueError."""
+    if src[:4] != _LZ4_FRAME_MAGIC:
+        raise ValueError(f"not an LZ4 frame (magic {src[:4].hex() or 'missing'})")
+    import pyarrow as pa
+
+    try:
+        return pa.input_stream(pa.py_buffer(src), compression="lz4").read()
+    except OSError as e:
+        raise ValueError(f"LZ4 frame: {e}") from None
+
+
 def write_puffin(
     path: str,
     blobs: list[dict],
@@ -103,8 +130,7 @@ def write_puffin(
     (bytes), `snapshot-id`, `sequence-number`, and optionally `fields`
     and `properties`. Returns the BlobMetadata list (with offsets) as
     written to the footer. With `compress_footer`, the FooterPayload is
-    wrapped in an LZ4 frame (stored blocks — spec-valid, readable by
-    any conforming LZ4 decoder; operators/lz4.py) and flag bit 0 set.
+    wrapped in an LZ4 frame (`lz4_frame_compress`) and flag bit 0 set.
     Written all-or-nothing (`util.atomic_open`): a re-export that
     crashes midway leaves the previous file whole."""
     metas = []
@@ -136,9 +162,7 @@ def write_puffin(
         ).encode()
         flags = b"\x00\x00\x00\x00"
         if compress_footer:
-            from .lz4 import lz4_frame_store
-
-            payload = lz4_frame_store(payload)
+            payload = lz4_frame_compress(payload)
             flags = b"\x01\x00\x00\x00"
         fh.write(MAGIC)
         fh.write(payload)
@@ -175,11 +199,8 @@ def read_puffin_footer(path: str) -> dict:
             raise ValueError(f"{path}: bad footer-start Puffin magic")
         payload = fh.read(payload_size)
     if flags[0] & 0x01:
-        # LZ4-frame-compressed footer payload (operators/lz4.py —
-        # checksums verified); real writers (Trino, Iceberg-java) may
-        # set this
-        from .lz4 import lz4_frame_decompress
-
+        # LZ4-frame-compressed footer payload; real writers (Trino,
+        # Iceberg-java) may set this
         payload = lz4_frame_decompress(payload)
     meta = json.loads(payload.decode())
     if "blobs" not in meta:

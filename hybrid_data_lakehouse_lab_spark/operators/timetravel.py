@@ -35,6 +35,19 @@ merge-on-read diffs, the maintenance rewrites) passes the recorded
 schema to the scan, which saves the one-task footer job schema
 inference costs. A snapshot entry without `schema_id` (written before
 schemas were recorded) is read by inference.
+
+Concurrency: every change to the manifest (a commit, a branch create,
+publish, rollback or drop, a vacuum) is one read-modify-write through
+`SnapshotTable._update`, under an exclusive flock on the table's
+`.manifest.lock`: it re-reads the manifest on disk, edits that, and
+swaps the result in atomically. A mutation never works from a copy it
+read before the lock, so none can drop a commit that landed in
+between, and no other module writes the manifest. `write` is the one
+mutation that does work before the lock (its Spark write); its commit
+is an optimistic compare-and-swap that aborts with
+`ConcurrentWriteError` when any snapshot landed since it allocated its
+version. Readers take no lock: they read whichever manifest the last
+swap left.
 """
 
 from __future__ import annotations
@@ -42,7 +55,7 @@ from __future__ import annotations
 import fcntl
 import json
 import os
-import tempfile
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -50,7 +63,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .util import read_parquet
+from .util import atomic_open, read_parquet
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -103,10 +116,73 @@ def _schema_id(manifest: dict, schema: T.StructType) -> int:
     return sid
 
 
+MANIFEST = "_manifest.json"
+
+
+def load_manifest(root: str) -> dict:
+    """The SnapshotTable manifest at `root` (an empty table's when there
+    is none), with every field its readers use present. The one reader
+    of the manifest file; `SnapshotTable._update` is its one writer."""
+    try:
+        with open(os.path.join(root, MANIFEST)) as f:
+            m = json.load(f)
+    except FileNotFoundError:
+        m = {"current": None, "snapshots": []}
+    m.setdefault("branches", {})  # non-main branch name → version
+    m.setdefault("schemas", [])  # distinct data schemas (module doc)
+    # Per-branch pointer history: branch → [{version, at_ms}, ...] appended
+    # at every head change (write / fast_forward / create_branch). This is
+    # what TIMESTAMP AS OF resolves against — an unpublished branch write
+    # or a rolled-back version must not be reachable via a main read.
+    # Legacy manifests (no history) were main-only: rebuild from snapshots.
+    if "history" not in m:
+        m["history"] = {
+            "main": [
+                {"version": s["version"], "at_ms": s["committed_at_ms"]}
+                for s in m["snapshots"]
+            ]
+        }
+    return m
+
+
+def _now_ms() -> int:
+    return int(time.time() * 1000)
+
+
+def _head(manifest: dict, branch: str) -> int | None:
+    if branch == "main":
+        return manifest["current"]
+    return manifest["branches"].get(branch)
+
+
+def _check_branch(manifest: dict, branch: str) -> None:
+    if branch != "main" and branch not in manifest["branches"]:
+        raise ValueError(f"unknown branch {branch!r}; create_branch first")
+
+
+def _from_head(manifest: dict, branch: str) -> int:
+    head = _head(manifest, branch)
+    if head is None:
+        raise ValueError(f"branch {branch!r} has no snapshots")
+    return head
+
+
+def _move_head(manifest: dict, branch: str, version: int, at_ms: int | None) -> None:
+    """Point `branch` at `version` and append the move to its pointer
+    history at `at_ms` (wall clock when None)."""
+    if branch == "main":
+        manifest["current"] = version
+    else:
+        manifest["branches"][branch] = version
+    manifest["history"].setdefault(branch, []).append(
+        {"version": version, "at_ms": at_ms if at_ms is not None else _now_ms()}
+    )
+
+
 class SnapshotTable:
     """A parquet table with numbered, timestamped, immutable snapshots."""
 
-    MANIFEST = "_manifest.json"
+    MANIFEST = MANIFEST
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -114,60 +190,27 @@ class SnapshotTable:
         os.makedirs(root, exist_ok=True)
 
     # -- manifest ----------------------------------------------------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, self.MANIFEST)
-
     def _load_manifest(self) -> dict:
-        try:
-            with open(self._manifest_path()) as f:
-                m = json.load(f)
-        except FileNotFoundError:
-            m = {"current": None, "snapshots": []}
-        m.setdefault("branches", {})  # non-main branch name → version
-        m.setdefault("schemas", [])  # distinct data schemas (module doc)
-        # Per-branch pointer history: branch → [{version, at_ms}, ...] appended
-        # at every head change (write / fast_forward / create_branch). This is
-        # what TIMESTAMP AS OF resolves against — an unpublished branch write
-        # or a rolled-back version must not be reachable via a main read.
-        # Legacy manifests (no history) were main-only: rebuild from snapshots.
-        if "history" not in m:
-            m["history"] = {
-                "main": [
-                    {"version": s["version"], "at_ms": s["committed_at_ms"]}
-                    for s in m["snapshots"]
-                ]
-            }
-        return m
+        return load_manifest(self.root)
 
-    def _commit_manifest(
-        self, manifest: dict, expected_base: int | None = None
-    ) -> None:
-        """Atomic manifest swap; with `expected_base`, an optimistic
-        compare-and-swap: the commit aborts (ConcurrentWriteError) if
-        any snapshot landed since this writer read the manifest — the
-        Delta/Iceberg optimistic-concurrency contract. The advisory
-        flock serializes the check+swap on one node; on shared object
+    def _update(self, fn) -> dict | None:
+        """The one way to change the manifest: under the table's lock,
+        re-read the manifest on disk, apply `fn` to it, and swap in the
+        manifest `fn` returns (`util.atomic_open`, so the swap is
+        all-or-nothing). `fn` always edits the latest state, so no
+        commit that lands meanwhile is lost. When `fn` raises, or
+        returns None, nothing is written. Returns what `fn` returned.
+        The flock serializes mutations on one node; on shared object
         storage this role belongs to the catalog service (Nessie, a
         DynamoDB lock, Hive metastore), which is exactly what the
-        reference's Nessie REST catalog provides.
-        """
-        lock_path = os.path.join(self.root, ".manifest.lock")
-        with open(lock_path, "w") as lf:
+        reference's Nessie REST catalog provides."""
+        with open(os.path.join(self.root, ".manifest.lock"), "w") as lf:
             fcntl.flock(lf, fcntl.LOCK_EX)
-            if expected_base is not None:
-                on_disk = self._load_manifest()
-                latest = max(
-                    (s["version"] for s in on_disk["snapshots"]), default=0
-                )
-                if latest != expected_base:
-                    raise ConcurrentWriteError(
-                        f"manifest advanced to v{latest} (expected v{expected_base}); "
-                        "reload and retry the commit"
-                    )
-            fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, self._manifest_path())  # atomic commit point
+            m = fn(self._load_manifest())
+            if m is not None:
+                with atomic_open(os.path.join(self.root, MANIFEST), "w") as f:
+                    json.dump(m, f)
+        return m
 
     # -- API ----------------------------------------------------------------
     def exists(self) -> bool:
@@ -196,10 +239,17 @@ class SnapshotTable:
         `partition_by` columns, is recorded in the same manifest swap:
         the entry's `schema_id` names it in the table's `schemas` list,
         which gains an entry only for a schema no earlier snapshot has.
+
+        The data is written before the lock is taken, into a dir named
+        by the version allocated from the manifest read first. The
+        commit is an optimistic compare-and-swap: if any snapshot
+        landed since that read, it aborts with ConcurrentWriteError
+        instead of clobbering the other writer's snapshot (the
+        Delta/Iceberg optimistic-concurrency contract). A commit that
+        fails removes its dir.
         """
         m = self._load_manifest()
-        if branch != "main" and branch not in m["branches"]:
-            raise ValueError(f"unknown branch {branch!r}; create_branch first")
+        _check_branch(m, branch)
         # versions are table-global (branches share the snapshot list)
         version = max((s["version"] for s in m["snapshots"]), default=0) + 1
         # uuid suffix: a crashed write never collides with a retry
@@ -210,39 +260,35 @@ class SnapshotTable:
         writer.parquet(vdir)
         pcols = {c.lower() for c in partition_by or []}
         data = T.StructType([f for f in df.schema.fields if f.name.lower() not in pcols])
-        info = SnapshotInfo(
-            version=version,
-            committed_at_ms=committed_at_ms
-            if committed_at_ms is not None
-            else int(time.time() * 1000),
-            path=vdir,
-            properties=properties,
-            schema_id=_schema_id(m, data),
-        )
-        m["snapshots"].append(info.__dict__)
-        if branch == "main":
-            m["current"] = version
-        else:
-            m["branches"][branch] = version
-        m["history"].setdefault(branch, []).append(
-            {"version": version, "at_ms": info.committed_at_ms}
-        )
-        # CAS against the version we allocated from: if another writer
-        # committed meanwhile, abort instead of clobbering its snapshot
-        self._commit_manifest(m, expected_base=version - 1)
-        return info
+        at_ms = committed_at_ms if committed_at_ms is not None else _now_ms()
+
+        def commit(m: dict) -> dict:
+            latest = max((s["version"] for s in m["snapshots"]), default=0)
+            if latest != version - 1:
+                raise ConcurrentWriteError(
+                    f"manifest advanced to v{latest} (expected v{version - 1}); "
+                    "reload and retry the commit"
+                )
+            _check_branch(m, branch)
+            info = SnapshotInfo(version, at_ms, vdir, properties, _schema_id(m, data))
+            m["snapshots"].append(info.__dict__)
+            _move_head(m, branch, version, at_ms)
+            return m
+
+        try:
+            return SnapshotInfo(**self._update(commit)["snapshots"][-1])
+        except BaseException:
+            shutil.rmtree(vdir, ignore_errors=True)
+            raise
 
     # -- branches (write-audit-publish) -------------------------------------
     def branch_head(self, branch: str = "main") -> int | None:
-        m = self._load_manifest()
-        return m["current"] if branch == "main" else m["branches"].get(branch)
+        return _head(self._load_manifest(), branch)
 
     def head_properties(self, branch: str = "main") -> dict | None:
         """Commit metadata of the branch head (None if no head / none set)."""
-        head = self.branch_head(branch)
-        if head is None:
-            return None
         m = self._load_manifest()
+        head = _head(m, branch)
         return next(
             (s.get("properties") for s in m["snapshots"] if s["version"] == head),
             None,
@@ -252,18 +298,14 @@ class SnapshotTable:
         self, name: str, from_branch: str = "main", at_ms: int | None = None
     ) -> int:
         """Zero-copy branch: a named pointer at from_branch's head."""
-        m = self._load_manifest()
-        if name == "main" or name in m["branches"]:
-            raise ValueError(f"branch {name!r} already exists")
-        head = self.branch_head(from_branch)
-        if head is None:
-            raise ValueError(f"branch {from_branch!r} has no snapshots")
-        m["branches"][name] = head
-        m["history"].setdefault(name, []).append(
-            {"version": head, "at_ms": at_ms if at_ms is not None else int(time.time() * 1000)}
-        )
-        self._commit_manifest(m)
-        return head
+
+        def create(m: dict) -> dict:
+            if name == "main" or name in m["branches"]:
+                raise ValueError(f"branch {name!r} already exists")
+            _move_head(m, name, _from_head(m, from_branch), at_ms)
+            return m
+
+        return self._update(create)["branches"][name]
 
     def fast_forward(
         self, to_branch: str, from_branch: str, at_ms: int | None = None
@@ -274,28 +316,24 @@ class SnapshotTable:
         (wall clock by default), so TIMESTAMP AS OF reads reflect when
         the publish (or rollback — a backward move) happened on that
         branch, never when the data was staged elsewhere."""
-        m = self._load_manifest()
-        head = self.branch_head(from_branch)
-        if head is None:
-            raise ValueError(f"branch {from_branch!r} has no snapshots")
-        if to_branch == "main":
-            m["current"] = head
-        else:
-            if to_branch not in m["branches"]:
-                raise ValueError(f"unknown branch {to_branch!r}")
-            m["branches"][to_branch] = head
-        m["history"].setdefault(to_branch, []).append(
-            {"version": head, "at_ms": at_ms if at_ms is not None else int(time.time() * 1000)}
-        )
-        self._commit_manifest(m)
-        return head
+
+        def forward(m: dict) -> dict:
+            head = _from_head(m, from_branch)
+            _check_branch(m, to_branch)
+            _move_head(m, to_branch, head, at_ms)
+            return m
+
+        return _head(self._update(forward), to_branch)
 
     def drop_branch(self, name: str) -> None:
-        m = self._load_manifest()
         if name == "main":
             raise ValueError("cannot drop main")
-        m["branches"].pop(name, None)
-        self._commit_manifest(m)
+
+        def drop(m: dict) -> dict:
+            m["branches"].pop(name, None)
+            return m
+
+        self._update(drop)
 
     def _resolve(
         self,
@@ -341,7 +379,7 @@ class SnapshotTable:
             # eligible event IS the head at as_of_ms (max-by-at_ms would pick
             # the wrong side of a same-millisecond rollback)
             return m, entry(events[-1]["version"])
-        head = m["current"] if branch == "main" else m["branches"].get(branch)
+        head = _head(m, branch)
         if head is None:
             raise FileNotFoundError(f"no snapshots on {branch!r} in {self.root}")
         return m, entry(head)

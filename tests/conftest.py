@@ -52,3 +52,25 @@ def job_census(spark):
             sc.setLocalProperty("spark.job.description", None)
 
     return census
+
+
+@pytest.fixture()
+def before_manifest_lock(monkeypatch):
+    """`before_manifest_lock(fn)` runs `fn()` once, just before the next
+    `SnapshotTable` manifest mutation takes its lock: the way to land a
+    competing commit between a mutation's start and its swap. `fn` runs
+    before the lock is taken, never while it is held: flock locks per
+    open file description, so a nested commit under the lock in the
+    same process would block forever."""
+    from hybrid_data_lakehouse_lab_spark.operators import timetravel
+
+    real = timetravel.fcntl.flock
+    pending: list = []
+
+    def flock(fd, op):
+        if pending:
+            pending.pop()()
+        return real(fd, op)
+
+    monkeypatch.setattr(timetravel.fcntl, "flock", flock)
+    return pending.append

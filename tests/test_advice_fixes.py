@@ -64,10 +64,12 @@ def test_as_of_respects_rollback(spark, table):
     table.write(_df(spark, 99), committed_at_ms=2_000)  # v2 on main
     assert table.read(as_of_ms=2_500).count() == 99
     # rollback: move main back to v1 at t=3000
-    m = table._load_manifest()
-    m["current"] = 1
-    m["history"]["main"].append({"version": 1, "at_ms": 3_000})
-    table._commit_manifest(m)
+    def rollback(m):
+        m["current"] = 1
+        m["history"]["main"].append({"version": 1, "at_ms": 3_000})
+        return m
+
+    table._update(rollback)
     # post-rollback timestamps resolve to v1, not the abandoned v2 ...
     assert table.read(as_of_ms=3_500).count() == 10
     # ... while pre-rollback history is preserved

@@ -17,9 +17,9 @@
 3. (low) `read_iceberg_statistics` on an external blob whose metadata
    omits the optional `ndv` property falls back to the sketch's own
    estimate instead of raising KeyError.
-4. (low) `lz4_block_decompress` / `lz4_frame_decompress` raise the
-   module's documented ValueError on truncated input (extension bytes,
-   header, block-size fields) instead of IndexError/struct.error.
+4. (low) `lz4_frame_decompress` raises its documented ValueError on
+   truncated input (header, block-size and end-mark fields) instead of
+   IndexError/struct.error.
 """
 
 from __future__ import annotations
@@ -36,10 +36,9 @@ from hybrid_data_lakehouse_lab_spark.operators.iceberg_meta import (
     read_iceberg_statistics,
     read_iceberg_table,
 )
-from hybrid_data_lakehouse_lab_spark.operators.lz4 import (
-    lz4_block_decompress,
+from hybrid_data_lakehouse_lab_spark.operators.puffin import (
+    lz4_frame_compress,
     lz4_frame_decompress,
-    lz4_frame_store,
 )
 from hybrid_data_lakehouse_lab_spark.operators.timetravel import SnapshotTable
 
@@ -238,25 +237,17 @@ def test_read_statistics_without_ndv_property_falls_back(spark, tmp_path):
 # --- 4. lz4 truncation -> ValueError -----------------------------------------
 
 
-def test_lz4_block_truncated_literal_extension():
-    with pytest.raises(ValueError, match="literal-length extension"):
-        lz4_block_decompress(bytes([0xF0, 0xFF]))
-
-
-def test_lz4_block_truncated_match_extension():
-    # 1 literal, offset 1, match-length nibble 15 then a 0xFF
-    # continuation byte with nothing after it
-    with pytest.raises(ValueError, match="match-length extension"):
-        lz4_block_decompress(bytes([0x1F, 0x41, 0x01, 0x00, 0xFF]))
-
-
 def test_lz4_frame_truncation_raises_valueerror():
-    with pytest.raises(ValueError, match="truncated header"):
+    # magic only: the frame descriptor is missing
+    with pytest.raises(ValueError, match="Truncated"):
         lz4_frame_decompress(struct.pack("<I", 0x184D2204))
-    whole = lz4_frame_store(b"hello world")
-    with pytest.raises(ValueError, match="truncated block size"):
+    whole = lz4_frame_compress(b"hello world")
+    # the header alone: no block size follows it
+    with pytest.raises(ValueError, match="Truncated"):
         lz4_frame_decompress(whole[:7])
-    # chopping inside the trailing content checksum
-    with pytest.raises(ValueError, match="truncated content checksum"):
+    # chopping inside the trailing end mark
+    with pytest.raises(ValueError, match="Truncated"):
         lz4_frame_decompress(whole[:-2])
+    with pytest.raises(ValueError, match="not an LZ4 frame"):
+        lz4_frame_decompress(b"")
     assert lz4_frame_decompress(whole) == b"hello world"

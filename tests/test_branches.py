@@ -61,7 +61,7 @@ def test_vacuum_protects_branch_heads(spark, table):
     assert table.read(branch="pinned").count() == 10
     assert 2 in expired  # the unreferenced middle version goes
 
-def test_concurrent_write_aborts_not_clobbers(spark, table):
+def test_concurrent_write_aborts_not_clobbers(spark, table, before_manifest_lock):
     """Optimistic concurrency: a writer whose manifest read is stale
     must fail its commit, not silently drop the other writer's
     snapshot."""
@@ -69,14 +69,14 @@ def test_concurrent_write_aborts_not_clobbers(spark, table):
         ConcurrentWriteError,
     )
 
-    stale = table._load_manifest()
-    table.write(_df(spark, 20), committed_at_ms=2_000)  # writer B lands v2
-    # writer A (holding the stale manifest) tries to commit its own v2
-    stale["snapshots"].append(
-        {"version": 2, "committed_at_ms": 2_500, "path": "/nonexistent"}
+    # writer B lands v2 after writer A allocated its own v2, before A's
+    # commit takes the manifest lock
+    before_manifest_lock(
+        lambda: SnapshotTable(spark, table.root).write(
+            _df(spark, 20), committed_at_ms=2_000
+        )
     )
-    stale["current"] = 2
     with pytest.raises(ConcurrentWriteError, match="reload and retry"):
-        table._commit_manifest(stale, expected_base=1)
+        table.write(_df(spark, 5), committed_at_ms=2_500)
     # B's snapshot survived
     assert table.read().count() == 20

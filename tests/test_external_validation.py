@@ -215,55 +215,56 @@ def test_real_avro_reads_writer_types(spark, tmp_path):
 # --- LZ4 (Puffin compressed footers) -----------------------------------------
 
 
-def test_xxh32_matches_lz4_java(spark):
-    from hybrid_data_lakehouse_lab_spark.operators.lz4 import xxh32
-
-    xx = spark._jvm.net.jpountz.xxhash.XXHashFactory.fastestInstance().hash32()
-    for n in (0, 1, 3, 4, 15, 16, 17, 63, 100, 1000):
-        for seed in (0, 7, 2**31 - 1):
-            data = bytes((i * 37 + n) & 0xFF for i in range(n))
-            want = xx.hash(bytearray(data), 0, len(data), seed) & 0xFFFFFFFF
-            assert xxh32(data, seed) == want, (n, seed)
-
-
 def test_lz4_frame_mutual_readability(spark):
     """Our decoder reads a frame lz4-java actually COMPRESSED (real
-    block sequences, not stored blocks); lz4-java reads our stored-block
-    frames; checksum tampering is caught."""
+    block sequences, not stored blocks); lz4-java reads our frames;
+    checksum tampering is caught."""
     import pytest as _pytest
 
-    from hybrid_data_lakehouse_lab_spark.operators.lz4 import (
+    from hybrid_data_lakehouse_lab_spark.operators.puffin import (
+        lz4_frame_compress,
         lz4_frame_decompress,
-        lz4_frame_store,
     )
 
     jvm = spark._jvm
     payload = (b"iceberg puffin footer " * 500) + bytes(range(256)) * 20
-    baos = jvm.java.io.ByteArrayOutputStream()
-    fo = jvm.net.jpountz.lz4.LZ4FrameOutputStream(baos)
-    fo.write(bytearray(payload))
-    fo.close()
-    frame = bytes([b & 0xFF for b in baos.toByteArray()])
+
+    def java_frame(*flags: str) -> bytes:
+        lz4 = jvm.net.jpountz.lz4
+        baos = jvm.java.io.ByteArrayOutputStream()
+        bits = getattr(lz4, "LZ4FrameOutputStream$FLG$Bits")
+        arr = spark.sparkContext._gateway.new_array(bits, len(flags))
+        for i, f in enumerate(flags):
+            arr[i] = getattr(bits, f)
+        block = getattr(lz4, "LZ4FrameOutputStream$BLOCKSIZE").SIZE_64KB
+        fo = lz4.LZ4FrameOutputStream(baos, block, arr)
+        fo.write(bytearray(payload))
+        fo.close()
+        return bytes([b & 0xFF for b in baos.toByteArray()])
+
+    frame = java_frame("BLOCK_INDEPENDENCE")
     assert len(frame) < len(payload) // 10  # really compressed
     assert lz4_frame_decompress(frame) == payload
-    mine = lz4_frame_store(payload)
+    mine = lz4_frame_compress(payload)
     fi = jvm.net.jpountz.lz4.LZ4FrameInputStream(
         jvm.java.io.ByteArrayInputStream(bytearray(mine))
     )
     assert bytes([b & 0xFF for b in fi.readAllBytes()]) == payload
-    bad = bytearray(mine)
+    checked = java_frame("BLOCK_INDEPENDENCE", "CONTENT_CHECKSUM")
+    assert lz4_frame_decompress(checked) == payload
+    bad = bytearray(checked)
     bad[-1] ^= 0xFF  # content checksum
-    with _pytest.raises(ValueError, match="content checksum"):
+    with _pytest.raises(ValueError, match="contentChecksum"):
         lz4_frame_decompress(bytes(bad))
     bad2 = bytearray(frame)
     bad2[6 + (1 if frame[4] & 0x08 else 0) * 8] ^= 0xFF  # header checksum
-    with _pytest.raises(ValueError, match="header checksum"):
+    with _pytest.raises(ValueError, match="headerChecksum"):
         lz4_frame_decompress(bytes(bad2))
 
 
 def test_puffin_compressed_footer_roundtrip(spark, tmp_path):
     """A Puffin file with an LZ4-compressed footer (flag bit 0) — both
-    one we write (stored-block frame) and one whose payload lz4-java
+    one we write (pyarrow's LZ4 frame codec) and one whose payload lz4-java
     compressed — parses to the same FileMetadata."""
     import struct as _st
 

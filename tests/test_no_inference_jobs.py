@@ -235,7 +235,7 @@ def test_manifest_without_schemas_reads_exports_and_diffs_alike(
     del legacy["schemas"]
     for s in legacy["snapshots"]:
         del s["schema_id"]
-    t._commit_manifest(legacy)
+    t._update(lambda _m: legacy)
     for n in os.listdir(t.root):
         p = os.path.join(t.root, n)
         if n.startswith("v0000") or n in (SnapshotTable.MANIFEST, ".manifest.lock"):
