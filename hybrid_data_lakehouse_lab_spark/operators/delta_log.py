@@ -52,12 +52,15 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import urllib.parse
 import uuid
+from dataclasses import dataclass, field
 
 from .mor_diff import (
     MorBase,
     _parquet_row_count,
+    _snapshot_files,
     _with_file_pos,
     gc_ledger,
     scan_files,
@@ -144,72 +147,6 @@ def _is_commit_file(f: str) -> bool:
     corrupt version resolution."""
     parts = f.split(".")
     return len(parts) == 2 and parts[1] == "json" and parts[0].isdigit()
-
-
-def _snapshot_files(root: str, snapshot_path: str) -> list[dict]:
-    """Data files of one snapshot directory as Delta `add`-action dicts
-    (path relative to the table root, percent-encoded per the spec)."""
-    out = []
-    for dirpath, _dirnames, filenames in os.walk(snapshot_path):
-        for fn in sorted(filenames):
-            if not fn.endswith(".parquet") or fn.startswith((".", "_")):
-                continue
-            full = os.path.join(dirpath, fn)
-            rel = os.path.relpath(full, root).replace(os.sep, "/")
-            partition_values = {}
-            for seg in rel.split("/")[:-1]:
-                if "=" in seg:
-                    k, _, v = seg.partition("=")
-                    partition_values[k] = (
-                        None
-                        if v == "__HIVE_DEFAULT_PARTITION__"
-                        else urllib.parse.unquote(v)
-                    )
-            st = os.stat(full)
-            out.append(
-                {
-                    "path": urllib.parse.quote(rel, safe="/=-._"),
-                    "partitionValues": partition_values,
-                    "size": st.st_size,
-                    "modificationTime": int(st.st_mtime * 1000),
-                    "dataChange": True,
-                }
-            )
-    return out
-
-
-def _footer_rows(root: str, files: list[dict]) -> list[int]:
-    """Parquet-footer row count of each of `files` (`_snapshot_files`
-    dicts), in order — footer reads only, no data scan."""
-    return [
-        _parquet_row_count(os.path.join(root, urllib.parse.unquote(f["path"])))
-        for f in files
-    ]
-
-
-def _check_compaction_rows(
-    root: str, prev_dir: str, files: list[dict], version: int, rows=None
-) -> int | None:
-    """Refuse a snapshot flagged as a compaction whose live row count
-    (`rows`, or the footer total of `files`) differs from its parent
-    snapshot's at `prev_dir`: exporters emit compactions as logical
-    no-ops (Delta OPTIMIZE with dataChange=false, Iceberg "replace"),
-    so a wrong flag would hide a data change from every CDF, streaming
-    or incremental consumer. Skipped when the parent dir is gone
-    (vacuumed). Returns the compaction's row total when it was known
-    or read, else None."""
-    if not os.path.isdir(prev_dir):
-        return rows
-    if rows is None:
-        rows = sum(_footer_rows(root, files))
-    want = sum(_footer_rows(root, _snapshot_files(root, prev_dir)))
-    if rows != want:
-        raise ValueError(
-            f"snapshot v{version} is flagged operation=compaction but "
-            f"changes the row count ({want} -> {rows}); a compaction "
-            "must preserve the table's rows"
-        )
-    return rows
 
 
 def _delta_stats(path: str) -> str | None:
@@ -350,6 +287,226 @@ def _write_change_data(
     ]
 
 
+@dataclass
+class _DeltaExport:
+    """The state `export_delta_log` carries across the pointer history:
+    the merge-on-read base (`MorBase`), the files and schema of the last
+    rewrite and commit, the table's protocol so far, and the DV files
+    and change-data dirs this export wrote (for the stale-file GC)."""
+
+    table: SnapshotTable
+    mor_deletes: bool
+    change_data: bool
+    created_ms: int
+    base: MorBase
+    prev_files: list[dict] = field(default_factory=list)
+    prev_schema: str | None = None
+    protocol: dict | None = None
+    dv_files: set[str] = field(default_factory=set)
+    cdc_dirs: set[str] = field(default_factory=set)
+
+
+def _commit_info(at_ms: int, props: dict, t, partition_cols: list) -> dict:
+    """The commitInfo action of the commit of transition `t`, with the
+    snapshot's `props` (the SCD2 checkpoint rides there) as
+    userMetadata."""
+    if t.kind == "delete":
+        op, params = "DELETE", {"predicate": "[]"}
+    elif t.maintenance:
+        # delta-spark OPTIMIZE: a logical no-op rewrite. Delta has no
+        # minor form (DV descriptors already replace per file), so a
+        # minor compaction is one too. A z-ordered rewrite
+        # (maintenance.rewrite_data_files_sorted strategy="zorder")
+        # records its columns as delta-spark does: zOrderBy
+        op, params = "OPTIMIZE", {"predicate": "[]", "auto": "false"}
+        if props.get("zorder-by"):
+            params["zOrderBy"] = props["zorder-by"]
+    else:
+        op, params = "WRITE", {
+            "mode": "Overwrite",
+            "partitionBy": json.dumps(partition_cols),
+        }
+    info = {
+        "timestamp": at_ms,
+        "operation": op,
+        "operationParameters": params,
+        "engineInfo": "hybrid_data_lakehouse_lab_spark SnapshotTable exporter",
+    }
+    if props:
+        info["userMetadata"] = json.dumps(props)
+    return {"commitInfo": info}
+
+
+def _first_protocol(mor_deletes: bool, change_data: bool) -> dict:
+    """The protocol of a table's first commit: the deletionVectors
+    feature (plus changeDataFeed) with DVs, the legacy writer-4 CDF
+    protocol (no reader requirement) with change data only, else
+    reader 1 / writer 2."""
+    if mor_deletes:
+        features = ["deletionVectors"] + (["changeDataFeed"] if change_data else [])
+        return dict(DV_PROTOCOL, writerFeatures=sorted(features))
+    if change_data:
+        return {"minReaderVersion": 1, "minWriterVersion": 4}
+    return PROTOCOL
+
+
+def _table_actions(x: _DeltaExport, read_schema, partition_cols: list) -> list[dict]:
+    """The protocol and metaData actions of a commit whose snapshot
+    reads as `read_schema`: the protocol on the first commit, and again
+    on the commit where a variant column first appears (schema
+    evolution upgrades it, like a real writer enabling a table
+    feature); metaData whenever the schema changes."""
+    out = []
+    proto = x.protocol or _first_protocol(x.mor_deletes, x.change_data)
+    if _contains_variant(read_schema) and "variantType" not in proto.get(
+        "writerFeatures", ()
+    ):
+        proto = _variant_protocol(proto)
+    if proto is not x.protocol:
+        out.append({"protocol": proto})
+        x.protocol = proto
+    schema_str = read_schema.json()
+    if schema_str != x.prev_schema:
+        configuration = {"delta.enableDeletionVectors": "true"} if x.mor_deletes else {}
+        if x.change_data:
+            configuration["delta.enableChangeDataFeed"] = "true"
+        out.append(
+            {
+                "metaData": {
+                    "id": str(uuid.uuid5(uuid.NAMESPACE_URL, x.table.root)),
+                    "format": {"provider": "parquet", "options": {}},
+                    "schemaString": schema_str,
+                    "partitionColumns": partition_cols,
+                    "configuration": configuration,
+                    "createdTime": x.created_ms,
+                }
+            }
+        )
+        x.prev_schema = schema_str
+    return out
+
+
+def _dv_commit(x: _DeltaExport, i: int, at_ms: int, t) -> list[dict]:
+    """The file actions of deletion-vector commit `i` for the delete
+    transition `t`: each touched file gets `remove` + re-`add` with its
+    CUMULATIVE bitmap (a descriptor replaces any prior one for that
+    file, per the spec). Unlike an Iceberg positional delete file, a DV
+    is attached to ONE data file and carries no partition tuple, so a
+    partitioned table takes this path too. The bitmaps arrive
+    serialized from the executors; the driver only frames them into
+    one `.bin` file and the actions. With change data, the deleted rows
+    are also written as `_change_data/` cdc files."""
+    from .roaring import encode_dv_uuid, write_dv_file
+
+    base, root = x.base, x.table.root
+    changed = base.fold_dvs(t.diff)
+    base.record_delete(t.diff, t.rows)
+    olds = [base.file(p) for p in changed]
+    dv_uuid = uuid.uuid5(uuid.NAMESPACE_URL, f"{root}#dv{i}")
+    dv_name = f"deletion_vector_{dv_uuid}.bin"
+    descs = write_dv_file(
+        os.path.join(root, dv_name), [base.dv[p][0] for p in changed]
+    )
+    x.dv_files.add(dv_name)
+    actions = []
+    for p, old, (off, sz) in zip(changed, olds, descs):
+        dv = {
+            "storageType": "u",
+            "pathOrInlineDv": encode_dv_uuid(dv_uuid),
+            "offset": off,
+            "sizeInBytes": sz,
+            "cardinality": base.dv[p][1],
+        }
+        actions.append(
+            {
+                "remove": {
+                    "path": old["path"],
+                    "deletionTimestamp": at_ms,
+                    "dataChange": True,
+                }
+            }
+        )
+        actions.append({"add": dict(old, deletionVector=dv)})
+    if x.change_data:
+        pv_of = {p: old.get("partitionValues") or {} for p, old in zip(changed, olds)}
+        actions += _write_change_data(
+            x.table.spark, root, i, t.diff, changed, pv_of, base.schema
+        )
+        x.cdc_dirs.add(f"v{i:020d}")
+    return actions
+
+
+def _rewrite_commit(x: _DeltaExport, at_ms: int, t) -> list[dict]:
+    """The file actions of a full-rewrite commit for transition `t`:
+    `remove` for each file of the last rewrite that `t`'s snapshot does
+    not keep, and `add` with footer statistics for each of its files. A
+    compaction marks every action dataChange=false, so CDF and
+    streaming readers skip it. The DV state restarts here."""
+    data_change = not t.maintenance
+    kept = {f["path"] for f in t.files}
+    actions = [
+        {
+            "remove": {
+                "path": f["path"],
+                "deletionTimestamp": at_ms,
+                "dataChange": data_change,
+            }
+        }
+        for f in x.prev_files
+        if f["path"] not in kept
+    ]
+    x.prev_files = []
+    for f in t.files:
+        add = dict(f, dataChange=data_change)
+        st = _delta_stats(os.path.join(x.table.root, urllib.parse.unquote(f["path"])))
+        if st:
+            add["stats"] = st
+        x.prev_files.append(add)
+    actions += [{"add": f} for f in x.prev_files]
+    if x.mor_deletes:
+        x.base.reset(t, x.prev_files)
+    return actions
+
+
+def _remove_stale_files(x: _DeltaExport, log_dir: str, last: int) -> None:
+    """A vacuum can SHRINK the pointer history (it rewrites the manifest
+    without the vacuumed versions). Commit files past the new end
+    `last` would still replay, referencing deleted data files, so they
+    go, and so does a `_last_checkpoint` pointing past it. DV files and
+    `_change_data` dirs this export did not write (a shrunk history, a
+    transition that re-exported as a rewrite, change data turned off)
+    would outlive the actions naming them and go by the same
+    contract."""
+    for f in os.listdir(log_dir):
+        if _is_commit_file(f):
+            if int(f.split(".")[0]) > last:
+                os.remove(os.path.join(log_dir, f))
+        elif ".checkpoint" in f and f.endswith((".parquet", ".json")):
+            # External readers (delta-spark, delta-rs) discover
+            # checkpoints by LISTING _delta_log, not only via
+            # _last_checkpoint — an orphaned {v}.checkpoint*.parquet
+            # past the new log end would seed a reader with vacuumed
+            # state referencing deleted data files (ADVICE r6).
+            v = f.split(".")[0]
+            if v.isdigit() and int(v) > last:
+                os.remove(os.path.join(log_dir, f))
+    cp = _load_last_checkpoint(log_dir)
+    if cp is not None and cp["version"] > last:
+        os.remove(os.path.join(log_dir, "_last_checkpoint"))
+    root = x.table.root
+    for f in os.listdir(root):
+        dv_file = f.startswith("deletion_vector_") and f.endswith(".bin")
+        if dv_file and f not in x.dv_files:
+            os.remove(os.path.join(root, f))
+    cdc_root = os.path.join(root, "_change_data")
+    if os.path.isdir(cdc_root):
+        for d in os.listdir(cdc_root):
+            if d not in x.cdc_dirs:
+                shutil.rmtree(os.path.join(cdc_root, d), ignore_errors=True)
+        if not os.listdir(cdc_root):
+            os.rmdir(cdc_root)
+
+
 def export_delta_log(
     table: SnapshotTable,
     branch: str = "main",
@@ -419,6 +576,15 @@ def export_delta_log(
     logs; dual-writer coordination is what a real catalog/log store
     provides and is out of scope here.
 
+    TRANSITIONS: `mor_diff.MorBase.transition` classifies each commit,
+    with the rules both exporters share (maintenance flags, the
+    row-count refusal, the base-schema gate). A delete commits as a DV
+    DELETE, a compaction or minor compaction as an OPTIMIZE whose
+    actions all carry dataChange=false, and anything else as an
+    overwriting WRITE; the commit where a variant column first appears
+    also upgrades the protocol, and a commit that changes the schema
+    carries a new metaData action.
+
     Returns the `_delta_log` directory path. Raises if the branch has
     no history (a Delta log must have a version 0).
     """
@@ -427,281 +593,37 @@ def export_delta_log(
     if not events:
         raise ValueError(f"branch {branch!r} has no commits to export")
     by_version = {s["version"]: s for s in m["snapshots"]}
-
     log_dir = os.path.join(table.root, "_delta_log")
     os.makedirs(log_dir, exist_ok=True)
-
-    prev_files: list[dict] = []
-    prev_schema: str | None = None
-    # DV export state since the last rewrite commit (mor_diff.MorBase):
-    # its files keyed by absolute path, the mask of deleted positions
-    # and each touched file's cumulative deletion vector
-    base = MorBase(table.root)
-    referenced_dv_files: set[str] = set()
-    referenced_cdc_dirs: set[str] = set()
-    cur_protocol: dict | None = None
-    cur_protocol_variant = False
+    x = _DeltaExport(
+        table, mor_deletes, change_data, events[0]["at_ms"], MorBase(table.root)
+    )
+    kinds = ("delete",) if mor_deletes else ()
+    prev = None
     for i, ev in enumerate(events):
         snap = by_version[ev["version"]]
         files = _snapshot_files(table.root, snap["path"])
-        data_schema = snapshot_schema(m, snap)
-        snap_schema = read_parquet(table.spark, data_schema, snap["path"]).schema
-        snap_has_variant = _contains_variant(snap_schema)
-        schema_str = snap_schema.json()
+        schema = snapshot_schema(m, snap)
+        read_schema = read_parquet(table.spark, schema, snap["path"]).schema
+        t = x.base.transition(
+            table.spark, snap, prev, files, schema, read_schema, kinds
+        )
         # partition columns in path-segment order (every file of one
         # snapshot shares the same partitioning scheme)
-        partition_cols = next(
+        pcols = next(
             (list(f["partitionValues"]) for f in files if f["partitionValues"]), []
         )
-
-        # Unlike Iceberg positional delete files (partition-scoped per
-        # the spec, so our Iceberg exporter rewrites partitioned
-        # tables), a Delta DV is attached to ONE data file and carries
-        # no partition tuple of its own — partitioned tables take the
-        # DV path too; the re-added file keeps its partitionValues.
-        # compaction snapshots (operators/maintenance.py compact_snapshot)
-        # rewrite the SAME rows into right-sized files: always the
-        # rewrite branch, exported with OPTIMIZE semantics below. A
-        # compaction that became the FIRST exported commit (vacuum
-        # expired its whole ancestry) exports as a normal creation
-        # WRITE instead — delta-spark never emits OPTIMIZE at version 0,
-        # and dataChange=false on a creation commit would hide the
-        # table's rows from CDF/streaming consumers.
-        # "rewrite-deletes" (minor compaction) has no Delta-side minor
-        # form — DV descriptors already replace per file — so it exports
-        # with the same OPTIMIZE no-op semantics.
-        is_compaction = i > 0 and (
-            (snap.get("properties") or {}).get("operation")
-            in ("compaction", "rewrite-deletes")
-        )
-        changed = None  # absolute paths of the files a DV commit touches
-        deleted = None
-        cur_rows = None  # this snapshot's footer row total, read once
-        if (
-            mor_deletes
-            and not is_compaction
-            and base.ready()
-            and schema_str == prev_schema
-        ):
-            cur_rows = sum(_footer_rows(table.root, files))
-            if cur_rows < base.live_rows:
-                deleted = base.delete_diff(
-                    table.spark, snap["path"], cur_rows, data_schema
-                )
-                if deleted is not None:
-                    changed = base.fold_dvs(deleted)
-                    base.record_delete(deleted, cur_rows)
-
-        actions: list[dict] = []
-        if changed is not None:
-            op, op_params = "DELETE", {"predicate": "[]"}
-        elif is_compaction:
-            # delta-spark OPTIMIZE: a logical no-op rewrite; dataChange
-            # false on every action so CDF/streaming consumers skip it.
-            # A z-ordered rewrite (maintenance.rewrite_data_files_sorted
-            # strategy="zorder") records its columns exactly as
-            # delta-spark does: the zOrderBy operationParameter.
-            op, op_params = "OPTIMIZE", {"predicate": "[]", "auto": "false"}
-            _zb = (snap.get("properties") or {}).get("zorder-by")
-            if _zb:
-                op_params["zOrderBy"] = _zb
+        actions = [_commit_info(ev["at_ms"], snap.get("properties") or {}, t, pcols)]
+        actions += _table_actions(x, read_schema, pcols)
+        if t.kind == "delete":
+            actions += _dv_commit(x, i, ev["at_ms"], t)
         else:
-            op, op_params = "WRITE", {
-                "mode": "Overwrite",
-                "partitionBy": json.dumps(partition_cols),
-            }
-        commit_info = {
-            "timestamp": ev["at_ms"],
-            "operation": op,
-            "operationParameters": op_params,
-            "engineInfo": "hybrid_data_lakehouse_lab_spark SnapshotTable exporter",
-        }
-        if snap.get("properties"):
-            commit_info["userMetadata"] = json.dumps(snap["properties"])
-        actions.append({"commitInfo": commit_info})
-        if i == 0:
-            if mor_deletes:
-                proto = {k: list(v) if isinstance(v, list) else v
-                         for k, v in DV_PROTOCOL.items()}
-                if change_data:
-                    proto["writerFeatures"] = sorted(
-                        set(proto["writerFeatures"]) | {"changeDataFeed"}
-                    )
-            elif change_data:
-                # legacy CDF protocol: no reader requirement, writer 4
-                proto = {"minReaderVersion": 1, "minWriterVersion": 4}
-            else:
-                proto = PROTOCOL
-            if snap_has_variant:
-                proto = _variant_protocol(proto)
-                cur_protocol_variant = True
-            actions.append({"protocol": proto})
-            cur_protocol = proto
-        elif snap_has_variant and not cur_protocol_variant:
-            # variant first appears mid-history (schema evolution):
-            # emit the protocol UPGRADE in the same commit, like a real
-            # writer enabling a table feature
-            cur_protocol = _variant_protocol(cur_protocol)
-            cur_protocol_variant = True
-            actions.append({"protocol": cur_protocol})
-        if schema_str != prev_schema:
-            configuration = (
-                {"delta.enableDeletionVectors": "true"} if mor_deletes else {}
-            )
-            if change_data:
-                configuration["delta.enableChangeDataFeed"] = "true"
-            actions.append(
-                {
-                    "metaData": {
-                        "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table.root)),
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": schema_str,
-                        "partitionColumns": partition_cols,
-                        "configuration": configuration,
-                        "createdTime": events[0]["at_ms"],
-                    }
-                }
-            )
-
-        if changed is not None:
-            # --- deletion-vector commit: touched files get remove +
-            # re-add with the CUMULATIVE bitmap (a descriptor replaces
-            # any prior one for that file, per the spec). The bitmaps
-            # arrive pre-serialized from the executors; the driver only
-            # frames them into the .bin file and the log actions. ---
-            from .roaring import encode_dv_uuid, write_dv_file
-
-            olds = [base.file(p) for p in changed]
-            dv_uuid = uuid.uuid5(uuid.NAMESPACE_URL, f"{table.root}#dv{i}")
-            dv_name = f"deletion_vector_{dv_uuid}.bin"
-            descs = write_dv_file(
-                os.path.join(table.root, dv_name),
-                [base.dv[p][0] for p in changed],
-            )
-            referenced_dv_files.add(dv_name)
-            for p, old, (off, sz) in zip(changed, olds, descs):
-                add = dict(old)
-                add["deletionVector"] = {
-                    "storageType": "u",
-                    "pathOrInlineDv": encode_dv_uuid(dv_uuid),
-                    "offset": off,
-                    "sizeInBytes": sz,
-                    "cardinality": base.dv[p][1],
-                }
-                actions.append(
-                    {
-                        "remove": {
-                            "path": old["path"],
-                            "deletionTimestamp": ev["at_ms"],
-                            "dataChange": True,
-                        }
-                    }
-                )
-                actions.append({"add": add})
-            if change_data:
-                actions.extend(
-                    _write_change_data(
-                        table.spark,
-                        table.root,
-                        i,
-                        deleted,
-                        changed,
-                        {
-                            p: old.get("partitionValues") or {}
-                            for p, old in zip(changed, olds)
-                        },
-                        base.schema,
-                    )
-                )
-                referenced_cdc_dirs.add(f"v{i:020d}")
-        else:
-            # --- full-rewrite commit (always, without mor_deletes) ---
-            # a DV'd base file keeps its descriptor in referenced state
-            # until rewritten here, at which point DV state resets
-            if is_compaction:
-                cur_rows = _check_compaction_rows(
-                    table.root,
-                    by_version[events[i - 1]["version"]]["path"],
-                    files,
-                    ev["version"],
-                )
-            current_paths = {f["path"] for f in files}
-            for f in prev_files:
-                if f["path"] not in current_paths:
-                    actions.append(
-                        {
-                            "remove": {
-                                "path": f["path"],
-                                "deletionTimestamp": ev["at_ms"],
-                                "dataChange": not is_compaction,
-                            }
-                        }
-                    )
-            stat_files = []
-            for f in files:
-                f2 = dict(f)
-                if is_compaction:
-                    f2["dataChange"] = False
-                st = _delta_stats(
-                    os.path.join(table.root, urllib.parse.unquote(f["path"]))
-                )
-                if st:
-                    f2["stats"] = st
-                stat_files.append(f2)
-            actions.extend({"add": f} for f in stat_files)
-            prev_files = stat_files
-            if mor_deletes:
-                if cur_rows is None:
-                    cur_rows = sum(_footer_rows(table.root, files))
-                base.reset(snap["path"], cur_rows, stat_files, data_schema)
-
+            actions += _rewrite_commit(x, ev["at_ms"], t)
         with atomic_open(os.path.join(log_dir, f"{i:020d}.json"), "w") as fh:
             for a in actions:
                 fh.write(json.dumps(a) + "\n")
-        prev_schema = schema_str
-    # A vacuum can SHRINK the pointer history (it rewrites the manifest
-    # without the vacuumed versions). Any previously-exported commit
-    # files past the new end would otherwise still replay — referencing
-    # deleted data files — so drop the stale tail, and drop a
-    # _last_checkpoint that points past the new end for the same reason.
-    last = len(events) - 1
-    for f in os.listdir(log_dir):
-        if _is_commit_file(f):
-            if int(f.split(".")[0]) > last:
-                os.remove(os.path.join(log_dir, f))
-        elif ".checkpoint" in f and f.endswith((".parquet", ".json")):
-            # External readers (delta-spark, delta-rs) discover
-            # checkpoints by LISTING _delta_log, not only via
-            # _last_checkpoint — an orphaned {v}.checkpoint*.parquet
-            # past the new log end would seed a reader with vacuumed
-            # state referencing deleted data files (ADVICE r6).
-            v = f.split(".")[0]
-            if v.isdigit() and int(v) > last:
-                os.remove(os.path.join(log_dir, f))
-    cp = _load_last_checkpoint(log_dir)
-    if cp is not None and cp["version"] > last:
-        os.remove(os.path.join(log_dir, "_last_checkpoint"))
-    # DV files not referenced by THIS export (shrunk history, or a
-    # transition that re-exported as a rewrite) would outlive the adds
-    # naming them — same GC contract as the stale commit tail.
-    for f in os.listdir(table.root):
-        if (
-            f.startswith("deletion_vector_")
-            and f.endswith(".bin")
-            and f not in referenced_dv_files
-        ):
-            os.remove(os.path.join(table.root, f))
-    # _change_data dirs not referenced by THIS export (shrunk history,
-    # or change_data turned off) — same GC contract as DV bins.
-    cdc_root = os.path.join(table.root, "_change_data")
-    if os.path.isdir(cdc_root):
-        import shutil
-
-        for d in os.listdir(cdc_root):
-            if d not in referenced_cdc_dirs:
-                shutil.rmtree(os.path.join(cdc_root, d), ignore_errors=True)
-        if not os.listdir(cdc_root):
-            os.rmdir(cdc_root)
+        prev = snap
+    _remove_stale_files(x, log_dir, len(events) - 1)
     gc_ledger(table.root, [s["path"] for s in m["snapshots"]])
     return log_dir
 

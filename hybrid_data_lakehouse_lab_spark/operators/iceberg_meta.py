@@ -93,17 +93,13 @@ from .avro_io import read_avro, write_avro
 from .mor_diff import (
     MorBase,
     _parquet_row_count,
+    _snapshot_files,
     _upsert_diff,
     gc_ledger,
     scan_files,
     write_spark_parts,
 )
-from .delta_log import (
-    _check_compaction_rows,
-    _footer_rows,
-    _range_may_match,
-    _snapshot_files,
-)
+from .delta_log import _range_may_match
 from .iceberg_transforms import _PARAM_RE
 from .timetravel import SnapshotTable, live_history, snapshot_schema
 from .util import atomic_open, local_frame, read_parquet
@@ -1028,9 +1024,7 @@ class _IcebergExport:
     history: the merge-on-read base (`MorBase`) with the spec and
     schema of its rewrite, the manifest-list rows of the previous
     snapshot, the v3 row-id counter, the sort orders, and what this
-    export wrote (for the stale-file GC). `data_schemas` are the data
-    schemas the snapshot manifest records for the history's events
-    (None where it records none)."""
+    export wrote (for the stale-file GC)."""
 
     table: SnapshotTable
     meta_dir: str
@@ -1040,9 +1034,7 @@ class _IcebergExport:
     schemas: _SchemaHistory
     specs: _SpecRegistry
     base: MorBase
-    data_schemas: list
     base_spec_id: int = 0  # spec of the last full-rewrite snapshot
-    base_schema_sid: int = 0  # schema of the last full-rewrite snapshot
     prev_rows: list[dict] = field(default_factory=list)
     next_row_id: int = 0  # v3 row lineage: the next _row_id to assign
     written_dirs: dict[str, set] = field(
@@ -1361,23 +1353,17 @@ def _append_commit(x: _IcebergExport, i: int, appended, child_rows: int):
     return x.prev_rows + [row], "append"
 
 
-def _rewrite_commit(
-    x: _IcebergExport,
-    i: int,
-    snap_dir: str,
-    files: list[dict],
-    file_rows: list[int],
-    is_compaction: bool,
-    sort_order_id: int,
-):
-    """Full-rewrite snapshot (layout changes, modified rows,
-    compaction; v1 deletes): every file ADDED in one fresh manifest,
-    and the merge-on-read base restarts here. PARTITION-SPEC
-    EVOLUTION: this snapshot's own directory layout decides its spec —
-    a rewrite (or compaction) that repartitions the table registers a
-    new spec-id; manifests of unchanged layout reuse the existing one."""
+def _rewrite_commit(x: _IcebergExport, i: int, t, sort_order_id: int):
+    """Full-rewrite snapshot of transition `t` (layout changes, modified
+    rows, compaction; v1 deletes): every file ADDED in one fresh
+    manifest, and the merge-on-read base restarts here. A compaction's
+    summary operation is "replace" (what Iceberg's rewrite_data_files
+    emits), anything else's "overwrite". PARTITION-SPEC EVOLUTION: this
+    snapshot's own directory layout decides its spec — a rewrite (or
+    compaction) that repartitions the table registers a new spec-id;
+    manifests of unchanged layout reuse the existing one."""
     pcols = next(
-        (list(f["partitionValues"]) for f in files if f["partitionValues"]), []
+        (list(f["partitionValues"]) for f in t.files if f["partitionValues"]), []
     )
     sid = x.specs.resolve(pcols, x.schemas.col_ids[i], x.schemas.types[i])
     row = x.data_manifest(
@@ -1391,14 +1377,13 @@ def _rewrite_commit(
                 "size": f["size"],
                 "partition": f["partitionValues"],
             }
-            for f, rc in zip(files, file_rows)
+            for f, rc in zip(t.files, t.file_rows)
         ],
         sort_order_id=sort_order_id,
     )
     x.base_spec_id = sid
-    x.base_schema_sid = x.schemas.schema_ids[i]
-    x.base.reset(snap_dir, sum(file_rows), files, x.data_schemas[i])
-    return [row], "replace" if is_compaction else "overwrite"
+    x.base.reset(t)
+    return [row], "replace" if t.kind == "compaction" else "overwrite"
 
 
 def _manifest_counts(rows: list[dict], content: int, added_by: int | None = None):
@@ -1713,6 +1698,15 @@ def export_iceberg_metadata(
     base always export as full rewrites (the incremental diffs require
     schema equality).
 
+    TRANSITIONS: `mor_diff.MorBase.transition` classifies each snapshot,
+    with the rules both exporters share (maintenance flags, the
+    row-count refusal, the base-schema gate). A compaction exports as a
+    full rewrite with summary operation "replace"; under v2 and v3 a
+    minor compaction (`rewrite-deletes`) consolidates the delete state
+    into one delete manifest, a "replace" that reuses the data
+    manifests, while v1 (no deletes) writes it as a rewrite; the
+    equality-delete dialect diffs every other snapshot by key.
+
     CHANGE-SET LEDGER (`mor_diff.MorBase`): the delete and append diffs
     and the v3 DV folds are persisted under `_mor_ledger/`, keyed by the
     base state — the base dirs' files as (absolute path, size), the keys
@@ -1739,8 +1733,8 @@ def export_iceberg_metadata(
     if not events:
         raise ValueError(f"branch {branch!r} has no commits to export")
     by_version = {s["version"]: s for s in m["snapshots"]}
-    snap_dirs = [by_version[ev["version"]]["path"] for ev in events]
-    data_schemas = [snapshot_schema(m, by_version[ev["version"]]) for ev in events]
+    snaps = [by_version[ev["version"]] for ev in events]
+    data_schemas = [snapshot_schema(m, s) for s in snaps]
 
     meta_dir = os.path.join(table.root, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
@@ -1751,7 +1745,7 @@ def export_iceberg_metadata(
     # that changes the directory layout (the canonical year-2
     # repartition of a long-lived table) becomes a NEW spec-id, and
     # every manifest records the spec its files were written under
-    files_of = [_snapshot_files(table.root, d) for d in snap_dirs]
+    files_of = [_snapshot_files(table.root, s["path"]) for s in snaps]
     hidden_partitions = hidden_partitions or {}
     seen_dirs = {c for fs in files_of for f in fs for c in f["partitionValues"]}
     unknown_hidden = set(hidden_partitions) - seen_dirs
@@ -1761,14 +1755,12 @@ def export_iceberg_metadata(
             f"{sorted(unknown_hidden)} (partition dirs ever used: "
             f"{sorted(seen_dirs)})"
         )
+    read_schemas = [
+        read_parquet(table.spark, d, s["path"]).schema
+        for s, d in zip(snaps, data_schemas)
+    ]
     schemas = _schema_history(
-        [
-            [(f.name, f.dataType.simpleString()) for f in schema]
-            for schema in (
-                read_parquet(table.spark, s, d).schema
-                for d, s in zip(snap_dirs, data_schemas)
-            )
-        ],
+        [[(f.name, f.dataType.simpleString()) for f in rs] for rs in read_schemas],
         [ev["version"] for ev in events],
         hidden_partitions,
         dict(renamed_columns or {}),
@@ -1793,103 +1785,62 @@ def export_iceberg_metadata(
         schemas,
         _SpecRegistry(hidden_partitions, format_version),
         MorBase(table.root),
-        data_schemas,
+    )
+    kinds = (
+        () if upsert_key is not None
+        else ("delete", "append") if format_version >= 2
+        else ("append",)
     )
     list_schema = _manifest_list_schema(format_version)
     snapshots = []
     for i, ev in enumerate(events):
-        props = by_version[ev["version"]].get("properties") or {}
-        files = files_of[i]
-        # compaction snapshots (operators/maintenance.py compact_snapshot)
-        # fold accumulated delete files back into rewritten data: always
-        # the full-rewrite commit, summary operation "replace" (what
-        # Iceberg's rewrite_data_files emits), never a diffed commit.
-        # If vacuum expired the whole ancestry, the compaction IS the
-        # first exported snapshot — a creation "overwrite", not a
-        # "replace" of nothing.
-        is_compaction = i > 0 and props.get("operation") == "compaction"
-        # rewrite-deletes snapshots (maintenance.py rewrite_delete_files)
-        # are MINOR compactions: data manifests reused untouched, the
-        # stacked delete state consolidated into ONE delete manifest —
-        # Iceberg's rewrite_position_delete_files. Only meaningful under
-        # a MoR dialect; v1 (no deletes) falls through to the rewrite.
-        is_minor = (
-            i > 0
-            and upsert_key is None
-            and format_version >= 2
-            and props.get("operation") == "rewrite-deletes"
+        snap, props = snaps[i], snaps[i].get("properties") or {}
+        prev = snaps[i - 1] if i else None
+        t = x.base.transition(
+            table.spark,
+            snap,
+            prev,
+            files_of[i],
+            data_schemas[i],
+            read_schemas[i],
+            kinds,
         )
         sort_order_id = x.sort_order(props, schemas.col_ids[i])
         first_row_id = x.next_row_id  # v3 row lineage
-        upsert = None
-        if upsert_key is not None and i > 0 and not is_compaction:
-            if os.path.isdir(snap_dirs[i - 1]):
-                changed, del_keys = _upsert_diff(
-                    table.spark,
-                    snap_dirs[i - 1],
-                    snap_dirs[i],
-                    upsert_key,
-                    verified_unique=x.verified_unique,
-                    parent_schema=data_schemas[i - 1],
-                    child_schema=data_schemas[i],
-                )
-                if changed is not None:
-                    upsert = (changed, del_keys)
-        # per-file footer row counts feed only the incremental diffs and
-        # the rewrite's record_count — skip the O(files) driver-side
-        # footer reads on upsert commits
-        file_rows = _footer_rows(table.root, files) if upsert is None else []
-        total_rc = sum(file_rows)
-        if is_minor and x.base.live_rows not in (None, total_rc):
-            raise ValueError(
-                f"snapshot v{ev['version']} is flagged "
-                f"operation=rewrite-deletes but changes the row "
-                f"count ({x.base.live_rows} -> {total_rc}); minor "
-                "compaction must not change the table's data"
-            )
-        # both diffs validate themselves against the footer totals and
-        # return None when the transition is not a pure delete/append.
-        # SCHEMA EVOLUTION: they compare row multisets against the base —
-        # only sound under the base's exact schema
-        deleted = appended = None
+        changed = del_keys = None
         if (
-            upsert_key is None
-            and not is_compaction
-            and not is_minor
-            and x.base.ready()
-            and schemas.schema_ids[i] == x.base_schema_sid
+            upsert_key is not None
+            and t.kind in ("rewrite", "minor")
+            and prev is not None
+            and os.path.isdir(prev["path"])
         ):
-            if format_version >= 2 and total_rc < x.base.live_rows:
-                deleted = x.base.delete_diff(
-                    table.spark, snap_dirs[i], total_rc, data_schemas[i]
-                )
-            elif total_rc > x.base.live_rows:
-                # incremental APPEND (all format versions, v1 included)
-                appended = x.base.append_diff(
-                    table.spark, snap_dirs[i], total_rc, data_schemas[i]
-                )
-        if upsert is not None:
-            rows, operation = _upsert_commit(x, i, *upsert)
-        elif format_version >= 3 and (
-            deleted is not None or (is_minor and x.base.dv)
-        ):
-            rows, operation = _dv_commit(x, i, deleted, total_rc)
-        elif deleted is not None or (is_minor and x.base.deleted is not None):
-            rows, operation = _positional_commit(x, i, deleted, total_rc)
-        elif is_minor and x.base.dirs and x.prev_rows:
-            # minor compaction with nothing to consolidate: a pure
-            # metadata snapshot — parent manifests verbatim
-            rows, operation = list(x.prev_rows), "replace"
-        elif appended is not None:
-            rows, operation = _append_commit(x, i, appended, total_rc)
-        else:
-            if is_compaction:
-                _check_compaction_rows(
-                    table.root, snap_dirs[i - 1], files, ev["version"], total_rc
-                )
-            rows, operation = _rewrite_commit(
-                x, i, snap_dirs[i], files, file_rows, is_compaction, sort_order_id
+            changed, del_keys = _upsert_diff(
+                table.spark,
+                prev["path"],
+                snap["path"],
+                upsert_key,
+                verified_unique=x.verified_unique,
+                parent_schema=data_schemas[i - 1],
+                child_schema=data_schemas[i],
             )
+        if changed is not None:
+            rows, operation = _upsert_commit(x, i, changed, del_keys)
+        elif t.kind == "append":
+            rows, operation = _append_commit(x, i, t.diff, t.rows)
+        elif t.kind == "delete" or (t.kind == "minor" and "delete" in kinds):
+            # a minor compaction (no diff) consolidates the delete state
+            # since the last rewrite into ONE delete manifest, data
+            # manifests reused untouched (Iceberg's
+            # rewrite_position_delete_files); with nothing to
+            # consolidate it is a pure metadata snapshot
+            if format_version >= 3 and (t.diff is not None or x.base.dv):
+                rows, operation = _dv_commit(x, i, t.diff, t.rows)
+            elif t.diff is not None or x.base.deleted is not None:
+                rows, operation = _positional_commit(x, i, t.diff, t.rows)
+            else:
+                rows, operation = list(x.prev_rows), "replace"
+        else:
+            rows, operation = _rewrite_commit(x, i, t, sort_order_id)
         list_path = os.path.join(meta_dir, f"snap-{i + 1}-1-manifest-list.avro")
         write_avro(list_path, list_schema, rows)
         s = {

@@ -1,11 +1,11 @@
-"""Shared merge-on-read transition diffs for the table-format exporters.
+"""Shared merge-on-read transitions for the table-format exporters.
 
 The Iceberg exporter (operators/iceberg_meta.py: v2 positional delete
 files, v3 deletion vectors, incremental appends) and the Delta exporter
-(operators/delta_log.py, deletion vectors) re-express a snapshot
-transition as "parent's files + deleted (file, row-position) pairs" or
-"parent's files + appended rows". This module is the one place that
-decides whether a transition is a pure delete or a pure append: each
+(operators/delta_log.py, deletion vectors) render one pointer history
+as commits. `MorBase.transition` is the one place that decides what
+each snapshot's transition is: a maintenance commit (compaction or
+minor compaction), a pure delete, a pure append, or a rewrite. Each
 diff validates its own result against the caller's parquet-footer row
 totals and writes the positions it found, or returns None — the caller
 then exports the always-correct rewrite model. `MorBase` holds the
@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import base64
 import contextlib
+import functools
 import hashlib
 import json
 import os
@@ -596,6 +597,52 @@ def gc_ledger(root: str, live_dirs) -> None:
         os.rmdir(ledger)
 
 
+#: The maintenance flags operators/maintenance.py writes as a snapshot's
+#: `operation` property: the transition kind each names, and the
+#: property naming the snapshot it rewrote.
+_MAINTENANCE = {
+    "compaction": ("compaction", "compacted-from"),
+    "rewrite-deletes": ("minor", "rewritten-from"),
+}
+
+
+@dataclass
+class Transition:
+    """One pointer-history event as `MorBase.transition` classified it.
+    `kind` is "rewrite", "compaction", "minor", "delete" or "append";
+    `snap` is the snapshot's manifest entry, `files` its data files
+    (`_snapshot_files` dicts), `schema` its recorded data schema (None
+    infers) and `read_schema` the schema a scan of it reads as. `diff`
+    holds a delete's positions (DataFrame(file_path, pos)) or an
+    append's rows. `file_rows`, each file's footer row count, is read
+    on first use and noted in `totals`, the export's footer totals by
+    snapshot dir."""
+
+    kind: str
+    root: str
+    snap: dict
+    files: list
+    schema: object
+    read_schema: object
+    totals: dict
+    diff: object = None
+
+    @functools.cached_property
+    def file_rows(self) -> list[int]:
+        rows = _footer_rows(self.root, self.files)
+        self.totals[self.snap["path"]] = sum(rows)
+        return rows
+
+    @property
+    def rows(self) -> int:
+        return sum(self.file_rows)
+
+    @property
+    def maintenance(self) -> bool:
+        """A compaction or minor compaction: a commit of no data change."""
+        return self.kind in ("compaction", "minor")
+
+
 class MorBase:
     """The merge-on-read state an exporter carries from its last rewrite
     commit, shared by the Iceberg (v2 positional, v3 DV, append) and
@@ -605,7 +652,8 @@ class MorBase:
     - `schema`: the base snapshot's recorded data schema (None when the
       manifest has none), which reads every dir of `dirs` — an append
       diff only runs when the child's schema equals the base's, so the
-      append dirs share it;
+      append dirs share it; `read_schema` is the schema a scan of the
+      base reads as;
     - `files`: every live file of those dirs by absolute path, mapped to
       the entry the caller listed it with;
     - `live_rows`: the base's row count under the mask;
@@ -615,6 +663,39 @@ class MorBase:
     - `dv`: each touched file's cumulative deletion vector as (body
       bytes, cardinality). The driver holds compressed bitmaps, never
       positions; the positions stay in parquet, read by the executors.
+
+    TRANSITIONS. `transition` decides, for both exporters, what each
+    event of the pointer history is, given the previous live event and
+    the diff kinds the caller's format writes (Delta with deletion
+    vectors: delete; Iceberg v1: append; v2 and v3: delete and append;
+    Delta without deletion vectors and the Iceberg equality-delete
+    dialect: none):
+
+    - A snapshot flagged `operation=compaction` or `rewrite-deletes`
+      (operators/maintenance.py) is a `compaction` or `minor` commit
+      when the snapshot it rewrote (`compacted-from` / `rewritten-from`,
+      else the previous live event) is the previous live event. Its row
+      total must then equal that event's, or the export is refused:
+      every format renders maintenance as a commit that changes no data
+      (Delta OPTIMIZE with dataChange false, Iceberg "replace"), so a
+      wrong flag would hide a data change from CDF, streaming and
+      incremental readers. A flagged snapshot reached any other way —
+      the first exported event, a fast-forward to a branch's
+      compaction, a source a vacuum expired — is a data-changing
+      `rewrite`.
+    - Any other snapshot is a `delete` or an `append` when the caller
+      writes that kind, there is a base whose dirs are all on disk, the
+      snapshot reads as the base's `read_schema` (a schema change is
+      never a pure delete or append), and the diff finds the pure delete
+      or append against the masked base. Anything else is a `rewrite`.
+
+    A transition reads its snapshot's parquet footers only when the
+    decision or the caller's commit needs the row counts
+    (`Transition.file_rows`), and each snapshot dir's at most once per
+    export; an unflagged event of a format without diff kinds reads
+    none. The caller renders the kind as its format's commit and keeps
+    the state current: `reset` after a rewrite commit, `record_delete`
+    / `record_append` after a delete or append commit.
 
     CHANGE-SET LEDGER. `delete_diff`, `append_diff` and `fold_dvs`
     compute each transition once per table root, whichever exporter
@@ -652,32 +733,75 @@ class MorBase:
     def __init__(self, root: str):
         self.root = root
         self.ledger = os.path.join(root, LEDGER_DIR)
-        self.reset(None, None, [], None)
-
-    def reset(self, base_dir: str | None, live_rows: int | None, files, schema) -> None:
-        """Start over from a rewrite commit: `files` (dicts with a
-        root-relative, percent-encoded `path`) at `base_dir`, holding
-        `live_rows` rows, with the data `schema` its snapshot records
-        (None infers)."""
-        self.dirs = [] if base_dir is None else [base_dir]
-        self.schema = schema
+        self.totals: dict[str, int] = {}
+        self.dirs: list[str] = []
+        self.schema = self.read_schema = self.live_rows = None
         self.files: dict[str, dict] = {}
-        self._add_files(files)
-        self.live_rows = live_rows
+        self._clear_mask()
+
+    def reset(self, t: Transition, files=None) -> None:
+        """Start over from the rewrite commit of `t`, whose files the
+        caller lists as `files` (dicts with a root-relative,
+        percent-encoded `path`; `t.files` when None)."""
+        self.dirs = [t.snap["path"]]
+        self.schema, self.read_schema = t.schema, t.read_schema
+        self.files = {}
+        self._add_files(t.files if files is None else files)
+        self.live_rows = t.rows
+        self._clear_mask()
+
+    def _clear_mask(self) -> None:
         self.deleted = None
         self.mask_rows = 0
         self.chain: list[str] = []
         self.dv: dict[str, tuple[bytes, int]] = {}
         self._pending: _Entry | None = None
 
-    def ready(self) -> bool:
-        """True when a transition can diff against the base: there is
-        one, with a known row count, and all its dirs are on disk."""
-        return (
-            bool(self.dirs)
-            and self.live_rows is not None
-            and all(os.path.isdir(d) for d in self.dirs)
+    def transition(
+        self, spark, snap: dict, prev: dict | None, files, schema, read_schema, kinds=()
+    ) -> Transition:
+        """Classify the transition from `prev`, the previous live
+        event's snapshot entry (None for the first event), to `snap`,
+        whose data `files`, recorded `schema` and `read_schema` the
+        caller lists, for a format writing the diff `kinds` ("delete",
+        "append"). See TRANSITIONS in the class docstring; a delete's
+        or append's diff is not recorded yet."""
+        t = Transition(
+            "rewrite", self.root, snap, files, schema, read_schema, self.totals
         )
+        props = snap.get("properties") or {}
+        op = props.get("operation")
+        if op in _MAINTENANCE:
+            kind, source = _MAINTENANCE[op]
+            if prev is None or props.get(source, prev["version"]) != prev["version"]:
+                return t
+            want = self.totals.get(prev["path"])
+            if want is None and os.path.isdir(prev["path"]):
+                prev_files = _snapshot_files(self.root, prev["path"])
+                want = sum(_footer_rows(self.root, prev_files))
+            if want is not None and t.rows != want:
+                raise ValueError(
+                    f"snapshot v{snap['version']} is flagged operation={op} but "
+                    f"changes the row count ({want} -> {t.rows}); maintenance "
+                    "must not change the table's data"
+                )
+            t.kind = kind
+            return t
+        if (
+            kinds
+            and self.dirs
+            and read_schema == self.read_schema
+            and all(os.path.isdir(d) for d in self.dirs)
+        ):
+            if "delete" in kinds and t.rows < self.live_rows:
+                t.kind = "delete"
+                t.diff = self.delete_diff(spark, snap["path"], t.rows, schema)
+            elif "append" in kinds and t.rows > self.live_rows:
+                t.kind = "append"
+                t.diff = self.append_diff(spark, snap["path"], t.rows, schema)
+            if t.diff is None:
+                t.kind = "rewrite"
+        return t
 
     def delete_diff(self, spark, child_dir: str, child_rows: int, schema):
         """The positions `_position_delete_diff` finds for `child_dir`
@@ -821,6 +945,47 @@ def _parquet_row_count(path: str) -> int:
         return duckdb.execute(
             "SELECT count(*) FROM read_parquet(?)", [path]
         ).fetchone()[0]
+
+
+def _snapshot_files(root: str, snapshot_path: str) -> list[dict]:
+    """Data files of one snapshot directory as Delta `add`-action dicts
+    (path relative to the table root, percent-encoded per the spec)."""
+    out = []
+    for dirpath, _dirnames, filenames in os.walk(snapshot_path):
+        for fn in sorted(filenames):
+            if not fn.endswith(".parquet") or fn.startswith((".", "_")):
+                continue
+            full = os.path.join(dirpath, fn)
+            rel = os.path.relpath(full, root).replace(os.sep, "/")
+            partition_values = {}
+            for seg in rel.split("/")[:-1]:
+                if "=" in seg:
+                    k, _, v = seg.partition("=")
+                    partition_values[k] = (
+                        None
+                        if v == "__HIVE_DEFAULT_PARTITION__"
+                        else urllib.parse.unquote(v)
+                    )
+            st = os.stat(full)
+            out.append(
+                {
+                    "path": urllib.parse.quote(rel, safe="/=-._"),
+                    "partitionValues": partition_values,
+                    "size": st.st_size,
+                    "modificationTime": int(st.st_mtime * 1000),
+                    "dataChange": True,
+                }
+            )
+    return out
+
+
+def _footer_rows(root: str, files: list[dict]) -> list[int]:
+    """Parquet-footer row count of each of `files` (`_snapshot_files`
+    dicts), in order — footer reads only, no data scan."""
+    return [
+        _parquet_row_count(os.path.join(root, urllib.parse.unquote(f["path"])))
+        for f in files
+    ]
 
 
 def finalize_spark_parts(

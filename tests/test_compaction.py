@@ -189,7 +189,17 @@ def test_compaction_preserves_partition_layout(spark, tmp_path):
     assert adds and all(a["partitionValues"].get("part") for a in adds)
 
 
-def test_misflagged_compaction_refused(spark, tmp_path):
+#: Every export a maintenance flag's row-count refusal covers.
+_EXPORTS = {
+    "delta_dv": lambda t: export_delta_log(t, mor_deletes=True),
+    "iceberg_v1": lambda t: export_iceberg_metadata(t, format_version=1),
+    "iceberg_v2": lambda t: export_iceberg_metadata(t, format_version=2),
+    "iceberg_v3": lambda t: export_iceberg_metadata(t, format_version=3),
+}
+
+
+@pytest.mark.parametrize("export", list(_EXPORTS))
+def test_misflagged_compaction_refused(spark, tmp_path, export):
     """A snapshot flagged operation=compaction that CHANGES rows must be
     refused at export — a silent dataChange=false data change would
     poison CDF and streaming consumers."""
@@ -201,9 +211,7 @@ def test_misflagged_compaction_refused(spark, tmp_path):
         properties={"operation": "compaction"},
     )
     with pytest.raises(ValueError, match="row count"):
-        export_delta_log(t, mor_deletes=True)
-    with pytest.raises(ValueError, match="row count"):
-        export_iceberg_metadata(t, format_version=2)
+        _EXPORTS[export](t)
 
 
 def test_delta_checkpoint_after_optimize(spark, mor_chain):
@@ -386,7 +394,8 @@ def test_minor_compaction_noop_without_deletes(spark, tmp_path):
     assert read_iceberg_table(spark, t.root).count() == 50
 
 
-def test_minor_compaction_misflag_refused(spark, tmp_path):
+@pytest.mark.parametrize("export", list(_EXPORTS))
+def test_minor_compaction_misflag_refused(spark, tmp_path, export):
     t = SnapshotTable(spark, str(tmp_path / "bad"))
     df = spark.range(60).selectExpr("id")
     t.write(df, committed_at_ms=1000)
@@ -397,4 +406,4 @@ def test_minor_compaction_misflag_refused(spark, tmp_path):
         properties={"operation": "rewrite-deletes"},
     )
     with pytest.raises(ValueError, match="rewrite-deletes"):
-        export_iceberg_metadata(t, format_version=2)
+        _EXPORTS[export](t)

@@ -390,17 +390,6 @@ class Lifecycle(RuleBasedStateMachine):
         )
 
     # -- exports (slow tier) ---------------------------------------------------
-    def exportable(self) -> bool:
-        """Each compaction in main's live history comes right after the
-        snapshot it compacted. The exporters refuse a compaction reached
-        any other way (a fast-forward to a branch's compaction, or one
-        whose source a vacuum expired) when its row count differs from
-        the event before it."""
-        if not self.exports:
-            return False
-        live = [v for v, _at in self.history["main"] if v in self.rows]
-        return all(self.compacted_from.get(c, p) == p for p, c in zip(live, live[1:]))
-
     def _exported_reads_equal_the_model(self, read) -> None:
         """Exported version i of main's live pointer history reads back
         the rows of the snapshot its event names."""
@@ -409,7 +398,7 @@ class Lifecycle(RuleBasedStateMachine):
         for i, e in enumerate(events):
             assert got[i] == self.rows[e["version"]], (i, e)
 
-    @precondition(lambda self: self.exportable())
+    @precondition(lambda self: self.exports)
     @rule()
     def export_delta(self):
         export_delta_log(self.t, mor_deletes=True, change_data=True)
@@ -423,12 +412,12 @@ class Lifecycle(RuleBasedStateMachine):
             lambda i: read_iceberg_table(self.spark, self.t.root, snapshot_id=i + 1)
         )
 
-    @precondition(lambda self: self.exportable())
+    @precondition(lambda self: self.exports)
     @rule()
     def export_iceberg_v2(self):
         self._export_iceberg(2)
 
-    @precondition(lambda self: self.exportable())
+    @precondition(lambda self: self.exports)
     @rule()
     def export_iceberg_v3(self):
         self._export_iceberg(3)

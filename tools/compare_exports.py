@@ -60,7 +60,7 @@ import sys
 
 sys.path.append(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-HISTORIES = ["dups", "dups_part", "upsert_days", "evolve", "sorted"]
+HISTORIES = ["dups", "dups_part", "upsert_days", "evolve", "sorted", "wap_compaction"]
 LEDGER_DIR = "_mor_ledger"  # mor_diff.LEDGER_DIR; a parent checkout may lack it
 HIDDEN_DAYS = {"dt": ("ts", "day")}
 # every history has an integer `k`
@@ -179,6 +179,23 @@ def _sorted(spark, t):
     t.write(live.repartition(3), committed_at_ms=5000)
 
 
+def _wap_compaction(spark, t):
+    """Write-audit-publish of a compaction: load, branch `b1`, compact
+    `b1`, delete on main, then fast-forward main to `b1`. Main's last
+    event is the compaction, but its source is not the event before it,
+    so it is a data-changing commit."""
+    from hybrid_data_lakehouse_lab_spark.operators.maintenance import (
+        compact_snapshot,
+    )
+
+    live = spark.range(60).selectExpr("id AS k", "id % 7 AS v")
+    t.write(live.repartition(3), committed_at_ms=1000)
+    t.create_branch("b1", at_ms=2000)
+    compact_snapshot(t, branch="b1", committed_at_ms=3000)
+    t.write(live.where("k % 2 = 0").repartition(3), committed_at_ms=4000)
+    t.fast_forward("main", "b1", at_ms=5000)
+
+
 def build(out: str) -> None:
     from hybrid_data_lakehouse_lab_spark.operators.timetravel import SnapshotTable
 
@@ -190,6 +207,7 @@ def build(out: str) -> None:
         "upsert_days": lambda t: _upsert_days(spark, t),
         "evolve": lambda t: _evolve(spark, t),
         "sorted": lambda t: _sorted(spark, t),
+        "wap_compaction": lambda t: _wap_compaction(spark, t),
     }
     for name in HISTORIES:
         work = os.path.join(out, "work", name)
