@@ -266,10 +266,7 @@ def read_iceberg_view(spark, url: str, version: int | None = None):
     temp view under its bare name before the SQL runs. Tables the SQL
     does not mention are never loaded. `version` reads a historical
     definition (view time travel)."""
-    import urllib.parse as _up
-
-    from .iceberg_meta import read_iceberg_table
-    from .rest_catalog import UNIT_SEP, rest_get
+    from .rest_catalog import rest_get
 
     m = re.match(r"^(.*)/v1/namespaces/([^/]+)/views/([^/?]+)", url)
     if not m:
@@ -302,7 +299,7 @@ def _spark_schema_fields(spark, sql: str, resolve) -> list[dict]:
     """Derive the view's Iceberg schema fields by ANALYZING the SQL
     (no execution): `resolve` registers the referenced temp views,
     which are dropped again once the schema is read."""
-    from .iceberg_meta import _iceberg_type
+    from .rest_catalog import _iceberg_fields
 
     registered = resolve() or []
     try:
@@ -310,14 +307,7 @@ def _spark_schema_fields(spark, sql: str, resolve) -> list[dict]:
     finally:
         for name in registered:
             spark.catalog.dropTempView(name)
-    return [
-        {
-            "name": f.name,
-            "type": _iceberg_type(f.dataType.simpleString()),
-            "required": not f.nullable,
-        }
-        for f in schema.fields
-    ]
+    return _iceberg_fields(schema)
 
 
 def create_view_via_catalog(
@@ -333,9 +323,7 @@ def create_view_via_catalog(
     """CREATE VIEW through the catalog protocol: resolve the referenced
     tables (so the schema can be analyzed engine-side), then POST the
     CreateViewRequest. Returns the LoadViewResult."""
-    import urllib.parse as _up
-
-    from .rest_catalog import UNIT_SEP, _rest_call
+    from .rest_catalog import _ns_url, _rest_call
 
     dns = list(default_namespace if default_namespace is not None else ns)
 
@@ -343,7 +331,6 @@ def create_view_via_catalog(
         return _register_referenced(spark, base_url, dns, sql)
 
     fields = _spark_schema_fields(spark, sql, resolve)
-    seg = _up.quote(UNIT_SEP.join(ns))
     body = {
         "name": name,
         "schema": {"type": "struct", "fields": fields},
@@ -356,7 +343,7 @@ def create_view_via_catalog(
         },
         "properties": properties or {},
     }
-    return _rest_call(f"{base_url}/v1/namespaces/{seg}/views", "POST", body)
+    return _rest_call(_ns_url(base_url, ns, "views"), "POST", body)
 
 
 def replace_view_via_catalog(
@@ -365,12 +352,9 @@ def replace_view_via_catalog(
     """CREATE OR REPLACE VIEW: one commit appending a new schema + view
     version and moving the current pointer, guarded by
     assert-view-uuid. Historical versions stay readable."""
-    import urllib.parse as _up
+    from .rest_catalog import _ns_url, _rest_call, rest_get
 
-    from .rest_catalog import UNIT_SEP, _rest_call, rest_get
-
-    seg = _up.quote(UNIT_SEP.join(ns))
-    url = f"{base_url}/v1/namespaces/{seg}/views/{_up.quote(name)}"
+    url = _ns_url(base_url, ns, "views", name)
     md = rest_get(url)["metadata"]
     dns = _pick_version(md, None).get("default-namespace") or list(ns)
 
@@ -415,18 +399,15 @@ def _register_referenced(
     """Register every namespace table the SQL mentions (word match) as
     a bare-named temp view; returns the names registered so callers
     can drop them after analysis."""
-    import urllib.parse as _up
-
     from .iceberg_meta import read_iceberg_table
-    from .rest_catalog import UNIT_SEP, rest_get
+    from .rest_catalog import _ns_url, rest_get
 
-    seg = _up.quote(UNIT_SEP.join(ns))
-    listing = rest_get(f"{base_url}/v1/namespaces/{seg}/tables")
+    listing = rest_get(_ns_url(base_url, ns, "tables"))
     registered: list[str] = []
     for ident in listing.get("identifiers") or []:
         name = ident["name"]
         if re.search(rf"\b{re.escape(name)}\b", sql):
-            turl = f"{base_url}/v1/namespaces/{seg}/tables/{_up.quote(name)}"
+            turl = _ns_url(base_url, ns, "tables", name)
             read_iceberg_table(spark, turl).createOrReplaceTempView(name)
             registered.append(name)
     return registered

@@ -1,19 +1,20 @@
-"""Minimal read-side Iceberg REST catalog over exported `metadata/`
-trees — the discovery seam the file-based `version-hint.text` protocol
-leaves open (VERDICT r9 "What's missing" #1).
+"""Iceberg REST catalog over exported `metadata/` trees — the discovery
+and commit seam the file-based `version-hint.text` protocol leaves open
+(VERDICT r9 "What's missing" #1).
 
 The reference wires its Spark catalog through a Nessie REST endpoint
 (`/root/reference/libs/scd2_spark_processor.py:101-103`); the public
 equivalent is the Iceberg REST catalog protocol
 (iceberg.apache.org — `rest-catalog-open-api.yaml` in the Iceberg
-repo). This module implements the READ surface of that spec from
-scratch over tables this engine exported (or any tree
-`read_iceberg_table` can read):
+repo). This module implements that spec from scratch — reads, creates,
+commits, multi-table transactions and views — over tables this engine
+exported (or any tree `read_iceberg_table` can read):
 
     GET    /v1/config                            -> CatalogConfig
     GET    /v1/namespaces                        -> ListNamespacesResponse
     POST   /v1/namespaces                        -> CreateNamespaceResponse
     GET    /v1/namespaces/{ns}                   -> GetNamespaceResponse
+    HEAD   /v1/namespaces/{ns}                   -> 204 / 404
     DELETE /v1/namespaces/{ns}                   -> 204 (409 if non-empty)
     GET    /v1/namespaces/{ns}/tables            -> ListTablesResponse
     POST   /v1/namespaces/{ns}/tables            -> LoadTableResult (create)
@@ -63,23 +64,31 @@ scratch over tables this engine exported (or any tree
     only (Iceberg rename semantics — data paths never move).
 
 Per the spec, multipart namespace path segments are joined with the
-0x1F unit separator (URL-encoded `%1F`), errors are the standard
-`{"error": {"message", "type", "code"}}` envelope, and the
-LoadTableResult carries `metadata-location`, the full `metadata`
-document and a `config` map.
+0x1F unit separator (URL-encoded `%1F`), and the LoadTableResult
+carries `metadata-location`, the full `metadata` document and a
+`config` map.
 
-The COMMIT endpoint covers the catalog's POINTER operations — the
-spec's `CommitTableRequest` with requirements `assert-table-uuid` /
-`assert-ref-snapshot-id` and updates `set-snapshot-ref` /
-`remove-snapshot-ref` / `set-properties` / `remove-properties` /
-`add-snapshot`. That is exactly the surface a Nessie-backed catalog
+One rejection path: every rule that refuses a request — a requirement,
+an update action, a validator, pagination, a CRUD handler — raises a
+`_Rejected(status, type, message)` where it fails, and `_route`, the
+one entry point, renders it into the spec's
+`{"error": {"message", "type", "code"}}` envelope. Only the OAuth
+endpoint answers with its own envelope (the spec's
+OAuthErrorResponse).
+
+The COMMIT endpoint applies the spec's `CommitTableRequest`: its
+requirements (`assert-create`, `assert-table-uuid`,
+`assert-ref-snapshot-id`, `assert-current-schema-id`,
+`assert-default-spec-id`) and update actions (`_UPDATES`: snapshots and
+refs, schema / spec / sort-order evolution, statistics, properties),
+one function per rule, as ONE optimistic-concurrency commit
+(requirement check + new metadata version + atomic hint swap,
+serialized per catalog). That is the surface a Nessie-backed catalog
 adds over raw files: publish a staged snapshot to a branch (the WAP
-fast-forward), roll a branch back, tag a snapshot, annotate — all as
-ONE optimistic-concurrency commit (requirement check + new metadata
-version + atomic hint swap, serialized per catalog). Full DATA commits
-(new manifests/files) stay with the engine's writers — `add-snapshot`
-is validated to reference an existing manifest list, the shape an
-external writer that has already staged its files produces.
+fast-forward), roll a branch back, tag a snapshot, annotate. DATA stays
+with the writers — `add-snapshot` is validated to reference an
+existing manifest list, the shape an external writer that has already
+staged its files produces.
 
 The server resolves `version-hint.text` at REQUEST time, so a commit
 followed by a re-export is immediately visible through the protocol —
@@ -108,6 +117,7 @@ import threading
 import urllib.parse
 import urllib.request
 import uuid
+from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .util import atomic_open
@@ -120,10 +130,568 @@ def _split_ns(segment: str) -> tuple[str, ...]:
     return tuple(urllib.parse.unquote(segment).split(UNIT_SEP))
 
 
-def _err(code: int, typ: str, message: str) -> bytes:
-    return json.dumps(
-        {"error": {"message": message, "type": typ, "code": code}}
-    ).encode()
+def _json(obj) -> bytes:
+    return json.dumps(obj).encode()
+
+
+def _result(loc: str | None, md: dict, **extra) -> tuple[int, bytes]:
+    """200 with a Load/Commit result: metadata-location + metadata
+    (+ `config={}` for a LoadTableResult)."""
+    return 200, _json({"metadata-location": loc, "metadata": md, **extra})
+
+
+class _Rejected(Exception):
+    """A refused request: the HTTP status, the spec exception type and
+    the message. Raised by the rule that refuses; rendered once, by
+    `IcebergRestCatalog._route` (and the HTTP handler's JSON-decode and
+    500 branches), into the IcebergErrorResponse envelope."""
+
+    def __init__(self, code: int, typ: str, message: str):
+        super().__init__(message)
+        self.code, self.type = code, typ
+
+    def response(self) -> tuple[int, bytes]:
+        return self.code, _json(
+            {
+                "error": {
+                    "message": str(self),
+                    "type": self.type,
+                    "code": self.code,
+                }
+            }
+        )
+
+
+def _bad(message: str) -> _Rejected:
+    return _Rejected(400, "BadRequestException", message)
+
+
+def _stale(message: str) -> _Rejected:
+    """409: the client re-loads and retries (a lost optimistic race)."""
+    return _Rejected(409, "CommitFailedException", message)
+
+
+def _missing(kind: str, ident: tuple[str, ...]) -> _Rejected:
+    """404 for a Namespace / Table / View."""
+    return _Rejected(
+        404,
+        f"NoSuch{kind}Exception",
+        f"{kind} does not exist: {'.'.join(ident)}",
+    )
+
+
+def _exists(what: str, ident: tuple[str, ...]) -> _Rejected:
+    return _Rejected(
+        409,
+        "AlreadyExistsException",
+        f"{what} already exists: {'.'.join(ident)}",
+    )
+
+
+# -- commit rules: one function per requirement type / update action --
+
+
+class _Commit:
+    """One CommitTableRequest being applied to `md` in memory: the
+    table's identifier, its refs and snapshot ids as the commit moves
+    them, and the ids this commit's own add-schema / add-spec /
+    add-sort-order produced (what the spec's `-1` names)."""
+
+    def __init__(self, ident: tuple[str, ...], md: dict):
+        self.ident, self.md = ident, md
+        self.refs = md.setdefault("refs", {})
+        self.snap_ids = {s["snapshot-id"] for s in md.get("snapshots") or []}
+        self.added: dict[str, int] = {}
+
+
+def _check_and_apply(ident: tuple[str, ...], md: dict, req: dict) -> None:
+    """Validate `req`'s requirements against `md` and apply its updates
+    in place, raising `_Rejected` at the first failure (callers discard
+    the partially-mutated md). Pure in-memory — nothing is written — so
+    a multi-table transaction can validate EVERY change before
+    persisting any (the protocol's commitTransaction atomicity)."""
+    c = _Commit(ident, md)
+    for r in req.get("requirements") or []:
+        rule = _REQUIREMENTS.get(r.get("type"))
+        if rule is None:
+            raise _bad(f"unsupported requirement type {r.get('type')!r}")
+        rule(c, r)
+    for u in req.get("updates") or []:
+        rule = _UPDATES.get(u.get("action"))
+        if rule is None:
+            raise _bad(f"unsupported update action {u.get('action')!r}")
+        rule(c, u)
+
+
+def _assert_create(c: _Commit, r: dict) -> None:
+    # reaching a commit means the table exists (the staged-materialize
+    # path strips assert-create)
+    raise _stale(
+        f"assert-create failed: table {'.'.join(c.ident)} already exists"
+    )
+
+
+def _assert_equal(
+    c: _Commit, r: dict, md_key: str, req_key: str, label: str, default=None
+) -> None:
+    have = c.md.get(md_key, default)
+    if have != r.get(req_key):
+        raise _stale(
+            f"{label} is {have}, requirement expected {r.get(req_key)}"
+        )
+
+
+def _assert_ref_snapshot_id(c: _Commit, r: dict) -> None:
+    cur = c.refs.get(r.get("ref"))
+    cur_id = cur["snapshot-id"] if cur else None
+    if cur_id != r.get("snapshot-id"):
+        raise _stale(
+            f"ref {r.get('ref')!r} is at {cur_id}, "
+            f"requirement expected {r.get('snapshot-id')}"
+        )
+
+
+_REQUIREMENTS = {
+    "assert-create": _assert_create,
+    "assert-table-uuid": partial(
+        _assert_equal, md_key="table-uuid", req_key="uuid", label="table uuid"
+    ),
+    "assert-ref-snapshot-id": _assert_ref_snapshot_id,
+    "assert-current-schema-id": partial(
+        _assert_equal,
+        md_key="current-schema-id",
+        req_key="current-schema-id",
+        label="current schema id",
+    ),
+    "assert-default-spec-id": partial(
+        _assert_equal,
+        md_key="default-spec-id",
+        req_key="default-spec-id",
+        label="default spec id",
+        default=0,
+    ),
+}
+
+
+def _add_snapshot(c: _Commit, u: dict) -> None:
+    s, md = u["snapshot"], c.md
+    ml = s.get("manifest-list")
+    if not (ml and os.path.isfile(ml)):
+        raise _bad(
+            f"add-snapshot manifest-list not found: {ml}"
+            " (stage files before the pointer commit)"
+        )
+    if s["snapshot-id"] in c.snap_ids:
+        raise _bad(f"snapshot {s['snapshot-id']} already exists")
+    version = md.get("format-version", 1)
+    if version >= 3:
+        # v3 row lineage. A snapshot without BOTH lineage fields is
+        # malformed — accepting it would leave next-row-id unadvanced
+        # and let the NEXT commit hand out the same _row_id range again.
+        if s.get("first-row-id") is None or s.get("added-rows") is None:
+            raise _bad(
+                "v3 add-snapshot requires first-row-id and added-rows (row "
+                "lineage is mandatory in format-version 3)"
+            )
+        # the writer staged explicit first_row_ids from the metadata it
+        # loaded; a stale cursor means another commit advanced the
+        # lineage since — the same re-stage retry as a lost ref race,
+        # so the same 409. next_row_id_of is the SAME derivation the
+        # stager uses (registered external trees may lack the explicit
+        # next-row-id field).
+        from .iceberg_meta import next_row_id_of
+
+        nri = next_row_id_of(md)
+        if int(s["first-row-id"]) != nri:
+            raise _stale(
+                "add-snapshot staged row lineage at "
+                f"first-row-id={s.get('first-row-id')} but the table's "
+                f"next-row-id is {nri}; re-stage against fresh metadata"
+            )
+        md["next-row-id"] = nri + int(s["added-rows"])
+    if version >= 2:
+        # a data file inherits its snapshot's sequence number; a child
+        # snapshot staged against older metadata would carry one that
+        # deletes committed since already cover, masking its rows
+        last = md.get("last-sequence-number") or 0
+        seq = s.get("sequence-number")
+        if (
+            seq is not None
+            and s.get("parent-snapshot-id") is not None
+            and seq <= last
+        ):
+            raise _stale(
+                f"add-snapshot sequence-number {seq} is not newer than the "
+                f"table's last-sequence-number {last}; re-stage against "
+                "fresh metadata"
+            )
+        md["last-sequence-number"] = max(last, seq or 0)
+    md.setdefault("snapshots", []).append(s)
+    c.snap_ids.add(s["snapshot-id"])
+
+
+def _set_snapshot_ref(c: _Commit, u: dict) -> None:
+    name, sid = u["ref-name"], u["snapshot-id"]
+    if sid not in c.snap_ids:
+        raise _bad(f"set-snapshot-ref to unknown snapshot {sid}")
+    ref = c.refs[name] = {"snapshot-id": sid, "type": u.get("type", "branch")}
+    # spec SetSnapshotRefUpdate retention fields — honored by
+    # expire_iceberg_snapshots' per-ref retention
+    for k in (
+        "min-snapshots-to-keep",
+        "max-snapshot-age-ms",
+        "max-ref-age-ms",
+    ):
+        if u.get(k) is not None:
+            ref[k] = int(u[k])
+    if name == "main":
+        # main moves = the table's current snapshot moves; the
+        # snapshot-log records it (forward publish and backward
+        # rollback both append — Iceberg RESTORE semantics, monotonic
+        # log)
+        c.md["current-snapshot-id"] = sid
+        c.md.setdefault("snapshot-log", []).append(
+            {
+                "snapshot-id": sid,
+                "timestamp-ms": (c.md.get("last-updated-ms") or 0) + 1,
+            }
+        )
+
+
+def _remove_snapshot_ref(c: _Commit, u: dict) -> None:
+    if u.get("ref-name") == "main":
+        raise _bad("cannot remove the main branch ref")
+    c.refs.pop(u.get("ref-name"), None)
+
+
+def _remove_snapshots(c: _Commit, u: dict) -> None:
+    ids = set(u.get("snapshot-ids") or [])
+    if not ids:
+        raise _bad("remove-snapshots needs snapshot-ids")
+    missing = ids - c.snap_ids
+    if missing:
+        raise _bad(f"remove-snapshots: unknown {sorted(missing)}")
+    pinned = {r["snapshot-id"] for r in c.refs.values()}
+    held = ids & (pinned | {c.md.get("current-snapshot-id")})
+    if held:
+        raise _bad(
+            f"remove-snapshots: {sorted(held)} still referenced by a ref "
+            "or the current snapshot"
+        )
+    c.snap_ids -= ids
+    c.md["snapshots"] = [
+        s for s in c.md.get("snapshots") or [] if s["snapshot-id"] not in ids
+    ]
+    # their log and stats entries go with them
+    for key in ("snapshot-log", "statistics", "partition-statistics"):
+        if key == "snapshot-log" or c.md.get(key):
+            c.md[key] = [
+                e
+                for e in c.md.get(key) or []
+                if e.get("snapshot-id") not in ids
+            ]
+
+
+def _set_statistics(c: _Commit, u: dict, key: str, ordered: bool) -> None:
+    """set-statistics / set-partition-statistics: register a statistics
+    file for ONE snapshot (replaces that snapshot's prior entry)."""
+    st = u.get(key) or {}
+    sid = st.get("snapshot-id")
+    if sid is None or not st.get("statistics-path"):
+        raise _bad(
+            f"{u['action']} needs {key} with snapshot-id + statistics-path"
+        )
+    if sid not in c.snap_ids:
+        raise _bad(f"{u['action']} for unknown snapshot {sid}")
+    entries = [e for e in c.md.get(key) or [] if e.get("snapshot-id") != sid]
+    entries.append(st)
+    if ordered:
+        entries.sort(key=lambda e: e["snapshot-id"])
+    c.md[key] = entries
+
+
+def _remove_statistics(c: _Commit, u: dict, key: str) -> None:
+    c.md[key] = [
+        e
+        for e in c.md.get(key) or []
+        if e.get("snapshot-id") != u.get("snapshot-id")
+    ]
+
+
+def _set_properties(c: _Commit, u: dict) -> None:
+    c.md.setdefault("properties", {}).update(u.get("updates") or {})
+
+
+def _remove_properties(c: _Commit, u: dict) -> None:
+    for k in u.get("removals") or []:
+        (c.md.get("properties") or {}).pop(k, None)
+
+
+# set-current-schema / set-default-spec / set-default-sort-order:
+# (request key, metadata key, listing, listing id key, add action, noun)
+_DEFAULTS = {
+    "set-current-schema": (
+        "schema-id", "current-schema-id", "schemas", "schema-id", "add-schema",
+        "schema",
+    ),
+    "set-default-spec": (
+        "spec-id", "default-spec-id", "partition-specs", "spec-id", "add-spec",
+        "spec",
+    ),
+    "set-default-sort-order": (
+        "sort-order-id", "default-sort-order-id", "sort-orders", "order-id",
+        "add-sort-order", "order",
+    ),
+}
+
+
+def _set_default(c: _Commit, u: dict) -> None:
+    """Point the metadata's current schema / default spec / default
+    sort order at a known entry; the spec's -1 means the entry this
+    commit's own add-<x> produced."""
+    req_key, md_key, listing, id_key, add, noun = _DEFAULTS[u["action"]]
+    want = u.get(req_key)
+    if want == -1:
+        want = c.added.get(add)
+        if want is None:
+            raise _bad(
+                f"{u['action']} -1 without a preceding {add} in this commit"
+            )
+    known = {e[id_key]: e for e in c.md.get(listing) or []}
+    if want not in known:
+        raise _bad(f"{u['action']} to unknown {noun} {want}")
+    c.md[md_key] = want
+    if noun == "schema":
+        # keep the v1-compat top-level schema in lockstep: the
+        # readers/writers here (and real v1 consumers) look at
+        # metadata["schema"]
+        c.md["schema"] = known[want]
+
+
+# -- schema / spec / sort-order evolution validators (add-* actions) --
+
+
+def _add_schema(c: _Commit, u: dict) -> None:
+    """Validate + append an add-schema update. Evolution rules the
+    Iceberg spec fixes: field ids are FOREVER (an id reused for a
+    different column corrupts per-file resolution), renames keep the
+    id, type changes must follow the promotion lattice (int->long,
+    float->double, decimal widening), new fields take fresh ids past
+    last-column-id. The name-mapping property gains renamed fields'
+    aliases and new fields' entries so id-less files keep resolving."""
+    from .iceberg_meta import _promotion_ok
+
+    md = c.md
+    fields = (u.get("schema") or {}).get("fields")
+    if not fields:
+        raise _bad("add-schema needs fields")
+    ids = [f.get("id") for f in fields]
+    if not all(ids) or len(set(ids)) != len(ids):
+        raise _bad(f"add-schema fields need unique ids: {ids}")
+    names = [f.get("name") for f in fields]
+    if not all(names) or len(set(names)) != len(names):
+        raise _bad(f"add-schema fields need unique names: {names}")
+    last_col = md.get("last-column-id") or 0
+    cur_fields = {
+        f["id"]: f for f in (md.get("schema") or {}).get("fields") or []
+    }
+    for f in fields:
+        old = cur_fields.get(f["id"])
+        if old is None:
+            if f["id"] <= last_col:
+                raise _bad(
+                    f"field id {f['id']} ({f.get('name')!r}) reuses a "
+                    f"retired id (last-column-id={last_col}); new columns "
+                    "need fresh ids"
+                )
+            if f.get("required", False) and not (
+                md.get("format-version", 1) >= 3
+                and f.get("initial-default") is not None
+            ):
+                # spec: existing files have no value for a brand-new
+                # column, so it cannot be required — unless v3 with an
+                # initial-default to materialize for old rows
+                raise _bad(
+                    f"new field {f['id']} ({f.get('name')!r}) cannot be "
+                    "required; existing files hold no value (v3 "
+                    "initial-default would be needed)"
+                )
+        elif not _promotion_ok(old["type"], f["type"]):
+            raise _bad(
+                f"field {f['id']} type change {old['type']} -> {f['type']} "
+                "is not a legal promotion"
+            )
+        elif not old.get("required", False) and f.get("required", False):
+            # spec: an optional column can never become required —
+            # existing files may hold nulls the new schema forbids
+            raise _bad(
+                f"field {f['id']} ({f.get('name')!r}) cannot go optional -> "
+                "required; existing data may be null"
+            )
+    schemas = md.setdefault("schemas", [])
+    new_id = max((s["schema-id"] for s in schemas), default=-1) + 1
+    schemas.append({"type": "struct", "schema-id": new_id, "fields": fields})
+    md["last-column-id"] = max(last_col, max(ids))
+    # name-mapping upkeep (same dedupe rule as the exporter); the
+    # CURRENT names go first (a pre-mapping table or a registered
+    # external tree may lack entries), so a rename in this very commit
+    # records old AND new aliases
+    props = md.setdefault("properties", {})
+    mapping = json.loads(props.get("schema.name-mapping.default") or "[]")
+    by_id = {m["field-id"]: m for m in mapping}
+    for f in [*cur_fields.values(), *fields]:
+        m = by_id.get(f["id"])
+        if m is None:
+            m = by_id[f["id"]] = {"field-id": f["id"], "names": [f["name"]]}
+            mapping.append(m)
+        elif f["name"] not in m["names"]:
+            m["names"].append(f["name"])
+    props["schema.name-mapping.default"] = json.dumps(mapping)
+    c.added["add-schema"] = new_id
+
+
+def _add_sort_order(c: _Commit, u: dict) -> None:
+    """Validate + append an add-sort-order update (ALTER TABLE ...
+    WRITE ORDERED BY over the protocol). Fields must reference live
+    schema field ids with identity transforms (the transforms this
+    engine writes), direction asc|desc, null-order
+    nulls-first|nulls-last. Identical field lists reuse the existing
+    order id (the exporter's dedupe rule)."""
+    fields = (u.get("sort-order") or {}).get("fields")
+    if fields is None:
+        raise _bad("add-sort-order needs fields")
+    live_ids = {
+        f["id"]
+        for sch in c.md.get("schemas") or [c.md.get("schema")]
+        for f in (sch or {}).get("fields") or []
+    }
+    for f in fields:
+        if f.get("source-id") not in live_ids:
+            raise _bad(
+                "sort field references unknown source-id "
+                f"{f.get('source-id')}"
+            )
+        if f.get("direction") not in ("asc", "desc"):
+            raise _bad(f"sort direction {f.get('direction')!r} (asc|desc)")
+        if f.get("null-order") not in ("nulls-first", "nulls-last"):
+            raise _bad(
+                f"null-order {f.get('null-order')!r} (nulls-first|nulls-last)"
+            )
+    orders = c.md.setdefault("sort-orders", [{"order-id": 0, "fields": []}])
+    key = json.dumps(fields, sort_keys=True)
+    same = [
+        o["order-id"]
+        for o in orders
+        if json.dumps(o["fields"], sort_keys=True) == key
+    ]
+    if same:
+        oid = same[0]
+    else:
+        oid = max(o["order-id"] for o in orders) + 1
+        orders.append({"order-id": oid, "fields": list(fields)})
+    c.added["add-sort-order"] = oid
+
+
+_TRANSFORMS = {
+    "identity", "bucket", "truncate", "year", "month", "day", "hour", "void",
+}
+
+
+def _add_spec(c: _Commit, u: dict) -> None:
+    """Validate + append an add-spec update: source ids must be live
+    columns of the current schema, transforms limited to what the
+    reader resolves; partition field ids assigned past
+    last-partition-id when absent."""
+    md = c.md
+    pfields = (u.get("spec") or {}).get("fields")
+    if pfields is None:
+        raise _bad("add-spec needs fields")
+    cur_ids = {f["id"] for f in (md.get("schema") or {}).get("fields") or []}
+    last_pid = md.get("last-partition-id") or 999
+    out = []
+    for pf in pfields:
+        tr = (pf.get("transform") or "identity").split("[")[0]
+        if tr not in _TRANSFORMS:
+            raise _bad(
+                f"unsupported partition transform {pf.get('transform')!r}"
+            )
+        if pf.get("source-id") not in cur_ids:
+            raise _bad(
+                f"add-spec source-id {pf.get('source-id')} is not a current "
+                "schema column"
+            )
+        if not pf.get("name"):
+            raise _bad(f"spec field needs name: {pf}")
+        fid = pf.get("field-id")
+        if fid is None:
+            last_pid += 1
+            fid = last_pid
+        out.append(
+            {
+                "source-id": pf["source-id"],
+                "field-id": fid,
+                "name": pf["name"],
+                "transform": pf.get("transform", "identity"),
+            }
+        )
+    specs = md.setdefault("partition-specs", [])
+    new_id = max((s["spec-id"] for s in specs), default=-1) + 1
+    specs.append({"spec-id": new_id, "fields": out})
+    md["last-partition-id"] = max(last_pid, *(f["field-id"] for f in out), 999)
+    c.added["add-spec"] = new_id
+
+
+_UPDATES = {
+    "add-snapshot": _add_snapshot,
+    "set-snapshot-ref": _set_snapshot_ref,
+    "remove-snapshot-ref": _remove_snapshot_ref,
+    "add-schema": _add_schema,
+    "set-current-schema": _set_default,
+    "add-spec": _add_spec,
+    "set-default-spec": _set_default,
+    "add-sort-order": _add_sort_order,
+    "set-default-sort-order": _set_default,
+    "remove-snapshots": _remove_snapshots,
+    "set-statistics": partial(
+        _set_statistics, key="statistics", ordered=False
+    ),
+    "remove-statistics": partial(_remove_statistics, key="statistics"),
+    "set-partition-statistics": partial(
+        _set_statistics, key="partition-statistics", ordered=True
+    ),
+    "remove-partition-statistics": partial(
+        _remove_statistics, key="partition-statistics"
+    ),
+    "set-properties": _set_properties,
+    "remove-properties": _remove_properties,
+}
+
+
+def _paged(query: dict, key: str, items: list) -> tuple[int, bytes]:
+    """Spec pagination over a deterministically-ordered listing:
+    `pageSize` bounds the page, the opaque `pageToken` is the offset
+    into the sorted listing, and `next-page-token` is returned iff
+    items remain. No pageSize = the whole listing in one response (the
+    spec's non-paginated mode)."""
+    size = query.get("pageSize")
+    token = (query.get("pageToken") or [None])[0]
+    try:
+        start = int(token) if token else 0
+        n = int(size[0]) if size else None
+    except ValueError:
+        raise _bad(f"invalid pageToken/pageSize: {token!r}/{size!r}") from None
+    if start < 0:
+        # tokens are server-issued offsets; a negative one is
+        # corrupt/stale, not a Python negative slice
+        raise _bad(f"invalid pageToken: {token!r}")
+    if n is not None and n < 1:
+        raise _bad(f"pageSize must be >= 1: {n}")
+    if n is None:
+        return 200, _json({key: items[start:]})
+    out: dict = {key: items[start : start + n]}
+    if start + n < len(items):
+        out["next-page-token"] = str(start + n)
+    return 200, _json(out)
 
 
 class IcebergRestCatalog:
@@ -181,8 +749,6 @@ class IcebergRestCatalog:
     def _load(self, ident: tuple[str, ...]) -> tuple[str, dict]:
         return self._load_versioned(ident)[:2]
 
-    # -- commits (pointer operations; optimistic concurrency) --
-
     def _load_versioned(
         self, ident: tuple[str, ...]
     ) -> tuple[str, dict, int]:
@@ -193,411 +759,16 @@ class IcebergRestCatalog:
         n, md = load_table_metadata(meta_dir)
         return os.path.join(meta_dir, f"v{n}.metadata.json"), md, n
 
+    # -- commits (optimistic concurrency) --
+
     def _commit(self, ident: tuple[str, ...], req: dict) -> tuple[int, bytes]:
         with self._commit_lock:
             if ident not in self._tables:  # raced with a DELETE
-                return 404, _err(
-                    404,
-                    "NoSuchTableException",
-                    f"Table does not exist: {'.'.join(ident)}",
-                )
+                raise _missing("Table", ident)
             loc, md, n = self._load_versioned(ident)
-            err = self._check_and_apply(ident, md, loc, req)
-            if err is not None:
-                return err
+            _check_and_apply(ident, md, req)
             self._finalize_metadata(md, loc)
-            new_loc = self._write_metadata(ident, md, n)
-            return 200, json.dumps(
-                {"metadata-location": new_loc, "metadata": md}
-            ).encode()
-
-    def _check_and_apply(
-        self, ident: tuple[str, ...], md: dict, loc: str, req: dict
-    ) -> tuple[int, bytes] | None:
-        """Validate `req`'s requirements against `md` and apply its
-        updates in place. Returns the spec error response on failure
-        (callers discard the partially-mutated md), None on success.
-        Pure in-memory — nothing is written — so a multi-table
-        transaction can validate EVERY change before persisting
-        any (the protocol's commitTransaction atomicity)."""
-        refs = md.setdefault("refs", {})
-        for r in req.get("requirements") or []:
-            t = r.get("type")
-            if t == "assert-create":
-                # reaching _commit means the table exists (the
-                # staged-materialize path strips assert-create)
-                return 409, _err(
-                    409,
-                    "CommitFailedException",
-                    f"assert-create failed: table "
-                    f"{'.'.join(ident)} already exists",
-                )
-            elif t == "assert-table-uuid":
-                if r.get("uuid") != md.get("table-uuid"):
-                    return 409, _err(
-                        409,
-                        "CommitFailedException",
-                        f"table uuid is {md.get('table-uuid')}, "
-                        f"requirement expected {r.get('uuid')}",
-                    )
-            elif t == "assert-ref-snapshot-id":
-                cur = refs.get(r.get("ref"))
-                cur_id = cur["snapshot-id"] if cur else None
-                if cur_id != r.get("snapshot-id"):
-                    return 409, _err(
-                        409,
-                        "CommitFailedException",
-                        f"ref {r.get('ref')!r} is at {cur_id}, "
-                        f"requirement expected {r.get('snapshot-id')}",
-                    )
-            elif t == "assert-current-schema-id":
-                if md.get("current-schema-id") != r.get(
-                    "current-schema-id"
-                ):
-                    return 409, _err(
-                        409,
-                        "CommitFailedException",
-                        f"current schema id is "
-                        f"{md.get('current-schema-id')}, requirement "
-                        f"expected {r.get('current-schema-id')}",
-                    )
-            elif t == "assert-default-spec-id":
-                if md.get("default-spec-id", 0) != r.get(
-                    "default-spec-id"
-                ):
-                    return 409, _err(
-                        409,
-                        "CommitFailedException",
-                        f"default spec id is "
-                        f"{md.get('default-spec-id', 0)}, requirement "
-                        f"expected {r.get('default-spec-id')}",
-                    )
-            else:
-                return 400, _err(
-                    400,
-                    "BadRequestException",
-                    f"unsupported requirement type {t!r}",
-                )
-        snap_ids = {
-            s["snapshot-id"] for s in md.get("snapshots") or []
-        }
-        # spec: set-current-schema / set-default-spec accept -1
-        # meaning "the schema/spec added earlier in THIS commit"
-        last_added_schema: int | None = None
-        last_added_spec: int | None = None
-        last_added_sort_order: int | None = None
-        for u in req.get("updates") or []:
-            a = u.get("action")
-            if a == "add-snapshot":
-                s = u["snapshot"]
-                ml = s.get("manifest-list")
-                if not (ml and os.path.isfile(ml)):
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        f"add-snapshot manifest-list not found: {ml}"
-                        " (stage files before the pointer commit)",
-                    )
-                if s["snapshot-id"] in snap_ids:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        f"snapshot {s['snapshot-id']} already exists",
-                    )
-                if md.get("format-version", 1) >= 3:
-                    # v3 row lineage. A snapshot without BOTH lineage
-                    # fields is malformed — accepting it would leave
-                    # next-row-id unadvanced and let the NEXT commit
-                    # hand out the same _row_id range again.
-                    if (
-                        s.get("first-row-id") is None
-                        or s.get("added-rows") is None
-                    ):
-                        return 400, _err(
-                            400,
-                            "BadRequestException",
-                            "v3 add-snapshot requires first-row-id and "
-                            "added-rows (row lineage is mandatory in "
-                            "format-version 3)",
-                        )
-                    # the writer staged explicit first_row_ids from the
-                    # metadata it loaded; a stale cursor means another
-                    # commit advanced the lineage since — the same
-                    # re-stage retry as a lost ref race, so the same
-                    # 409. next_row_id_of is the SAME derivation the
-                    # stager uses (registered external trees may lack
-                    # the explicit next-row-id field).
-                    from .iceberg_meta import next_row_id_of
-
-                    nri = next_row_id_of(md)
-                    if int(s["first-row-id"]) != nri:
-                        return 409, _err(
-                            409,
-                            "CommitFailedException",
-                            "add-snapshot staged row lineage at "
-                            f"first-row-id={s.get('first-row-id')} but "
-                            f"the table's next-row-id is {nri}; "
-                            "re-stage against fresh metadata",
-                        )
-                    md["next-row-id"] = nri + int(s["added-rows"])
-                md.setdefault("snapshots", []).append(s)
-                snap_ids.add(s["snapshot-id"])
-                if md.get("format-version", 1) >= 2:
-                    md["last-sequence-number"] = max(
-                        md.get("last-sequence-number") or 0,
-                        s.get("sequence-number") or 0,
-                    )
-            elif a == "set-snapshot-ref":
-                name = u["ref-name"]
-                sid = u["snapshot-id"]
-                if sid not in snap_ids:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        f"set-snapshot-ref to unknown snapshot {sid}",
-                    )
-                refs[name] = {
-                    "snapshot-id": sid,
-                    "type": u.get("type", "branch"),
-                }
-                # spec SetSnapshotRefUpdate retention fields — honored
-                # by expire_iceberg_snapshots' per-ref retention
-                for k in (
-                    "min-snapshots-to-keep",
-                    "max-snapshot-age-ms",
-                    "max-ref-age-ms",
-                ):
-                    if u.get(k) is not None:
-                        refs[name][k] = int(u[k])
-                if name == "main":
-                    # main moves = the table's current snapshot
-                    # moves; the snapshot-log records it (forward
-                    # publish and backward rollback both append —
-                    # Iceberg RESTORE semantics, monotonic log)
-                    md["current-snapshot-id"] = sid
-                    md.setdefault("snapshot-log", []).append(
-                        {
-                            "snapshot-id": sid,
-                            "timestamp-ms": (
-                                md.get("last-updated-ms") or 0
-                            )
-                            + 1,
-                        }
-                    )
-            elif a == "remove-snapshot-ref":
-                if u.get("ref-name") == "main":
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        "cannot remove the main branch ref",
-                    )
-                refs.pop(u.get("ref-name"), None)
-            elif a == "add-schema":
-                code, body_or_id = self._add_schema(md, u.get("schema"))
-                if code != 200:
-                    return code, body_or_id
-                last_added_schema = body_or_id
-            elif a == "set-current-schema":
-                sid2 = u.get("schema-id")
-                if sid2 == -1:
-                    if last_added_schema is None:
-                        return 400, _err(
-                            400,
-                            "BadRequestException",
-                            "set-current-schema -1 without a "
-                            "preceding add-schema in this commit",
-                        )
-                    sid2 = last_added_schema
-                schemas = {
-                    s["schema-id"]: s for s in md.get("schemas") or []
-                }
-                if sid2 not in schemas:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        f"set-current-schema to unknown schema {sid2}",
-                    )
-                md["current-schema-id"] = sid2
-                # keep the v1-compat top-level schema in lockstep:
-                # the readers/writers here (and real v1 consumers)
-                # look at metadata["schema"]
-                md["schema"] = schemas[sid2]
-            elif a == "add-spec":
-                code, body_or_id = self._add_spec(md, u.get("spec"))
-                if code != 200:
-                    return code, body_or_id
-                last_added_spec = body_or_id
-            elif a == "set-default-spec":
-                pid = u.get("spec-id")
-                if pid == -1:
-                    if last_added_spec is None:
-                        return 400, _err(
-                            400,
-                            "BadRequestException",
-                            "set-default-spec -1 without a "
-                            "preceding add-spec in this commit",
-                        )
-                    pid = last_added_spec
-                known_specs = {
-                    s["spec-id"]
-                    for s in md.get("partition-specs") or []
-                }
-                if pid not in known_specs:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        f"set-default-spec to unknown spec {pid}",
-                    )
-                md["default-spec-id"] = pid
-            elif a == "add-sort-order":
-                code, body_or_id = self._add_sort_order(
-                    md, u.get("sort-order")
-                )
-                if code != 200:
-                    return code, body_or_id
-                last_added_sort_order = body_or_id
-            elif a == "set-default-sort-order":
-                oid = u.get("sort-order-id")
-                if oid == -1:
-                    if last_added_sort_order is None:
-                        return 400, _err(
-                            400,
-                            "BadRequestException",
-                            "set-default-sort-order -1 without a "
-                            "preceding add-sort-order in this commit",
-                        )
-                    oid = last_added_sort_order
-                known_orders = {
-                    o["order-id"] for o in md.get("sort-orders") or []
-                }
-                if oid not in known_orders:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        f"set-default-sort-order to unknown order {oid}",
-                    )
-                md["default-sort-order-id"] = oid
-            elif a == "remove-snapshots":
-                ids = set(u.get("snapshot-ids") or [])
-                if not ids:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        "remove-snapshots needs snapshot-ids",
-                    )
-                missing = ids - snap_ids
-                if missing:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        f"remove-snapshots: unknown {sorted(missing)}",
-                    )
-                pinned = {
-                    r2["snapshot-id"] for r2 in refs.values()
-                } | {md.get("current-snapshot-id")}
-                held = ids & pinned
-                if held:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        f"remove-snapshots: {sorted(held)} still "
-                        "referenced by a ref or the current snapshot",
-                    )
-                md["snapshots"] = [
-                    s2
-                    for s2 in md.get("snapshots") or []
-                    if s2["snapshot-id"] not in ids
-                ]
-                md["snapshot-log"] = [
-                    e
-                    for e in md.get("snapshot-log") or []
-                    if e["snapshot-id"] not in ids
-                ]
-                snap_ids -= ids
-                # stats entries for removed snapshots go with them
-                for key in ("statistics", "partition-statistics"):
-                    if md.get(key):
-                        md[key] = [
-                            e2
-                            for e2 in md[key]
-                            if e2.get("snapshot-id") not in ids
-                        ]
-            elif a == "set-statistics":
-                # spec: register a Puffin statistics file for ONE
-                # snapshot (replaces that snapshot's prior entry)
-                st = u.get("statistics") or {}
-                sid3 = st.get("snapshot-id")
-                if sid3 is None or not st.get("statistics-path"):
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        "set-statistics needs statistics with "
-                        "snapshot-id + statistics-path",
-                    )
-                if sid3 not in snap_ids:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        f"set-statistics for unknown snapshot {sid3}",
-                    )
-                md["statistics"] = [
-                    e
-                    for e in md.get("statistics") or []
-                    if e.get("snapshot-id") != sid3
-                ] + [st]
-            elif a == "remove-statistics":
-                md["statistics"] = [
-                    e
-                    for e in md.get("statistics") or []
-                    if e.get("snapshot-id") != u.get("snapshot-id")
-                ]
-            elif a == "set-partition-statistics":
-                ps = u.get("partition-statistics") or {}
-                sid3 = ps.get("snapshot-id")
-                if sid3 is None or not ps.get("statistics-path"):
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        "set-partition-statistics needs "
-                        "partition-statistics with snapshot-id + "
-                        "statistics-path",
-                    )
-                if sid3 not in snap_ids:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        f"set-partition-statistics for unknown "
-                        f"snapshot {sid3}",
-                    )
-                md["partition-statistics"] = sorted(
-                    [
-                        e
-                        for e in md.get("partition-statistics") or []
-                        if e.get("snapshot-id") != sid3
-                    ]
-                    + [ps],
-                    key=lambda e: e["snapshot-id"],
-                )
-            elif a == "remove-partition-statistics":
-                md["partition-statistics"] = [
-                    e
-                    for e in md.get("partition-statistics") or []
-                    if e.get("snapshot-id") != u.get("snapshot-id")
-                ]
-            elif a == "set-properties":
-                md.setdefault("properties", {}).update(
-                    u.get("updates") or {}
-                )
-            elif a == "remove-properties":
-                for k in u.get("removals") or []:
-                    (md.get("properties") or {}).pop(k, None)
-            else:
-                return 400, _err(
-                    400,
-                    "BadRequestException",
-                    f"unsupported update action {a!r}",
-                )
-        return None
+            return _result(self._write_metadata(ident, md, n), md)
 
     @staticmethod
     def _finalize_metadata(md: dict, loc: str) -> None:
@@ -607,10 +778,7 @@ class IcebergRestCatalog:
         versions."""
         md["last-updated-ms"] = (md.get("last-updated-ms") or 0) + 1
         md.setdefault("metadata-log", []).append(
-            {
-                "timestamp-ms": md["last-updated-ms"],
-                "metadata-file": loc,
-            }
+            {"timestamp-ms": md["last-updated-ms"], "metadata-file": loc}
         )
 
     def _write_metadata(
@@ -636,496 +804,135 @@ class IcebergRestCatalog:
         second sees the first's in-memory result. 204 on success."""
         changes = body.get("table-changes") or []
         if not changes:
-            return 400, _err(
-                400,
-                "BadRequestException",
-                "commitTransaction requires table-changes",
-            )
+            raise _bad("commitTransaction requires table-changes")
         with self._commit_lock:
             loaded: dict[tuple[str, ...], tuple[str, dict, int]] = {}
-            order: list[tuple[str, ...]] = []
             for ch in changes:
                 tid = ch.get("identifier") or {}
-                ident = (
-                    *tuple(tid.get("namespace") or ()),
-                    tid.get("name"),
-                )
+                ident = (*tuple(tid.get("namespace") or ()), tid.get("name"))
                 if ident[-1] is None or len(ident) < 2:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
+                    raise _bad(
                         "each table-change needs an identifier with "
-                        "namespace and name",
+                        "namespace and name"
                     )
                 if ident not in self._tables:
-                    return 404, _err(
-                        404,
-                        "NoSuchTableException",
-                        f"Table does not exist: {'.'.join(ident)}",
-                    )
+                    raise _missing("Table", ident)
                 if ident not in loaded:
                     loaded[ident] = self._load_versioned(ident)
-                    order.append(ident)
-                loc, md, _n = loaded[ident]
-                err = self._check_and_apply(ident, md, loc, ch)
-                if err is not None:
-                    return err
-            for ident in order:
-                loc, md, n = loaded[ident]
+                _check_and_apply(ident, loaded[ident][1], ch)
+            for ident, (loc, md, n) in loaded.items():
                 self._finalize_metadata(md, loc)
                 self._write_metadata(ident, md, n)
             return 204, b""
 
-    # -- schema / spec evolution validators (commit update actions) --
-
-    @staticmethod
-    def _add_schema(md: dict, schema: dict | None):
-        """Validate + append an add-schema update. Evolution rules the
-        Iceberg spec fixes: field ids are FOREVER (an id reused for a
-        different column corrupts per-file resolution), renames keep the
-        id, type changes must follow the promotion lattice (int->long,
-        float->double, decimal widening), new fields take fresh ids past
-        last-column-id. The name-mapping property gains renamed fields'
-        aliases and new fields' entries so id-less files keep resolving.
-        Returns (200, new schema id) or (400, error body)."""
-        from .iceberg_meta import _promotion_ok
-
-        fields = (schema or {}).get("fields")
-        if not fields:
-            return 400, _err(
-                400, "BadRequestException", "add-schema needs fields"
+    def _finalize_staged(
+        self, ident: tuple[str, ...], body: dict
+    ) -> tuple[int, bytes]:
+        """CTAS finalize: assert-create materializes the staged tree as
+        the table, then the commit's updates (add-snapshot +
+        set-snapshot-ref) land on it atomically under the commit lock.
+        With several trees staged under one name, the committer's
+        assert-table-uuid picks ITS tree."""
+        reqs = body.get("requirements") or []
+        with self._commit_lock:
+            staged = self._staged[ident]
+            want = next(
+                (
+                    r.get("uuid")
+                    for r in reqs
+                    if r.get("type") == "assert-table-uuid"
+                ),
+                None,
             )
-        ids = [f.get("id") for f in fields]
-        if not all(ids) or len(set(ids)) != len(ids):
-            return 400, _err(
-                400,
-                "BadRequestException",
-                f"add-schema fields need unique ids: {ids}",
-            )
-        names = [f.get("name") for f in fields]
-        if not all(names) or len(set(names)) != len(names):
-            return 400, _err(
-                400,
-                "BadRequestException",
-                f"add-schema fields need unique names: {names}",
-            )
-        last_col = md.get("last-column-id") or 0
-        cur_fields = {
-            f["id"]: f for f in (md.get("schema") or {}).get("fields") or []
-        }
-        for f in fields:
-            old = cur_fields.get(f["id"])
-            if old is None:
-                if f["id"] <= last_col:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        f"field id {f['id']} ({f.get('name')!r}) reuses "
-                        f"a retired id (last-column-id={last_col}); "
-                        "new columns need fresh ids",
-                    )
-                if f.get("required", False) and not (
-                    md.get("format-version", 1) >= 3
-                    and f.get("initial-default") is not None
-                ):
-                    # spec: existing files have no value for a brand-new
-                    # column, so it cannot be required — unless v3 with
-                    # an initial-default to materialize for old rows
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        f"new field {f['id']} ({f.get('name')!r}) "
-                        "cannot be required; existing files hold no "
-                        "value (v3 initial-default would be needed)",
-                    )
-            elif not _promotion_ok(old["type"], f["type"]):
-                return 400, _err(
-                    400,
-                    "BadRequestException",
-                    f"field {f['id']} type change "
-                    f"{old['type']} -> {f['type']} is not a legal "
-                    "promotion",
+            if want is None and len(staged) > 1:
+                raise _bad(
+                    f"{len(staged)} staged creates exist for "
+                    f"{'.'.join(ident)}; the finalize commit must carry "
+                    "assert-table-uuid"
                 )
-            elif not old.get("required", False) and f.get(
-                "required", False
-            ):
-                # spec: an optional column can never become required —
-                # existing files may hold nulls the new schema forbids
-                return 400, _err(
-                    400,
-                    "BadRequestException",
-                    f"field {f['id']} ({f.get('name')!r}) cannot go "
-                    "optional -> required; existing data may be null",
+            uuid_key = want or next(iter(staged))
+            if uuid_key not in staged:
+                raise _stale(
+                    f"no staged create with uuid {uuid_key} for "
+                    f"{'.'.join(ident)}"
                 )
-        new_id = (
-            max(s["schema-id"] for s in md.get("schemas") or [{"schema-id": -1}])
-            + 1
-        )
-        entry = {"type": "struct", "schema-id": new_id, "fields": fields}
-        md.setdefault("schemas", []).append(entry)
-        md["last-column-id"] = max(last_col, max(ids))
-        # name-mapping upkeep (same dedupe rule as the exporter)
-        props = md.setdefault("properties", {})
-        mapping = json.loads(
-            props.get("schema.name-mapping.default") or "[]"
-        )
-        by_id = {m["field-id"]: m for m in mapping}
-        # backfill the CURRENT names first (a pre-mapping table or a
-        # registered external tree may lack entries), so a rename in
-        # this very commit records old AND new aliases
-        for f in cur_fields.values():
-            m = by_id.get(f["id"])
-            if m is None:
-                m = {"field-id": f["id"], "names": [f["name"]]}
-                mapping.append(m)
-                by_id[f["id"]] = m
-            elif f["name"] not in m["names"]:
-                m["names"].append(f["name"])
-        for f in fields:
-            m = by_id.get(f["id"])
-            if m is None:
-                m = {"field-id": f["id"], "names": [f["name"]]}
-                mapping.append(m)
-                by_id[f["id"]] = m
-            elif f["name"] not in m["names"]:
-                m["names"].append(f["name"])
-        props["schema.name-mapping.default"] = json.dumps(mapping)
-        return 200, new_id
-
-    @staticmethod
-    def _add_sort_order(md: dict, order: dict | None):
-        """Validate + append an add-sort-order update (ALTER TABLE ...
-        WRITE ORDERED BY over the protocol). Fields must reference live
-        schema field ids with identity transforms (the transforms this
-        engine writes), direction asc|desc, null-order
-        nulls-first|nulls-last. Identical field lists reuse the
-        existing order id (the exporter's dedupe rule). Returns
-        (200, order id) or (400, error body)."""
-        fields = (order or {}).get("fields")
-        if fields is None:
-            return 400, _err(
-                400, "BadRequestException", "add-sort-order needs fields"
-            )
-        live_ids = {
-            f["id"]
-            for sch in md.get("schemas") or [md.get("schema")]
-            for f in (sch or {}).get("fields") or []
-        }
-        for f in fields:
-            if f.get("source-id") not in live_ids:
-                return 400, _err(
-                    400,
-                    "BadRequestException",
-                    f"sort field references unknown source-id "
-                    f"{f.get('source-id')}",
-                )
-            if f.get("direction") not in ("asc", "desc"):
-                return 400, _err(
-                    400,
-                    "BadRequestException",
-                    f"sort direction {f.get('direction')!r} (asc|desc)",
-                )
-            if f.get("null-order") not in ("nulls-first", "nulls-last"):
-                return 400, _err(
-                    400,
-                    "BadRequestException",
-                    f"null-order {f.get('null-order')!r} "
-                    "(nulls-first|nulls-last)",
-                )
-        orders = md.setdefault(
-            "sort-orders", [{"order-id": 0, "fields": []}]
-        )
-        key = json.dumps(fields, sort_keys=True)
-        for o in orders:
-            if json.dumps(o["fields"], sort_keys=True) == key:
-                return 200, o["order-id"]
-        oid = max(o["order-id"] for o in orders) + 1
-        orders.append({"order-id": oid, "fields": list(fields)})
-        return 200, oid
-
-    @staticmethod
-    def _add_spec(md: dict, spec: dict | None):
-        """Validate + append an add-spec update: source ids must be
-        live columns of the current schema, transforms limited to what
-        the reader resolves; partition field ids assigned past
-        last-partition-id when absent. Returns (200, new spec id) or
-        (400, error body)."""
-        known = {
-            "identity", "bucket", "truncate", "year", "month", "day",
-            "hour", "void",
-        }
-        pfields = (spec or {}).get("fields")
-        if pfields is None:
-            return 400, _err(
-                400, "BadRequestException", "add-spec needs fields"
-            )
-        cur_ids = {
-            f["id"] for f in (md.get("schema") or {}).get("fields") or []
-        }
-        last_pid = md.get("last-partition-id") or 999
-        out = []
-        for pf in pfields:
-            tr = (pf.get("transform") or "identity").split("[")[0]
-            if tr not in known:
-                return 400, _err(
-                    400,
-                    "BadRequestException",
-                    f"unsupported partition transform "
-                    f"{pf.get('transform')!r}",
-                )
-            if pf.get("source-id") not in cur_ids:
-                return 400, _err(
-                    400,
-                    "BadRequestException",
-                    f"add-spec source-id {pf.get('source-id')} is not a "
-                    "current schema column",
-                )
-            if not pf.get("name"):
-                return 400, _err(
-                    400, "BadRequestException", f"spec field needs name: {pf}"
-                )
-            fid = pf.get("field-id")
-            if fid is None:
-                last_pid += 1
-                fid = last_pid
-            out.append(
-                {
-                    "source-id": pf["source-id"],
-                    "field-id": fid,
-                    "name": pf["name"],
-                    "transform": pf.get("transform", "identity"),
-                }
-            )
-        new_id = (
-            max(
-                s["spec-id"]
-                for s in md.get("partition-specs") or [{"spec-id": -1}]
-            )
-            + 1
-        )
-        md.setdefault("partition-specs", []).append(
-            {"spec-id": new_id, "fields": out}
-        )
-        md["last-partition-id"] = max(
-            last_pid, *(f["field-id"] for f in out), 999
-        )
-        return 200, new_id
-
-    # -- listing pagination (spec pageToken/pageSize) --
-
-    @staticmethod
-    def _paged(query: dict, key: str, items: list) -> tuple[int, bytes]:
-        """Spec pagination over a deterministically-ordered listing:
-        `pageSize` bounds the page, the opaque `pageToken` is the
-        offset into the sorted listing, and `next-page-token` is
-        returned iff items remain. No pageSize = the whole listing in
-        one response (the spec's non-paginated mode)."""
-        size = query.get("pageSize")
-        token = (query.get("pageToken") or [None])[0]
+            self._tables[ident] = staged.pop(uuid_key)
+            if not staged:
+                del self._staged[ident]
+        reqs = [r for r in reqs if r.get("type") != "assert-create"]
         try:
-            start = int(token) if token else 0
-            n = int(size[0]) if size else None
-        except ValueError:
-            return 400, _err(
-                400,
-                "BadRequestException",
-                f"invalid pageToken/pageSize: {token!r}/{size!r}",
-            )
-        if start < 0:
-            # tokens are server-issued offsets; a negative one is
-            # corrupt/stale, not a Python negative slice
-            return 400, _err(
-                400,
-                "BadRequestException",
-                f"invalid pageToken: {token!r}",
-            )
-        if n is not None and n < 1:
-            return 400, _err(
-                400, "BadRequestException", f"pageSize must be >= 1: {n}"
-            )
-        out: dict = {}
-        if n is None:
-            out[key] = items[start:]
-        else:
-            out[key] = items[start : start + n]
-            if start + n < len(items):
-                out["next-page-token"] = str(start + n)
-        return 200, json.dumps(out).encode()
+            return self._commit(ident, {**body, "requirements": reqs})
+        except _Rejected:
+            # fail WHOLE: un-materialize and re-stage so a corrected
+            # finalize (or another writer) can still land; without
+            # this a bad update leaves an empty table registered forever
+            with self._commit_lock:
+                root = self._tables.pop(ident, None)
+                if root is not None:
+                    self._staged.setdefault(ident, {})[uuid_key] = root
+            raise
 
-    # -- catalog CRUD (namespaces, create/register/drop/rename table) --
+    # -- catalog CRUD (namespaces, tables, views) --
+
+    def _known_namespaces(self) -> set[tuple[str, ...]]:
+        return set(self._namespaces) | {i[:-1] for i in self._tables}
+
+    def _need_namespace(self, ns: tuple[str, ...], known=None) -> None:
+        if known is None:
+            known = self._known_namespaces()
+        if ns not in known:
+            raise _missing("Namespace", ns)
+
+    def _claim(
+        self, ident: tuple[str, ...], what: str = "Table or view"
+    ) -> None:
+        """Refuse a create / register / rename onto a taken name."""
+        if ident in self._tables or ident in self._views:
+            raise _exists(what, ident)
+
+    def _location(self, ns: tuple[str, ...], name: str, body: dict) -> str:
+        """The request's `location`, else a fresh
+        `<warehouse_dir>/<ns...>/<name>`."""
+        root = body.get("location")
+        if root:
+            return root
+        if self._warehouse_dir is None:
+            raise _bad(
+                "no location in the request and the catalog has no "
+                "warehouse_dir"
+            )
+        root = os.path.join(self._warehouse_dir, *ns, name)
+        if os.path.exists(root):
+            # A previous table or view lived here (renamed or dropped
+            # without purge — its tree stays, per Iceberg semantics).
+            # Real catalogs mint collision-safe locations rather than
+            # fail the create.
+            root = f"{root}-{uuid.uuid4().hex[:8]}"
+        return root
 
     def _create_namespace(self, body: dict) -> tuple[int, bytes]:
         ns = tuple(body.get("namespace") or ())
         if not ns or not all(isinstance(p, str) and p for p in ns):
-            return 400, _err(
-                400, "BadRequestException", f"invalid namespace: {ns!r}"
-            )
+            raise _bad(f"invalid namespace: {ns!r}")
         with self._commit_lock:
-            if ns in self._namespaces or ns in {
-                i[:-1] for i in self._tables
-            }:
-                return 409, _err(
-                    409,
-                    "AlreadyExistsException",
-                    f"Namespace already exists: {'.'.join(ns)}",
-                )
+            if ns in self._known_namespaces():
+                raise _exists("Namespace", ns)
             self._namespaces[ns] = dict(body.get("properties") or {})
-            return 200, json.dumps(
-                {
-                    "namespace": list(ns),
-                    "properties": self._namespaces[ns],
-                }
-            ).encode()
+            return 200, _json(
+                {"namespace": list(ns), "properties": self._namespaces[ns]}
+            )
 
     def _drop_namespace(self, ns: tuple[str, ...]) -> tuple[int, bytes]:
         with self._commit_lock:
-            held = [i for i in self._tables if i[:-1] == ns]
-            held += [i for i in self._views if i[:-1] == ns]
+            held = [i for i in (*self._tables, *self._views) if i[:-1] == ns]
             if held:
-                return 409, _err(
+                raise _Rejected(
                     409,
                     "NamespaceNotEmptyException",
                     f"Namespace {'.'.join(ns)} holds "
                     f"{len(held)} table(s)/view(s)",
                 )
             self._namespaces.pop(ns, None)
-            return 204, b""
-
-    # -- views (public Iceberg view spec) --
-
-    def _create_view(
-        self, ns: tuple[str, ...], body: dict
-    ) -> tuple[int, bytes]:
-        from .iceberg_view import create_view_metadata, write_view_tree
-
-        name = body.get("name")
-        if not name:
-            return 400, _err(
-                400, "BadRequestException", "create-view needs a name"
-            )
-        fields = (body.get("schema") or {}).get("fields")
-        vv = body.get("view-version") or {}
-        reps = vv.get("representations") or []
-        sql_reps = [r for r in reps if r.get("type") == "sql"]
-        if not (fields and sql_reps):
-            return 400, _err(
-                400,
-                "BadRequestException",
-                "create-view needs schema.fields and a sql "
-                "representation in view-version",
-            )
-        with self._commit_lock:
-            ident = (*ns, name)
-            if ident in self._views or ident in self._tables:
-                return 409, _err(
-                    409,
-                    "AlreadyExistsException",
-                    f"Table or view already exists: {'.'.join(ident)}",
-                )
-            root = body.get("location")
-            if not root:
-                if self._warehouse_dir is None:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        "no location in the request and the catalog "
-                        "has no warehouse_dir",
-                    )
-                root = os.path.join(self._warehouse_dir, *ns, name)
-                if os.path.exists(root):
-                    import uuid as _uuid
-
-                    root = f"{root}-{_uuid.uuid4().hex[:8]}"
-            md = create_view_metadata(
-                sql_reps[0]["sql"],
-                [
-                    {k: v for k, v in f.items() if k != "id"}
-                    for f in fields
-                ],
-                vv.get("default-namespace") or list(ns),
-                root,
-                dialect=sql_reps[0].get("dialect", "spark"),
-                properties=body.get("properties"),
-            )
-            # extra dialect representations ride along verbatim
-            md["versions"][0]["representations"] = reps
-            loc = write_view_tree(root, md)
-            self._namespaces.setdefault(ns, {})
-            self._views[ident] = root
-            return 200, json.dumps(
-                {"metadata-location": loc, "metadata": md}
-            ).encode()
-
-    def _commit_view(
-        self, ident: tuple[str, ...], req: dict
-    ) -> tuple[int, bytes]:
-        from .iceberg_view import (
-            apply_view_commit,
-            load_view_tree,
-            write_view_tree,
-        )
-
-        with self._commit_lock:
-            # re-check under the lock: the existence probe in _route ran
-            # outside it, so a concurrent DELETE could have won the race
-            root = self._views.get(ident)
-            if root is None:
-                return 404, _err(
-                    404,
-                    "NoSuchViewException",
-                    f"View does not exist: {'.'.join(ident)}",
-                )
-            _loc, md = load_view_tree(root)
-            err = apply_view_commit(md, req)
-            if err is not None:
-                code, msg = err
-                typ = (
-                    "CommitFailedException"
-                    if code == 409
-                    else "BadRequestException"
-                )
-                return code, _err(code, typ, msg)
-            loc = write_view_tree(root, md)
-            return 200, json.dumps(
-                {"metadata-location": loc, "metadata": md}
-            ).encode()
-
-    def _rename_view(self, body: dict) -> tuple[int, bytes]:
-        src, dst = body.get("source") or {}, body.get("destination") or {}
-        s_ident = (*(src.get("namespace") or ()), src.get("name"))
-        d_ident = (*(dst.get("namespace") or ()), dst.get("name"))
-        if None in s_ident or None in d_ident:
-            return 400, _err(
-                400,
-                "BadRequestException",
-                "rename needs source + destination identifiers",
-            )
-        with self._commit_lock:
-            if s_ident not in self._views:
-                return 404, _err(
-                    404,
-                    "NoSuchViewException",
-                    f"View does not exist: {'.'.join(s_ident)}",
-                )
-            d_ns = d_ident[:-1]
-            known = (
-                set(self._namespaces)
-                | {i[:-1] for i in self._tables}
-                | {i[:-1] for i in self._views}
-            )
-            if d_ns not in known:
-                return 404, _err(
-                    404,
-                    "NoSuchNamespaceException",
-                    f"Namespace does not exist: {'.'.join(d_ns)}",
-                )
-            if d_ident in self._views or d_ident in self._tables:
-                return 409, _err(
-                    409,
-                    "AlreadyExistsException",
-                    f"Table or view already exists: {'.'.join(d_ident)}",
-                )
-            self._views[d_ident] = self._views.pop(s_ident)
             return 204, b""
 
     def _create_table(
@@ -1135,16 +942,10 @@ class IcebergRestCatalog:
 
         name = body.get("name")
         if not name:
-            return 400, _err(
-                400, "BadRequestException", "create-table needs a name"
-            )
+            raise _bad("create-table needs a name")
         fields = (body.get("schema") or {}).get("fields")
         if not fields:
-            return 400, _err(
-                400,
-                "BadRequestException",
-                "create-table needs schema.fields",
-            )
+            raise _bad("create-table needs schema.fields")
         # Spec: the catalog assigns fresh field ids UNLESS the client's
         # ids are already a complete consistent assignment (then
         # partition-spec source-ids keep meaning).
@@ -1155,30 +956,8 @@ class IcebergRestCatalog:
             ]
         with self._commit_lock:
             ident = (*ns, name)
-            if ident in self._tables or ident in self._views:
-                return 409, _err(
-                    409,
-                    "AlreadyExistsException",
-                    f"Table or view already exists: {'.'.join(ident)}",
-                )
-            root = body.get("location")
-            if not root:
-                if self._warehouse_dir is None:
-                    return 400, _err(
-                        400,
-                        "BadRequestException",
-                        "no location in the request and the catalog "
-                        "has no warehouse_dir",
-                    )
-                root = os.path.join(self._warehouse_dir, *ns, name)
-                if os.path.exists(root):
-                    # A previous table lived here (renamed or dropped
-                    # without purge — its tree stays, per Iceberg
-                    # semantics). Real catalogs mint collision-safe
-                    # locations rather than fail the create.
-                    import uuid as _uuid
-
-                    root = f"{root}-{_uuid.uuid4().hex[:8]}"
+            self._claim(ident)
+            root = self._location(ns, name, body)
             try:
                 create_iceberg_table(
                     root,
@@ -1201,16 +980,16 @@ class IcebergRestCatalog:
                             )
                         ),
                         3
-                        if any(
-                            f.get("type") == "variant" for f in fields
-                        )
+                        if any(f.get("type") == "variant" for f in fields)
                         else 1,
                     ),
                 )
             except FileExistsError as e:
-                return 409, _err(409, "AlreadyExistsException", str(e))
+                raise _Rejected(
+                    409, "AlreadyExistsException", str(e)
+                ) from None
             except (ValueError, NotImplementedError) as e:
-                return 400, _err(400, "BadRequestException", str(e))
+                raise _bad(str(e)) from None
             self._namespaces.setdefault(ns, {})
             if body.get("stage-create"):
                 # CTAS staging (spec): the metadata exists, the TABLE
@@ -1219,63 +998,32 @@ class IcebergRestCatalog:
                 # spec the staged LoadTableResult has no committed
                 # metadata-location.
                 meta_dir = os.path.join(root, "metadata")
-                with open(
-                    os.path.join(meta_dir, "v1.metadata.json")
-                ) as fh:
+                with open(os.path.join(meta_dir, "v1.metadata.json")) as fh:
                     metadata = json.load(fh)
-                self._staged.setdefault(ident, {})[
-                    metadata["table-uuid"]
-                ] = root
-                return 200, json.dumps(
-                    {
-                        "metadata-location": None,
-                        "metadata": metadata,
-                        "config": {},
-                    }
-                ).encode()
+                staged = self._staged.setdefault(ident, {})
+                staged[metadata["table-uuid"]] = root
+                return _result(None, metadata, config={})
             self._tables[ident] = root
-            loc, metadata = self._load(ident)
-            return 200, json.dumps(
-                {
-                    "metadata-location": loc,
-                    "metadata": metadata,
-                    "config": {},
-                }
-            ).encode()
+            return _result(*self._load(ident), config={})
 
     def _register_table(
         self, ns: tuple[str, ...], body: dict
     ) -> tuple[int, bytes]:
         name, loc = body.get("name"), body.get("metadata-location")
         if not name or not loc:
-            return 400, _err(
-                400,
-                "BadRequestException",
-                "register needs name + metadata-location",
-            )
+            raise _bad("register needs name + metadata-location")
         if not os.path.isfile(loc):
-            return 400, _err(
-                400,
-                "BadRequestException",
-                f"metadata-location not found: {loc}",
-            )
+            raise _bad(f"metadata-location not found: {loc}")
         base = os.path.basename(loc)
         if not (base.startswith("v") and base.endswith(".metadata.json")):
-            return 400, _err(
-                400,
-                "BadRequestException",
-                f"metadata-location must be a v<N>.metadata.json: {loc}",
+            raise _bad(
+                f"metadata-location must be a v<N>.metadata.json: {loc}"
             )
         version = int(base[1:].split(".")[0])
         meta_dir = os.path.dirname(loc)
         with self._commit_lock:
             ident = (*ns, name)
-            if ident in self._tables or ident in self._views:
-                return 409, _err(
-                    409,
-                    "AlreadyExistsException",
-                    f"Table already exists: {'.'.join(ident)}",
-                )
+            self._claim(ident, "Table")
             # The catalog serves the hinted head; adopt the registered
             # version when it is ahead of (or there is) no hint — never
             # move an existing hint backwards.
@@ -1289,14 +1037,7 @@ class IcebergRestCatalog:
                     fh.write(str(version))
             self._tables[ident] = os.path.dirname(meta_dir)
             self._namespaces.setdefault(ns, {})
-            loc2, metadata = self._load(ident)
-            return 200, json.dumps(
-                {
-                    "metadata-location": loc2,
-                    "metadata": metadata,
-                    "config": {},
-                }
-            ).encode()
+            return _result(*self._load(ident), config={})
 
     def _drop_table(
         self, ident: tuple[str, ...], purge: bool
@@ -1306,14 +1047,93 @@ class IcebergRestCatalog:
         with self._commit_lock:
             root = self._tables.pop(ident, None)
             if root is None:  # raced with another DELETE
-                return 404, _err(
-                    404,
-                    "NoSuchTableException",
-                    f"Table does not exist: {'.'.join(ident)}",
-                )
+                raise _missing("Table", ident)
             if purge:
                 shutil.rmtree(root, ignore_errors=True)
             return 204, b""
+
+    def _rename(self, body: dict, kind: str) -> tuple[int, bytes]:
+        """POST /v1/tables/rename and /v1/views/rename: move the catalog
+        entry only (Iceberg rename semantics — the tree and every path
+        inside it stay put)."""
+        registry = self._tables if kind == "Table" else self._views
+        src, dst = body.get("source") or {}, body.get("destination") or {}
+        s_ident = (*(src.get("namespace") or ()), src.get("name"))
+        d_ident = (*(dst.get("namespace") or ()), dst.get("name"))
+        if None in s_ident or None in d_ident:
+            what = "TableIdentifiers" if kind == "Table" else "identifiers"
+            raise _bad(f"rename needs source + destination {what}")
+        with self._commit_lock:
+            if s_ident not in registry:
+                raise _missing(kind, s_ident)
+            self._need_namespace(
+                d_ident[:-1],
+                self._known_namespaces() | {i[:-1] for i in registry},
+            )
+            self._claim(d_ident)
+            registry[d_ident] = registry.pop(s_ident)
+            return 204, b""
+
+    def _create_view(
+        self, ns: tuple[str, ...], body: dict
+    ) -> tuple[int, bytes]:
+        from .iceberg_view import create_view_metadata, write_view_tree
+
+        name = body.get("name")
+        if not name:
+            raise _bad("create-view needs a name")
+        fields = (body.get("schema") or {}).get("fields")
+        vv = body.get("view-version") or {}
+        reps = vv.get("representations") or []
+        sql_reps = [r for r in reps if r.get("type") == "sql"]
+        if not (fields and sql_reps):
+            raise _bad(
+                "create-view needs schema.fields and a sql representation in "
+                "view-version"
+            )
+        with self._commit_lock:
+            ident = (*ns, name)
+            self._claim(ident)
+            root = self._location(ns, name, body)
+            md = create_view_metadata(
+                sql_reps[0]["sql"],
+                [{k: v for k, v in f.items() if k != "id"} for f in fields],
+                vv.get("default-namespace") or list(ns),
+                root,
+                dialect=sql_reps[0].get("dialect", "spark"),
+                properties=body.get("properties"),
+            )
+            # extra dialect representations ride along verbatim
+            md["versions"][0]["representations"] = reps
+            loc = write_view_tree(root, md)
+            self._namespaces.setdefault(ns, {})
+            self._views[ident] = root
+            return _result(loc, md)
+
+    def _commit_view(
+        self, ident: tuple[str, ...], req: dict
+    ) -> tuple[int, bytes]:
+        from .iceberg_view import (
+            apply_view_commit,
+            load_view_tree,
+            write_view_tree,
+        )
+
+        with self._commit_lock:
+            # re-check under the lock: the existence probe in _route ran
+            # outside it, so a concurrent DELETE could have won the race
+            root = self._views.get(ident)
+            if root is None:
+                raise _missing("View", ident)
+            _loc, md = load_view_tree(root)
+            # apply_view_commit's public contract: (status, message)
+            refused = apply_view_commit(md, req)
+            if refused:
+                code, msg = refused
+                raise _stale(msg) if code == 409 else _bad(msg)
+            return _result(write_view_tree(root, md), md)
+
+    # -- OAuth (the spec's own error envelope) --
 
     @staticmethod
     def _oauth_error(
@@ -1323,9 +1143,7 @@ class IcebergRestCatalog:
         a flat {error, error_description} object with an RFC 6749
         error code (invalid_request / invalid_client / invalid_grant /
         unauthorized_client / unsupported_grant_type / invalid_scope)."""
-        return code, json.dumps(
-            {"error": error, "error_description": description}
-        ).encode()
+        return code, _json({"error": error, "error_description": description})
 
     def _oauth_tokens(self, form: dict) -> tuple[int, bytes]:
         """POST /v1/oauth/tokens (spec OAuthTokenRequest, form-encoded).
@@ -1379,317 +1197,194 @@ class IcebergRestCatalog:
             resp["issued_token_type"] = (
                 "urn:ietf:params:oauth:token-type:access_token"
             )
-        return 200, json.dumps(resp).encode()
+        return 200, _json(resp)
 
-    def _rename_table(self, body: dict) -> tuple[int, bytes]:
-        src, dst = body.get("source") or {}, body.get("destination") or {}
-        s_ident = (*(src.get("namespace") or ()), src.get("name"))
-        d_ident = (*(dst.get("namespace") or ()), dst.get("name"))
-        if None in s_ident or None in d_ident:
-            return 400, _err(
-                400,
-                "BadRequestException",
-                "rename needs source + destination TableIdentifiers",
-            )
-        with self._commit_lock:
-            if s_ident not in self._tables:
-                return 404, _err(
-                    404,
-                    "NoSuchTableException",
-                    f"Table does not exist: {'.'.join(s_ident)}",
-                )
-            d_ns = d_ident[:-1]
-            if d_ns not in set(self._namespaces) | {
-                i[:-1] for i in self._tables
-            }:
-                return 404, _err(
-                    404,
-                    "NoSuchNamespaceException",
-                    f"Namespace does not exist: {'.'.join(d_ns)}",
-                )
-            if d_ident in self._tables or d_ident in self._views:
-                return 409, _err(
-                    409,
-                    "AlreadyExistsException",
-                    f"Table or view already exists: {'.'.join(d_ident)}",
-                )
-            # Iceberg rename moves the catalog entry only; the tree and
-            # every path inside it stay put.
-            self._tables[d_ident] = self._tables.pop(s_ident)
-            return 204, b""
-
-    # -- routing --
+    # -- routing: one entry point, one resource per function --
 
     def _route(
         self, method: str, path: str, body: dict | None = None
     ) -> tuple[int, bytes]:
+        """Serve one request; a rule that refuses it raises `_Rejected`,
+        rendered here into the IcebergErrorResponse envelope."""
+        try:
+            return self._dispatch(method, path, body or {})
+        except _Rejected as rejected:
+            return rejected.response()
+
+    def _dispatch(
+        self, method: str, path: str, body: dict
+    ) -> tuple[int, bytes]:
         query = urllib.parse.parse_qs(urllib.parse.urlsplit(path).query)
         parts = [p for p in path.split("?")[0].split("/") if p]
-        if not parts or parts[0] != "v1":
-            return 404, _err(404, "NoSuchEndpointException", path)
+        if parts[:1] != ["v1"]:
+            raise _Rejected(404, "NoSuchEndpointException", path)
         parts = parts[1:]
         if parts == ["config"]:
-            return 200, json.dumps(
-                {"defaults": {}, "overrides": {}}
-            ).encode()
-        if parts == ["oauth", "tokens"] and method == "POST":
-            return self._oauth_tokens(body or {})
-        if parts == ["tables", "rename"] and method == "POST":
-            return self._rename_table(body or {})
-        if parts == ["transactions", "commit"] and method == "POST":
-            return self._commit_transaction(body or {})
-        if parts == ["views", "rename"] and method == "POST":
-            return self._rename_view(body or {})
-        if not parts or parts[0] != "namespaces":
-            return 404, _err(404, "NoSuchEndpointException", path)
+            return 200, _json({"defaults": {}, "overrides": {}})
+        top = {
+            ("oauth", "tokens"): self._oauth_tokens,
+            ("tables", "rename"): partial(self._rename, kind="Table"),
+            ("transactions", "commit"): self._commit_transaction,
+            ("views", "rename"): partial(self._rename, kind="View"),
+        }.get(tuple(parts))
+        if top is not None and method == "POST":
+            return top(body)
+        if parts[:1] != ["namespaces"]:
+            raise _Rejected(404, "NoSuchEndpointException", path)
         if len(parts) == 1:
-            if method == "POST":
-                return self._create_namespace(body or {})
-            if method not in ("GET", "HEAD"):
-                return 405, _err(405, "MethodNotAllowed", f"{method} {path}")
-            namespaces = sorted(
-                set(self._namespaces) | {i[:-1] for i in self._tables}
-            )
-            # spec `parent` param (unit-separator-joined): list only the
-            # namespaces DIRECTLY under the parent; 404 for an unknown
-            # parent, and no parent = every top-level namespace would be
-            # the hierarchical reading, but the spec's default is the
-            # flat full listing — kept for compatibility with the
-            # pre-existing clients of this server.
-            parent_q = (query.get("parent") or [None])[0]
-            if parent_q is not None:
-                # parse_qs already percent-decoded the value; a second
-                # unquote would corrupt namespaces containing literal
-                # escape sequences
-                parent = tuple(parent_q.split(UNIT_SEP))
-                if parent not in namespaces:
-                    return 404, _err(
-                        404,
-                        "NoSuchNamespaceException",
-                        f"Namespace does not exist: {'.'.join(parent)}",
-                    )
-                namespaces = [
-                    ns
-                    for ns in namespaces
-                    if len(ns) == len(parent) + 1
-                    and ns[: len(parent)] == parent
-                ]
-            return self._paged(
-                query, "namespaces", [list(ns) for ns in namespaces]
-            )
-        ns = _split_ns(parts[1])
-        known = set(self._namespaces) | {i[:-1] for i in self._tables}
-        no_such_ns = (
-            404,
-            _err(
-                404,
-                "NoSuchNamespaceException",
-                f"Namespace does not exist: {'.'.join(ns)}",
-            ),
-        )
-        if len(parts) == 2:
-            if ns not in known:
-                return no_such_ns
+            return self._route_namespaces(method, path, query, body)
+        ns, rest = _split_ns(parts[1]), parts[2:]
+        if not rest:
+            self._need_namespace(ns)
             if method == "DELETE":
                 return self._drop_namespace(ns)
-            return 200, json.dumps(
+            if method == "HEAD":
+                return 204, b""
+            return 200, _json(
                 {
                     "namespace": list(ns),
                     "properties": self._namespaces.get(ns, {}),
                 }
-            ).encode()
-        if parts[2] == "register" and len(parts) == 3 and method == "POST":
-            if ns not in known:
-                return no_such_ns
-            return self._register_table(ns, body or {})
-        if parts[2] == "views":
-            if ns not in known:
-                return no_such_ns
-            if len(parts) == 3:
-                if method == "POST":
-                    return self._create_view(ns, body or {})
-                idents = [
-                    {"namespace": list(i[:-1]), "name": i[-1]}
-                    for i in sorted(self._views)
-                    if i[:-1] == ns
-                ]
-                return self._paged(query, "identifiers", idents)
-            if len(parts) == 4:
-                ident = (*ns, urllib.parse.unquote(parts[3]))
-                if ident not in self._views:
-                    return 404, _err(
-                        404,
-                        "NoSuchViewException",
-                        f"View does not exist: {'.'.join(ident)}",
-                    )
-                if method == "HEAD":
-                    return 204, b""
-                if method == "POST":
-                    return self._commit_view(ident, body or {})
-                if method == "DELETE":
-                    with self._commit_lock:
-                        self._views.pop(ident, None)
-                    return 204, b""
-                if method != "GET":
-                    return 405, _err(
-                        405, "MethodNotAllowed", f"{method} {path}"
-                    )
-                from .iceberg_view import load_view_tree
+            )
+        if rest == ["register"] and method == "POST":
+            self._need_namespace(ns)
+            return self._register_table(ns, body)
+        if rest[0] == "views":
+            return self._route_views(method, path, query, body, ns, rest[1:])
+        if rest[0] == "tables":
+            return self._route_tables(method, path, query, body, ns, rest[1:])
+        raise _Rejected(404, "NoSuchEndpointException", path)
 
-                loc, md = load_view_tree(self._views[ident])
-                return 200, json.dumps(
-                    {"metadata-location": loc, "metadata": md}
-                ).encode()
-            return 404, _err(404, "NoSuchEndpointException", path)
-        if parts[2] != "tables":
-            return 404, _err(404, "NoSuchEndpointException", path)
-        if len(parts) == 3:
-            if ns not in known:
-                return no_such_ns
-            if method == "POST":
-                return self._create_table(ns, body or {})
-            idents = [
-                {"namespace": list(ident[:-1]), "name": ident[-1]}
-                for ident in sorted(self._tables)
-                if ident[:-1] == ns
+    def _route_namespaces(
+        self, method: str, path: str, query: dict, body: dict
+    ) -> tuple[int, bytes]:
+        """/v1/namespaces: create, or list (`parent` = the namespaces
+        DIRECTLY under it)."""
+        if method == "POST":
+            return self._create_namespace(body)
+        if method not in ("GET", "HEAD"):
+            raise _Rejected(405, "MethodNotAllowed", f"{method} {path}")
+        known = self._known_namespaces()
+        namespaces = sorted(known)
+        # spec `parent` param (unit-separator-joined): 404 for an unknown
+        # parent. No parent = every top-level namespace would be the
+        # hierarchical reading, but the spec's default is the flat full
+        # listing — kept for compatibility with the pre-existing clients
+        # of this server.
+        parent_q = (query.get("parent") or [None])[0]
+        if parent_q is not None:
+            # parse_qs already percent-decoded the value; a second
+            # unquote would corrupt namespaces containing literal
+            # escape sequences
+            parent = tuple(parent_q.split(UNIT_SEP))
+            self._need_namespace(parent, known)
+            namespaces = [
+                ns
+                for ns in namespaces
+                if len(ns) == len(parent) + 1 and ns[: len(parent)] == parent
             ]
-            return self._paged(query, "identifiers", idents)
-        if (
-            len(parts) == 5
-            and parts[4] == "metrics"
-            and method == "POST"
-        ):
+        return _paged(query, "namespaces", [list(ns) for ns in namespaces])
+
+    @staticmethod
+    def _listing(registry: dict, ns: tuple[str, ...]) -> list[dict]:
+        return [
+            {"namespace": list(i[:-1]), "name": i[-1]}
+            for i in sorted(registry)
+            if i[:-1] == ns
+        ]
+
+    def _route_views(
+        self, method: str, path: str, query: dict, body: dict,
+        ns: tuple[str, ...], rest: list[str],
+    ) -> tuple[int, bytes]:
+        """/v1/namespaces/{ns}/views[/{view}]"""
+        from .iceberg_view import load_view_tree
+
+        self._need_namespace(ns)
+        if not rest:
+            if method == "POST":
+                return self._create_view(ns, body)
+            idents = self._listing(self._views, ns)
+            return _paged(query, "identifiers", idents)
+        if len(rest) != 1:
+            raise _Rejected(404, "NoSuchEndpointException", path)
+        ident = (*ns, urllib.parse.unquote(rest[0]))
+        if ident not in self._views:
+            raise _missing("View", ident)
+        if method == "HEAD":
+            return 204, b""
+        if method == "POST":
+            return self._commit_view(ident, body)
+        if method == "DELETE":
+            with self._commit_lock:
+                self._views.pop(ident, None)
+            return 204, b""
+        if method != "GET":
+            raise _Rejected(405, "MethodNotAllowed", f"{method} {path}")
+        return _result(*load_view_tree(self._views[ident]))
+
+    def _route_tables(
+        self, method: str, path: str, query: dict, body: dict,
+        ns: tuple[str, ...], rest: list[str],
+    ) -> tuple[int, bytes]:
+        """/v1/namespaces/{ns}/tables[/{table}[/metrics]]"""
+        if not rest:
+            self._need_namespace(ns)
+            if method == "POST":
+                return self._create_table(ns, body)
+            idents = self._listing(self._tables, ns)
+            return _paged(query, "identifiers", idents)
+        ident = (*ns, urllib.parse.unquote(rest[0]))
+        if rest[1:] == ["metrics"] and method == "POST":
             # spec reportMetrics: accept the client's scan/commit
             # report; the catalog acknowledges with 204 (no body). Kept
             # in a bounded ring for inspection — a real deployment
             # forwards these to its metrics store.
-            ident = (*ns, urllib.parse.unquote(parts[3]))
             if ident not in self._tables:
-                return 404, _err(
-                    404,
-                    "NoSuchTableException",
-                    f"Table does not exist: {'.'.join(ident)}",
-                )
+                raise _missing("Table", ident)
             self._metrics.append({"table": list(ident), "report": body})
             del self._metrics[:-100]
             return 204, b""
-        if len(parts) == 4:
-            ident = (*ns, urllib.parse.unquote(parts[3]))
-            if ident not in self._tables:
-                reqs = (body or {}).get("requirements") or []
-                if (
-                    method == "POST"
-                    and ident in self._staged
-                    and any(r.get("type") == "assert-create" for r in reqs)
-                ):
-                    # CTAS finalize: assert-create materializes the
-                    # staged tree as the table, then the commit's
-                    # updates (add-snapshot + set-snapshot-ref) land
-                    # on it atomically under the commit lock. With
-                    # several trees staged under one name, the
-                    # committer's assert-table-uuid picks ITS tree.
-                    with self._commit_lock:
-                        staged = self._staged[ident]
-                        want = next(
-                            (
-                                r.get("uuid")
-                                for r in reqs
-                                if r.get("type") == "assert-table-uuid"
-                            ),
-                            None,
-                        )
-                        if want is None and len(staged) > 1:
-                            return 400, _err(
-                                400,
-                                "BadRequestException",
-                                f"{len(staged)} staged creates exist for "
-                                f"{'.'.join(ident)}; the finalize commit "
-                                "must carry assert-table-uuid",
-                            )
-                        uuid_key = want or next(iter(staged))
-                        if uuid_key not in staged:
-                            return 409, _err(
-                                409,
-                                "CommitFailedException",
-                                f"no staged create with uuid {uuid_key} "
-                                f"for {'.'.join(ident)}",
-                            )
-                        self._tables[ident] = staged.pop(uuid_key)
-                        if not staged:
-                            del self._staged[ident]
-                    req2 = dict(body or {})
-                    req2["requirements"] = [
-                        r
-                        for r in req2.get("requirements") or []
-                        if r.get("type") != "assert-create"
-                    ]
-                    code, resp = self._commit(ident, req2)
-                    if code != 200:
-                        # fail WHOLE: un-materialize and re-stage so a
-                        # corrected finalize (or another writer) can
-                        # still land; without this a bad update leaves
-                        # an empty table registered forever
-                        with self._commit_lock:
-                            staged_root = self._tables.pop(ident, None)
-                            if staged_root is not None:
-                                self._staged.setdefault(ident, {})[
-                                    uuid_key
-                                ] = staged_root
-                    return code, resp
-                return 404, _err(
-                    404,
-                    "NoSuchTableException",
-                    f"Table does not exist: {'.'.join(ident)}",
-                )
-            if method == "HEAD":
-                return 204, b""
-            if method == "POST":
-                return self._commit(ident, body or {})
-            if method == "DELETE":
-                purge = (query.get("purgeRequested") or ["false"])[
-                    0
-                ].lower() == "true"
-                return self._drop_table(ident, purge)
-            if method != "GET":
-                return 405, _err(
-                    405, "MethodNotAllowed", f"{method} {path}"
-                )
-            try:
-                loc, metadata = self._load(ident)
-            except KeyError:  # raced with a DELETE after the route check
-                return 404, _err(
-                    404,
-                    "NoSuchTableException",
-                    f"Table does not exist: {'.'.join(ident)}",
-                )
-            # spec `snapshots` param: "all" (default) or "refs" — the
-            # lazy-loading mode where only ref-reachable snapshots ship
-            mode = (query.get("snapshots") or ["all"])[0]
-            if mode == "refs":
-                wanted = {
-                    r["snapshot-id"]
-                    for r in (metadata.get("refs") or {}).values()
-                } | {metadata.get("current-snapshot-id")}
-                metadata = dict(metadata)
-                metadata["snapshots"] = [
-                    s
-                    for s in metadata.get("snapshots") or []
-                    if s["snapshot-id"] in wanted
-                ]
-            elif mode != "all":
-                return 400, _err(
-                    400,
-                    "BadRequestException",
-                    f"invalid snapshots mode {mode!r} (all|refs)",
-                )
-            return 200, json.dumps(
-                {
-                    "metadata-location": loc,
-                    "metadata": metadata,
-                    "config": {},
-                }
-            ).encode()
-        return 404, _err(404, "NoSuchEndpointException", path)
+        if len(rest) != 1:
+            raise _Rejected(404, "NoSuchEndpointException", path)
+        if ident not in self._tables:
+            reqs = body.get("requirements") or []
+            if (
+                method == "POST"
+                and ident in self._staged
+                and any(r.get("type") == "assert-create" for r in reqs)
+            ):
+                return self._finalize_staged(ident, body)
+            raise _missing("Table", ident)
+        if method == "HEAD":
+            return 204, b""
+        if method == "POST":
+            return self._commit(ident, body)
+        if method == "DELETE":
+            purge = (query.get("purgeRequested") or ["false"])[0]
+            return self._drop_table(ident, purge.lower() == "true")
+        if method != "GET":
+            raise _Rejected(405, "MethodNotAllowed", f"{method} {path}")
+        try:
+            loc, metadata = self._load(ident)
+        except KeyError:  # raced with a DELETE after the route check
+            raise _missing("Table", ident) from None
+        # spec `snapshots` param: "all" (default) or "refs" — the
+        # lazy-loading mode where only ref-reachable snapshots ship
+        mode = (query.get("snapshots") or ["all"])[0]
+        if mode == "refs":
+            wanted = {
+                r["snapshot-id"] for r in (metadata.get("refs") or {}).values()
+            } | {metadata.get("current-snapshot-id")}
+            metadata = dict(metadata)
+            metadata["snapshots"] = [
+                s
+                for s in metadata.get("snapshots") or []
+                if s["snapshot-id"] in wanted
+            ]
+        elif mode != "all":
+            raise _bad(f"invalid snapshots mode {mode!r} (all|refs)")
+        return _result(loc, metadata, config={})
 
     # -- lifecycle --
 
@@ -1723,13 +1418,11 @@ class IcebergRestCatalog:
                             payload = json.loads(raw.decode() or "{}")
                     code, body = catalog._route(method, self.path, payload)
                 except json.JSONDecodeError as exc:
-                    code, body = 400, _err(
-                        400, "BadRequestException", f"invalid JSON: {exc}"
-                    )
+                    code, body = _bad(f"invalid JSON: {exc}").response()
                 except Exception as exc:  # surface as a 500 envelope
-                    code, body = 500, _err(
+                    code, body = _Rejected(
                         500, type(exc).__name__, str(exc)
-                    )
+                    ).response()
                 self.send_response(code)
                 self.send_header("Content-Type", "application/json")
                 self.send_header("Content-Length", str(len(body)))
@@ -1807,6 +1500,76 @@ def committed_batch_id(metadata: dict) -> int | None:
     return max(ids) if ids else None
 
 
+def _ns_url(base_url: str, ns, *path: str) -> str:
+    """`{base_url}/v1/namespaces/{ns}[/{path}...]`: the namespace
+    joined with the spec's unit separator, every segment URL-quoted."""
+    segs = [urllib.parse.quote(s) for s in (UNIT_SEP.join(ns), *path)]
+    return "/".join([f"{base_url}/v1/namespaces", *segs])
+
+
+def _iceberg_fields(schema) -> list[dict]:
+    """A Spark StructType as Iceberg schema fields without ids (the
+    catalog assigns them)."""
+    from .iceberg_meta import _iceberg_type
+
+    return [
+        {
+            "name": f.name,
+            "type": _iceberg_type(f.dataType.simpleString()),
+            "required": not f.nullable,
+        }
+        for f in schema.fields
+    ]
+
+
+def _publish_main(snapshot: dict, metadata: dict | None = None) -> dict:
+    """The change that publishes a staged `snapshot` as main's head:
+    add-snapshot + set-snapshot-ref main, guarded by
+    assert-ref-snapshot-id at `metadata`'s head (a fresh table's -1
+    head asserts no ref). Without `metadata` the requirements are the
+    caller's to set."""
+    change: dict = {
+        "requirements": [],
+        "updates": [
+            {"action": "add-snapshot", "snapshot": snapshot},
+            {
+                "action": "set-snapshot-ref",
+                "ref-name": "main",
+                "type": "branch",
+                "snapshot-id": snapshot["snapshot-id"],
+            },
+        ],
+    }
+    if metadata is not None:
+        head = metadata.get("current-snapshot-id")
+        change["requirements"].append(
+            {
+                "type": "assert-ref-snapshot-id",
+                "ref": "main",
+                "snapshot-id": None if head == -1 else head,
+            }
+        )
+    return change
+
+
+def _retry_commit(attempt, max_retries: int, what: str):
+    """Run `attempt()` (load, stage, commit) until it does not lose the
+    commit race: a 409 CommitFailedException re-runs it against fresh
+    metadata, at most `max_retries` times — the optimistic-concurrency
+    loop every real Iceberg catalog client runs."""
+    last = None
+    for _ in range(max_retries + 1):
+        try:
+            return attempt()
+        except ValueError as e:
+            if "CommitFailedException" not in str(e):
+                raise
+            last = e
+    raise ValueError(
+        f"{what} lost the commit race {max_retries + 1} times: {last}"
+    )
+
+
 def append_table_via_catalog(
     spark, df, url: str, max_retries: int = 3, batch_id: int | None = None
 ) -> dict | None:
@@ -1828,47 +1591,19 @@ def append_table_via_catalog(
     no-op instead of a duplicate."""
     from .iceberg_meta import stage_iceberg_append
 
-    last = None
-    for _ in range(max_retries + 1):
+    def attempt():
         metadata = rest_load_table(url)["metadata"]
         if batch_id is not None:
             seen = committed_batch_id(metadata)
             if seen is not None and batch_id <= seen:
                 return None
-        head = metadata.get("current-snapshot-id")
-        if head == -1:  # freshly created table: no current snapshot yet
-            head = None
         snapshot = stage_iceberg_append(spark, df, metadata)
         if batch_id is not None:
             snapshot["summary"]["streaming.batch-id"] = str(batch_id)
-        try:
-            rest_commit_table(
-                url,
-                updates=[
-                    {"action": "add-snapshot", "snapshot": snapshot},
-                    {
-                        "action": "set-snapshot-ref",
-                        "ref-name": "main",
-                        "type": "branch",
-                        "snapshot-id": snapshot["snapshot-id"],
-                    },
-                ],
-                requirements=[
-                    {
-                        "type": "assert-ref-snapshot-id",
-                        "ref": "main",
-                        "snapshot-id": head,
-                    }
-                ],
-            )
-            return snapshot
-        except ValueError as e:
-            if "CommitFailedException" not in str(e):
-                raise
-            last = e
-    raise ValueError(
-        f"append lost the commit race {max_retries + 1} times: {last}"
-    )
+        rest_commit_table(url, **_publish_main(snapshot, metadata))
+        return snapshot
+
+    return _retry_commit(attempt, max_retries, "append")
 
 
 def rest_load_table(url: str) -> dict:
@@ -1921,8 +1656,7 @@ def rest_create_namespace(
 
 
 def rest_drop_namespace(base_url: str, ns) -> None:
-    seg = urllib.parse.quote(UNIT_SEP.join(ns))
-    _rest_call(f"{base_url}/v1/namespaces/{seg}", "DELETE")
+    _rest_call(_ns_url(base_url, ns), "DELETE")
 
 
 def rest_create_table(
@@ -1935,7 +1669,6 @@ def rest_create_table(
     properties: dict | None = None,
 ) -> dict:
     """CREATE TABLE through the protocol; returns the LoadTableResult."""
-    seg = urllib.parse.quote(UNIT_SEP.join(ns))
     body: dict = {
         "name": name,
         "schema": {"type": "struct", "fields": schema_fields},
@@ -1946,7 +1679,7 @@ def rest_create_table(
         body["partition-spec"] = {"spec-id": 0, "fields": partition_fields}
     if properties:
         body["properties"] = properties
-    return _rest_call(f"{base_url}/v1/namespaces/{seg}/tables", "POST", body)
+    return _rest_call(_ns_url(base_url, ns, "tables"), "POST", body)
 
 
 def rest_stage_create_table(
@@ -1954,14 +1687,13 @@ def rest_stage_create_table(
 ) -> dict:
     """stage-create (CTAS step 1): the server mints the metadata tree
     but the table stays invisible until the assert-create commit."""
-    seg = urllib.parse.quote(UNIT_SEP.join(ns))
     body: dict = {
         "name": name,
         "stage-create": True,
         "schema": {"type": "struct", "fields": schema_fields},
         **kw,
     }
-    return _rest_call(f"{base_url}/v1/namespaces/{seg}/tables", "POST", body)
+    return _rest_call(_ns_url(base_url, ns, "tables"), "POST", body)
 
 
 def ctas_via_catalog(spark, df, base_url: str, ns, name: str) -> dict:
@@ -1971,42 +1703,24 @@ def ctas_via_catalog(spark, df, base_url: str, ns, name: str) -> dict:
     assert-create commit makes table + data appear atomically; a
     concurrent create of the same name wins or loses whole. Returns the
     committed snapshot dict."""
-    from .iceberg_meta import _iceberg_type, stage_iceberg_append
+    from .iceberg_meta import stage_iceberg_append
 
-    fields = [
-        {
-            "name": f.name,
-            "type": _iceberg_type(f.dataType.simpleString()),
-            "required": not f.nullable,
-        }
-        for f in df.schema.fields
-    ]
-    staged = rest_stage_create_table(base_url, ns, name, fields)
+    staged = rest_stage_create_table(
+        base_url, ns, name, _iceberg_fields(df.schema)
+    )
     assert staged.get("metadata-location") is None  # spec: uncommitted
     snapshot = stage_iceberg_append(spark, df, staged["metadata"])
-    seg = urllib.parse.quote(UNIT_SEP.join(ns))
-    url = f"{base_url}/v1/namespaces/{seg}/tables/{urllib.parse.quote(name)}"
-    rest_commit_table(
-        url,
-        updates=[
-            {"action": "add-snapshot", "snapshot": snapshot},
-            {
-                "action": "set-snapshot-ref",
-                "ref-name": "main",
-                "type": "branch",
-                "snapshot-id": snapshot["snapshot-id"],
-            },
-        ],
-        requirements=[
-            {"type": "assert-create"},
-            # picks THIS writer's staged tree when several writers
-            # staged the same name
-            {
-                "type": "assert-table-uuid",
-                "uuid": staged["metadata"]["table-uuid"],
-            },
-        ],
-    )
+    change = _publish_main(snapshot)
+    change["requirements"] = [
+        {"type": "assert-create"},
+        # picks THIS writer's staged tree when several writers staged
+        # the same name
+        {
+            "type": "assert-table-uuid",
+            "uuid": staged["metadata"]["table-uuid"],
+        },
+    ]
+    rest_commit_table(_ns_url(base_url, ns, "tables", name), **change)
     return snapshot
 
 
@@ -2051,61 +1765,32 @@ def append_tables_via_catalog_txn(
     instead)."""
     from .iceberg_meta import stage_iceberg_append
 
-    last: Exception | None = None
-    for _ in range(max_retries + 1):
+    def attempt():
         changes = []
         out: dict[str, dict] = {}
         for ns, name, df in appends:
-            seg = urllib.parse.quote(UNIT_SEP.join(ns))
-            url = (
-                f"{base_url}/v1/namespaces/{seg}/tables/"
-                f"{urllib.parse.quote(name)}"
-            )
-            metadata = rest_load_table(url)["metadata"]
-            head = metadata.get("current-snapshot-id")
-            if head == -1:  # freshly created: no current snapshot yet
-                head = None
+            metadata = rest_load_table(_ns_url(base_url, ns, "tables", name))[
+                "metadata"
+            ]
             snapshot = stage_iceberg_append(spark, df, metadata)
             changes.append(
                 {
                     "identifier": {"namespace": list(ns), "name": name},
-                    "requirements": [
-                        {
-                            "type": "assert-ref-snapshot-id",
-                            "ref": "main",
-                            "snapshot-id": head,
-                        }
-                    ],
-                    "updates": [
-                        {"action": "add-snapshot", "snapshot": snapshot},
-                        {
-                            "action": "set-snapshot-ref",
-                            "ref-name": "main",
-                            "type": "branch",
-                            "snapshot-id": snapshot["snapshot-id"],
-                        },
-                    ],
+                    **_publish_main(snapshot, metadata),
                 }
             )
             out[".".join((*ns, name))] = snapshot
-        try:
-            rest_commit_transaction(base_url, changes)
-            return out
-        except ValueError as e:
-            if "CommitFailedException" not in str(e):
-                raise
-            last = e
-    raise ValueError(
-        f"transaction lost the commit race {max_retries + 1} times: {last}"
-    )
+        rest_commit_transaction(base_url, changes)
+        return out
+
+    return _retry_commit(attempt, max_retries, "transaction")
 
 
 def rest_register_table(
     base_url: str, ns, name: str, metadata_location: str
 ) -> dict:
-    seg = urllib.parse.quote(UNIT_SEP.join(ns))
     return _rest_call(
-        f"{base_url}/v1/namespaces/{seg}/register",
+        _ns_url(base_url, ns, "register"),
         "POST",
         {"name": name, "metadata-location": metadata_location},
     )
@@ -2114,13 +1799,8 @@ def rest_register_table(
 def rest_drop_table(
     base_url: str, ns, name: str, purge: bool = False
 ) -> None:
-    seg = urllib.parse.quote(UNIT_SEP.join(ns))
     q = "?purgeRequested=true" if purge else ""
-    _rest_call(
-        f"{base_url}/v1/namespaces/{seg}/tables/"
-        f"{urllib.parse.quote(name)}{q}",
-        "DELETE",
-    )
+    _rest_call(_ns_url(base_url, ns, "tables", name) + q, "DELETE")
 
 
 def rest_rename_table(base_url: str, src_ns, src_name, dst_ns, dst_name):
@@ -2139,14 +1819,4 @@ def create_table_via_catalog(base_url: str, ns, name: str, df_schema) -> dict:
     through the engine's Iceberg type mapping and POST the
     CreateTableRequest (the catalog assigns field ids). Returns the
     LoadTableResult."""
-    from .iceberg_meta import _iceberg_type
-
-    fields = [
-        {
-            "name": f.name,
-            "type": _iceberg_type(f.dataType.simpleString()),
-            "required": not f.nullable,
-        }
-        for f in df_schema.fields
-    ]
-    return rest_create_table(base_url, ns, name, fields)
+    return rest_create_table(base_url, ns, name, _iceberg_fields(df_schema))

@@ -8,8 +8,8 @@
    initial-default makes it legal per the spec.
 3. rest_catalog._commit_view: the view-existence probe in _route runs
    outside the commit lock, so _commit_view must re-check under the
-   lock and answer 404 NoSuchViewException — not KeyError/500 — when a
-   concurrent DELETE won the race.
+   lock and refuse with 404 NoSuchViewException — not KeyError/500 —
+   when a concurrent DELETE won the race.
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ import pytest
 
 from hybrid_data_lakehouse_lab_spark.operators.rest_catalog import (
     IcebergRestCatalog,
+    _Rejected,
     create_table_via_catalog,
     rest_commit_table,
     rest_create_namespace,
@@ -151,8 +152,11 @@ def test_commit_view_rechecks_existence_under_lock(tmp_path):
     # no server needed: call the handler directly. An unregistered view
     # simulates DELETE winning the race between _route's outside-lock
     # existence check and _commit_view taking the commit lock.
+    # The refusal is raised, and rendered by the catalog's one renderer.
     cat = IcebergRestCatalog({}, warehouse_dir=str(tmp_path))
-    code, body = cat._commit_view(("ns", "gone"), {"updates": []})
+    with pytest.raises(_Rejected) as refused:
+        cat._commit_view(("ns", "gone"), {"updates": []})
+    code, body = refused.value.response()
     assert code == 404
     env = json.loads(body)["error"]
     assert env["type"] == "NoSuchViewException"

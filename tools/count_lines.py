@@ -9,7 +9,8 @@ line counts when it holds at least one token other than a comment or a
 line break (found with `tokenize`), so a multi-line expression counts
 each of its lines, and a multi-line string that is not a docstring
 counts every line it spans. Prints one `lines path` row per file,
-sorted by path, then `lines total`.
+sorted by path, then `lines total`. `function_lines` applies the same
+count to each function of one source.
 """
 
 from __future__ import annotations
@@ -49,15 +50,43 @@ def _docstring_lines(tree: ast.AST) -> set[int]:
     return out
 
 
-def code_lines(source: str) -> int:
-    """The number of code lines in `source` (see the module docstring)."""
-    docs = _docstring_lines(ast.parse(source))
+def _code_line_set(source: str, tree: ast.AST) -> set[int]:
+    docs = _docstring_lines(tree)
     lines: set[int] = set()
     for tok in tokenize.generate_tokens(io.StringIO(source).readline):
         if tok.type in _SKIP:
             continue
         lines.update(range(tok.start[0], tok.end[0] + 1))
-    return len(lines - docs)
+    return lines - docs
+
+
+def code_lines(source: str) -> int:
+    """The number of code lines in `source` (see the module docstring)."""
+    return len(_code_line_set(source, ast.parse(source)))
+
+
+def function_lines(source: str) -> dict[str, int]:
+    """{qualified name: code lines} of every function and method in
+    `source` (nested ones too, as `outer.inner`): the code lines from
+    its `def` line to its last line, counted as `code_lines` counts
+    them, so a function's own docstring does not count."""
+    tree = ast.parse(source)
+    lines = _code_line_set(source, tree)
+    out: dict[str, int] = {}
+
+    def walk(node: ast.AST, prefix: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                span = range(child.lineno, child.end_lineno + 1)
+                out[prefix + child.name] = len(lines.intersection(span))
+                walk(child, f"{prefix}{child.name}.")
+            elif isinstance(child, ast.ClassDef):
+                walk(child, f"{prefix}{child.name}.")
+            else:
+                walk(child, prefix)
+
+    walk(tree, "")
+    return out
 
 
 def count(package: str) -> dict[str, int]:
