@@ -712,9 +712,10 @@ def load_table_metadata(meta_dir: str) -> tuple[int, dict]:
 def write_metadata_version(meta_dir: str, md: dict, version: int) -> str:
     """Persist `md` as `v{version}.metadata.json` under `meta_dir`, then
     swap the hint to `version` atomically (tmp file + `os.replace`, data
-    before pointer) — the one pointer-commit discipline every metadata
-    writer here shares. Returns the new metadata location. Callers that
-    need serialization hold their own lock around load+apply+write."""
+    before pointer). Returns the new metadata location. It serializes
+    nothing itself: commits call it from `iceberg_commit.commit_trees`,
+    the exporter's regeneration under `iceberg_commit.commit_lock`, and
+    table creation writes v1 of a fresh tree with it."""
     os.makedirs(meta_dir, exist_ok=True)
     new_loc = os.path.join(meta_dir, f"v{version}.metadata.json")
     with atomic_open(new_loc, "w") as fh:
@@ -1720,6 +1721,8 @@ def export_iceberg_metadata(
     metadata commit, entries whose child dir is no longer a live
     snapshot are removed (`mor_diff.gc_ledger`). The equality-delete
     (`upsert_key`) diff does not go through the ledger."""
+    from .iceberg_commit import commit_lock
+
     if format_version not in (1, 2, 3):
         raise NotImplementedError(
             f"format_version {format_version!r} (only 1, 2 and 3)"
@@ -1869,8 +1872,12 @@ def export_iceberg_metadata(
         x.prev_rows = rows
 
     metadata = _table_metadata(x, m, branch, events, snapshots)
-    write_metadata_version(meta_dir, metadata, len(events))
-    _remove_stale_files(x, len(events), drop_foreign_commits)
+    # a catalog commit may have landed since the first check: check
+    # again, and write and collect, under the tree's commit lock
+    with commit_lock(meta_dir):
+        _check_foreign_commits(meta_dir, drop_foreign_commits)
+        write_metadata_version(meta_dir, metadata, len(events))
+        _remove_stale_files(x, len(events), drop_foreign_commits)
     gc_ledger(table.root, [s["path"] for s in m["snapshots"]])
     return meta_dir
 
@@ -3091,20 +3098,24 @@ def export_iceberg_statistics(table: SnapshotTable, columns: list[str] | None = 
     string. Each blob carries the spec's `ndv` property.
 
     Run AFTER `export_iceberg_metadata` (regeneration rewrites the
-    metadata file without statistics; re-run this to restore them).
+    metadata without statistics; re-run this to restore them).
     Columns default to every top-level long/int/string column.
 
-    Failure-atomic: the Puffin is written under a name the current
-    metadata does not reference, then the metadata is swapped, and only
-    then are the stats files it no longer references removed.
+    The statistics commit as a NEW metadata version: one
+    `set-statistics` update through `iceberg_commit.commit_table`,
+    under the tree's commit lock, so a commit that landed since the
+    load (a catalog append, a property) is kept. Failure-atomic: the
+    Puffin is written under a name the loaded metadata does not
+    reference, then the version commits, and only then are the stats
+    files the committed metadata no longer references removed.
     Returns {column: estimate}."""
     from pyspark.sql import functions as F
 
+    from .iceberg_commit import commit_table
     from .puffin import write_puffin
 
     meta_dir = os.path.join(table.root, "metadata")
     n, metadata = load_table_metadata(meta_dir)
-    meta_path = os.path.join(meta_dir, f"v{n}.metadata.json")
     sid = metadata["current-snapshot-id"]
     snap = next(s for s in metadata["snapshots"] if s["snapshot-id"] == sid)
     seq = snap.get("sequence-number", 0)
@@ -3158,22 +3169,20 @@ def export_iceberg_statistics(table: SnapshotTable, columns: list[str] | None = 
     data_end = max(
         (bm["offset"] + bm["length"] for bm in blob_metas), default=4
     )
-    metadata["statistics"] = [
-        {
-            "snapshot-id": sid,
-            "statistics-path": stats_path,
-            "file-size-in-bytes": size,
-            "file-footer-size-in-bytes": size - data_end,
-            "blob-metadata": blob_metas,
-        }
-    ]
-    with atomic_open(meta_path, "w") as fh:
-        json.dump(metadata, fh, indent=1, sort_keys=True)
+    entry = {
+        "snapshot-id": sid,
+        "statistics-path": stats_path,
+        "file-size-in-bytes": size,
+        "file-footer-size-in-bytes": size - data_end,
+        "blob-metadata": blob_metas,
+    }
+    committed = commit_table(
+        meta_dir, [{"action": "set-statistics", "statistics": entry}]
+    )[1]
+    referenced = {st["statistics-path"] for st in committed["statistics"]}
     for f in os.listdir(meta_dir):
-        # the superseded statistics files (sole-writer assumption, same
-        # as the exporters)
         path = os.path.join(meta_dir, f)
-        if f.startswith("stats-") and f.endswith(".puffin") and path != stats_path:
+        if f.startswith("stats-") and f.endswith(".puffin") and path not in referenced:
             os.remove(path)
     return estimates
 

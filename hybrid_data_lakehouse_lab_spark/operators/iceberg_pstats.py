@@ -101,21 +101,21 @@ def write_partition_stats(
 ) -> dict:
     """Compute and persist the partition-statistics file for
     `snapshot_id` (default: current snapshot) of the Iceberg tree at
-    `root`, and register it in a NEW metadata version (atomic hint
-    swap — same pointer discipline as every other metadata commit).
-    Re-running replaces the snapshot's entry idempotently. Returns the
-    registered entry dict.
-
-    With `catalog_url` (the table's load endpoint), registration goes
-    through the catalog's COMMIT endpoint instead — the stats file is
-    staged first, then one `set-partition-statistics` pointer commit
-    lands it (the spec's update action; how an external stats writer
-    registers against a catalog-owned table)."""
+    `root`, and register it in a NEW metadata version. The stats file
+    is staged first, then ONE `set-partition-statistics` update (the
+    spec's action, which replaces the snapshot's prior entry, so
+    re-running is idempotent) commits it: through
+    `iceberg_commit.commit_table`, under the tree's commit lock, or
+    with `catalog_url` (the table's load endpoint) through the catalog's
+    COMMIT endpoint, the way an external stats writer registers against
+    a catalog-owned table. Either way a commit that landed since the
+    load is kept. Returns the registered entry dict."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from .iceberg_commit import commit_table
     from .iceberg_inspect import _live_entries, _snap
-    from .iceberg_meta import load_table_metadata, write_metadata_version
+    from .iceberg_meta import load_table_metadata
 
     meta_dir = os.path.join(root, "metadata")
     _, metadata = load_table_metadata(meta_dir)
@@ -208,33 +208,15 @@ def write_partition_stats(
         "file-size-in-bytes": os.path.getsize(path),
     }
 
+    updates = [
+        {"action": "set-partition-statistics", "partition-statistics": entry}
+    ]
     if catalog_url is not None:
         from .rest_catalog import rest_commit_table
 
-        rest_commit_table(
-            catalog_url,
-            updates=[
-                {
-                    "action": "set-partition-statistics",
-                    "partition-statistics": entry,
-                }
-            ],
-        )
-        return entry
-
-    # register in a NEW metadata version (replace any prior entry for
-    # this snapshot — idempotent re-runs)
-    n, md = load_table_metadata(meta_dir)
-    pstats = [
-        e
-        for e in md.get("partition-statistics") or []
-        if e["snapshot-id"] != sid
-    ]
-    pstats.append(entry)
-    md["partition-statistics"] = sorted(
-        pstats, key=lambda e: e["snapshot-id"]
-    )
-    write_metadata_version(meta_dir, md, n + 1)
+        rest_commit_table(catalog_url, updates=updates)
+    else:
+        commit_table(meta_dir, updates)
     return entry
 
 

@@ -8,7 +8,9 @@ a `default-namespace` for identifier resolution), `schemas`, a
 metadata-file + catalog-pointer lifecycle as tables (the view spec
 reuses the table spec's storage model). CREATE OR REPLACE VIEW is an
 append: a new version + pointer move, so every historical definition
-stays readable — the view analog of table time travel.
+stays readable — the view analog of table time travel. The REST
+catalog writes every view version through `iceberg_commit.commit_trees`,
+under the tree's commit lock, as it writes table versions.
 
 The reference exposes its lakehouse through engine views (Trino /
 Spark `CREATE VIEW` over Iceberg tables); this module provides the
@@ -28,12 +30,11 @@ import os
 import re
 import uuid
 
-from .iceberg_meta import load_table_metadata, write_metadata_version
+from .iceberg_meta import load_table_metadata
 
 __all__ = [
     "create_view_metadata",
     "apply_view_commit",
-    "write_view_tree",
     "load_view_tree",
     "read_iceberg_view",
     "create_view_via_catalog",
@@ -207,18 +208,6 @@ def apply_view_commit(md: dict, req: dict) -> tuple[int, str] | None:
         else:
             return 400, f"unsupported view update action {a!r}"
     return None
-
-
-def write_view_tree(root: str, md: dict) -> str:
-    """Persist `md` as the next metadata version under
-    `<root>/metadata/` and swap the version hint; returns the new
-    metadata location. Same pointer discipline as table trees
-    (shared helper)."""
-    meta_dir = os.path.join(root, "metadata")
-    n = 0
-    if os.path.exists(os.path.join(meta_dir, "version-hint.text")):
-        n = load_table_metadata(meta_dir)[0]
-    return write_metadata_version(meta_dir, md, n + 1)
 
 
 def load_view_tree(root: str) -> tuple[str, dict]:

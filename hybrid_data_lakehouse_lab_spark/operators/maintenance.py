@@ -214,34 +214,44 @@ def _delta_log_reachable(root: str) -> set[str]:
     return reachable
 
 
-def _iceberg_reachable(root: str) -> set[str]:
-    """Every data/delete file and statistics Puffin any snapshot of an
-    Iceberg `metadata/` tree at `root` references (empty set when no
-    Iceberg facade exists). Manifest avros themselves are NOT included
-    — no sibling facade ever shares those. Absolute paths."""
+def _stats_entries(metadata: dict) -> list[dict]:
+    """The table and partition statistics entries of Iceberg metadata."""
+    return (metadata.get("statistics") or []) + (
+        metadata.get("partition-statistics") or []
+    )
+
+
+def _iceberg_reach(snapshots: list[dict], stats: list[dict]) -> set[str]:
+    """Every manifest list, manifest and data/delete file `snapshots`
+    reference, and the files of the `stats` entries. Absolute paths."""
     from .avro_io import read_avro
+
+    reachable = {os.path.abspath(st["statistics-path"]) for st in stats}
+    for s in snapshots:
+        reachable.add(os.path.abspath(s["manifest-list"]))
+        for r in read_avro(s["manifest-list"])[1]:
+            mp = os.path.abspath(r["manifest_path"])
+            if mp in reachable:
+                continue
+            reachable.add(mp)
+            for e in read_avro(mp)[1]:
+                reachable.add(os.path.abspath(e["data_file"]["file_path"]))
+    return reachable
+
+
+def _iceberg_reachable(root: str) -> set[str]:
+    """Everything the current metadata of an Iceberg `metadata/` tree at
+    `root` references (`_iceberg_reach` over every snapshot and
+    statistics entry; empty set when no Iceberg facade exists)."""
     from .iceberg_meta import load_table_metadata
 
     meta_dir = os.path.join(root, "metadata")
-    reachable: set[str] = set()
     if not os.path.exists(os.path.join(meta_dir, "version-hint.text")):
-        return reachable
+        return set()
     _, metadata = load_table_metadata(meta_dir)
-    seen: set[str] = set()
-    for s in metadata.get("snapshots") or []:
-        for r in read_avro(s["manifest-list"])[1]:
-            mp = r["manifest_path"]
-            if mp in seen:
-                continue
-            seen.add(mp)
-            for e in read_avro(mp)[1]:
-                reachable.add(
-                    os.path.abspath(e["data_file"]["file_path"])
-                )
-    for key in ("statistics", "partition-statistics"):
-        for st in metadata.get(key) or []:
-            reachable.add(os.path.abspath(st["statistics-path"]))
-    return reachable
+    return _iceberg_reach(
+        metadata.get("snapshots") or [], _stats_entries(metadata)
+    )
 
 
 def expire_iceberg_snapshots(
@@ -281,22 +291,28 @@ def expire_iceberg_snapshots(
     across snapshots via manifest reuse, so expiring an old MoR
     snapshot typically deletes just its manifest list.
 
-    The surviving metadata is written as the NEXT metadata version
-    (v{N+1}.metadata.json, hint bumped), `snapshot-log` truncated to
-    surviving snapshots and `statistics` entries of expired snapshots
-    dropped. Time travel to an expired snapshot then fails loudly in
-    the reader ("snapshot not found"). For a SnapshotTable-backed tree
+    The expiry commits as the tree's NEXT metadata version through
+    `iceberg_commit.commit_table`, under the tree's commit lock: one
+    `remove-snapshot-ref` per aged ref, then one `remove-snapshots`,
+    whose rule also drops the expired snapshots' `snapshot-log`,
+    `statistics` and `partition-statistics` entries. A commit that
+    lands between this action's load and its commit (a catalog append,
+    a property) is kept; one that pins an expiring snapshot to a ref
+    makes the rule refuse (`_Rejected`, 400) with nothing written or
+    deleted. GC runs after the commit, against the committed metadata.
+    Time travel to an expired snapshot then fails loudly in the reader
+    ("snapshot not found"). For a SnapshotTable-backed tree
     prefer `vacuum_snapshots` + re-export (the export regenerates the
     whole tree from pointer history and owns the version numbering);
     this action is for trees maintained in place.
 
     Returns the expired snapshot ids.
     """
-    from .avro_io import read_avro
-    from .iceberg_meta import load_table_metadata, write_metadata_version
+    from .iceberg_commit import commit_table
+    from .iceberg_meta import load_table_metadata
 
     meta_dir = os.path.join(root, "metadata")
-    n, metadata = load_table_metadata(meta_dir)
+    metadata = load_table_metadata(meta_dir)[1]
     snaps = sorted(
         metadata.get("snapshots") or [],
         key=lambda s: (s.get("timestamp-ms", 0), s["snapshot-id"]),
@@ -322,7 +338,6 @@ def expire_iceberg_snapshots(
         if as_of_ms - ref_ts > age_limit:
             del refs[name]
             refs_removed.append(name)
-    metadata["refs"] = refs
 
     def _ancestors(sid):
         while sid in by_id:
@@ -358,28 +373,18 @@ def expire_iceberg_snapshots(
     if not expired and not refs_removed:
         return []
     expired_ids = {s["snapshot-id"] for s in expired}
-    survivors = [s for s in snaps if s["snapshot-id"] not in expired_ids]
-
-    manifest_cache: dict[str, list[dict]] = {}
-
-    def _reach(snapshots: list[dict]) -> set[str]:
-        paths: set[str] = set()
-        for s in snapshots:
-            ml = os.path.abspath(s["manifest-list"])
-            paths.add(ml)
-            _, rows = read_avro(ml)
-            for r in rows:
-                mp = os.path.abspath(r["manifest_path"])
-                paths.add(mp)
-                if mp not in manifest_cache:
-                    _, manifest_cache[mp] = read_avro(mp)
-                for e in manifest_cache[mp]:
-                    paths.add(
-                        os.path.abspath(e["data_file"]["file_path"])
-                    )
-        return paths
-
-    keep = _reach(survivors)
+    updates = [
+        {"action": "remove-snapshot-ref", "ref-name": name}
+        for name in refs_removed
+    ]
+    if expired:
+        updates.append(
+            {"action": "remove-snapshots", "snapshot-ids": sorted(expired_ids)}
+        )
+    # commit the new metadata version FIRST (readers holding the old
+    # hint can at worst hit a missing-path error for an expired
+    # snapshot — never silently wrong data), then GC against it
+    commit_table(meta_dir, updates)
     # CROSS-FACADE SAFETY: on a dual-export (UniForm-style) root, data
     # files referenced only by expired Iceberg snapshots may still be
     # live in the sibling _delta_log — union its holdings into the
@@ -388,54 +393,12 @@ def expire_iceberg_snapshots(
     # PARENT store the facades are exported from, expiring an exported
     # tree is the owner trimming history, and `vacuum_snapshots` is
     # the SnapshotTable-side retention action.)
-    keep |= _delta_log_reachable(root)
-    drop = _reach(expired) - keep
-    # table stats AND partition stats: survivors protected, expired
-    # snapshots' artifacts dropped with their snapshots
-    surviving_by_key: dict[str, list] = {}
-    for key in ("statistics", "partition-statistics"):
-        entries = metadata.get(key) or []
-        surviving_by_key[key] = [
-            st for st in entries if st["snapshot-id"] not in expired_ids
-        ]
-        keep.update(
-            os.path.abspath(st["statistics-path"])
-            for st in surviving_by_key[key]
-        )
-        drop.update(
-            os.path.abspath(st["statistics-path"])
-            for st in entries
-            if st["snapshot-id"] in expired_ids
-        )
-    stats_entries = metadata.get("statistics") or []
-    surviving_stats = surviving_by_key["statistics"]
-    drop -= keep
-
-    metadata["snapshots"] = survivors
-    metadata["snapshot-log"] = [
-        e
-        for e in metadata.get("snapshot-log") or []
-        if e["snapshot-id"] not in expired_ids
+    keep = _iceberg_reachable(root) | _delta_log_reachable(root)
+    gone = [
+        st for st in _stats_entries(metadata) if st["snapshot-id"] in expired_ids
     ]
-    if stats_entries:
-        metadata["statistics"] = surviving_stats
-    if metadata.get("partition-statistics"):
-        metadata["partition-statistics"] = surviving_by_key[
-            "partition-statistics"
-        ]
-    prev_path = os.path.join(meta_dir, f"v{n}.metadata.json")
-    metadata.setdefault("metadata-log", []).append(
-        {
-            "timestamp-ms": metadata.get("last-updated-ms", 0),
-            "metadata-file": prev_path,
-        }
-    )
-    # commit the new metadata version FIRST (readers holding the old
-    # hint can at worst hit a missing-path error for an expired
-    # snapshot — never silently wrong data), then GC
-    write_metadata_version(meta_dir, metadata, n + 1)
     root_abs = os.path.abspath(root) + os.sep
-    for p in sorted(drop):
+    for p in sorted(_iceberg_reach(expired, gone) - keep):
         if p.startswith(root_abs) and os.path.isfile(p):
             os.remove(p)
     return sorted(expired_ids)
@@ -563,22 +526,32 @@ def rewrite_iceberg_manifests(root: str) -> dict:
     lists still reference the old manifests (time travel intact; a
     later `expire_iceberg_snapshots` GCs them).
 
+    The snapshot commits through `iceberg_commit.commit_table`, under
+    the tree's commit lock: `add-snapshot`, then `set-snapshot-ref` for
+    every branch at the old head (and `main` when the tree has no main
+    ref), each carrying an `assert-ref-snapshot-id` on the head it was
+    staged against. A commit that moved one of those branches since
+    the load makes the action refuse (`_Rejected`, 409) and leaves its
+    staged manifests for orphan cleanup; any other commit that landed
+    meanwhile (a property, a tag) is kept.
+
     Driver-side O(files) metadata work, zero data I/O — the same cost
     class as the planning walk it accelerates. Returns
     {manifests_before, manifests_after, files}.
     """
     from .avro_io import read_avro, write_avro
+    from .iceberg_commit import commit_table
     from .iceberg_meta import (
         _entry_schema,
         _manifest_list_schema,
         load_table_metadata,
+        next_row_id_of,
         plan_snapshot,
-        write_metadata_version,
     )
     from .iceberg_transforms import _PARAM_RE
 
     meta_dir = os.path.join(root, "metadata")
-    n, metadata = load_table_metadata(meta_dir)
+    metadata = load_table_metadata(meta_dir)[1]
     fv = metadata.get("format-version", 1)
     head = next(
         s
@@ -681,7 +654,7 @@ def rewrite_iceberg_manifests(root: str) -> dict:
                 }
             )
         if fv >= 3 and head.get("first-row-id") is not None:
-            row["first_row_id"] = metadata.get("next-row-id")
+            row["first_row_id"] = next_row_id_of(metadata)
         new_rows.append(row)
     new_rows += delete_rows
     list_path = os.path.join(
@@ -700,34 +673,32 @@ def rewrite_iceberg_manifests(root: str) -> dict:
         new_snap["schema-id"] = head["schema-id"]
     if fv >= 2:
         new_snap["sequence-number"] = new_seq
-        metadata["last-sequence-number"] = new_seq
     if fv >= 3:
-        new_snap["first-row-id"] = metadata.get("next-row-id")
+        new_snap["first-row-id"] = next_row_id_of(metadata)
         new_snap["added-rows"] = 0
-    metadata["snapshots"].append(new_snap)
-    metadata["current-snapshot-id"] = new_snapshot_id
-    metadata.setdefault("snapshot-log", []).append(
-        {
-            "snapshot-id": new_snapshot_id,
-            "timestamp-ms": new_snap["timestamp-ms"],
-        }
-    )
-    # refs tracking the old head follow it (the action commits to the
-    # branch, as the Spark procedure does on the current branch)
-    for ref in (metadata.get("refs") or {}).values():
-        if (
-            ref.get("type") == "branch"
-            and ref["snapshot-id"] == head["snapshot-id"]
-        ):
-            ref["snapshot-id"] = new_snapshot_id
-    metadata["last-updated-ms"] = new_snap["timestamp-ms"]
-    metadata.setdefault("metadata-log", []).append(
-        {
-            "timestamp-ms": head.get("timestamp-ms") or 0,
-            "metadata-file": os.path.join(meta_dir, f"v{n}.metadata.json"),
-        }
-    )
-    write_metadata_version(meta_dir, metadata, n + 1)
+    # branches at the old head follow it (the action commits to the
+    # branch, as the Spark procedure does on the current branch); a
+    # tree without a main ref keeps its current snapshot as `main`
+    refs = metadata.get("refs") or {}
+    moved = [
+        name
+        for name, ref in refs.items()
+        if ref.get("type", "branch") == "branch"
+        and ref["snapshot-id"] == head["snapshot-id"]
+    ] + ([] if "main" in refs else ["main"])
+    updates = [{"action": "add-snapshot", "snapshot": new_snap}]
+    requirements = []
+    for name in moved:
+        ref = refs.get(name, {})
+        updates.append(
+            {**ref, "action": "set-snapshot-ref", "ref-name": name,
+             "snapshot-id": new_snapshot_id}
+        )
+        requirements.append(
+            {"type": "assert-ref-snapshot-id", "ref": name,
+             "snapshot-id": ref.get("snapshot-id")}
+        )
+    commit_table(meta_dir, updates, requirements)
     return {
         "manifests_before": n_data,
         "manifests_after": len(by_spec),

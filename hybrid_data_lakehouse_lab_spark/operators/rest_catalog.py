@@ -69,9 +69,9 @@ carries `metadata-location`, the full `metadata` document and a
 `config` map.
 
 One rejection path: every rule that refuses a request — a requirement,
-an update action, a validator, pagination, a CRUD handler — raises a
-`_Rejected(status, type, message)` where it fails, and `_route`, the
-one entry point, renders it into the spec's
+an update action, a validator, pagination, a CRUD handler — raises an
+`iceberg_commit._Rejected(status, type, message)` where it fails, and
+`_route`, the one entry point, renders it into the spec's
 `{"error": {"message", "type", "code"}}` envelope. Only the OAuth
 endpoint answers with its own envelope (the spec's
 OAuthErrorResponse).
@@ -79,11 +79,16 @@ OAuthErrorResponse).
 The COMMIT endpoint applies the spec's `CommitTableRequest`: its
 requirements (`assert-create`, `assert-table-uuid`,
 `assert-ref-snapshot-id`, `assert-current-schema-id`,
-`assert-default-spec-id`) and update actions (`_UPDATES`: snapshots and
-refs, schema / spec / sort-order evolution, statistics, properties),
-one function per rule, as ONE optimistic-concurrency commit
-(requirement check + new metadata version + atomic hint swap,
-serialized per catalog). That is the surface a Nessie-backed catalog
+`assert-default-spec-id`) and update actions (snapshots and refs,
+schema / spec / sort-order evolution, statistics, properties), one
+function per rule in `iceberg_commit`, as ONE optimistic-concurrency
+commit (requirement check + new metadata version + atomic hint swap).
+Commits are serialized per tree, by the tree's commit lock, and the
+local writers (snapshot expiry, manifest rewrite, partition and NDV
+statistics) commit through the same rules under the same lock, so a
+commit the catalog acknowledged is never written over. The catalog's
+own lock guards only its in-memory maps (namespaces, tables, staged
+creates, views). That is the surface a Nessie-backed catalog
 adds over raw files: publish a staged snapshot to a branch (the WAP
 fast-forward), roll a branch back, tag a snapshot, annotate. DATA stays
 with the writers — `add-snapshot` is validated to reference an
@@ -120,6 +125,14 @@ import uuid
 from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from .iceberg_commit import (
+    _bad,
+    _Rejected,
+    _stale,
+    commit_lock,
+    commit_trees,
+    table_edit,
+)
 from .util import atomic_open
 
 UNIT_SEP = "\x1f"  # spec: multipart namespace separator in URL paths
@@ -140,37 +153,6 @@ def _result(loc: str | None, md: dict, **extra) -> tuple[int, bytes]:
     return 200, _json({"metadata-location": loc, "metadata": md, **extra})
 
 
-class _Rejected(Exception):
-    """A refused request: the HTTP status, the spec exception type and
-    the message. Raised by the rule that refuses; rendered once, by
-    `IcebergRestCatalog._route` (and the HTTP handler's JSON-decode and
-    500 branches), into the IcebergErrorResponse envelope."""
-
-    def __init__(self, code: int, typ: str, message: str):
-        super().__init__(message)
-        self.code, self.type = code, typ
-
-    def response(self) -> tuple[int, bytes]:
-        return self.code, _json(
-            {
-                "error": {
-                    "message": str(self),
-                    "type": self.type,
-                    "code": self.code,
-                }
-            }
-        )
-
-
-def _bad(message: str) -> _Rejected:
-    return _Rejected(400, "BadRequestException", message)
-
-
-def _stale(message: str) -> _Rejected:
-    """409: the client re-loads and retries (a lost optimistic race)."""
-    return _Rejected(409, "CommitFailedException", message)
-
-
 def _missing(kind: str, ident: tuple[str, ...]) -> _Rejected:
     """404 for a Namespace / Table / View."""
     return _Rejected(
@@ -186,485 +168,6 @@ def _exists(what: str, ident: tuple[str, ...]) -> _Rejected:
         "AlreadyExistsException",
         f"{what} already exists: {'.'.join(ident)}",
     )
-
-
-# -- commit rules: one function per requirement type / update action --
-
-
-class _Commit:
-    """One CommitTableRequest being applied to `md` in memory: the
-    table's identifier, its refs and snapshot ids as the commit moves
-    them, and the ids this commit's own add-schema / add-spec /
-    add-sort-order produced (what the spec's `-1` names)."""
-
-    def __init__(self, ident: tuple[str, ...], md: dict):
-        self.ident, self.md = ident, md
-        self.refs = md.setdefault("refs", {})
-        self.snap_ids = {s["snapshot-id"] for s in md.get("snapshots") or []}
-        self.added: dict[str, int] = {}
-
-
-def _check_and_apply(ident: tuple[str, ...], md: dict, req: dict) -> None:
-    """Validate `req`'s requirements against `md` and apply its updates
-    in place, raising `_Rejected` at the first failure (callers discard
-    the partially-mutated md). Pure in-memory — nothing is written — so
-    a multi-table transaction can validate EVERY change before
-    persisting any (the protocol's commitTransaction atomicity)."""
-    c = _Commit(ident, md)
-    for r in req.get("requirements") or []:
-        rule = _REQUIREMENTS.get(r.get("type"))
-        if rule is None:
-            raise _bad(f"unsupported requirement type {r.get('type')!r}")
-        rule(c, r)
-    for u in req.get("updates") or []:
-        rule = _UPDATES.get(u.get("action"))
-        if rule is None:
-            raise _bad(f"unsupported update action {u.get('action')!r}")
-        rule(c, u)
-
-
-def _assert_create(c: _Commit, r: dict) -> None:
-    # reaching a commit means the table exists (the staged-materialize
-    # path strips assert-create)
-    raise _stale(
-        f"assert-create failed: table {'.'.join(c.ident)} already exists"
-    )
-
-
-def _assert_equal(
-    c: _Commit, r: dict, md_key: str, req_key: str, label: str, default=None
-) -> None:
-    have = c.md.get(md_key, default)
-    if have != r.get(req_key):
-        raise _stale(
-            f"{label} is {have}, requirement expected {r.get(req_key)}"
-        )
-
-
-def _assert_ref_snapshot_id(c: _Commit, r: dict) -> None:
-    cur = c.refs.get(r.get("ref"))
-    cur_id = cur["snapshot-id"] if cur else None
-    if cur_id != r.get("snapshot-id"):
-        raise _stale(
-            f"ref {r.get('ref')!r} is at {cur_id}, "
-            f"requirement expected {r.get('snapshot-id')}"
-        )
-
-
-_REQUIREMENTS = {
-    "assert-create": _assert_create,
-    "assert-table-uuid": partial(
-        _assert_equal, md_key="table-uuid", req_key="uuid", label="table uuid"
-    ),
-    "assert-ref-snapshot-id": _assert_ref_snapshot_id,
-    "assert-current-schema-id": partial(
-        _assert_equal,
-        md_key="current-schema-id",
-        req_key="current-schema-id",
-        label="current schema id",
-    ),
-    "assert-default-spec-id": partial(
-        _assert_equal,
-        md_key="default-spec-id",
-        req_key="default-spec-id",
-        label="default spec id",
-        default=0,
-    ),
-}
-
-
-def _add_snapshot(c: _Commit, u: dict) -> None:
-    s, md = u["snapshot"], c.md
-    ml = s.get("manifest-list")
-    if not (ml and os.path.isfile(ml)):
-        raise _bad(
-            f"add-snapshot manifest-list not found: {ml}"
-            " (stage files before the pointer commit)"
-        )
-    if s["snapshot-id"] in c.snap_ids:
-        raise _bad(f"snapshot {s['snapshot-id']} already exists")
-    version = md.get("format-version", 1)
-    if version >= 3:
-        # v3 row lineage. A snapshot without BOTH lineage fields is
-        # malformed — accepting it would leave next-row-id unadvanced
-        # and let the NEXT commit hand out the same _row_id range again.
-        if s.get("first-row-id") is None or s.get("added-rows") is None:
-            raise _bad(
-                "v3 add-snapshot requires first-row-id and added-rows (row "
-                "lineage is mandatory in format-version 3)"
-            )
-        # the writer staged explicit first_row_ids from the metadata it
-        # loaded; a stale cursor means another commit advanced the
-        # lineage since — the same re-stage retry as a lost ref race,
-        # so the same 409. next_row_id_of is the SAME derivation the
-        # stager uses (registered external trees may lack the explicit
-        # next-row-id field).
-        from .iceberg_meta import next_row_id_of
-
-        nri = next_row_id_of(md)
-        if int(s["first-row-id"]) != nri:
-            raise _stale(
-                "add-snapshot staged row lineage at "
-                f"first-row-id={s.get('first-row-id')} but the table's "
-                f"next-row-id is {nri}; re-stage against fresh metadata"
-            )
-        md["next-row-id"] = nri + int(s["added-rows"])
-    if version >= 2:
-        # a data file inherits its snapshot's sequence number; a child
-        # snapshot staged against older metadata would carry one that
-        # deletes committed since already cover, masking its rows
-        last = md.get("last-sequence-number") or 0
-        seq = s.get("sequence-number")
-        if (
-            seq is not None
-            and s.get("parent-snapshot-id") is not None
-            and seq <= last
-        ):
-            raise _stale(
-                f"add-snapshot sequence-number {seq} is not newer than the "
-                f"table's last-sequence-number {last}; re-stage against "
-                "fresh metadata"
-            )
-        md["last-sequence-number"] = max(last, seq or 0)
-    md.setdefault("snapshots", []).append(s)
-    c.snap_ids.add(s["snapshot-id"])
-
-
-def _set_snapshot_ref(c: _Commit, u: dict) -> None:
-    name, sid = u["ref-name"], u["snapshot-id"]
-    if sid not in c.snap_ids:
-        raise _bad(f"set-snapshot-ref to unknown snapshot {sid}")
-    ref = c.refs[name] = {"snapshot-id": sid, "type": u.get("type", "branch")}
-    # spec SetSnapshotRefUpdate retention fields — honored by
-    # expire_iceberg_snapshots' per-ref retention
-    for k in (
-        "min-snapshots-to-keep",
-        "max-snapshot-age-ms",
-        "max-ref-age-ms",
-    ):
-        if u.get(k) is not None:
-            ref[k] = int(u[k])
-    if name == "main":
-        # main moves = the table's current snapshot moves; the
-        # snapshot-log records it (forward publish and backward
-        # rollback both append — Iceberg RESTORE semantics, monotonic
-        # log)
-        c.md["current-snapshot-id"] = sid
-        c.md.setdefault("snapshot-log", []).append(
-            {
-                "snapshot-id": sid,
-                "timestamp-ms": (c.md.get("last-updated-ms") or 0) + 1,
-            }
-        )
-
-
-def _remove_snapshot_ref(c: _Commit, u: dict) -> None:
-    if u.get("ref-name") == "main":
-        raise _bad("cannot remove the main branch ref")
-    c.refs.pop(u.get("ref-name"), None)
-
-
-def _remove_snapshots(c: _Commit, u: dict) -> None:
-    ids = set(u.get("snapshot-ids") or [])
-    if not ids:
-        raise _bad("remove-snapshots needs snapshot-ids")
-    missing = ids - c.snap_ids
-    if missing:
-        raise _bad(f"remove-snapshots: unknown {sorted(missing)}")
-    pinned = {r["snapshot-id"] for r in c.refs.values()}
-    held = ids & (pinned | {c.md.get("current-snapshot-id")})
-    if held:
-        raise _bad(
-            f"remove-snapshots: {sorted(held)} still referenced by a ref "
-            "or the current snapshot"
-        )
-    c.snap_ids -= ids
-    c.md["snapshots"] = [
-        s for s in c.md.get("snapshots") or [] if s["snapshot-id"] not in ids
-    ]
-    # their log and stats entries go with them
-    for key in ("snapshot-log", "statistics", "partition-statistics"):
-        if key == "snapshot-log" or c.md.get(key):
-            c.md[key] = [
-                e
-                for e in c.md.get(key) or []
-                if e.get("snapshot-id") not in ids
-            ]
-
-
-def _set_statistics(c: _Commit, u: dict, key: str, ordered: bool) -> None:
-    """set-statistics / set-partition-statistics: register a statistics
-    file for ONE snapshot (replaces that snapshot's prior entry)."""
-    st = u.get(key) or {}
-    sid = st.get("snapshot-id")
-    if sid is None or not st.get("statistics-path"):
-        raise _bad(
-            f"{u['action']} needs {key} with snapshot-id + statistics-path"
-        )
-    if sid not in c.snap_ids:
-        raise _bad(f"{u['action']} for unknown snapshot {sid}")
-    entries = [e for e in c.md.get(key) or [] if e.get("snapshot-id") != sid]
-    entries.append(st)
-    if ordered:
-        entries.sort(key=lambda e: e["snapshot-id"])
-    c.md[key] = entries
-
-
-def _remove_statistics(c: _Commit, u: dict, key: str) -> None:
-    c.md[key] = [
-        e
-        for e in c.md.get(key) or []
-        if e.get("snapshot-id") != u.get("snapshot-id")
-    ]
-
-
-def _set_properties(c: _Commit, u: dict) -> None:
-    c.md.setdefault("properties", {}).update(u.get("updates") or {})
-
-
-def _remove_properties(c: _Commit, u: dict) -> None:
-    for k in u.get("removals") or []:
-        (c.md.get("properties") or {}).pop(k, None)
-
-
-# set-current-schema / set-default-spec / set-default-sort-order:
-# (request key, metadata key, listing, listing id key, add action, noun)
-_DEFAULTS = {
-    "set-current-schema": (
-        "schema-id", "current-schema-id", "schemas", "schema-id", "add-schema",
-        "schema",
-    ),
-    "set-default-spec": (
-        "spec-id", "default-spec-id", "partition-specs", "spec-id", "add-spec",
-        "spec",
-    ),
-    "set-default-sort-order": (
-        "sort-order-id", "default-sort-order-id", "sort-orders", "order-id",
-        "add-sort-order", "order",
-    ),
-}
-
-
-def _set_default(c: _Commit, u: dict) -> None:
-    """Point the metadata's current schema / default spec / default
-    sort order at a known entry; the spec's -1 means the entry this
-    commit's own add-<x> produced."""
-    req_key, md_key, listing, id_key, add, noun = _DEFAULTS[u["action"]]
-    want = u.get(req_key)
-    if want == -1:
-        want = c.added.get(add)
-        if want is None:
-            raise _bad(
-                f"{u['action']} -1 without a preceding {add} in this commit"
-            )
-    known = {e[id_key]: e for e in c.md.get(listing) or []}
-    if want not in known:
-        raise _bad(f"{u['action']} to unknown {noun} {want}")
-    c.md[md_key] = want
-    if noun == "schema":
-        # keep the v1-compat top-level schema in lockstep: the
-        # readers/writers here (and real v1 consumers) look at
-        # metadata["schema"]
-        c.md["schema"] = known[want]
-
-
-# -- schema / spec / sort-order evolution validators (add-* actions) --
-
-
-def _add_schema(c: _Commit, u: dict) -> None:
-    """Validate + append an add-schema update. Evolution rules the
-    Iceberg spec fixes: field ids are FOREVER (an id reused for a
-    different column corrupts per-file resolution), renames keep the
-    id, type changes must follow the promotion lattice (int->long,
-    float->double, decimal widening), new fields take fresh ids past
-    last-column-id. The name-mapping property gains renamed fields'
-    aliases and new fields' entries so id-less files keep resolving."""
-    from .iceberg_meta import _promotion_ok
-
-    md = c.md
-    fields = (u.get("schema") or {}).get("fields")
-    if not fields:
-        raise _bad("add-schema needs fields")
-    ids = [f.get("id") for f in fields]
-    if not all(ids) or len(set(ids)) != len(ids):
-        raise _bad(f"add-schema fields need unique ids: {ids}")
-    names = [f.get("name") for f in fields]
-    if not all(names) or len(set(names)) != len(names):
-        raise _bad(f"add-schema fields need unique names: {names}")
-    last_col = md.get("last-column-id") or 0
-    cur_fields = {
-        f["id"]: f for f in (md.get("schema") or {}).get("fields") or []
-    }
-    for f in fields:
-        old = cur_fields.get(f["id"])
-        if old is None:
-            if f["id"] <= last_col:
-                raise _bad(
-                    f"field id {f['id']} ({f.get('name')!r}) reuses a "
-                    f"retired id (last-column-id={last_col}); new columns "
-                    "need fresh ids"
-                )
-            if f.get("required", False) and not (
-                md.get("format-version", 1) >= 3
-                and f.get("initial-default") is not None
-            ):
-                # spec: existing files have no value for a brand-new
-                # column, so it cannot be required — unless v3 with an
-                # initial-default to materialize for old rows
-                raise _bad(
-                    f"new field {f['id']} ({f.get('name')!r}) cannot be "
-                    "required; existing files hold no value (v3 "
-                    "initial-default would be needed)"
-                )
-        elif not _promotion_ok(old["type"], f["type"]):
-            raise _bad(
-                f"field {f['id']} type change {old['type']} -> {f['type']} "
-                "is not a legal promotion"
-            )
-        elif not old.get("required", False) and f.get("required", False):
-            # spec: an optional column can never become required —
-            # existing files may hold nulls the new schema forbids
-            raise _bad(
-                f"field {f['id']} ({f.get('name')!r}) cannot go optional -> "
-                "required; existing data may be null"
-            )
-    schemas = md.setdefault("schemas", [])
-    new_id = max((s["schema-id"] for s in schemas), default=-1) + 1
-    schemas.append({"type": "struct", "schema-id": new_id, "fields": fields})
-    md["last-column-id"] = max(last_col, max(ids))
-    # name-mapping upkeep (same dedupe rule as the exporter); the
-    # CURRENT names go first (a pre-mapping table or a registered
-    # external tree may lack entries), so a rename in this very commit
-    # records old AND new aliases
-    props = md.setdefault("properties", {})
-    mapping = json.loads(props.get("schema.name-mapping.default") or "[]")
-    by_id = {m["field-id"]: m for m in mapping}
-    for f in [*cur_fields.values(), *fields]:
-        m = by_id.get(f["id"])
-        if m is None:
-            m = by_id[f["id"]] = {"field-id": f["id"], "names": [f["name"]]}
-            mapping.append(m)
-        elif f["name"] not in m["names"]:
-            m["names"].append(f["name"])
-    props["schema.name-mapping.default"] = json.dumps(mapping)
-    c.added["add-schema"] = new_id
-
-
-def _add_sort_order(c: _Commit, u: dict) -> None:
-    """Validate + append an add-sort-order update (ALTER TABLE ...
-    WRITE ORDERED BY over the protocol). Fields must reference live
-    schema field ids with identity transforms (the transforms this
-    engine writes), direction asc|desc, null-order
-    nulls-first|nulls-last. Identical field lists reuse the existing
-    order id (the exporter's dedupe rule)."""
-    fields = (u.get("sort-order") or {}).get("fields")
-    if fields is None:
-        raise _bad("add-sort-order needs fields")
-    live_ids = {
-        f["id"]
-        for sch in c.md.get("schemas") or [c.md.get("schema")]
-        for f in (sch or {}).get("fields") or []
-    }
-    for f in fields:
-        if f.get("source-id") not in live_ids:
-            raise _bad(
-                "sort field references unknown source-id "
-                f"{f.get('source-id')}"
-            )
-        if f.get("direction") not in ("asc", "desc"):
-            raise _bad(f"sort direction {f.get('direction')!r} (asc|desc)")
-        if f.get("null-order") not in ("nulls-first", "nulls-last"):
-            raise _bad(
-                f"null-order {f.get('null-order')!r} (nulls-first|nulls-last)"
-            )
-    orders = c.md.setdefault("sort-orders", [{"order-id": 0, "fields": []}])
-    key = json.dumps(fields, sort_keys=True)
-    same = [
-        o["order-id"]
-        for o in orders
-        if json.dumps(o["fields"], sort_keys=True) == key
-    ]
-    if same:
-        oid = same[0]
-    else:
-        oid = max(o["order-id"] for o in orders) + 1
-        orders.append({"order-id": oid, "fields": list(fields)})
-    c.added["add-sort-order"] = oid
-
-
-_TRANSFORMS = {
-    "identity", "bucket", "truncate", "year", "month", "day", "hour", "void",
-}
-
-
-def _add_spec(c: _Commit, u: dict) -> None:
-    """Validate + append an add-spec update: source ids must be live
-    columns of the current schema, transforms limited to what the
-    reader resolves; partition field ids assigned past
-    last-partition-id when absent."""
-    md = c.md
-    pfields = (u.get("spec") or {}).get("fields")
-    if pfields is None:
-        raise _bad("add-spec needs fields")
-    cur_ids = {f["id"] for f in (md.get("schema") or {}).get("fields") or []}
-    last_pid = md.get("last-partition-id") or 999
-    out = []
-    for pf in pfields:
-        tr = (pf.get("transform") or "identity").split("[")[0]
-        if tr not in _TRANSFORMS:
-            raise _bad(
-                f"unsupported partition transform {pf.get('transform')!r}"
-            )
-        if pf.get("source-id") not in cur_ids:
-            raise _bad(
-                f"add-spec source-id {pf.get('source-id')} is not a current "
-                "schema column"
-            )
-        if not pf.get("name"):
-            raise _bad(f"spec field needs name: {pf}")
-        fid = pf.get("field-id")
-        if fid is None:
-            last_pid += 1
-            fid = last_pid
-        out.append(
-            {
-                "source-id": pf["source-id"],
-                "field-id": fid,
-                "name": pf["name"],
-                "transform": pf.get("transform", "identity"),
-            }
-        )
-    specs = md.setdefault("partition-specs", [])
-    new_id = max((s["spec-id"] for s in specs), default=-1) + 1
-    specs.append({"spec-id": new_id, "fields": out})
-    md["last-partition-id"] = max(last_pid, *(f["field-id"] for f in out), 999)
-    c.added["add-spec"] = new_id
-
-
-_UPDATES = {
-    "add-snapshot": _add_snapshot,
-    "set-snapshot-ref": _set_snapshot_ref,
-    "remove-snapshot-ref": _remove_snapshot_ref,
-    "add-schema": _add_schema,
-    "set-current-schema": _set_default,
-    "add-spec": _add_spec,
-    "set-default-spec": _set_default,
-    "add-sort-order": _add_sort_order,
-    "set-default-sort-order": _set_default,
-    "remove-snapshots": _remove_snapshots,
-    "set-statistics": partial(
-        _set_statistics, key="statistics", ordered=False
-    ),
-    "remove-statistics": partial(_remove_statistics, key="statistics"),
-    "set-partition-statistics": partial(
-        _set_statistics, key="partition-statistics", ordered=True
-    ),
-    "remove-partition-statistics": partial(
-        _remove_statistics, key="partition-statistics"
-    ),
-    "set-properties": _set_properties,
-    "remove-properties": _remove_properties,
-}
 
 
 def _paged(query: dict, key: str, items: list) -> tuple[int, bytes]:
@@ -738,99 +241,72 @@ class IcebergRestCatalog:
         self._views: dict[tuple[str, ...], str] = {}
         self._server: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
-        # commits are optimistic-concurrency: requirement check + new
-        # metadata version + atomic hint swap, serialized catalog-wide
-        # (one lock — commits are O(KB) JSON, contention is never the
-        # bottleneck; data I/O happens before the commit, outside it)
+        # guards the in-memory maps above; commits themselves are
+        # serialized per tree by `iceberg_commit`'s lock, which local
+        # writers take too
         self._commit_lock = threading.Lock()
 
     # -- metadata resolution (request time: commits become visible) --
 
     def _load(self, ident: tuple[str, ...]) -> tuple[str, dict]:
-        return self._load_versioned(ident)[:2]
-
-    def _load_versioned(
-        self, ident: tuple[str, ...]
-    ) -> tuple[str, dict, int]:
-        """Current metadata location, parsed metadata, hint version."""
+        """Current metadata location and parsed metadata."""
         from .iceberg_meta import load_table_metadata
 
         meta_dir = os.path.join(self._tables[ident], "metadata")
         n, md = load_table_metadata(meta_dir)
-        return os.path.join(meta_dir, f"v{n}.metadata.json"), md, n
+        return os.path.join(meta_dir, f"v{n}.metadata.json"), md
 
-    # -- commits (optimistic concurrency) --
+    def _meta_dir(self, ident: tuple[str, ...]) -> str:
+        """A registered table's metadata dir (404 when it is not, e.g.
+        after a racing DELETE)."""
+        with self._commit_lock:
+            root = self._tables.get(ident)
+        if root is None:
+            raise _missing("Table", ident)
+        return os.path.join(root, "metadata")
+
+    # -- commits (optimistic concurrency, one per tree lock) --
 
     def _commit(self, ident: tuple[str, ...], req: dict) -> tuple[int, bytes]:
-        with self._commit_lock:
-            if ident not in self._tables:  # raced with a DELETE
-                raise _missing("Table", ident)
-            loc, md, n = self._load_versioned(ident)
-            _check_and_apply(ident, md, req)
-            self._finalize_metadata(md, loc)
-            return _result(self._write_metadata(ident, md, n), md)
-
-    @staticmethod
-    def _finalize_metadata(md: dict, loc: str) -> None:
-        """ONE last-updated bump + metadata-log entry per written
-        version — kept out of _check_and_apply so a transaction that
-        chains several changes for one table doesn't log phantom
-        versions."""
-        md["last-updated-ms"] = (md.get("last-updated-ms") or 0) + 1
-        md.setdefault("metadata-log", []).append(
-            {"timestamp-ms": md["last-updated-ms"], "metadata-file": loc}
-        )
-
-    def _write_metadata(
-        self, ident: tuple[str, ...], md: dict, n: int
-    ) -> str:
-        """Persist md as version n + 1 (n: the version it was loaded
-        from, under the commit lock this runs in) and swap the hint
-        atomically."""
-        from .iceberg_meta import write_metadata_version
-
-        meta_dir = os.path.join(self._tables[ident], "metadata")
-        return write_metadata_version(meta_dir, md, n + 1)
+        d = self._meta_dir(ident)
+        return _result(*commit_trees({d: table_edit(ident, [req])})[d])
 
     def _commit_transaction(self, body: dict) -> tuple[int, bytes]:
         """POST /v1/transactions/commit — the protocol's multi-table
         atomic commit (CommitTransactionRequest). Every change's
         requirements are validated and its updates applied IN MEMORY
-        first; only when all of them succeed does any metadata file get
-        written, so a single failing requirement rejects the whole
-        transaction with nothing changed (the atomicity the spec
-        promises, and what a pipeline committing fact + rollup tables
-        together needs). Two changes naming the same table chain: the
-        second sees the first's in-memory result. 204 on success."""
+        first, under every named tree's lock; only when all of them
+        succeed does any metadata file get written, so a single failing
+        requirement rejects the whole transaction with nothing changed
+        (the atomicity the spec promises, and what a pipeline committing
+        fact + rollup tables together needs). Two changes naming the
+        same table chain: the second sees the first's in-memory result.
+        204 on success."""
         changes = body.get("table-changes") or []
         if not changes:
             raise _bad("commitTransaction requires table-changes")
-        with self._commit_lock:
-            loaded: dict[tuple[str, ...], tuple[str, dict, int]] = {}
-            for ch in changes:
-                tid = ch.get("identifier") or {}
-                ident = (*tuple(tid.get("namespace") or ()), tid.get("name"))
-                if ident[-1] is None or len(ident) < 2:
-                    raise _bad(
-                        "each table-change needs an identifier with "
-                        "namespace and name"
-                    )
-                if ident not in self._tables:
-                    raise _missing("Table", ident)
-                if ident not in loaded:
-                    loaded[ident] = self._load_versioned(ident)
-                _check_and_apply(ident, loaded[ident][1], ch)
-            for ident, (loc, md, n) in loaded.items():
-                self._finalize_metadata(md, loc)
-                self._write_metadata(ident, md, n)
-            return 204, b""
+        requests: dict[str, tuple[tuple[str, ...], list[dict]]] = {}
+        for ch in changes:
+            tid = ch.get("identifier") or {}
+            ident = (*tuple(tid.get("namespace") or ()), tid.get("name"))
+            if ident[-1] is None or len(ident) < 2:
+                raise _bad(
+                    "each table-change needs an identifier with "
+                    "namespace and name"
+                )
+            meta_dir = self._meta_dir(ident)
+            requests.setdefault(meta_dir, (ident, []))[1].append(ch)
+        commit_trees(
+            {d: table_edit(*ident_reqs) for d, ident_reqs in requests.items()}
+        )
+        return 204, b""
 
     def _finalize_staged(
         self, ident: tuple[str, ...], body: dict
     ) -> tuple[int, bytes]:
         """CTAS finalize: assert-create materializes the staged tree as
         the table, then the commit's updates (add-snapshot +
-        set-snapshot-ref) land on it atomically under the commit lock.
+        set-snapshot-ref) land on it as one commit under its tree lock.
         With several trees staged under one name, the committer's
         assert-table-uuid picks ITS tree."""
         reqs = body.get("requirements") or []
@@ -924,13 +400,19 @@ class IcebergRestCatalog:
 
     def _drop_namespace(self, ns: tuple[str, ...]) -> tuple[int, bytes]:
         with self._commit_lock:
-            held = [i for i in (*self._tables, *self._views) if i[:-1] == ns]
+            # a staged create holds its namespace too: its finalize
+            # would otherwise register a table in a dropped namespace
+            held = [
+                i
+                for i in (*self._tables, *self._views, *self._staged)
+                if i[:-1] == ns
+            ]
             if held:
                 raise _Rejected(
                     409,
                     "NamespaceNotEmptyException",
                     f"Namespace {'.'.join(ns)} holds "
-                    f"{len(held)} table(s)/view(s)",
+                    f"{len(held)} table(s)/view(s)/staged create(s)",
                 )
             self._namespaces.pop(ns, None)
             return 204, b""
@@ -1028,13 +510,14 @@ class IcebergRestCatalog:
             # version when it is ahead of (or there is) no hint — never
             # move an existing hint backwards.
             hint_path = os.path.join(meta_dir, "version-hint.text")
-            current = None
-            if os.path.isfile(hint_path):
-                with open(hint_path) as fh:
-                    current = int(fh.read().strip())
-            if current is None or current < version:
-                with atomic_open(hint_path, "w") as fh:
-                    fh.write(str(version))
+            with commit_lock(meta_dir):
+                current = None
+                if os.path.isfile(hint_path):
+                    with open(hint_path) as fh:
+                        current = int(fh.read().strip())
+                if current is None or current < version:
+                    with atomic_open(hint_path, "w") as fh:
+                        fh.write(str(version))
             self._tables[ident] = os.path.dirname(meta_dir)
             self._namespaces.setdefault(ns, {})
             return _result(*self._load(ident), config={})
@@ -1049,7 +532,9 @@ class IcebergRestCatalog:
             if root is None:  # raced with another DELETE
                 raise _missing("Table", ident)
             if purge:
-                shutil.rmtree(root, ignore_errors=True)
+                # after any commit in flight on the tree
+                with commit_lock(os.path.join(root, "metadata")):
+                    shutil.rmtree(root, ignore_errors=True)
             return 204, b""
 
     def _rename(self, body: dict, kind: str) -> tuple[int, bytes]:
@@ -1077,7 +562,7 @@ class IcebergRestCatalog:
     def _create_view(
         self, ns: tuple[str, ...], body: dict
     ) -> tuple[int, bytes]:
-        from .iceberg_view import create_view_metadata, write_view_tree
+        from .iceberg_view import create_view_metadata
 
         name = body.get("name")
         if not name:
@@ -1105,7 +590,8 @@ class IcebergRestCatalog:
             )
             # extra dialect representations ride along verbatim
             md["versions"][0]["representations"] = reps
-            loc = write_view_tree(root, md)
+            meta_dir = os.path.join(root, "metadata")
+            loc = commit_trees({meta_dir: lambda _md, _loc: md})[meta_dir][0]
             self._namespaces.setdefault(ns, {})
             self._views[ident] = root
             return _result(loc, md)
@@ -1113,25 +599,25 @@ class IcebergRestCatalog:
     def _commit_view(
         self, ident: tuple[str, ...], req: dict
     ) -> tuple[int, bytes]:
-        from .iceberg_view import (
-            apply_view_commit,
-            load_view_tree,
-            write_view_tree,
-        )
+        from .iceberg_view import apply_view_commit
 
         with self._commit_lock:
             # re-check under the lock: the existence probe in _route ran
             # outside it, so a concurrent DELETE could have won the race
             root = self._views.get(ident)
-            if root is None:
-                raise _missing("View", ident)
-            _loc, md = load_view_tree(root)
+        if root is None:
+            raise _missing("View", ident)
+
+        def edit(md: dict, _loc: str) -> dict:
             # apply_view_commit's public contract: (status, message)
             refused = apply_view_commit(md, req)
             if refused:
                 code, msg = refused
                 raise _stale(msg) if code == 409 else _bad(msg)
-            return _result(write_view_tree(root, md), md)
+            return md
+
+        meta_dir = os.path.join(root, "metadata")
+        return _result(*commit_trees({meta_dir: edit})[meta_dir])
 
     # -- OAuth (the spec's own error envelope) --
 

@@ -52,7 +52,6 @@ swap left.
 
 from __future__ import annotations
 
-import fcntl
 import json
 import os
 import shutil
@@ -63,7 +62,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .util import atomic_open, read_parquet
+from .util import atomic_open, locked, read_parquet
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -204,8 +203,7 @@ class SnapshotTable:
         storage this role belongs to the catalog service (Nessie, a
         DynamoDB lock, Hive metastore), which is exactly what the
         reference's Nessie REST catalog provides."""
-        with open(os.path.join(self.root, ".manifest.lock"), "w") as lf:
-            fcntl.flock(lf, fcntl.LOCK_EX)
+        with locked(os.path.join(self.root, ".manifest.lock")):
             m = fn(self._load_manifest())
             if m is not None:
                 with atomic_open(os.path.join(self.root, MANIFEST), "w") as f:

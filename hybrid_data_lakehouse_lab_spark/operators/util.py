@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import glob
 import json
 import os
@@ -83,6 +84,19 @@ def atomic_open(path: str, mode: str = "wb"):
         with contextlib.suppress(FileNotFoundError):
             os.remove(tmp)
         raise
+
+
+@contextlib.contextmanager
+def locked(path: str):
+    """Hold an exclusive flock on `path` (created if missing) for the
+    block: the lock a `SnapshotTable` manifest (`.manifest.lock`) and an
+    Iceberg metadata tree (`metadata/.commit.lock`) are committed under.
+    flock locks per open file description, so it serializes the threads
+    of one process as well as processes on one node; a block that takes
+    the same lock again waits forever."""
+    with open(path, "w") as fh:
+        fcntl.flock(fh, fcntl.LOCK_EX)
+        yield
 
 
 def read_parquet(spark, schema, *paths) -> DataFrame:

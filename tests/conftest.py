@@ -61,16 +61,17 @@ def before_manifest_lock(monkeypatch):
     competing commit between a mutation's start and its swap. `fn` runs
     before the lock is taken, never while it is held: flock locks per
     open file description, so a nested commit under the lock in the
-    same process would block forever."""
-    from hybrid_data_lakehouse_lab_spark.operators import timetravel
+    same process would block forever. Other locks taken through
+    `util.locked` (an Iceberg tree's commit lock) do not trigger it."""
+    from hybrid_data_lakehouse_lab_spark.operators import util
 
-    real = timetravel.fcntl.flock
+    real = util.fcntl.flock
     pending: list = []
 
-    def flock(fd, op):
-        if pending:
+    def flock(fh, op):
+        if pending and fh.name.endswith(".manifest.lock"):
             pending.pop()()
-        return real(fd, op)
+        return real(fh, op)
 
-    monkeypatch.setattr(timetravel.fcntl, "flock", flock)
+    monkeypatch.setattr(util.fcntl, "flock", flock)
     return pending.append

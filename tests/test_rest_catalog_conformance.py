@@ -198,7 +198,8 @@ BAD, STALE = "BadRequestException", "CommitFailedException"
 SORT = {"source-id": 1, "transform": "identity"}
 
 # over a catalog seeded with namespace `ns`, empty tables `ns.t` (v2)
-# and `ns.t3` (v3), view `ns.v` and two staged creates of `ns.staged`.
+# and `ns.t3` (v3), view `ns.v` and two staged creates of `ns.staged`,
+# and namespace `stg`, which holds only a staged create `stg.s`.
 # Every row is refused, so none changes the shared fixture.
 ENVELOPE_TABLE = [
     _row("GET", "/v1/nope", None, 404, "NoSuchEndpointException"),
@@ -232,6 +233,8 @@ ENVELOPE_TABLE = [
         "AlreadyExistsException",
     ),
     _row("DELETE", "/v1/namespaces/ns", None, 409, "NamespaceNotEmptyException"),
+    _row("DELETE", "/v1/namespaces/stg", None, 409,
+         "NamespaceNotEmptyException", "only a staged create"),
     _row(
         "POST",
         "/v1/namespaces/ns/tables",
@@ -573,6 +576,8 @@ def conformance_catalog(tmp_path_factory, request):
     )
     for _ in range(2):
         rest_stage_create_table(uri, ["ns"], "staged", fields)
+    rest_create_namespace(uri, ["stg"])
+    rest_stage_create_table(uri, ["stg"], "s", fields)
     code, _ = _raw(
         f"{uri}/v1/namespaces/ns/views",
         "POST",

@@ -189,7 +189,7 @@ def test_iceberg_statistics_roundtrip(spark, tmp_path):
     assert got["g"]["estimate"] == 5.0
     assert abs(got["id"]["estimate"] - 15_000) / 15_000 < 5.0 / (4096**0.5)
     assert set(est) == {"id", "cat", "g"}
-    md = json.load(open(os.path.join(t.root, "metadata", "v2.metadata.json")))
+    md = load_table_metadata(os.path.join(t.root, "metadata"))[1]
     (st,) = md["statistics"]
     assert st["snapshot-id"] == md["current-snapshot-id"]
     assert os.path.getsize(st["statistics-path"]) == st["file-size-in-bytes"]
