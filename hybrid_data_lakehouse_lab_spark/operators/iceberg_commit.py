@@ -23,14 +23,21 @@ with its own `last-updated-ms`, the exporter's rule). `commit_table`
 commits one table with it; the catalog's multi-table transactions
 hand one per tree to `commit_trees`.
 
-Writers that commit here: the REST catalog (table commits,
-multi-table transactions, CTAS finalize, view create and commit),
+`create_tree` commits v1 of a new table the same way: a fresh
+document, the update actions that give it its spec, properties and
+(on a migration) its first snapshot, refused with FileExistsError when
+the tree already has a version.
+
+Writers that commit here: the REST catalog (table create, table
+commits, multi-table transactions, CTAS finalize, view create and
+commit), `iceberg_meta.create_iceberg_table`,
+`iceberg_meta.migrate_parquet_dir`,
 `maintenance.expire_iceberg_snapshots`,
 `maintenance.rewrite_iceberg_manifests`,
 `iceberg_pstats.write_partition_stats` and
-`iceberg_meta.export_iceberg_statistics`. The exporter's full
-regeneration (`export_iceberg_metadata`) and table creation write
-their own versions, the exporter under the same lock.
+`iceberg_meta.export_iceberg_statistics`. Only the exporter's full
+regeneration (`export_iceberg_metadata`) writes its own versions, under
+the same lock.
 
 The flock serializes writers on one node. On shared object storage
 that role belongs to a catalog service, which is what the reference's
@@ -46,10 +53,12 @@ from functools import partial
 
 from .iceberg_meta import (
     _promotion_ok,
+    check_field_type,
     load_table_metadata,
     next_row_id_of,
     write_metadata_version,
 )
+from .iceberg_transforms import known_transform
 from .util import locked
 
 
@@ -99,8 +108,15 @@ def _check_and_apply(ident: tuple[str, ...], md: dict, req: dict) -> None:
     in place, raising `_Rejected` at the first failure (the commit then
     writes nothing). Pure in-memory, so a multi-table transaction
     validates EVERY change before persisting any (the protocol's
-    commitTransaction atomicity)."""
-    c = _Commit(ident, md)
+    commitTransaction atomicity). A field type or transform the shared
+    checks refuse (ValueError, NotImplementedError) is a 400."""
+    try:
+        _apply(_Commit(ident, md), req)
+    except (ValueError, NotImplementedError) as e:
+        raise _bad(str(e)) from None
+
+
+def _apply(c: _Commit, req: dict) -> None:
     for r in req.get("requirements") or []:
         rule = _REQUIREMENTS.get(r.get("type"))
         if rule is None:
@@ -365,8 +381,10 @@ def _add_schema(c: _Commit, u: dict) -> None:
     different column corrupts per-file resolution), renames keep the
     id, type changes must follow the promotion lattice (int->long,
     float->double, decimal widening), new fields take fresh ids past
-    last-column-id. The name-mapping property gains renamed fields'
-    aliases and new fields' entries so id-less files keep resolving."""
+    last-column-id and a type `iceberg_meta.check_field_type` accepts
+    (one the reader reads; variant only on v3+). The name-mapping
+    property gains renamed fields' aliases and new fields' entries so
+    id-less files keep resolving."""
     md = c.md
     fields = (u.get("schema") or {}).get("fields")
     if not fields:
@@ -384,6 +402,7 @@ def _add_schema(c: _Commit, u: dict) -> None:
     for f in fields:
         old = cur_fields.get(f["id"])
         if old is None:
+            check_field_type(f.get("type"), md.get("format-version", 1))
             if f["id"] <= last_col:
                 raise _bad(
                     f"field id {f['id']} ({f.get('name')!r}) reuses a "
@@ -478,16 +497,11 @@ def _add_sort_order(c: _Commit, u: dict) -> None:
     c.added["add-sort-order"] = oid
 
 
-_TRANSFORMS = {
-    "identity", "bucket", "truncate", "year", "month", "day", "hour", "void",
-}
-
-
 def _add_spec(c: _Commit, u: dict) -> None:
     """Validate + append an add-spec update: source ids must be live
     columns of the current schema, transforms limited to what the
-    reader resolves; partition field ids assigned past
-    last-partition-id when absent."""
+    reader resolves (`iceberg_transforms.known_transform`); partition
+    field ids assigned past last-partition-id when absent."""
     md = c.md
     pfields = (u.get("spec") or {}).get("fields")
     if pfields is None:
@@ -496,9 +510,8 @@ def _add_spec(c: _Commit, u: dict) -> None:
     last_pid = md.get("last-partition-id") or 999
     out = []
     for pf in pfields:
-        tr = (pf.get("transform") or "identity").split("[")[0]
-        if tr not in _TRANSFORMS:
-            raise _bad(
+        if not known_transform(pf.get("transform") or "identity"):
+            raise NotImplementedError(
                 f"unsupported partition transform {pf.get('transform')!r}"
             )
         if pf.get("source-id") not in cur_ids:
@@ -615,6 +628,29 @@ def table_edit(ident: tuple[str, ...], requests: list[dict]):
         return md
 
     return edit
+
+
+def create_tree(meta_dir: str, fresh: dict, updates) -> tuple[str, dict]:
+    """Commit v1 of a new table: `fresh` (`iceberg_meta._new_table`'s
+    document) with the update actions `updates()` returns applied
+    through the rules, then the table commit's `last-updated-ms` bump
+    (a new tree has no previous file to log). `updates` runs under the
+    tree's commit lock once the tree is known to have no version, so it
+    may stage the files its actions name. Refuses with FileExistsError
+    when the tree has a version; a v1 that a crash left before its
+    hint swap is not one, and is overwritten. A refused field type or
+    transform raises as itself (ValueError, NotImplementedError)."""
+
+    def edit(md: dict | None, loc: str | None) -> dict:
+        if md is not None:
+            raise FileExistsError(
+                f"table already exists at {os.path.dirname(meta_dir)}"
+            )
+        _apply(_Commit((), fresh), {"updates": updates()})
+        fresh["last-updated-ms"] += 1
+        return fresh
+
+    return commit_trees({meta_dir: edit})[meta_dir]
 
 
 def commit_table(

@@ -100,7 +100,7 @@ from .mor_diff import (
     write_spark_parts,
 )
 from .delta_log import _range_may_match
-from .iceberg_transforms import _PARAM_RE
+from .iceberg_transforms import _PARAM_RE, BINNERS, known_transform, result_type
 from .timetravel import SnapshotTable, live_history, snapshot_schema
 from .util import atomic_open, local_frame, read_parquet
 
@@ -698,6 +698,65 @@ def _manifest_list_row(
     return row
 
 
+def _write_manifest(
+    path: str,
+    spec_id: int,
+    spec_fields: list[dict],
+    data_files: list[dict],
+    format_version: int,
+    snapshot_id: int,
+    seq: int,
+    first_row_id: int | None = None,
+) -> dict:
+    """Write the manifest at `path` of ADDED `data_files` under spec
+    `spec_id` (`spec_fields` typed, with field ids); return its
+    manifest-list row."""
+    write_avro(
+        path,
+        _entry_schema(spec_fields, format_version),
+        [_manifest_entry(d, format_version, snapshot_id) for d in data_files],
+    )
+    return _manifest_list_row(
+        path,
+        os.path.getsize(path),
+        spec_id,
+        snapshot_id,
+        seq,
+        data_files,
+        format_version,
+        first_row_id,
+    )
+
+
+def _write_data_manifest(
+    path: str,
+    spec_id: int,
+    spec_fields: list[dict],
+    files: list[dict],
+    col_ids: dict[str, int],
+    type_of: dict[str, str],
+    format_version: int,
+    snapshot_id: int,
+    seq: int,
+    next_row_id: int = 0,
+    sort_order_id: int = 0,
+) -> tuple[dict, int]:
+    """The one added-files manifest writer: the parquet `files`
+    ([{path, record_count, size, partition}]) become ADDED data files
+    (`_added_data_files`, under the schema `col_ids` / `type_of`), their
+    entries are written to `path` and the manifest-list row is built.
+    Returns (row, the v3 row-id cursor advanced past the files)."""
+    added, cursor = _added_data_files(
+        files, spec_fields, col_ids, type_of, format_version, next_row_id,
+        sort_order_id,
+    )
+    row = _write_manifest(
+        path, spec_id, spec_fields, added, format_version, snapshot_id, seq,
+        next_row_id,
+    )
+    return row, cursor
+
+
 def load_table_metadata(meta_dir: str) -> tuple[int, dict]:
     """(n, metadata) of the tree's current version: `version-hint.text`
     names n, `v{n}.metadata.json` holds the document. Raises
@@ -713,9 +772,9 @@ def write_metadata_version(meta_dir: str, md: dict, version: int) -> str:
     """Persist `md` as `v{version}.metadata.json` under `meta_dir`, then
     swap the hint to `version` atomically (tmp file + `os.replace`, data
     before pointer). Returns the new metadata location. It serializes
-    nothing itself: commits call it from `iceberg_commit.commit_trees`,
-    the exporter's regeneration under `iceberg_commit.commit_lock`, and
-    table creation writes v1 of a fresh tree with it."""
+    nothing itself: every commit, table creation included, calls it
+    from `iceberg_commit.commit_trees`, and the exporter's regeneration
+    under `iceberg_commit.commit_lock`."""
     os.makedirs(meta_dir, exist_ok=True)
     new_loc = os.path.join(meta_dir, f"v{version}.metadata.json")
     with atomic_open(new_loc, "w") as fh:
@@ -878,12 +937,6 @@ def _schema_history(
     return out
 
 
-# spec result types for the date/time binners: day -> date (ISO dirs,
-# epoch-day values), month/year/hour -> int (months/years/hours from
-# epoch; hour is timestamp-only per the spec)
-_TRANSFORM_TYPES = {"day": "date", "month": "int", "year": "int", "hour": "int"}
-
-
 def _spec_fields_for(
     pcols: list[str],
     hidden_partitions: dict,
@@ -926,46 +979,42 @@ def _spec_fields_for(
                 f"hidden partition {c!r} names unknown source "
                 f"column {source_col!r}"
             )
-        if transform in _TRANSFORM_TYPES:
-            if transform == "hour" and type_of[source_col] not in (
-                "timestamp",
-                "timestamptz",
-            ):
-                raise ValueError(
-                    f"hour transform for {c!r} needs a timestamp "
-                    f"source (got {type_of[source_col]!r})"
-                )
-            tname, ttype = transform, _TRANSFORM_TYPES[transform]
-        elif transform == "bucket":
+        src_type = type_of[source_col]
+        tname = transform
+        if transform == "hour" and src_type not in ("timestamp", "timestamptz"):
+            raise ValueError(
+                f"hour transform for {c!r} needs a timestamp "
+                f"source (got {src_type!r})"
+            )
+        if transform == "bucket":
             if not isinstance(param, int) or param <= 0:
                 raise ValueError(
                     f"bucket transform for {c!r} needs a positive "
                     f"bucket count, got {param!r}"
                 )
-            tname, ttype = f"bucket[{param}]", "int"
+            tname = f"bucket[{param}]"
         elif transform == "truncate":
             if not isinstance(param, int) or param <= 0:
                 raise ValueError(
                     f"truncate transform for {c!r} needs a "
                     f"positive width, got {param!r}"
                 )
-            src_type = type_of[source_col]
             if src_type not in ("int", "long", "string"):
                 raise NotImplementedError(
                     f"truncate over source type {src_type!r}"
                 )
-            tname, ttype = f"truncate[{param}]", src_type
-        else:
+            tname = f"truncate[{param}]"
+        elif transform not in BINNERS:
             raise NotImplementedError(
                 f"partition transform {transform!r} (only "
-                f"{sorted(_TRANSFORM_TYPES) + ['bucket', 'truncate']})"
+                f"{sorted(BINNERS) + ['bucket', 'truncate']})"
             )
         spec_fields.append(
             {
                 "name": c,
                 "transform": tname,
                 "source-id": col_ids[source_col],
-                "type": ttype,
+                "type": result_type(tname, src_type),
             }
         )
     return spec_fields
@@ -978,13 +1027,11 @@ class _SpecRegistry:
     for a different (name, transform, source) — and an equivalent field
     in a later spec KEEPS its id — the v2 rules for spec evolution."""
 
-    def __init__(self, hidden_partitions: dict, format_version: int):
+    def __init__(self, hidden_partitions: dict):
         self.hidden_partitions = hidden_partitions
-        self.format_version = format_version
         self.specs: list[list[dict]] = []
         self._spec_ids: dict[tuple, int] = {}
         self._field_ids: dict[tuple, int] = {}
-        self._entry_schemas: dict[int, dict] = {}
 
     def resolve(self, pcols: list[str], col_ids: dict, type_of: dict) -> int:
         """The spec-id of layout `pcols`, registered on first use."""
@@ -1000,13 +1047,6 @@ class _SpecRegistry:
             self.specs.append(sfs)
             self._spec_ids[key] = sid
         return sid
-
-    def entry_schema(self, sid: int) -> dict:
-        if sid not in self._entry_schemas:
-            self._entry_schemas[sid] = _entry_schema(
-                self.specs[sid], self.format_version
-            )
-        return self._entry_schemas[sid]
 
     def fields(self, sid: int) -> list[dict]:
         """Spec `sid`'s fields as the metadata lists them."""
@@ -1049,42 +1089,43 @@ class _IcebergExport:
     )
     default_sort_order_id: int = 0
 
-    def manifest(self, i, suffix, spec_id, data_files, first_row_id=None) -> dict:
-        """Write snapshot `i`'s manifest `m-{i}{suffix}.avro` of ADDED
-        `data_files` under `spec_id`; return its manifest-list row."""
-        path = os.path.join(self.meta_dir, f"m-{i:05d}{suffix}.avro")
-        write_avro(
-            path,
-            self.specs.entry_schema(spec_id),
-            [_manifest_entry(d, self.format_version, i + 1) for d in data_files],
-        )
-        self.written_manifests.add(os.path.basename(path))
-        return _manifest_list_row(
-            path,
-            os.path.getsize(path),
+    def manifest_path(self, i: int, suffix: str) -> str:
+        """Snapshot `i`'s manifest `m-{i}{suffix}.avro`, recorded as
+        written by this export."""
+        name = f"m-{i:05d}{suffix}.avro"
+        self.written_manifests.add(name)
+        return os.path.join(self.meta_dir, name)
+
+    def manifest(self, i, suffix, spec_id, data_files) -> dict:
+        """Write snapshot `i`'s manifest of ADDED delete `data_files`
+        under `spec_id`; return its manifest-list row."""
+        return _write_manifest(
+            self.manifest_path(i, suffix),
             spec_id,
-            i + 1,
-            i + 1,
+            self.specs.specs[spec_id],
             data_files,
             self.format_version,
-            first_row_id,
+            i + 1,
+            i + 1,
         )
 
     def data_manifest(self, i, suffix, spec_id, files, sort_order_id=0) -> dict:
-        """`manifest` of the parquet `files` ([{path, record_count, size,
-        partition}]) as ADDED data files of snapshot `i`, drawing their
-        v3 row ids from the table counter."""
-        first_row_id = self.next_row_id
-        added, self.next_row_id = _added_data_files(
-            files,
+        """`_write_data_manifest` of the parquet `files` as snapshot `i`'s
+        manifest, drawing their v3 row ids from the table counter."""
+        row, self.next_row_id = _write_data_manifest(
+            self.manifest_path(i, suffix),
+            spec_id,
             self.specs.specs[spec_id],
+            files,
             self.schemas.col_ids[i],
             self.schemas.types[i],
             self.format_version,
-            first_row_id,
-            sort_order_id=sort_order_id,
+            i + 1,
+            i + 1,
+            self.next_row_id,
+            sort_order_id,
         )
-        return self.manifest(i, suffix, spec_id, added, first_row_id)
+        return row
 
     def sort_order(self, props: dict, col_ids: dict[str, int]) -> int:
         """The sort-order id a snapshot's data files are stamped with.
@@ -1768,13 +1809,9 @@ def export_iceberg_metadata(
         hidden_partitions,
         dict(renamed_columns or {}),
     )
-    if format_version < 3 and any(
-        f["type"] == "variant" for s in schemas.schemas for f in s["fields"]
-    ):
-        raise ValueError(
-            "variant columns are an Iceberg format-version 3 type; "
-            f"export with format_version=3 (got {format_version})"
-        )
+    for s in schemas.schemas:
+        for f in s["fields"]:
+            check_field_type(f["type"], format_version)
     if upsert_key is not None:
         bad = [k for k in upsert_key if k not in schemas.col_ids[-1]]
         if bad:
@@ -1786,7 +1823,7 @@ def export_iceberg_metadata(
         hidden_partitions,
         upsert_key,
         schemas,
-        _SpecRegistry(hidden_partitions, format_version),
+        _SpecRegistry(hidden_partitions),
         MorBase(table.root),
     )
     kinds = (
@@ -1904,6 +1941,21 @@ def _spark_type(iceberg_type: str):
         p, s = iceberg_type[iceberg_type.index("(") + 1 : -1].split(",")
         return T.DecimalType(int(p), int(s))
     raise NotImplementedError(f"iceberg type {iceberg_type!r}")
+
+
+def check_field_type(iceberg_type, format_version: int) -> None:
+    """Refuse a schema field type this engine cannot read
+    (NotImplementedError) and `variant` below format-version 3
+    (ValueError): the one type rule of table creation, the export and
+    the `add-schema` commit rule."""
+    if not isinstance(iceberg_type, str):
+        raise NotImplementedError(f"iceberg type {iceberg_type!r}")
+    _spark_type(iceberg_type)
+    if iceberg_type == "variant" and format_version < 3:
+        raise ValueError(
+            "variant columns are an Iceberg format-version 3 type; the "
+            f"table is format-version {format_version}"
+        )
 
 
 def _default_value(iceberg_type: str, v):
@@ -2409,11 +2461,10 @@ def _live_specs(metadata: dict, fields: list[dict], spec_ids) -> tuple[dict, dic
             )
         specs[sid] = {f["name"]: f for f in all_specs[sid]["fields"]}
         for f in specs[sid].values():
-            t = f["transform"]
-            if t not in (
-                "identity", "day", "month", "year", "hour"
-            ) and not _PARAM_RE.fullmatch(t):
-                raise NotImplementedError(f"partition transform {t!r}")
+            if not known_transform(f["transform"]):
+                raise NotImplementedError(
+                    f"unsupported partition transform {f['transform']!r}"
+                )
         idents[sid] = {
             name_of[f["source-id"]]: n
             for n, f in specs[sid].items()
@@ -2901,8 +2952,16 @@ def migrate_parquet_dir(
     FOOTERS, read in-process with pyarrow (as the exporter does) — O(files)
     metadata, no data bytes.
 
+    v1 commits through `iceberg_commit.create_tree`, under the tree's
+    commit lock: the spec, the properties and the snapshot are update
+    actions applied by the commit rules, and the manifests are written
+    only once the tree is known to have no version. Refuses, with
+    FileExistsError, a `root` whose tree already has a version.
+
     Returns the metadata directory. format-version 2, one `append`
     snapshot."""
+    from .iceberg_commit import create_tree
+
     src_abs = os.path.abspath(source_dir)
     paths_all = sorted(
         os.path.join(dirpath, fn)
@@ -2948,22 +3007,20 @@ def migrate_parquet_dir(
             "v3-only type; rewrite through SnapshotTable + "
             "export_iceberg_metadata(format_version=3) instead"
         )
-    fields = []
-    col_ids: dict[str, int] = {}
-    for i, f in enumerate(df.schema.fields, start=1):
-        col_ids[f.name] = i
-        fields.append(
-            {
-                "id": i,
-                "name": f.name,
-                "required": False,
-                "type": _iceberg_type(f.dataType.simpleString()),
-            }
-        )
+    fields = [
+        {
+            "id": i,
+            "name": f.name,
+            "required": False,
+            "type": _iceberg_type(f.dataType.simpleString()),
+        }
+        for i, f in enumerate(df.schema.fields, start=1)
+    ]
+    col_ids = {f["name"]: f["id"] for f in fields}
+    type_of = {f["name"]: f["type"] for f in fields}
     missing = [c for c in pcols if c not in col_ids]
     if missing:
         raise ValueError(f"partition dirs name unknown columns {missing}")
-    type_of = {f["name"]: f["type"] for f in fields}
     spec_fields = [
         {
             "name": c,
@@ -2974,97 +3031,58 @@ def migrate_parquet_dir(
         }
         for i, c in enumerate(pcols)
     ]
-    # footer stats + row counts, read with pyarrow (data columns only
-    # — partition values live in the directory names, not the files);
-    # no data bytes are read anywhere
-    data_col_ids = {c: i for c, i in col_ids.items() if c not in pcols}
-    data_files, _ = _added_data_files(
-        [
-            {
-                "path": p,
-                "record_count": _parquet_row_count(p),
-                "size": os.path.getsize(p),
-                "partition": part_of[p],
-            }
-            for p in paths_all
-        ],
-        spec_fields,
-        data_col_ids,
-        {c: type_of[c] for c in data_col_ids},
-        2,
-        0,
-    )
     meta_dir = os.path.join(root, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    mpath = os.path.join(meta_dir, "m-00000-migrate.avro")
-    write_avro(
-        mpath,
-        _entry_schema(spec_fields, 2),
-        [_manifest_entry(d, 2, 1) for d in data_files],
+    fresh, updates = _new_table(
+        root,
+        fields,
+        spec_fields,
+        {},
+        2,
+        str(uuid.uuid5(uuid.NAMESPACE_URL, root)),
+        timestamp_ms,
     )
-    list_path = os.path.join(meta_dir, "snap-1-1-manifest-list.avro")
-    write_avro(
-        list_path,
-        _manifest_list_schema(2),
-        [
-            _manifest_list_row(
-                mpath, os.path.getsize(mpath), 0, 1, 1, data_files, 2
-            )
-        ],
-    )
-    name_mapping = [
-        {"field-id": f["id"], "names": [f["name"]]} for f in fields
-    ]
-    metadata = {
-        "format-version": 2,
-        "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, root)),
-        "location": root,
-        "last-sequence-number": 1,
-        "last-updated-ms": timestamp_ms,
-        "last-column-id": len(fields),
-        "schema": {"type": "struct", "schema-id": 0, "fields": fields},
-        "schemas": [
-            {"type": "struct", "schema-id": 0, "fields": fields}
-        ],
-        "current-schema-id": 0,
-        "partition-spec": [
-            {k: v for k, v in sf.items() if k != "type"}
-            for sf in spec_fields
-        ],
-        "partition-specs": [
-            {
-                "spec-id": 0,
-                "fields": [
-                    {k: v for k, v in sf.items() if k != "type"}
-                    for sf in spec_fields
-                ],
-            }
-        ],
-        "default-spec-id": 0,
-        "last-partition-id": 999 + len(spec_fields),
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "default-sort-order-id": 0,
-        "properties": {
-            "schema.name-mapping.default": json.dumps(name_mapping)
-        },
-        "current-snapshot-id": 1,
-        "snapshots": [
-            {
-                "snapshot-id": 1,
-                "sequence-number": 1,
-                "timestamp-ms": timestamp_ms,
-                "summary": {"operation": "append"},
-                "manifest-list": list_path,
-                "schema-id": 0,
-            }
-        ],
-        "snapshot-log": [
-            {"snapshot-id": 1, "timestamp-ms": timestamp_ms}
-        ],
-        "metadata-log": [],
-        "refs": {"main": {"snapshot-id": 1, "type": "branch"}},
-    }
-    write_metadata_version(meta_dir, metadata, 1)
+
+    def stage() -> list[dict]:
+        # footer stats + row counts, read with pyarrow (data columns
+        # only — partition values live in the directory names, not the
+        # files); no data bytes are read anywhere
+        data_cols = [c for c in col_ids if c not in pcols]
+        row, _ = _write_data_manifest(
+            os.path.join(meta_dir, "m-00000-migrate.avro"),
+            0,
+            spec_fields,
+            [
+                {
+                    "path": p,
+                    "record_count": _parquet_row_count(p),
+                    "size": os.path.getsize(p),
+                    "partition": part_of[p],
+                }
+                for p in paths_all
+            ],
+            {c: col_ids[c] for c in data_cols},
+            {c: type_of[c] for c in data_cols},
+            2,
+            1,
+            1,
+        )
+        list_path = os.path.join(meta_dir, "snap-1-1-manifest-list.avro")
+        write_avro(list_path, _manifest_list_schema(2), [row])
+        snapshot = {
+            "snapshot-id": 1,
+            "sequence-number": 1,
+            "timestamp-ms": timestamp_ms,
+            "summary": {"operation": "append"},
+            "manifest-list": list_path,
+            "schema-id": 0,
+        }
+        return [
+            *updates,
+            {"action": "add-snapshot", "snapshot": snapshot},
+            {"action": "set-snapshot-ref", "ref-name": "main", "snapshot-id": 1},
+        ]
+
+    create_tree(meta_dir, fresh, stage)
     return meta_dir
 
 
@@ -3253,7 +3271,9 @@ def stage_iceberg_append(spark, df, metadata: dict) -> dict:
     """Stage an APPEND against a live Iceberg table as an EXTERNAL
     writer would before a catalog pointer commit: write the new data
     files (by Spark — a bulk append scales past driver memory), build
-    their ADDED manifest with footer stats, build a manifest list that
+    their ADDED manifest with `_write_data_manifest` (the exporter's
+    writer: footer stats, and v1's `block_size_in_bytes`), build a
+    manifest list that
     carries the parent's manifests forward, and return the spec
     `Snapshot` JSON ready for the REST catalog's `add-snapshot` +
     `set-snapshot-ref` commit (operators/rest_catalog.py). Nothing in
@@ -3274,7 +3294,7 @@ def stage_iceberg_append(spark, df, metadata: dict) -> dict:
     data write and its stats stay distributed/columnar.
     """
     fv = metadata.get("format-version", 1)
-    first_row = next_row_id_of(metadata) if fv >= 3 else None
+    first_row = next_row_id_of(metadata) if fv >= 3 else 0
     spec_fields = None
     for s in metadata.get("partition-specs") or [{"spec-id": 0, "fields": []}]:
         if s["spec-id"] == metadata.get("default-spec-id", 0):
@@ -3296,7 +3316,6 @@ def stage_iceberg_append(spark, df, metadata: dict) -> dict:
             "table first"
         )
     col_ids = {f["name"]: f["id"] for f in fields}
-    type_of = want
     root = metadata["location"]
     snaps = metadata.get("snapshots") or []
     snapshot_id = max((s["snapshot-id"] for s in snaps), default=0) + 1
@@ -3310,62 +3329,18 @@ def stage_iceberg_append(spark, df, metadata: dict) -> dict:
     token = uuid.uuid4().hex[:12]
     stage_dir = os.path.join(root, "staged", f"s-{token}")
     files = write_spark_parts(df, stage_dir, "data")
-    entries = []
-    row_cursor = first_row
-    for d in files:
-        vcounts, ncounts, lower, upper = _file_column_stats(
-            d["path"], col_ids, type_of
-        )
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": None if fv >= 2 else snapshot_id,
-                "data_sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": 0,
-                    "file_path": d["path"],
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": d["record_count"],
-                    "file_size_in_bytes": d["size"],
-                    "value_counts": vcounts,
-                    "null_value_counts": ncounts,
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                    "equality_ids": None,
-                },
-            }
-        )
-        if fv >= 3:
-            entries[-1]["data_file"]["first_row_id"] = row_cursor
-            row_cursor += d["record_count"]
-    manifest_path = os.path.join(meta_dir, f"m-staged-{token}.avro")
-    write_avro(manifest_path, _entry_schema([], fv), entries)
-    row = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": metadata.get("default-spec-id", 0),
-        "added_snapshot_id": snapshot_id,
-    }
-    if fv >= 2:
-        row.update(
-            {
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    d["record_count"] for d in files
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-    if fv >= 3:
-        row["first_row_id"] = first_row
+    row, row_cursor = _write_data_manifest(
+        os.path.join(meta_dir, f"m-staged-{token}.avro"),
+        metadata.get("default-spec-id", 0),
+        [],
+        files,
+        col_ids,
+        want,
+        fv,
+        snapshot_id,
+        seq,
+        first_row,
+    )
     parent_rows = []
     cur = metadata.get("current-snapshot-id")
     parent = next((s for s in snaps if s["snapshot-id"] == cur), None)
@@ -3382,8 +3357,8 @@ def stage_iceberg_append(spark, df, metadata: dict) -> dict:
         "timestamp-ms": (metadata.get("last-updated-ms") or 0) + 1,
         "summary": {
             "operation": "append",
-            "added-data-files": str(len(entries)),
-            "added-records": str(sum(d["record_count"] for d in files)),
+            "added-data-files": str(row["added_files_count"]),
+            "added-records": str(row["added_rows_count"]),
         },
         "manifest-list": list_path,
     }
@@ -3397,6 +3372,69 @@ def stage_iceberg_append(spark, df, metadata: dict) -> dict:
         snapshot["first-row-id"] = first_row
         snapshot["added-rows"] = row_cursor - first_row
     return snapshot
+
+
+def _new_table(
+    root: str,
+    fields: list[dict],
+    spec_fields: list[dict],
+    properties: dict,
+    format_version: int,
+    table_uuid: str,
+    timestamp_ms: int = 0,
+) -> tuple[dict, list[dict]]:
+    """A new table's v1 before its commit, shared by
+    `create_iceberg_table` and `migrate_parquet_dir`: the fresh document
+    (schema `fields`, no spec, snapshot or log yet) and the update
+    actions `iceberg_commit.create_tree` applies to it through the
+    rules: `add-spec` of `spec_fields` + `set-default-spec -1`, and
+    `set-properties` of `properties` over a name mapping of every field
+    (it keeps files without parquet field ids resolving after renames;
+    a caller's mapping wins). Refuses a format-version outside 1-3, a
+    field type `check_field_type` refuses and duplicate field ids."""
+    if format_version not in (1, 2, 3):
+        raise ValueError(
+            f"unsupported format-version {format_version!r} (1-3)"
+        )
+    for f in fields:
+        check_field_type(f["type"], format_version)
+    ids = [f["id"] for f in fields]
+    if len(set(ids)) != len(ids):
+        raise ValueError(f"duplicate field ids in schema: {ids}")
+    schema = {"type": "struct", "schema-id": 0, "fields": fields}
+    fresh = {
+        "format-version": format_version,
+        "table-uuid": table_uuid,
+        "location": root,
+        "last-sequence-number": 0,
+        # the commit bumps it to `timestamp_ms`, the time the
+        # snapshot-log records for a first snapshot
+        "last-updated-ms": timestamp_ms - 1,
+        "last-column-id": max(ids),
+        "schema": schema,
+        "schemas": [schema],
+        "current-schema-id": 0,
+        "partition-specs": [],
+        "last-partition-id": 999,
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "default-sort-order-id": 0,
+        "properties": {},
+        "current-snapshot-id": -1,
+        "snapshots": [],
+        "snapshot-log": [],
+        "metadata-log": [],
+        "refs": {},
+    }
+    if format_version >= 3:
+        # v3 row lineage: no row ids assigned yet
+        fresh["next-row-id"] = 0
+    mapping = [{"field-id": f["id"], "names": [f["name"]]} for f in fields]
+    props = {"schema.name-mapping.default": json.dumps(mapping), **properties}
+    return fresh, [
+        {"action": "add-spec", "spec": {"fields": spec_fields}},
+        {"action": "set-default-spec", "spec-id": -1},
+        {"action": "set-properties", "updates": props},
+    ]
 
 
 def create_iceberg_table(
@@ -3418,27 +3456,22 @@ def create_iceberg_table(
     `fields` are Iceberg schema fields ({"name", "type", "required"});
     ids are assigned 1..n when absent (the spec: the catalog assigns
     fresh ids on create — client-sent ids are suggestions at best).
-    `partition_fields` become partition-specs[0] verbatim with
-    field-ids assigned from 1000 — declarative JSON only; only
-    transforms the reader understands are accepted.
+    `partition_fields` name their source column by `source-id` or by
+    `name`, and become partition-specs[0] with field-ids assigned from
+    1000 — declarative JSON only; the `add-spec` rule accepts only
+    transforms the reader understands.
 
-    Returns the metadata directory. Refuses to create over an existing
-    tree (a catalog create is not an overwrite)."""
-    meta_dir = os.path.join(root, "metadata")
-    if os.path.exists(os.path.join(meta_dir, "version-hint.text")):
-        raise FileExistsError(f"table already exists at {root}")
-    if format_version not in (1, 2, 3):
-        raise ValueError(
-            f"unsupported format-version {format_version!r} (1-3)"
-        )
-    known = {
-        "identity", "bucket", "truncate", "year", "month", "day", "hour",
-    }
+    v1 commits through `iceberg_commit.create_tree`, under the tree's
+    commit lock. Returns the metadata directory. Refuses, with
+    FileExistsError, a tree that already has a version (a catalog
+    create is not an overwrite); a v1 that a crash left before its hint
+    swap is not a version, and a re-run overwrites it."""
+    from .iceberg_commit import create_tree
+
     out_fields = []
     for i, f in enumerate(fields, start=1):
         if not f.get("name") or not f.get("type"):
             raise ValueError(f"schema field needs name+type: {f!r}")
-        _spark_type(f["type"])  # validates the type is one we read
         out_fields.append(
             {
                 "id": f.get("id") or i,
@@ -3447,87 +3480,37 @@ def create_iceberg_table(
                 "type": f["type"],
             }
         )
-    ids = [f["id"] for f in out_fields]
-    if len(set(ids)) != len(ids):
-        raise ValueError(f"duplicate field ids in schema: {ids}")
-    if format_version < 3 and any(
-        f["type"] == "variant" for f in out_fields
-    ):
-        raise ValueError(
-            "variant columns are an Iceberg format-version 3 type; "
-            f"create with format_version=3 (got {format_version})"
-        )
-    by_name = {f["name"]: f["id"] for f in out_fields}
+    name_of = {f["id"]: f["name"] for f in out_fields}
+    by_name = {n: i for i, n in name_of.items()}
     spec_fields = []
-    for j, pf in enumerate(partition_fields or []):
-        transform = pf.get("transform", "identity")
-        if transform.split("[")[0] not in known:
-            raise NotImplementedError(
-                f"unsupported partition transform {transform!r}"
-            )
+    for pf in partition_fields or []:
         src = pf.get("source-id") or by_name.get(pf.get("name"))
-        if src is None:
-            raise ValueError(
-                f"partition field needs source-id or a schema column "
-                f"name: {pf!r}"
-            )
-        if src not in ids:
+        if src not in name_of:
             # the client's source-id may live in ITS original id space
             # when the catalog stripped/reassigned incomplete field
             # ids; a dangling id would mint a spec that silently never
             # partitions anything
             raise ValueError(
                 f"partition field source-id {src} matches no schema "
-                f"column (schema ids: {sorted(ids)}); name the column "
+                f"column (schema ids: {sorted(name_of)}); name the column "
                 "instead when the catalog assigns fresh ids"
             )
         spec_fields.append(
             {
                 "source-id": src,
-                "field-id": pf.get("field-id") or 1000 + j,
-                "name": pf.get("name")
-                or next(f["name"] for f in out_fields if f["id"] == src),
-                "transform": transform,
+                "field-id": pf.get("field-id"),
+                "name": pf.get("name") or name_of[src],
+                "transform": pf.get("transform", "identity"),
             }
         )
-    os.makedirs(meta_dir)
-    props = dict(properties or {})
-    # seed the name-mapping so files written WITHOUT parquet field ids
-    # keep resolving after later renames (the same property the
-    # exporter maintains); caller-provided mappings win
-    props.setdefault(
-        "schema.name-mapping.default",
-        json.dumps(
-            [{"field-id": f["id"], "names": [f["name"]]} for f in out_fields]
-        ),
+    fresh, updates = _new_table(
+        root,
+        out_fields,
+        spec_fields,
+        properties or {},
+        format_version,
+        str(uuid.uuid4()),
     )
-    metadata = {
-        "format-version": format_version,
-        "table-uuid": str(uuid.uuid4()),
-        "location": root,
-        "last-sequence-number": 0,
-        "last-updated-ms": 0,
-        "last-column-id": max(ids),
-        "schema": {"type": "struct", "schema-id": 0, "fields": out_fields},
-        "schemas": [
-            {"type": "struct", "schema-id": 0, "fields": out_fields}
-        ],
-        "current-schema-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-        "default-spec-id": 0,
-        "last-partition-id": 999 + len(spec_fields),
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "default-sort-order-id": 0,
-        "properties": props,
-        "current-snapshot-id": -1,
-        "snapshots": [],
-        "snapshot-log": [],
-        "metadata-log": [],
-        "refs": {},
-    }
-    if format_version >= 3:
-        # v3 row lineage: the table starts with no rows assigned; the
-        # commit path advances this as snapshots add rows
-        metadata["next-row-id"] = 0
-    write_metadata_version(meta_dir, metadata, 1)
+    meta_dir = os.path.join(root, "metadata")
+    create_tree(meta_dir, fresh, lambda: updates)
     return meta_dir

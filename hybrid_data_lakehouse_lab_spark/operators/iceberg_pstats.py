@@ -78,21 +78,6 @@ def _pa_type(iceberg_type: str):
     return pa.string()
 
 
-def _field_type_of(metadata: dict, pf: dict) -> str:
-    """Result type of a partition field per the spec's transform result
-    types: the source column's type for identity AND truncate (truncate
-    preserves the source type), int for bucket/days/hours/months/
-    years."""
-    transform = pf.get("transform", "identity")
-    if transform == "identity" or transform.startswith("truncate"):
-        by_id = {}
-        for s in metadata.get("schemas") or [metadata.get("schema")]:
-            for f in (s or {}).get("fields") or []:
-                by_id[f["id"]] = f["type"]
-        return by_id.get(pf.get("source-id"), "string")
-    return "int"
-
-
 def write_partition_stats(
     spark: SparkSession,
     root: str,
@@ -116,6 +101,7 @@ def write_partition_stats(
     from .iceberg_commit import commit_table
     from .iceberg_inspect import _live_entries, _snap
     from .iceberg_meta import load_table_metadata
+    from .iceberg_transforms import result_type
 
     meta_dir = os.path.join(root, "metadata")
     _, metadata = load_table_metadata(meta_dir)
@@ -123,6 +109,11 @@ def write_partition_stats(
     sid = s["snapshot-id"]
     unified = _unified_partition_fields(metadata)
     names = [f["name"] for f in unified]
+    type_by_id = {
+        f["id"]: f["type"]
+        for sch in metadata.get("schemas") or [metadata.get("schema")]
+        for f in (sch or {}).get("fields") or []
+    }
 
     # rollup: (spec_id, partition value tuple) -> counters
     agg: dict[tuple, list[int]] = {}
@@ -145,7 +136,9 @@ def write_partition_stats(
     part_fields = [
         pa.field(
             f["name"],
-            _pa_type(_field_type_of(metadata, f)),
+            _pa_type(
+                result_type(f["transform"], type_by_id.get(f["source-id"]))
+            ),
             nullable=True,
             metadata={b"PARQUET:field_id": str(f["field-id"]).encode()},
         )

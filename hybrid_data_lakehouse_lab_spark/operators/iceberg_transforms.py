@@ -43,6 +43,29 @@ _M32 = 0xFFFFFFFF
 _EPOCH_DATE = datetime.date(1970, 1, 1)
 _EPOCH_DT = datetime.datetime(1970, 1, 1)
 
+#: The date/time binners and their spec result types: day -> date
+#: (epoch-day values), month/year/hour -> int (months/years/hours from
+#: epoch; hour is timestamp-only).
+BINNERS = {"day": "date", "month": "int", "year": "int", "hour": "int"}
+
+
+def known_transform(transform: str) -> bool:
+    """Is `transform` one this engine reads and writes: identity, a
+    binner, `bucket[N]` or `truncate[W]`?"""
+    return transform in ("identity", *BINNERS) or bool(_PARAM_RE.fullmatch(transform))
+
+
+def result_type(transform: str, source_type: str) -> str:
+    """The spec's result type of a partition field: the source column's
+    type for `identity` and `truncate[W]`, int for `bucket[N]`, and the
+    `BINNERS` type of a binner. Raises NotImplementedError for a
+    transform `known_transform` refuses."""
+    if not known_transform(transform):
+        raise NotImplementedError(f"unsupported partition transform {transform!r}")
+    if transform in BINNERS:
+        return BINNERS[transform]
+    return "int" if transform.startswith("bucket") else source_type
+
 
 # ---------------------------------------------------------------------------
 # driver-side (pure Python)

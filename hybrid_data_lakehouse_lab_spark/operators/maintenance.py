@@ -548,7 +548,7 @@ def rewrite_iceberg_manifests(root: str) -> dict:
         next_row_id_of,
         plan_snapshot,
     )
-    from .iceberg_transforms import _PARAM_RE
+    from .iceberg_transforms import result_type
 
     meta_dir = os.path.join(root, "metadata")
     metadata = load_table_metadata(meta_dir)[1]
@@ -583,19 +583,6 @@ def rewrite_iceberg_manifests(root: str) -> dict:
     for s in metadata.get("schemas") or [metadata["schema"]]:
         for f in s["fields"]:
             type_by_id.setdefault(f["id"], f["type"])
-    def _ptype(sf: dict) -> str:
-        t = sf["transform"]
-        if t == "identity":
-            return type_by_id[sf["source-id"]]
-        if t == "day":
-            return "date"
-        if t in ("month", "year", "hour"):
-            return "int"
-        m = _PARAM_RE.fullmatch(t)
-        if m:
-            return "int" if m.group(1) == "bucket" else type_by_id[sf["source-id"]]
-        raise NotImplementedError(f"partition transform {t!r}")
-
     specs = {s["spec-id"]: s["fields"] for s in metadata["partition-specs"]}
     by_spec: dict[int, list[dict]] = {}
     for d in live:
@@ -609,7 +596,9 @@ def rewrite_iceberg_manifests(root: str) -> dict:
         pf = [
             {
                 "name": sf["name"],
-                "type": _ptype(sf),
+                "type": result_type(
+                    sf["transform"], type_by_id.get(sf["source-id"])
+                ),
                 "field-id": sf["field-id"],
             }
             for sf in specs[spec_id]

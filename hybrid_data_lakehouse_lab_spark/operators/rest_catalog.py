@@ -50,7 +50,9 @@ exported (or any tree `read_iceberg_table` can read):
     CREATE TABLE mints an empty metadata tree via
     `iceberg_meta.create_iceberg_table` (fresh field ids assigned when
     the client sends none; current-snapshot-id = -1), rooted at the
-    request `location` or `<warehouse_dir>/<ns...>/<name>`; the
+    request `location` or `<warehouse_dir>/<ns...>/<name>`, and
+    committed as v1 under the tree's commit lock (a tree that already
+    has a version answers 409); the
     external-writer append flow then populates it — the full
     create → stage → pointer-commit → read lifecycle runs through the
     protocol. `stage-create` (the CTAS staging mode) mints the tree

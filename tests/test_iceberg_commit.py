@@ -12,6 +12,11 @@
   the previous version, and a re-run converges.
 - Processes committing through `commit_table` while the catalog commits
   lose no update, and write one version per commit.
+- Creation commits v1 under the same lock: a migration or a create onto
+  a tree that has a version is refused and changes nothing, a create
+  racing the catalog's create on one root has one winner, a create that
+  crashed before its hint swap leaves no table and re-runs, and a
+  format-version 1 table created through the catalog takes appends.
 - AST guards: outside the rules module no code edits the snapshot,
   ref, statistics or log keys of loaded metadata, and no local writer
   calls `write_metadata_version`.
@@ -35,14 +40,17 @@ from hybrid_data_lakehouse_lab_spark.operators import (  # noqa: F401
 )
 from hybrid_data_lakehouse_lab_spark.operators.iceberg_commit import commit_table
 from hybrid_data_lakehouse_lab_spark.operators.iceberg_meta import (
+    create_iceberg_table,
     export_iceberg_metadata,
     export_iceberg_statistics,
     load_table_metadata,
+    migrate_parquet_dir,
     read_iceberg_statistics,
     read_iceberg_table,
 )
 from hybrid_data_lakehouse_lab_spark.operators.rest_catalog import (
     IcebergRestCatalog,
+    append_table_via_catalog,
     rest_commit_table,
     rest_create_namespace,
     rest_create_table,
@@ -305,6 +313,111 @@ def test_crashed_catalog_commit_leaves_readers_on_the_previous_version(
         ]
 
 
+# -- creation ------------------------------------------------------------------
+
+FIELDS = [{"name": "id", "type": "long"}, {"name": "name", "type": "string"}]
+
+
+def _files(meta_dir: str) -> dict[str, bytes]:
+    return {
+        f: open(os.path.join(meta_dir, f), "rb").read() for f in os.listdir(meta_dir)
+    }
+
+
+def test_migration_over_a_tree_is_refused_and_changes_nothing(spark, tmp_path):
+    src, other = str(tmp_path / "lake"), str(tmp_path / "other")
+    spark.range(9).selectExpr("id", "CAST(id % 3 AS STRING) AS g").write.parquet(src)
+    spark.range(4).selectExpr("id", "'x' AS g").write.parquet(other)
+    root = str(tmp_path / "t")
+    meta_dir = migrate_parquet_dir(spark, root, src, timestamp_ms=5)
+    commit_table(meta_dir, [{"action": "set-properties", "updates": {"k": "kept"}}])
+    before = _files(meta_dir)
+    with pytest.raises(FileExistsError):
+        migrate_parquet_dir(spark, root, other)
+    n, md = _meta(root)
+    assert (n, md["properties"]["k"]) == (2, "kept")
+    assert _files(meta_dir) == before
+    assert read_iceberg_table(spark, root).count() == 9
+
+
+def test_create_racing_the_catalog_create_has_one_winner(tmp_path):
+    import threading
+
+    with IcebergRestCatalog({}, warehouse_dir=str(tmp_path)) as uri:
+        rest_create_namespace(uri, ["ns"])
+        for i in range(4):
+            root = str(tmp_path / f"t{i}")
+            start, won = threading.Barrier(2), []
+
+            def local():
+                start.wait()
+                with contextlib.suppress(FileExistsError):
+                    create_iceberg_table(root, FIELDS)
+                    won.append("local")
+
+            def catalog():
+                start.wait()
+                with contextlib.suppress(ValueError):  # the 409
+                    lt = rest_create_table(
+                        uri, ["ns"], f"t{i}", FIELDS, location=root
+                    )
+                    won.append(lt["metadata"]["table-uuid"])
+
+            threads = [threading.Thread(target=f) for f in (local, catalog)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=60)
+            assert not any(th.is_alive() for th in threads)
+            assert len(won) == 1, won
+            n, md = _meta(root)
+            assert n == 1
+            if won != ["local"]:
+                assert md["table-uuid"] == won[0]
+            meta_files = sorted(os.listdir(os.path.join(root, "metadata")))
+            assert [f for f in meta_files if f[0] == "v"] == [
+                "v1.metadata.json",
+                "version-hint.text",
+            ]
+
+
+@pytest.mark.parametrize("suffix", [".metadata.json", "version-hint.text"])
+def test_crashed_create_leaves_no_table_and_reruns(tmp_path, monkeypatch, suffix):
+    root = str(tmp_path / "t")
+    restore = _crash_at(monkeypatch, suffix)
+    with pytest.raises(OSError, match="injected"):
+        create_iceberg_table(root, FIELDS)
+    restore()
+    with pytest.raises(FileNotFoundError):
+        _meta(root)
+    # the re-run is the catalog's create of the same root: it succeeds
+    with IcebergRestCatalog({}, warehouse_dir=str(tmp_path)) as uri:
+        rest_create_namespace(uri, ["ns"])
+        lt = rest_create_table(uri, ["ns"], "t", FIELDS, location=root)
+        assert lt["metadata-location"] == os.path.join(
+            root, "metadata", "v1.metadata.json"
+        )
+        md = rest_get(f"{uri}{TABLE}")["metadata"]
+    assert md["table-uuid"] == lt["metadata"]["table-uuid"]
+    assert _meta(root)[0] == 1
+
+
+def test_v1_table_created_through_the_catalog_takes_appends(spark, tmp_path):
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id LONG, name STRING")
+    with IcebergRestCatalog({}, warehouse_dir=str(tmp_path)) as uri:
+        rest_create_namespace(uri, ["ns"])
+        lt = rest_create_table(
+            uri, ["ns"], "t", FIELDS, properties={"format-version": "1"}
+        )
+        assert lt["metadata"]["format-version"] == 1
+        url = f"{uri}{TABLE}"
+        s1 = append_table_via_catalog(spark, df, url)
+        s2 = append_table_via_catalog(spark, df.selectExpr("id + 2 AS id", "name"), url)
+        assert s2["parent-snapshot-id"] == s1["snapshot-id"]
+        got = sorted(tuple(r) for r in read_iceberg_table(spark, url).collect())
+    assert got == [(1, "a"), (2, "b"), (3, "a"), (4, "b")]
+
+
 # -- processes racing the catalog ----------------------------------------------
 
 
@@ -465,13 +578,12 @@ def test_only_the_commit_rules_edit_snapshots_refs_and_logs():
 
 
 def test_no_local_writer_writes_a_metadata_version_directly():
-    """`write_metadata_version` is called by the commit primitive, the
-    exporter's regeneration and the two paths that create a tree."""
+    """`write_metadata_version` is called only by the commit primitive
+    and the exporter's regeneration: table creation and migration
+    commit v1 through `create_tree`."""
     allowed = {
         "operators/iceberg_commit.py:commit_trees",
         "operators/iceberg_meta.py:export_iceberg_metadata",
-        "operators/iceberg_meta.py:migrate_parquet_dir",
-        "operators/iceberg_meta.py:create_iceberg_table",
     }
     callers = set()
     for rel, tree in _package_modules():

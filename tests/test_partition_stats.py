@@ -51,6 +51,31 @@ def test_stats_file_carries_spec_field_ids(spark, tmp_path):
     assert int(gf.metadata[b"PARQUET:field_id"]) >= 1000
 
 
+def test_day_partition_value_is_typed_date(spark, tmp_path):
+    """A `day` partition field's stats value has the transform's result
+    type, date, the type the manifests give it."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    df = spark.range(6).selectExpr(
+        "id", "timestamp'2024-01-01 06:00:00' + make_interval(0, 0, 0, "
+        "CAST(id % 2 AS INT), 0, 0, 0) AS ts"
+    ).withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
+    t.write(df, partition_by=["dt"], committed_at_ms=1)
+    export_iceberg_metadata(t, hidden_partitions={"dt": ("ts", "day")})
+    entry = write_partition_stats(spark, t.root)
+    stats = pq.read_table(entry["statistics-path"])
+    assert stats.schema.field("partition").type.field("dt").type == pa.date32()
+    assert sorted(r["partition"]["dt"] for r in stats.to_pylist()) == [
+        datetime.date(2024, 1, 1),
+        datetime.date(2024, 1, 2),
+    ]
+
+
 def test_unified_partition_type_across_spec_evolution(spark, tmp_path):
     """A table that went unpartitioned -> identity-partitioned: spec-0
     rows carry a NULL partition field, spec-1 rows a typed value, in

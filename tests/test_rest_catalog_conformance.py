@@ -320,6 +320,8 @@ ENVELOPE_TABLE = [
             ("narrowing long to int", [_field(1, "id", "int")]),
             ("making a field required",
              [_field(2, "name", "string", required=True)]),
+            ("with a variant field on a v2 table", [_field(3, "z", "variant")]),
+            ("with an unknown field type", [_field(4, "z", "blob")]),
         ]
     ),
     *(
