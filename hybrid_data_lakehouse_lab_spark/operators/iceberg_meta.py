@@ -3273,10 +3273,10 @@ def stage_iceberg_append(spark, df, metadata: dict) -> dict:
     files (by Spark — a bulk append scales past driver memory), build
     their ADDED manifest with `_write_data_manifest` (the exporter's
     writer: footer stats, and v1's `block_size_in_bytes`), build a
-    manifest list that
-    carries the parent's manifests forward, and return the spec
-    `Snapshot` JSON ready for the REST catalog's `add-snapshot` +
-    `set-snapshot-ref` commit (operators/rest_catalog.py). Nothing in
+    manifest list that carries the parent's manifests forward, and
+    return the spec `Snapshot` JSON ready for the REST catalog's
+    `add-snapshot` + `set-snapshot-ref` commit
+    (operators/rest_catalog.py). Nothing in
     the table is modified — the pointer move IS the commit, so a lost
     race (409) costs only re-staging against the fresh metadata.
 
