@@ -40,6 +40,28 @@ DV'd files — 'u'/'p'/'i' storage, CRC + cardinality verified — with one
 broadcast anti-join on (file, `_metadata.row_index`). Checkpoints carry
 descriptors so checkpoint-seeded reads still mask.
 
+THE LOG WALK. Every reader of a log is a fold over one ordered walk of
+its commits (`_DeltaLog`): it alone lists `_delta_log/` for commit
+files, reads `_last_checkpoint` and parses commit lines. The walk
+yields each surviving commit's version, its actions and its EFFECTIVE
+timestamp: `commitInfo.inCommitTimestamp` (the spec's authoritative
+commit time), else `commitInfo.timestamp`, else the commit file's
+mtime, bumped to the previous effective timestamp + 1 ms where it does
+not increase (delta-spark's monotonization, so clock skew never
+resolves TIMESTAMP AS OF to a too-early version). The fold next to it
+seeds from the checkpoint and yields the live state (add wins by path,
+remove deletes by path) after each version. Replay, TIMESTAMP AS OF,
+DESCRIBE HISTORY (`iceberg_inspect.delta_history_table`), the change
+data feed, RESTORE, VACUUM and orphan reachability
+(`maintenance.vacuum_delta_table` / `_delta_log_reachable`) all use
+it, so they agree on versions, timestamps and live files. Replay walks
+only the commits past its seed and reads no timestamps; the others
+walk every surviving commit. `_dv_path` is the one rule from a
+deletion-vector descriptor to its file. Every writer of a log
+(`export_delta_log`, `restore_delta_table`, `write_checkpoint`,
+`clean_log_commits`) holds `_delta_log/.commit.lock` (`util.locked`;
+not re-entrant, so none calls another while holding it).
+
 Verified by `tests/test_delta_log.py` with an INDEPENDENT pure-Python
 log replay (spec semantics re-implemented from scratch in the test, not
 imported from here) proving version-N live-file sets equal the
@@ -67,7 +89,7 @@ from .mor_diff import (
     write_spark_parts,
 )
 from .timetravel import SnapshotTable, live_history, snapshot_schema
-from .util import atomic_open, local_frame, read_parquet
+from .util import atomic_open, local_frame, locked, read_parquet
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
@@ -477,11 +499,12 @@ def _remove_stale_files(x: _DeltaExport, log_dir: str, last: int) -> None:
     transition that re-exported as a rewrite, change data turned off)
     would outlive the actions naming them and go by the same
     contract."""
+    log = _DeltaLog(log_dir)
+    for v, f in log.names.items():
+        if v > last:
+            os.remove(os.path.join(log_dir, f))
     for f in os.listdir(log_dir):
-        if _is_commit_file(f):
-            if int(f.split(".")[0]) > last:
-                os.remove(os.path.join(log_dir, f))
-        elif ".checkpoint" in f and f.endswith((".parquet", ".json")):
+        if ".checkpoint" in f and f.endswith((".parquet", ".json")):
             # External readers (delta-spark, delta-rs) discover
             # checkpoints by LISTING _delta_log, not only via
             # _last_checkpoint — an orphaned {v}.checkpoint*.parquet
@@ -490,8 +513,7 @@ def _remove_stale_files(x: _DeltaExport, log_dir: str, last: int) -> None:
             v = f.split(".")[0]
             if v.isdigit() and int(v) > last:
                 os.remove(os.path.join(log_dir, f))
-    cp = _load_last_checkpoint(log_dir)
-    if cp is not None and cp["version"] > last:
+    if log.checkpoint is not None and log.checkpoint["version"] > last:
         os.remove(os.path.join(log_dir, "_last_checkpoint"))
     root = x.table.root
     for f in os.listdir(root):
@@ -505,6 +527,26 @@ def _remove_stale_files(x: _DeltaExport, log_dir: str, last: int) -> None:
                 shutil.rmtree(os.path.join(cdc_root, d), ignore_errors=True)
         if not os.listdir(cdc_root):
             os.rmdir(cdc_root)
+
+
+def _write_commit(
+    log_dir: str, version: int, actions: list[dict], exclusive: bool = False
+) -> None:
+    """Write commit `version` as one JSON action per line, all or
+    nothing (`atomic_open`). `exclusive` refuses with FileExistsError
+    when the version already exists, where a plain write replaces it:
+    the staged file is hard-linked onto the name, which fails rather
+    than overwrites."""
+    path = os.path.join(log_dir, f"{version:020d}.json")
+    staged = os.path.join(log_dir, f".{version:020d}.json.staged") if exclusive else path
+    with atomic_open(staged, "w") as fh:
+        for a in actions:
+            fh.write(json.dumps(a) + "\n")
+    if exclusive:
+        try:
+            os.link(staged, path)
+        finally:
+            os.remove(staged)
 
 
 def export_delta_log(
@@ -571,6 +613,10 @@ def export_delta_log(
     SOLE-WRITER assumption: this exporter owns `_delta_log/` — the
     regeneration (and especially the stale-tail cleanup) would
     overwrite or delete commits appended by an EXTERNAL Delta writer.
+    Within this engine the export holds `_delta_log/.commit.lock` from
+    its first commit write to its cleanup, the lock
+    `restore_delta_table`, `write_checkpoint` and `clean_log_commits`
+    commit under, so none of them interleaves with it.
     Interop is one-directional by design: external engines READ the
     exported log, and `read_delta_table` conversely reads external
     logs; dual-writer coordination is what a real catalog/log store
@@ -592,38 +638,37 @@ def export_delta_log(
     events = live_history(m, branch)
     if not events:
         raise ValueError(f"branch {branch!r} has no commits to export")
-    by_version = {s["version"]: s for s in m["snapshots"]}
     log_dir = os.path.join(table.root, "_delta_log")
     os.makedirs(log_dir, exist_ok=True)
+    by_version = {s["version"]: s for s in m["snapshots"]}
     x = _DeltaExport(
         table, mor_deletes, change_data, events[0]["at_ms"], MorBase(table.root)
     )
     kinds = ("delete",) if mor_deletes else ()
     prev = None
-    for i, ev in enumerate(events):
-        snap = by_version[ev["version"]]
-        files = _snapshot_files(table.root, snap["path"])
-        schema = snapshot_schema(m, snap)
-        read_schema = read_parquet(table.spark, schema, snap["path"]).schema
-        t = x.base.transition(
-            table.spark, snap, prev, files, schema, read_schema, kinds
-        )
-        # partition columns in path-segment order (every file of one
-        # snapshot shares the same partitioning scheme)
-        pcols = next(
-            (list(f["partitionValues"]) for f in files if f["partitionValues"]), []
-        )
-        actions = [_commit_info(ev["at_ms"], snap.get("properties") or {}, t, pcols)]
-        actions += _table_actions(x, read_schema, pcols)
-        if t.kind == "delete":
-            actions += _dv_commit(x, i, ev["at_ms"], t)
-        else:
-            actions += _rewrite_commit(x, ev["at_ms"], t)
-        with atomic_open(os.path.join(log_dir, f"{i:020d}.json"), "w") as fh:
-            for a in actions:
-                fh.write(json.dumps(a) + "\n")
-        prev = snap
-    _remove_stale_files(x, log_dir, len(events) - 1)
+    with locked(os.path.join(log_dir, ".commit.lock")):
+        for i, ev in enumerate(events):
+            snap = by_version[ev["version"]]
+            files = _snapshot_files(table.root, snap["path"])
+            schema = snapshot_schema(m, snap)
+            read_schema = read_parquet(table.spark, schema, snap["path"]).schema
+            t = x.base.transition(
+                table.spark, snap, prev, files, schema, read_schema, kinds
+            )
+            # partition columns in path-segment order (every file of one
+            # snapshot shares the same partitioning scheme)
+            pcols = next(
+                (list(f["partitionValues"]) for f in files if f["partitionValues"]), []
+            )
+            actions = [_commit_info(ev["at_ms"], snap.get("properties") or {}, t, pcols)]
+            actions += _table_actions(x, read_schema, pcols)
+            if t.kind == "delete":
+                actions += _dv_commit(x, i, ev["at_ms"], t)
+            else:
+                actions += _rewrite_commit(x, ev["at_ms"], t)
+            _write_commit(log_dir, i, actions)
+            prev = snap
+        _remove_stale_files(x, log_dir, len(events) - 1)
     gc_ledger(table.root, [s["path"] for s in m["snapshots"]])
     return log_dir
 
@@ -747,6 +792,134 @@ def _read_checkpoint(log_dir: str, cp: dict) -> tuple[dict, dict | None, dict | 
     return live, meta, protocol
 
 
+@dataclass
+class _Commit:
+    """One surviving commit of the walk: its version, its actions in
+    file order and its effective timestamp in ms (None on a walk that
+    skips the commits before its seed)."""
+
+    version: int
+    actions: list[dict]
+    timestamp: int | None = None
+
+    @property
+    def info(self) -> dict:
+        """The commit's first commitInfo action ({} without one)."""
+        return next((a["commitInfo"] for a in self.actions if "commitInfo" in a), {})
+
+
+class _DeltaLog:
+    """THE reader of a `_delta_log/` (module docstring, "THE LOG WALK"):
+    one listing of its commit files (`names`, version -> file name) and
+    its `_last_checkpoint` pointer (`checkpoint`), the commit walk and
+    the state fold over it."""
+
+    def __init__(self, log_dir: str):
+        self.dir = log_dir
+        self.names = {
+            int(f.split(".")[0]): f for f in os.listdir(log_dir) if _is_commit_file(f)
+        }
+        self.checkpoint = _load_last_checkpoint(log_dir)
+
+    def walk(self, last: int | None = None, after: int | None = None):
+        """The surviving commits up to `last` (None = all), in version
+        order, as `_Commit`s. With `after` None the walk covers every
+        surviving commit and times each one by the module's rule; with
+        `after` set it opens only the commits past it and times none
+        (the replay fast path parses no more than it applies)."""
+        prev = None
+        for v in sorted(self.names):
+            if last is not None and v > last:
+                break
+            if after is not None and v <= after:
+                continue
+            path = os.path.join(self.dir, self.names[v])
+            with open(path) as fh:
+                c = _Commit(v, [json.loads(ln) for ln in fh if ln.strip()])
+            if after is None:
+                ts = c.info.get("inCommitTimestamp", c.info.get("timestamp"))
+                if ts is None:
+                    ts = int(os.stat(path).st_mtime * 1000)
+                if prev is not None and ts <= prev:
+                    ts = prev + 1
+                c.timestamp = prev = ts
+            yield c
+
+    def states(
+        self, first: int | None = None, last: int | None = None, every: bool = False
+    ):
+        """THE fold: yields (commit, state, gone) for the seed and each
+        walked commit up to `last`. `state` is the replay state
+        {"version", "files": {path: add action}, "metaData", "protocol"}
+        — one dict, updated in place — and `gone` maps each path the
+        commit removed to its add action before the commit. The seed is
+        the checkpoint, yielded first with commit None, when it is at
+        or before `first` (the earliest version whose state the caller
+        needs; None = the head), else the empty table before commit 0.
+        With `every` the walk covers every surviving commit, timed, and
+        the seed is the checkpoint only when commit 0 is gone; commits
+        at or before the seed leave the state at the seed. Raises when
+        the state at `first` cannot be rebuilt (its commits were
+        cleaned) or the commits past the seed are not contiguous."""
+        cp = self.checkpoint
+        seeded = cp is not None and (
+            0 not in self.names if every else first is None or cp["version"] <= first
+        )
+        state = {"version": -1, "files": {}, "metaData": None, "protocol": None}
+        if not seeded and not self.names:
+            raise FileNotFoundError(f"no commit files in {self.dir}")
+        earliest = cp["version"] if seeded else min(self.names)
+        if earliest > 0 and not (seeded and (first is None or first >= earliest)):
+            raise FileNotFoundError(
+                f"version {first} predates the checkpoint and commits before "
+                f"{earliest} have been cleaned from {self.dir}; earliest "
+                f"replayable version is {earliest}"
+            )
+        if seeded:
+            state["files"], state["metaData"], state["protocol"] = _read_checkpoint(
+                self.dir, cp
+            )
+            state["version"] = cp["version"]
+            yield None, state, {}
+        seed = state["version"]
+        for c in self.walk(last, None if every else seed):
+            gone: dict[str, dict | None] = {}
+            if c.version > seed:
+                if c.version != state["version"] + 1:
+                    raise ValueError(
+                        f"non-contiguous log in {self.dir}: expected commit "
+                        f"{state['version'] + 1:020d}.json, found {c.version:020d}.json"
+                    )
+                files = state["files"]
+                for a in c.actions:
+                    if "add" in a:
+                        files[a["add"]["path"]] = a["add"]
+                    elif "remove" in a:
+                        gone[a["remove"]["path"]] = files.pop(a["remove"]["path"], None)
+                    elif "metaData" in a:
+                        state["metaData"] = a["metaData"]
+                    elif "protocol" in a:
+                        state["protocol"] = a["protocol"]
+                state["version"] = c.version
+            yield c, state, gone
+
+
+def _dv_path(root: str, dv: dict) -> str | None:
+    """The file holding a `deletionVector` descriptor's bitmap, absolute:
+    storageType 'u' is a uuid-derived name under the table `root`, 'p'
+    an absolute path. None for an inline ('i') or unknown descriptor.
+    The one rule from a descriptor to its file — the reader, VACUUM and
+    orphan reachability all resolve through it."""
+    from .roaring import dv_relative_path
+
+    if dv["storageType"] == "u":
+        prefix, fname = dv_relative_path(dv["pathOrInlineDv"])
+        return os.path.abspath(os.path.join(root, prefix, fname))
+    if dv["storageType"] == "p":
+        return os.path.abspath(dv["pathOrInlineDv"])
+    return None
+
+
 def replay_delta_log(log_dir: str, version: int | None = None) -> dict:
     """Replay a `_delta_log/` per PROTOCOL.md action reconciliation up
     to `version` (0-based; None = latest): add wins by path, remove
@@ -754,61 +927,20 @@ def replay_delta_log(log_dir: str, version: int | None = None) -> dict:
     "metaData", "protocol"}. Works on ANY spec-conforming log, not just
     ones this module exported.
 
-    If a `_last_checkpoint` exists and the requested version is at or
-    past it, replay starts FROM the checkpoint parquet and only the JSON
-    commits after it are parsed — the spec's long-history fast path, and
-    the only correct path once `clean_log_commits` has removed the early
-    JSON files. Versions before the checkpoint remain readable only
-    while their JSON commits survive."""
-    commit_files = {
-        int(f.split(".")[0]): f
-        for f in os.listdir(log_dir)
-        if _is_commit_file(f)
-    }
-    cp = _load_last_checkpoint(log_dir)
-    live: dict[str, dict] = {}
-    meta = protocol = None
-    last = -1
-    if cp is not None and (version is None or version >= cp["version"]):
-        live, meta, protocol = _read_checkpoint(log_dir, cp)
-        last = cp["version"]
-    elif not commit_files:
-        raise FileNotFoundError(f"no commit files in {log_dir}")
-    elif min(commit_files) > 0:
-        raise FileNotFoundError(
-            f"version {version} predates the checkpoint and commits "
-            f"0..{min(commit_files) - 1} have been cleaned from {log_dir}; "
-            f"earliest replayable version is {min(commit_files)}"
+    The last state of the log's fold (module docstring, "THE LOG
+    WALK"): if a `_last_checkpoint` exists and the requested version is
+    at or past it, replay starts FROM the checkpoint parquet and only
+    the JSON commits after it are parsed — the spec's long-history fast
+    path, and the only correct path once `clean_log_commits` has
+    removed the early JSON files. Versions before the checkpoint remain
+    readable only while their JSON commits survive."""
+    for _c, state, _gone in _DeltaLog(log_dir).states(version, version):
+        pass
+    if version is not None and state["version"] != version:
+        raise ValueError(
+            f"version {version} not found in {log_dir} (last={state['version']})"
         )
-    for v in sorted(commit_files):
-        if v <= last:
-            continue
-        if version is not None and v > version:
-            break
-        if v != last + 1:
-            raise ValueError(
-                f"non-contiguous log in {log_dir}: expected commit "
-                f"{last + 1:020d}.json, found {v:020d}.json"
-            )
-        with open(os.path.join(log_dir, commit_files[v])) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action:
-                    live[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    live.pop(action["remove"]["path"], None)
-                elif "metaData" in action:
-                    meta = action["metaData"]
-                elif "protocol" in action:
-                    protocol = action["protocol"]
-        last = v
-    if last < 0:
-        raise FileNotFoundError(f"no commit files in {log_dir}")
-    if version is not None and last != version:
-        raise ValueError(f"version {version} not found in {log_dir} (last={last})")
-    return {"version": last, "files": live, "metaData": meta, "protocol": protocol}
+    return state
 
 
 def write_checkpoint(
@@ -832,21 +964,52 @@ def write_checkpoint(
 
     `_last_checkpoint` is swapped in atomically (tmp + rename) so a
     concurrent reader sees either the old pointer or the new one, never
-    a partial file. Returns the checkpoint parquet path(s)."""
+    a partial file; the replay and the writes run under the log lock.
+    Returns the checkpoint parquet path(s)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    state = replay_delta_log(log_dir, version)
-    v = state["version"]
-    prior = _load_last_checkpoint(log_dir)
-    if prior is not None and v < prior["version"]:
-        # A backwards pointer move would force later reads to replay JSON
-        # commits after v — which clean_log_commits may already have
-        # deleted up to the PRIOR checkpoint. Never regress.
-        raise ValueError(
-            f"refusing to move _last_checkpoint backwards "
-            f"(v{prior['version']} -> v{v})"
-        )
+    with locked(os.path.join(log_dir, ".commit.lock")):
+        state = replay_delta_log(log_dir, version)
+        v = state["version"]
+        prior = _DeltaLog(log_dir).checkpoint
+        if prior is not None and v < prior["version"]:
+            # A backwards pointer move would force later reads to replay
+            # JSON commits after v — which clean_log_commits may already
+            # have deleted up to the PRIOR checkpoint. Never regress.
+            raise ValueError(
+                f"refusing to move _last_checkpoint backwards "
+                f"(v{prior['version']} -> v{v})"
+            )
+        schema, rows = _checkpoint_rows(log_dir, state)
+        n = max(1, parts or 1)
+        if parts:
+            names = [
+                f"{v:020d}.checkpoint.{i:010d}.{n:010d}.parquet"
+                for i in range(1, n + 1)
+            ]
+            chunks = [rows[i::n] for i in range(n)]
+        else:
+            names = [f"{v:020d}.checkpoint.parquet"]
+            chunks = [rows]
+        out = []
+        for name, chunk in zip(names, chunks):
+            target = os.path.join(log_dir, name)
+            pq.write_table(pa.Table.from_pylist(chunk, schema=schema), target)
+            out.append(target)
+        pointer = {"version": v, "size": len(rows)}
+        if parts:
+            pointer["parts"] = n
+        with atomic_open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
+            json.dump(pointer, fh)
+    return out
+
+
+def _checkpoint_rows(log_dir: str, state: dict) -> tuple:
+    """The pyarrow schema and the rows of a checkpoint of the replay
+    `state`: protocol, metaData, then one add per live file by path."""
+    import pyarrow as pa
+
     protocol = state["protocol"] or PROTOCOL
     meta = state["metaData"]
     if meta is None:
@@ -944,28 +1107,7 @@ def write_checkpoint(
                 }
             }
         )
-
-    n = max(1, parts or 1)
-    if parts:
-        names = [
-            f"{v:020d}.checkpoint.{i:010d}.{n:010d}.parquet" for i in range(1, n + 1)
-        ]
-        chunks = [rows[i::n] for i in range(n)]
-    else:
-        names = [f"{v:020d}.checkpoint.parquet"]
-        chunks = [rows]
-    out = []
-    for name, chunk in zip(names, chunks):
-        tbl = pa.Table.from_pylist(chunk, schema=schema)
-        target = os.path.join(log_dir, name)
-        pq.write_table(tbl, target)
-        out.append(target)
-    pointer = {"version": v, "size": len(rows)}
-    if parts:
-        pointer["parts"] = n
-    with atomic_open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
-        json.dump(pointer, fh)
-    return out
+    return schema, rows
 
 
 def restore_delta_table(
@@ -992,11 +1134,17 @@ def restore_delta_table(
 
     Refuses when any returning file is gone from disk (VACUUM'd):
     restore needs the data, not just the log. The commit timestamp is
-    last-commit-ts + 1 so TIMESTAMP AS OF stays monotonic without a
-    wall clock. Returns {"version": new head, "restored_to", "n_added",
+    the head commit's effective timestamp + 1 (module docstring, "THE
+    LOG WALK"), so TIMESTAMP AS OF stays monotonic without a wall
+    clock. Returns {"version": new head, "restored_to", "n_added",
     "n_removed"}.
 
-    100 TB: driver cost is two log replays + O(changed files) JSON
+    The target and head states come from one fold over the log, taken
+    under `_delta_log/.commit.lock` together with the write, and the
+    new commit is created exclusively: a concurrent restore or export
+    that read the same head commits after this one, never over it.
+
+    100 TB: driver cost is one walk of the log + O(changed files) JSON
     lines; no data is read, moved, or rewritten — the commit IS the
     operation, exactly why RESTORE is instant on real Delta tables.
 
@@ -1007,93 +1155,80 @@ def restore_delta_table(
     its own rollback and re-export.
 
     Pass exactly one of `version` / `timestamp_ms` (the RESTORE
-    command's two forms); a timestamp resolves through the same
-    commitInfo rule as TIMESTAMP AS OF reads (version_at_timestamp)."""
+    command's two forms); a timestamp resolves as TIMESTAMP AS OF reads
+    do (version_at_timestamp)."""
     if (version is None) == (timestamp_ms is None):
         raise ValueError(
             "pass exactly one of version / timestamp_ms to restore"
         )
-    if timestamp_ms is not None:
-        version = version_at_timestamp(log_dir, timestamp_ms)
-    cur = replay_delta_log(log_dir)
-    if version == cur["version"]:
-        raise ValueError(
-            f"table is already at version {version}; nothing to restore"
-        )
-    tgt = replay_delta_log(log_dir, version=version)
-    root = os.path.dirname(os.path.normpath(log_dir))
-    returning = [
-        a
-        for p, a in sorted(tgt["files"].items())
-        if cur["files"].get(p) != a
-    ]
-    missing = [
-        a["path"]
-        for a in returning
-        if not os.path.exists(os.path.join(root, a["path"]))
-    ]
-    if missing:
-        raise ValueError(
-            f"cannot RESTORE to version {version}: {len(missing)} "
-            f"file(s) it references no longer exist (vacuumed?), e.g. "
-            f"{missing[0]}"
-        )
-    # monotonic commit timestamp without a wall clock
-    last_ts = 0
-    with open(
-        os.path.join(log_dir, f"{cur['version']:020d}.json")
-    ) as fh:
-        for line in fh:
-            a = json.loads(line)
-            if "commitInfo" in a and a["commitInfo"].get("timestamp"):
-                last_ts = max(last_ts, a["commitInfo"]["timestamp"])
-            elif "add" in a and a["add"].get("modificationTime"):
-                last_ts = max(last_ts, a["add"]["modificationTime"])
-    ts = last_ts + 1
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "RESTORE",
-                "operationParameters": {
-                    "version": str(version),
-                    "timestamp": None,
-                },
-                "readVersion": cur["version"],
-                "engineInfo": (
-                    "hybrid_data_lakehouse_lab_spark delta restore"
-                ),
-            }
-        }
-    ]
-    if tgt["metaData"] != cur["metaData"] and tgt["metaData"] is not None:
-        actions.append({"metaData": tgt["metaData"]})
-    n_removed = 0
-    for p in sorted(cur["files"]):
-        if tgt["files"].get(p) != cur["files"][p]:
-            actions.append(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": ts,
-                        "dataChange": True,
-                    }
-                }
+    with locked(os.path.join(log_dir, ".commit.lock")):
+        if timestamp_ms is not None:
+            version = version_at_timestamp(log_dir, timestamp_ms)
+        tgt, head_ts = None, 0
+        for c, cur, _gone in _DeltaLog(log_dir).states(version, every=True):
+            if c is not None:
+                head_ts = c.timestamp
+            if cur["version"] == version and tgt is None:
+                tgt = dict(cur, files=dict(cur["files"]))
+        if version == cur["version"]:
+            raise ValueError(
+                f"table is already at version {version}; nothing to restore"
             )
-            n_removed += 1
-    for a in returning:
-        add = dict(a)
-        add["dataChange"] = True
-        actions.append({"add": add})
-    new_v = cur["version"] + 1
-    with atomic_open(os.path.join(log_dir, f"{new_v:020d}.json"), "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
+        if tgt is None:
+            raise ValueError(
+                f"version {version} not found in {log_dir} (last={cur['version']})"
+            )
+        root = os.path.dirname(os.path.normpath(log_dir))
+        returning = [
+            a
+            for p, a in sorted(tgt["files"].items())
+            if cur["files"].get(p) != a
+        ]
+        missing = [
+            a["path"]
+            for a in returning
+            if not os.path.exists(os.path.join(root, a["path"]))
+        ]
+        if missing:
+            raise ValueError(
+                f"cannot RESTORE to version {version}: {len(missing)} "
+                f"file(s) it references no longer exist (vacuumed?), e.g. "
+                f"{missing[0]}"
+            )
+        ts = head_ts + 1
+        actions: list[dict] = [
+            {
+                "commitInfo": {
+                    "timestamp": ts,
+                    "operation": "RESTORE",
+                    "operationParameters": {
+                        "version": str(version),
+                        "timestamp": None,
+                    },
+                    "readVersion": cur["version"],
+                    "engineInfo": (
+                        "hybrid_data_lakehouse_lab_spark delta restore"
+                    ),
+                }
+            }
+        ]
+        if tgt["metaData"] != cur["metaData"] and tgt["metaData"] is not None:
+            actions.append({"metaData": tgt["metaData"]})
+        removed = [
+            p for p in sorted(cur["files"]) if tgt["files"].get(p) != cur["files"][p]
+        ]
+        actions += [
+            {"remove": {"path": p, "deletionTimestamp": ts, "dataChange": True}}
+            for p in removed
+        ]
+        actions += [{"add": dict(a, dataChange=True)} for a in returning]
+        new_v = cur["version"] + 1
+        _write_commit(log_dir, new_v, actions, exclusive=True)
     return {
         "version": new_v,
         "restored_to": version,
         "n_added": len(returning),
-        "n_removed": n_removed,
+        "n_removed": len(removed),
     }
 
 
@@ -1103,19 +1238,18 @@ def clean_log_commits(log_dir: str) -> list[int]:
     ≥ the checkpoint replays from the checkpoint alone. Versions BEFORE
     the checkpoint stop being replayable (time travel horizon moves up);
     callers wanting history keep a longer retention, same trade as
-    `vacuum_snapshots` on the data side. Returns the removed versions;
-    raises if no checkpoint exists (cleaning without one would orphan
-    the table)."""
-    cp = _load_last_checkpoint(log_dir)
-    if cp is None:
-        raise ValueError(f"{log_dir}: refusing to clean commits without a checkpoint")
-    removed = []
-    for f in sorted(os.listdir(log_dir)):
-        if _is_commit_file(f):
-            v = int(f.split(".")[0])
-            if v <= cp["version"]:
-                os.remove(os.path.join(log_dir, f))
-                removed.append(v)
+    `vacuum_snapshots` on the data side. Runs under the log lock.
+    Returns the removed versions; raises if no checkpoint exists
+    (cleaning without one would orphan the table)."""
+    with locked(os.path.join(log_dir, ".commit.lock")):
+        log = _DeltaLog(log_dir)
+        if log.checkpoint is None:
+            raise ValueError(
+                f"{log_dir}: refusing to clean commits without a checkpoint"
+            )
+        removed = sorted(v for v in log.names if v <= log.checkpoint["version"])
+        for v in removed:
+            os.remove(os.path.join(log_dir, log.names[v]))
     return removed
 
 
@@ -1200,31 +1334,17 @@ def _physical_type(dt, where="table"):
 
 def _resolve_dv(root: str, dv: dict) -> list[int]:
     """Decode one `deletionVector` descriptor to its deleted row
-    positions: storageType 'u' (uuid-derived file under the table
-    root), 'p' (absolute path), or 'i' (inline Z85). Size, CRC and
-    cardinality are all verified — a truncated or corrupt DV must fail
-    loudly, never silently resurrect deleted rows."""
-    from .roaring import (
-        decode_dv_blob,
-        dv_relative_path,
-        read_dv_at,
-        z85_decode,
-    )
+    positions: storageType 'u' / 'p' (the file `_dv_path` names) or 'i'
+    (inline Z85). Size, CRC and cardinality are all verified — a
+    truncated or corrupt DV must fail loudly, never silently resurrect
+    deleted rows."""
+    from .roaring import decode_dv_blob, read_dv_at, z85_decode
 
     st = dv["storageType"]
-    if st == "u":
-        prefix, fname = dv_relative_path(dv["pathOrInlineDv"])
-        path = os.path.join(root, prefix, fname) if prefix else os.path.join(
-            root, fname
-        )
-        positions = read_dv_at(path, dv["offset"], dv["sizeInBytes"])
-    elif st == "p":
-        positions = read_dv_at(
-            dv["pathOrInlineDv"], dv["offset"], dv["sizeInBytes"]
-        )
+    if st in ("u", "p"):
+        positions = read_dv_at(_dv_path(root, dv), dv["offset"], dv["sizeInBytes"])
     elif st == "i":
-        data = z85_decode(dv["pathOrInlineDv"], dv["sizeInBytes"])
-        positions = decode_dv_blob(data)
+        positions = decode_dv_blob(z85_decode(dv["pathOrInlineDv"], dv["sizeInBytes"]))
     else:
         raise NotImplementedError(f"deletionVector storageType {st!r}")
     if len(positions) != dv["cardinality"]:
@@ -1324,43 +1444,16 @@ def _range_may_match(lo, hi, op: str, v) -> bool:
 
 
 def version_at_timestamp(log_dir: str, ts_ms: int) -> int:
-    """Delta TIMESTAMP AS OF: the last commit whose commitInfo
-    timestamp is <= ts_ms (this exporter stamps every commit; external
-    logs without commitInfo fall back to file mtime, the same fallback
-    delta-spark uses). Clock skew in an external log can record a later
-    commit with an earlier raw timestamp; like delta-spark's
-    monotonization, each commit's EFFECTIVE timestamp is bumped to
-    (previous effective + 1 ms) when the raw value does not increase,
-    so the scan never resolves to a too-early version. Raises if ts_ms
-    predates the earliest REPLAYABLE commit (checkpoint cleaning moves
-    the horizon up)."""
+    """Delta TIMESTAMP AS OF: the last commit whose effective timestamp
+    (module docstring, "THE LOG WALK": inCommitTimestamp, else
+    commitInfo timestamp, else file mtime, made monotonic) is <= ts_ms.
+    Raises if ts_ms predates the earliest REPLAYABLE commit (checkpoint
+    cleaning moves the horizon up)."""
     best = None
-    prev_eff = None
-    for f in sorted(os.listdir(log_dir)):
-        if not _is_commit_file(f):
-            continue
-        v = int(f.split(".")[0])
-        ts = None
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "commitInfo" in a:
-                    # inCommitTimestamp (the ICT writer feature) is the
-                    # authoritative commit time when present — the spec
-                    # requires time travel to prefer it over the file's
-                    # timestamp, which clock skew can reorder
-                    ci = a["commitInfo"]
-                    ts = ci.get("inCommitTimestamp", ci.get("timestamp"))
-                    break
-        if ts is None:
-            ts = int(os.stat(os.path.join(log_dir, f)).st_mtime * 1000)
-        if prev_eff is not None and ts <= prev_eff:
-            ts = prev_eff + 1
-        prev_eff = ts
-        if ts <= ts_ms:
-            best = v
+    for c in _DeltaLog(log_dir).walk():
+        if c.timestamp > ts_ms:
+            break  # effective timestamps increase
+        best = c.version
     if best is None:
         raise ValueError(
             f"no replayable commit at or before timestamp {ts_ms} in {log_dir}"
@@ -1536,6 +1629,10 @@ def read_delta_changes(
     (remove + re-add of the same path — a DV update) cannot be derived
     and refuses honestly.
 
+    `_commit_timestamp` is the commit's effective timestamp, the one
+    DESCRIBE HISTORY and TIMESTAMP AS OF use, and the range's states
+    come from one fold over the log (module docstring, "THE LOG WALK").
+
     100 TB plan shape: the log walk is driver-side metadata; the data
     read is at most THREE parquet scans (cdc / inserts / deletes),
     each joined to a broadcast file→(version, timestamp, partitions)
@@ -1550,14 +1647,10 @@ def read_delta_changes(
     from pyspark.sql import types as T
 
     log_dir = os.path.join(root, "_delta_log")
-    commit_files = {
-        int(f.split(".")[0]): f
-        for f in os.listdir(log_dir)
-        if _is_commit_file(f)
-    }
-    if not commit_files:
+    log = _DeltaLog(log_dir)
+    if not log.names:
         raise FileNotFoundError(f"no commit files in {log_dir}")
-    last = max(commit_files)
+    last = max(log.names)
     if ending_version is None:
         ending_version = last
     if not 0 <= starting_version <= ending_version <= last:
@@ -1565,14 +1658,19 @@ def read_delta_changes(
             f"invalid CDF range [{starting_version}, {ending_version}] "
             f"(log ends at {last})"
         )
-    if starting_version < min(commit_files):
+    if starting_version < min(log.names):
         raise ValueError(
             f"CDF needs the JSON commits: versions before "
-            f"{min(commit_files)} have been cleaned from {log_dir}"
+            f"{min(log.names)} have been cleaned from {log_dir}"
         )
-    end_state = replay_delta_log(log_dir, ending_version)
-    _check_reader_protocol(end_state["protocol"] or {})
-    meta = end_state["metaData"]
+    commits, start_meta = [], None
+    for c, state, gone in log.states(starting_version - 1, ending_version, every=True):
+        if c is not None and c.version >= starting_version:
+            commits.append((c, gone))
+            if c.version == starting_version:
+                start_meta = state["metaData"]
+    _check_reader_protocol(state["protocol"] or {})
+    meta = state["metaData"]
     if meta is None:
         raise ValueError(f"{root}: log has no metaData action")
     if (meta.get("configuration") or {}).get(
@@ -1589,31 +1687,18 @@ def read_delta_changes(
     cdc_schema = T.StructType(
         data_schema.fields + [T.StructField("_change_type", T.StringType())]
     )
-
-    prior = (
-        replay_delta_log(log_dir, starting_version - 1)["files"]
-        if starting_version > 0
-        else {}
-    )
     # the whole range reads under the END version's schema; the schema
     # in force AT the start version is the range's base (a
     # schema-change commit's own CDF rows are written under its NEW
     # schema, so a range STARTING at that commit is fine)
     end_fields = {f.name: f.dataType for f in schema.fields}
-    start_meta = replay_delta_log(log_dir, starting_version)["metaData"]
     if not _schema_compatible(start_meta, end_fields):
         raise ValueError(
             f"incompatible data schema change inside CDF range "
             f"[{starting_version}, {ending_version}]: the range must "
             "be split at the schema-change commit"
         )
-    groups = _change_files(
-        root,
-        log_dir,
-        [(v, commit_files[v]) for v in range(starting_version, ending_version + 1)],
-        prior,
-        end_fields,
-    )
+    groups = _change_files(root, commits, end_fields)
     parts = []
     for kind, rows in groups.items():
         if not rows:
@@ -1689,85 +1774,66 @@ def _schema_compatible(meta_action, end_fields: dict) -> bool:
     )
 
 
-def _change_files(
-    root: str, log_dir: str, commits, prior: dict, end_fields: dict
-) -> dict[str, list]:
-    """The files a CDF read scans for `commits` ((version, commit file)
-    pairs, in order), by kind: `cdc` when a commit wrote cdc actions
-    (authoritative), else `insert` for its added files and `delete` for
-    its removed ones. Each entry is (absolute path, version, commit
-    timestamp ms, partition values, deletion vector or None); a DV'd
-    file contributes only its unmasked rows. `prior` (path -> add
-    action before the first commit) is updated in place and supplies a
-    removed file's partition values and DV. Refuses a commit that
+def _change_files(root: str, commits: list, end_fields: dict) -> dict[str, list]:
+    """The files a CDF read scans for `commits` ((commit, gone) pairs of
+    the log's fold, in order), by kind: `cdc` when a commit wrote cdc
+    actions (authoritative), else `insert` for its added files and
+    `delete` for its removed ones. Each entry is (absolute path,
+    version, effective commit timestamp ms, partition values, deletion
+    vector or None); a DV'd file contributes only its unmasked rows. A
+    removed file's partition values and DV come from its remove action
+    or its add before the commit (`gone`). Refuses a commit that
     rewrites a file in place without cdc files, and a schema change
-    `_schema_compatible` rejects. Reads only the JSON commits."""
+    `_schema_compatible` rejects."""
     groups: dict[str, list] = {"cdc": [], "insert": [], "delete": []}
 
     def _abs(p):
         return os.path.abspath(os.path.join(root, urllib.parse.unquote(p)))
 
-    for v, name in commits:
-        adds, removes, cdcs, ts = [], [], [], None
-        with open(os.path.join(log_dir, name)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "add" in a:
-                    adds.append(a["add"])
-                elif "remove" in a:
-                    removes.append(a["remove"])
-                elif "cdc" in a:
-                    cdcs.append(a["cdc"])
-                elif "metaData" in a:
-                    if not _schema_compatible(a["metaData"], end_fields):
-                        raise ValueError(
-                            f"incompatible data schema change at commit {v}"
-                            f" inside CDF range [{commits[0][0]},"
-                            f" {commits[-1][0]}]: the range must be split"
-                            " at the schema-change commit"
-                        )
-                elif "commitInfo" in a and ts is None:
-                    ci = a["commitInfo"]
-                    ts = ci.get("inCommitTimestamp", ci.get("timestamp"))
-        if ts is None:
-            ts = int(os.stat(os.path.join(log_dir, name)).st_mtime * 1000)
+    for c, gone in commits:
+        v, ts = c.version, c.timestamp
+        adds = [a["add"] for a in c.actions if "add" in a]
+        removes = [a["remove"] for a in c.actions if "remove" in a]
+        cdcs = [a["cdc"] for a in c.actions if "cdc" in a]
+        for a in c.actions:
+            if "metaData" in a and not _schema_compatible(a["metaData"], end_fields):
+                raise ValueError(
+                    f"incompatible data schema change at commit {v}"
+                    f" inside CDF range [{commits[0][0].version},"
+                    f" {commits[-1][0].version}]: the range must be split"
+                    " at the schema-change commit"
+                )
         if cdcs:
-            for c in cdcs:
+            for cdc in cdcs:
                 groups["cdc"].append(
-                    (_abs(c["path"]), v, ts, c.get("partitionValues") or {}, None)
+                    (_abs(cdc["path"]), v, ts, cdc.get("partitionValues") or {}, None)
                 )
-        else:
-            data_adds = [a for a in adds if a.get("dataChange", True)]
-            data_removes = [r for r in removes if r.get("dataChange", True)]
-            if {a["path"] for a in data_adds} & {r["path"] for r in data_removes}:
-                # remove + re-add of the same path in one commit is an
-                # in-place row change (a deletion-vector update); its
-                # row-level effect cannot be derived from the actions
-                raise NotImplementedError(
-                    f"commit {v} rewrites files in place (deletion "
-                    f"vectors) but wrote no cdc files; its CDF cannot "
-                    f"be derived from add/remove actions"
+            continue
+        data_adds = [a for a in adds if a.get("dataChange", True)]
+        data_removes = [r for r in removes if r.get("dataChange", True)]
+        if {a["path"] for a in data_adds} & {r["path"] for r in data_removes}:
+            # remove + re-add of the same path in one commit is an
+            # in-place row change (a deletion-vector update); its
+            # row-level effect cannot be derived from the actions
+            raise NotImplementedError(
+                f"commit {v} rewrites files in place (deletion "
+                f"vectors) but wrote no cdc files; its CDF cannot "
+                f"be derived from add/remove actions"
+            )
+        for a in data_adds:
+            groups["insert"].append(
+                (
+                    _abs(a["path"]),
+                    v,
+                    ts,
+                    a.get("partitionValues") or {},
+                    a.get("deletionVector"),
                 )
-            for a in data_adds:
-                groups["insert"].append(
-                    (
-                        _abs(a["path"]),
-                        v,
-                        ts,
-                        a.get("partitionValues") or {},
-                        a.get("deletionVector"),
-                    )
-                )
-            for r in data_removes:
-                pa = prior.get(r["path"]) or {}
-                pv = r.get("partitionValues") or pa.get("partitionValues") or {}
-                groups["delete"].append(
-                    (_abs(r["path"]), v, ts, pv, pa.get("deletionVector"))
-                )
-        for r in removes:
-            prior.pop(r["path"], None)
-        for a in adds:
-            prior[a["path"]] = a
+            )
+        for r in data_removes:
+            pa = gone.get(r["path"]) or {}
+            pv = r.get("partitionValues") or pa.get("partitionValues") or {}
+            groups["delete"].append(
+                (_abs(r["path"]), v, ts, pv, pa.get("deletionVector"))
+            )
     return groups

@@ -20,7 +20,6 @@ retention planning) is built on exactly this surface.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, types as T
@@ -236,41 +235,23 @@ def partitions_table(
 def delta_history_table(spark: SparkSession, root: str) -> DataFrame:
     """Delta DESCRIBE HISTORY: one row per commit from the
     `_delta_log/` JSON files — (version, timestamp_ms, operation,
-    operation_parameters, user_metadata). Commits retired by
+    operation_parameters, user_metadata), the timestamp being the
+    commit's effective one, the same TIMESTAMP AS OF and the change data
+    feed use (`delta_log`, "THE LOG WALK"). Commits retired by
     `clean_log_commits` are absent, exactly as in stock Delta (history
     is bounded by log retention)."""
-    from .delta_log import _is_commit_file
+    from .delta_log import _DeltaLog
 
-    log_dir = os.path.join(root, "_delta_log")
-    rows = []
-    for f in sorted(os.listdir(log_dir)):
-        if not _is_commit_file(f):
-            continue
-        v = int(f.split(".")[0])
-        ci = None
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "commitInfo" in action:
-                    ci = action["commitInfo"]
-                    break
-        ci = ci or {}
-        rows.append(
-            (
-                v,
-                ci.get("timestamp"),
-                ci.get("operation"),
-                {
-                    k: str(val)
-                    for k, val in (
-                        ci.get("operationParameters") or {}
-                    ).items()
-                },
-                ci.get("userMetadata"),
-            )
+    rows = [
+        (
+            c.version,
+            c.timestamp,
+            c.info.get("operation"),
+            {k: str(val) for k, val in (c.info.get("operationParameters") or {}).items()},
+            c.info.get("userMetadata"),
         )
+        for c in _DeltaLog(os.path.join(root, "_delta_log")).walk()
+    ]
     schema = T.StructType(
         [
             T.StructField("version", T.LongType()),

@@ -28,6 +28,7 @@ from __future__ import annotations
 import math
 import os
 import shutil
+import urllib.parse
 
 from pyspark.sql import SparkSession
 
@@ -169,48 +170,40 @@ def _snapshot_table_reachable(root: str) -> set[str]:
     return reachable
 
 
+def _delta_refs(root: str, actions) -> set[str]:
+    """The absolute paths the file `actions` (add / remove / cdc action
+    dicts) name: each action's file and its deletion vector's file."""
+    from .delta_log import _dv_path
+
+    out = set()
+    for act in actions:
+        out.add(os.path.abspath(os.path.join(root, urllib.parse.unquote(act["path"]))))
+        if act.get("deletionVector"):
+            out.add(_dv_path(root, act["deletionVector"]))
+    out.discard(None)  # an inline DV has no file
+    return out
+
+
 def _delta_log_reachable(root: str) -> set[str]:
     """Every data file, DV `.bin` and change-data file ANY version of a
-    `_delta_log/` at `root` references (empty set when no Delta facade
-    exists). Absolute paths."""
-    import json
-    import urllib.parse
+    `_delta_log/` at `root` references — the checkpoint's live files
+    plus every action of every surviving commit, one fold over the log
+    (`delta_log`, "THE LOG WALK"); empty set when no Delta facade
+    exists. Absolute paths."""
+    from .delta_log import _DeltaLog
 
     log_dir = os.path.join(root, "_delta_log")
-    reachable: set[str] = set()
     if not os.path.isdir(log_dir):
-        return reachable
-    from .delta_log import _is_commit_file
-    from .roaring import dv_relative_path
-
-    for f in os.listdir(log_dir):
-        if not _is_commit_file(f):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                act = a.get("add") or a.get("remove") or a.get("cdc")
-                if not act:
-                    continue
-                reachable.add(
-                    os.path.abspath(
-                        os.path.join(
-                            root, urllib.parse.unquote(act["path"])
-                        )
-                    )
-                )
-                dv = act.get("deletionVector") if "add" in a else None
-                if dv and dv.get("storageType") == "u":
-                    prefix, fname = dv_relative_path(dv["pathOrInlineDv"])
-                    reachable.add(
-                        os.path.abspath(
-                            os.path.join(root, prefix, fname)
-                            if prefix
-                            else os.path.join(root, fname)
-                        )
-                    )
+        return set()
+    log = _DeltaLog(log_dir)
+    if not log.names and log.checkpoint is None:
+        return set()
+    reachable: set[str] = set()
+    for c, state, _gone in log.states(every=True):
+        acts = state["files"].values() if c is None else [
+            a[k] for a in c.actions for k in ("add", "remove", "cdc") if k in a
+        ]
+        reachable |= _delta_refs(root, acts)
     return reachable
 
 
@@ -422,81 +415,29 @@ def vacuum_delta_table(root: str, keep_versions: int = 1) -> list[str]:
     Files outside the table root (absolute-path DVs, add_files-style
     externals) are never touched.
 
-    Driver-side O(versions × files-per-version) log replay, one unlink
-    per dropped file. Returns the deleted paths.
+    Driver-side: one fold over the log (`delta_log`, "THE LOG WALK")
+    reads each surviving commit once; each version's live files and
+    change-data files are unioned, O(versions × live files) set work.
+    One unlink per dropped file. Returns the deleted paths.
     """
-    import json
-    import urllib.parse
+    from .delta_log import _DeltaLog
 
-    from .delta_log import (
-        _is_commit_file,
-        _load_last_checkpoint,
-        replay_delta_log,
-    )
-    from .roaring import dv_relative_path
-
-    log_dir = os.path.join(root, "_delta_log")
-    versions = sorted(
-        int(f.split(".")[0])
-        for f in os.listdir(log_dir)
-        if _is_commit_file(f)
-    )
-    cp = _load_last_checkpoint(log_dir)
-    if cp is not None and cp["version"] not in versions:
-        versions = sorted({cp["version"], *versions})
-    if not versions:
-        raise FileNotFoundError(f"no commit files in {log_dir}")
-    current = versions[-1]
-    retained = {v for v in versions if v > current - keep_versions}
-
-    def _refs(state: dict) -> set[str]:
-        out = set()
-        for path, add in state["files"].items():
-            out.add(
-                os.path.abspath(
-                    os.path.join(root, urllib.parse.unquote(path))
-                )
-            )
-            dv = add.get("deletionVector")
-            if dv and dv.get("storageType") == "u":
-                prefix, fname = dv_relative_path(dv["pathOrInlineDv"])
-                out.add(
-                    os.path.abspath(
-                        os.path.join(root, prefix, fname)
-                        if prefix
-                        else os.path.join(root, fname)
-                    )
-                )
-            elif dv and dv.get("storageType") == "p":
-                out.add(os.path.abspath(dv["pathOrInlineDv"]))
-        return out
-
+    log = _DeltaLog(os.path.join(root, "_delta_log"))
+    cp = log.checkpoint
+    current = max([*log.names, *([cp["version"]] if cp else [])], default=-1)
     keep: set[str] = set()
     ever: set[str] = set()
-    for v in versions:
-        refs = _refs(replay_delta_log(log_dir, version=v))
-        ever |= refs
-        if v in retained:
-            keep |= refs
-    # change-data files ride their commit's version
-    for v in versions:
-        f = os.path.join(log_dir, f"{v:020d}.json")
-        if not os.path.exists(f):
-            continue
-        with open(f) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "cdc" in action:
-                    p = os.path.abspath(
-                        os.path.join(
-                            root, urllib.parse.unquote(action["cdc"]["path"])
-                        )
-                    )
-                    ever.add(p)
-                    if v in retained:
-                        keep.add(p)
+
+    def _seen(v: int, refs: set[str]) -> None:
+        ever.update(refs)
+        if v > current - keep_versions:
+            keep.update(refs)
+
+    for c, state, _gone in log.states(every=True):
+        _seen(state["version"], _delta_refs(root, state["files"].values()))
+        if c is not None:
+            # change-data files ride their commit's version
+            _seen(c.version, _delta_refs(root, [a["cdc"] for a in c.actions if "cdc" in a]))
     # CROSS-FACADE SAFETY: files this Delta log no longer retains may
     # still be referenced by a sibling Iceberg tree on the same root
     # (the UniForm dual-export shape). The SnapshotTable manifest is

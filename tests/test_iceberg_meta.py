@@ -349,6 +349,7 @@ def test_reexport_after_vacuum_drops_stale_metadata(spark, tmp_path):
     export_iceberg_metadata(t)
     left = sorted(os.listdir(meta_dir))
     assert left == [
+        ".commit.lock",
         "m-00000.avro",
         "snap-1-1-manifest-list.avro",
         "v1.metadata.json",

@@ -22,6 +22,10 @@ records:
 - the same for a pruned and filtered read at every version
   (`prune=PRUNE` plus the same condition as `.where`), so file pruning
   and filter pushdown are in the digest too;
+- for a Delta export, every other reader of the log walk: the
+  `delta_history_table` rows, `version_at_timestamp` of each history
+  timestamp and the root-relative `maintenance._delta_log_reachable`
+  set;
 - after an Iceberg export's files and reads are recorded, its NDV
   statistics: `export_iceberg_statistics` runs on the exported tree, and
   the sha256 of its Puffin file and each theta blob's sha256 and `ndv`
@@ -360,6 +364,33 @@ def _statistics(t) -> dict:
     return out
 
 
+def _delta_walk(spark, root: str) -> dict:
+    """DESCRIBE HISTORY, TIMESTAMP AS OF at each history timestamp and
+    orphan reachability of the Delta log at `root`."""
+    from hybrid_data_lakehouse_lab_spark.operators.delta_log import (
+        version_at_timestamp,
+    )
+    from hybrid_data_lakehouse_lab_spark.operators.iceberg_inspect import (
+        delta_history_table,
+    )
+    from hybrid_data_lakehouse_lab_spark.operators.maintenance import (
+        _delta_log_reachable,
+    )
+
+    out = {}
+    try:
+        history = [list(r) for r in delta_history_table(spark, root).collect()]
+        out["history"] = history
+        log = os.path.join(root, "_delta_log")
+        out["as_of"] = [[r[1], version_at_timestamp(log, r[1])] for r in history]
+        out["reachable"] = sorted(
+            os.path.relpath(p, root) for p in _delta_log_reachable(root)
+        )
+    except Exception as e:  # recorded, not raised: both sides must agree
+        out["error"] = _err(e)
+    return out
+
+
 def _delta_owned(rel: str) -> bool:
     return rel.startswith(("_delta_log/", "_change_data/", "deletion_vector_"))
 
@@ -415,6 +446,8 @@ def digest(out: str, out_json: str) -> None:
                 )
             elif kind == "iceberg":
                 entry["statistics"] = _statistics(t)
+            else:
+                entry["walk"] = _delta_walk(spark, work)
             result[f"{name}/{label}"] = entry
             print(name, label, entry.get("export_error", "ok"), flush=True)
         shutil.rmtree(work, ignore_errors=True)
